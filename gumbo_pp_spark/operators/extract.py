@@ -369,7 +369,8 @@ MAIN_TEXT_FIELDS = (
 
 
 def extract_main_text(
-    df: DataFrame, passthrough=("doc_id", "url"), stage_metrics: bool = False
+    df: DataFrame, passthrough=("doc_id", "url"), stage_metrics: bool = False,
+    on_batch: Callable[[pa.RecordBatch], None] | None = None,
 ) -> DataFrame:
     """Flagship stage on the Arrow fast path: ``mapInArrow`` with fully
     vectorized output construction (span struct arrays built from
@@ -378,7 +379,13 @@ def extract_main_text(
 
     Output ``spans`` follow :func:`main_text_program`'s offset
     contract: indices into the decoded, newline-normalized parser
-    input, not the raw ``html`` bytes."""
+    input, not the raw ``html`` bytes.
+
+    ``on_batch``, when set, is called executor-side with every output
+    Arrow batch before it is handed back to the JVM — a hook for
+    statistics gathered in the extraction's own pass (e.g. into an
+    accumulator) instead of a second job over the output.  Unset, the
+    plain ``mapInArrow`` runs with no wrapper."""
     import pyarrow as pa
 
     pt_types = _passthrough_types(df, passthrough)
@@ -519,7 +526,15 @@ def extract_main_text(
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 
     pruned = ensure_min_parallelism(df.select(*passthrough, "html"))
-    return pruned.mapInArrow(fn, schema)
+    if on_batch is None:
+        return pruned.mapInArrow(fn, schema)
+
+    def hooked(batches) -> "Iterator[pa.RecordBatch]":
+        for rb in fn(batches):
+            on_batch(rb)
+            yield rb
+
+    return pruned.mapInArrow(hooked, schema)
 
 
 # ----------------------------------------------------------------------

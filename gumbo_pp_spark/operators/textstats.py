@@ -1109,11 +1109,15 @@ def top_word_frac_e4_expr(text_col: str = "text") -> str:
     higher-order-function lambdas (see ``chunk_tokens``), so the
     sorted array and the run-start index list are each bound ONCE as
     a lambda variable via the ``transform(array(x), v -> ..)[1]``
-    idiom instead of being textually repeated."""
+    idiom instead of being textually repeated.
+
+    The run-start filter clamps its look-behind index to 1: it never
+    relies on ``OR`` short-circuiting to keep ``element_at(sw, 0)``
+    (an invalid index that raises) from being evaluated."""
     sw_val = f"array_sort(split({text_col}, ' '))"
     starts_val = (
         "filter(sequence(1, size(sw)), "
-        "j -> j = 1 OR element_at(sw, j) != element_at(sw, j - 1))"
+        "j -> j = 1 OR element_at(sw, j) != element_at(sw, greatest(j - 1, 1)))"
     )
     top = (
         "array_max(transform(sequence(1, size(st)), "

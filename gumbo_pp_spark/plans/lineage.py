@@ -16,16 +16,23 @@ Design (SURVEY.md §4 c/d):
   only those; readers union exactly the (split, run) pairs the ledger
   committed, so partially-written uncommitted runs are invisible;
 * ledger records carry the per-partition metrics the bench reports
-  (rows, bytes, wall_ms, attempt).
+  (rows, bytes, parse/kernel time, parse errors, engine counts,
+  wall_ms, attempt).  They are tallied executor-side in the same
+  ``mapInArrow`` pass that extracts and writes the split (per-batch
+  ``split_id`` sums into an accumulator) — never by re-reading the
+  written output.  Exactly-once counts rely on that pass staying in
+  the write's result stage: no ``Exchange`` above ``MapInArrow``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 import uuid
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -159,6 +166,48 @@ class PartitionLedger:
         return len(tails)
 
 
+#: fields of one split's tally (see ``_tally_batch``)
+_TALLY_FIELDS = ("rows", "chars", "parse_us", "kernel_us", "parse_errors", "c_docs")
+
+
+class _SplitTallies(AccumulatorParam):
+    """``{split_id: {"rows": n, "chars": n, ...}}``, summed per split
+    and field."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, upd):
+        for s, v in upd.items():
+            cur = acc.setdefault(s, dict.fromkeys(v, 0))
+            for k, n in v.items():
+                cur[k] += n
+        return acc
+
+
+def _tally_batch(acc, rb) -> None:
+    """Executor-side ``on_batch`` hook: group one extraction output
+    batch by ``split_id`` and add its sums to ``acc``.  numpy grouping
+    (no Arrow exec plan, so no compute thread pool in the Python
+    workers); float64 ``bincount`` sums are exact below 2**53."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    sids, inv = np.unique(rb.column("split_id").to_numpy(), return_inverse=True)
+    cols = {
+        # Spark's length(text): characters, not UTF-8 bytes
+        "chars": pc.utf8_length(rb.column("text")),
+        "parse_us": rb.column("parse_us"),
+        "kernel_us": rb.column("kernel_us"),
+        "parse_errors": rb.column("parse_errors"),
+        "c_docs": rb.column("c_engine"),
+    }
+    sums = {"rows": np.bincount(inv, minlength=len(sids))}
+    for k, v in cols.items():
+        sums[k] = np.bincount(inv, weights=v.to_numpy(), minlength=len(sids))
+    acc.add({int(s): {k: int(v[i]) for k, v in sums.items()} for i, s in enumerate(sids)})
+
+
 def extract_with_resume(
     spark: SparkSession,
     pages: DataFrame,
@@ -169,9 +218,24 @@ def extract_with_resume(
 ) -> dict:
     """Run the flagship extraction over all not-yet-committed splits.
 
+    The ledger statistics come from the write pass itself: every
+    extraction output batch is grouped by ``split_id`` inside the
+    ``mapInArrow`` task that produced it and summed into an accumulator;
+    the driver commits the records from the accumulator's value once
+    the write returns.  No job reads the output back.
+
+    The counts are exact because Spark merges a result task's
+    accumulator updates once per partition and drops those of failed
+    attempts.  That holds only while the extraction runs in the write's
+    result stage — no ``Exchange`` above ``MapInArrow`` in the write
+    plan; an extraction in a shuffle-map stage could be re-run by a
+    retried stage and counted twice.
+
     ``max_splits_this_run`` exists for fault-injection tests (process
     only K pending splits, as if the job were killed after K commits).
-    Returns run metrics.
+    Returns run metrics, including the run's ``rows``, ``c_docs``,
+    ``py_docs`` and ``parse_errors`` totals (the sums of the records it
+    committed).
     """
     from ..operators.extract import extract_main_text
 
@@ -181,80 +245,48 @@ def extract_with_resume(
     if max_splits_this_run is not None:
         pending = pending[:max_splits_this_run]
     if not pending:
-        return {"run_id": None, "splits_processed": 0, "skipped": len(done)}
+        return {"run_id": None, "splits_processed": 0, "skipped": len(done),
+                "rows": 0, "c_docs": 0, "py_docs": 0, "parse_errors": 0}
 
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
     work = pages.withColumn(
         "split_id", F.pmod(F.xxhash64("url"), F.lit(n_splits)).cast("int")
     ).where(F.col("split_id").isin(pending))
-    out = extract_main_text(work, passthrough=(*passthrough, "split_id"), stage_metrics=True)
+    tallies = spark.sparkContext.accumulator({}, _SplitTallies())
+    out = extract_main_text(
+        work, passthrough=(*passthrough, "split_id"), stage_metrics=True,
+        on_batch=functools.partial(_tally_batch, tallies),
+    )
     data_dir = os.path.join(out_dir, "data", f"run={run_id}")
     out.write.partitionBy("split_id").mode("error").parquet(data_dir)
-
-    # per-split metrics from the committed files (cheap: output only).
-    # Guarded: when EVERY pending split was empty (reachable on resume
-    # with max_splits_this_run or a sparse corpus vs n_splits) the
-    # write leaves a schemaless empty dir and the read raises — commit
-    # zero-row ledger records instead of crashing every future resume.
-    # The guard is structural (typed exception + "did the write emit
-    # any part files?"), not a message-substring match: Spark's error
-    # text varies across versions/error-class settings.
-    from pyspark.errors import AnalysisException
-
-    try:
-        stats = (
-            spark.read.parquet(data_dir)
-            .groupBy("split_id")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.length("text")).alias("bytes"),
-                F.sum("parse_us").alias("parse_us"),
-                F.sum("kernel_us").alias("kernel_us"),
-                F.sum("parse_errors").alias("parse_errors"),
-                F.sum("c_engine").alias("c_docs"),
-            )
-            .collect()
-        )
-    except AnalysisException:
-        wrote_parts = any(
-            fn.startswith("part-")
-            for _root, _dirs, files in os.walk(data_dir)
-            for fn in files
-        )
-        if wrote_parts:  # data exists but the read failed — a real error
-            raise
-        stats = []
     wall_ms = int((time.time() - t0) * 1000)
-    by_split = {int(r["split_id"]): r for r in stats}
+    zero = dict.fromkeys(_TALLY_FIELDS, 0)
+    stats = {s: tallies.value.get(s, zero) for s in pending}
     # Per-split wall attribution: all splits commit from ONE Spark job,
     # so the only measured per-split times are the executor-side
     # parse_us/kernel_us sums.  busy_ms is that measured work; wall_ms
     # is the run's wall apportioned by busy share (splits with more
     # work get more wall), so per-split wall is distinct and sums to
     # the run wall instead of repeating it n_splits times.
-    total_busy = sum(
-        int(r["parse_us"]) + int(r["kernel_us"]) for r in stats
-    ) or 1
-    for s in pending:
-        r = by_split.get(s)
-        busy_us = (int(r["parse_us"]) + int(r["kernel_us"])) if r else 0
+    total_busy = sum(r["parse_us"] + r["kernel_us"] for r in stats.values()) or 1
+    for s, r in stats.items():
+        busy_us = r["parse_us"] + r["kernel_us"]
         ledger.commit(
             {
                 "split_id": s,
                 "run_id": run_id,
                 "status": "committed",
-                "rows": int(r["rows"]) if r else 0,
-                "bytes": int(r["bytes"]) if r and r["bytes"] is not None else 0,
-                "parse_ms": int(r["parse_us"] / 1000) if r else 0,
-                "kernel_ms": int(r["kernel_us"] / 1000) if r else 0,
-                "parse_errors": int(r["parse_errors"]) if r else 0,
+                "rows": r["rows"],
+                "bytes": r["chars"],
+                "parse_ms": r["parse_us"] // 1000,
+                "kernel_ms": r["kernel_us"] // 1000,
+                "parse_errors": r["parse_errors"],
                 # engine engagement telemetry (round-6): at 100 TB this
                 # is how a run sees what fraction of documents paid the
                 # ~10x slower Python-tail price
-                "c_docs": int(r["c_docs"]) if r and r["c_docs"] is not None else 0,
-                "py_docs": (int(r["rows"]) - int(r["c_docs"])) if r and r["c_docs"] is not None
-                           else (int(r["rows"]) if r else 0),
+                "c_docs": r["c_docs"],
+                "py_docs": r["rows"] - r["c_docs"],
                 "busy_ms": busy_us // 1000,
                 "wall_ms": int(wall_ms * busy_us / total_busy),
                 "run_wall_ms": wall_ms,
@@ -265,11 +297,17 @@ def extract_with_resume(
     # roll this run's commits into the manifest so the NEXT resume
     # starts from O(1) file reads regardless of how many splits ran
     ledger.compact()
+    rows = sum(r["rows"] for r in stats.values())
+    c_docs = sum(r["c_docs"] for r in stats.values())
     return {
         "run_id": run_id,
         "splits_processed": len(pending),
         "skipped": len(done),
         "wall_ms": wall_ms,
+        "rows": rows,
+        "c_docs": c_docs,
+        "py_docs": rows - c_docs,
+        "parse_errors": sum(r["parse_errors"] for r in stats.values()),
     }
 
 

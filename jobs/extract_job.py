@@ -12,6 +12,10 @@ Packaging (north_rule: "run via spark-submit --py-files"):
 Resumable: re-running with the same --out skips ledger-committed
 splits (plans/lineage.py).  The output is readable via
 ``gumbo_pp_spark.plans.lineage.read_extracted``.
+
+Prints one JSON line of run metrics, with the engine funnel of this
+run (``rows`` = ``c_docs`` + ``py_docs``, and ``parse_errors``) as
+tallied during the extraction pass — the output is never re-scanned.
 """
 
 from __future__ import annotations

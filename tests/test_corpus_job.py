@@ -58,6 +58,9 @@ def test_extract_job_cli_transcode(spark, tmp_path):
         env={**os.environ, "PYTHONPATH": REPO},
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+    metrics = json.loads(proc.stdout.strip().splitlines()[-1])
+    # the engine funnel, tallied in the extraction pass
+    assert metrics["rows"] == metrics["c_docs"] + metrics["py_docs"] == 2
     from gumbo_pp_spark.plans.lineage import read_extracted
 
     got = {r.doc_id: r.text for r in read_extracted(spark, out).collect()}

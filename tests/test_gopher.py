@@ -1,6 +1,8 @@
 """Gopher quality-rule panel (Rae et al. 2021 §A1.1) — integer-exact
 e4 ratios, one map-only projection; beyond-reference pipeline operator."""
 
+from pyspark.sql import functions as F
+
 from gumbo_pp_spark.operators import textstats as T
 
 
@@ -94,3 +96,19 @@ class TestCorpusReport:
         # the text column never appears in an exchange key
         assert "hashpartitioning(text" not in final
         assert "partial_count" in plan or "partial_sum" in plan
+
+
+class TestTopWordFracExpr:
+    def test_edge_texts(self, spark):
+        # the run-start filter's look-behind index is clamped to 1; the
+        # values are the longest equal-word run over the word count:
+        # empty and one-word texts are one run of one word
+        cases = [(1, "", 10000), (2, "word", 10000), (3, "a a a b", 7500),
+                 (4, "b a b a", 5000), (5, "x x x x", 10000), (6, "a b c", 3333)]
+        got = {
+            r.doc_id: r.f
+            for r in _docs(spark, [(i, t) for i, t, _ in cases])
+            .select("doc_id", F.expr(T.top_word_frac_e4_expr("text")).alias("f"))
+            .collect()
+        }
+        assert got == {i: e for i, _, e in cases}

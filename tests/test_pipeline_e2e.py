@@ -309,3 +309,32 @@ def test_extend_training_corpus_appends_only_new_content(spark):
         assert ext.columns == prior.columns
         prior.unpersist()
         ext.unpersist()
+
+
+def test_extend_training_corpus_min_equal_in_forwarded_kwargs(spark, monkeypatch):
+    # a caller forwarding one kwargs dict that carries
+    # near_dup_min_equal gets it applied to BOTH dedup stages once
+    from gumbo_pp_spark import pipelines as P
+    from gumbo_pp_spark.operators import dedup as D
+
+    batch = spark.createDataFrame(
+        [(1, "u", "t", 1, "m")],
+        "doc_id bigint, url string, clean_text string, n_tokens bigint, fp_md5 string",
+    )
+    seen = {}
+
+    def fake_build(pages, **kw):
+        seen["build"] = kw
+        return batch
+
+    def fake_between(new, prior, min_equal):
+        seen["between"] = min_equal
+        return spark.createDataFrame([], "new_id bigint")
+
+    monkeypatch.setattr(P, "build_training_corpus", fake_build)
+    monkeypatch.setattr(D, "incremental_dedup", lambda b, prior, text_col: b)
+    monkeypatch.setattr(D, "minhash_lsh_pairs_between", fake_between)
+    kwargs = {"near_dup_min_equal": 3, "min_tokens": 5}
+    out = P.extend_training_corpus(batch, batch, **kwargs)
+    assert seen == {"build": {"near_dup_min_equal": 3, "min_tokens": 5}, "between": 3}
+    assert out.count() == 1

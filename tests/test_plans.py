@@ -243,6 +243,123 @@ class TestLedgerMetrics:
             assert total_c == 0
 
 
+def _dirty_pages(spark):
+    """Dirty-crawl mix: ASCII, CRLF, multibyte, invalid UTF-8,
+    NUL-bearing and colgroup-NUL pages (the last bail to the Python
+    engine, ``c_engine = 0``), some with parse errors."""
+    kinds = [
+        lambda i: f"<html><body><p>ascii {i}</p></body></html>".encode(),
+        lambda i: f"<html>\r\n<body>\r\n<p>crlf {i}</p>\r\n</body></html>".encode(),
+        lambda i: f"<p>Béta € 😀 日本語 {i}</p>".encode(),
+        lambda i: b"\xff\xfe<p>invalid " + str(i).encode() + b"</p>",
+        lambda i: b"<p>x\x00y " + str(i).encode() + "</p><p>中文\x00</p>".encode(),
+        lambda i: b"<table><colgroup>\x00<col></colgroup><tr><td>cg " + str(i).encode()
+        + b"</td></tr></table>",
+        lambda i: f"<div><p>unclosed <b>{i}<td></i>".encode(),
+    ]
+    rows = [(i, f"https://h{i % 5}.example/{i}", bytearray(kinds[i % len(kinds)](i)))
+            for i in range(70)]
+    return spark.createDataFrame(rows, "doc_id long, url string, html binary")
+
+
+@pytest.fixture(scope="module")
+def tallied_run(spark, tmp_path_factory):
+    """One extract_with_resume over the dirty mix under its own job
+    group; returns the result, the ledger and the physical-plan
+    descriptions of every SQL execution the group's jobs ran in."""
+    import uuid
+
+    sc = spark.sparkContext
+    out_dir = str(tmp_path_factory.mktemp("tally") / "out")
+    pages = _dirty_pages(spark)
+    store = spark._jsparkSession.sharedState().statusStore()
+    n_before = store.executionsList().size()
+    group = f"ledger-tally-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "extract_with_resume under test")
+    try:
+        res = extract_with_resume(spark, pages, out_dir, n_splits=4)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    execs = store.executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(n_before, execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+    recs = PartitionLedger(f"{out_dir}/_ledger").committed()
+    return {"out_dir": out_dir, "res": res, "jobs": jobs, "plans": plans, "recs": recs}
+
+
+def _exchanges_above(plan: str, node: str = "MapInArrow") -> list[str]:
+    """Tree lines above ``node`` that are shuffle boundaries, in every
+    plan section (AQE current/final and initial) of an explain text."""
+    import re
+
+    tree = plan.split("\n\n", 1)[0]
+    assert node in tree, tree
+    bad = []
+    for section in re.split(r"== \w+ Plan ==", tree):
+        above = section.split(node, 1)[0] if node in section else ""
+        bad += [ln for ln in above.splitlines() if "Exchange" in ln or "ShuffleQueryStage" in ln]
+    return bad
+
+
+class TestLedgerTalliesFromWritePass:
+    """The ledger statistics are summed inside the extraction pass
+    (accumulator) — they must equal a re-read of the written output,
+    and no job of the run may read that output back."""
+
+    def test_ledger_sums_match_reread_of_output(self, spark, tallied_run):
+        recs = tallied_run["recs"]
+        assert set(recs) == {0, 1, 2, 3}
+        # the re-read stays here as the oracle
+        oracle = {
+            r["split_id"]: r
+            for r in read_extracted(spark, tallied_run["out_dir"])
+            .groupBy("split_id")
+            .agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.length("text")).alias("bytes"),
+                F.sum("parse_errors").alias("parse_errors"),
+                F.sum("c_engine").alias("c_docs"),
+            )
+            .collect()
+        }
+        for s, rec in recs.items():
+            o = oracle.get(s)
+            want = ({"rows": 0, "bytes": 0, "parse_errors": 0, "c_docs": 0, "py_docs": 0}
+                    if o is None else
+                    {"rows": o["rows"], "bytes": o["bytes"], "parse_errors": o["parse_errors"],
+                     "c_docs": o["c_docs"], "py_docs": o["rows"] - o["c_docs"]})
+            assert {k: rec[k] for k in want} == want, s
+        # the mix really covers both engines and non-zero error counts
+        assert sum(r["rows"] for r in recs.values()) == 70
+        assert sum(r["py_docs"] for r in recs.values()) > 0
+        assert sum(r["parse_errors"] for r in recs.values()) > 0
+
+    def test_run_totals_equal_ledger_sums(self, tallied_run):
+        res, recs = tallied_run["res"], tallied_run["recs"]
+        for k in ("rows", "c_docs", "py_docs", "parse_errors"):
+            assert res[k] == sum(r[k] for r in recs.values()), k
+        assert res["c_docs"] + res["py_docs"] == res["rows"] == 70
+
+    def test_no_reread_job_and_extraction_in_result_stage(self, tallied_run):
+        import re
+
+        run_id = tallied_run["res"]["run_id"]
+        plans = tallied_run["plans"]
+        assert tallied_run["jobs"] and plans
+        scans = [p for p in plans
+                 if re.search(rf"Location: [^\n]*data/run={run_id}", p)]
+        assert scans == [], scans[0][:2000]
+        # exactly-once accumulator counts need the extraction in the
+        # write's result stage: no shuffle boundary above MapInArrow
+        (write,) = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+        assert _exchanges_above(write) == [], write[:3000]
+
+
 class TestPerSplitWall:
     def test_distinct_per_split_wall(self, spark, tmp_path):
         # round-3: per-split wall_ms is the run wall apportioned by the
