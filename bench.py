@@ -203,22 +203,17 @@ def wait_for_idle(threshold: float = 0.88, timeout_s: float = 60.0) -> None:
 
 def _mp_parse_worker(args):
     lo, hi = args
-    from gumbo_pp_spark.operators.extract import _BOILER_ID_BYTES, main_text_program
-    from gumbo_pp_spark.parser import cengine
-    from gumbo_pp_spark.parser.html5 import parse_html
+    from gumbo_pp_spark.operators.extract import main_text_batch
 
-    global _MP_HTMLS
-    # the SAME per-doc path the Spark job runs (C kernel fast path,
-    # Python parse+kernel fallback), so the mp ceiling is a same-
-    # workload calibration, not a slower proxy
-    cx = cengine._cextract
-    for h in _MP_HTMLS[lo:hi]:
-        if cx is None or cx(h, _BOILER_ID_BYTES) is None:
-            main_text_program(parse_html(h))
+    # the SAME per-batch engine the Spark job runs (one C call per
+    # Arrow batch of 4096 rows, Python reference rows spliced in), so
+    # the mp ceiling is a same-workload calibration, not a slower proxy
+    for rb in _MP_PAGES.slice(lo, hi - lo).to_batches(max_chunksize=4096):
+        main_text_batch(rb)
     return hi - lo
 
 
-_MP_HTMLS: list = []
+_MP_PAGES = None  # pyarrow Table holding the one ``html`` column
 
 
 def hardware_ceiling(pages_dir: str, levels: tuple[int, ...]) -> dict:
@@ -231,9 +226,9 @@ def hardware_ceiling(pages_dir: str, levels: tuple[int, ...]) -> dict:
 
     import pyarrow.parquet as pq
 
-    global _MP_HTMLS
-    _MP_HTMLS = pq.read_table(pages_dir, columns=["html"]).column("html").to_pylist()
-    n = len(_MP_HTMLS)
+    global _MP_PAGES
+    _MP_PAGES = pq.read_table(pages_dir, columns=["html"])
+    n = _MP_PAGES.num_rows
     out = {}
     for nproc in levels:
         chunks = [(i * n // nproc, (i + 1) * n // nproc) for i in range(nproc)]
@@ -245,7 +240,7 @@ def hardware_ceiling(pages_dir: str, levels: tuple[int, ...]) -> dict:
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         out[f"mp{nproc}_docs_per_sec"] = round(n / best, 1)
-    _MP_HTMLS = []
+    _MP_PAGES = None
     return out
 
 

@@ -4,11 +4,14 @@ map operator; SURVEY.md §3 lifecycle E1-E3 at corpus scale).
 The reference runs parse (``gumbo_range``, src/gumbo_pp.cpp:33-34),
 query (std::find_if + matchers) and extraction (gumbo_text.h) per
 document, single-threaded.  Here the same three phases run inside a
-``mapInPandas`` stage: Spark streams Arrow batches of page rows into a
+``mapInArrow`` stage: Spark streams Arrow batches of page rows into a
 Python worker, each document is parsed once into a preorder NodeTable,
 an extraction *program* (plain Python over numpy node arrays — the
 per-document work is vectorized columnar kernels, no per-node Python
 closures) emits the output columns, and results stream back as Arrow.
+The flagship main-text stage runs the parse and its kernel for a whole
+Arrow batch in one C call (:func:`main_text_batch`), with the Python
+kernel as the reference for the rows the C engine does not take.
 
 Embarrassingly parallel across documents → map-only stage, no shuffle;
 Catalyst prunes the scan to exactly the input columns the stage needs
@@ -101,8 +104,8 @@ def run_program(
     # object during Arrow→pandas conversion and round-tripped the
     # passthrough columns through Python lists; here the html column
     # is iterated as zero-copy memoryview slices of the Arrow buffer
-    # (the same _iter_html fast path the flagship uses) and the
-    # passthrough columns pass through as untouched Arrow arrays.
+    # (_iter_html) and the passthrough columns pass through as
+    # untouched Arrow arrays.
     def fn(batches) -> "Iterator":
         import time as _time
 
@@ -179,31 +182,16 @@ def _iter_html(arr):
 
 
 # ----------------------------------------------------------------------
-# batch C fast path: whole Arrow column in one extension call
+# per-batch engine: one C call per Arrow batch, Python reference rows
+# spliced in
 # ----------------------------------------------------------------------
 def _py_doc_pieces(raw):
-    """Python-path main-text pieces for ONE document — the bail-splice
-    companion of the C batch path (same kernel as the per-doc loop in
-    ``extract_main_text``): returns (text, tids_i32, s0, s1, b0, b1,
-    ptags, n_nodes, parse_errors)."""
+    """Parse ONE document and run the main-text kernel on it — the
+    Python-reference rows of :func:`main_text_batch`: returns (text,
+    tids_i32, s0, s1, b0, b1, ptags, n_nodes, parse_errors)."""
     nt = parse_html(raw)
-    tag_id = nt.tag_id
-    body = int(np.argmax(tag_id == _BODY_ID))
-    lo, hi = nt.subtree(body) if tag_id[body] == _BODY_ID else (0, nt.n)
-    bad = np.nonzero(_BOILER_LUT[tag_id])[0]
-    t = nt.type
-    keep = _TEXTUAL_LUT[t]
-    keep[:lo] = False
-    keep[hi:] = False
-    if len(bad):
-        keep &= ~_excluded_mask(nt, bad)
-    kids = np.nonzero(keep)[0]
-    text = "".join(nt.text[kids].tolist())
-    tids = kids[t[kids] == TEXT]
-    s0a, s1a = nt.src_start[tids], nt.src_end[tids]
-    return (text, tids.astype(np.int32), s0a, s1a,
-            nt.byte_offsets(s0a), nt.byte_offsets(s1a),
-            nt.tag_name[nt.parent[tids]].tolist(), nt.n, nt.parse_errors)
+    text, tids, ptags, s0, s1, b0, b1 = _main_text_columns(nt)
+    return text, tids.astype(np.int32), s0, s1, b0, b1, ptags, nt.n, nt.parse_errors
 
 
 _SPAN_FIELDS = ["node_id", "tag", "start", "end", "start_byte", "end_byte"]
@@ -212,7 +200,7 @@ _SPAN_FIELDS = ["node_id", "tag", "start", "end", "start_byte", "end_byte"]
 def _splice_rows(arr, idxs, one_rows):
     """Replace rows ``idxs`` (ascending) of ``arr`` with the 1-row
     arrays ``one_rows`` — zero-copy slices of the C-built column glued
-    around the (rare) Python-path rows."""
+    around the Python-reference rows."""
     import pyarrow as pa
 
     pieces = []
@@ -227,28 +215,63 @@ def _splice_rows(arr, idxs, one_rows):
     return pa.concat_arrays(pieces)
 
 
-def _assemble_from_batch(rb, htmls, cb, n_pt, pt_names, stage_metrics, clk):
-    """Run ``cextract_batch`` over the whole Arrow binary column and
-    wrap its batch-level buffers into the output RecordBatch — the
-    engaged path builds no per-document Python objects at all (the
-    input_hint's "no per-row Python" contract made literal).  Text and
-    parent-tag columns come back in Arrow string layout (one UTF-8
-    data blob + int32 offsets) and are wrapped zero-copy via
-    ``StringArray.from_buffers``; bail documents (non-ASCII / CR / any
-    engine bail) are recomputed on the reference Python path and
-    spliced row-wise.  Returns None when the batch must use the
-    per-document path (C-side int32 overflow guard)."""
+def _no_c_pass(n: int) -> tuple:
+    """``cextract_batch``'s result shape for a batch it did not run:
+    empty slots everywhere and every row a bail row."""
+    i32, i64 = np.zeros(n, np.int32), np.zeros(0, np.int64)
+    return (b"", np.zeros(n + 1, np.int32), np.zeros(0, np.int32), i64, i64, i64, i64,
+            i32, b"", np.zeros(1, np.int32), i32.copy(), i32.copy(),
+            np.zeros(n, np.int64), np.arange(n, dtype=np.int32))
+
+
+def main_text_batch(rb, stage_metrics: bool = False):
+    """Main text for one Arrow batch: the whole per-batch body of
+    :func:`extract_main_text`'s worker.  The last column of ``rb`` is
+    the html (binary or string; a string column is read as binary, the
+    two share a layout), the columns before it pass through.
+
+    One ``cextract_batch`` call parses and extracts the whole column
+    and hands back batch-level buffers in Arrow layout (text and
+    parent-tag columns as one UTF-8 blob plus int32 offsets, wrapped
+    zero-copy) — the engaged rows build no per-document Python
+    objects.  Every row that call does not take runs on the Python
+    reference (:func:`_py_doc_pieces`) and is spliced in row-wise:
+
+    * its designed bail rows;
+    * NULL rows, parsed as the empty document ``b""``;
+    * every row when the C engine is off (``GUMBO_PP_CENGINE=0``, or
+      ``html5._cparse_fast`` is None) or the call declines the batch
+      (over 1 GiB of text: int32 offset overflow).
+
+    With ``stage_metrics``, ``c_engine`` is 1 iff the C engine parsed
+    the row, and ``parse_us`` carries the row's whole parse + kernel
+    time (``kernel_us`` is 0: the two are fused)."""
+    import time
+
     import pyarrow as pa
 
-    is64 = pa.types.is_large_binary(htmls.type)
-    dt = np.int64 if is64 else np.int32
-    bufs = htmls.buffers()
-    off = np.frombuffer(bufs[1], dt, len(htmls) + 1, htmls.offset * np.dtype(dt).itemsize)
-    res = cb(bufs[2], off, 1 if is64 else 0, _BOILER_ID_BYTES)
-    if res is None:
-        return None
-    (txt, toff, sid, s0, s1, b0, b1, cnt, ptg, poff, nn, pe, tot, bail) = res
+    from ..parser import cengine, html5
+
+    clk = time.perf_counter
+    n_pt = rb.num_columns - 1
+    htmls = rb.column(n_pt)
+    if pa.types.is_string(htmls.type):
+        htmls = htmls.view(pa.binary())
+    elif pa.types.is_large_string(htmls.type):
+        htmls = htmls.view(pa.large_binary())
     n = len(htmls)
+    res = None
+    if n:
+        is64 = pa.types.is_large_binary(htmls.type)
+        dt = np.int64 if is64 else np.int32
+        bufs = htmls.buffers()
+        data = bufs[2] or b""
+        off = np.frombuffer(bufs[1], dt, n + 1, htmls.offset * np.dtype(dt).itemsize)
+        if html5._cparse_fast is not None and cengine._cextract_batch is not None:
+            res = cengine._cextract_batch(data, off, int(is64), _BOILER_ID_BYTES)
+    (txt, toff, sid, s0, s1, b0, b1, cnt, ptg, poff, nn, pe, tot, bail) = (
+        res if res is not None else _no_c_pass(n)
+    )
     text_arr = pa.StringArray.from_buffers(n, pa.py_buffer(toff), pa.py_buffer(txt))
     tag_arr = pa.StringArray.from_buffers(len(sid), pa.py_buffer(poff), pa.py_buffer(ptg))
     # byte columns computed in C: identity for pure-ASCII CR-free
@@ -261,15 +284,20 @@ def _assemble_from_batch(rb, htmls, cb, n_pt, pt_names, stage_metrics, clk):
     loff[0] = 0
     np.cumsum(cnt, out=loff[1:])
     spans = pa.ListArray.from_arrays(pa.array(loff), struct)
-    c_eng = np.ones(n, np.int8) if stage_metrics else None
+    if htmls.null_count:
+        # NULL rows never depend on what a null slot's bytes hold
+        nulls = np.nonzero(htmls.is_null().to_numpy(zero_copy_only=False))[0]
+        bail = np.union1d(bail, nulls)
+    c_eng = np.ones(n, np.int8)
     if len(bail):
-        data_mv = memoryview(bufs[2])
+        data_mv = memoryview(data)
+        valid = htmls.is_valid().to_numpy(zero_copy_only=False)
         texts_1, spans_1 = [], []
         for k in bail.tolist():
             t0 = clk()
-            (text, tids, ps0, ps1, pb0, pb1, ptags, nn_i, pe_i) = _py_doc_pieces(
-                data_mv[off[k]: off[k + 1]]
-            )
+            c0 = html5._cstats["c"]
+            raw = data_mv[off[k]: off[k + 1]] if valid[k] else b""
+            (text, tids, ps0, ps1, pb0, pb1, ptags, nn_i, pe_i) = _py_doc_pieces(raw)
             st_k = pa.StructArray.from_arrays(
                 [pa.array(tids), pa.array(ptags, pa.string()),
                  pa.array(ps0.astype(np.int64, copy=False)),
@@ -285,17 +313,15 @@ def _assemble_from_batch(rb, htmls, cb, n_pt, pt_names, stage_metrics, clk):
             nn[k] = nn_i
             pe[k] = pe_i
             tot[k] = int((clk() - t0) * 1e6)
-            if c_eng is not None:
-                c_eng[k] = 0
+            # parse_html counts each document its C dispatch accepted
+            c_eng[k] = html5._cstats["c"] > c0
         bl = bail.tolist()
         text_arr = _splice_rows(text_arr, bl, texts_1)
         spans = _splice_rows(spans, bl, spans_1)
     cols = [rb.column(i) for i in range(n_pt)]
     cols += [text_arr, spans, pa.array(nn), pa.array(pe)]
-    names = [*pt_names, "text", "spans", "n_nodes", "parse_errors"]
+    names = [*rb.schema.names[:n_pt], "text", "spans", "n_nodes", "parse_errors"]
     if stage_metrics:
-        # fused-kernel convention (same as the per-doc cextract path):
-        # parse_us carries the whole per-doc C time, kernel_us ~0
         cols += [pa.array(tot), pa.array(np.zeros(n, np.int64)), pa.array(c_eng)]
         names += ["parse_us", "kernel_us", "c_engine"]
     return pa.RecordBatch.from_arrays(cols, names=names)
@@ -312,6 +338,33 @@ def _excluded_mask(nt: NodeTable, bad_roots: np.ndarray) -> np.ndarray:
     return np.cumsum(diff[:-1]) > 0
 
 
+def _main_text_columns(nt: NodeTable):
+    """The main-text kernel, the one Python copy (``extract_doc_into``
+    in _cext/chtml.c is pinned column-identical to it): body-subtree
+    window, boilerplate-subtree exclusion, textual nodes in document
+    order.  Returns ``(text, tids, ptags, s0, s1, b0, b1)``: the
+    concatenated text and, per kept TEXT node, its preorder id, parent
+    tag name, char span and byte span (numpy columns; ``ptags`` a
+    list)."""
+    tag_id = nt.tag_id
+    body = int(np.argmax(tag_id == _BODY_ID))
+    lo, hi = nt.subtree(body) if tag_id[body] == _BODY_ID else (0, nt.n)
+    bad = np.nonzero(_BOILER_LUT[tag_id])[0]
+    t = nt.type
+    keep = _TEXTUAL_LUT[t]
+    keep[:lo] = False
+    keep[hi:] = False
+    if len(bad):
+        keep &= ~_excluded_mask(nt, bad)
+    ids = np.nonzero(keep)[0]
+    tids = ids[t[ids] == TEXT]
+    par = nt.parent[tids]
+    ptags = np.where(par >= 0, nt.tag_name[par], "").tolist()
+    s0, s1 = nt.src_start[tids], nt.src_end[tids]
+    return ("".join(nt.text[ids].tolist()), tids, ptags, s0, s1,
+            nt.byte_offsets(s0), nt.byte_offsets(s1))
+
+
 def main_text_program(nt: NodeTable) -> dict:
     """Flagship extraction (SURVEY.md §7 M2): drop boilerplate chrome
     subtrees and comments, keep remaining body text in document order
@@ -326,35 +379,18 @@ def main_text_program(nt: NodeTable) -> dict:
     consumer can slice the original bytes of a non-ASCII/CRLF page and
     get the span's raw source (parser/bytemap.py).  On ASCII CR-free
     pages the two coincide."""
-    tag_id = nt.tag_id
-    body = int(np.argmax(tag_id == _BODY_ID))
-    lo, hi = nt.subtree(body) if tag_id[body] == _BODY_ID else (0, nt.n)
-    bad = np.nonzero(_BOILER_LUT[tag_id])[0]
-    t = nt.type
-    keep = _TEXTUAL_LUT[t]
-    keep[:lo] = False
-    keep[hi:] = False
-    if len(bad):
-        keep &= ~_excluded_mask(nt, bad)
-    ids = np.nonzero(keep)[0]
-    texts = nt.text[ids].tolist()
-    # vectorized span assembly: one gather per column, then zip — the
-    # round-1 per-element listcomp paid ~100us/doc in numpy scalar
-    # indexing + int()/str() conversions
-    tids = ids[t[ids] == TEXT]
-    par = nt.parent[tids]
-    ptags = np.where(par >= 0, nt.tag_name[par], "")
-    s0a, s1a = nt.src_start[tids], nt.src_end[tids]
+    text, tids, ptags, s0, s1, b0, b1 = _main_text_columns(nt)
+    # one gather per column, then zip — a per-element listcomp over
+    # numpy scalars paid ~100us/doc in indexing + int()/str()
     spans = [
-        {"node_id": i, "tag": g, "start": s0, "end": s1,
-         "start_byte": b0, "end_byte": b1}
-        for i, g, s0, s1, b0, b1 in zip(
-            tids.tolist(), ptags.tolist(), s0a.tolist(), s1a.tolist(),
-            nt.byte_offsets(s0a).tolist(), nt.byte_offsets(s1a).tolist(),
+        {"node_id": i, "tag": g, "start": a, "end": b,
+         "start_byte": c, "end_byte": d}
+        for i, g, a, b, c, d in zip(
+            tids.tolist(), ptags, s0.tolist(), s1.tolist(), b0.tolist(), b1.tolist(),
         )
     ]
     return {
-        "text": "".join(texts),
+        "text": text,
         "spans": spans,
         "n_nodes": int(nt.n),
         "parse_errors": int(nt.parse_errors),
@@ -372,156 +408,32 @@ def extract_main_text(
     df: DataFrame, passthrough=("doc_id", "url"), stage_metrics: bool = False,
     on_batch: Callable[[pa.RecordBatch], None] | None = None,
 ) -> DataFrame:
-    """Flagship stage on the Arrow fast path: ``mapInArrow`` with fully
-    vectorized output construction (span struct arrays built from
-    concatenated numpy columns + offsets — no per-row dict conversion;
-    ~25-30% over the generic pandas runner on the bench corpus).
+    """Flagship stage: ``mapInArrow`` over the pruned ``passthrough +
+    html`` projection, each Arrow batch run through
+    :func:`main_text_batch` (one C call per batch, Python reference
+    rows spliced in).
 
     Output ``spans`` follow :func:`main_text_program`'s offset
-    contract: indices into the decoded, newline-normalized parser
-    input, not the raw ``html`` bytes.
+    contract: ``start``/``end`` index the decoded, newline-normalized
+    parser input, ``start_byte``/``end_byte`` the raw ``html`` bytes.
+
+    NULL contract: a NULL ``html`` is parsed as the empty document —
+    its row is exactly the row of ``b""`` (never an error, never
+    dropped).
 
     ``on_batch``, when set, is called executor-side with every output
     Arrow batch before it is handed back to the JVM — a hook for
     statistics gathered in the extraction's own pass (e.g. into an
     accumulator) instead of a second job over the output.  Unset, the
     plain ``mapInArrow`` runs with no wrapper."""
-    import pyarrow as pa
-
     pt_types = _passthrough_types(df, passthrough)
     schema = ", ".join([*(f"{c} {t}" for c, t in pt_types), MAIN_TEXT_FIELDS])
     if stage_metrics:
         schema += ", parse_us bigint, kernel_us bigint, c_engine tinyint"
-    n_pt = len(passthrough)
 
     def fn(batches) -> "Iterator[pa.RecordBatch]":
-        import time as _time
-
-        from ..parser import cengine as _ce, html5 as _h5
-        from ..parser.html5 import _cstats
-
-        clk = _time.perf_counter
-        empty_i32 = np.array([], np.int32)
-        empty_i64 = np.array([], np.int64)
-        pt_names = [c for c, _ in pt_types]
-        # whole-column C fast path (round-6): one extension call per
-        # Arrow batch, no per-document Python loop at all.  Gated like
-        # the per-doc fast path; any non-engageable layout (nulls,
-        # non-binary column) or a C-side overflow falls through to the
-        # per-document path below, byte-identically.
-        cb = _ce._cextract_batch if _h5._cparse_fast is not None else None
         for rb in batches:
-            htmls = rb.column(n_pt)
-            if cb is not None and len(htmls) and htmls.null_count == 0 and (
-                pa.types.is_binary(htmls.type) or pa.types.is_large_binary(htmls.type)
-            ):
-                out = _assemble_from_batch(rb, htmls, cb, n_pt, pt_names,
-                                           stage_metrics, clk)
-                if out is not None:
-                    yield out
-                    continue
-            texts: list[str] = []
-            nn: list[int] = []
-            pe: list[int] = []
-            parse_us: list[int] = []
-            kernel_us: list[int] = []
-            c_engine: list[int] = []
-            sp_node: list[np.ndarray] = []
-            sp_tag: list[str] = []
-            sp_start: list[np.ndarray] = []
-            sp_end: list[np.ndarray] = []
-            sp_bstart: list[np.ndarray] = []
-            sp_bend: list[np.ndarray] = []
-            sp_offsets = [0]
-            # full-C kernel fast path (round-6): parse AND the
-            # main-text kernel run inside the extension — no NodeTable
-            # and no per-doc numpy micro-ops are built at all.  Gated
-            # like the parse fast path: html5._cparse_fast is None
-            # inside the html5lib-emulation patch contexts, and
-            # GUMBO_PP_CENGINE=0 leaves _ce._cextract None.  A None
-            # return (non-ASCII / CR / engine bail) falls back to
-            # the reference path below, byte-identically.
-            cx = _ce._cextract if _h5._cparse_fast is not None else None
-            for raw in _iter_html(htmls):
-                t0 = clk()
-                if cx is not None and not isinstance(raw, str):
-                    res = cx(raw, _BOILER_ID_BYTES)
-                    if res is not None:
-                        text, nn_i, errs_i, ids, s0a, s1a, ptag_list = res
-                        t1 = clk()
-                        texts.append(text)
-                        sp_node.append(ids)
-                        sp_start.append(s0a)
-                        sp_end.append(s1a)
-                        # identity byte map by construction (pure-ASCII
-                        # CR-free raw bytes): byte cols == char cols
-                        sp_bstart.append(s0a)
-                        sp_bend.append(s1a)
-                        sp_tag.extend(ptag_list)
-                        sp_offsets.append(sp_offsets[-1] + len(ids))
-                        nn.append(nn_i)
-                        pe.append(errs_i)
-                        if stage_metrics:
-                            c_engine.append(1)
-                            parse_us.append(int((t1 - t0) * 1e6))
-                            kernel_us.append(int((clk() - t1) * 1e6))
-                        continue
-                c_before = _cstats["c"]
-                nt = parse_html(raw)
-                t1 = clk()
-                if stage_metrics:
-                    # which engine parsed THIS doc: the C fast path
-                    # bumps _cstats["c"] exactly once per accepted doc
-                    c_engine.append(1 if _cstats["c"] > c_before else 0)
-                tag_id = nt.tag_id
-                body = int(np.argmax(tag_id == _BODY_ID))
-                lo, hi = nt.subtree(body) if tag_id[body] == _BODY_ID else (0, nt.n)
-                bad = np.nonzero(_BOILER_LUT[tag_id])[0]
-                t = nt.type
-                keep = _TEXTUAL_LUT[t]
-                keep[:lo] = False
-                keep[hi:] = False
-                if len(bad):
-                    keep &= ~_excluded_mask(nt, bad)
-                kids = np.nonzero(keep)[0]
-                texts.append("".join(nt.text[kids].tolist()))
-                tids = kids[t[kids] == TEXT]
-                sp_node.append(tids.astype(np.int32))
-                s0a, s1a = nt.src_start[tids], nt.src_end[tids]
-                sp_start.append(s0a)
-                sp_end.append(s1a)
-                # byte offsets: identity (zero cost) on ASCII CR-free
-                # pages; exact vectorized gather otherwise
-                sp_bstart.append(nt.byte_offsets(s0a))
-                sp_bend.append(nt.byte_offsets(s1a))
-                sp_tag.extend(nt.tag_name[nt.parent[tids]].tolist())
-                sp_offsets.append(sp_offsets[-1] + len(tids))
-                nn.append(nt.n)
-                pe.append(nt.parse_errors)
-                if stage_metrics:
-                    parse_us.append(int((t1 - t0) * 1e6))
-                    kernel_us.append(int((clk() - t1) * 1e6))
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(np.concatenate(sp_node) if sp_node else empty_i32),
-                    pa.array(sp_tag, pa.string()),
-                    pa.array(np.concatenate(sp_start) if sp_start else empty_i64),
-                    pa.array(np.concatenate(sp_end) if sp_end else empty_i64),
-                    pa.array(np.concatenate(sp_bstart) if sp_bstart else empty_i64),
-                    pa.array(np.concatenate(sp_bend) if sp_bend else empty_i64),
-                ],
-                names=["node_id", "tag", "start", "end", "start_byte", "end_byte"],
-            )
-            spans = pa.ListArray.from_arrays(pa.array(sp_offsets, pa.int32()), struct)
-            cols = [rb.column(i) for i in range(n_pt)]
-            cols += [pa.array(texts, pa.string()), spans,
-                     pa.array(nn, pa.int32()), pa.array(pe, pa.int32())]
-            names = [*(c for c, _ in pt_types), "text", "spans", "n_nodes", "parse_errors"]
-            if stage_metrics:
-                cols += [pa.array(parse_us, pa.int64()), pa.array(kernel_us, pa.int64()),
-                         pa.array(c_engine, pa.int8())]
-                names += ["parse_us", "kernel_us", "c_engine"]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            yield main_text_batch(rb, stage_metrics)
 
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 

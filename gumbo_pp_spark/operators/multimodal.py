@@ -17,10 +17,8 @@ is STUBBED because no image/audio libraries exist in this container:
 from __future__ import annotations
 
 import hashlib
-from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 MEDIA_SCHEMA = (
@@ -77,12 +75,34 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Guarded spread before a per-row Python decode stage (the media
-    table derives from the one-row-group documents scan)."""
+def _map_rows(df: DataFrame, in_cols: tuple[str, ...], out_ddl: str, row_fn) -> DataFrame:
+    """Arrow-batched per-row kernel stage: ``row_fn(*values)`` returns
+    the output rows (tuples in ``out_ddl`` order; several for a 1→N
+    explosion) of one input row.  Output columns are built with
+    explicit Arrow types, as ``extract.run_program`` does.  The input is
+    spread first: the media table derives from the one-row-group
+    documents scan."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
+
     from ..plans.partitioning import ensure_min_parallelism
 
-    return ensure_min_parallelism(df)
+    out = StructType.fromDDL(out_ddl)
+    names = out.fieldNames()
+    types = [to_arrow_type(f.dataType) for f in out.fields]
+
+    def fn(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            rows = [r for row in zip(*(rb.column(c).to_pylist() for c in in_cols))
+                    for r in row_fn(*row)]
+            cols = list(zip(*rows)) if rows else [()] * len(names)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, t) for c, t in zip(cols, types)], names=names
+            )
+
+    return ensure_min_parallelism(df.select(*in_cols)).mapInArrow(fn, out_ddl)
 
 
 def image_features(df: DataFrame) -> DataFrame:
@@ -95,44 +115,21 @@ def image_features(df: DataFrame) -> DataFrame:
     s31/s32 are the two middle values of the sorted grid (the median×2
     — avoids float division).  Bit 63 kept clear for signed int64."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sums, npx, phashes = [], [], [], []
-            for mid, payload, w, h in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                w, h = int(w), int(h)
-                img = decode_image(bytes(payload), w, h).astype(np.int64)
-                ids.append(mid)
-                sums.append(img.reshape(-1, 3).sum(axis=0))
-                npx.append(w * h)
-                # equal 8x8 blocks (w, h are multiples of 8 by contract)
-                grid = (
-                    img.sum(axis=2)
-                    .reshape(8, h // 8, 8, w // 8)
-                    .sum(axis=(1, 3))
-                    .ravel()
-                )
-                srt = np.sort(grid)
-                med2 = int(srt[31]) + int(srt[32])
-                bits = (2 * grid > med2).astype(np.uint64)
-                phashes.append(int((bits[:63] << np.arange(63, dtype=np.uint64)).sum()))
-            ss = np.array(sums, dtype=np.int64) if sums else np.zeros((0, 3), dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "sum_r": ss[:, 0] if len(ids) else [],
-                    "sum_g": ss[:, 1] if len(ids) else [],
-                    "sum_b": ss[:, 2] if len(ids) else [],
-                    "n_px": npx,
-                    "phash": phashes,
-                }
-            )
+    def row(mid, payload, w, h):
+        img = decode_image(payload, w, h).astype(np.int64)
+        sums = img.reshape(-1, 3).sum(axis=0).tolist()
+        # equal 8x8 blocks (w, h are multiples of 8 by contract)
+        grid = img.sum(axis=2).reshape(8, h // 8, 8, w // 8).sum(axis=(1, 3)).ravel()
+        srt = np.sort(grid)
+        med2 = int(srt[31]) + int(srt[32])
+        bits = (2 * grid > med2).astype(np.uint64)
+        phash = int((bits[:63] << np.arange(63, dtype=np.uint64)).sum())
+        return [(mid, *sums, w * h, phash)]
 
-    src = _spread(df.where("kind = 'image'").select("media_id", "payload", "width", "height"))
-    return src.mapInPandas(
-        fn,
+    return _map_rows(
+        df.where("kind = 'image'"), ("media_id", "payload", "width", "height"),
         "media_id bigint, sum_r bigint, sum_g bigint, sum_b bigint, n_px bigint, phash bigint",
+        row,
     )
 
 
@@ -140,67 +137,47 @@ def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
     """Block-mean resize; emits raw RGB bytes of the target size (the
     batch contract a real thumbnailer would use)."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for mid, payload, w, h in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                img = decode_image(bytes(payload), int(w), int(h)).astype(np.float64)
-                ys = np.array_split(np.arange(img.shape[0]), out_h)
-                xs = np.array_split(np.arange(img.shape[1]), out_w)
-                small = np.array(
-                    [[img[np.ix_(y, x)].mean(axis=(0, 1)) for x in xs] for y in ys]
-                ).astype(np.uint8)
-                ids.append(mid)
-                blobs.append(small.tobytes())
-            yield pd.DataFrame({"media_id": ids, "thumb": blobs})
+    def row(mid, payload, w, h):
+        img = decode_image(payload, w, h).astype(np.float64)
+        ys = np.array_split(np.arange(img.shape[0]), out_h)
+        xs = np.array_split(np.arange(img.shape[1]), out_w)
+        small = np.array(
+            [[img[np.ix_(y, x)].mean(axis=(0, 1)) for x in xs] for y in ys]
+        ).astype(np.uint8)
+        return [(mid, small.tobytes())]
 
-    src = _spread(df.where("kind = 'image'").select("media_id", "payload", "width", "height"))
-    return src.mapInPandas(fn, "media_id bigint, thumb binary")
+    return _map_rows(
+        df.where("kind = 'image'"), ("media_id", "payload", "width", "height"),
+        "media_id bigint, thumb binary", row,
+    )
 
 
 def sample_frames(df: DataFrame, every_ms: int = 250) -> DataFrame:
     """Video frame sampling: 1→N row explosion inside the Arrow batch
     (each frame is a fake-decoded image keyed by (payload, ts))."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, tss, frames = [], [], [], []
-            for mid, payload, w, h, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"],
-                pdf["duration_ms"],
-            ):
-                for i, ts in enumerate(range(0, int(dur), every_ms)):
-                    frame = decode_image(bytes(payload) + ts.to_bytes(4, "big"), int(w), int(h))
-                    ids.append(mid)
-                    idxs.append(i)
-                    tss.append(ts)
-                    frames.append(frame.tobytes())
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "ts_ms": tss, "frame": frames}
-            )
+    def row(mid, payload, w, h, dur):
+        return [
+            (mid, i, ts, decode_image(payload + ts.to_bytes(4, "big"), w, h).tobytes())
+            for i, ts in enumerate(range(0, dur, every_ms))
+        ]
 
-    src = _spread(df.where("kind = 'video'").select(
-        "media_id", "payload", "width", "height", "duration_ms"
-    ))
-    return src.mapInPandas(fn, "media_id bigint, frame_idx int, ts_ms int, frame binary")
+    return _map_rows(
+        df.where("kind = 'video'"),
+        ("media_id", "payload", "width", "height", "duration_ms"),
+        "media_id bigint, frame_idx int, ts_ms int, frame binary", row,
+    )
 
 
 def audio_features(df: DataFrame) -> DataFrame:
     """Per-clip RMS/zero-crossing stats over the fake PCM stream."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rms, zcr = [], [], []
-            for mid, payload, sr, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["sample_rate"], pdf["duration_ms"]
-            ):
-                pcm = decode_audio(bytes(payload), int(sr), int(dur))
-                ids.append(mid)
-                rms.append(float(np.sqrt((pcm ** 2).mean())))
-                zcr.append(float((np.diff(np.signbit(pcm)) != 0).mean()))
-            yield pd.DataFrame({"media_id": ids, "rms": rms, "zcr": zcr})
+    def row(mid, payload, sr, dur):
+        pcm = decode_audio(payload, sr, dur)
+        return [(mid, float(np.sqrt((pcm ** 2).mean())),
+                 float((np.diff(np.signbit(pcm)) != 0).mean()))]
 
-    src = _spread(df.where("kind = 'audio'").select("media_id", "payload", "sample_rate", "duration_ms"))
-    return src.mapInPandas(fn, "media_id bigint, rms double, zcr double")
+    return _map_rows(
+        df.where("kind = 'audio'"), ("media_id", "payload", "sample_rate", "duration_ms"),
+        "media_id bigint, rms double, zcr double", row,
+    )

@@ -4349,223 +4349,28 @@ fail_after_steal:
     return NULL;
 }
 
-/* ---- flagship main-text fast path --------------------------------
- * cextract(bytes, boiler_ids_i16_bytes) computes the main_text
- * kernel (operators/extract.py main_text_program) directly from the
- * C store: body-subtree window, boilerplate-subtree exclusion,
- * textual-node text concatenation, per-TEXT-node spans.  Bytes-only
- * entry: the ASCII/no-CR prescan that admits raw bytes also makes
- * decoded offsets == byte offsets (identity byte map), so the span
- * byte columns equal the char columns.  Returns None whenever cparse
- * would (the Python path reparses); output is column-identical to
- * the Python kernel (tests/test_cengine.py corpus A/B). */
-static PyObject *build_extract(P *p, const int16_t *boiler_ids, Py_ssize_t n_boiler) {
-    Store *st = &p->st;
-    int32_t *order = NULL, *parent_new = NULL, *iwp = NULL, *subend = NULL;
-    Py_ssize_t cnt = 0;
-    if (compute_preorder(p, &order, &parent_new, &iwp, &subend, &cnt) < 0)
-        return PyErr_NoMemory();
-
-    uint8_t boiler[N_TAGS];
-    memset(boiler, 0, sizeof(boiler));
-    for (Py_ssize_t k = 0; k < n_boiler; k++) {
-        int16_t t = boiler_ids[k];
-        if (t >= 0 && t < N_TAGS) boiler[t] = 1;
-    }
-
-    /* body window: first preorder node whose tag id is body (the
-     * Python kernel's argmax over tag_id == body); no body -> whole
-     * document */
-    int16_t body_tid = (int16_t)tag_lookup("body", 4);
-    Py_ssize_t lo = 0, hi = cnt;
-    for (Py_ssize_t i = 0; i < cnt; i++) {
-        int16_t t = st->tid[order ? order[i] : (int32_t)i];
-        if (t == body_tid) { lo = i; hi = subend[i]; break; }
-    }
-
-    PyObject *texts = PyList_New(0);
-    PyObject *ptags = PyList_New(0);
-    Py_ssize_t n_spans = 0, cap_spans = 16;
-    int32_t *sp_id = malloc((size_t)cap_spans * sizeof(int32_t));
-    int64_t *sp_s0 = malloc((size_t)cap_spans * sizeof(int64_t));
-    int64_t *sp_s1 = malloc((size_t)cap_spans * sizeof(int64_t));
-    if (!texts || !ptags || !sp_id || !sp_s0 || !sp_s1) goto fail;
-
-    {
-        Py_ssize_t excl_until = 0;
-        for (Py_ssize_t i = 0; i < cnt; i++) {
-            Py_ssize_t b = order ? order[i] : i;
-            int16_t tid = st->tid[b];
-            int8_t ty = st->type[b];
-            if (i >= excl_until) {
-                if (tid >= 0 && boiler[tid]) { excl_until = subend[i]; continue; }
-            } else {
-                continue;  /* inside a boilerplate subtree */
-            }
-            if (i < lo || i >= hi) continue;
-            if (ty != T_TEXT && ty != T_CDATA && ty != T_WHITESPACE) continue;
-            PyObject *tx = st->text[b] ? st->text[b] : empty_str;
-            if (PyList_Append(texts, tx) < 0) goto fail;
-            if (ty == T_TEXT) {
-                if (n_spans == cap_spans) {
-                    cap_spans *= 2;
-                    int32_t *ni = realloc(sp_id, (size_t)cap_spans * sizeof(int32_t));
-                    int64_t *n0 = realloc(sp_s0, (size_t)cap_spans * sizeof(int64_t));
-                    int64_t *n1 = realloc(sp_s1, (size_t)cap_spans * sizeof(int64_t));
-                    if (!ni || !n0 || !n1) {
-                        if (ni) sp_id = ni;
-                        if (n0) sp_s0 = n0;
-                        if (n1) sp_s1 = n1;
-                        goto fail;
-                    }
-                    sp_id = ni; sp_s0 = n0; sp_s1 = n1;
-                }
-                sp_id[n_spans] = (int32_t)i;
-                sp_s0[n_spans] = st->span[6 * b + 0];
-                sp_s1[n_spans] = st->span[6 * b + 1];
-                n_spans++;
-                int32_t par = parent_new[i];
-                PyObject *tg;
-                if (par >= 0) {
-                    Py_ssize_t pb = order ? order[par] : par;
-                    if (st->tag[pb]) tg = st->tag[pb];
-                    else if (st->tid[pb] >= 0 && st->tid[pb] < N_TAGS) tg = tag_objs[st->tid[pb]];
-                    else tg = empty_str;
-                } else {
-                    tg = empty_str;
-                }
-                if (PyList_Append(ptags, tg) < 0) goto fail;
-            }
-        }
-    }
-
-    {
-        PyObject *text = PyUnicode_Join(empty_str, texts);
-        if (!text) goto fail;
-        Py_DECREF(texts);
-        texts = NULL;
-        npy_intp d = (npy_intp)n_spans;
-        PyObject *a_id = PyArray_SimpleNew(1, &d, NPY_INT32);
-        PyObject *a_s0 = PyArray_SimpleNew(1, &d, NPY_INT64);
-        PyObject *a_s1 = PyArray_SimpleNew(1, &d, NPY_INT64);
-        if (!a_id || !a_s0 || !a_s1) {
-            Py_XDECREF(a_id); Py_XDECREF(a_s0); Py_XDECREF(a_s1);
-            Py_DECREF(text);
-            goto fail;
-        }
-        memcpy(PyArray_DATA((PyArrayObject *)a_id), sp_id, (size_t)n_spans * sizeof(int32_t));
-        memcpy(PyArray_DATA((PyArrayObject *)a_s0), sp_s0, (size_t)n_spans * sizeof(int64_t));
-        memcpy(PyArray_DATA((PyArrayObject *)a_s1), sp_s1, (size_t)n_spans * sizeof(int64_t));
-        PyObject *res = Py_BuildValue("(NnnNNNN)", text, cnt, p->err_n,
-                                      a_id, a_s0, a_s1, ptags);
-        if (!res) {
-            /* unconsumed "N" args leak on this OOM-only path (see
-             * build_result) */
-            free(order); free(parent_new); free(iwp); free(subend);
-            free(sp_id); free(sp_s0); free(sp_s1);
-            return NULL;
-        }
-        free(order); free(parent_new); free(iwp); free(subend);
-        free(sp_id); free(sp_s0); free(sp_s1);
-        return res;
-    }
-fail:
-    Py_XDECREF(texts);
-    Py_XDECREF(ptags);
-    free(order); free(parent_new); free(iwp); free(subend);
-    free(sp_id); free(sp_s0); free(sp_s1);
-    return NULL;
-}
-
-static PyObject *cextract(PyObject *self, PyObject *args) {
-    PyObject *src;
-    Py_buffer bview = {0};
-    if (!PyArg_ParseTuple(args, "Oy*", &src, &bview))
-        return NULL;
-    const int16_t *boiler_ids = (const int16_t *)bview.buf;
-    Py_ssize_t n_boiler = bview.len / (Py_ssize_t)sizeof(int16_t);
-    if (!PyObject_CheckBuffer(src) || PyUnicode_Check(src)) {
-        /* bytes-like only: raw-byte input is what guarantees the
-         * identity byte map the span byte columns rely on */
-        PyBuffer_Release(&bview);
-        Py_RETURN_NONE;
-    }
-    Py_buffer view = {0};
-    if (PyObject_GetBuffer(src, &view, PyBUF_SIMPLE) < 0) {
-        PyErr_Clear();
-        PyBuffer_Release(&bview);
-        Py_RETURN_NONE;
-    }
-    const unsigned char *data = view.buf;
-    Py_ssize_t n = view.len;
-    int doc_has_nul = 0;
-    for (Py_ssize_t i = 0; i < n; i++) {
-        unsigned char ch = data[i];
-        if (ch >= 0x80 || ch == '\r') {
-            PyBuffer_Release(&view);
-            PyBuffer_Release(&bview);
-            Py_RETURN_NONE;
-        }
-        if (ch == 0) doc_has_nul = 1;
-    }
-    P p;
-    memset(&p, 0, sizeof(P));
-    p.s = data;
-    p.n = n;
-    p.doc_has_nul = doc_has_nul;
-    p.quirks = 1;
-    p.preorder_ok = 1;
-    p.frameset_ok = 1;
-    p.html_id = p.head_id = p.body_id = -1;
-    p.form_ptr = -1;
-    if (new_node(&p, T_DOCUMENT, -1, NULL, NULL, NULL, 0, n, 0, 0, 0, 0) < 0) {
-        p_free(&p);
-        PyBuffer_Release(&view);
-        PyBuffer_Release(&bview);
-        if (PyErr_Occurred()) return NULL;
-        Py_RETURN_NONE;
-    }
-    run_parse(&p);
-    if (p.bail || PyErr_Occurred()) {
-        PyErr_Clear();
-        p_free(&p);
-        PyBuffer_Release(&view);
-        PyBuffer_Release(&bview);
-        Py_RETURN_NONE;
-    }
-    PyObject *res = build_extract(&p, boiler_ids, n_boiler);
-    p_free(&p);
-    PyBuffer_Release(&view);
-    PyBuffer_Release(&bview);
-    return res;
-}
-
 /* ------------------------------------------------------------------ *
- * cextract_batch — the whole Arrow binary column in ONE call.
+ * cextract_batch — parse + main-text kernel for a whole Arrow binary
+ * column in ONE call (operators/extract.py main_text_batch).
  *
- * cextract(one doc) still leaves a per-document Python loop in the
- * mapInArrow worker (iterate slices, call, unpack the 7-tuple, append
- * into per-batch lists) plus a per-batch pa.array() conversion of two
- * LIST-OF-PYTHON-STRING columns.  This entry removes both: it takes
- * the Arrow values buffer + offsets buffer directly, loops documents
- * in C, and accumulates BATCH-level output buffers — text and
- * parent-tag columns as single UTF-8 data blobs with int32 offset
+ * It takes the Arrow values buffer + offsets buffer directly, loops
+ * documents in C, and accumulates BATCH-level output buffers — text
+ * and parent-tag columns as single UTF-8 data blobs with int32 offset
  * vectors (exactly Arrow's string layout, so the caller wraps them
  * zero-copy via StringArray.from_buffers), span columns as contiguous
  * arrays with a per-document count vector.  The engaged path builds
  * ZERO per-document Python objects.
  *
- * Unlike the per-doc cextract entry (pure-ASCII/CR-free only), the
- * batch path also takes CRLF pages and valid multibyte UTF-8 — the
- * DOMINANT shapes on real web corpora — via an in-C strict decode +
- * newline normalization (prep_decode): placeholder parse buffer, str
- * readback, and an exact char→byte offset map feeding the span byte
- * columns.  Documents the engine cannot take (its designed bail
- * classes only, round-7 — colgroup/frameset-content NUL and the
- * NUL-stripped ws-charref intersection) get zero-length
- * slots in every per-doc output and their indices are returned; the
- * caller computes exactly those documents on the reference Python
- * path and splices.
+ * Pure-ASCII CR-free documents are parsed in place; CRLF pages and
+ * any other byte sequence (multibyte UTF-8, invalid UTF-8) go through
+ * an in-C decode + newline normalization (prep_decode): placeholder
+ * parse buffer, str readback, and an exact char→byte offset map
+ * feeding the span byte columns.  Documents the engine cannot take
+ * (its designed bail classes only — colgroup/frameset-content NUL and
+ * the NUL-stripped ws-charref intersection) get zero-length slots in
+ * every per-doc output and their indices are returned; the caller
+ * computes exactly those documents on the reference Python path and
+ * splices.
  *
  * Arguments: (values_buf, offsets_buf, offsets_are_64: int,
  *             boiler_ids_i16_bytes)
@@ -4578,8 +4383,8 @@ static PyObject *cextract(PyObject *self, PyObject *args) {
  *    n_nodes: int32[n], n_errors: int32[n],
  *    tot_us: int64[n], bail_idx: int32[B])
  * or None when the batch output would overflow int32 string offsets
- * (> 1 GiB of text in one Arrow batch) — caller falls back to the
- * per-document path for the whole batch.                             */
+ * (> 1 GiB of text in one Arrow batch) — the caller then runs the
+ * whole batch on the Python reference.                               */
 
 typedef struct { char *buf; Py_ssize_t n, cap; } GrowBuf;
 
@@ -4753,13 +4558,13 @@ static Py_ssize_t prep_decode(const unsigned char *raw, Py_ssize_t nb,
     return o;
 }
 
-/* the build_extract walk (body window → boilerplate-subtree exclusion
- * → textual-node collection), writing into the batch accumulators
- * instead of per-document Python objects.  ``c2b`` maps char offsets
- * to raw-byte offsets (NULL = identity).  Kept in lockstep with
- * build_extract — both are pinned column-identical to the Python
- * kernel by the corpus A/B (tests/test_cengine.py).  Returns 0 ok,
- * -1 fatal OOM. */
+/* the main-text kernel (operators/extract.py _main_text_columns):
+ * body-subtree window — the first preorder node whose tag id is body,
+ * else the whole document — then boilerplate-subtree exclusion and
+ * textual-node collection, written into the batch accumulators.
+ * ``c2b`` maps char offsets to raw-byte offsets (NULL = identity).
+ * Pinned column-identical to the Python kernel by the corpus A/B
+ * (tests/test_cengine.py).  Returns 0 ok, -1 fatal OOM. */
 static int extract_doc_into(P *p, const uint8_t *boiler, int16_t body_tid,
                             const int64_t *c2b,
                             GrowBuf *txt, GrowBuf *ptg,
@@ -5163,15 +4968,11 @@ static PyObject *cparse(PyObject *self, PyObject *arg) {
 }
 
 static PyMethodDef methods[] = {
-    {"cextract", cextract, METH_VARARGS,
-     "Parse ASCII HTML bytes and run the main-text kernel in C; "
-     "returns (text, n_nodes, n_errors, node_ids, starts, ends, "
-     "parent_tags) or None when the Python path must run."},
     {"cextract_batch", cextract_batch, METH_VARARGS,
      "Parse + main-text kernel for a whole Arrow binary column "
      "(values buffer, offsets buffer, offsets_are_64, boiler ids); "
      "returns batch-level Arrow-layout buffers + bail indices, or "
-     "None when the batch must use the per-document path."},
+     "None on int32 text-offset overflow."},
     {"cparse", cparse, METH_O,
      "Parse ASCII HTML bytes/str; returns the node-table columns or "
      "None when the document needs the pure-Python engine."},

@@ -1,17 +1,25 @@
 """C fast-path engine loader + NodeTable assembly.
 
-``cparse(source)`` returns a :class:`NodeTable` for documents inside
-the C engine's subset — effectively the whole document-mode surface:
-error recording, adoption agency, foster parenting, foreign content,
-templates, framesets, NUL input (text AND tag machinery, every string
-kind), non-ASCII tag/attr names, ws-decoding charref classification,
-unbounded depth and name lengths; remaining bails are fragments and
-colgroup/frameset-content NUL (see _cext/chtml.c) — or
-``None`` when the pure-Python engine must run.  The Python engine in
-``html5.py`` remains the reference implementation; the C engine is
-required to be column-for-column identical whenever it engages
-(tests/test_cengine.py runs that A/B over the conformance corpus,
-which engages completely through parse_html's two dispatches).
+The extension exports two entries:
+
+* ``cextract_batch`` (``_cextract_batch`` here) parses a whole Arrow
+  binary column and runs the main-text kernel on it in one call — the
+  flagship stage's engine (``operators/extract.py`` ``main_text_batch``);
+* ``cparse(source)`` (wrapped by :func:`cparse` below) returns a
+  :class:`NodeTable` for documents inside the C engine's subset —
+  effectively the whole document-mode surface: error recording,
+  adoption agency, foster parenting, foreign content, templates,
+  framesets, NUL input (text AND tag machinery, every string kind),
+  non-ASCII tag/attr names, ws-decoding charref classification,
+  unbounded depth and name lengths; remaining bails are fragments and
+  colgroup/frameset-content NUL (see _cext/chtml.c) — or ``None`` when
+  the pure-Python engine must run.
+
+The Python engine in ``html5.py`` and the Python main-text kernel
+remain the reference implementation; the C engine is required to be
+column-for-column identical whenever it engages (tests/test_cengine.py
+runs that A/B over the conformance corpus, which engages completely
+through parse_html's two dispatches and through the batch entry).
 
 Build: the extension is compiled on demand with the in-sandbox gcc
 (`python -m gumbo_pp_spark.parser.cengine` or first import).  For a
@@ -40,7 +48,6 @@ _SRCHASH = _SO + ".srchash"
 stats = {"c": 0, "py": 0}
 
 _cparse = None
-_cextract = None
 _cextract_batch = None
 _NodeTable = None
 
@@ -110,7 +117,7 @@ def _build() -> bool:
 
 
 def _load() -> None:
-    global _cparse, _cextract, _cextract_batch
+    global _cparse, _cextract_batch
     if os.environ.get("GUMBO_PP_CENGINE", "1") == "0":
         return
     if not _so_fresh() and not _build():
@@ -121,11 +128,9 @@ def _load() -> None:
         import _chtml  # type: ignore
 
         _cparse = _chtml.cparse
-        _cextract = getattr(_chtml, "cextract", None)
         _cextract_batch = getattr(_chtml, "cextract_batch", None)
     except Exception:
         _cparse = None
-        _cextract = None
         _cextract_batch = None
 
 
@@ -139,7 +144,7 @@ def cparse(source):
     Accepts str / bytes / bytearray / memoryview like
     :func:`parser.html5.parse_html`.
     """
-    global _cparse, _cextract, _cextract_batch
+    global _cparse, _cextract_batch
     if _cparse is None:
         return None
     res = _cparse(source)
@@ -150,7 +155,7 @@ def cparse(source):
         # .so without its source-hash sidecar): disable the engine and
         # fall back to the Python reference instead of raising on
         # every document it accepts.
-        _cparse = _cextract = _cextract_batch = None
+        _cparse = _cextract_batch = None
         return None
     # the extension materializes the final numpy columns itself
     # (round-6: the former bytearray/frombuffer + object-list copies

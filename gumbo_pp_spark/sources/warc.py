@@ -226,26 +226,30 @@ def write_warc_corpus(pages: DataFrame, out_dir: str, n_files: int = 8) -> None:
 # ----------------------------------------------------------------------
 # distributed sources
 # ----------------------------------------------------------------------
+def _records_batch(rows):
+    """WARC_FIELDS Arrow batch from ``_iter_file_records`` rows."""
+    import pyarrow as pa
+
+    urls, tss, htmls, oks = zip(*rows)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(urls, pa.string()),
+            pa.array(tss, pa.timestamp("us")),
+            pa.array(htmls, pa.binary()),
+            pa.array(oks, pa.bool_()),
+        ],
+        ["url", "warc_ts", "html", "warc_ok"],
+    )
+
+
 def parse_content_batches(batches):
     """Arrow kernel shared by the batch and streaming readers: a
     ``binaryFile`` ``content`` column in, WARC_FIELDS batches out."""
-    import pyarrow as pa
-
     for batch in batches:
         for blob in batch.column("content"):
             rows = list(_iter_file_records(blob.as_py()))
-            if not rows:
-                continue
-            urls, tss, htmls, oks = zip(*rows)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, pa.string()),
-                    pa.array(tss, pa.timestamp("us")),
-                    pa.array(htmls, pa.binary()),
-                    pa.array(oks, pa.bool_()),
-                ],
-                ["url", "warc_ts", "html", "warc_ok"],
-            )
+            if rows:
+                yield _records_batch(rows)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -287,27 +291,26 @@ def read_warc_cdx(
         )
     )
 
-    def fetch(pdfs) -> Iterator:
-        import pandas as pd
+    def fetch(batches) -> Iterator:
         from urllib.parse import urlparse
 
-        for pdf in pdfs:
-            out: dict[str, list] = {"url": [], "warc_ts": [], "html": [], "warc_ok": []}
-            for file in pdf["file"].unique():
+        for rb in batches:
+            # each file's members in offset order, files in first-seen order
+            members: dict[str, list[tuple[int, int]]] = {}
+            for file, off, length in zip(*(rb.column(c).to_pylist()
+                                           for c in ("file", "offset", "length"))):
+                members.setdefault(file, []).append((off, length))
+            rows = []
+            for file, spans in members.items():
                 local = urlparse(file).path  # binary local path; ranged GET off-sandbox
-                sub = pdf[pdf["file"] == file].sort_values("offset")
                 with open(local, "rb") as f:
-                    for off, length in zip(sub["offset"], sub["length"]):
-                        f.seek(int(off))
-                        member = f.read(int(length))
-                        for url, ts, html, ok in _iter_file_records(member):
-                            out["url"].append(url)
-                            out["warc_ts"].append(ts)
-                            out["html"].append(html)
-                            out["warc_ok"].append(ok)
-            yield pd.DataFrame(out)
+                    for off, length in sorted(spans):
+                        f.seek(off)
+                        rows += _iter_file_records(f.read(length))
+            if rows:
+                yield _records_batch(rows)
 
     # one shuffle on (file, grp) — each task fetches ~records_per_task
     # members; no full-file reads anywhere on this path
     n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-    return idx.repartition(n, "file", "grp").mapInPandas(fetch, WARC_FIELDS)
+    return idx.repartition(n, "file", "grp").mapInArrow(fetch, WARC_FIELDS)

@@ -3,7 +3,7 @@
 The reference is batch-only (SURVEY.md §2.5: no streams); this module
 is the engine's forward-looking ingest path for a continuously-crawled
 corpus: a file-source stream of page parquet drops runs the SAME
-``extract_main_text`` map stage per micro-batch (mapInPandas works
+``extract_main_text`` map stage per micro-batch (mapInArrow works
 unchanged on streaming DataFrames), plus a watermarked windowed
 aggregation for late-arriving events.
 """

@@ -619,20 +619,19 @@ def test_cparse_arity_mismatch_disables_engine(monkeypatch):
         import pytest
 
         pytest.skip("C engine unavailable")
-    saved = (cengine._cparse, cengine._cextract, cengine._cextract_batch)
+    saved = (cengine._cparse, cengine._cextract_batch)
     try:
         monkeypatch.setattr(cengine, "_cparse", lambda s: tuple(range(14)))
         assert cengine.cparse("<p>x</p>") is None
         assert cengine._cparse is None  # engine disabled, not retried
     finally:
-        (cengine.__dict__["_cparse"], cengine.__dict__["_cextract"],
-         cengine.__dict__["_cextract_batch"]) = saved
+        cengine.__dict__["_cparse"], cengine.__dict__["_cextract_batch"] = saved
 
 
 # ----------------------------------------------------------------------
-# Round-6: C main-text kernel (cextract) A/B gate
+# C main-text kernel A/B gate (through the batch entry)
 # ----------------------------------------------------------------------
-def _py_main_text(data: bytes) -> dict:
+def _py_main_text(data) -> dict:
     """Reference result: Python kernel over a pure-Python parse."""
     import gumbo_pp_spark.parser.html5 as H
     from gumbo_pp_spark.operators.extract import main_text_program
@@ -645,44 +644,40 @@ def _py_main_text(data: bytes) -> dict:
         H._cparse_fast = saved
 
 
-def _assert_extract_identical(res, data):
-    from gumbo_pp_spark.operators.extract import main_text_program
-
-    ref = _py_main_text(data)
-    text, n_nodes, n_errs, ids, s0, s1, ptags = res
-    assert text == ref["text"], data[:120]
-    assert n_nodes == ref["n_nodes"], data[:120]
-    assert n_errs == ref["parse_errors"], data[:120]
-    rs = ref["spans"]
-    assert len(ids) == len(rs), data[:120]
-    for k, span in enumerate(rs):
-        assert int(ids[k]) == span["node_id"], data[:120]
-        assert ptags[k] == span["tag"], data[:120]
-        assert int(s0[k]) == span["start"] == span["start_byte"], data[:120]
-        assert int(s1[k]) == span["end"] == span["end_byte"], data[:120]
+def _assert_batch_identical(docs, html_type=None) -> int:
+    """Run ``docs`` through the batch path and pin every row to the
+    pure-Python kernel; returns how many rows the C engine took."""
+    out = _batch_extract(docs, stage_metrics=True, html_type=html_type).to_pydict()
+    for k, data in enumerate(docs):
+        ref = _py_main_text(data)
+        assert out["text"][k] == ref["text"], data[:120]
+        assert out["n_nodes"][k] == ref["n_nodes"], data[:120]
+        assert out["parse_errors"][k] == ref["parse_errors"], data[:120]
+        assert out["spans"][k] == ref["spans"], data[:120]
+        if isinstance(data, bytes) and data.isascii() and b"\r" not in data:
+            # identity byte map on pure-ASCII CR-free raw bytes
+            for span in out["spans"][k]:
+                assert span["start"] == span["start_byte"], data[:120]
+                assert span["end"] == span["end_byte"], data[:120]
+    return sum(out["c_engine"])
 
 
 def test_cextract_conformance_corpus_ab():
     """Wherever the C main-text kernel engages, its (text, counts,
     spans, parent tags) must equal the Python kernel over the Python
     parse — the same artifact-family discipline as the parse A/B."""
-    from gumbo_pp_spark.operators.extract import _BOILER_ID_BYTES
-
     os.environ.pop("GUMBO_PP_CENGINE", None)
-    engaged = 0
+    docs = []
     for ctx, data, _ in CASES:
         if ctx is not None:
             continue
         try:
-            raw = data.encode("ascii") if isinstance(data, str) else data
+            docs.append(data.encode("ascii") if isinstance(data, str) else data)
         except UnicodeEncodeError:
             continue
-        res = cengine._cextract(raw, _BOILER_ID_BYTES)
-        if res is None:
-            continue
-        engaged += 1
-        _assert_extract_identical(res, raw)
-    # ASCII CR-free subset of the C-parseable corpus
+    engaged = sum(_assert_batch_identical(docs[i: i + 4096])
+                  for i in range(0, len(docs), 4096))
+    # ASCII subset of the C-parseable corpus
     assert engaged >= 20000, engaged
 
 
@@ -690,7 +685,6 @@ def test_cextract_bench_corpus_fully_engaged():
     """The flagship bench corpora must run 100% on the C kernel."""
     import duckdb
 
-    from gumbo_pp_spark.operators.extract import _BOILER_ID_BYTES
     from gumbo_pp_spark.sources.pages import PAGES_SQL, TABLE_PAGES_SQL
 
     con = duckdb.connect()
@@ -701,29 +695,24 @@ def test_cextract_bench_corpus_fully_engaged():
     pages = [r[2] for r in con.execute(PAGES_SQL).fetchall()]
     tpages = [r[1] for r in con.execute(TABLE_PAGES_SQL).fetchall()]
     for corpus in (pages, tpages):
-        for d in corpus:
-            raw = d.encode()
-            res = cengine._cextract(raw, _BOILER_ID_BYTES)
-            assert res is not None, d[:100]
-            _assert_extract_identical(res, raw)
+        raws = [d.encode() for d in corpus]
+        assert _assert_batch_identical(raws) == len(raws)
 
 
 def test_cextract_boiler_exclusion_and_bails():
-    from gumbo_pp_spark.operators.extract import _BOILER_ID_BYTES
+    import pyarrow as pa
 
     # nested boilerplate subtrees + text before/inside/after
     doc = (b"<body>pre<nav>n1<form>f<select><option>o</option></select>"
            b"</form>n2</nav>mid<svg><circle>c</circle></svg>post")
-    res = cengine._cextract(doc, _BOILER_ID_BYTES)
-    assert res is not None
-    _assert_extract_identical(res, doc)
-    assert res[0] == "premidpost"
+    assert _assert_batch_identical([doc]) == 1
+    assert _batch_extract([doc]).column("text").to_pylist() == ["premidpost"]
 
-    # bails mirror cparse: non-ASCII, CR, str input; NUL in text is
-    # supported (round-6) and must stay kernel-identical
-    assert cengine._cextract("caf\xe9".encode("latin-1"), _BOILER_ID_BYTES) is None
-    assert cengine._cextract(b"a\rb", _BOILER_ID_BYTES) is None
-    assert cengine._cextract("plain str", _BOILER_ID_BYTES) is None
+    # non-ASCII bytes, CR and str input engage on the batch path and
+    # stay kernel-identical
+    assert _assert_batch_identical(["caf\xe9".encode("latin-1"), b"a\rb"]) == 2
+    assert _assert_batch_identical(["plain str"], html_type=pa.string()) == 1
+    # NUL in text is supported (round-6) and must stay kernel-identical
     nul_docs = [
         b"<body>a\x00b<script>s\x00s</script><p>x\x00",
         # round-6 (late): tag-machinery NUL engages too
@@ -731,20 +720,12 @@ def test_cextract_boiler_exclusion_and_bails():
         b"<table>\x00x<td>y</td></table>",
         b"<div a='x\x00y'>t</div>",
     ]
-    for nul_doc in nul_docs:
-        res_nul = cengine._cextract(nul_doc, _BOILER_ID_BYTES)
-        assert res_nul is not None, nul_doc
-        _assert_extract_identical(res_nul, nul_doc)
+    assert _assert_batch_identical(nul_docs) == len(nul_docs)
 
 
 def test_cextract_no_body_window():
-    from gumbo_pp_spark.operators.extract import _BOILER_ID_BYTES
-
     # frameset documents have no body element -> whole-document window
-    doc = b"<html><frameset><frame></frameset></html>"
-    res = cengine._cextract(doc, _BOILER_ID_BYTES)
-    if res is not None:
-        _assert_extract_identical(res, doc)
+    _assert_batch_identical([b"<html><frameset><frame></frameset></html>"])
 
 
 def test_nul_input_corpus_ab():
@@ -814,23 +795,19 @@ def test_nul_input_corpus_ab():
 # ----------------------------------------------------------------------
 # Round-6 (late): whole-column batch entry (cextract_batch) A/B gate
 # ----------------------------------------------------------------------
-def _batch_extract(docs, stage_metrics=False):
-    """Drive the real batch assembler over an Arrow binary column the
-    way extract_main_text's worker fn does."""
-    import time
-
+def _batch_extract(docs, stage_metrics=False, html_type=None):
+    """Drive the batch engine over an Arrow html column exactly the
+    way extract_main_text's worker does (``main_text_batch``)."""
     import pyarrow as pa
 
-    from gumbo_pp_spark.operators import extract as X
+    from gumbo_pp_spark.operators.extract import main_text_batch
 
     rb = pa.RecordBatch.from_arrays(
         [pa.array(list(range(len(docs))), pa.int64()),
-         pa.array(docs, pa.binary())],
+         pa.array(docs, html_type or pa.binary())],
         ["doc_id", "html"],
     )
-    return X._assemble_from_batch(rb, rb.column(1), cengine._cextract_batch,
-                                  1, ["doc_id"], stage_metrics,
-                                  time.perf_counter)
+    return main_text_batch(rb, stage_metrics)
 
 
 _BAIL_MIX = [
@@ -910,6 +887,69 @@ def test_cextract_batch_bail_splice_and_metrics():
     #                       ws-charref classification all engage)
     for k in range(len(docs)):
         assert c_flags[k] == (0 if k in bail_docs else 1), (k, c_flags)
+
+
+def test_python_reference_routes_equal_engaged_rows(monkeypatch):
+    """Every route onto the Python reference — C engine off, the batch
+    call declining (its int32-overflow return), a ``string`` html
+    column — gives the engaged rows, row for row."""
+    import pyarrow as pa
+
+    import gumbo_pp_spark.parser.html5 as H
+
+    cols = ("text", "spans", "n_nodes", "parse_errors")
+    engaged = _batch_extract(_BAIL_MIX, stage_metrics=True).to_pydict()
+    assert engaged["c_engine"].count(0) == 1  # the colgroup-NUL bail
+
+    with monkeypatch.context() as mp:
+        mp.setattr(H, "_cparse_fast", None)
+        off = _batch_extract(_BAIL_MIX, stage_metrics=True).to_pydict()
+    assert off["c_engine"] == [0] * len(_BAIL_MIX)
+    with monkeypatch.context() as mp:
+        mp.setattr(cengine, "_cextract_batch", lambda *args: None)
+        declined = _batch_extract(_BAIL_MIX, stage_metrics=True).to_pydict()
+    for c in cols:
+        assert off[c] == engaged[c], c
+        assert declined[c] == engaged[c], c
+
+    valid = []
+    for d in _BAIL_MIX:
+        try:
+            valid.append(d.decode("utf-8"))
+        except UnicodeDecodeError:
+            continue
+    assert len(valid) == len(_BAIL_MIX) - 1
+    as_str = _batch_extract(valid, html_type=pa.string()).to_pydict()
+    as_bin = _batch_extract([v.encode() for v in valid]).to_pydict()
+    for c in cols:
+        assert as_str[c] == as_bin[c], c
+
+
+def test_null_html_row_is_the_empty_document(monkeypatch):
+    """NULL contract: a NULL html row is the row of ``b""``, whatever
+    its slot holds, on the C and the Python-only routes; the other
+    rows are untouched."""
+    import pyarrow as pa
+
+    import gumbo_pp_spark.parser.html5 as H
+    from gumbo_pp_spark.operators.extract import main_text_batch
+
+    docs = [_BAIL_MIX[0], None, _BAIL_MIX[10], None, _BAIL_MIX[1]]
+    want = _batch_extract([d if d is not None else b"" for d in docs]).to_pydict()
+    # a null slot whose bytes are not empty
+    full = pa.array([b"<p>x</p>", _BAIL_MIX[1]], pa.binary())
+    validity = pa.py_buffer(np.packbits([0, 1], bitorder="little").tobytes())
+    junk = pa.Array.from_buffers(pa.binary(), 2, [validity, *full.buffers()[1:]])
+    assert junk.to_pylist() == [None, _BAIL_MIX[1]]
+    for c_off in (False, True):
+        with monkeypatch.context() as mp:
+            if c_off:
+                mp.setattr(H, "_cparse_fast", None)
+            got = _batch_extract(docs).to_pydict()
+            got_junk = main_text_batch(pa.RecordBatch.from_arrays([junk], ["html"]))
+        assert got == want, c_off
+        for c in ("text", "spans", "n_nodes", "parse_errors"):
+            assert got_junk.column(c).to_pylist() == [want[c][1], want[c][4]], c_off
 
 
 def test_cextract_batch_corpus_ab():

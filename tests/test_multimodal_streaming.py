@@ -65,6 +65,11 @@ class TestMultimodal:
             assert 0.0 < r.rms < 1.0
             assert 0.0 <= r.zcr <= 1.0
 
+    def test_kernels_run_in_map_in_arrow(self, spark, media):
+        for stage in (image_features, resize_images, sample_frames, audio_features):
+            plan = stage(media)._jdf.queryExecution().executedPlan().toString()
+            assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+
 
 class TestStreaming:
     def test_stream_extract_matches_batch(self, spark, tmp_path):

@@ -360,6 +360,24 @@ class TestLedgerTalliesFromWritePass:
         assert _exchanges_above(write) == [], write[:3000]
 
 
+class TestNullHtmlResume:
+    def test_null_html_row_counted_in_ledger(self, spark, tmp_path):
+        # a NULL html row is extracted as the empty document: it lands
+        # in the output and in its split's ledger record, and the job
+        # does not fail
+        rows = [(i, f"https://n.example/{i}",
+                 None if i == 3 else bytearray(f"<p>doc {i}</p>".encode()))
+                for i in range(12)]
+        pages = spark.createDataFrame(rows, "doc_id long, url string, html binary")
+        out_dir = str(tmp_path / "nul")
+        res = extract_with_resume(spark, pages, out_dir, n_splits=4)
+        recs = PartitionLedger(f"{out_dir}/_ledger").committed()
+        assert res["rows"] == sum(r["rows"] for r in recs.values()) == 12
+        out = {r.doc_id: r for r in read_extracted(spark, out_dir).collect()}
+        assert sorted(out) == list(range(12))
+        assert out[3].text == "" and out[5].text == "doc 5"
+
+
 class TestPerSplitWall:
     def test_distinct_per_split_wall(self, spark, tmp_path):
         # round-3: per-split wall_ms is the run wall apportioned by the

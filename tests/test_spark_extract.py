@@ -75,6 +75,33 @@ class TestMainText:
             assert col not in line, line
 
 
+class TestNullHtml:
+    """NULL contract of extract_main_text: a NULL html row is the row
+    of the empty document, and never fails the job."""
+
+    def test_null_row_among_valid_rows(self, spark):
+        docs = [
+            b"<html><body><p>first</p><nav>x</nav></body></html>",
+            None,
+            "<p>Béta\r\n</p>".encode(),
+            b"<table><colgroup>\x00<col></colgroup></table>",
+            b"",
+        ]
+        rows = [(i, f"https://h.example/{i}", d) for i, d in enumerate(docs)]
+        df = spark.createDataFrame(rows, "doc_id long, url string, html binary")
+        got = {r.doc_id: r for r in extract_main_text(df, stage_metrics=True).collect()}
+        assert sorted(got) == [0, 1, 2, 3, 4]
+        fields = ("text", "spans", "n_nodes", "parse_errors")
+        # the NULL row is exactly the empty document's row
+        assert [got[1][f] for f in fields] == [got[4][f] for f in fields]
+        # the other rows equal the same documents run without the NULL
+        alone = spark.createDataFrame([r for r in rows if r[2] is not None], df.schema)
+        ref = {r.doc_id: r for r in extract_main_text(alone).collect()}
+        for i in (0, 2, 3, 4):
+            assert [got[i][f] for f in fields] == [ref[i][f] for f in fields], i
+        assert got[0].text == "first" and got[2].text == "Béta\n"
+
+
 class TestStructuralScrape:
     def test_table_scrape_query(self, spark):
         html = (

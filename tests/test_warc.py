@@ -110,6 +110,8 @@ def test_read_warc_cdx_ranged(spark, warc_dir):
     assert j.count() == 500
     assert j.filter(F.md5(F.col("html").cast("string")) != F.col("h")).count() == 0
     assert j.filter("ts2 <> warc_ts").count() == 0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_read_warc_corrupt_file_yields_error_rows(spark, tmp_path):
