@@ -238,14 +238,6 @@ def _contains_any(v: str, subs: tuple[str, ...]) -> bool:
     return any(s in v for s in subs)
 
 
-def _starts_any(v: str, ps: tuple[str, ...]) -> bool:
-    return v.startswith(ps)
-
-
-def _ends_any(v: str, ss: tuple[str, ...]) -> bool:
-    return v.endswith(ss)
-
-
 # ----------------------------------------------------------------------
 # tag matchers (gumbo_matchers.h:904-1077)
 # ----------------------------------------------------------------------

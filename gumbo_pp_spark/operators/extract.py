@@ -404,14 +404,26 @@ MAIN_TEXT_FIELDS = (
 )
 
 
+def main_text_ddl(df: DataFrame, passthrough, stage_metrics: bool = False) -> str:
+    """DDL of :func:`extract_main_text`'s output over ``df``: the
+    ``passthrough`` columns with their ``df`` types, then
+    :data:`MAIN_TEXT_FIELDS`, then with ``stage_metrics`` the
+    ``parse_us``/``kernel_us``/``c_engine`` columns."""
+    schema = ", ".join([*(f"{c} {t}" for c, t in _passthrough_types(df, passthrough)),
+                        MAIN_TEXT_FIELDS])
+    if stage_metrics:
+        schema += ", parse_us bigint, kernel_us bigint, c_engine tinyint"
+    return schema
+
+
 def extract_main_text(
-    df: DataFrame, passthrough=("doc_id", "url"), stage_metrics: bool = False,
-    on_batch: Callable[[pa.RecordBatch], None] | None = None,
+    df: DataFrame, passthrough=("doc_id", "url"), stage_metrics: bool = False
 ) -> DataFrame:
     """Flagship stage: ``mapInArrow`` over the pruned ``passthrough +
     html`` projection, each Arrow batch run through
     :func:`main_text_batch` (one C call per batch, Python reference
-    rows spliced in).
+    rows spliced in).  ``plans/lineage.py`` runs the same per-batch
+    body inside its split writer.
 
     Output ``spans`` follow :func:`main_text_program`'s offset
     contract: ``start``/``end`` index the decoded, newline-normalized
@@ -419,17 +431,7 @@ def extract_main_text(
 
     NULL contract: a NULL ``html`` is parsed as the empty document —
     its row is exactly the row of ``b""`` (never an error, never
-    dropped).
-
-    ``on_batch``, when set, is called executor-side with every output
-    Arrow batch before it is handed back to the JVM — a hook for
-    statistics gathered in the extraction's own pass (e.g. into an
-    accumulator) instead of a second job over the output.  Unset, the
-    plain ``mapInArrow`` runs with no wrapper."""
-    pt_types = _passthrough_types(df, passthrough)
-    schema = ", ".join([*(f"{c} {t}" for c, t in pt_types), MAIN_TEXT_FIELDS])
-    if stage_metrics:
-        schema += ", parse_us bigint, kernel_us bigint, c_engine tinyint"
+    dropped)."""
 
     def fn(batches) -> "Iterator[pa.RecordBatch]":
         for rb in batches:
@@ -438,15 +440,7 @@ def extract_main_text(
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 
     pruned = ensure_min_parallelism(df.select(*passthrough, "html"))
-    if on_batch is None:
-        return pruned.mapInArrow(fn, schema)
-
-    def hooked(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in fn(batches):
-            on_batch(rb)
-            yield rb
-
-    return pruned.mapInArrow(hooked, schema)
+    return pruned.mapInArrow(fn, main_text_ddl(df, passthrough, stage_metrics))
 
 
 # ----------------------------------------------------------------------

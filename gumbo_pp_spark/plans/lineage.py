@@ -15,13 +15,14 @@ Design (SURVEY.md §4 c/d):
 * resume = recompute pending as ``all_splits − committed`` and process
   only those; readers union exactly the (split, run) pairs the ledger
   committed, so partially-written uncommitted runs are invisible;
+* the split files are written by the extraction task itself: one
+  ``mapInArrow`` pass parses, writes each split's rows as Parquet with
+  pyarrow and returns per-split tallies; the ledger commit is the only
+  commit (no JVM writer, no Hadoop commit protocol);
 * ledger records carry the per-partition metrics the bench reports
   (rows, bytes, parse/kernel time, parse errors, engine counts,
-  wall_ms, attempt).  They are tallied executor-side in the same
-  ``mapInArrow`` pass that extracts and writes the split (per-batch
-  ``split_id`` sums into an accumulator) — never by re-reading the
-  written output.  Exactly-once counts rely on that pass staying in
-  the write's result stage: no ``Exchange`` above ``MapInArrow``.
+  wall_ms, attempt), summed from those tallies — never by re-reading
+  the written output.
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ import os
 import time
 import uuid
 
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -166,46 +166,81 @@ class PartitionLedger:
         return len(tails)
 
 
-#: fields of one split's tally (see ``_tally_batch``)
+#: one row per (task, split) the writer wrote; the driver sums them per split
+_TALLY_DDL = ("split_id int, rows bigint, chars bigint, parse_us bigint, "
+              "kernel_us bigint, parse_errors bigint, c_docs bigint")
 _TALLY_FIELDS = ("rows", "chars", "parse_us", "kernel_us", "parse_errors", "c_docs")
 
 
-class _SplitTallies(AccumulatorParam):
-    """``{split_id: {"rows": n, "chars": n, ...}}``, summed per split
-    and field."""
+def _write_splits(data_dir: str, schema, batches, part: int | None = None):
+    """Executor side of :func:`extract_with_resume`: extract every
+    input Arrow batch (``passthrough..., split_id, html``), write its
+    rows to their split's leaf ``data_dir/split_id=<s>/`` and yield the
+    per-split tallies of what was written (``_TALLY_DDL``).
 
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, acc, upd):
-        for s, v in upd.items():
-            cur = acc.setdefault(s, dict.fromkeys(v, 0))
-            for k, n in v.items():
-                cur[k] += n
-        return acc
-
-
-def _tally_batch(acc, rb) -> None:
-    """Executor-side ``on_batch`` hook: group one extraction output
-    batch by ``split_id`` and add its sums to ``acc``.  numpy grouping
-    (no Arrow exec plan, so no compute thread pool in the Python
-    workers); float64 ``bincount`` sums are exact below 2**53."""
+    One ``pyarrow.parquet.ParquetWriter`` per split streams this
+    task's rows of that split, in input order, into a hidden temporary
+    file; once the input is drained each file is ``os.replace``d to
+    ``part-<part:05d>.parquet`` (``part`` defaults to the Spark
+    partition index), and only then are the tallies yielded.  The same
+    partition therefore always writes the same file names: a retried
+    attempt replaces files, never adds them.  numpy grouping keeps
+    Arrow's exec-plan thread pool out of the Python workers; float64
+    ``bincount`` sums are exact below 2**53."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    sids, inv = np.unique(rb.column("split_id").to_numpy(), return_inverse=True)
-    cols = {
-        # Spark's length(text): characters, not UTF-8 bytes
-        "chars": pc.utf8_length(rb.column("text")),
-        "parse_us": rb.column("parse_us"),
-        "kernel_us": rb.column("kernel_us"),
-        "parse_errors": rb.column("parse_errors"),
-        "c_docs": rb.column("c_engine"),
-    }
-    sums = {"rows": np.bincount(inv, minlength=len(sids))}
-    for k, v in cols.items():
-        sums[k] = np.bincount(inv, weights=v.to_numpy(), minlength=len(sids))
-    acc.add({int(s): {k: int(v[i]) for k, v in sums.items()} for i, s in enumerate(sids)})
+    from ..operators.extract import main_text_batch
+
+    if part is None:
+        from pyspark import TaskContext
+
+        part = TaskContext.get().partitionId()
+    name = f"part-{part:05d}"
+    tmp_tag = uuid.uuid4().hex[:8]
+    files: dict[int, tuple] = {}  # split -> (writer, tmp path, final path)
+    sums: dict[int, np.ndarray] = {}
+    try:
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            out = main_text_batch(rb, stage_metrics=True)
+            sids, inv = np.unique(out.column("split_id").to_numpy(), return_inverse=True)
+            counts = np.bincount(inv, minlength=len(sids))
+            weights = [pc.utf8_length(out.column("text")),  # Spark's length(): chars
+                       out.column("parse_us"), out.column("kernel_us"),
+                       out.column("parse_errors"), out.column("c_engine")]
+            batch_sums = np.stack(
+                [counts, *(np.bincount(inv, weights=w.to_numpy(), minlength=len(sids))
+                           for w in weights)], axis=1).astype(np.int64)
+            # stable: rows keep their input order within each split
+            grouped = pa.Table.from_batches([out.take(np.argsort(inv, kind="stable"))])
+            grouped = grouped.select(schema.names).cast(schema)
+            start = 0
+            for i, s in enumerate(sids.tolist()):
+                if s not in files:
+                    leaf = os.path.join(data_dir, f"split_id={s}")
+                    os.makedirs(leaf, exist_ok=True)
+                    tmp = os.path.join(leaf, f".{name}-{tmp_tag}.tmp")
+                    files[s] = (pq.ParquetWriter(tmp, schema), tmp,
+                                os.path.join(leaf, f"{name}.parquet"))
+                files[s][0].write_table(grouped.slice(start, counts[i]))
+                sums[s] = sums.get(s, 0) + batch_sums[i]
+                start += counts[i]
+        for writer, tmp, final in files.values():
+            writer.close()
+            os.replace(tmp, final)  # atomic on POSIX
+    except BaseException:
+        for writer, tmp, _ in files.values():
+            writer.close()
+            if os.path.exists(tmp):
+                os.remove(tmp)
+        raise
+    if sums:
+        cols = [pa.array(list(sums), pa.int32()), *map(pa.array, np.array(list(sums.values())).T)]
+        yield pa.RecordBatch.from_arrays(cols, names=["split_id", *_TALLY_FIELDS])
 
 
 def extract_with_resume(
@@ -218,18 +253,30 @@ def extract_with_resume(
 ) -> dict:
     """Run the flagship extraction over all not-yet-committed splits.
 
-    The ledger statistics come from the write pass itself: every
-    extraction output batch is grouped by ``split_id`` inside the
-    ``mapInArrow`` task that produced it and summed into an accumulator;
-    the driver commits the records from the accumulator's value once
-    the write returns.  No job reads the output back.
+    One Spark job: a ``mapInArrow`` task parses its input partition
+    (:func:`~gumbo_pp_spark.operators.extract.main_text_batch`, the
+    per-batch body of ``extract_main_text``), writes each split's rows
+    as Parquet with pyarrow (:func:`_write_splits`) and returns the
+    split's tallies; ``collect`` brings the tallies to the driver,
+    which sums them per split and commits the ledger.  No JVM write
+    job and no commit protocol run, and no job reads the output back:
+    readers see only ledger-committed leaves, so the ledger commit is
+    the only commit.  ``out_dir`` must be a filesystem path that the
+    executors share with the driver.
 
-    The counts are exact because Spark merges a result task's
-    accumulator updates once per partition and drops those of failed
-    attempts.  That holds only while the extraction runs in the write's
-    result stage — no ``Exchange`` above ``MapInArrow`` in the write
-    plan; an extraction in a shuffle-map stage could be re-run by a
-    retried stage and counted twice.
+    The files and the counts are exactly-once because:
+
+    * ``collect`` keeps the result of one successful attempt per
+      partition, so each task's tallies are summed once;
+    * a retried or speculative attempt reads the same (deterministic)
+      input partition and writes the same file names with the same
+      rows (only the measured ``parse_us``/``kernel_us`` timings
+      differ), so it replaces files and never adds them.  A failed
+      attempt leaves at most hidden ``.part-*.tmp`` files, which
+      readers skip and :func:`vacuum_uncommitted` sweeps.
+
+    Each file has the schema ``extract_main_text(..., stage_metrics=True)``
+    declares over ``passthrough`` (``split_id`` is the leaf directory).
 
     ``max_splits_this_run`` exists for fault-injection tests (process
     only K pending splits, as if the job were killed after K commits).
@@ -237,7 +284,11 @@ def extract_with_resume(
     ``py_docs`` and ``parse_errors`` totals (the sums of the records it
     committed).
     """
-    from ..operators.extract import extract_main_text
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from ..operators.extract import main_text_ddl
+    from .partitioning import ensure_min_parallelism
 
     ledger = PartitionLedger(os.path.join(out_dir, "_ledger"))
     done = set(ledger.committed())
@@ -253,16 +304,17 @@ def extract_with_resume(
     work = pages.withColumn(
         "split_id", F.pmod(F.xxhash64("url"), F.lit(n_splits)).cast("int")
     ).where(F.col("split_id").isin(pending))
-    tallies = spark.sparkContext.accumulator({}, _SplitTallies())
-    out = extract_main_text(
-        work, passthrough=(*passthrough, "split_id"), stage_metrics=True,
-        on_batch=functools.partial(_tally_batch, tallies),
-    )
-    data_dir = os.path.join(out_dir, "data", f"run={run_id}")
-    out.write.partitionBy("split_id").mode("error").parquet(data_dir)
+    schema = to_arrow_schema(
+        StructType.fromDDL(main_text_ddl(pages, passthrough, stage_metrics=True)))
+    writer = functools.partial(
+        _write_splits, os.path.join(out_dir, "data", f"run={run_id}"), schema)
+    tallies = ensure_min_parallelism(work.select(*passthrough, "split_id", "html")) \
+        .mapInArrow(writer, _TALLY_DDL).collect()
     wall_ms = int((time.time() - t0) * 1000)
-    zero = dict.fromkeys(_TALLY_FIELDS, 0)
-    stats = {s: tallies.value.get(s, zero) for s in pending}
+    stats = {s: dict.fromkeys(_TALLY_FIELDS, 0) for s in pending}
+    for r in tallies:
+        for k in _TALLY_FIELDS:
+            stats[r["split_id"]][k] += r[k]
     # Per-split wall attribution: all splits commit from ONE Spark job,
     # so the only measured per-split times are the executor-side
     # parse_us/kernel_us sums.  busy_ms is that measured work; wall_ms
@@ -317,8 +369,10 @@ def vacuum_uncommitted(out_dir: str, min_age_sec: float = 24 * 3600.0) -> dict:
     remove-orphan-files analogue; without it a table that survives
     many partial runs slowly accretes dead bytes no read will ever
     touch).  The ledger and every committed ``run=…/split_id=…`` leaf
-    are untouched; a run directory left with no leaves is removed
-    whole (including its ``_SUCCESS`` marker).
+    are kept; a run directory left with no leaves is removed whole.
+    In the leaves it keeps, hidden ``.part-*.tmp`` files (left by
+    failed or killed writer attempts) older than ``min_age_sec`` are
+    deleted.
 
     CONCURRENCY (ADVICE r7): ``extract_with_resume`` writes data
     files BEFORE committing their ledger records, so an uncommitted
@@ -330,7 +384,8 @@ def vacuum_uncommitted(out_dir: str, min_age_sec: float = 24 * 3600.0) -> dict:
     writer can be running.  ``read_extracted`` (incl.
     ``as_of``/``since``) only resolves paths through committed
     records, which vacuum keeps by construction.  Returns
-    ``{"removed": [...], "kept": n, "skipped_recent": m}``."""
+    ``{"removed": [...], "kept": n, "skipped_recent": m,
+    "removed_tmp": k}``."""
     import shutil
 
     ledger = PartitionLedger(os.path.join(out_dir, "_ledger"))
@@ -341,9 +396,17 @@ def vacuum_uncommitted(out_dir: str, min_age_sec: float = 24 * 3600.0) -> dict:
     removed: list[str] = []
     kept = 0
     skipped_recent = 0
+    removed_tmp = 0
     now = time.time()
+
+    def old_enough(path: str) -> bool:
+        try:
+            return now - os.path.getmtime(path) >= min_age_sec
+        except OSError:
+            return False  # freshly gone / racing writer: leave it
+
     if not os.path.isdir(data):
-        return {"removed": removed, "kept": kept, "skipped_recent": 0}
+        return {"removed": removed, "kept": kept, "skipped_recent": 0, "removed_tmp": 0}
     for run_dir in sorted(os.listdir(data)):
         if not run_dir.startswith("run="):
             continue
@@ -353,22 +416,27 @@ def vacuum_uncommitted(out_dir: str, min_age_sec: float = 24 * 3600.0) -> dict:
             if not leaf.startswith("split_id="):
                 continue
             sid = leaf.split("=", 1)[1]
+            lpath = os.path.join(rpath, leaf)
             if (run_id, sid) in keep:
                 kept += 1
+                for fn in os.listdir(lpath):
+                    tmp = os.path.join(lpath, fn)
+                    if fn.startswith(".part-") and fn.endswith(".tmp") and old_enough(tmp):
+                        try:
+                            os.remove(tmp)
+                            removed_tmp += 1
+                        except FileNotFoundError:
+                            pass
                 continue
-            lpath = os.path.join(rpath, leaf)
-            try:
-                age = now - os.path.getmtime(lpath)
-            except OSError:
-                age = 0.0  # freshly gone / racing writer: leave it
-            if age < min_age_sec:
+            if not old_enough(lpath):
                 skipped_recent += 1
                 continue
             shutil.rmtree(lpath)
             removed.append(f"{run_dir}/{leaf}")
         if not any(d.startswith("split_id=") for d in os.listdir(rpath)):
             shutil.rmtree(rpath)
-    return {"removed": removed, "kept": kept, "skipped_recent": skipped_recent}
+    return {"removed": removed, "kept": kept, "skipped_recent": skipped_recent,
+            "removed_tmp": removed_tmp}
 
 
 def read_extracted(

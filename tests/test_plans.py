@@ -308,8 +308,8 @@ def _exchanges_above(plan: str, node: str = "MapInArrow") -> list[str]:
 
 class TestLedgerTalliesFromWritePass:
     """The ledger statistics are summed inside the extraction pass
-    (accumulator) — they must equal a re-read of the written output,
-    and no job of the run may read that output back."""
+    (the split writer's tally rows) — they must equal a re-read of the
+    written output, and no job of the run may read that output back."""
 
     def test_ledger_sums_match_reread_of_output(self, spark, tallied_run):
         recs = tallied_run["recs"]
@@ -354,10 +354,103 @@ class TestLedgerTalliesFromWritePass:
         scans = [p for p in plans
                  if re.search(rf"Location: [^\n]*data/run={run_id}", p)]
         assert scans == [], scans[0][:2000]
-        # exactly-once accumulator counts need the extraction in the
-        # write's result stage: no shuffle boundary above MapInArrow
-        (write,) = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
-        assert _exchanges_above(write) == [], write[:3000]
+        # one job writes the splits: the collected MapInArrow, with no
+        # shuffle boundary above it and no JVM write command anywhere
+        (extract,) = [p for p in plans if "MapInArrow" in p]
+        assert _exchanges_above(extract) == [], extract[:3000]
+        assert not [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+
+
+def _split_batch(rows):
+    """Arrow input batch of the split writer: doc_id, url, split_id, html."""
+    import pyarrow as pa
+
+    doc_id, url, split_id, html = zip(*rows)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(doc_id, pa.int64()), pa.array(url), pa.array(split_id, pa.int32()),
+         pa.array(html, pa.binary())],
+        names=["doc_id", "url", "split_id", "html"],
+    )
+
+
+class TestSplitWriter:
+    """The executor-side writer of ``extract_with_resume``, driven
+    directly: a retried attempt of a partition must replace its files,
+    and hidden temporary files must stay invisible to readers."""
+
+    def test_retry_replaces_files_and_splits_land_in_their_leaves(self, spark, tmp_path):
+        import os
+
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        from gumbo_pp_spark.operators.extract import main_text_ddl
+        from gumbo_pp_spark.plans.lineage import _write_splits
+
+        pages = spark.createDataFrame([], "doc_id long, url string, html binary")
+        schema = to_arrow_schema(
+            StructType.fromDDL(main_text_ddl(pages, ("doc_id", "url"), stage_metrics=True)))
+        rows = [(i, f"https://w.example/{i}", (i * 7) % 3, f"<p>doc {i}</p>".encode())
+                for i in range(30)]
+        # every batch holds rows of all three splits, interleaved
+        batches = [_split_batch(rows[:20]), _split_batch(rows[20:])]
+        data_dir = str(tmp_path / "run=r")
+
+        def attempt():
+            # tallies without the measured timings, which differ per attempt
+            (tb,) = _write_splits(data_dir, schema, iter(batches), part=7)
+            return tb.drop_columns(["parse_us", "kernel_us"]).to_pylist()
+
+        tallies = attempt()
+        # a retried attempt of the same partition over the same input
+        assert attempt() == tallies
+        assert {t["split_id"]: t["rows"] for t in tallies} == {0: 10, 1: 10, 2: 10}
+        assert sorted(os.listdir(data_dir)) == ["split_id=0", "split_id=1", "split_id=2"]
+        for s in range(3):
+            leaf = os.path.join(data_dir, f"split_id={s}")
+            assert os.listdir(leaf) == ["part-00007.parquet"]
+            got = pq.read_table(os.path.join(leaf, "part-00007.parquet"))
+            want = [r for r in rows if r[2] == s]
+            # the original rows in input order, not doubled
+            assert got.column("doc_id").to_pylist() == [r[0] for r in want]
+            assert got.column("text").to_pylist() == [f"doc {r[0]}" for r in want]
+            assert got.schema.names == schema.names
+
+    def test_stray_temporary_file_is_ignored_by_readers(self, spark, tmp_path):
+        import os
+
+        out_dir = str(tmp_path / "stray")
+        pages = synth_pages(spark, SF_SMOKE).limit(40)
+        extract_with_resume(spark, pages, out_dir, n_splits=2)
+        assert read_extracted(spark, out_dir).count() == 40
+        (run,) = os.listdir(os.path.join(out_dir, "data"))
+        leaf = os.path.join(out_dir, "data", run, "split_id=0")
+        with open(os.path.join(leaf, ".part-00003-deadbeef.tmp"), "w") as f:
+            f.write("half-written by a killed attempt")
+        assert read_extracted(spark, out_dir).count() == 40
+
+
+class TestExtractedSchema:
+    def test_read_back_schema_pinned_with_timestamp_passthrough(self, spark, tmp_path):
+        import datetime
+
+        rows = [(i, f"https://t.example/{i}",
+                 datetime.datetime(2024, 5, 1 + i, 12, 30, 0, 250 * i),
+                 bytearray(f"<p>t {i}</p>".encode()))
+                for i in range(12)]
+        pages = spark.createDataFrame(rows, "doc_id long, url string, warc_ts timestamp, html binary")
+        out_dir = str(tmp_path / "schema")
+        extract_with_resume(spark, pages, out_dir, n_splits=4,
+                            passthrough=("doc_id", "url", "warc_ts"))
+        got = read_extracted(spark, out_dir)
+        assert got.schema.simpleString() == (
+            "struct<doc_id:bigint,url:string,warc_ts:timestamp,text:string,"
+            "spans:array<struct<node_id:int,tag:string,start:bigint,end:bigint,"
+            "start_byte:bigint,end_byte:bigint>>,n_nodes:int,parse_errors:int,"
+            "parse_us:bigint,kernel_us:bigint,c_engine:tinyint,run:string,split_id:int>"
+        )
+        assert {r.doc_id: r.warc_ts for r in got.collect()} == {r[0]: r[2] for r in rows}
 
 
 class TestNullHtmlResume:
@@ -551,6 +644,31 @@ class TestVacuum:
         ledger = PartitionLedger(out_dir + "/_ledger")
         assert set(ledger.committed()) == {0, 1, 2, 3}
 
+    def test_sweeps_old_temporary_files_in_kept_leaves(self, spark, tmp_path):
+        import os
+
+        from gumbo_pp_spark.plans.lineage import vacuum_uncommitted
+
+        out_dir = str(tmp_path / "vac_tmp")
+        pages = synth_pages(spark, SF_SMOKE).limit(40)
+        extract_with_resume(spark, pages, out_dir, n_splits=2)
+        before = read_extracted(spark, out_dir).count()
+        (run,) = os.listdir(os.path.join(out_dir, "data"))
+        leaf = os.path.join(out_dir, "data", run, "split_id=1")
+        data_files = sorted(os.listdir(leaf))
+        stray = os.path.join(leaf, ".part-00001-deadbeef.tmp")
+        with open(stray, "w") as f:
+            f.write("junk")
+
+        # a fresh temporary file may belong to a running attempt
+        res = vacuum_uncommitted(out_dir)
+        assert res["removed_tmp"] == 0 and os.path.exists(stray)
+
+        res = vacuum_uncommitted(out_dir, min_age_sec=0)
+        assert res["removed_tmp"] == 1 and res["removed"] == []
+        assert sorted(os.listdir(leaf)) == data_files
+        assert read_extracted(spark, out_dir).count() == before
+
     def test_vacuum_on_empty_table_is_noop(self, tmp_path):
         from gumbo_pp_spark.plans.lineage import vacuum_uncommitted
 
@@ -558,4 +676,5 @@ class TestVacuum:
             "removed": [],
             "kept": 0,
             "skipped_recent": 0,
+            "removed_tmp": 0,
         }
