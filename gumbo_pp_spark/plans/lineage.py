@@ -22,7 +22,11 @@ Design (SURVEY.md §4 c/d):
 * ledger records carry the per-partition metrics the bench reports
   (rows, bytes, parse/kernel time, parse errors, engine counts,
   wall_ms, attempt), summed from those tallies — never by re-reading
-  the written output.
+  the written output — and the DDL of the files they point at, so the
+  committed read declares its schema instead of inferring it;
+* input parallelism is the caller's decision, made once where the
+  pages are read (``jobs/extract_job.py``): the write stage runs one
+  task per input partition and adds no exchange.
 """
 
 from __future__ import annotations
@@ -276,19 +280,27 @@ def extract_with_resume(
       readers skip and :func:`vacuum_uncommitted` sweeps.
 
     Each file has the schema ``extract_main_text(..., stage_metrics=True)``
-    declares over ``passthrough`` (``split_id`` is the leaf directory).
+    declares over ``passthrough`` (``split_id`` is the leaf directory);
+    every ledger record stores that DDL as ``schema``, which
+    :func:`read_extracted` declares instead of inferring it.
+
+    Parallelism contract: the write stage runs one task per partition
+    of ``pages`` and adds no exchange.  A narrow input — one row group,
+    one small file — is spread by the caller where it reads the data,
+    as ``jobs/extract_job.py`` does with
+    :func:`~gumbo_pp_spark.plans.partitioning.ensure_min_parallelism`.
 
     ``max_splits_this_run`` exists for fault-injection tests (process
     only K pending splits, as if the job were killed after K commits).
     Returns run metrics, including the run's ``rows``, ``c_docs``,
     ``py_docs`` and ``parse_errors`` totals (the sums of the records it
-    committed).
+    committed); a run with no pending split returns the same keys, with
+    ``run_id`` ``None`` and zero counts.
     """
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     from ..operators.extract import main_text_ddl
-    from .partitioning import ensure_min_parallelism
 
     ledger = PartitionLedger(os.path.join(out_dir, "_ledger"))
     done = set(ledger.committed())
@@ -297,19 +309,20 @@ def extract_with_resume(
         pending = pending[:max_splits_this_run]
     if not pending:
         return {"run_id": None, "splits_processed": 0, "skipped": len(done),
-                "rows": 0, "c_docs": 0, "py_docs": 0, "parse_errors": 0}
+                "wall_ms": 0, "rows": 0, "c_docs": 0, "py_docs": 0, "parse_errors": 0}
 
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
-    work = pages.withColumn(
-        "split_id", F.pmod(F.xxhash64("url"), F.lit(n_splits)).cast("int")
+    work = pages.select(
+        *passthrough,
+        F.pmod(F.xxhash64("url"), F.lit(n_splits)).cast("int").alias("split_id"),
+        "html",
     ).where(F.col("split_id").isin(pending))
-    schema = to_arrow_schema(
-        StructType.fromDDL(main_text_ddl(pages, passthrough, stage_metrics=True)))
+    ddl = main_text_ddl(pages, passthrough, stage_metrics=True)
     writer = functools.partial(
-        _write_splits, os.path.join(out_dir, "data", f"run={run_id}"), schema)
-    tallies = ensure_min_parallelism(work.select(*passthrough, "split_id", "html")) \
-        .mapInArrow(writer, _TALLY_DDL).collect()
+        _write_splits, os.path.join(out_dir, "data", f"run={run_id}"),
+        to_arrow_schema(StructType.fromDDL(ddl)))
+    tallies = work.mapInArrow(writer, _TALLY_DDL).collect()
     wall_ms = int((time.time() - t0) * 1000)
     stats = {s: dict.fromkeys(_TALLY_FIELDS, 0) for s in pending}
     for r in tallies:
@@ -343,6 +356,7 @@ def extract_with_resume(
                 "wall_ms": int(wall_ms * busy_us / total_busy),
                 "run_wall_ms": wall_ms,
                 "attempt": 1,
+                "schema": ddl,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
         )
@@ -453,7 +467,17 @@ def read_extracted(
     stores the last seq it processed and reads ``since=that`` to catch
     up touching none of the already-processed files.  An empty change
     set raises ``LookupError`` (check
-    :meth:`PartitionLedger.committed_between` first when empty-is-ok)."""
+    :meth:`PartitionLedger.committed_between` first when empty-is-ok).
+
+    When every record read carries the same ``schema`` DDL (the file
+    schema :func:`extract_with_resume` wrote), the reader declares it,
+    plus ``run string, split_id int`` for the directory columns: no
+    schema-inference job runs, and a run id made only of digits stays
+    a string.  Otherwise — records from before the field existed, or
+    runs whose ``passthrough`` differed — Spark infers the schema from
+    the files and the directory names."""
+    from pyspark.sql.types import StructType
+
     ledger = PartitionLedger(os.path.join(out_dir, "_ledger"))
     if since is not None:
         recs = ledger.committed_between(since, as_of=as_of)
@@ -465,13 +489,15 @@ def read_extracted(
         recs = ledger.committed(as_of=as_of)
     if not recs:
         raise FileNotFoundError(f"no committed splits under {out_dir}")
+    recs = {s: r for s, r in recs.items() if r["rows"] > 0}
     paths = sorted(
-        {
-            os.path.join(out_dir, "data", f"run={r['run_id']}", f"split_id={s}")
-            for s, r in recs.items()
-            if r["rows"] > 0
-        }
+        os.path.join(out_dir, "data", f"run={r['run_id']}", f"split_id={s}")
+        for s, r in recs.items()
     )
     # basePath keeps run/split_id partition columns while reading only
     # the committed leaf directories
-    return spark.read.option("basePath", os.path.join(out_dir, "data")).parquet(*paths)
+    reader = spark.read.option("basePath", os.path.join(out_dir, "data"))
+    ddls = {r.get("schema") for r in recs.values()}
+    if len(ddls) == 1 and None not in ddls:
+        reader = reader.schema(StructType.fromDDL(ddls.pop() + ", run string, split_id int"))
+    return reader.parquet(*paths)

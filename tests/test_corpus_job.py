@@ -67,6 +67,33 @@ def test_extract_job_cli_transcode(spark, tmp_path):
     assert got[1] == got[2] == "café body"
 
 
+def test_extract_job_read_spreads_one_row_group_input(spark, tmp_path):
+    """extract_with_resume runs one task per input partition, so the
+    job's read is where a one-row-group input gets spread: to at least
+    the session's parallelism, not one task."""
+    import importlib.util
+
+    from gumbo_pp_spark.sources.pages import synth_pages
+
+    spec = importlib.util.spec_from_file_location(
+        "extract_job", os.path.join(REPO, "jobs", "extract_job.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    src = str(tmp_path / "pages")
+    synth_pages(spark, SF_SMOKE).select("doc_id", "url", "html").coalesce(1) \
+        .write.parquet(src)
+    assert spark.read.parquet(src).rdd.getNumPartitions() == 1
+    confs = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        pages = job.read_pages(spark, src)
+        assert pages.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+        assert pages.count() == 500
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 def test_corpus_job_cli_extend_mode(spark, tmp_path):
     """--extend-from: the append set contains only content the prior
     corpus does not already carry."""

@@ -78,6 +78,8 @@ class TestLineageResume:
         # run 3 is a no-op
         r3 = extract_with_resume(spark, pages, out_dir, n_splits=16)
         assert r3["splits_processed"] == 0 and r3["skipped"] == 16
+        # same result shape as a run that did work
+        assert r3.keys() == r2.keys() and r3["wall_ms"] == 0
 
         # committed union is complete, exactly-once, and byte-identical
         got = read_extracted(spark, out_dir)
@@ -265,23 +267,33 @@ def _dirty_pages(spark):
 @pytest.fixture(scope="module")
 def tallied_run(spark, tmp_path_factory):
     """One extract_with_resume over the dirty mix under its own job
-    group; returns the result, the ledger and the physical-plan
-    descriptions of every SQL execution the group's jobs ran in."""
+    group (see :func:`_run_under_group`)."""
+    return _run_under_group(spark, str(tmp_path_factory.mktemp("tally") / "out"),
+                            _dirty_pages(spark))
+
+
+def _jobs_of(spark, fn):
+    """``(fn(), ids of the Spark jobs it ran)``, under its own job group."""
     import uuid
 
     sc = spark.sparkContext
-    out_dir = str(tmp_path_factory.mktemp("tally") / "out")
-    pages = _dirty_pages(spark)
-    store = spark._jsparkSession.sharedState().statusStore()
-    n_before = store.executionsList().size()
-    group = f"ledger-tally-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "extract_with_resume under test")
+    group = f"under-test-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "under test")
     try:
-        res = extract_with_resume(spark, pages, out_dir, n_splits=4)
+        out = fn()
     finally:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _run_under_group(spark, out_dir, pages):
+    """One extract_with_resume under its own job group; returns the
+    result, the ledger and the physical-plan descriptions of every SQL
+    execution the group's jobs ran in."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n_before = store.executionsList().size()
+    res, jobs = _jobs_of(spark, lambda: extract_with_resume(spark, pages, out_dir, n_splits=4))
     execs = store.executionsList()
     plans = [
         e.physicalPlanDescription()
@@ -359,6 +371,23 @@ class TestLedgerTalliesFromWritePass:
         (extract,) = [p for p in plans if "MapInArrow" in p]
         assert _exchanges_above(extract) == [], extract[:3000]
         assert not [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+
+
+class TestNarrowInput(TestLedgerTalliesFromWritePass):
+    """The library contract for a one-partition input: the write stage
+    runs one task per input partition — no spread, no exchange — and
+    the ledger still equals a re-read of the output (the inherited
+    tests, run on this input)."""
+
+    @pytest.fixture(scope="class")
+    def tallied_run(self, spark, tmp_path_factory):
+        return _run_under_group(spark, str(tmp_path_factory.mktemp("narrow") / "out"),
+                                _dirty_pages(spark).coalesce(1))
+
+    def test_write_stage_is_not_spread(self, tallied_run):
+        (extract,) = [p for p in tallied_run["plans"] if "MapInArrow" in p]
+        tree = extract.split("\n\n", 1)[0]
+        assert "Exchange" not in tree and "Coalesce" in tree, tree
 
 
 def _split_batch(rows):
@@ -451,6 +480,80 @@ class TestExtractedSchema:
             "parse_us:bigint,kernel_us:bigint,c_engine:tinyint,run:string,split_id:int>"
         )
         assert {r.doc_id: r.warc_ts for r in got.collect()} == {r[0]: r[2] for r in rows}
+
+
+class TestCommittedReadSchema:
+    """read_extracted declares the schema the ledger recorded: no
+    inference job, and partition values keep the types the writer
+    meant.  Without a single stored schema it infers, as before."""
+
+    @staticmethod
+    def _rows(df):
+        return sorted((r.doc_id, r.text, r.run, r.split_id) for r in df.collect())
+
+    def test_digit_only_run_id_reads_back_as_string(self, spark, tmp_path, monkeypatch):
+        import uuid
+
+        from pyspark.sql.types import StringType
+
+        from gumbo_pp_spark.plans import lineage
+
+        digits = uuid.UUID("01234567-8901-2345-6789-012345678901")
+        monkeypatch.setattr(lineage.uuid, "uuid4", lambda: digits)
+        out_dir = str(tmp_path / "digits")
+        res = extract_with_resume(spark, synth_pages(spark, SF_SMOKE).limit(24), out_dir,
+                                  n_splits=2)
+        monkeypatch.undo()
+        assert res["run_id"] == "012345678901"
+        got = read_extracted(spark, out_dir)
+        assert got.schema["run"].dataType == StringType()
+        assert {r.run for r in got.select("run").distinct().collect()} == {res["run_id"]}
+
+    def test_read_runs_no_spark_job(self, spark, tmp_path):
+        out_dir = str(tmp_path / "nojob")
+        extract_with_resume(spark, synth_pages(spark, SF_SMOKE).limit(40), out_dir, n_splits=4)
+        got, jobs = _jobs_of(spark, lambda: read_extracted(spark, out_dir))
+        assert jobs == []
+        assert got.count() == 40
+
+    def test_ledger_without_schema_falls_back_to_inference(self, spark, tmp_path):
+        import json
+        import os
+
+        out_dir = str(tmp_path / "legacy")
+        extract_with_resume(spark, synth_pages(spark, SF_SMOKE).limit(40), out_dir, n_splits=4)
+        declared = read_extracted(spark, out_dir)
+        # the ledger of an older writer: the same records without "schema"
+        manifest = os.path.join(out_dir, "_ledger", PartitionLedger.MANIFEST)
+        with open(manifest) as f:
+            doc = json.load(f)
+        for rec in doc["records"]:
+            del rec["schema"]
+        with open(manifest, "w") as f:
+            json.dump(doc, f)
+        inferred, jobs = _jobs_of(spark, lambda: read_extracted(spark, out_dir))
+        assert len(jobs) == 1  # the schema-inference job
+        assert inferred.schema == declared.schema
+        rows = self._rows(declared)
+        assert len(rows) == 40 and self._rows(inferred) == rows
+
+    def test_runs_with_different_passthrough_fall_back_to_inference(self, spark, tmp_path):
+        out_dir = str(tmp_path / "mixed")
+        pages = synth_pages(spark, SF_SMOKE).where("doc_id < 40")  # the same rows both runs
+        first = extract_with_resume(spark, pages, out_dir, n_splits=4, max_splits_this_run=2,
+                                    passthrough=("doc_id", "url", "lang"))
+        second = extract_with_resume(spark, pages, out_dir, n_splits=4)
+        recs = PartitionLedger(f"{out_dir}/_ledger").committed()
+        assert len({r["schema"] for r in recs.values()}) == 2
+        got, jobs = _jobs_of(spark, lambda: read_extracted(spark, out_dir))
+        assert len(jobs) == 1
+        assert {r["run_id"] for r in recs.values()} == {first["run_id"], second["run_id"]}
+        want = sorted(
+            (r.doc_id, f"Heading {r.doc_id}{r.text}", recs[r.split_id]["run_id"], r.split_id)
+            for r in pages.select(
+                "doc_id", "text",
+                F.pmod(F.xxhash64("url"), F.lit(4)).cast("int").alias("split_id")).collect())
+        assert self._rows(got) == want
 
 
 class TestNullHtmlResume:
