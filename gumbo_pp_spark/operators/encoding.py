@@ -76,8 +76,4 @@ def sniff_and_transcode(
                 [*passthrough, html_col, "encoding", "enc_src"],
             )
 
-    # guarded round-robin spread: a one-row-group byte source would
-    # otherwise pin the per-page sniff/transcode to a single task
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    return ensure_min_parallelism(df.select(*cols)).mapInArrow(fn, out_schema)
+    return df.select(*cols).mapInArrow(fn, out_schema)

@@ -79,7 +79,14 @@ def run_program(
     timing columns (feeds the lineage ledger's per-stage breakdown).
     ``parse_options`` is the GumboOptions analogue broadcast to every
     executor parse (fragment context/namespace, max_errors — see
-    :func:`gumbo_pp_spark.parser.html5.parse_html`).
+    :func:`gumbo_pp_spark.parser.html5.parse_html`).  A NULL html is
+    parsed as the empty document ``b""``.
+
+    Parallelism contract: the stage runs one task per partition of
+    ``df`` and adds no exchange.  A narrow input — one row group, one
+    small file — is spread where the data is read
+    (:func:`~gumbo_pp_spark.sources.pages.read_pages`,
+    :func:`~gumbo_pp_spark.sources.pages.load_documents`).
     """
     schema = ", ".join(
         [*(f"{c} {t}" for c, t in _passthrough_types(df, passthrough)), out_fields]
@@ -144,13 +151,7 @@ def run_program(
                 names += ["parse_us", "kernel_us"]
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    # small/unsplittable inputs (the documents table is one parquet
-    # row group) otherwise pin the whole per-document Python stage to
-    # a single task — guarded no-op when the scan is already parallel
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    pruned = ensure_min_parallelism(df.select(*passthrough, html_col))
-    return pruned.mapInArrow(fn, schema)
+    return df.select(*passthrough, html_col).mapInArrow(fn, schema)
 
 
 def _passthrough_types(df: DataFrame, passthrough) -> list[tuple[str, str]]:
@@ -163,7 +164,8 @@ def _iter_html(arr):
     yields memoryview slices of the data buffer — parse_html decodes
     straight from them (``str(buffer, ...)``), so the per-doc html
     bytes are never copied into Python objects.  Falls back to
-    ``as_py()`` for nullable/unusual layouts."""
+    ``as_py()`` for nullable/unusual layouts, where a NULL row yields
+    ``b""``: NULL is parsed as the empty document."""
     import pyarrow as pa
 
     if len(arr) == 0:
@@ -178,7 +180,7 @@ def _iter_html(arr):
         )
         data = memoryview(bufs[2])
         return (data[off[k]: off[k + 1]] for k in range(len(arr)))
-    return (v.as_py() for v in arr)
+    return (v.as_py() if v.is_valid else b"" for v in arr)
 
 
 # ----------------------------------------------------------------------
@@ -431,16 +433,18 @@ def extract_main_text(
 
     NULL contract: a NULL ``html`` is parsed as the empty document —
     its row is exactly the row of ``b""`` (never an error, never
-    dropped)."""
+    dropped).
+
+    Parallelism contract: as :func:`run_program`, one task per
+    partition of ``df`` and no exchange; a narrow input is spread
+    where it is read."""
 
     def fn(batches) -> "Iterator[pa.RecordBatch]":
         for rb in batches:
             yield main_text_batch(rb, stage_metrics)
 
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    pruned = ensure_min_parallelism(df.select(*passthrough, "html"))
-    return pruned.mapInArrow(fn, main_text_ddl(df, passthrough, stage_metrics))
+    return df.select(*passthrough, "html").mapInArrow(
+        fn, main_text_ddl(df, passthrough, stage_metrics))
 
 
 # ----------------------------------------------------------------------
@@ -608,10 +612,7 @@ def explode_nodes(df: DataFrame, passthrough: tuple[str, ...] = ("doc_id",)) -> 
                      "src_start", "src_end", "src_start_byte", "src_end_byte"]
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    pruned = ensure_min_parallelism(df.select(*passthrough, "html"))
-    return pruned.mapInArrow(fn, schema)
+    return df.select(*passthrough, "html").mapInArrow(fn, schema)
 
 
 DOM_STATS_FIELDS = (

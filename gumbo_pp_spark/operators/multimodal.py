@@ -79,13 +79,11 @@ def _map_rows(df: DataFrame, in_cols: tuple[str, ...], out_ddl: str, row_fn) -> 
     """Arrow-batched per-row kernel stage: ``row_fn(*values)`` returns
     the output rows (tuples in ``out_ddl`` order; several for a 1→N
     explosion) of one input row.  Output columns are built with
-    explicit Arrow types, as ``extract.run_program`` does.  The input is
-    spread first: the media table derives from the one-row-group
-    documents scan."""
+    explicit Arrow types, as ``extract.run_program`` does.  One task per
+    input partition: :func:`synth_media` spreads the one-row-group
+    documents scan where it reads it."""
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructType
-
-    from ..plans.partitioning import ensure_min_parallelism
 
     out = StructType.fromDDL(out_ddl)
     names = out.fieldNames()
@@ -102,7 +100,7 @@ def _map_rows(df: DataFrame, in_cols: tuple[str, ...], out_ddl: str, row_fn) -> 
                 [pa.array(c, t) for c, t in zip(cols, types)], names=names
             )
 
-    return ensure_min_parallelism(df.select(*in_cols)).mapInArrow(fn, out_ddl)
+    return df.select(*in_cols).mapInArrow(fn, out_ddl)
 
 
 def image_features(df: DataFrame) -> DataFrame:

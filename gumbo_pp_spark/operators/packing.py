@@ -74,13 +74,17 @@ def pack_sequences(
     within the (shard, block) window, ≤ ``block_size`` rows).  The
     (shard, block) join and the within-block window share one
     exchange; output is bit-identical to the single-window form.
+
+    NULL contract: a row with a NULL ``doc_id`` has no place in the
+    packing order and is dropped; the other rows' offsets are those
+    of the input without it.
     """
     if seq_len <= 0 or n_shards <= 0 or block_size <= 0:
         raise ValueError(
             f"seq_len={seq_len}, n_shards={n_shards} and "
             f"block_size={block_size} must be positive"
         )
-    t = df.select(
+    t = df.where("doc_id IS NOT NULL").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         (F.col("doc_id") % n_shards).cast("bigint").alias("shard"),
         F.expr(_n_tokens_expr(text_col)).alias("n_tokens"),
@@ -244,8 +248,11 @@ def select_token_budget(
     so a corpus where one score value dominates can no longer
     re-concentrate one window partition (VERDICT r7 weak item #2).
     The extra aggregates run over BOUNDARY rows only, so the change is
-    invisible at the histogram/full-keep scale."""
-    base = df.selectExpr(
+    invisible at the histogram/full-keep scale.
+
+    NULL contract: a row with a NULL ``key_col`` has no place in the
+    order and is dropped before the budget is counted."""
+    base = df.where(f"{key_col} IS NOT NULL").selectExpr(
         f"CAST({key_col} AS BIGINT) AS doc_id",
         f"CAST({score_col} AS BIGINT) AS score",
         f"{_n_tokens_expr(text_col)} AS n_tokens",

@@ -266,9 +266,4 @@ def extract_pdf_text(
                 {**cols, "text": texts, "n_pages": npages, "parse_ok": oks}
             )
 
-    # spread under-parallel inputs before the per-document tokenizer
-    # (no-op when the PDF source is already parallel — e.g. fed by
-    # synth_pdfs, keeping generation and parse fused in one stage)
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    return ensure_min_parallelism(df).mapInArrow(run, schema)
+    return df.mapInArrow(run, schema)

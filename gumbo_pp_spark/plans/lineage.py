@@ -25,8 +25,8 @@ Design (SURVEY.md §4 c/d):
   the written output — and the DDL of the files they point at, so the
   committed read declares its schema instead of inferring it;
 * input parallelism is the caller's decision, made once where the
-  pages are read (``jobs/extract_job.py``): the write stage runs one
-  task per input partition and adds no exchange.
+  pages are read (``sources.pages.read_pages``): the write stage runs
+  one task per input partition and adds no exchange.
 """
 
 from __future__ import annotations
@@ -287,8 +287,7 @@ def extract_with_resume(
     Parallelism contract: the write stage runs one task per partition
     of ``pages`` and adds no exchange.  A narrow input — one row group,
     one small file — is spread by the caller where it reads the data,
-    as ``jobs/extract_job.py`` does with
-    :func:`~gumbo_pp_spark.plans.partitioning.ensure_min_parallelism`.
+    as :func:`~gumbo_pp_spark.sources.pages.read_pages` does.
 
     ``max_splits_this_run`` exists for fault-injection tests (process
     only K pending splits, as if the job were killed after K commits).

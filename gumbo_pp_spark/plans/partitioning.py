@@ -13,6 +13,16 @@ hash-by-host partitioning leaves stragglers.  Two explicit plans:
 
 Both compute a small driver-side plan (heavy keys / bin map are tiny
 relative to the corpus) and apply it with one shuffle.
+
+Input parallelism is decided once, where the data is read
+(``sources.pages.read_pages``, ``sources.pages.load_documents``): the
+readers call :func:`ensure_min_parallelism`, and so do the operators
+that explode rows in the JVM (per-word explodes, cross joins,
+per-row regexp passes).  The per-document Python map operators
+(``run_program``, ``extract_main_text``, ``explode_nodes``,
+``sniff_and_transcode``, ``extract_pdf_text``, the multimodal
+kernels) do not call it: they run one task per input partition and
+add no exchange.
 """
 
 from __future__ import annotations
@@ -144,7 +154,10 @@ def ensure_min_parallelism(df: DataFrame, waves: int = 2) -> DataFrame:
     no shuffle is ever added to an already-parallel plan.
 
     Call this with scan-stage inputs (the partition-count probe builds
-    the physical RDD; on a map-only plan that runs no jobs).
+    the physical RDD; on a map-only plan that runs no jobs), and only
+    in two places: in a reader, and in front of an operator that
+    explodes rows in the JVM.  Map operators do not call it — their
+    input parallelism is the reader's decision.
     """
     if df.isStreaming:
         # streaming plans cannot be probed via .rdd (and micro-batch

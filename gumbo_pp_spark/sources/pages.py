@@ -171,6 +171,44 @@ def synth_mojibake_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def read_pages(spark: SparkSession, path: str, salt: bool = False,
+               size_bins: bool = False) -> DataFrame:
+    """A pages parquet directory, read with the run's one decision
+    about input parallelism: the per-document operators downstream
+    (``extract_main_text``, ``run_program``, ``extract_with_resume``)
+    run one task per partition they are given, so this is where a
+    narrow input gets spread.  ``salt``/``size_bins`` repartition by
+    host instead (:func:`~gumbo_pp_spark.plans.partitioning.salt_skewed_keys`,
+    :func:`~gumbo_pp_spark.plans.partitioning.size_balanced_bins`).
+
+    Sets the session's scan-split confs
+    (:func:`~gumbo_pp_spark.plans.partitioning.tune_input_splits`)."""
+    from ..plans.partitioning import (
+        ensure_min_parallelism,
+        salt_skewed_keys,
+        size_balanced_bins,
+        tune_input_splits,
+    )
+
+    # Level-aware scan splits (round-6): size maxPartitionBytes off the
+    # input's on-disk bytes so every cluster size gets ≥3 task waves —
+    # a fixed value sized for N executors runs a single straggler-bound
+    # wave at 4N.  At TB scale the 64MB clamp applies and splits ≫
+    # cores anyway.
+    tune_input_splits(spark, path, waves=3, max_split_bytes=64 << 20)
+    pages = spark.read.parquet(path)
+    if salt:
+        pages = salt_skewed_keys(pages)
+    if size_bins:
+        pages = size_balanced_bins(pages)
+    if salt or size_bins:
+        return pages  # both already repartition the input
+    # A single row group cannot be split by the scan tuning above: a
+    # scan with fewer partitions than cores is round-robin spread once,
+    # here; a wider one passes through untouched.
+    return ensure_min_parallelism(pages)
+
+
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents scan, spread across cores BEFORE any derived page
     synthesis: the table is one small parquet row group, so without
@@ -178,9 +216,8 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage downstream) planned into a single task.  Spreading the
     NARROW scan here means the exchange carries the raw text column
     once, not the ~10× larger synthesized html (which made a
-    post-synthesis repartition a net loss); the downstream
-    ensure_min_parallelism guards then see an already-parallel input
-    and no-op."""
+    post-synthesis repartition a net loss); the per-document operators
+    downstream run one task per partition and never spread again."""
     from ..plans.partitioning import ensure_min_parallelism
 
     # waves=1: these rows are uniform and small, so one task wave per

@@ -99,15 +99,12 @@ def synth_pdfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, url, pdf binary) built from the documents table — the
     PDF sibling of ``synth_pages``.  Generation is a vectorized map
     stage (Arrow batches), like every decode path here."""
-    from ..plans.partitioning import ensure_min_parallelism
     from .pages import load_documents
 
-    # the documents table is one small row group — spread it before
-    # the per-document Python generation stage (guarded no-op when the
-    # scan is already parallel)
-    docs = ensure_min_parallelism(
-        load_documents(spark, sf_dir).select("doc_id", "text")
-    )
+    # load_documents spreads the one-row-group documents scan, so the
+    # generation stage (and a parse stage fused after it) runs one
+    # task per core
+    docs = load_documents(spark, sf_dir).select("doc_id", "text")
 
     def gen(batches):
         import pyarrow as pa

@@ -33,13 +33,14 @@ from . import matchers as m
 # helpers
 # ----------------------------------------------------------------------
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread here: the textstats/dedup/packing consumers are
-    # JVM-expression queries whose heavy spots (per-word explodes,
-    # signature aggregates) already apply ensure_min_parallelism
-    # themselves; an unconditional exchange would tax the cheap
-    # map-only queries (lang_id, quality_stats, classifier) with a
-    # shuffle they never need.  The page-synthesis families spread at
-    # sources.pages.load_documents instead.
+    # NOT spread here: the textstats/dedup/sketches consumers are
+    # JVM-expression queries, and the ones that explode rows
+    # (per-word and shingle explodes, per-row regexp passes) apply
+    # ensure_min_parallelism themselves; an unconditional exchange
+    # would tax the cheap map-only queries (lang_id, quality_stats,
+    # classifier) with a shuffle they never need.  The page-synthesis
+    # families, which feed the per-document Python operators (no guard
+    # of their own), spread at sources.pages.load_documents instead.
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 

@@ -27,6 +27,8 @@ import json
 
 from pyspark.sql import SparkSession
 
+from gumbo_pp_spark.sources.pages import read_pages
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -83,10 +85,8 @@ def main() -> None:
     )
 
     from gumbo_pp_spark.pipelines import ANN_RECALL_FLOOR_E4, run_training_corpus
-    from gumbo_pp_spark.plans.partitioning import tune_input_splits
-
-    tune_input_splits(spark, args.pages, waves=3, max_split_bytes=64 << 20)
-    pages = spark.read.parquet(args.pages)
+    # the run's one input-parallelism decision, as in extract_job.py
+    pages = read_pages(spark, args.pages)
 
     kwargs: dict = dict(
         min_tokens=args.min_tokens,

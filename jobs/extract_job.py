@@ -23,38 +23,9 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-
-def read_pages(spark: SparkSession, path: str, salt: bool = False,
-               size_bins: bool = False) -> DataFrame:
-    """The input pages, with the run's one decision about input
-    parallelism: ``extract_with_resume`` runs one task per partition
-    it is given, so this is where a narrow input gets spread."""
-    from gumbo_pp_spark.plans.partitioning import (
-        ensure_min_parallelism,
-        salt_skewed_keys,
-        size_balanced_bins,
-        tune_input_splits,
-    )
-
-    # Level-aware scan splits (round-6): size maxPartitionBytes off the
-    # input's on-disk bytes so every cluster size gets ≥3 task waves —
-    # a fixed value sized for N executors runs a single straggler-bound
-    # wave at 4N.  At TB scale the 64MB clamp applies and splits ≫
-    # cores anyway.
-    tune_input_splits(spark, path, waves=3, max_split_bytes=64 << 20)
-    pages = spark.read.parquet(path)
-    if salt:
-        pages = salt_skewed_keys(pages)
-    if size_bins:
-        pages = size_balanced_bins(pages)
-    if salt or size_bins:
-        return pages  # both already repartition the input
-    # A single row group cannot be split by the scan tuning above: a
-    # scan with fewer partitions than cores is round-robin spread once,
-    # here; a wider one passes through untouched.
-    return ensure_min_parallelism(pages)
+from gumbo_pp_spark.sources.pages import read_pages
 
 
 def main() -> None:

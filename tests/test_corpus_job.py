@@ -67,18 +67,19 @@ def test_extract_job_cli_transcode(spark, tmp_path):
     assert got[1] == got[2] == "café body"
 
 
-def test_extract_job_read_spreads_one_row_group_input(spark, tmp_path):
-    """extract_with_resume runs one task per input partition, so the
-    job's read is where a one-row-group input gets spread: to at least
-    the session's parallelism, not one task."""
+def _load_job(name):
     import importlib.util
 
-    from gumbo_pp_spark.sources.pages import synth_pages
-
     spec = importlib.util.spec_from_file_location(
-        "extract_job", os.path.join(REPO, "jobs", "extract_job.py"))
+        name, os.path.join(REPO, "jobs", f"{name}.py"))
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
+    return job
+
+
+def _assert_read_spreads_one_row_group_input(spark, tmp_path, job):
+    from gumbo_pp_spark.sources.pages import synth_pages
+
     src = str(tmp_path / "pages")
     synth_pages(spark, SF_SMOKE).select("doc_id", "url", "html").coalesce(1) \
         .write.parquet(src)
@@ -92,6 +93,19 @@ def test_extract_job_read_spreads_one_row_group_input(spark, tmp_path):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+def test_extract_job_read_spreads_one_row_group_input(spark, tmp_path):
+    """extract_with_resume runs one task per input partition, so the
+    job's read is where a one-row-group input gets spread: to at least
+    the session's parallelism, not one task."""
+    _assert_read_spreads_one_row_group_input(spark, tmp_path, _load_job("extract_job"))
+
+
+def test_corpus_job_read_spreads_one_row_group_input(spark, tmp_path):
+    """The corpus job reads --pages through the same decision: its
+    per-document operators do not spread their input either."""
+    _assert_read_spreads_one_row_group_input(spark, tmp_path, _load_job("corpus_job"))
 
 
 def test_corpus_job_cli_extend_mode(spark, tmp_path):

@@ -61,6 +61,17 @@ class TestPackSequences:
         )
         assert per and all(r["total"] == r["end"] for r in per)
 
+    def test_null_doc_id_row_is_dropped(self, spark):
+        # a NULL id has no place in the packing order: the row is
+        # absent and every other row packs as if it were not there
+        rows = [(i, _words(1 + i % 5)) for i in range(12)]
+
+        def start_toks(rs):
+            out = P.pack_sequences(_docs(spark, rs), seq_len=4, n_shards=2)
+            return {r["doc_id"]: r["start_tok"] for r in out.collect()}
+
+        assert start_toks(rows + [(None, _words(3))]) == start_toks(rows)
+
     def test_validation(self, spark):
         docs = _docs(spark, [(0, "a")])
         with pytest.raises(ValueError):
@@ -368,6 +379,17 @@ class TestSelectTokenBudget:
         kept = {r.doc_id for r in
                 P.select_token_budget(docs, 10, "score").collect()}
         assert kept == {1}
+
+    def test_null_key_row_is_dropped(self, spark):
+        # a NULL key is dropped before the budget is counted, in the
+        # fully kept scores and at the boundary alike
+        rows = [(1, 90, _words(4)), (2, 80, _words(4)), (3, 80, _words(4)),
+                (4, 70, _words(4))]
+        for nul in ((None, 90, _words(4)), (None, 80, _words(4))):
+            kept = {r.doc_id for r in
+                    P.select_token_budget(self._scored(spark, rows + [nul]), 10, "score")
+                    .collect()}
+            assert kept == {1, 2}, nul
 
     def test_budget_larger_than_corpus_keeps_all(self, spark):
         docs = self._scored(spark, [(1, 5, _words(3)), (2, 4, _words(3))])

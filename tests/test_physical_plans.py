@@ -6,7 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from gumbo_pp_spark.operators.dedup import exact_dedup, minhash_signatures
-from gumbo_pp_spark.operators.extract import extract_main_text
+from gumbo_pp_spark.operators.encoding import sniff_and_transcode
+from gumbo_pp_spark.operators.extract import dom_stats, explode_nodes, extract_main_text
+from gumbo_pp_spark.operators.multimodal import image_features
+from gumbo_pp_spark.operators.pdf import extract_pdf_text
 from gumbo_pp_spark.operators.similarity import cosine_topk
 from gumbo_pp_spark.suite import q_lineitem_agg, q_top_orders_per_segment
 
@@ -182,7 +185,8 @@ class TestInputSplitTuning:
         from gumbo_pp_spark.plans import partitioning as P
 
         monkeypatch.setattr(P, "input_stats", lambda s, d: (100 << 40, 1_000_000))
-        old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        confs = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+        old = {k: spark.conf.get(k) for k in confs}
         try:
             chosen = P.tune_input_splits(spark, "ignored", waves=3)
             assert chosen == 128 << 20
@@ -190,7 +194,8 @@ class TestInputSplitTuning:
                                        max_split_bytes=64 << 20)
             assert tiny == 64 << 20
         finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+            for k, v in old.items():
+                spark.conf.set(k, v)
 
     def test_ensure_min_parallelism_guard(self, spark, tmp_path):
         """round-6 late: a single-row-group scan (fewer partitions than
@@ -211,6 +216,46 @@ class TestInputSplitTuning:
 
         wide = one.repartition(cores)
         assert P.ensure_min_parallelism(wide) is wide  # untouched
+
+
+_MAP_OPERATORS = {
+    "run_program": dom_stats,
+    "extract_main_text": extract_main_text,
+    "explode_nodes": explode_nodes,
+    "sniff_and_transcode": sniff_and_transcode,
+    "extract_pdf_text": lambda df: extract_pdf_text(df.withColumnRenamed("html", "pdf")),
+    "multimodal": lambda df: image_features(df.selectExpr(
+        "doc_id AS media_id", "'image' AS kind", "html AS payload",
+        "16 AS width", "16 AS height")),
+}
+
+
+class TestMapOperatorsDoNotSpread:
+    """Input parallelism is decided where the data is read: the
+    per-document Python map operators neither probe nor spread their
+    input, so a one-partition input stays one task with no exchange."""
+
+    @pytest.mark.parametrize("name", sorted(_MAP_OPERATORS))
+    def test_no_probe_no_exchange(self, spark, monkeypatch, name):
+        from gumbo_pp_spark.plans import partitioning as P
+
+        calls = []
+        real = P.ensure_min_parallelism
+
+        def spy(df, *args, **kwargs):
+            calls.append(df)
+            return real(df, *args, **kwargs)
+
+        monkeypatch.setattr(P, "ensure_min_parallelism", spy)
+        pages = spark.createDataFrame(
+            [(i, f"https://n.example/{i}", f"<p>doc {i}</p>".encode()) for i in range(8)],
+            "doc_id long, url string, html binary",
+        ).coalesce(1)
+        out = _MAP_OPERATORS[name](pages)
+        assert calls == []
+        plan = plan_of(out)
+        assert "Exchange" not in plan, plan
+        assert out.rdd.getNumPartitions() == 1
 
 
 def test_revenue_by_nation_broadcasts_all_dims(spark):

@@ -17,7 +17,11 @@ from .conftest import SF_SMOKE
 
 @pytest.fixture(scope="module")
 def pages(spark):
-    return synth_pages(spark, SF_SMOKE).cache()
+    # unpersisted after the module: a cached synth_pages plan would
+    # otherwise be substituted into later modules' plan pins
+    cached = synth_pages(spark, SF_SMOKE).cache()
+    yield cached
+    cached.unpersist()
 
 
 class TestMainText:
@@ -100,6 +104,32 @@ class TestNullHtml:
         for i in (0, 2, 3, 4):
             assert [got[i][f] for f in fields] == [ref[i][f] for f in fields], i
         assert got[0].text == "first" and got[2].text == "Béta\n"
+
+    def test_null_row_through_run_program_and_explode_nodes(self, spark):
+        """The per-document program runner and the node explode keep
+        the same NULL contract: the NULL row is the empty document's
+        row (or node rows), and the valid rows are unchanged."""
+        from gumbo_pp_spark.operators.extract import dom_stats, explode_nodes
+
+        docs = [b"<p>one <a href=x>link</a></p>", None, b"<div><p>two</p></div>", b""]
+        rows = [(i, f"https://h.example/{i}", d) for i, d in enumerate(docs)]
+        schema = "doc_id long, url string, html binary"
+        df = spark.createDataFrame(rows, schema)
+        alone = spark.createDataFrame([r for r in rows if r[2] is not None], schema)
+
+        def by_doc(out):
+            # each document's output rows, in emission order, without doc_id
+            got: dict = {}
+            for r in out.collect():
+                d = r.asDict()
+                got.setdefault(d.pop("doc_id"), []).append(d)
+            return got
+
+        for name, op in (("dom_stats", dom_stats), ("explode_nodes", explode_nodes)):
+            got, ref = by_doc(op(df)), by_doc(op(alone))
+            assert sorted(got) == [0, 1, 2, 3], name
+            assert got[1] == got[3], name
+            assert {i: got[i] for i in (0, 2, 3)} == ref, name
 
 
 class TestStructuralScrape:
