@@ -23,6 +23,8 @@ import threading
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textstats import _ngram_expr, split_words
+
 # ----------------------------------------------------------------------
 # Cached-intermediate lifecycle.  ``minhash_lsh_pairs`` and
 # ``simhash_pairs`` cache their signature DataFrame so the expensive
@@ -106,23 +108,9 @@ def unpersist_caches() -> int:
             pass
     return n
 
-# word 3-gram shingles of a text column (Spark SQL expression; the
-# DuckDB oracle mirrors it with list_transform/array slicing)
-SHINGLE_EXPR = (
-    "array_distinct(transform(sequence(1, size(split(text, ' ')) - 2), "
-    "j -> concat_ws(' ', slice(split(text, ' '), j, 3))))"
-)
-
-# same shingle set over a pre-split ``ws`` array column.  Spark does
-# not hoist loop-invariant subexpressions out of higher-order-function
-# lambdas, so the one-column form above re-tokenizes ``text`` for
-# every j — O(words²) characters per document; ``shingles`` projects
-# the split once and uses this form (byte-identical output, and the
-# oracle keeps mirroring SHINGLE_EXPR).
-_WS_SHINGLE_EXPR = (
-    "array_distinct(transform(sequence(1, size(ws) - 2), "
-    "j -> concat_ws(' ', slice(ws, j, 3))))"
-)
+# distinct word 3-gram shingles of the ``ws`` word array (the DuckDB
+# oracle mirrors them with list_transform/array slicing)
+_SHINGLES = _ngram_expr(3)
 
 
 def exact_dedup(df: DataFrame, key_expr: str = "substr(text, 1, 30)") -> DataFrame:
@@ -142,20 +130,11 @@ def exact_dedup(df: DataFrame, key_expr: str = "substr(text, 1, 30)") -> DataFra
 
 def shingles(df: DataFrame) -> DataFrame:
     """(doc_id, shingle) exploded distinct word-3-grams; docs with <3
-    words contribute nothing (guard matches the oracle).
-
-    The input is re-spread across cores first
-    (:func:`~gumbo_pp_spark.plans.partitioning.ensure_min_parallelism`):
-    a one-row-group parquet scan otherwise pins the whole downstream
-    hashing/aggregation pipeline to a single task."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    ws = (
-        ensure_min_parallelism(df)
-        .select("doc_id", F.split("text", " ").alias("ws"))
-        .where(F.expr("size(ws) >= 3"))
-    )
-    return ws.select("doc_id", F.explode(F.expr(_WS_SHINGLE_EXPR)).alias("sh"))
+    words contribute nothing (guard matches the oracle).  Words come
+    from :func:`~gumbo_pp_spark.operators.textstats.split_words`, which
+    spreads an under-parallel input."""
+    ws = split_words(df, keep=("doc_id",), min_words=3)
+    return ws.select("doc_id", F.explode(F.expr(_SHINGLES)).alias("sh"))
 
 
 def ngram_jaccard_pairs(
@@ -239,13 +218,8 @@ def minhash_signatures(df: DataFrame, n_hashes: int = N_MINHASHES) -> DataFrame:
     stream by doc_id on both sides of the shuffle.  Docs with <3 words
     keep contributing no row (explicit filter, matching the oracle's
     shingle CTE guard)."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    t = (
-        ensure_min_parallelism(df)
-        .select("doc_id", F.split("text", " ").alias("ws"))
-        .where(F.expr("size(ws) >= 3"))
-        .select("doc_id", F.expr(_WS_SHINGLE_EXPR).alias("sha"))
+    t = split_words(df, keep=("doc_id",), min_words=3).select(
+        "doc_id", F.expr(_SHINGLES).alias("sha")
     )
     mins = [
         F.expr(
@@ -585,7 +559,9 @@ def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, simhash bigint) — 63-bit fingerprint.  Near-dup pairs
     at scale: group by bit-bands of the fingerprint, verify survivors
     with ``bit_count(a ^ b) <= r`` (xor+popcount are JVM intrinsics).
-    Input re-spread across cores first (see :func:`shingles`)."""
+    A per-row pass over :func:`simhash63_sql`, the SQL form the DuckDB
+    oracle mirrors, which splits the text itself; so this pass, not
+    ``split_words``, spreads an under-parallel input."""
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 
     df = ensure_min_parallelism(df)

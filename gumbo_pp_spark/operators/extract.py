@@ -68,15 +68,12 @@ def run_program(
     out_fields: str,
     passthrough: tuple[str, ...] = ("doc_id", "url"),
     html_col: str = "html",
-    stage_metrics: bool = False,
     parse_options: dict | None = None,
 ) -> DataFrame:
     """Run ``program`` over every page.  ``program(nt) -> dict`` of the
     columns declared in ``out_fields`` (DDL fragment).  Passthrough
     columns are carried unchanged; the input projection is pruned to
     passthrough + html so parquet scans read only what is needed.
-    ``stage_metrics`` appends per-document ``parse_us``/``kernel_us``
-    timing columns (feeds the lineage ledger's per-stage breakdown).
     ``parse_options`` is the GumboOptions analogue broadcast to every
     executor parse (fragment context/namespace, max_errors — see
     :func:`gumbo_pp_spark.parser.html5.parse_html`).  A NULL html is
@@ -91,8 +88,6 @@ def run_program(
     schema = ", ".join(
         [*(f"{c} {t}" for c, t in _passthrough_types(df, passthrough)), out_fields]
     )
-    if stage_metrics:
-        schema += ", parse_us bigint, kernel_us bigint"
     # real DDL parse (a naive ', ' split breaks on nested struct/decimal
     # types like 'array<struct<a: int, b: int>>')
     from pyspark.sql.pandas.types import to_arrow_type
@@ -114,41 +109,19 @@ def run_program(
     # (_iter_html) and the passthrough columns pass through as
     # untouched Arrow arrays.
     def fn(batches) -> "Iterator":
-        import time as _time
-
         import pyarrow as pa
 
-        clk = _time.perf_counter
+        names = [*passthrough, *out_names]
         for rb in batches:
-            htmls = rb.column(n_pt)
             outs: list[list] = [[] for _ in out_names]
-            parse_us: list[int] = []
-            kernel_us: list[int] = []
-            if stage_metrics:
-                for raw in _iter_html(htmls):
-                    t0 = clk()
-                    nt = parse_html(raw, parse_options)
-                    t1 = clk()
-                    res = program(nt)
-                    t2 = clk()
-                    parse_us.append(int((t1 - t0) * 1e6))
-                    kernel_us.append(int((t2 - t1) * 1e6))
-                    for j, c in enumerate(out_names):
-                        outs[j].append(res[c])
-            else:
-                for raw in _iter_html(htmls):
-                    res = program(parse_html(raw, parse_options))
-                    for j, c in enumerate(out_names):
-                        outs[j].append(res[c])
+            for raw in _iter_html(rb.column(n_pt)):
+                res = program(parse_html(raw, parse_options))
+                for j, c in enumerate(out_names):
+                    outs[j].append(res[c])
             cols = [rb.column(i) for i in range(n_pt)]
             cols += [
                 pa.array(vals, type=t) for vals, t in zip(outs, out_pa_types)
             ]
-            names = [*passthrough, *out_names]
-            if stage_metrics:
-                cols += [pa.array(parse_us, pa.int64()),
-                         pa.array(kernel_us, pa.int64())]
-                names += ["parse_us", "kernel_us"]
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return df.select(*passthrough, html_col).mapInArrow(fn, schema)

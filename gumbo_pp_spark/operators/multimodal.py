@@ -81,20 +81,27 @@ def _map_rows(df: DataFrame, in_cols: tuple[str, ...], out_ddl: str, row_fn) -> 
     explosion) of one input row.  Output columns are built with
     explicit Arrow types, as ``extract.run_program`` does.  One task per
     input partition: :func:`synth_media` spreads the one-row-group
-    documents scan where it reads it."""
+    documents scan where it reads it.
+
+    NULL contract: a NULL ``payload`` is decoded as the empty payload
+    ``b""`` (as ``extract_main_text`` parses a NULL html as the empty
+    document), so the row yields the outputs of an empty media object
+    instead of aborting the task."""
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructType
 
     out = StructType.fromDDL(out_ddl)
     names = out.fieldNames()
     types = [to_arrow_type(f.dataType) for f in out.fields]
+    pay = in_cols.index("payload")
 
     def fn(batches):
         import pyarrow as pa
 
         for rb in batches:
-            rows = [r for row in zip(*(rb.column(c).to_pylist() for c in in_cols))
-                    for r in row_fn(*row)]
+            vals = [rb.column(c).to_pylist() for c in in_cols]
+            vals[pay] = [b"" if v is None else v for v in vals[pay]]
+            rows = [r for row in zip(*vals) for r in row_fn(*row)]
             cols = list(zip(*rows)) if rows else [()] * len(names)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(c, t) for c, t in zip(cols, types)], names=names

@@ -240,12 +240,15 @@ def extract_pdf_text(
     any other malformed input yields (text='', n_pages=0,
     parse_ok=false) as an ERROR RECORD instead of poisoning the task —
     one bad object in 10^12 must not kill a 4-hour job; the parse_ok
-    column is the dirty-tail accounting (no silent drops)."""
-    fields = ", ".join(
-        f"{c} {t}" for c, t in
-        [(f.name, f.dataType.simpleString()) for f in df.schema.fields if f.name in passthrough]
+    column is the dirty-tail accounting (no silent drops).  The input
+    projection is pruned to passthrough + ``pdf_col``, so a parquet
+    scan reads only those columns."""
+    from .extract import _passthrough_types
+
+    schema = ", ".join(
+        [*(f"{c} {t}" for c, t in _passthrough_types(df, passthrough)),
+         "text string, n_pages bigint, parse_ok boolean"]
     )
-    schema = f"{fields}, text string, n_pages bigint, parse_ok boolean"
 
     def run(batches):
         import pyarrow as pa
@@ -266,4 +269,4 @@ def extract_pdf_text(
                 {**cols, "text": texts, "n_pages": npages, "parse_ok": oks}
             )
 
-    return df.mapInArrow(run, schema)
+    return df.select(*passthrough, pdf_col).mapInArrow(run, schema)

@@ -22,6 +22,17 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("norm", F.expr(NORM_EXPR.format(a=vec_col)))
 
 
+def _corpus_side(df: DataFrame, vec_col: str) -> DataFrame:
+    """The vector corpus as every search operator scans it: spread when
+    under-parallel (the per-vector dot products against broadcast
+    queries or pivots are the heavy JVM work — see
+    :func:`~gumbo_pp_spark.plans.partitioning.ensure_min_parallelism`;
+    a no-op at corpus scale), normed, zero vectors dropped."""
+    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
+
+    return with_norm(ensure_min_parallelism(df), vec_col).where(F.col("norm") > 0)
+
+
 def cosine_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -35,14 +46,12 @@ def cosine_topk(
     side is never shuffled FOR THE JOIN; the only wide exchange is the
     final per-query top-k, which is a partial top-k per partition
     under AQE.  (An unsplittable under-parallel input is first spread
-    across cores — see ``ensure_min_parallelism``; a no-op at corpus
-    scale.)  Returns (query_id, neighbor_id, rank).
+    across cores by :func:`_corpus_side`.)  Returns (query_id,
+    neighbor_id, rank).
     """
     from pyspark.sql.window import Window
 
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    base = with_norm(ensure_min_parallelism(df), vec_col).where(F.col("norm") > 0)
+    base = _corpus_side(df, vec_col)
     q = (
         with_norm(queries, vec_col)
         .where(F.col("norm") > 0)
@@ -91,12 +100,8 @@ def cosine_near_dup_pairs(
     with a JVM-side dot product; cosine is e6-scaled so the DuckDB
     oracle (which recomputes the identical buckets/probes) compares
     exactly."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
     sk = hyperplane_sketch_expr(dim, n_planes, vec_col)
-    base = with_norm(ensure_min_parallelism(df), vec_col).where(F.col("norm") > 0).withColumn(
-        "bucket", F.expr(sk)
-    )
+    base = _corpus_side(df, vec_col).withColumn("bucket", F.expr(sk))
     probes = ", ".join(f"bucket ^ {2 ** p}" for p in range(n_planes))
     a = base.select(
         F.col(id_col).alias("a"), F.col(vec_col).alias("va"),
@@ -172,14 +177,8 @@ def lsh_cosine_topk(
     """
     from pyspark.sql.window import Window
 
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
     sk = hyperplane_sketch_expr(dim, n_planes, vec_col)
-    base = (
-        with_norm(ensure_min_parallelism(df), vec_col)
-        .where(F.col("norm") > 0)
-        .withColumn("bucket", F.expr(sk))
-    )
+    base = _corpus_side(df, vec_col).withColumn("bucket", F.expr(sk))
     q = (
         with_norm(queries, vec_col)
         .where(F.col("norm") > 0)
@@ -279,9 +278,7 @@ def ivf_assignments(
 ) -> DataFrame:
     """Assign every vector to its nearest pivot by cosine (ties break
     to the smallest pivot_id).  Returns (id, vec, norm, pivot_id)."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    base = with_norm(ensure_min_parallelism(df), vec_col).where(F.col("norm") > 0)
+    base = _corpus_side(df, vec_col)
     p = _pivot_side(pivots, vec_col, id_col)
     dot = DOT_EXPR.format(a=vec_col, b="p_vec")
     scored = base.crossJoin(F.broadcast(p)).withColumn(

@@ -20,12 +20,36 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textstats import split_words
+
 U32 = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def _bucket_expr(r: int, width: int, word_col: str = "word") -> str:
     salted = U32.format(x=f"concat('{r}|', {word_col})")
     return f"CAST({salted} % {width} AS BIGINT)"
+
+
+def _row_buckets(width: int, depth: int):
+    # one (row, bucket) struct per hash row of a `word` column, exploded
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(r).cast("bigint").alias("row"),
+                    F.expr(_bucket_expr(r, width)).alias("bucket"),
+                )
+                for r in range(depth)
+            ]
+        )
+    ).alias("rb")
+
+
+def _counters(words: DataFrame, width: int, depth: int) -> DataFrame:
+    # the sketch of a (word) stream: (row, bucket, cnt)
+    return words.select(_row_buckets(width, depth)).groupBy("rb.row", "rb.bucket").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
 
 
 def cms_sketch(
@@ -37,27 +61,7 @@ def cms_sketch(
     (one (row, bucket) key per hash row); partial aggregation
     collapses each partition's stack to ≤ depth·width rows before the
     exchange, so the shuffle is constant-size regardless of input."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    toks = ensure_min_parallelism(df).select(
-        F.explode(F.split(F.col(text_col), " ")).alias("word")
-    )
-    stacked = toks.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("bigint").alias("row"),
-                        F.expr(_bucket_expr(r, width)).alias("bucket"),
-                    )
-                    for r in range(depth)
-                ]
-            )
-        ).alias("rb")
-    )
-    return stacked.groupBy("rb.row", "rb.bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
+    return _counters(split_words(df, text_col, explode=True), width, depth)
 
 
 def cms_heavy_hitters(
@@ -77,31 +81,14 @@ def cms_heavy_hitters(
     The candidate side here is the corpus' own distinct words (a
     monitoring query); in production the sketch is the broadcast
     artifact and candidates arrive from outside (alert lists, probe
-    vocab) without touching the corpus again."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    sketch = cms_sketch(df, width=width, depth=depth, text_col=text_col)
-    words = (
-        ensure_min_parallelism(df)
-        .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
-        .distinct()
+    vocab) without touching the corpus again.  One token stream feeds
+    both the sketch and the candidates."""
+    toks = split_words(df, text_col, explode=True)
+    probes = toks.distinct().select("word", _row_buckets(width, depth)).select(
+        "word", "rb.row", "rb.bucket"
     )
-    probes = words.select(
-        "word",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("bigint").alias("row"),
-                        F.expr(_bucket_expr(r, width)).alias("bucket"),
-                    )
-                    for r in range(depth)
-                ]
-            )
-        ).alias("rb"),
-    ).select("word", "rb.row", "rb.bucket")
     est = (
-        probes.join(F.broadcast(sketch), ["row", "bucket"])
+        probes.join(F.broadcast(_counters(toks, width, depth)), ["row", "bucket"])
         .groupBy("word")
         .agg(F.min("cnt").cast("bigint").alias("est"))
     )
@@ -121,11 +108,8 @@ def kmv_distinct(df: DataFrame, k: int = 16, text_col: str = "text") -> DataFram
     a per-partition k-heap merged on the driver, the same merge a
     production KMV union does.  The sketch is k numbers; unions of
     per-shard sketches merge by re-taking the k smallest."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
     h = (
-        ensure_min_parallelism(df)
-        .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        split_words(df, text_col, explode=True)
         .select(F.expr(U32.format(x="word")).alias("h"))
         .distinct()
     )
@@ -159,11 +143,9 @@ def length_quantiles(
     statistics the histogram IS the sketch, no approximation needed."""
     from pyspark.sql import Window
 
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
     lens = (
-        ensure_min_parallelism(df)
-        .selectExpr(f"size(split({text_col}, ' ')) AS len")
+        split_words(df, text_col)
+        .select(F.size("ws").alias("len"))
         .groupBy("len")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -207,13 +189,9 @@ def grouped_length_quantiles(
     window)."""
     from pyspark.sql import Window
 
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
     lens = (
-        ensure_min_parallelism(df)
-        .selectExpr(
-            f"{group_col} AS grp", f"size(split({text_col}, ' ')) AS len"
-        )
+        split_words(df, text_col, keep=(f"{group_col} AS grp",))
+        .select("grp", F.size("ws").alias("len"))
         .groupBy("grp", "len")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -24,6 +24,57 @@ def _in_list(items: tuple[str, ...]) -> str:
     return ", ".join(f"'{w}'" for w in items)
 
 
+#: ``keep`` entry carrying the document key as BIGINT
+DOC_ID = "CAST(doc_id AS BIGINT) AS doc_id"
+
+
+def words_sql(text_col: str = "text") -> str:
+    """SQL for the word array of ``text_col``: the single-space split
+    every word operator shares.  Map-only expressions (quality and
+    language signals, the classifier) use it in place and never spread
+    their input; operators that explode words take them from
+    :func:`split_words`."""
+    return f"split({text_col}, ' ')"
+
+
+def split_words(
+    df: DataFrame,
+    text_col: str = "text",
+    keep: tuple[str, ...] = (),
+    min_words: int = 0,
+    explode: bool = False,
+    segments: str | None = None,
+) -> DataFrame:
+    """The word tokenizer of the per-word operators in ``textstats``,
+    ``dedup`` and ``sketches``: ``text_col`` split on single spaces.
+
+    Returns ``(*keep, ws)``, the word array per document, or with
+    ``explode`` ``(*keep, word)``, one row per word.  ``keep`` holds
+    passthrough selectExpr entries (:data:`DOC_ID`, a group column).
+    ``min_words`` drops documents with fewer words (an n-gram or
+    window pass needs at least n).  ``segments`` first splits the text
+    on that regex and tokenizes each segment: ``(*keep, pos, ws)``, one
+    row per segment at 0-based ``pos``.
+
+    This is the one place these operators spread an under-parallel
+    input (:func:`~gumbo_pp_spark.plans.partitioning.ensure_min_parallelism`):
+    they explode rows in the JVM, so a one-row-group scan would
+    otherwise run the whole per-word pass in one task.  At corpus
+    scale the guard is a no-op and adds no exchange."""
+    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
+
+    base = ensure_min_parallelism(df)
+    keep_cols = [F.expr(k) for k in keep]
+    if segments is not None:
+        base = base.select(
+            *keep_cols, F.posexplode(F.split(text_col, segments)).alias("pos", "seg")
+        )
+        keep_cols, text_col = [F.col(c) for c in base.columns[:-1]], "seg"
+    ws = F.expr(words_sql(text_col))
+    out = base.select(*keep_cols, F.explode(ws).alias("word") if explode else ws.alias("ws"))
+    return out.where(F.size("ws") >= min_words) if min_words else out
+
+
 def quality_stats(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, n_tokens, avg_token_len_e4, stopword_ratio_e4,
     alpha_ratio_e4) — length/punctuation/stopword heuristics used for
@@ -32,15 +83,16 @@ def quality_stats(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     another key gets it in the same map-only projection instead of
     joining back to the corpus."""
     stop = _in_list(STOPWORDS)
+    ws = words_sql("text")
     return df.selectExpr(
         *keep,
         "CAST(doc_id AS BIGINT) AS doc_id",
-        "CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens",
+        f"CAST(size({ws}) AS BIGINT) AS n_tokens",
         # chars-in-words / n_tokens (separators = n_tokens - 1 spaces)
-        "CAST(round(10000.0 * (length(text) - size(split(text, ' ')) + 1)"
-        " / size(split(text, ' '))) AS BIGINT) AS avg_token_len_e4",
-        f"CAST(round(10000.0 * size(filter(split(text, ' '), w -> w IN ({stop})))"
-        " / size(split(text, ' '))) AS BIGINT) AS stopword_ratio_e4",
+        f"CAST(round(10000.0 * (length(text) - size({ws}) + 1)"
+        f" / size({ws})) AS BIGINT) AS avg_token_len_e4",
+        f"CAST(round(10000.0 * size(filter({ws}, w -> w IN ({stop})))"
+        f" / size({ws})) AS BIGINT) AS stopword_ratio_e4",
         "CAST(round(10000.0 * length(regexp_replace(text, '[^a-z]', ''))"
         " / length(text)) AS BIGINT) AS alpha_ratio_e4",
     )
@@ -51,7 +103,7 @@ def _lang_case(text_col: str) -> str:
     fr) as a SQL string — shared by :func:`lang_id` and
     :func:`corpus_report`."""
     scores = {
-        lang: f"size(filter(split({text_col}, ' '), w -> w IN ({_in_list(ws)})))"
+        lang: f"size(filter({words_sql(text_col)}, w -> w IN ({_in_list(ws)})))"
         for lang, ws in LANG_MARKERS.items()
     }
     return (
@@ -144,14 +196,9 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     word pass yields n_words (sum of counts), n_distinct (group count)
     and the top count in ONE grouped aggregation — no caching of the
     corpus, no per-document quadratic lambdas."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    words = ensure_min_parallelism(df).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("w"),
-    )
+    words = split_words(df, text_col, keep=(DOC_ID,))
     wstats = (
-        words.select("doc_id", F.explode("w").alias("g"))
+        words.select("doc_id", F.explode("ws").alias("g"))
         .groupBy("doc_id", "g").count()
         .groupBy("doc_id")
         .agg(
@@ -164,7 +211,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         words.select(
             "doc_id",
             F.explode(
-                F.expr("transform(sequence(1, size(w) - 1), j -> concat(element_at(w, j), ' ', element_at(w, j + 1)))")
+                F.expr("transform(sequence(1, size(ws) - 1), j -> concat(element_at(ws, j), ' ', element_at(ws, j + 1)))")
             ).alias("g"),
         )
         .groupBy("doc_id", "g").count()
@@ -187,16 +234,9 @@ def paragraph_chunks(df: DataFrame, text_col: str = "text", stride: int = 10) ->
     Spark does not hoist loop-invariant subexpressions out of
     higher-order-function lambdas (see ``chunk_tokens``), so the
     one-expression form re-tokenized the document for every chunk —
-    O(words²/stride) characters per document.  Input spread is guarded
-    like every per-word pass."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
+    O(words²/stride) characters per document."""
     return (
-        ensure_min_parallelism(df)
-        .select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.expr(f"split({text_col}, ' ')").alias("ws"),
-        )
+        split_words(df, text_col, keep=(DOC_ID,))
         .select(
             "doc_id",
             F.explode(
@@ -312,8 +352,9 @@ def host_quality_stats(
     passthrough, no join back to the corpus) and the host aggregate is
     one map-side-combined shuffle; the output is hosts-sized ≪ corpus.
     The per-document stat projection (split/filter/regexp per row) is
-    the heavy map work here — guarded against under-parallel scans
-    like every other per-row pass."""
+    the heavy map work here, so this per-row pass spreads an
+    under-parallel scan itself: :func:`quality_stats` is the SQL form
+    the oracles mirror and splits the text on its own."""
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 
     s = quality_stats(ensure_min_parallelism(df), keep=(f"{host_col} AS host",))
@@ -406,7 +447,7 @@ def gopher_rules(
     bullet = "l LIKE '- %' OR l LIKE '* %' OR l LIKE '• %'"
     out = df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        f"split({text_col}, ' ') AS ws",
+        f"{words_sql(text_col)} AS ws",
         f"split({text_col}, '{line_sep_regex}') AS ls",
         f"CAST(regexp_count({text_col}, '#') + regexp_count({text_col}, '[.]{{3}}') AS BIGINT) AS n_symbols",
     ).selectExpr(
@@ -529,7 +570,7 @@ def _ngram_expr(n: int) -> str:
 def eval_ngrams(evals: DataFrame, n: int = 13, text_col: str = "text") -> DataFrame:
     """Distinct word ``n``-grams of an eval set: (gram).  Docs shorter
     than ``n`` words contribute nothing."""
-    ws = evals.select(F.split(F.col(text_col), " ").alias("ws")).where(
+    ws = evals.select(F.expr(words_sql(text_col)).alias("ws")).where(
         F.expr(f"size(ws) >= {n}")
     )
     return ws.select(F.explode(F.expr(_ngram_expr(n))).alias("gram")).distinct()
@@ -552,15 +593,9 @@ def contamination(
     precomputed (gram) DataFrame — a caller running this repeatedly
     (the streaming foreachBatch path) caches the gram table once
     instead of re-aggregating the eval set per micro-batch."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
     if grams is None:
         grams = eval_ngrams(evals, n, text_col)
-    ws = (
-        ensure_min_parallelism(docs)
-        .select("doc_id", F.split(F.col(text_col), " ").alias("ws"))
-        .where(F.expr(f"size(ws) >= {n}"))
-    )
+    ws = split_words(docs, text_col, keep=("doc_id",), min_words=n)
     dg = ws.select("doc_id", F.explode(F.expr(_ngram_expr(n))).alias("gram"))
     return (
         dg.join(F.broadcast(grams), "gram")
@@ -596,18 +631,10 @@ def sentence_contamination(
     sentence embedded in an otherwise-good page.  Scale shape: the
     sentence+gram explode is map-only, grams join the broadcast eval
     table, and the output is contaminated-sentences-sized ≪ corpus."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
     if grams is None:
         grams = eval_ngrams(evals, n, text_col)
-    sents = (
-        ensure_min_parallelism(docs)
-        .select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.posexplode(F.split(F.col(text_col), "[.] ")).alias("pos", "sent"),
-        )
-        .select("doc_id", "pos", F.split("sent", " ").alias("ws"))
-        .where(F.expr(f"size(ws) >= {n}"))
+    sents = split_words(
+        docs, text_col, keep=(DOC_ID,), min_words=n, segments="[.] "
     )
     sg = sents.select(
         "doc_id", "pos", F.explode(F.expr(_ngram_expr(n))).alias("gram")
@@ -728,11 +755,29 @@ def remove_boilerplate(
 # exactly like the shingle df_cap.
 
 
-def _window_hash_expr(width: int) -> str:
-    # md5 over the space-joined window; split once into `ws`
-    return (
+def _window_hashes(df: DataFrame, width: int, text_col: str) -> DataFrame:
+    """(doc_id, pos, wh): the md5 of every ``width``-word window, at
+    0-based word offset ``pos``; documents under ``width`` words have
+    none."""
+    ws = split_words(df, text_col, keep=("doc_id",), min_words=width)
+    wins = F.expr(
         f"transform(sequence(1, size(ws) - {width - 1}), "
         f"j -> struct(j - 1 AS pos, md5(concat_ws(' ', slice(ws, j, {width}))) AS wh))"
+    )
+    return ws.select("doc_id", F.explode(wins).alias("w")).select(
+        "doc_id", F.col("w.pos").alias("pos"), F.col("w.wh").alias("wh")
+    )
+
+
+def _repeated(wins: DataFrame, df_cap: int) -> DataFrame:
+    # the cross-document repeat aggregate over a _window_hashes table
+    return (
+        wins.groupBy("wh")
+        .agg(
+            F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
+            F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
+        )
+        .where((F.col("n_docs") >= 2) & (F.col("n_occurrences") <= df_cap))
     )
 
 
@@ -745,24 +790,7 @@ def repeated_windows(
     total are dropped — the boilerplate guard, applied as a HAVING on
     the same aggregate (no extra shuffle), mirroring the shingle
     df_cap convention."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    ws = (
-        ensure_min_parallelism(df)
-        .select("doc_id", F.split(F.col(text_col), " ").alias("ws"))
-        .where(F.expr(f"size(ws) >= {width}"))
-    )
-    wins = ws.select(
-        "doc_id", F.explode(F.expr(_window_hash_expr(width))).alias("w")
-    ).select("doc_id", F.col("w.pos").alias("pos"), F.col("w.wh").alias("wh"))
-    return (
-        wins.groupBy("wh")
-        .agg(
-            F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
-            F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
-        )
-        .where((F.col("n_docs") >= 2) & (F.col("n_occurrences") <= df_cap))
-    )
+    return _repeated(_window_hashes(df, width, text_col), df_cap)
 
 
 def repeated_spans(
@@ -776,22 +804,13 @@ def repeated_spans(
 
     The join back is digest-keyed: the repeated set is typically a
     tiny fraction of all windows, so AQE broadcasts it at runtime."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    rep = repeated_windows(df, width, text_col, df_cap).select("wh")
-    ws = (
-        ensure_min_parallelism(df)
-        .select("doc_id", F.split(F.col(text_col), " ").alias("ws"))
-        .where(F.expr(f"size(ws) >= {width}"))
-    )
-    wins = ws.select(
-        "doc_id", F.explode(F.expr(_window_hash_expr(width))).alias("w")
-    ).select(
+    wins = _window_hashes(df, width, text_col)
+    rep = _repeated(wins, df_cap).select("wh")
+    return wins.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("w.pos").cast("bigint").alias("pos"),
-        F.col("w.wh").alias("wh"),
-    )
-    return wins.join(rep, "wh").select("doc_id", "pos", "wh")
+        F.col("pos").cast("bigint").alias("pos"),
+        "wh",
+    ).join(rep, "wh").select("doc_id", "pos", "wh")
 
 
 def stratified_sample(
@@ -835,17 +854,7 @@ def repeated_window_stats(
     repeats, and how much repeat mass the ``df_cap`` HAVING guard
     silently removed from the report (same monitoring convention as
     ``lsh_bucket_stats`` / ``shingle_df_stats``)."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    ws = (
-        ensure_min_parallelism(df)
-        .select("doc_id", F.split(F.col(text_col), " ").alias("ws"))
-        .where(F.expr(f"size(ws) >= {width}"))
-    )
-    wins = ws.select(
-        "doc_id", F.explode(F.expr(_window_hash_expr(width))).alias("w")
-    ).select("doc_id", F.col("w.wh").alias("wh"))
-    per = wins.groupBy("wh").agg(
+    per = _window_hashes(df, width, text_col).groupBy("wh").agg(
         F.countDistinct("doc_id").alias("nd"), F.count(F.lit(1)).alias("no")
     )
     rep = (F.col("nd") >= 2).cast("int")
@@ -860,21 +869,21 @@ def repeated_window_stats(
     )
 
 
+def _most_frequent(rows: DataFrame, key: str, k: int) -> DataFrame:
+    """(key, n): the ``k`` most frequent values of ``key`` in ``rows``,
+    ties broken by value — the shared top-k of :func:`vocab_topk` and
+    :func:`bigram_lm`."""
+    counts = rows.groupBy(key).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    return counts.orderBy(F.desc("n"), key).limit(k)
+
+
 def vocab_topk(df: DataFrame, vocab_size: int = 1000, text_col: str = "text") -> DataFrame:
     """Global top-``vocab_size`` vocabulary by corpus frequency:
     (word, n).  Ties break lexicographically so the vocabulary is
     deterministic.  One explode + one keyed agg (map-side combined) +
     a single top-k sort over the AGGREGATED word table (vocabulary-
     sized, not corpus-sized)."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    counts = (
-        ensure_min_parallelism(df)
-        .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    return counts.orderBy(F.desc("n"), "word").limit(vocab_size)
+    return _most_frequent(split_words(df, text_col, explode=True), "word", vocab_size)
 
 
 def oov_stats(df: DataFrame, vocab_size: int = 1000, text_col: str = "text") -> DataFrame:
@@ -889,16 +898,10 @@ def oov_stats(df: DataFrame, vocab_size: int = 1000, text_col: str = "text") -> 
     → broadcast; the corpus side is one explode + broadcast left join
     + one doc-keyed agg (map-side combined).  The corpus is never
     shuffled on a word key."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    vocab = vocab_topk(df, vocab_size, text_col).select("word")
-    # the corpus-side explode needs the same under-parallel-input
-    # guard as the vocab build — a one-row-group scan otherwise runs
-    # the whole per-word pass in a single task
-    toks = ensure_min_parallelism(df).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("word"),
-    )
+    # one token stream feeds both the vocabulary build and the
+    # per-document counts
+    toks = split_words(df, text_col, keep=(DOC_ID,), explode=True)
+    vocab = _most_frequent(toks, "word", vocab_size).select("word")
     return (
         toks.join(F.broadcast(vocab.withColumn("iv", F.lit(1))), "word", "left")
         .groupBy("doc_id")
@@ -931,17 +934,10 @@ def bigram_lm(df: DataFrame, lm_size: int = 4096, text_col: str = "text") -> Dat
     deterministic.  Same shape as :func:`vocab_topk`: one explode, one
     map-side-combined keyed agg, one top-k over the AGGREGATED bigram
     table (model-sized, not corpus-sized)."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    counts = (
-        ensure_min_parallelism(df)
-        .select(F.split(F.col(text_col), " ").alias("ws"))
-        .where(F.expr("size(ws) >= 2"))
-        .select(F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    bigrams = split_words(df, text_col, min_words=2).select(
+        F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram")
     )
-    return counts.orderBy(F.desc("n"), "bigram").limit(lm_size)
+    return _most_frequent(bigrams, "bigram", lm_size)
 
 
 def lm_coverage(
@@ -967,22 +963,13 @@ def lm_coverage(
     broadcast left join; the corpus side is one explode + one
     doc-keyed agg (map-side combined) and is never shuffled on a
     bigram key."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    if lm is None:
-        lm = bigram_lm(df, lm_size, text_col)
-    # corpus-side explode guarded like the model build's: without it
-    # the whole bigram → broadcast-probe → doc-agg pass pinned to one
-    # task on a one-row-group scan (the driver-measured 2.98 s at sf1
-    # was this single task)
-    bg = (
-        ensure_min_parallelism(df).select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.split(F.col(text_col), " ").alias("ws"),
-        )
-        .where(F.expr("size(ws) >= 2"))
-        .select("doc_id", F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram"))
+    # one bigram stream feeds both the default model build and the
+    # per-document coverage
+    bg = split_words(df, text_col, keep=(DOC_ID,), min_words=2).select(
+        "doc_id", F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram")
     )
+    if lm is None:
+        lm = _most_frequent(bg, "bigram", lm_size)
     return (
         bg.join(F.broadcast(lm), "bigram", "left")
         .groupBy("doc_id")
@@ -1040,7 +1027,7 @@ def mixture_rates(
     tok = (
         df.groupBy(F.col(source_col).alias("source"))
         .agg(
-            F.sum(F.expr(f"size(split({text_col}, ' '))"))
+            F.sum(F.expr(f"size({words_sql(text_col)})"))
             .cast("bigint")
             .alias("n_tokens")
         )
@@ -1152,7 +1139,7 @@ def corpus_report(
     )
     proj = df.selectExpr(
         f"md5({text_col}) AS fp",
-        f"CAST(size(split({text_col}, ' ')) AS BIGINT) AS n_toks",
+        f"CAST(size({words_sql(text_col)}) AS BIGINT) AS n_toks",
         f"CAST(length({text_col}) AS BIGINT) AS nc",
         f"CAST(CASE WHEN {fail} THEN 0 ELSE 1 END AS BIGINT) AS ok",
         f"{_lang_case(text_col)} AS lang",
@@ -1212,11 +1199,8 @@ def vocab_drift(
     stages); everything downstream operates on the ≤ 2·vocab_size
     union vocabulary with 1-row total tables broadcast."""
     def _counts(df):
-        from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
         return (
-            ensure_min_parallelism(df)
-            .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+            split_words(df, text_col, explode=True)
             .groupBy("word")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
@@ -1285,12 +1269,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFr
     corpus; the tf⋈df join shuffles on the word key with both sides
     already aggregate-sized; top-k is a doc-partitioned window over
     k·docs candidate rows, never a global sort."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
-    toks = ensure_min_parallelism(df).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("word"),
-    )
+    toks = split_words(df, text_col, keep=(DOC_ID,), explode=True)
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
@@ -1359,7 +1338,7 @@ def classifier_score_sql(text_col: str = "text", n_buckets: int = 256) -> str:
     warr = "array(" + ",".join(f"{x}L" for x in w) + ")"
     u32 = "CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT)"
     return (
-        f"aggregate(split({text_col}, ' '), 0L, "
+        f"aggregate({words_sql(text_col)}, 0L, "
         f"(acc, t) -> acc + element_at({warr}, CAST({u32} % {n_buckets} AS INT) + 1))"
     )
 
@@ -1383,7 +1362,7 @@ def quality_classifier(
     score = classifier_score_sql(text_col, n_buckets)
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        f"CAST(size(split({text_col}, ' ')) AS BIGINT) AS n_tokens",
+        f"CAST(size({words_sql(text_col)}) AS BIGINT) AS n_tokens",
         f"{score} AS score",
     ).selectExpr("doc_id", "n_tokens", "score", "score > 0 AS label")
 
@@ -1398,11 +1377,8 @@ def word_freq_histogram(df: DataFrame, text_col: str = "text") -> DataFrame:
     first collapses the token stream to |vocab| rows, the second
     collapses vocab to |distinct freqs| rows; no row ever carries text
     past the first exchange."""
-    from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
-
     counts = (
-        ensure_min_parallelism(df)
-        .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        split_words(df, text_col, explode=True)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )

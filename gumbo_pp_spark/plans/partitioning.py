@@ -15,14 +15,20 @@ Both compute a small driver-side plan (heavy keys / bin map are tiny
 relative to the corpus) and apply it with one shuffle.
 
 Input parallelism is decided once, where the data is read
-(``sources.pages.read_pages``, ``sources.pages.load_documents``): the
-readers call :func:`ensure_min_parallelism`, and so do the operators
-that explode rows in the JVM (per-word explodes, cross joins,
-per-row regexp passes).  The per-document Python map operators
-(``run_program``, ``extract_main_text``, ``explode_nodes``,
-``sniff_and_transcode``, ``extract_pdf_text``, the multimodal
-kernels) do not call it: they run one task per input partition and
-add no exchange.
+(``sources.pages.read_pages``, ``sources.pages.load_documents``,
+``operators.multimodal.synth_media``), and at a few JVM operator
+entries whose per-row work is heavy: the word tokenizer
+``operators.textstats.split_words`` (every per-word, n-gram, window
+and shingle operator of ``textstats``, ``dedup`` and ``sketches``
+takes its words from it), the vector-search entry
+``operators.similarity._corpus_side``, and two per-row passes over
+SQL forms the oracles mirror (``textstats.host_quality_stats``,
+``dedup.simhash``).  Those are the only callers of
+:func:`ensure_min_parallelism`; ``tests/test_physical_plans.py`` pins
+the set.  The per-document Python map operators (``run_program``,
+``extract_main_text``, ``explode_nodes``, ``sniff_and_transcode``,
+``extract_pdf_text``, the multimodal kernels) do not call it: they
+run one task per input partition and add no exchange.
 """
 
 from __future__ import annotations
@@ -155,9 +161,14 @@ def ensure_min_parallelism(df: DataFrame, waves: int = 2) -> DataFrame:
 
     Call this with scan-stage inputs (the partition-count probe builds
     the physical RDD; on a map-only plan that runs no jobs), and only
-    in two places: in a reader, and in front of an operator that
-    explodes rows in the JVM.  Map operators do not call it — their
-    input parallelism is the reader's decision.
+    from the sites the module docstring lists: the readers
+    (``read_pages``, ``load_documents``, ``synth_media``), the word
+    tokenizer ``textstats.split_words``, the vector-search entry
+    ``similarity._corpus_side``, and the per-row passes
+    ``textstats.host_quality_stats`` and ``dedup.simhash``, whose SQL
+    forms split the text themselves.  A new JVM operator that explodes
+    words takes them from ``split_words``; map operators do not spread
+    at all — their input parallelism is the reader's decision.
     """
     if df.isStreaming:
         # streaming plans cannot be probed via .rdd (and micro-batch

@@ -71,13 +71,12 @@ def stream_contamination_alerts(
     watermark, no streaming state, each micro-batch is independent.
     (The clean-stream variant runs the batch anti-join per micro-batch
     via ``foreachBatch`` — see :func:`stream_decontaminate`.)"""
-    from ..operators.textstats import _ngram_expr, eval_ngrams
+    from ..operators.textstats import _ngram_expr, eval_ngrams, split_words
 
     grams = eval_ngrams(evals, n, text_col)  # static side, broadcast
     docs = spark.readStream.schema(schema).parquet(input_dir)
-    ws = docs.withColumn("ws", F.split(F.col(text_col), " "))
     return (
-        ws.where(F.expr(f"size(ws) >= {n}"))
+        split_words(docs, text_col, keep=("doc_id",), min_words=n)
         .select("doc_id", F.explode(F.expr(_ngram_expr(n))).alias("gram"))
         .join(F.broadcast(grams), "gram")
         .select("doc_id", "gram")

@@ -34,13 +34,14 @@ from . import matchers as m
 # ----------------------------------------------------------------------
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT spread here: the textstats/dedup/sketches consumers are
-    # JVM-expression queries, and the ones that explode rows
-    # (per-word and shingle explodes, per-row regexp passes) apply
-    # ensure_min_parallelism themselves; an unconditional exchange
-    # would tax the cheap map-only queries (lang_id, quality_stats,
-    # classifier) with a shuffle they never need.  The page-synthesis
-    # families, which feed the per-document Python operators (no guard
-    # of their own), spread at sources.pages.load_documents instead.
+    # JVM-expression queries.  The ones that explode words take them
+    # from textstats.split_words, which spreads an under-parallel scan;
+    # the per-row passes host_quality_stats and simhash spread their
+    # own input.  An unconditional exchange would tax the cheap
+    # map-only queries (lang_id, quality_stats, classifier) with a
+    # shuffle they never need.  The page-synthesis families, which
+    # feed the per-document Python operators (no guard of their own),
+    # spread at sources.pages.load_documents instead.
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
@@ -48,7 +49,7 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# DuckDB word-3-gram shingles CTE (mirrors dedup.SHINGLE_EXPR)
+# DuckDB word-3-gram shingles CTE (mirrors dedup.shingles)
 _DUCK_SHINGLES = (
     "sh AS (SELECT doc_id, unnest(list_distinct(list_transform("
     "generate_series(1, len(string_split(text, ' ')) - 2), "

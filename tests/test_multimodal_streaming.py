@@ -70,6 +70,25 @@ class TestMultimodal:
             plan = stage(media)._jdf.queryExecution().executedPlan().toString()
             assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
+    @pytest.mark.parametrize("stage, kind", [
+        (image_features, "image"), (resize_images, "image"),
+        (sample_frames, "video"), (audio_features, "audio"),
+    ])
+    def test_null_payload_is_empty_payload(self, spark, stage, kind):
+        # a NULL payload row decodes as b"" among valid rows instead of
+        # aborting the task
+        rows = [(1, None), (2, bytearray(b"")), (3, bytearray(b"clip three"))]
+        media = spark.createDataFrame(
+            [(i, kind, p, 16, 16, 8000, 500, "fake") for i, p in rows],
+            "media_id bigint, kind string, payload binary, width int, "
+            "height int, sample_rate int, duration_ms int, codec string",
+        )
+        out = {}
+        for r in stage(media).collect():
+            out.setdefault(r.media_id, []).append(tuple(r)[1:])
+        assert sorted(out) == [1, 2, 3]
+        assert out[1] == out[2] != out[3]
+
 
 class TestStreaming:
     def test_stream_extract_matches_batch(self, spark, tmp_path):

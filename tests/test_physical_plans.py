@@ -5,6 +5,7 @@ pushed to the parquet scan, no stray shuffles in the map-only stage."""
 import pytest
 from pyspark.sql import functions as F
 
+from gumbo_pp_spark.operators import dedup as D, sketches as S, textstats as T
 from gumbo_pp_spark.operators.dedup import exact_dedup, minhash_signatures
 from gumbo_pp_spark.operators.encoding import sniff_and_transcode
 from gumbo_pp_spark.operators.extract import dom_stats, explode_nodes, extract_main_text
@@ -75,6 +76,21 @@ class TestPlans:
         out = extract_main_text(spark.read.parquet(path))
         line = [ln for ln in plan_of(out).splitlines() if "ReadSchema" in ln][0]
         assert "html" in line and "text" not in line and "lang" not in line
+
+    def test_pdf_readschema_pruned(self, spark, tmp_path):
+        from gumbo_pp_spark.sources.pdfs import synth_pdfs
+
+        path = str(tmp_path / "p.parquet")
+        synth_pdfs(spark, SF_SMOKE).selectExpr(
+            "pdf", "'extra' AS text", "url", "doc_id"
+        ).write.parquet(path)
+        out = extract_pdf_text(spark.read.parquet(path))
+        line = [ln for ln in plan_of(out).splitlines() if "ReadSchema" in ln][0]
+        schema = line.split("ReadSchema:")[1]
+        assert "pdf" in schema and "text" not in schema
+        # output fields follow the passthrough order, not the file's
+        assert out.columns == ["doc_id", "url", "text", "n_pages", "parse_ok"]
+        assert out.where("text LIKE 'Doc %'").count() == 500
 
     def test_cap_per_host_first_window_salted(self, spark, docs):
         # skew safety: phase-1 window must partition on (host, salt),
@@ -256,6 +272,128 @@ class TestMapOperatorsDoNotSpread:
         plan = plan_of(out)
         assert "Exchange" not in plan, plan
         assert out.rdd.getNumPartitions() == 1
+
+
+# the per-word, n-gram, window and shingle operators: name -> (build,
+# number of input frames it tokenizes)
+_WORD_OPERATORS = {
+    "repetition_stats": (lambda d: T.repetition_stats(d), 1),
+    "paragraph_chunks": (lambda d: T.paragraph_chunks(d), 1),
+    "contamination": (lambda d: T.contamination(d, d, n=3), 1),
+    "sentence_contamination": (lambda d: T.sentence_contamination(d, d, n=3), 1),
+    "repeated_windows": (lambda d: T.repeated_windows(d, width=3), 1),
+    "repeated_spans": (lambda d: T.repeated_spans(d, width=3), 1),
+    "repeated_window_stats": (lambda d: T.repeated_window_stats(d, width=3), 1),
+    "vocab_topk": (lambda d: T.vocab_topk(d, 4), 1),
+    "oov_stats": (lambda d: T.oov_stats(d, 4), 1),
+    "bigram_lm": (lambda d: T.bigram_lm(d, 4), 1),
+    "lm_coverage": (lambda d: T.lm_coverage(d, lm_size=4), 1),
+    "vocab_drift": (lambda d: T.vocab_drift(d, d.where("doc_id % 2 = 0"), 4), 2),
+    "tfidf_top_terms": (lambda d: T.tfidf_top_terms(d), 1),
+    "word_freq_histogram": (lambda d: T.word_freq_histogram(d), 1),
+    "shingles": (lambda d: D.shingles(d), 1),
+    "minhash_signatures": (lambda d: D.minhash_signatures(d), 1),
+    "cms_sketch": (lambda d: S.cms_sketch(d), 1),
+    "cms_heavy_hitters": (lambda d: S.cms_heavy_hitters(d, min_count=2), 1),
+    "kmv_distinct": (lambda d: S.kmv_distinct(d), 1),
+}
+
+
+class TestWordOperatorsSpreadOnce:
+    """The word operators take their words from
+    ``textstats.split_words``, the one place they spread an
+    under-parallel input: once per input frame, and never over an
+    already-parallel one."""
+
+    @staticmethod
+    def _spy(monkeypatch, passthrough=False):
+        import sys
+
+        from gumbo_pp_spark.plans import partitioning as P
+
+        callers = []
+        real = P.ensure_min_parallelism
+
+        def spy(df, *args, **kwargs):
+            callers.append(sys._getframe(1).f_code.co_name)
+            return df if passthrough else real(df, *args, **kwargs)
+
+        monkeypatch.setattr(P, "ensure_min_parallelism", spy)
+        return callers
+
+    @staticmethod
+    def _docs(spark, n_partitions):
+        return spark.range(0, 32, 1, n_partitions).selectExpr(
+            "id AS doc_id",
+            "concat_ws(' ', transform(sequence(1, 8 + CAST(id % 5 AS INT)),"
+            " i -> concat('w', CAST((i * id) % 7 AS STRING)))) AS text",
+        )
+
+    @pytest.mark.parametrize("name", sorted(_WORD_OPERATORS))
+    def test_guard_called_once_through_tokenizer(self, spark, monkeypatch, name):
+        build, n_inputs = _WORD_OPERATORS[name]
+        callers = self._spy(monkeypatch)
+        build(self._docs(spark, 4).coalesce(1))
+        assert callers == ["split_words"] * n_inputs
+
+    @pytest.mark.parametrize("name", sorted(_WORD_OPERATORS))
+    def test_parallel_input_gets_no_extra_exchange(self, spark, monkeypatch, name):
+        build, _ = _WORD_OPERATORS[name]
+        wide = self._docs(spark, 2 * spark.sparkContext.defaultParallelism)
+        plan = plan_of(build(wide))
+        assert "RoundRobinPartitioning" not in plan, plan
+        self._spy(monkeypatch, passthrough=True)
+        assert plan.count("Exchange") == plan_of(build(wide)).count("Exchange")
+
+
+# every ensure_min_parallelism call site in the package and the jobs,
+# as (module path, enclosing function): the readers, the word
+# tokenizer, the vector-search entry, and the per-row passes the guard's
+# docstring names
+_GUARD_SITES = {
+    ("gumbo_pp_spark/sources/pages.py", "read_pages"),
+    ("gumbo_pp_spark/sources/pages.py", "load_documents"),
+    ("gumbo_pp_spark/operators/multimodal.py", "synth_media"),
+    ("gumbo_pp_spark/operators/textstats.py", "split_words"),
+    ("gumbo_pp_spark/operators/similarity.py", "_corpus_side"),
+    ("gumbo_pp_spark/operators/textstats.py", "host_quality_stats"),
+    ("gumbo_pp_spark/operators/dedup.py", "simhash"),
+}
+
+
+def test_guard_call_sites_are_pinned():
+    import ast
+    from pathlib import Path
+
+    from gumbo_pp_spark.plans import partitioning as P
+
+    class Sites(ast.NodeVisitor):
+        fn = "<module>"
+
+        def __init__(self, path):
+            self.path, self.found = path, []
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            f = node.func
+            if getattr(f, "id", getattr(f, "attr", None)) == "ensure_min_parallelism":
+                self.found.append((self.path, self.fn))
+            self.generic_visit(node)
+
+    root = Path(__file__).resolve().parents[1]
+    sites = []
+    for path in [*root.joinpath("gumbo_pp_spark").rglob("*.py"),
+                 *root.joinpath("jobs").rglob("*.py")]:
+        v = Sites(path.relative_to(root).as_posix())
+        v.visit(ast.parse(path.read_text(), str(path)))
+        sites += v.found
+    assert sorted(sites) == sorted(_GUARD_SITES), sorted(sites)
+    for _path, fn in _GUARD_SITES:
+        assert fn in P.ensure_min_parallelism.__doc__, fn
 
 
 def test_revenue_by_nation_broadcasts_all_dims(spark):
