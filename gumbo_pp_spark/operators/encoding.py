@@ -19,11 +19,10 @@ Arrow-batched, not row-at-a-time SQL avoidance.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 from pyspark.sql import DataFrame
 
 from ..parser.encoding import to_utf8
+from ..plans.arrowmap import map_rows
 
 ENC_FIELDS = "html binary, encoding string, enc_src string"
 
@@ -38,42 +37,12 @@ def sniff_and_transcode(
     sniffed WHATWG name) and ``enc_src`` (``bom | transport | meta |
     default``).  ``transport_col`` optionally names a column carrying
     the HTTP Content-Type charset label (the transport layer of the
-    precedence order)."""
-    import pyarrow as pa
+    precedence order).  The output column is named ``html`` whatever
+    ``html_col`` is.  A NULL ``html_col`` is sniffed as the empty page
+    ``b""``."""
 
-    schema_parts = [
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in passthrough
-    ]
-    out_schema = ", ".join([*schema_parts, ENC_FIELDS])
-    cols = [*passthrough, html_col] + ([transport_col] if transport_col else [])
+    def row(raw, label=None):
+        return [to_utf8(b"" if raw is None else bytes(raw), label)]
 
-    def fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            raw = batch.column(html_col)
-            labels = (
-                batch.column(transport_col).to_pylist()
-                if transport_col
-                else [None] * batch.num_rows
-            )
-            utf8: list[bytes] = []
-            encs: list[str] = []
-            srcs: list[str] = []
-            for blob, label in zip(raw, labels):
-                data = blob.as_py() or b""
-                u, e, s = to_utf8(data, label)
-                utf8.append(u)
-                encs.append(e)
-                srcs.append(s)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    *(batch.column(c) for c in passthrough),
-                    pa.array(utf8, pa.binary()),
-                    pa.array(encs, pa.string()),
-                    pa.array(srcs, pa.string()),
-                ],
-                [*passthrough, html_col, "encoding", "enc_src"],
-            )
-
-    return df.select(*cols).mapInArrow(fn, out_schema)
+    inputs = (html_col, transport_col) if transport_col else (html_col,)
+    return map_rows(df, inputs, ENC_FIELDS, row, passthrough)

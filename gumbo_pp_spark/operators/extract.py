@@ -26,10 +26,12 @@ from typing import Callable, Iterator
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..nodetable import CDATA, ELEMENT, TEXT, WHITESPACE, NodeTable
 from ..parser.html5 import parse_html
 from ..parser.tags import TAG_IDS
+from ..plans.arrowmap import map_rows, passthrough_ddl, row_values
 
 # Boilerplate chrome subtrees dropped by the flagship main-content
 # program — all tags are in the reference vocabulary
@@ -68,16 +70,16 @@ def run_program(
     out_fields: str,
     passthrough: tuple[str, ...] = ("doc_id", "url"),
     html_col: str = "html",
-    parse_options: dict | None = None,
 ) -> DataFrame:
     """Run ``program`` over every page.  ``program(nt) -> dict`` of the
     columns declared in ``out_fields`` (DDL fragment).  Passthrough
     columns are carried unchanged; the input projection is pruned to
-    passthrough + html so parquet scans read only what is needed.
-    ``parse_options`` is the GumboOptions analogue broadcast to every
-    executor parse (fragment context/namespace, max_errors — see
-    :func:`gumbo_pp_spark.parser.html5.parse_html`).  A NULL html is
-    parsed as the empty document ``b""``.
+    passthrough + html so parquet scans read only what is needed.  A
+    NULL html is parsed as the empty document ``b""``.
+
+    One :func:`~gumbo_pp_spark.plans.arrowmap.map_rows` stage: the
+    html column reaches the parse as zero-copy memoryview slices of the
+    Arrow buffer, and the passthrough columns stay Arrow arrays.
 
     Parallelism contract: the stage runs one task per partition of
     ``df`` and adds no exchange.  A narrow input — one row group, one
@@ -85,75 +87,13 @@ def run_program(
     (:func:`~gumbo_pp_spark.sources.pages.read_pages`,
     :func:`~gumbo_pp_spark.sources.pages.load_documents`).
     """
-    schema = ", ".join(
-        [*(f"{c} {t}" for c, t in _passthrough_types(df, passthrough)), out_fields]
-    )
-    # real DDL parse (a naive ', ' split breaks on nested struct/decimal
-    # types like 'array<struct<a: int, b: int>>')
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructType
+    names = StructType.fromDDL(out_fields).fieldNames()
 
-    out_struct = StructType.fromDDL(out_fields)
-    out_names = out_struct.fieldNames()
-    # explicit Arrow types per output column: pa.array inference would
-    # e.g. build int64 for an `int` (int32) field and fail the
-    # mapInArrow schema check
-    out_pa_types = [to_arrow_type(f.dataType) for f in out_struct.fields]
-    n_pt = len(passthrough)
+    def row(raw):
+        res = program(parse_html(b"" if raw is None else raw))
+        return [tuple(res[c] for c in names)]
 
-    # ROUND-8: mapInArrow instead of mapInPandas (guide §4.1/§4.2).
-    # The pandas path copied every html payload into a per-row bytes
-    # object during Arrow→pandas conversion and round-tripped the
-    # passthrough columns through Python lists; here the html column
-    # is iterated as zero-copy memoryview slices of the Arrow buffer
-    # (_iter_html) and the passthrough columns pass through as
-    # untouched Arrow arrays.
-    def fn(batches) -> "Iterator":
-        import pyarrow as pa
-
-        names = [*passthrough, *out_names]
-        for rb in batches:
-            outs: list[list] = [[] for _ in out_names]
-            for raw in _iter_html(rb.column(n_pt)):
-                res = program(parse_html(raw, parse_options))
-                for j, c in enumerate(out_names):
-                    outs[j].append(res[c])
-            cols = [rb.column(i) for i in range(n_pt)]
-            cols += [
-                pa.array(vals, type=t) for vals, t in zip(outs, out_pa_types)
-            ]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
-
-    return df.select(*passthrough, html_col).mapInArrow(fn, schema)
-
-
-def _passthrough_types(df: DataFrame, passthrough) -> list[tuple[str, str]]:
-    lut = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    return [(c, lut[c]) for c in passthrough]
-
-
-def _iter_html(arr):
-    """Zero-copy iteration over a null-free binary Arrow column:
-    yields memoryview slices of the data buffer — parse_html decodes
-    straight from them (``str(buffer, ...)``), so the per-doc html
-    bytes are never copied into Python objects.  Falls back to
-    ``as_py()`` for nullable/unusual layouts, where a NULL row yields
-    ``b""``: NULL is parsed as the empty document."""
-    import pyarrow as pa
-
-    if len(arr) == 0:
-        return ()
-    if arr.null_count == 0 and (
-        pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type)
-    ):
-        dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-        bufs = arr.buffers()
-        off = np.frombuffer(
-            bufs[1], dt, len(arr) + 1, arr.offset * np.dtype(dt).itemsize
-        )
-        data = memoryview(bufs[2])
-        return (data[off[k]: off[k + 1]] for k in range(len(arr)))
-    return (v.as_py() if v.is_valid else b"" for v in arr)
+    return map_rows(df, (html_col,), out_fields, row, passthrough)
 
 
 # ----------------------------------------------------------------------
@@ -384,8 +324,7 @@ def main_text_ddl(df: DataFrame, passthrough, stage_metrics: bool = False) -> st
     ``passthrough`` columns with their ``df`` types, then
     :data:`MAIN_TEXT_FIELDS`, then with ``stage_metrics`` the
     ``parse_us``/``kernel_us``/``c_engine`` columns."""
-    schema = ", ".join([*(f"{c} {t}" for c, t in _passthrough_types(df, passthrough)),
-                        MAIN_TEXT_FIELDS])
+    schema = passthrough_ddl(df, passthrough, MAIN_TEXT_FIELDS)
     if stage_metrics:
         schema += ", parse_us bigint, kernel_us bigint, c_engine tinyint"
     return schema
@@ -533,8 +472,6 @@ def explode_nodes(df: DataFrame, passthrough: tuple[str, ...] = ("doc_id",)) -> 
     """
     import pyarrow as pa
 
-    pt_types = _passthrough_types(df, passthrough)
-    schema = ", ".join([*(f"{c} {t}" for c, t in pt_types), NODES_FIELDS])
     n_pt = len(passthrough)
 
     def fn(batches):
@@ -544,8 +481,8 @@ def explode_nodes(df: DataFrame, passthrough: tuple[str, ...] = ("doc_id",)) -> 
             node_id, parent_id, subtree_end, ntype = [], [], [], []
             tag, ns, attrs, text, iwp, s0, s1 = [], [], [], [], [], [], []
             b0, b1 = [], []
-            for row, raw in enumerate(_iter_html(htmls)):
-                nt = parse_html(raw)
+            for row, raw in enumerate(row_values(htmls)):
+                nt = parse_html(b"" if raw is None else raw)
                 counts[row] = nt.n
                 b0.append(nt.byte_offsets(nt.src_start))
                 b1.append(nt.byte_offsets(nt.src_end))
@@ -580,12 +517,13 @@ def explode_nodes(df: DataFrame, passthrough: tuple[str, ...] = ("doc_id",)) -> 
                 pa.array(np.concatenate(b0) if b0 else np.array([], np.int64)),
                 pa.array(np.concatenate(b1) if b1 else np.array([], np.int64)),
             ]
-            names = [*(c for c, _ in pt_types), "node_id", "parent_id", "subtree_end",
+            names = [*passthrough, "node_id", "parent_id", "subtree_end",
                      "node_type", "tag", "ns", "attrs", "text", "index_within_parent",
                      "src_start", "src_end", "src_start_byte", "src_end_byte"]
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return df.select(*passthrough, "html").mapInArrow(fn, schema)
+    return df.select(*passthrough, "html").mapInArrow(
+        fn, passthrough_ddl(df, passthrough, NODES_FIELDS))
 
 
 DOM_STATS_FIELDS = (

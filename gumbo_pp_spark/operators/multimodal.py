@@ -21,6 +21,8 @@ import hashlib
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.arrowmap import map_rows
+
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, "
     "width int, height int, sample_rate int, duration_ms int, codec string"
@@ -75,39 +77,33 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _map_rows(df: DataFrame, in_cols: tuple[str, ...], out_ddl: str, row_fn) -> DataFrame:
-    """Arrow-batched per-row kernel stage: ``row_fn(*values)`` returns
-    the output rows (tuples in ``out_ddl`` order; several for a 1→N
-    explosion) of one input row.  Output columns are built with
-    explicit Arrow types, as ``extract.run_program`` does.  One task per
-    input partition: :func:`synth_media` spreads the one-row-group
+def _media_map(df: DataFrame, kind: str, meta: tuple[str, ...], out_ddl: str, kernel,
+               null_meta: list[tuple]) -> DataFrame:
+    """One :func:`~gumbo_pp_spark.plans.arrowmap.map_rows` stage over
+    the ``kind`` rows of ``df``: ``kernel(payload, *meta)`` returns the
+    output tuples (after ``media_id``) of one media object.  One task
+    per input partition: :func:`synth_media` spreads the one-row-group
     documents scan where it reads it.
 
-    NULL contract: a NULL ``payload`` is decoded as the empty payload
-    ``b""`` (as ``extract_main_text`` parses a NULL html as the empty
-    document), so the row yields the outputs of an empty media object
-    instead of aborting the task."""
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructType
+    NULL contract:
 
-    out = StructType.fromDDL(out_ddl)
-    names = out.fieldNames()
-    types = [to_arrow_type(f.dataType) for f in out.fields]
-    pay = in_cols.index("payload")
+    * a NULL ``payload`` is decoded as the empty payload ``b""`` (as
+      ``extract_main_text`` parses a NULL html as the empty document),
+      so the row yields the outputs of an empty media object;
+    * a NULL in any ``meta`` column (the decode size) yields
+      ``null_meta`` instead of running the kernel: the 1→1 kernels
+      emit the row with NULL feature columns, :func:`sample_frames`
+      emits no frames.
 
-    def fn(batches):
-        import pyarrow as pa
+    Neither aborts the task."""
 
-        for rb in batches:
-            vals = [rb.column(c).to_pylist() for c in in_cols]
-            vals[pay] = [b"" if v is None else v for v in vals[pay]]
-            rows = [r for row in zip(*vals) for r in row_fn(*row)]
-            cols = list(zip(*rows)) if rows else [()] * len(names)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, t) for c, t in zip(cols, types)], names=names
-            )
+    def row(payload, *vals):
+        if None in vals:
+            return null_meta
+        return kernel(b"" if payload is None else payload, *vals)
 
-    return df.select(*in_cols).mapInArrow(fn, out_ddl)
+    return map_rows(df.where(f"kind = '{kind}'"), ("payload", *meta), out_ddl, row,
+                    ("media_id",))
 
 
 def image_features(df: DataFrame) -> DataFrame:
@@ -120,7 +116,7 @@ def image_features(df: DataFrame) -> DataFrame:
     s31/s32 are the two middle values of the sorted grid (the median×2
     — avoids float division).  Bit 63 kept clear for signed int64."""
 
-    def row(mid, payload, w, h):
+    def row(payload, w, h):
         img = decode_image(payload, w, h).astype(np.int64)
         sums = img.reshape(-1, 3).sum(axis=0).tolist()
         # equal 8x8 blocks (w, h are multiples of 8 by contract)
@@ -129,12 +125,12 @@ def image_features(df: DataFrame) -> DataFrame:
         med2 = int(srt[31]) + int(srt[32])
         bits = (2 * grid > med2).astype(np.uint64)
         phash = int((bits[:63] << np.arange(63, dtype=np.uint64)).sum())
-        return [(mid, *sums, w * h, phash)]
+        return [(*sums, w * h, phash)]
 
-    return _map_rows(
-        df.where("kind = 'image'"), ("media_id", "payload", "width", "height"),
-        "media_id bigint, sum_r bigint, sum_g bigint, sum_b bigint, n_px bigint, phash bigint",
-        row,
+    return _media_map(
+        df, "image", ("width", "height"),
+        "sum_r bigint, sum_g bigint, sum_b bigint, n_px bigint, phash bigint", row,
+        [(None,) * 5],
     )
 
 
@@ -142,47 +138,44 @@ def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
     """Block-mean resize; emits raw RGB bytes of the target size (the
     batch contract a real thumbnailer would use)."""
 
-    def row(mid, payload, w, h):
+    def row(payload, w, h):
         img = decode_image(payload, w, h).astype(np.float64)
         ys = np.array_split(np.arange(img.shape[0]), out_h)
         xs = np.array_split(np.arange(img.shape[1]), out_w)
         small = np.array(
             [[img[np.ix_(y, x)].mean(axis=(0, 1)) for x in xs] for y in ys]
         ).astype(np.uint8)
-        return [(mid, small.tobytes())]
+        return [(small.tobytes(),)]
 
-    return _map_rows(
-        df.where("kind = 'image'"), ("media_id", "payload", "width", "height"),
-        "media_id bigint, thumb binary", row,
-    )
+    return _media_map(df, "image", ("width", "height"), "thumb binary", row, [(None,)])
 
 
 def sample_frames(df: DataFrame, every_ms: int = 250) -> DataFrame:
     """Video frame sampling: 1→N row explosion inside the Arrow batch
     (each frame is a fake-decoded image keyed by (payload, ts))."""
 
-    def row(mid, payload, w, h, dur):
+    def row(payload, w, h, dur):
+        payload = bytes(payload)
         return [
-            (mid, i, ts, decode_image(payload + ts.to_bytes(4, "big"), w, h).tobytes())
+            (i, ts, decode_image(payload + ts.to_bytes(4, "big"), w, h).tobytes())
             for i, ts in enumerate(range(0, dur, every_ms))
         ]
 
-    return _map_rows(
-        df.where("kind = 'video'"),
-        ("media_id", "payload", "width", "height", "duration_ms"),
-        "media_id bigint, frame_idx int, ts_ms int, frame binary", row,
+    return _media_map(
+        df, "video", ("width", "height", "duration_ms"),
+        "frame_idx int, ts_ms int, frame binary", row, [],
     )
 
 
 def audio_features(df: DataFrame) -> DataFrame:
     """Per-clip RMS/zero-crossing stats over the fake PCM stream."""
 
-    def row(mid, payload, sr, dur):
+    def row(payload, sr, dur):
         pcm = decode_audio(payload, sr, dur)
-        return [(mid, float(np.sqrt((pcm ** 2).mean())),
+        return [(float(np.sqrt((pcm ** 2).mean())),
                  float((np.diff(np.signbit(pcm)) != 0).mean()))]
 
-    return _map_rows(
-        df.where("kind = 'audio'"), ("media_id", "payload", "sample_rate", "duration_ms"),
-        "media_id bigint, rms double, zcr double", row,
+    return _media_map(
+        df, "audio", ("sample_rate", "duration_ms"), "rms double, zcr double", row,
+        [(None, None)],
     )

@@ -24,6 +24,8 @@ import zlib
 
 from pyspark.sql import DataFrame
 
+from ..plans.arrowmap import map_rows
+
 _OBJ_START_RE = re.compile(rb"(\d+)\s+0\s+obj\b")
 _STREAM_RE = re.compile(rb"stream\r?\n")
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)\b")
@@ -242,31 +244,17 @@ def extract_pdf_text(
     one bad object in 10^12 must not kill a 4-hour job; the parse_ok
     column is the dirty-tail accounting (no silent drops).  The input
     projection is pruned to passthrough + ``pdf_col``, so a parquet
-    scan reads only those columns."""
-    from .extract import _passthrough_types
+    scan reads only those columns.
 
-    schema = ", ".join(
-        [*(f"{c} {t}" for c, t in _passthrough_types(df, passthrough)),
-         "text string, n_pages bigint, parse_ok boolean"]
-    )
+    NULL contract: a NULL ``pdf`` is an error record, like any other
+    input ``pdf_text_bytes`` cannot read."""
 
-    def run(batches):
-        import pyarrow as pa
+    def row(raw):
+        try:
+            # bytes(None) raises: a NULL pdf takes the error branch
+            return [(*pdf_text_bytes(bytes(raw)), True)]
+        except Exception:
+            return [("", 0, False)]
 
-        for batch in batches:
-            cols = {c: batch.column(c) for c in passthrough}
-            texts, npages, oks = [], [], []
-            for raw in batch.column(pdf_col):
-                try:
-                    t, np_ = pdf_text_bytes(raw.as_py())
-                    oks.append(True)
-                except Exception:
-                    t, np_ = "", 0
-                    oks.append(False)
-                texts.append(t)
-                npages.append(np_)
-            yield pa.RecordBatch.from_pydict(
-                {**cols, "text": texts, "n_pages": npages, "parse_ok": oks}
-            )
-
-    return df.select(*passthrough, pdf_col).mapInArrow(run, schema)
+    return map_rows(df, (pdf_col,), "text string, n_pages bigint, parse_ok boolean", row,
+                    passthrough)

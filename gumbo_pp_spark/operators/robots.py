@@ -13,9 +13,9 @@ rate is ~1).  Kernel in :mod:`gumbo_pp_spark.parser.robots`
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 from pyspark.sql import DataFrame, functions as F
+
+from ..plans.arrowmap import map_rows
 
 ROBOTS_HOST_COL = "__robots_host"
 ROBOTS_TXT_COL = "__robots_txt"
@@ -33,17 +33,9 @@ def robots_filter(
 
     ``robots`` carries one row per host (``host_col, txt_col``); hosts
     absent from it — and null/empty bodies — are implicit allow-all
-    per RFC 9309 §2.3.1.
+    per RFC 9309 §2.3.1.  A NULL url is checked as the empty path.
     """
-    import pyarrow as pa
-
     from ..parser.robots import parse_robots, url_path
-
-    in_fields = [
-        f"{f.name} {f.dataType.simpleString()}" for f in urls.schema.fields
-    ]
-    out_schema = ", ".join([*in_fields, "crawl_allowed boolean"])
-    in_names = [f.name for f in urls.schema.fields]
 
     j = urls.join(
         F.broadcast(
@@ -54,27 +46,17 @@ def robots_filter(
         ),
         F.expr(f"parse_url({url_col}, 'HOST')") == F.col(ROBOTS_HOST_COL),
         "left",
-    ).drop(ROBOTS_HOST_COL)
+    )
+    cache: dict[str, object] = {}
 
-    def fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cache: dict[str, object] = {}
-        for batch in batches:
-            txts = batch.column(ROBOTS_TXT_COL).to_pylist()
-            us = batch.column(url_col).to_pylist()
-            allowed = []
-            for u, t in zip(us, txts):
-                key = t or ""
-                rf = cache.get(key)
-                if rf is None:
-                    rf = cache[key] = parse_robots(key)
-                allowed.append(rf.allowed(agent, url_path(u or "")))
-            yield pa.RecordBatch.from_arrays(
-                [*(batch.column(c) for c in in_names),
-                 pa.array(allowed, pa.bool_())],
-                [*in_names, "crawl_allowed"],
-            )
+    def row(url, txt):
+        key = txt or ""
+        rf = cache.get(key)
+        if rf is None:
+            rf = cache[key] = parse_robots(key)
+        return [(rf.allowed(agent, url_path(url or "")),)]
 
-    return j.mapInArrow(fn, out_schema)
+    return map_rows(j, (url_col, ROBOTS_TXT_COL), "crawl_allowed boolean", row, urls.columns)
 
 
 def crawl_schedule(
@@ -94,41 +76,26 @@ def crawl_schedule(
     integer floor division (oracle-exact).  Scale shape: the input is
     the hosts-sized robots table — one Arrow map over it, no join, no
     shuffle; delays are plan constants downstream (broadcast the
-    result onto the frontier)."""
-    import pyarrow as pa
-
+    result onto the frontier).  The output column is named ``host``
+    whatever ``host_col`` is; a NULL robots.txt is the empty file."""
     from ..parser.robots import parse_robots
 
-    def fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            hosts = batch.column(host_col).to_pylist()
-            txts = batch.column(txt_col).to_pylist()
-            delays = []
-            for t in txts:
-                d = parse_robots(t or "").crawl_delay(agent)
-                delays.append(
-                    default_delay_ms if d is None else int(round(d * 1000))
-                )
-            # floor at 1 fetch per window: a Crawl-delay longer than
-            # the window (e.g. 120 s against the 60 s default — common
-            # in real robots.txt) would otherwise yield budget 0 and
-            # shard_frontier's `div fetch_budget` divides by zero
-            # (NULL windows in non-ANSI Spark, a runtime error under
-            # ANSI) — ADVICE r7
-            budgets = [
-                max(1, (window_sec * 1000) // d) if d > 0 else window_sec * 1000
-                for d in delays
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(hosts, pa.string()),
-                 pa.array(delays, pa.int64()),
-                 pa.array(budgets, pa.int64())],
-                ["host", "crawl_delay_ms", "fetch_budget"],
-            )
+    def row(txt):
+        d = parse_robots(txt or "").crawl_delay(agent)
+        delay = default_delay_ms if d is None else int(round(d * 1000))
+        # floor at 1 fetch per window: a Crawl-delay longer than the
+        # window (e.g. 120 s against the 60 s default — common in real
+        # robots.txt) would otherwise yield budget 0 and
+        # shard_frontier's `div fetch_budget` divides by zero (NULL
+        # windows in non-ANSI Spark, a runtime error under ANSI)
+        budget = max(1, (window_sec * 1000) // delay) if delay > 0 else window_sec * 1000
+        return [(delay, budget)]
 
-    return robots.select(
-        F.col(host_col).cast("string").alias(host_col), txt_col
-    ).mapInArrow(fn, "host string, crawl_delay_ms bigint, fetch_budget bigint")
+    hosts = robots.select(
+        F.col(host_col).cast("string").alias("host"), F.col(txt_col).alias(ROBOTS_TXT_COL)
+    )
+    return map_rows(hosts, (ROBOTS_TXT_COL,), "crawl_delay_ms bigint, fetch_budget bigint",
+                    row, ("host",))
 
 
 def shard_frontier(

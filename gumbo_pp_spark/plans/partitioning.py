@@ -25,10 +25,10 @@ takes its words from it), the vector-search entry
 SQL forms the oracles mirror (``textstats.host_quality_stats``,
 ``dedup.simhash``).  Those are the only callers of
 :func:`ensure_min_parallelism`; ``tests/test_physical_plans.py`` pins
-the set.  The per-document Python map operators (``run_program``,
-``extract_main_text``, ``explode_nodes``, ``sniff_and_transcode``,
-``extract_pdf_text``, the multimodal kernels) do not call it: they
-run one task per input partition and add no exchange.
+the set.  The per-document Python map operators (every
+``plans.arrowmap.map_rows`` caller, ``extract_main_text``,
+``explode_nodes``) do not call it: they run one task per input
+partition and add no exchange.
 """
 
 from __future__ import annotations

@@ -21,6 +21,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.arrowmap import map_rows
+
 WORDS_PER_LINE = 8
 
 
@@ -101,23 +103,11 @@ def synth_pdfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (Arrow batches), like every decode path here."""
     from .pages import load_documents
 
+    def row(doc_id, text):
+        return [(f"https://pdfs.example/{doc_id}.pdf", make_pdf(doc_id, text))]
+
     # load_documents spreads the one-row-group documents scan, so the
     # generation stage (and a parse stage fused after it) runs one
     # task per core
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "doc_id": ids,
-                    "url": [f"https://pdfs.example/{i}.pdf" for i in ids],
-                    "pdf": [make_pdf(i, t) for i, t in zip(ids, texts)],
-                }
-            )
-
-    return docs.mapInArrow(gen, "doc_id bigint, url string, pdf binary")
+    return map_rows(load_documents(spark, sf_dir), ("doc_id", "text"),
+                    "url string, pdf binary", row, ("doc_id",))

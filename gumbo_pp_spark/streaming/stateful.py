@@ -1,20 +1,19 @@
-"""Custom stateful streaming operator: exactly-once URL dedup for a
-continuously-crawled pages stream (``applyInPandasWithState``).
+"""Stateful streaming operator: exactly-once URL dedup for a
+continuously-crawled pages stream (Spark's native streaming
+``dropDuplicates``).
 
 A crawl stream re-fetches urls; downstream extraction should parse a
-url once.  State = the set of url digests already seen per hash
-bucket; each micro-batch emits only first-seen rows.  Buckets are the
-shuffle key, so state is partitioned and scales horizontally; the
-digest set is the only per-bucket memory (16 bytes/url before Spark's
-state-store compression).
+url once.  State = the set of url digests already seen, one 16-byte
+``unhex(md5(url))`` key per url, kept by Spark's state store and
+partitioned by the key's shuffle, so it scales horizontally.  Each
+micro-batch reads and writes only the keys it touches: the state grows
+by the new urls, never rewrites what earlier batches stored.  Without a
+watermark no key ever expires, so a url is emitted at most once over
+the whole stream.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -22,43 +21,19 @@ def stream_dedup_urls(
     spark: SparkSession,
     input_dir: str,
     schema: str,
-    n_buckets: int = 32,
 ) -> DataFrame:
-    """readStream(files) → stateful first-seen filter keyed by url-hash
-    bucket.  Returns the deduped streaming DataFrame (url, doc_id)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    """readStream(files) → first-seen filter on the url digest.
+    Returns the deduped streaming DataFrame (doc_id, url).
 
+    Which row wins: a url already emitted by an earlier micro-batch is
+    dropped; among duplicates inside one micro-batch some one of them
+    is emitted, in no promised order (as the rows arrive after the
+    shuffle).  All NULL urls share one key, so at most one is emitted.
+    A checkpoint is tied to this state layout: one written by another
+    dedup operator cannot be resumed."""
     pages = spark.readStream.schema(schema).parquet(input_dir)
-    keyed = pages.select(
-        "doc_id", "url", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("bucket")
-    )
-
-    def dedup(key, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        seen: set[bytes] = set()
-        if state.exists:
-            (blob,) = state.get
-            seen = {blob[i: i + 16] for i in range(0, len(blob), 16)}
-        new_digests: list[bytes] = []
-        for pdf in pdfs:
-            mask = []
-            for url in pdf["url"]:
-                d = hashlib.md5(url.encode()).digest()
-                if d in seen:
-                    mask.append(False)
-                else:
-                    seen.add(d)
-                    new_digests.append(d)
-                    mask.append(True)
-            out = pdf.loc[mask, ["doc_id", "url"]]
-            if len(out):
-                yield out
-        if new_digests or not state.exists:
-            state.update((b"".join(sorted(seen)),))
-
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        dedup,
-        outputStructType="doc_id bigint, url string",
-        stateStructType="digests binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        pages.select("doc_id", "url", F.unhex(F.md5("url")).alias("_url_md5"))
+        .dropDuplicates(["_url_md5"])
+        .drop("_url_md5")
     )

@@ -89,6 +89,34 @@ class TestMultimodal:
         assert sorted(out) == [1, 2, 3]
         assert out[1] == out[2] != out[3]
 
+    @pytest.mark.parametrize("stage, kind, meta", [
+        (image_features, "image", ("width", "height")),
+        (resize_images, "image", ("width", "height")),
+        (sample_frames, "video", ("width", "height", "duration_ms")),
+        (audio_features, "audio", ("sample_rate", "duration_ms")),
+    ])
+    def test_null_metadata_row(self, spark, stage, kind, meta):
+        # a NULL decode size never reaches the decoder: a 1→1 kernel
+        # emits the row with NULL features, sample_frames no frames
+        cols = ("width", "height", "sample_rate", "duration_ms")
+        rows = [(1, {}), *((2 + i, {c: None}) for i, c in enumerate(meta))]
+        good = {"width": 16, "height": 16, "sample_rate": 8000, "duration_ms": 500}
+        media = spark.createDataFrame(
+            [(i, kind, bytearray(b"clip"), *({**good, **m}[c] for c in cols), "fake")
+             for i, m in rows],
+            "media_id bigint, kind string, payload binary, width int, "
+            "height int, sample_rate int, duration_ms int, codec string",
+        )
+        out = {}
+        for r in stage(media).collect():
+            out.setdefault(r.media_id, []).append(tuple(r)[1:])
+        assert all(v is not None for row in out.pop(1) for v in row)
+        if stage is sample_frames:
+            assert out == {}
+        else:
+            n_out = len(stage(media).columns) - 1
+            assert out == {i: [(None,) * n_out] for i, _ in rows[1:]}
+
 
 class TestStreaming:
     def test_stream_extract_matches_batch(self, spark, tmp_path):

@@ -5,12 +5,13 @@ pushed to the parquet scan, no stray shuffles in the map-only stage."""
 import pytest
 from pyspark.sql import functions as F
 
-from gumbo_pp_spark.operators import dedup as D, sketches as S, textstats as T
+from gumbo_pp_spark.operators import dedup as D, multimodal as M, sketches as S, textstats as T
 from gumbo_pp_spark.operators.dedup import exact_dedup, minhash_signatures
 from gumbo_pp_spark.operators.encoding import sniff_and_transcode
 from gumbo_pp_spark.operators.extract import dom_stats, explode_nodes, extract_main_text
 from gumbo_pp_spark.operators.multimodal import image_features
 from gumbo_pp_spark.operators.pdf import extract_pdf_text
+from gumbo_pp_spark.operators.robots import crawl_schedule, robots_filter
 from gumbo_pp_spark.operators.similarity import cosine_topk
 from gumbo_pp_spark.suite import q_lineitem_agg, q_top_orders_per_segment
 
@@ -24,6 +25,36 @@ def plan_of(df) -> str:
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+
+
+def _pages_src(spark):
+    from gumbo_pp_spark.sources.pages import synth_pages
+
+    return synth_pages(spark, SF_SMOKE).where("doc_id < 20")
+
+
+def _media_src(spark):
+    return M.synth_media(spark, SF_SMOKE).where("media_id < 30")
+
+
+def _robots_src(spark):
+    return spark.createDataFrame(
+        [("a.example", "User-agent: *\nCrawl-delay: 2\n")], "host string, robots_txt string"
+    )
+
+
+# runner callers over a projection of their input: name -> (build,
+# source frame written to parquet with an extra unused column);
+# test_pdf_readschema_pruned covers extract_pdf_text
+_PRUNED_RUNNER_CALLERS = {
+    "run_program": (dom_stats, _pages_src),
+    "sniff_and_transcode": (sniff_and_transcode, _pages_src),
+    "image_features": (image_features, _media_src),
+    "resize_images": (M.resize_images, _media_src),
+    "sample_frames": (M.sample_frames, _media_src),
+    "audio_features": (M.audio_features, _media_src),
+    "crawl_schedule": (crawl_schedule, _robots_src),
+}
 
 
 class TestPlans:
@@ -91,6 +122,17 @@ class TestPlans:
         # output fields follow the passthrough order, not the file's
         assert out.columns == ["doc_id", "url", "text", "n_pages", "parse_ok"]
         assert out.where("text LIKE 'Doc %'").count() == 500
+
+    @pytest.mark.parametrize("name", sorted(_PRUNED_RUNNER_CALLERS))
+    def test_runner_readschema_pruned(self, spark, tmp_path, name):
+        # an input column the operator does not use is never scanned
+        build, src = _PRUNED_RUNNER_CALLERS[name]
+        path = str(tmp_path / "in.parquet")
+        src(spark).selectExpr("*", "'x' AS unused_extra").write.parquet(path)
+        plan = plan_of(build(spark.read.parquet(path)))
+        (line,) = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+        assert "unused_extra" not in line.split("ReadSchema:")[1], line
+        assert plan.count("MapInArrow") == 1
 
     def test_cap_per_host_first_window_salted(self, spark, docs):
         # skew safety: phase-1 window must partition on (host, salt),
@@ -243,7 +285,14 @@ _MAP_OPERATORS = {
     "multimodal": lambda df: image_features(df.selectExpr(
         "doc_id AS media_id", "'image' AS kind", "html AS payload",
         "16 AS width", "16 AS height")),
+    "robots_filter": lambda df: robots_filter(df, df.sparkSession.createDataFrame(
+        [("n.example", "User-agent: *\nDisallow: /3\n")], "host string, robots_txt string")),
+    "crawl_schedule": lambda df: crawl_schedule(df.selectExpr(
+        "url AS host", "CAST(html AS STRING) AS robots_txt")),
 }
+# operators that join a broadcast side: its BroadcastExchange ships the
+# small side, never the input
+_BROADCAST_SIDE = {"robots_filter"}
 
 
 class TestMapOperatorsDoNotSpread:
@@ -270,7 +319,8 @@ class TestMapOperatorsDoNotSpread:
         out = _MAP_OPERATORS[name](pages)
         assert calls == []
         plan = plan_of(out)
-        assert "Exchange" not in plan, plan
+        broadcasts = plan.count("BroadcastExchange") if name in _BROADCAST_SIDE else 0
+        assert plan.count("Exchange") == broadcasts, plan
         assert out.rdd.getNumPartitions() == 1
 
 
@@ -361,11 +411,25 @@ _GUARD_SITES = {
 }
 
 
-def test_guard_call_sites_are_pinned():
+# every mapInArrow call site: the row-kernel runner plus the batch
+# operators its docstring names as hand-written
+_MAP_IN_ARROW_SITES = {
+    ("gumbo_pp_spark/plans/arrowmap.py", "map_rows"),
+    ("gumbo_pp_spark/operators/extract.py", "extract_main_text"),
+    ("gumbo_pp_spark/operators/extract.py", "explode_nodes"),
+    ("gumbo_pp_spark/plans/lineage.py", "extract_with_resume"),
+    ("gumbo_pp_spark/sources/warc.py", "read_warc"),
+    ("gumbo_pp_spark/sources/warc.py", "read_warc_cdx"),
+    ("gumbo_pp_spark/streaming/ingest.py", "stream_warc_extract"),
+}
+
+
+def _program_sites(match_call=None, match_import=None):
+    """(module path, enclosing function) of every call whose callee
+    name satisfies ``match_call``, and every import of a module
+    satisfying ``match_import``, in ``gumbo_pp_spark/`` and ``jobs/``."""
     import ast
     from pathlib import Path
-
-    from gumbo_pp_spark.plans import partitioning as P
 
     class Sites(ast.NodeVisitor):
         fn = "<module>"
@@ -380,9 +444,18 @@ def test_guard_call_sites_are_pinned():
 
         def visit_Call(self, node):
             f = node.func
-            if getattr(f, "id", getattr(f, "attr", None)) == "ensure_min_parallelism":
+            name = getattr(f, "id", getattr(f, "attr", None))
+            if match_call and name and match_call(name):
                 self.found.append((self.path, self.fn))
             self.generic_visit(node)
+
+        def visit_Import(self, node):
+            if match_import and any(match_import(a.name) for a in node.names):
+                self.found.append((self.path, self.fn))
+
+        def visit_ImportFrom(self, node):
+            if match_import and node.level == 0 and match_import(node.module):
+                self.found.append((self.path, self.fn))
 
     root = Path(__file__).resolve().parents[1]
     sites = []
@@ -391,9 +464,35 @@ def test_guard_call_sites_are_pinned():
         v = Sites(path.relative_to(root).as_posix())
         v.visit(ast.parse(path.read_text(), str(path)))
         sites += v.found
-    assert sorted(sites) == sorted(_GUARD_SITES), sorted(sites)
+    return sorted(sites)
+
+
+def test_guard_call_sites_are_pinned():
+    from gumbo_pp_spark.plans import partitioning as P
+
+    sites = _program_sites(lambda name: name == "ensure_min_parallelism")
+    assert sites == sorted(_GUARD_SITES), sites
     for _path, fn in _GUARD_SITES:
         assert fn in P.ensure_min_parallelism.__doc__, fn
+
+
+def test_map_in_arrow_call_sites_are_pinned():
+    from gumbo_pp_spark.plans import arrowmap
+
+    sites = _program_sites(lambda name: name == "mapInArrow")
+    assert sites == sorted(_MAP_IN_ARROW_SITES), sites
+    for _path, fn in _MAP_IN_ARROW_SITES:
+        assert fn in arrowmap.__doc__, fn
+
+
+def test_no_pandas_operators():
+    """One way to run Python over Arrow: no pandas import and no pandas
+    UDF operator anywhere in the program."""
+    sites = _program_sites(
+        lambda name: name.startswith("applyInPandas") or name == "mapInPandas",
+        lambda module: module == "pandas" or module.startswith("pandas."),
+    )
+    assert sites == [], sites
 
 
 def test_revenue_by_nation_broadcasts_all_dims(spark):

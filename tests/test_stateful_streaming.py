@@ -1,5 +1,6 @@
-"""Stateful streaming dedup (applyInPandasWithState): duplicates across
-micro-batches are dropped via per-bucket state."""
+"""Stateful streaming dedup (native streaming dropDuplicates on the url
+digest): duplicates within and across micro-batches are dropped via
+per-key state."""
 
 from gumbo_pp_spark.sources.pages import synth_pages
 from gumbo_pp_spark.streaming.stateful import stream_dedup_urls
@@ -28,6 +29,48 @@ def test_stream_dedup_first_seen_only(spark, tmp_path):
     got = spark.sql("SELECT * FROM deduped_urls")
     assert got.count() == 100
     assert got.select("url").distinct().count() == 100
+
+
+def test_stream_dedup_within_and_across_micro_batches(spark, tmp_path, monkeypatch):
+    import glob
+    import os
+
+    from pyspark.sql import SparkSession
+    from pyspark.sql.streaming import DataStreamReader
+
+    src = str(tmp_path / "in")
+    schema = "doc_id bigint, url string"
+    # file 1 repeats u1 inside itself; file 2 repeats u1 and u2 across
+    # files and is dated later, so one file per trigger reads it second
+    spark.createDataFrame([(1, "u1"), (2, "u1"), (3, "u2")], schema) \
+        .coalesce(1).write.parquet(src)
+    first = set(glob.glob(f"{src}/*.parquet"))
+    spark.createDataFrame([(4, "u2"), (5, "u1"), (6, "u3")], schema) \
+        .coalesce(1).write.mode("append").parquet(src)
+    (second,) = set(glob.glob(f"{src}/*.parquet")) - first
+    os.utime(second, (os.path.getmtime(second) + 60,) * 2)
+
+    monkeypatch.setattr(SparkSession, "readStream", property(
+        lambda s: DataStreamReader(s).option("maxFilesPerTrigger", 1)))
+    out = stream_dedup_urls(spark, src, schema)
+    q = (
+        out.writeStream.format("memory")
+        .queryName("dedup_two_triggers")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [3, 3]
+    rows = spark.sql("SELECT * FROM dedup_two_triggers").collect()
+    assert sorted(r.url for r in rows) == ["u1", "u2", "u3"]
+    # u1 and u2 keep a first-file row; u3 is new in the second file
+    assert {r.url: r.doc_id for r in rows if r.url != "u1"} == {"u2": 3, "u3": 6}
+    assert {r.doc_id for r in rows if r.url == "u1"} <= {1, 2}
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert "StreamingDeduplicate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
 
 
 def test_quality_classifier_streams_stateless(spark, tmp_path):
