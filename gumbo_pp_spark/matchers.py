@@ -194,13 +194,13 @@ def match_not(m: Matcher) -> Matcher:
     return ~m
 
 
-def find_some(nt: NodeTable, *ms: Matcher, start: int = 0):
+def find_some(nt: NodeTable, *ms: Matcher):
     """daw::algorithm::find_some analogue (used test.cpp:96-102): first
     node matching ANY predicate, plus the per-predicate hit bitmap at
     that node.  Returns (node_id or -1, list[bool])."""
     masks = [m(nt) for m in ms]
     any_mask = np.logical_or.reduce(masks)
-    i = nt.first_match(any_mask, start)
+    i = nt.first_match(any_mask)
     if i < 0:
         return -1, [False] * len(ms)
     return i, [bool(mk[i]) for mk in masks]

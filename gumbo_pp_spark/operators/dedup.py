@@ -113,14 +113,15 @@ def unpersist_caches() -> int:
 _SHINGLES = _ngram_expr(3)
 
 
-def exact_dedup(df: DataFrame, key_expr: str = "substr(text, 1, 30)") -> DataFrame:
-    """Exact duplicate groups by a canonical key; keeps min(doc_id).
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact duplicate groups by a canonical key (the first 30
+    characters of ``text``); keeps min(doc_id).
 
     Returns (dup_key, keep_id, n_dups) for every group.  Map-side
     combine makes this one cheap shuffle of (key → partial agg).
     """
     return (
-        df.groupBy(F.expr(key_expr).alias("dup_key"))
+        df.groupBy(F.expr("substr(text, 1, 30)").alias("dup_key"))
         .agg(
             F.min("doc_id").cast("bigint").alias("keep_id"),
             F.count(F.lit(1)).cast("bigint").alias("n_dups"),
@@ -186,6 +187,7 @@ def ngram_jaccard_pairs(
 
 N_MINHASHES = 8  # default signature width (demo scale; see below)
 N_BANDS = 4  # default banding (2 rows per band)
+BUCKET_CAP = 64  # default cap on a band bucket's members
 
 
 def _check_banding(n_hashes: int, n_bands: int) -> int:
@@ -258,7 +260,7 @@ def _band_explode(
 def minhash_lsh_pairs(
     df: DataFrame,
     min_equal: int = 4,
-    bucket_cap: int = 64,
+    bucket_cap: int = BUCKET_CAP,
     n_hashes: int = N_MINHASHES,
     n_bands: int = N_BANDS,
 ) -> DataFrame:
@@ -361,30 +363,27 @@ def minhash_lsh_pairs_between(
     new_docs: DataFrame,
     prior_docs: DataFrame,
     min_equal: int = 4,
-    bucket_cap: int = 64,
-    n_hashes: int = N_MINHASHES,
-    n_bands: int = N_BANDS,
 ) -> DataFrame:
     """(new_id, prior_id, n_eq): MinHash-LSH candidates BETWEEN two
     corpora — the near-dup side of incremental extension (a new crawl
     batch against the shipped corpus), never generating within-side
     pairs.  Same banding/estimate semantics as
     :func:`minhash_lsh_pairs`; the join is band-bucket keyed with the
-    per-side bucket membership capped at ``bucket_cap`` (hot template
-    buckets bounded exactly like the self-join case).  At scale the
-    prior side's SIGNATURES are the retained artifact (n_hashes
-    bigints per doc — store them with the corpus; recomputing them
-    means re-reading prior text)."""
-    _check_banding(n_hashes, n_bands)
-    sig_new = _cache(minhash_signatures(new_docs, n_hashes))
-    sig_old = _cache(minhash_signatures(prior_docs, n_hashes))
-    bn = _band_explode(sig_new, n_hashes, n_bands)
-    bo = _band_explode(sig_old, n_hashes, n_bands)
+    per-side bucket membership capped at :data:`BUCKET_CAP` (hot
+    template buckets bounded exactly like the self-join case), over
+    :data:`N_MINHASHES` minhashes in :data:`N_BANDS` bands.  At scale
+    the prior side's SIGNATURES are the retained artifact
+    (N_MINHASHES digests per doc — store them with the corpus;
+    recomputing them means re-reading prior text)."""
+    sig_new = _cache(minhash_signatures(new_docs))
+    sig_old = _cache(minhash_signatures(prior_docs))
+    bn = _band_explode(sig_new)
+    bo = _band_explode(sig_old)
 
     def _capped(b):
         w = b.groupBy("band", "bkey").agg(
             F.count(F.lit(1)).alias("_n")
-        ).where(F.col("_n") <= bucket_cap).select("band", "bkey")
+        ).where(F.col("_n") <= BUCKET_CAP).select("band", "bkey")
         return b.join(w, ["band", "bkey"])
 
     cand = (
@@ -399,7 +398,7 @@ def minhash_lsh_pairs_between(
     sa = sig_new.alias("sa")
     sb = sig_old.alias("sb")
     eq = sum(
-        (F.col(f"sa.mh{k}") == F.col(f"sb.mh{k}")).cast("int") for k in range(n_hashes)
+        (F.col(f"sa.mh{k}") == F.col(f"sb.mh{k}")).cast("int") for k in range(N_MINHASHES)
     )
     return (
         cand.join(sa, F.col("new_id") == F.col("sa.doc_id"))
@@ -463,30 +462,19 @@ def minhash_verified_pairs(
     df: DataFrame,
     min_equal: int = 4,
     min_jaccard_e4: int = 5000,
-    bucket_cap: int = 64,
-    n_hashes: int = N_MINHASHES,
-    n_bands: int = N_BANDS,
 ) -> DataFrame:
     """The full candidate→verify near-dup pipeline: MinHash-LSH
     candidates (:func:`minhash_lsh_pairs`) re-scored with EXACT
     shingle Jaccard (:func:`verify_pairs`), keeping pairs at
     ``jaccard_e4 ≥ min_jaccard_e4`` — the shape a 100 TB dedup run
     ships, where the sketch only prunes and the exact measure decides."""
-    pairs = minhash_lsh_pairs(
-        df, min_equal=min_equal, bucket_cap=bucket_cap,
-        n_hashes=n_hashes, n_bands=n_bands,
-    )
+    pairs = minhash_lsh_pairs(df, min_equal=min_equal)
     return verify_pairs(df, pairs).where(
         F.col("jaccard_e4") >= min_jaccard_e4
     )
 
 
-def lsh_bucket_stats(
-    df: DataFrame,
-    bucket_cap: int = 64,
-    n_hashes: int = N_MINHASHES,
-    n_bands: int = N_BANDS,
-) -> DataFrame:
+def lsh_bucket_stats(df: DataFrame, bucket_cap: int = BUCKET_CAP) -> DataFrame:
     """No-silent-caps accounting for :func:`minhash_lsh_pairs`: one row
     (n_buckets, n_overfull, members_in_overfull) so a pipeline can see
     how much candidate mass the hot-bucket cap dropped.  At corpus
@@ -496,9 +484,9 @@ def lsh_bucket_stats(
     membership rows over over-full buckets — a doc hot in several
     bands counts once per band (it is the dropped candidate-mass
     measure, not a distinct-document count; hence the name)."""
-    sizes = _band_explode(
-        minhash_signatures(df, n_hashes), n_hashes, n_bands
-    ).groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("bn"))
+    sizes = _band_explode(minhash_signatures(df)).groupBy("band", "bkey").agg(
+        F.count(F.lit(1)).alias("bn")
+    )
     over = F.col("bn") > bucket_cap
     return sizes.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
@@ -530,9 +518,9 @@ SIMHASH_BANDS = 3  # pigeonhole: hamming <= 2 differences -> 1 equal band
 _BAND_WIDTH = SIMHASH_BITS // SIMHASH_BANDS  # 21 bits per band
 
 
-def simhash63_sql(text_col: str = "text") -> str:
+def simhash63_sql() -> str:
     """Spark-SQL expression computing a 63-bit simhash of the word
-    multiset of ``text_col``: bit j = majority vote of bit j of
+    multiset of ``text``: bit j = majority vote of bit j of
     md5(word).  ONE md5 per word (the hash array is materialized by
     ``transform`` once), then a single aggregate pass folds all 63
     per-bit votes via a 63-slot accumulator array — no per-bit
@@ -544,7 +532,7 @@ def simhash63_sql(text_col: str = "text") -> str:
         "substr(h, 1 + CAST(j / 4 AS INT), 1)) - 1, 3 - pmod(j, 4)), 2)"
     )
     votes = (
-        f"aggregate(transform(split({text_col}, ' '), w -> md5(w)), "
+        "aggregate(transform(split(text, ' '), w -> md5(w)), "
         f"array_repeat(0L, {SIMHASH_BITS}), "
         f"(acc, h) -> zip_with(acc, sequence(0, {SIMHASH_BITS - 1}), "
         f"(a, j) -> a + 2 * {bit} - 1))"
@@ -555,7 +543,7 @@ def simhash63_sql(text_col: str = "text") -> str:
     )
 
 
-def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """(doc_id, simhash bigint) — 63-bit fingerprint.  Near-dup pairs
     at scale: group by bit-bands of the fingerprint, verify survivors
     with ``bit_count(a ^ b) <= r`` (xor+popcount are JVM intrinsics).
@@ -567,7 +555,7 @@ def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     df = ensure_min_parallelism(df)
     return df.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(simhash63_sql(text_col)).cast("bigint").alias("simhash"),
+        F.expr(simhash63_sql()).cast("bigint").alias("simhash"),
     )
 
 
@@ -769,9 +757,7 @@ def connected_components(
     return mapping.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
 
 
-def canonical_docs(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def canonical_docs(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Per-component canonical selection over the full corpus.
 
     Appends ``component`` (smallest id in the document's near-dup
@@ -786,12 +772,12 @@ def canonical_docs(
     """
     comp = connected_components(pairs).withColumnRenamed("doc_id", "__cc_id")
     return (
-        df.join(comp, F.col(id_col) == F.col("__cc_id"), "left")
+        df.join(comp, F.col("doc_id") == F.col("__cc_id"), "left")
         .drop("__cc_id")
-        .withColumn("component", F.coalesce("component", F.col(id_col).cast("bigint")))
+        .withColumn("component", F.coalesce("component", F.col("doc_id").cast("bigint")))
         .withColumn(
             "is_canonical",
-            (F.col(id_col) == F.col("component")).cast("bigint"),
+            (F.col("doc_id") == F.col("component")).cast("bigint"),
         )
     )
 
@@ -867,7 +853,7 @@ def minhash_contamination(
     )
 
 
-def canonical_url_collapse(meta: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def canonical_url_collapse(meta: DataFrame) -> DataFrame:
     """Mirror-cluster collapse over rel=canonical targets (the
     crawl-hygiene companion of :func:`canonical_docs`: where near-dup
     components DISCOVER clusters, the canonical link is the site
@@ -875,7 +861,7 @@ def canonical_url_collapse(meta: DataFrame, id_col: str = "doc_id") -> DataFrame
     point at one canonical URL).
 
     Input is :func:`~gumbo_pp_spark.operators.extract.extract_head_meta`
-    output (``id_col, canonical, indexable``); rows without a canonical
+    output (``doc_id, canonical, indexable``); rows without a canonical
     link are their own singleton clusters and are excluded here (they
     need no collapse).  Returns one row per declared cluster:
     ``canonical, rep_doc_id`` (smallest member id — deterministic,
@@ -891,7 +877,7 @@ def canonical_url_collapse(meta: DataFrame, id_col: str = "doc_id") -> DataFrame
         meta.filter(F.col("canonical").isNotNull())
         .groupBy("canonical")
         .agg(
-            F.min(id_col).cast("bigint").alias("rep_doc_id"),
+            F.min("doc_id").cast("bigint").alias("rep_doc_id"),
             F.count(F.lit(1)).alias("n_members"),
             F.sum(F.col("indexable").cast("long")).alias("n_indexable"),
         )

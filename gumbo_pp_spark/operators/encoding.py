@@ -29,20 +29,18 @@ ENC_FIELDS = "html binary, encoding string, enc_src string"
 
 def sniff_and_transcode(
     df: DataFrame,
-    html_col: str = "html",
     passthrough: tuple[str, ...] = ("doc_id",),
     transport_col: str | None = None,
 ) -> DataFrame:
-    """Replace ``html_col`` with UTF-8 bytes; append ``encoding`` (the
+    """Replace ``html`` with UTF-8 bytes; append ``encoding`` (the
     sniffed WHATWG name) and ``enc_src`` (``bom | transport | meta |
     default``).  ``transport_col`` optionally names a column carrying
     the HTTP Content-Type charset label (the transport layer of the
-    precedence order).  The output column is named ``html`` whatever
-    ``html_col`` is.  A NULL ``html_col`` is sniffed as the empty page
+    precedence order).  A NULL ``html`` is sniffed as the empty page
     ``b""``."""
 
     def row(raw, label=None):
         return [to_utf8(b"" if raw is None else bytes(raw), label)]
 
-    inputs = (html_col, transport_col) if transport_col else (html_col,)
+    inputs = ("html", transport_col) if transport_col else ("html",)
     return map_rows(df, inputs, ENC_FIELDS, row, passthrough)

@@ -69,7 +69,6 @@ def run_program(
     program: Callable[[NodeTable], dict],
     out_fields: str,
     passthrough: tuple[str, ...] = ("doc_id", "url"),
-    html_col: str = "html",
 ) -> DataFrame:
     """Run ``program`` over every page.  ``program(nt) -> dict`` of the
     columns declared in ``out_fields`` (DDL fragment).  Passthrough
@@ -93,7 +92,7 @@ def run_program(
         res = program(parse_html(b"" if raw is None else raw))
         return [tuple(res[c] for c in names)]
 
-    return map_rows(df, (html_col,), out_fields, row, passthrough)
+    return map_rows(df, ("html",), out_fields, row, passthrough)
 
 
 # ----------------------------------------------------------------------
@@ -583,15 +582,12 @@ def count_matches_program(matcher) -> Callable[[NodeTable], dict]:
     return program
 
 
-def all_matches_program(
-    matcher,
-    attr: str = "href",
-    out_col: str = "hrefs",
-) -> Callable[[NodeTable], dict]:
-    """Collect ``attr`` from EVERY node matching ``matcher`` (document
-    order) — the find_if→find_iterator loop of the reference driver
-    (reference: include/gumbo_pp/gumbo_algorithms.hpp find_iterator)
-    vectorized to one mask + one gather."""
+def all_matches_program(matcher) -> Callable[[NodeTable], dict]:
+    """Collect ``href`` into ``hrefs`` from EVERY node matching
+    ``matcher`` (document order) — the find_if→find_iterator loop of
+    the reference driver (reference:
+    include/gumbo_pp/gumbo_algorithms.hpp find_iterator) vectorized to
+    one mask + one gather."""
     import numpy as np
 
     def program(nt: NodeTable) -> dict:
@@ -599,23 +595,23 @@ def all_matches_program(
         vals = []
         for i in ids:
             a = nt.attrs[int(i)]
-            v = a.get(attr) if a is not None else None
+            v = a.get("href") if a is not None else None
             if v is not None:
                 vals.append(v)
-        return {out_col: vals}
+        return {"hrefs": vals}
 
     return program
 
 
-def extract_links(df: DataFrame, passthrough=("doc_id", "url")) -> DataFrame:
-    """(passthrough..., href) — one row per anchor with an href, in
+def extract_links(df: DataFrame) -> DataFrame:
+    """(doc_id, url, href) — one row per anchor with an href, in
     document order.  Map-only: the per-doc program returns the href
     ARRAY (no node-table explode), and the only row-multiplying step
     is the JVM-side explode of that small array."""
     from .. import matchers as m
 
-    out = run_program(df, all_matches_program(m.tag.A), "hrefs array<string>", passthrough)
-    return out.select(*passthrough, F.explode("hrefs").alias("href"))
+    out = run_program(df, all_matches_program(m.tag.A), "hrefs array<string>")
+    return out.select("doc_id", "url", F.explode("hrefs").alias("href"))
 
 
 def link_graph(df: DataFrame) -> DataFrame:
@@ -774,11 +770,11 @@ def head_meta_program() -> Callable[[NodeTable], dict]:
     return program
 
 
-def extract_head_meta(df: DataFrame, passthrough=("doc_id",)) -> DataFrame:
+def extract_head_meta(df: DataFrame) -> DataFrame:
     """Map-only head-metadata extraction; adds ``indexable`` (no
     'noindex' directive — absent robots meta defaults to indexable,
     per the robots-meta convention)."""
-    out = run_program(df, head_meta_program(), HEAD_META_FIELDS, passthrough=passthrough)
+    out = run_program(df, head_meta_program(), HEAD_META_FIELDS, passthrough=("doc_id",))
     return out.withColumn(
         "indexable",
         F.coalesce(~F.col("robots").contains("noindex"), F.lit(True)),
@@ -827,14 +823,14 @@ def page_meta_program() -> Callable[[NodeTable], dict]:
     return program
 
 
-def extract_page_meta(df: DataFrame, passthrough=("doc_id",)) -> DataFrame:
+def extract_page_meta(df: DataFrame) -> DataFrame:
     """Map-only OpenGraph/JSON-LD metadata stage.  JSON-LD fields
     (`@type`, headline, datePublished) are projected with
     ``get_json_object`` — whole-stage-codegen JSON path evaluation
     over the one raw string the kernel extracted."""
-    out = run_program(df, page_meta_program(), PAGE_META_FIELDS, passthrough=passthrough)
+    out = run_program(df, page_meta_program(), PAGE_META_FIELDS, passthrough=("doc_id",))
     return out.select(
-        *passthrough,
+        "doc_id",
         "og_title",
         "og_type",
         "published",
@@ -866,18 +862,18 @@ def anchor_texts_program(nt: NodeTable) -> dict:
     return {"hrefs": hrefs, "texts": nt.content_text_many(keep)}
 
 
-def extract_anchor_texts(df: DataFrame, passthrough=("doc_id",)) -> DataFrame:
-    """(passthrough..., href, anchor_text) — one row per anchor.  The
+def extract_anchor_texts(df: DataFrame) -> DataFrame:
+    """(doc_id, href, anchor_text) — one row per anchor.  The
     kernel ships two small parallel arrays per page; the only
     row-multiplying step is the JVM-side arrays_zip + explode."""
     out = run_program(
         df, anchor_texts_program,
-        "hrefs array<string>, texts array<string>", passthrough,
+        "hrefs array<string>, texts array<string>", ("doc_id",),
     )
     return out.select(
-        *passthrough, F.explode(F.arrays_zip("hrefs", "texts")).alias("z")
+        "doc_id", F.explode(F.arrays_zip("hrefs", "texts")).alias("z")
     ).select(
-        *passthrough,
+        "doc_id",
         F.col("z.hrefs").alias("href"),
         F.col("z.texts").alias("anchor_text"),
     )

@@ -5,7 +5,7 @@ where components answer "which docs are the same", PageRank answers
 "which hosts/docs matter" — the classic crawl-prioritization and
 quality-prior signal for a web corpus.
 
-All arithmetic is exact-integer (ranks are ``scale``-scaled bigints,
+All arithmetic is exact-integer (ranks are fixed-scale bigints,
 damping is a percent, divisions are floor DIV), so results are
 bit-identical across engines and partitionings — integer sums commute,
 float PageRank does not.
@@ -15,19 +15,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: PageRank damping, in percent
+DAMPING_E2 = 85
+#: fixed-point scale of a PageRank rank
+RANK_SCALE = 10**9
+#: iterations between lineage-capping local checkpoints
+CHECKPOINT_EVERY = 4
+
 
 def pagerank(
     edges: DataFrame,
     n_iter: int = 3,
-    damping_e2: int = 85,
-    scale: int = 10**9,
     checkpoint: bool = True,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Simplified (dangling mass dropped, the usual web-graph variant)
-    integer PageRank:  rank'(v) = (1−d)·scale + d · Σ_{u→v} rank(u) DIV
-    outdeg(u), d = damping_e2/100.  Input (src, dst); returns
-    (node, rank) with rank a ``scale``-scaled bigint.
+    integer PageRank:  rank'(v) = (1−d)·S + d · Σ_{u→v} rank(u) DIV
+    outdeg(u), d = :data:`DAMPING_E2`/100.  Input (src, dst); returns
+    (node, rank) with rank a bigint scaled by S = :data:`RANK_SCALE`.
 
     Scale shape per iteration: one join of the edge table with the
     node-sized rank table on ``src`` (at 10^12 edges the edge table is
@@ -37,10 +41,10 @@ def pagerank(
     caps plan/lineage growth, same discipline as
     ``connected_components`` — O(iters) rounds, never a driver-side
     edge materialization.  Round 8: the checkpoint fires every
-    ``checkpoint_every`` rounds instead of every round — each
+    :data:`CHECKPOINT_EVERY` rounds instead of every round — each
     materialization forced an RDD round-trip that cost ~3× the actual
     rank math at bench scale (1.38 s → 0.49 s for 3 rounds), while
-    lineage depth stays bounded at ``checkpoint_every`` iterations'
+    lineage depth stays bounded at CHECKPOINT_EVERY iterations'
     worth of operators (identical ranks either way; short runs like
     the 3-round suite query never checkpoint at all)."""
     src_nodes = edges.select(F.col("src").cast("bigint").alias("node"))
@@ -53,8 +57,8 @@ def pagerank(
         F.col("src").cast("bigint").alias("src"),
         F.col("dst").cast("bigint").alias("dst"),
     )
-    base = (100 - damping_e2) * scale // 100
-    ranks = nodes.withColumn("rank", F.lit(scale).cast("bigint"))
+    base = (100 - DAMPING_E2) * RANK_SCALE // 100
+    ranks = nodes.withColumn("rank", F.lit(RANK_SCALE).cast("bigint"))
     for it in range(n_iter):
         contrib = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
@@ -66,10 +70,10 @@ def pagerank(
             nodes.join(sums, nodes["node"] == sums["dst"], "left")
             .selectExpr(
                 "node",
-                f"CAST({base} + ({damping_e2} * coalesce(s, 0)) DIV 100 AS BIGINT) AS rank",
+                f"CAST({base} + ({DAMPING_E2} * coalesce(s, 0)) DIV 100 AS BIGINT) AS rank",
             )
         )
-        if checkpoint and (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
+        if checkpoint and (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select(F.col("node").cast("bigint"), F.col("rank").cast("bigint"))
 
@@ -78,8 +82,6 @@ def hits(
     edges: DataFrame,
     n_iter: int = 3,
     scale: int = 10**6,
-    checkpoint: bool = True,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Integer-exact HITS (Kleinberg): per round the authority pass
     ``a'(v) = Σ_{u→v} h(u)`` then the hub pass ``h'(u) = Σ_{u→v}
@@ -139,7 +141,7 @@ def hits(
         # every k rounds, not every round (see pagerank): each lazy
         # localCheckpoint forced an RDD materialization round-trip
         # costing ~3× the rank math; k rounds of lineage stay bounded
-        if checkpoint and (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
             a = a.localCheckpoint(eager=False)
             h = h.localCheckpoint(eager=False)
     return (

@@ -154,7 +154,7 @@ def _finalize(md: str) -> str:
     return md.strip()
 
 
-def render_markdown(nt: NodeTable, skip_tags: frozenset = SKIP_TAGS) -> str:
+def render_markdown(nt: NodeTable) -> str:
     """Render one parsed document to Markdown (explicit-stack walk —
     no recursion, depth-proof).
 
@@ -173,7 +173,7 @@ def render_markdown(nt: NodeTable, skip_tags: frozenset = SKIP_TAGS) -> str:
     texts = nt.text.tolist()
     se = nt.subtree_end.tolist()
     ns = nt.ns.tolist() if nt.ns is not None else None
-    _TEXT, _WS, _EL = TEXT, WHITESPACE, ELEMENT
+    _TEXT, _WS, _EL, skip_tags = TEXT, WHITESPACE, ELEMENT, SKIP_TAGS
     _sub = _WS_RUN.sub
     root = _Frame(0, "", False, n)
     stack = [root]
@@ -216,9 +216,9 @@ def markdown_program(nt: NodeTable) -> dict:
 MARKDOWN_FIELDS = "markdown string"
 
 
-def to_markdown(df: DataFrame, passthrough=("doc_id",)) -> DataFrame:
+def to_markdown(df: DataFrame) -> DataFrame:
     """Map-only HTML → Markdown stage (pruned scan → mapInArrow →
     markdown column; zero shuffle, same shape as the flagship)."""
     from .extract import run_program
 
-    return run_program(df, markdown_program, MARKDOWN_FIELDS, passthrough=passthrough)
+    return run_program(df, markdown_program, MARKDOWN_FIELDS, passthrough=("doc_id",))

@@ -14,10 +14,10 @@ Scale notes (100 TB design):
   ordered prefix sum.  A GLOBAL order would serialize the corpus
   through one sort; the stream is sharded (``doc_id % n_shards``) AND
   (round 8) the per-shard prefix sum is TWO-PHASE: per-(shard, block)
-  partial sums (block = ``doc_id div block_size``, contiguous in the
+  partial sums (block = ``doc_id div BLOCK_SIZE``, contiguous in the
   packing order) are rolled into block offsets over the block-sized
   table, then joined back so the within-block cumulative window is
-  bounded by ``block_size`` rows — no window partition ever spans a
+  bounded by ``BLOCK_SIZE`` rows — no window partition ever spans a
   corpus-sized shard (the round-7 scale-killer flagged in VERDICT r7).
 * ``chunk_tokens`` — map-only explode; output size is input size ×
   (width / stride), no shuffle at all.
@@ -34,15 +34,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 # spaces+1 == size(split(text, ' ')) exactly (Java split keeps leading
 # and trailing empty fields at limit -1), without allocating the word
 # array per row — the shared token-count projection
-def _n_tokens_expr(text_col: str) -> str:
-    return (
-        f"CAST(length({text_col}) - length(replace({text_col}, ' ', '')) + 1 "
-        "AS BIGINT)"
-    )
+_N_TOKENS = "CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT)"
 
 
 #: rows per within-block cumulative window (an upper bound: a block
-#: covers ``block_size`` consecutive doc_ids).  2^16 keeps the window
+#: covers that many consecutive doc_ids).  2^16 keeps the window
 #: state trivially memory-bounded while the block table stays ~1/2^16
 #: of the corpus.
 BLOCK_SIZE = 1 << 16
@@ -52,8 +48,6 @@ def pack_sequences(
     df: DataFrame,
     seq_len: int = 2048,
     n_shards: int = 8,
-    text_col: str = "text",
-    block_size: int = BLOCK_SIZE,
 ) -> DataFrame:
     """Concat-and-split sequence packing: within each shard, documents
     are concatenated in ``doc_id`` order into one token stream that is
@@ -71,7 +65,7 @@ def pack_sequences(
 
     Two-phase prefix sum (round 8): ``start_tok`` = (sum of all
     earlier blocks of the shard, via a block-table window) + (cumsum
-    within the (shard, block) window, ≤ ``block_size`` rows).  The
+    within the (shard, block) window, ≤ :data:`BLOCK_SIZE` rows).  The
     (shard, block) join and the within-block window share one
     exchange; output is bit-identical to the single-window form.
 
@@ -79,17 +73,14 @@ def pack_sequences(
     packing order and is dropped; the other rows' offsets are those
     of the input without it.
     """
-    if seq_len <= 0 or n_shards <= 0 or block_size <= 0:
-        raise ValueError(
-            f"seq_len={seq_len}, n_shards={n_shards} and "
-            f"block_size={block_size} must be positive"
-        )
+    if seq_len <= 0 or n_shards <= 0:
+        raise ValueError(f"seq_len={seq_len} and n_shards={n_shards} must be positive")
     t = df.where("doc_id IS NOT NULL").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         (F.col("doc_id") % n_shards).cast("bigint").alias("shard"),
-        F.expr(_n_tokens_expr(text_col)).alias("n_tokens"),
+        F.expr(_N_TOKENS).alias("n_tokens"),
         # integer DIV (not float /): exact for the full bigint range
-        F.expr(f"doc_id DIV {n_shards * block_size}").cast("bigint").alias("blk"),
+        F.expr(f"doc_id DIV {n_shards * BLOCK_SIZE}").cast("bigint").alias("blk"),
     )
     # phase 1: per-(shard, block) token totals — block-table-sized
     blocks = t.groupBy("shard", "blk").agg(F.sum("n_tokens").alias("btok"))
@@ -102,7 +93,7 @@ def pack_sequences(
         "shard", "blk",
         F.coalesce(F.sum("btok").over(wb), F.lit(0)).cast("bigint").alias("boff"),
     )
-    # phase 2: within-block cumsum (≤ block_size rows per partition);
+    # phase 2: within-block cumsum (≤ BLOCK_SIZE rows per partition);
     # the (shard, blk) equi-join and this window cluster identically,
     # so Spark establishes the partitioning once
     w = (
@@ -137,7 +128,6 @@ def chunk_tokens(
     df: DataFrame,
     width: int = 32,
     stride: int = 24,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sliding token windows with overlap (embedding / RAG chunking):
     chunks start at token 0, ``stride``, 2·``stride``, … while the
@@ -157,7 +147,7 @@ def chunk_tokens(
     return (
         df.select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.expr(f"split({text_col}, ' ')").alias("ws"),
+            F.expr("split(text, ' ')").alias("ws"),
         )
         .select(
             "doc_id",
@@ -175,11 +165,7 @@ def chunk_tokens(
     )
 
 
-def shard_manifest(
-    df: DataFrame,
-    n_shards: int = 8,
-    text_col: str = "text",
-) -> DataFrame:
+def shard_manifest(df: DataFrame, n_shards: int = 8) -> DataFrame:
     """Training-export shard manifest: assign every document a
     deterministic shard (md5-domain uniform on doc_id — retry-stable,
     no RNG) and emit one integrity row per shard:
@@ -196,12 +182,12 @@ def shard_manifest(
     writes LAST, after all shard files — the same two-phase pattern as
     the lineage ledger."""
     u32 = "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"
-    t32 = f"CAST(conv(substring(md5({text_col}), 1, 8), 16, 10) AS BIGINT)"
+    t32 = "CAST(conv(substring(md5(text), 1, 8), 16, 10) AS BIGINT)"
     return (
         df.selectExpr(
             f"{u32} % {n_shards} AS shard",
             "doc_id",
-            f"{_n_tokens_expr(text_col)} AS n_toks",
+            f"{_N_TOKENS} AS n_toks",
             f"{t32} AS th",
         )
         .groupBy("shard")
@@ -220,13 +206,11 @@ def select_token_budget(
     df: DataFrame,
     budget_tokens: int,
     score_col: str,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     block_size: int = BLOCK_SIZE,
 ) -> DataFrame:
     """Greedy corpus assembly under a token budget: keep the
     highest-scoring documents whose running token total fits in
-    ``budget_tokens``.  Order is (score desc, key asc); a document is
+    ``budget_tokens``.  Order is (score desc, doc_id asc); a document is
     kept iff the cumulative token count through it is ≤ the budget
     (tokens are positive, so the kept set is a clean prefix).
     Returns (doc_id, score, n_tokens).
@@ -250,12 +234,12 @@ def select_token_budget(
     The extra aggregates run over BOUNDARY rows only, so the change is
     invisible at the histogram/full-keep scale.
 
-    NULL contract: a row with a NULL ``key_col`` has no place in the
+    NULL contract: a row with a NULL ``doc_id`` has no place in the
     order and is dropped before the budget is counted."""
-    base = df.where(f"{key_col} IS NOT NULL").selectExpr(
-        f"CAST({key_col} AS BIGINT) AS doc_id",
+    base = df.where("doc_id IS NOT NULL").selectExpr(
+        "CAST(doc_id AS BIGINT) AS doc_id",
         f"CAST({score_col} AS BIGINT) AS score",
-        f"{_n_tokens_expr(text_col)} AS n_tokens",
+        f"{_N_TOKENS} AS n_tokens",
     )
     hist = base.groupBy("score").agg(F.sum("n_tokens").alias("tok"))
     w = Window.orderBy(F.desc("score")).rowsBetween(

@@ -233,7 +233,7 @@ def pdf_text_bytes(data: bytes) -> tuple[str, int]:
 
 
 def extract_pdf_text(
-    df: DataFrame, pdf_col: str = "pdf", passthrough: tuple[str, ...] = ("doc_id", "url")
+    df: DataFrame, passthrough: tuple[str, ...] = ("doc_id", "url")
 ) -> DataFrame:
     """(passthrough..., text, n_pages, parse_ok) — map-only Arrow-batch
     stage, the PDF sibling of ``extract_main_text``.
@@ -243,7 +243,7 @@ def extract_pdf_text(
     parse_ok=false) as an ERROR RECORD instead of poisoning the task —
     one bad object in 10^12 must not kill a 4-hour job; the parse_ok
     column is the dirty-tail accounting (no silent drops).  The input
-    projection is pruned to passthrough + ``pdf_col``, so a parquet
+    projection is pruned to passthrough + ``pdf``, so a parquet
     scan reads only those columns.
 
     NULL contract: a NULL ``pdf`` is an error record, like any other
@@ -256,5 +256,5 @@ def extract_pdf_text(
         except Exception:
             return [("", 0, False)]
 
-    return map_rows(df, (pdf_col,), "text string, n_pages bigint, parse_ok boolean", row,
+    return map_rows(df, ("pdf",), "text string, n_pages bigint, parse_ok boolean", row,
                     passthrough)

@@ -19,6 +19,8 @@ from ..plans.arrowmap import map_rows
 
 ROBOTS_HOST_COL = "__robots_host"
 ROBOTS_TXT_COL = "__robots_txt"
+#: crawl delay of a host whose robots.txt group declares none
+DEFAULT_DELAY_MS = 1000
 
 
 def robots_filter(
@@ -26,12 +28,10 @@ def robots_filter(
     robots: DataFrame,
     agent: str = "gumbobot",
     url_col: str = "url",
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
 ) -> DataFrame:
     """Append ``crawl_allowed`` to ``urls``.
 
-    ``robots`` carries one row per host (``host_col, txt_col``); hosts
+    ``robots`` carries one row per host (``host, robots_txt``); hosts
     absent from it — and null/empty bodies — are implicit allow-all
     per RFC 9309 §2.3.1.  A NULL url is checked as the empty path.
     """
@@ -40,8 +40,8 @@ def robots_filter(
     j = urls.join(
         F.broadcast(
             robots.select(
-                F.col(host_col).alias(ROBOTS_HOST_COL),
-                F.col(txt_col).alias(ROBOTS_TXT_COL),
+                F.col("host").alias(ROBOTS_HOST_COL),
+                F.col("robots_txt").alias(ROBOTS_TXT_COL),
             )
         ),
         F.expr(f"parse_url({url_col}, 'HOST')") == F.col(ROBOTS_HOST_COL),
@@ -63,26 +63,23 @@ def crawl_schedule(
     robots: DataFrame,
     agent: str = "gumbobot",
     window_sec: int = 60,
-    default_delay_ms: int = 1000,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
 ) -> DataFrame:
     """(host, crawl_delay_ms, fetch_budget): per-host politeness
     schedule from the de-facto ``Crawl-delay`` extension — the frontier
     shard sizer (a host's shard should hold at most ``fetch_budget``
     URLs per ``window_sec`` scheduling window).  Hosts whose selected
-    agent group declares no delay get ``default_delay_ms``;
+    agent group declares no delay get :data:`DEFAULT_DELAY_MS`;
     ``fetch_budget = window_sec·1000 div crawl_delay_ms`` is one
     integer floor division (oracle-exact).  Scale shape: the input is
     the hosts-sized robots table — one Arrow map over it, no join, no
     shuffle; delays are plan constants downstream (broadcast the
-    result onto the frontier).  The output column is named ``host``
-    whatever ``host_col`` is; a NULL robots.txt is the empty file."""
+    result onto the frontier).  ``robots`` carries ``host,
+    robots_txt``; a NULL robots.txt is the empty file."""
     from ..parser.robots import parse_robots
 
     def row(txt):
         d = parse_robots(txt or "").crawl_delay(agent)
-        delay = default_delay_ms if d is None else int(round(d * 1000))
+        delay = DEFAULT_DELAY_MS if d is None else int(round(d * 1000))
         # floor at 1 fetch per window: a Crawl-delay longer than the
         # window (e.g. 120 s against the 60 s default — common in real
         # robots.txt) would otherwise yield budget 0 and
@@ -92,18 +89,13 @@ def crawl_schedule(
         return [(delay, budget)]
 
     hosts = robots.select(
-        F.col(host_col).cast("string").alias("host"), F.col(txt_col).alias(ROBOTS_TXT_COL)
+        F.col("host").cast("string").alias("host"), F.col("robots_txt").alias(ROBOTS_TXT_COL)
     )
     return map_rows(hosts, (ROBOTS_TXT_COL,), "crawl_delay_ms bigint, fetch_budget bigint",
                     row, ("host",))
 
 
-def shard_frontier(
-    frontier: DataFrame,
-    schedule: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
-) -> DataFrame:
+def shard_frontier(frontier: DataFrame, schedule: DataFrame) -> DataFrame:
     """(host, url, fetch_rank, fetch_window): assign every frontier URL
     to a politeness window — the k-th URL of a host (deterministic
     md5(url) order, url tie-break) fetches in window
@@ -119,11 +111,7 @@ def shard_frontier(
     (hosts × 16)-sized and broadcast, as is the schedule."""
     from pyspark.sql import Window
 
-    base = frontier.select(
-        F.col(host_col).alias("host"),
-        F.col(url_col).alias("url"),
-        F.substring(F.md5(F.col(url_col)), 1, 1).alias("_bkt"),
-    )
+    base = frontier.select("host", "url", F.substring(F.md5("url"), 1, 1).alias("_bkt"))
     w1 = Window.partitionBy("host", "_bkt").orderBy(F.md5("url"), "url")
     ranked = base.withColumn("_r", F.row_number().over(w1))
     wo = Window.partitionBy("host").orderBy("_bkt").rowsBetween(

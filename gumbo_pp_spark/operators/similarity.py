@@ -18,11 +18,11 @@ DOT_EXPR = (
 NORM_EXPR = "sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("norm", F.expr(NORM_EXPR.format(a=vec_col)))
+def with_norm(df: DataFrame) -> DataFrame:
+    return df.withColumn("norm", F.expr(NORM_EXPR.format(a="embedding")))
 
 
-def _corpus_side(df: DataFrame, vec_col: str) -> DataFrame:
+def _corpus_side(df: DataFrame) -> DataFrame:
     """The vector corpus as every search operator scans it: spread when
     under-parallel (the per-vector dot products against broadcast
     queries or pivots are the heavy JVM work — see
@@ -30,15 +30,13 @@ def _corpus_side(df: DataFrame, vec_col: str) -> DataFrame:
     a no-op at corpus scale), normed, zero vectors dropped."""
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 
-    return with_norm(ensure_min_parallelism(df), vec_col).where(F.col("norm") > 0)
+    return with_norm(ensure_min_parallelism(df)).where(F.col("norm") > 0)
 
 
 def cosine_topk(
     df: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector.
 
@@ -51,42 +49,41 @@ def cosine_topk(
     """
     from pyspark.sql.window import Window
 
-    base = _corpus_side(df, vec_col)
+    base = _corpus_side(df)
     q = (
-        with_norm(queries, vec_col)
+        with_norm(queries)
         .where(F.col("norm") > 0)
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
             F.col("norm").alias("q_norm"),
         )
     )
-    dot = DOT_EXPR.format(a=vec_col, b="q_vec")
+    dot = DOT_EXPR.format(a="embedding", b="q_vec")
     scored = (
         base.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != F.col("query_id"))
+        .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("cos", F.expr(dot) / (F.col("norm") * F.col("q_norm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
             F.col("query_id").cast("bigint"),
-            F.col(id_col).cast("bigint").alias("neighbor_id"),
+            F.col("vec_id").cast("bigint").alias("neighbor_id"),
             F.col("rank").cast("bigint"),
         )
     )
 
 
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    n_planes: int = 4,
-) -> DataFrame:
+#: embedding width the hyperplane sketches are drawn for
+DIM = 64
+#: hyperplanes of :func:`cosine_near_dup_pairs`' blocking bucket
+NEAR_DUP_PLANES = 4
+
+
+def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a, b, cos_e6) with
     a < b and cosine ≥ threshold.
 
@@ -100,16 +97,16 @@ def cosine_near_dup_pairs(
     with a JVM-side dot product; cosine is e6-scaled so the DuckDB
     oracle (which recomputes the identical buckets/probes) compares
     exactly."""
-    sk = hyperplane_sketch_expr(dim, n_planes, vec_col)
-    base = _corpus_side(df, vec_col).withColumn("bucket", F.expr(sk))
-    probes = ", ".join(f"bucket ^ {2 ** p}" for p in range(n_planes))
+    sk = hyperplane_sketch_expr(DIM, NEAR_DUP_PLANES)
+    base = _corpus_side(df).withColumn("bucket", F.expr(sk))
+    probes = ", ".join(f"bucket ^ {2 ** p}" for p in range(NEAR_DUP_PLANES))
     a = base.select(
-        F.col(id_col).alias("a"), F.col(vec_col).alias("va"),
+        F.col("vec_id").alias("a"), F.col("embedding").alias("va"),
         F.col("norm").alias("na"),
         F.explode(F.expr(f"array(bucket, {probes})")).alias("block"),
     )
     b = base.select(
-        F.col(id_col).alias("b"), F.col(vec_col).alias("vb"),
+        F.col("vec_id").alias("b"), F.col("embedding").alias("vb"),
         F.col("norm").alias("nb"), F.col("bucket").alias("block"),
     )
     dot = DOT_EXPR.format(a="va", b="vb")
@@ -139,7 +136,7 @@ def plane_signs(p: int, dim: int) -> list[float]:
     ]
 
 
-def hyperplane_sketch_expr(dim: int, n_planes: int, vec_col: str = "embedding") -> str:
+def hyperplane_sketch_expr(dim: int, n_planes: int) -> str:
     """Random-hyperplane LSH sketch as pure SQL: the ±1 sign matrix is
     emitted as array literals, so the per-row work is one zip_with dot
     product per plane (JVM-side, no hashing).  Returns an int bucket in
@@ -148,7 +145,7 @@ def hyperplane_sketch_expr(dim: int, n_planes: int, vec_col: str = "embedding") 
     for p in range(n_planes):
         lits = ", ".join(f"{s}D" for s in plane_signs(p, dim))
         dot = (
-            f"aggregate(zip_with({vec_col}, array({lits}), "
+            f"aggregate(zip_with(embedding, array({lits}), "
             "(x, s) -> CAST(x AS DOUBLE) * s), 0D, (acc, v) -> acc + v)"
         )
         bits.append(f"(CASE WHEN ({dot}) > 0 THEN {2 ** p} ELSE 0 END)")
@@ -159,10 +156,8 @@ def lsh_cosine_topk(
     df: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    dim: int = 64,
+    dim: int = DIM,
     n_planes: int = 6,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate variant: candidates restricted to the query's LSH
@@ -177,15 +172,15 @@ def lsh_cosine_topk(
     """
     from pyspark.sql.window import Window
 
-    sk = hyperplane_sketch_expr(dim, n_planes, vec_col)
-    base = _corpus_side(df, vec_col).withColumn("bucket", F.expr(sk))
+    sk = hyperplane_sketch_expr(dim, n_planes)
+    base = _corpus_side(df).withColumn("bucket", F.expr(sk))
     q = (
-        with_norm(queries, vec_col)
+        with_norm(queries)
         .where(F.col("norm") > 0)
         .withColumn("bucket", F.expr(sk))
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
             F.col("norm").alias("q_norm"),
             "bucket",
         )
@@ -193,19 +188,19 @@ def lsh_cosine_topk(
     if multiprobe:
         probes = ", ".join(f"bucket ^ {2 ** p}" for p in range(n_planes))
         q = q.withColumn("bucket", F.explode(F.expr(f"array(bucket, {probes})")))
-    dot = DOT_EXPR.format(a=vec_col, b="q_vec")
+    dot = DOT_EXPR.format(a="embedding", b="q_vec")
     scored = (
         base.join(F.broadcast(q), "bucket")
-        .where(F.col(id_col) != F.col("query_id"))
+        .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("cos", F.expr(dot) / (F.col("norm") * F.col("q_norm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
             F.col("query_id").cast("bigint"),
-            F.col(id_col).cast("bigint").alias("neighbor_id"),
+            F.col("vec_id").cast("bigint").alias("neighbor_id"),
             F.col("rank").cast("bigint"),
         )
     )
@@ -215,18 +210,16 @@ def lsh_recall_vs_exact(
     df: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    dim: int = 64,
+    dim: int = DIM,
     n_planes: int = 6,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Measured recall@k of the LSH path against the exact baseline —
     one row (n_queries, n_exact, n_hit, recall_e4).  This is the
     metric that gates an ANN rollout at scale; both sides are
     deterministic so the oracle recomputes it bit-for-bit."""
-    exact = cosine_topk(df, queries, k=k, vec_col=vec_col, id_col=id_col)
+    exact = cosine_topk(df, queries, k=k)
     approx = lsh_cosine_topk(
-        df, queries, k=k, dim=dim, n_planes=n_planes, vec_col=vec_col, id_col=id_col
+        df, queries, k=k, dim=dim, n_planes=n_planes
     )
     hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
     return (
@@ -259,13 +252,13 @@ def lsh_recall_vs_exact(
 # bucketing/cluster column and the probe becomes a bucket-pruned scan.
 
 
-def _pivot_side(pivots: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+def _pivot_side(pivots: DataFrame) -> DataFrame:
     """Normalized pivot projection shared by assignment and probe
     sides — one definition so their filtering/norm semantics cannot
     diverge."""
-    return with_norm(pivots, vec_col).where(F.col("norm") > 0).select(
-        F.col(id_col).alias("pivot_id"),
-        F.col(vec_col).alias("p_vec"),
+    return with_norm(pivots).where(F.col("norm") > 0).select(
+        F.col("vec_id").alias("pivot_id"),
+        F.col("embedding").alias("p_vec"),
         F.col("norm").alias("p_norm"),
     )
 
@@ -273,24 +266,22 @@ def _pivot_side(pivots: DataFrame, vec_col: str, id_col: str) -> DataFrame:
 def ivf_assignments(
     df: DataFrame,
     pivots: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Assign every vector to its nearest pivot by cosine (ties break
     to the smallest pivot_id).  Returns (id, vec, norm, pivot_id)."""
-    base = _corpus_side(df, vec_col)
-    p = _pivot_side(pivots, vec_col, id_col)
-    dot = DOT_EXPR.format(a=vec_col, b="p_vec")
+    base = _corpus_side(df)
+    p = _pivot_side(pivots)
+    dot = DOT_EXPR.format(a="embedding", b="p_vec")
     scored = base.crossJoin(F.broadcast(p)).withColumn(
         "pcos", F.expr(dot) / (F.col("norm") * F.col("p_norm"))
     )
-    best = scored.groupBy(id_col).agg(
+    best = scored.groupBy("vec_id").agg(
         F.max(F.struct(F.col("pcos"), (-F.col("pivot_id")).alias("npid"))).alias("m"),
-        F.first(vec_col).alias(vec_col),
+        F.first("embedding").alias("embedding"),
         F.first("norm").alias("norm"),
     )
     return best.select(
-        id_col, vec_col, "norm", (-F.col("m.npid")).cast("bigint").alias("pivot_id")
+        "vec_id", "embedding", "norm", (-F.col("m.npid")).cast("bigint").alias("pivot_id")
     )
 
 
@@ -300,19 +291,17 @@ def ivf_topk(
     pivots: DataFrame,
     k: int = 3,
     nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-Flat approximate top-k: per query, exact cosine search
     restricted to the inverted lists of its ``nprobe`` nearest pivots.
     Returns (query_id, neighbor_id, rank)."""
     from pyspark.sql.window import Window
 
-    assigned = ivf_assignments(df, pivots, vec_col, id_col)
-    p = _pivot_side(pivots, vec_col, id_col)
-    q = with_norm(queries, vec_col).where(F.col("norm") > 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+    assigned = ivf_assignments(df, pivots)
+    p = _pivot_side(pivots)
+    q = with_norm(queries).where(F.col("norm") > 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
         F.col("norm").alias("q_norm"),
     )
     qdot = DOT_EXPR.format(a="q_vec", b="p_vec")
@@ -324,19 +313,19 @@ def ivf_topk(
         .where(F.col("prank") <= nprobe)
         .select("query_id", "q_vec", "q_norm", "pivot_id")
     )
-    dot = DOT_EXPR.format(a=vec_col, b="q_vec")
+    dot = DOT_EXPR.format(a="embedding", b="q_vec")
     scored = (
         assigned.join(F.broadcast(probes), "pivot_id")
-        .where(F.col(id_col) != F.col("query_id"))
+        .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("cos", F.expr(dot) / (F.col("norm") * F.col("q_norm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
             F.col("query_id").cast("bigint"),
-            F.col(id_col).cast("bigint").alias("neighbor_id"),
+            F.col("vec_id").cast("bigint").alias("neighbor_id"),
             F.col("rank").cast("bigint"),
         )
     )
@@ -348,15 +337,13 @@ def ivf_recall_vs_exact(
     pivots: DataFrame,
     k: int = 3,
     nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Measured recall@k of the IVF path against the exact baseline —
     one row (n_queries, n_exact, n_hit, recall_e4), the IVF analogue
     of :func:`lsh_recall_vs_exact`."""
-    exact = cosine_topk(df, queries, k=k, vec_col=vec_col, id_col=id_col)
+    exact = cosine_topk(df, queries, k=k)
     approx = ivf_topk(
-        df, queries, pivots, k=k, nprobe=nprobe, vec_col=vec_col, id_col=id_col
+        df, queries, pivots, k=k, nprobe=nprobe
     )
     hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
     return (
@@ -378,8 +365,6 @@ def semantic_dedup(
     df: DataFrame,
     pivots: DataFrame,
     threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster every embedding to its nearest pivot
@@ -402,17 +387,17 @@ def semantic_dedup(
     in-cluster pairs, which is the SemDeDup contract (cross-cluster
     dups are accepted misses, measured separately by the recall
     queries)."""
-    assigned = ivf_assignments(df, pivots, vec_col, id_col)
+    assigned = ivf_assignments(df, pivots)
     a = assigned.select(
         "pivot_id",
-        F.col(id_col).alias("a"),
-        F.col(vec_col).alias("va"),
+        F.col("vec_id").alias("a"),
+        F.col("embedding").alias("va"),
         F.col("norm").alias("na"),
     )
     b = assigned.select(
         "pivot_id",
-        F.col(id_col).alias("b"),
-        F.col(vec_col).alias("vb"),
+        F.col("vec_id").alias("b"),
+        F.col("embedding").alias("vb"),
         F.col("norm").alias("nb"),
     )
     dot = DOT_EXPR.format(a="va", b="vb")
@@ -420,12 +405,12 @@ def semantic_dedup(
         a.join(b, ["pivot_id"])
         .where(F.col("a") < F.col("b"))
         .where(F.expr(dot) / (F.col("na") * F.col("nb")) >= threshold)
-        .select(F.col("b").alias(id_col))
+        .select(F.col("b").alias("vec_id"))
         .distinct()
         .withColumn("_dropped", F.lit(True))
     )
-    return assigned.join(dropped, [id_col], "left").select(
-        F.col(id_col).cast("bigint").alias(id_col),
+    return assigned.join(dropped, ["vec_id"], "left").select(
+        F.col("vec_id").cast("bigint").alias("vec_id"),
         F.col("pivot_id").cast("bigint").alias("pivot_id"),
         F.col("_dropped").isNull().alias("keep"),
     )

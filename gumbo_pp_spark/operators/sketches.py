@@ -25,8 +25,8 @@ from .textstats import split_words
 U32 = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
 
 
-def _bucket_expr(r: int, width: int, word_col: str = "word") -> str:
-    salted = U32.format(x=f"concat('{r}|', {word_col})")
+def _bucket_expr(r: int, width: int) -> str:
+    salted = U32.format(x=f"concat('{r}|', word)")
     return f"CAST({salted} % {width} AS BIGINT)"
 
 
@@ -52,16 +52,14 @@ def _counters(words: DataFrame, width: int, depth: int) -> DataFrame:
     )
 
 
-def cms_sketch(
-    df: DataFrame, width: int = 16, depth: int = 3, text_col: str = "text"
-) -> DataFrame:
+def cms_sketch(df: DataFrame, width: int = 16, depth: int = 3) -> DataFrame:
     """Build the sketch: (row, bucket, cnt), ≤ depth·width rows total.
 
     The token stream is exploded once and stacked ``depth`` times
     (one (row, bucket) key per hash row); partial aggregation
     collapses each partition's stack to ≤ depth·width rows before the
     exchange, so the shuffle is constant-size regardless of input."""
-    return _counters(split_words(df, text_col, explode=True), width, depth)
+    return _counters(split_words(df, explode=True), width, depth)
 
 
 def cms_heavy_hitters(
@@ -69,7 +67,6 @@ def cms_heavy_hitters(
     width: int = 16,
     depth: int = 3,
     min_count: int = 100,
-    text_col: str = "text",
 ) -> DataFrame:
     """Heavy hitters by CMS estimate: (word, est) for every distinct
     word whose sketch estimate reaches ``min_count``, est = min over
@@ -83,7 +80,7 @@ def cms_heavy_hitters(
     artifact and candidates arrive from outside (alert lists, probe
     vocab) without touching the corpus again.  One token stream feeds
     both the sketch and the candidates."""
-    toks = split_words(df, text_col, explode=True)
+    toks = split_words(df, explode=True)
     probes = toks.distinct().select("word", _row_buckets(width, depth)).select(
         "word", "rb.row", "rb.bucket"
     )
@@ -95,7 +92,7 @@ def cms_heavy_hitters(
     return est.where(F.col("est") >= min_count).select("word", "est")
 
 
-def kmv_distinct(df: DataFrame, k: int = 16, text_col: str = "text") -> DataFrame:
+def kmv_distinct(df: DataFrame, k: int = 16) -> DataFrame:
     """KMV / bottom-k distinct-count sketch (Bar-Yossef et al. 2002):
     keep the ``k`` smallest 32-bit word hashes; if the k-th smallest
     is h_k, the hashes are ~uniform on [0, 2^32) and
@@ -109,7 +106,7 @@ def kmv_distinct(df: DataFrame, k: int = 16, text_col: str = "text") -> DataFram
     production KMV union does.  The sketch is k numbers; unions of
     per-shard sketches merge by re-taking the k smallest."""
     h = (
-        split_words(df, text_col, explode=True)
+        split_words(df, explode=True)
         .select(F.expr(U32.format(x="word")).alias("h"))
         .distinct()
     )
@@ -124,13 +121,14 @@ def kmv_distinct(df: DataFrame, k: int = 16, text_col: str = "text") -> DataFram
     )
 
 
-def length_quantiles(
-    df: DataFrame,
-    probs_e2: tuple[int, ...] = (25, 50, 75, 90, 99),
-    text_col: str = "text",
-) -> DataFrame:
+#: default quantile probes, in percent
+PROBS_E2 = (25, 50, 75, 90, 99)
+
+
+def length_quantiles(df: DataFrame) -> DataFrame:
     """Exact corpus quantiles of document token length WITHOUT a
-    global sort or driver collect: (p_e2, value) where value is the
+    global sort or driver collect: (p_e2, value) for each
+    :data:`PROBS_E2` probe, where value is the
     smallest length whose cumulative count covers p% of documents
     (type-1 quantile).
 
@@ -144,7 +142,7 @@ def length_quantiles(
     from pyspark.sql import Window
 
     lens = (
-        split_words(df, text_col)
+        split_words(df)
         .select(F.size("ws").alias("len"))
         .groupBy("len")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -159,7 +157,7 @@ def length_quantiles(
             )
         ).alias("total"),
     )
-    probs = ", ".join(str(p) for p in probs_e2)
+    probs = ", ".join(str(p) for p in PROBS_E2)
     probed = cum.crossJoin(
         F.broadcast(
             df.sparkSession.range(1).selectExpr(f"explode(array({probs})) AS p_e2")
@@ -175,8 +173,7 @@ def length_quantiles(
 def grouped_length_quantiles(
     df: DataFrame,
     group_col: str = "source",
-    probs_e2: tuple[int, ...] = (25, 50, 75, 90, 99),
-    text_col: str = "text",
+    probs_e2: tuple[int, ...] = PROBS_E2,
 ) -> DataFrame:
     """(grp, p_e2, value): exact per-group token-length quantiles —
     :func:`length_quantiles` generalized to a grouping key (per-source
@@ -190,7 +187,7 @@ def grouped_length_quantiles(
     from pyspark.sql import Window
 
     lens = (
-        split_words(df, text_col, keep=(f"{group_col} AS grp",))
+        split_words(df, keep=(f"{group_col} AS grp",))
         .select("grp", F.size("ws").alias("len"))
         .groupBy("grp", "len")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -39,14 +39,13 @@ def words_sql(text_col: str = "text") -> str:
 
 def split_words(
     df: DataFrame,
-    text_col: str = "text",
     keep: tuple[str, ...] = (),
     min_words: int = 0,
     explode: bool = False,
     segments: str | None = None,
 ) -> DataFrame:
     """The word tokenizer of the per-word operators in ``textstats``,
-    ``dedup`` and ``sketches``: ``text_col`` split on single spaces.
+    ``dedup`` and ``sketches``: ``text`` split on single spaces.
 
     Returns ``(*keep, ws)``, the word array per document, or with
     ``explode`` ``(*keep, word)``, one row per word.  ``keep`` holds
@@ -64,13 +63,13 @@ def split_words(
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 
     base = ensure_min_parallelism(df)
-    keep_cols = [F.expr(k) for k in keep]
+    keep_cols, text = [F.expr(k) for k in keep], "text"
     if segments is not None:
         base = base.select(
-            *keep_cols, F.posexplode(F.split(text_col, segments)).alias("pos", "seg")
+            *keep_cols, F.posexplode(F.split("text", segments)).alias("pos", "seg")
         )
-        keep_cols, text_col = [F.col(c) for c in base.columns[:-1]], "seg"
-    ws = F.expr(words_sql(text_col))
+        keep_cols, text = [F.col(c) for c in base.columns[:-1]], "seg"
+    ws = F.expr(words_sql(text))
     out = base.select(*keep_cols, F.explode(ws).alias("word") if explode else ws.alias("ws"))
     return out.where(F.size("ws") >= min_words) if min_words else out
 
@@ -98,12 +97,12 @@ def quality_stats(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
-def _lang_case(text_col: str) -> str:
+def _lang_case() -> str:
     """The lang-ID argmax CASE (deterministic tie order en > es > de >
     fr) as a SQL string — shared by :func:`lang_id` and
     :func:`corpus_report`."""
     scores = {
-        lang: f"size(filter({words_sql(text_col)}, w -> w IN ({_in_list(ws)})))"
+        lang: f"size(filter({words_sql()}, w -> w IN ({_in_list(ws)})))"
         for lang, ws in LANG_MARKERS.items()
     }
     return (
@@ -115,14 +114,14 @@ def _lang_case(text_col: str) -> str:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-marker language ID (n-gram-heuristic family): score per
     language = marker-word hits; argmax with deterministic tie order
     en > es > de > fr.  Heuristic operator — the correctness gate is
     formula parity with the oracle, not real-world accuracy."""
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        f"{_lang_case(text_col)} AS pred_lang",
+        f"{_lang_case()} AS pred_lang",
     )
 
 
@@ -139,13 +138,13 @@ def fingerprints(df: DataFrame) -> DataFrame:
     )
 
 
-def normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """(doc_id, norm_text) — training-data normalization pass:
     lowercase, strip non-alphanumerics to spaces, collapse whitespace,
     trim.  Pure regexp (JVM-side, oracle-identical in RE2)."""
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        f"trim(regexp_replace(regexp_replace(lower({text_col}), "
+        "trim(regexp_replace(regexp_replace(lower(text), "
         "'[^a-z0-9 ]', ' '), ' +', ' ')) AS norm_text",
     )
 
@@ -156,15 +155,15 @@ PII_EMAIL = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+[.][a-zA-Z]{2,}"
 PII_PHONE = "[+]?[0-9][0-9() -]{7,}[0-9]"
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(df: DataFrame) -> DataFrame:
     """(doc_id, clean_text, n_emails, n_phones) — redact emails and
     phone-number-like runs before a corpus leaves the pipeline."""
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        f"regexp_replace(regexp_replace({text_col}, '{PII_EMAIL}', '<EMAIL>'), "
+        f"regexp_replace(regexp_replace(text, '{PII_EMAIL}', '<EMAIL>'), "
         f"'{PII_PHONE}', '<PHONE>') AS clean_text",
-        f"CAST(regexp_count({text_col}, '{PII_EMAIL}') AS BIGINT) AS n_emails",
-        f"CAST(regexp_count({text_col}, '{PII_PHONE}') AS BIGINT) AS n_phones",
+        f"CAST(regexp_count(text, '{PII_EMAIL}') AS BIGINT) AS n_emails",
+        f"CAST(regexp_count(text, '{PII_PHONE}') AS BIGINT) AS n_phones",
     )
 
 
@@ -185,7 +184,7 @@ def quality_filter(
     ).select("doc_id", "n_tokens")
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: distinct-word
     ratio, most-frequent-word share, most-frequent-bigram share (all
     e4-scaled BIGINT).  Highly repetitive documents (boilerplate, spam,
@@ -196,7 +195,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     word pass yields n_words (sum of counts), n_distinct (group count)
     and the top count in ONE grouped aggregation — no caching of the
     corpus, no per-document quadratic lambdas."""
-    words = split_words(df, text_col, keep=(DOC_ID,))
+    words = split_words(df, keep=(DOC_ID,))
     wstats = (
         words.select("doc_id", F.explode("ws").alias("g"))
         .groupBy("doc_id", "g").count()
@@ -225,7 +224,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def paragraph_chunks(df: DataFrame, text_col: str = "text", stride: int = 10) -> DataFrame:
+def paragraph_chunks(df: DataFrame, stride: int = 10) -> DataFrame:
     """(doc_id, chunk_idx, chunk) — consecutive ``stride``-word windows
     (the 'paragraph' unit for sub-document dedup; real pipelines use
     newline paragraphs, the synthetic corpus is single-line).
@@ -236,7 +235,7 @@ def paragraph_chunks(df: DataFrame, text_col: str = "text", stride: int = 10) ->
     one-expression form re-tokenized the document for every chunk —
     O(words²/stride) characters per document."""
     return (
-        split_words(df, text_col, keep=(DOC_ID,))
+        split_words(df, keep=(DOC_ID,))
         .select(
             "doc_id",
             F.explode(
@@ -255,12 +254,12 @@ def paragraph_chunks(df: DataFrame, text_col: str = "text", stride: int = 10) ->
     )
 
 
-def dedup_paragraphs(df: DataFrame, text_col: str = "text", stride: int = 10) -> DataFrame:
+def dedup_paragraphs(df: DataFrame) -> DataFrame:
     """Sub-document (paragraph-level) dedup: chunks shared by more than
     one document, with the canonical keeper.  Returns
     (chunk_md5, n_docs, keep_doc) — hash-groupBy with map-side partial
     aggregation; the md5 key keeps shuffle rows tiny at corpus scale."""
-    ch = paragraph_chunks(df, text_col, stride)
+    ch = paragraph_chunks(df)
     return (
         ch.groupBy(F.md5("chunk").alias("chunk_md5"))
         .agg(
@@ -271,12 +270,12 @@ def dedup_paragraphs(df: DataFrame, text_col: str = "text", stride: int = 10) ->
     )
 
 
-def canonical_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
+def canonical_urls(df: DataFrame) -> DataFrame:
     """(doc_id, canon_url, had_tracking) — crawl-frontier URL
     canonicalization: strip the fragment, strip utm_* tracking params,
     normalize a dangling '?'/'&', lowercase the scheme+host.  Pure
     regexp (Java≡RE2 portable, backslash-free)."""
-    strip_frag = f"regexp_replace({url_col}, '#.*', '')"
+    strip_frag = "regexp_replace(url, '#.*', '')"
     # order matters: '?utm_x=v&rest' keeps its '?', then '&utm_x=v'
     # mid-query is dropped, then a lone trailing '?utm_x=v' is dropped
     p1 = f"regexp_replace({strip_frag}, '[?]utm_[a-z]+=[^&#]*[&]', '?')"
@@ -286,28 +285,31 @@ def canonical_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
         f"concat(lower({host_part}), substring({p3}, length({host_part}) + 1)) AS canon_url",
-        f"CAST(CASE WHEN {url_col} RLIKE '[?&]utm_' THEN 1 ELSE 0 END AS BIGINT) AS had_tracking",
+        "CAST(CASE WHEN url RLIKE '[?&]utm_' THEN 1 ELSE 0 END AS BIGINT) AS had_tracking",
     )
 
 
-def sample_by_hash(df: DataFrame, rate_e4: int = 1000, key_col: str = "doc_id") -> DataFrame:
+def sample_by_hash(df: DataFrame, rate_e4: int = 1000) -> DataFrame:
     """Deterministic corpus sampling: keep a row iff the first 8 hex
-    digits of md5(key) fall under ``rate_e4``/10000 of the 32-bit
+    digits of md5(doc_id) fall under ``rate_e4``/10000 of the 32-bit
     space.  Reproducible across engines and runs (no RNG), uniform in
     the hash domain, and embarrassingly parallel — the standard way to
     carve an evaluation slice out of a 10^12-row corpus."""
     threshold = (rate_e4 * (1 << 32)) // 10000
     return df.where(
         F.expr(
-            f"CAST(conv(substring(md5(CAST({key_col} AS STRING)), 1, 8), 16, 10) AS BIGINT) < {threshold}"
+            f"CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) < {threshold}"
         )
     )
 
 
-def cap_per_host(df: DataFrame, cap: int = 3, host_col: str = "host",
-                 key_col: str = "doc_id", salt_buckets: int = 16) -> DataFrame:
+#: default hash-salt fan-out of the two-phase per-group top-k
+SALT_BUCKETS = 16
+
+
+def cap_per_host(df: DataFrame, cap: int = 3, salt_buckets: int = SALT_BUCKETS) -> DataFrame:
     """Per-host document cap: keep at most ``cap`` documents per host,
-    chosen deterministically by md5(key) order (tie-broken by key).
+    chosen deterministically by md5(doc_id) order (tie-broken by doc_id).
     The standard anti-domination gate before training-corpus assembly —
     without it one crawl-heavy host owns the token budget.
 
@@ -315,7 +317,7 @@ def cap_per_host(df: DataFrame, cap: int = 3, host_col: str = "host",
     by host)`` puts a crawl-heavy host's ENTIRE row set into one sorted
     task):
 
-    * phase 1 ranks within ``(host, pmod(xxhash64(key), salt_buckets))``
+    * phase 1 ranks within ``(host, pmod(xxhash64(doc_id), salt_buckets))``
       and keeps ≤ ``cap`` per salted group — a hot host is spread over
       ``salt_buckets`` tasks, each bounded;
     * phase 2 re-ranks the ≤ ``cap·salt_buckets`` survivors per host
@@ -325,10 +327,10 @@ def cap_per_host(df: DataFrame, cap: int = 3, host_col: str = "host",
     """
     from pyspark.sql.window import Window
 
-    order = (F.md5(F.col(key_col).cast("string")), F.col(key_col))
-    salt = F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(salt_buckets))
-    w1 = Window.partitionBy(F.col(host_col), salt).orderBy(*order)
-    w2 = Window.partitionBy(host_col).orderBy(*order)
+    order = (F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
+    salt = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(salt_buckets))
+    w1 = Window.partitionBy(F.col("host"), salt).orderBy(*order)
+    w2 = Window.partitionBy("host").orderBy(*order)
     return (
         df.withColumn("salt_rank", F.row_number().over(w1))
         .where(F.col("salt_rank") <= cap)
@@ -478,8 +480,6 @@ def gopher_rules(
 
 def mirror_hosts(
     df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
     min_shared: int = 3,
     fp_cap: int = 64,
 ) -> DataFrame:
@@ -497,9 +497,7 @@ def mirror_hosts(
     fan-out at C(fp_cap, 2)), and the pair aggregate joins two
     hosts-sized count tables (broadcast).  Document text never moves —
     only 32-char digests shuffle."""
-    fps = df.select(
-        F.col(host_col).alias("host"), F.md5(F.col(text_col)).alias("fp")
-    ).distinct()
+    fps = df.select("host", F.md5("text").alias("fp")).distinct()
     per_host = fps.groupBy("host").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_fps")
     )
@@ -535,13 +533,13 @@ def mirror_hosts(
     )
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """(doc_id, ws_tokens, word_tokens) — whitespace tokenization plus
     a BPE-ish alnum-run count (regexp, JVM-side)."""
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        f"CAST(size(split({text_col}, ' +')) AS BIGINT) AS ws_tokens",
-        f"CAST(regexp_count({text_col}, '[a-z0-9]+') AS BIGINT) AS word_tokens",
+        "CAST(size(split(text, ' +')) AS BIGINT) AS ws_tokens",
+        "CAST(regexp_count(text, '[a-z0-9]+') AS BIGINT) AS word_tokens",
     )
 
 
@@ -567,10 +565,10 @@ def _ngram_expr(n: int) -> str:
     )
 
 
-def eval_ngrams(evals: DataFrame, n: int = 13, text_col: str = "text") -> DataFrame:
+def eval_ngrams(evals: DataFrame, n: int = 13) -> DataFrame:
     """Distinct word ``n``-grams of an eval set: (gram).  Docs shorter
     than ``n`` words contribute nothing."""
-    ws = evals.select(F.expr(words_sql(text_col)).alias("ws")).where(
+    ws = evals.select(F.expr(words_sql()).alias("ws")).where(
         F.expr(f"size(ws) >= {n}")
     )
     return ws.select(F.explode(F.expr(_ngram_expr(n))).alias("gram")).distinct()
@@ -580,7 +578,6 @@ def contamination(
     docs: DataFrame,
     evals: DataFrame,
     n: int = 13,
-    text_col: str = "text",
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, n_contaminated) for every training document sharing at
@@ -594,8 +591,8 @@ def contamination(
     (the streaming foreachBatch path) caches the gram table once
     instead of re-aggregating the eval set per micro-batch."""
     if grams is None:
-        grams = eval_ngrams(evals, n, text_col)
-    ws = split_words(docs, text_col, keep=("doc_id",), min_words=n)
+        grams = eval_ngrams(evals, n)
+    ws = split_words(docs, keep=("doc_id",), min_words=n)
     dg = ws.select("doc_id", F.explode(F.expr(_ngram_expr(n))).alias("gram"))
     return (
         dg.join(F.broadcast(grams), "gram")
@@ -608,47 +605,31 @@ def decontaminate(
     docs: DataFrame,
     evals: DataFrame,
     n: int = 13,
-    text_col: str = "text",
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """``docs`` minus every document contaminated against ``evals``
     (left-anti on doc_id; all original columns pass through).
     ``grams`` as in :func:`contamination`."""
-    bad = contamination(docs, evals, n, text_col, grams=grams).select("doc_id")
+    bad = contamination(docs, evals, n, grams=grams).select("doc_id")
     return docs.join(bad, "doc_id", "left_anti")
 
 
-def sentence_contamination(
-    docs: DataFrame,
-    evals: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    grams: DataFrame | None = None,
-) -> DataFrame:
+def sentence_contamination(docs: DataFrame, evals: DataFrame, n: int = 8) -> DataFrame:
     """(doc_id, pos) of every SENTENCE (``'. '``-delimited, 0-indexed)
     sharing at least one word ``n``-gram with ``evals`` — the surgical
     sibling of :func:`contamination` for when an eval prompt quotes one
     sentence embedded in an otherwise-good page.  Scale shape: the
     sentence+gram explode is map-only, grams join the broadcast eval
     table, and the output is contaminated-sentences-sized ≪ corpus."""
-    if grams is None:
-        grams = eval_ngrams(evals, n, text_col)
-    sents = split_words(
-        docs, text_col, keep=(DOC_ID,), min_words=n, segments="[.] "
-    )
+    grams = eval_ngrams(evals, n)
+    sents = split_words(docs, keep=(DOC_ID,), min_words=n, segments="[.] ")
     sg = sents.select(
         "doc_id", "pos", F.explode(F.expr(_ngram_expr(n))).alias("gram")
     )
     return sg.join(F.broadcast(grams), "gram").select("doc_id", "pos").distinct()
 
 
-def decontaminate_sentences(
-    docs: DataFrame,
-    evals: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    grams: DataFrame | None = None,
-) -> DataFrame:
+def decontaminate_sentences(docs: DataFrame, evals: DataFrame, n: int = 8) -> DataFrame:
     """(doc_id, clean_text, n_dropped): remove contaminated SENTENCES
     and keep the document — every document survives (possibly with
     ``clean_text = ''`` when all its sentences matched).  Scale shape:
@@ -657,12 +638,12 @@ def decontaminate_sentences(
     broadcast when the set is small, the common case), and the rebuild
     is a map-side indexed ``filter`` over the re-split sentence array —
     no explode-regroup of document text through an exchange."""
-    bad = sentence_contamination(docs, evals, n, text_col, grams=grams)
-    return _drop_segment_positions(docs, bad, text_col)
+    bad = sentence_contamination(docs, evals, n)
+    return _drop_segment_positions(docs, bad)
 
 
 def _drop_segment_positions(
-    docs: DataFrame, bad: DataFrame, text_col: str, keep: tuple[str, ...] = ()
+    docs: DataFrame, bad: DataFrame, keep: tuple[str, ...] = ()
 ) -> DataFrame:
     """(doc_id, clean_text, n_dropped [, *keep]): rebuild every document
     without the ``'. '``-delimited segments named by ``bad`` (doc_id,
@@ -680,7 +661,7 @@ def _drop_segment_positions(
     return docs.join(bad_per_doc, "doc_id", "left").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.expr(
-            f"concat_ws('. ', filter(split({text_col}, '[.] '), "
+            "concat_ws('. ', filter(split(text, '[.] '), "
             "(s, i) -> bad_pos IS NULL OR NOT array_contains(bad_pos, i)))"
         ).alias("clean_text"),
         F.coalesce(F.size("bad_pos"), F.lit(0)).cast("bigint").alias("n_dropped"),
@@ -688,12 +669,7 @@ def _drop_segment_positions(
     )
 
 
-def boilerplate_segments(
-    df: DataFrame,
-    host_col: str = "host",
-    min_docs: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+def boilerplate_segments(df: DataFrame, min_docs: int = 3) -> DataFrame:
     """(host, seg_md5, n_docs): ``'. '``-delimited segments repeated
     across ≥ ``min_docs`` distinct documents of the SAME host — the
     per-domain boilerplate table (navigation, footers, cookie banners
@@ -702,9 +678,9 @@ def boilerplate_segments(
     leaves its partition — and the (host, seg) aggregate is one
     map-side-combined shuffle on a high-cardinality composite key."""
     segs = df.select(
-        F.col(host_col).alias("host"),
+        "host",
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(F.split(F.col(text_col), "[.] ")).alias("seg"),
+        F.explode(F.split("text", "[.] ")).alias("seg"),
     ).select("host", "doc_id", F.md5("seg").alias("seg_md5"))
     return (
         segs.groupBy("host", "seg_md5")
@@ -714,11 +690,7 @@ def boilerplate_segments(
 
 
 def remove_boilerplate(
-    df: DataFrame,
-    host_col: str = "host",
-    min_docs: int = 3,
-    text_col: str = "text",
-    keep: tuple[str, ...] = (),
+    df: DataFrame, min_docs: int = 3, keep: tuple[str, ...] = ()
 ) -> DataFrame:
     """(doc_id, clean_text, n_dropped [, *keep]): strip per-host
     boilerplate segments (see :func:`boilerplate_segments`) from every
@@ -729,14 +701,14 @@ def remove_boilerplate(
     NOTE: ``df`` is referenced by three subplans (boilerplate table,
     position flags, rebuild) — cache it when it is itself expensive to
     recompute (the pipeline does)."""
-    bp = boilerplate_segments(df, host_col, min_docs, text_col)
+    bp = boilerplate_segments(df, min_docs=min_docs)
     segs = df.select(
-        F.col(host_col).alias("host"),
+        "host",
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "[.] ")).alias("pos", "seg"),
+        F.posexplode(F.split("text", "[.] ")).alias("pos", "seg"),
     ).select("host", "doc_id", "pos", F.md5("seg").alias("seg_md5"))
     bad = segs.join(bp, ["host", "seg_md5"]).select("doc_id", "pos")
-    return _drop_segment_positions(df, bad, text_col, keep=keep)
+    return _drop_segment_positions(df, bad, keep=keep)
 
 
 # ----------------------------------------------------------------------
@@ -754,12 +726,15 @@ def remove_boilerplate(
 # on text.  A df-style cap bounds boilerplate-dominated window hashes
 # exactly like the shingle df_cap.
 
+#: default cap on a window hash's occurrences in the repeat report
+DF_CAP = 1024
 
-def _window_hashes(df: DataFrame, width: int, text_col: str) -> DataFrame:
+
+def _window_hashes(df: DataFrame, width: int) -> DataFrame:
     """(doc_id, pos, wh): the md5 of every ``width``-word window, at
     0-based word offset ``pos``; documents under ``width`` words have
     none."""
-    ws = split_words(df, text_col, keep=("doc_id",), min_words=width)
+    ws = split_words(df, keep=("doc_id",), min_words=width)
     wins = F.expr(
         f"transform(sequence(1, size(ws) - {width - 1}), "
         f"j -> struct(j - 1 AS pos, md5(concat_ws(' ', slice(ws, j, {width}))) AS wh))"
@@ -781,31 +756,28 @@ def _repeated(wins: DataFrame, df_cap: int) -> DataFrame:
     )
 
 
-def repeated_windows(
-    df: DataFrame, width: int = 20, text_col: str = "text", df_cap: int = 1024
-) -> DataFrame:
+def repeated_windows(df: DataFrame, width: int = 20, df_cap: int = DF_CAP) -> DataFrame:
     """Cross-document repeated ``width``-word windows:
     (wh, n_docs, n_occurrences), restricted to windows seen in ≥ 2
     distinct documents.  Hashes occurring more than ``df_cap`` times
     total are dropped — the boilerplate guard, applied as a HAVING on
     the same aggregate (no extra shuffle), mirroring the shingle
     df_cap convention."""
-    return _repeated(_window_hashes(df, width, text_col), df_cap)
+    return _repeated(_window_hashes(df, width), df_cap)
 
 
-def repeated_spans(
-    df: DataFrame, width: int = 20, text_col: str = "text", df_cap: int = 1024
-) -> DataFrame:
+def repeated_spans(df: DataFrame, width: int = 20) -> DataFrame:
     """Per-document spans of cross-document repeated windows:
     (doc_id, pos, wh) — word offset ``pos`` where a window starts that
-    also appears in at least one other document.  Downstream cutters
+    also appears in at least one other document (windows over the
+    :data:`DF_CAP` occurrence cap excluded).  Downstream cutters
     merge overlapping spans and excise [pos, pos+width) runs; this
     operator only REPORTS them (cut policy is corpus-specific).
 
     The join back is digest-keyed: the repeated set is typically a
     tiny fraction of all windows, so AQE broadcasts it at runtime."""
-    wins = _window_hashes(df, width, text_col)
-    rep = _repeated(wins, df_cap).select("wh")
+    wins = _window_hashes(df, width)
+    rep = _repeated(wins, DF_CAP).select("wh")
     return wins.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("pos").cast("bigint").alias("pos"),
@@ -813,13 +785,7 @@ def repeated_spans(
     ).join(rep, "wh").select("doc_id", "pos", "wh")
 
 
-def stratified_sample(
-    df: DataFrame,
-    rates_e4: dict,
-    default_e4: int = 0,
-    source_col: str = "source",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def stratified_sample(df: DataFrame, rates_e4: dict, default_e4: int = 0) -> DataFrame:
     """Deterministic per-stratum sampling — the mixture-weighting step
     of a training-data pipeline (down-weight crawl-heavy sources,
     up-weight curated ones).  ``rates_e4`` maps stratum value →
@@ -838,23 +804,21 @@ def stratified_sample(
         for s, r in sorted(rates_e4.items())
     )
     if cases:
-        rate = f"(CASE {source_col} {cases} ELSE {int(default_e4)} END)"
+        rate = f"(CASE source {cases} ELSE {int(default_e4)} END)"
     else:
         rate = str(int(default_e4))
-    h = f"CAST(conv(substring(md5(CAST({key_col} AS STRING)), 1, 8), 16, 10) AS BIGINT)"
+    h = "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"
     return df.where(F.expr(f"{h} < ({rate} * {1 << 32}) div 10000"))
 
 
-def repeated_window_stats(
-    df: DataFrame, width: int = 20, text_col: str = "text", df_cap: int = 1024
-) -> DataFrame:
+def repeated_window_stats(df: DataFrame, width: int = 20, df_cap: int = DF_CAP) -> DataFrame:
     """No-silent-caps accounting for :func:`repeated_windows`: one row
     (n_window_hashes, n_repeated, n_capped, occurrences_capped) — how
     many distinct window digests exist, how many are cross-document
     repeats, and how much repeat mass the ``df_cap`` HAVING guard
     silently removed from the report (same monitoring convention as
     ``lsh_bucket_stats`` / ``shingle_df_stats``)."""
-    per = _window_hashes(df, width, text_col).groupBy("wh").agg(
+    per = _window_hashes(df, width).groupBy("wh").agg(
         F.countDistinct("doc_id").alias("nd"), F.count(F.lit(1)).alias("no")
     )
     rep = (F.col("nd") >= 2).cast("int")
@@ -877,16 +841,16 @@ def _most_frequent(rows: DataFrame, key: str, k: int) -> DataFrame:
     return counts.orderBy(F.desc("n"), key).limit(k)
 
 
-def vocab_topk(df: DataFrame, vocab_size: int = 1000, text_col: str = "text") -> DataFrame:
+def vocab_topk(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
     """Global top-``vocab_size`` vocabulary by corpus frequency:
     (word, n).  Ties break lexicographically so the vocabulary is
     deterministic.  One explode + one keyed agg (map-side combined) +
     a single top-k sort over the AGGREGATED word table (vocabulary-
     sized, not corpus-sized)."""
-    return _most_frequent(split_words(df, text_col, explode=True), "word", vocab_size)
+    return _most_frequent(split_words(df, explode=True), "word", vocab_size)
 
 
-def oov_stats(df: DataFrame, vocab_size: int = 1000, text_col: str = "text") -> DataFrame:
+def oov_stats(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
     """(doc_id, n_tokens, n_oov, oov_ratio_e4) — out-of-vocabulary
     token share against the corpus' own top-``vocab_size`` vocabulary.
     The deterministic cousin of perplexity bucketing (CCNet-style):
@@ -900,7 +864,7 @@ def oov_stats(df: DataFrame, vocab_size: int = 1000, text_col: str = "text") -> 
     shuffled on a word key."""
     # one token stream feeds both the vocabulary build and the
     # per-document counts
-    toks = split_words(df, text_col, keep=(DOC_ID,), explode=True)
+    toks = split_words(df, keep=(DOC_ID,), explode=True)
     vocab = _most_frequent(toks, "word", vocab_size).select("word")
     return (
         toks.join(F.broadcast(vocab.withColumn("iv", F.lit(1))), "word", "left")
@@ -927,14 +891,14 @@ def oov_stats(df: DataFrame, vocab_size: int = 1000, text_col: str = "text") -> 
 _BIGRAM_EXPR = "transform(sequence(1, size(ws) - 1), j -> concat_ws(' ', slice(ws, j, 2)))"
 
 
-def bigram_lm(df: DataFrame, lm_size: int = 4096, text_col: str = "text") -> DataFrame:
+def bigram_lm(df: DataFrame, lm_size: int = 4096) -> DataFrame:
     """(bigram, n): the corpus' top-``lm_size`` word bigrams by
     frequency — the count-based language model behind
     :func:`lm_coverage`.  Ties break lexicographically so the model is
     deterministic.  Same shape as :func:`vocab_topk`: one explode, one
     map-side-combined keyed agg, one top-k over the AGGREGATED bigram
     table (model-sized, not corpus-sized)."""
-    bigrams = split_words(df, text_col, min_words=2).select(
+    bigrams = split_words(df, min_words=2).select(
         F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram")
     )
     return _most_frequent(bigrams, "bigram", lm_size)
@@ -944,7 +908,6 @@ def lm_coverage(
     df: DataFrame,
     lm: DataFrame | None = None,
     lm_size: int = 4096,
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_bigrams, n_known, known_mass, coverage_e4) — the
     integer-exact stand-in for CCNet's LM-perplexity fluency filter:
@@ -965,7 +928,7 @@ def lm_coverage(
     bigram key."""
     # one bigram stream feeds both the default model build and the
     # per-document coverage
-    bg = split_words(df, text_col, keep=(DOC_ID,), min_words=2).select(
+    bg = split_words(df, keep=(DOC_ID,), min_words=2).select(
         "doc_id", F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram")
     )
     if lm is None:
@@ -993,8 +956,6 @@ def lm_coverage(
 def mixture_rates(
     df: DataFrame,
     target_shares_e4: dict,
-    source_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """(source, n_tokens, rate_e4) — the acceptance rates that reshape
     the corpus into a target token mixture: sources are downsampled so
@@ -1025,9 +986,9 @@ def mixture_rates(
     )
     share = f"(CASE source {cases} ELSE 0 END)" if cases else "0"
     tok = (
-        df.groupBy(F.col(source_col).alias("source"))
+        df.groupBy("source")
         .agg(
-            F.sum(F.expr(f"size({words_sql(text_col)})"))
+            F.sum(F.expr(f"size({words_sql()})"))
             .cast("bigint")
             .alias("n_tokens")
         )
@@ -1052,7 +1013,6 @@ def mixture_rates(
 
 
 def _quality_fail_expr(
-    text_col: str,
     min_tokens: int,
     min_stopword_ratio_e4: int,
     min_alpha_ratio_e4: int,
@@ -1069,16 +1029,16 @@ def _quality_fail_expr(
     other two disjuncts keep their NULL semantics and always stay)."""
     stop = _in_list(STOPWORDS)
     stop_term = (
-        f" OR CAST(round(10000.0 * size(filter(split({text_col}, ' '), w -> w IN ({stop})))"
-        f" / size(split({text_col}, ' '))) AS BIGINT) < {min_stopword_ratio_e4}"
+        f" OR CAST(round(10000.0 * size(filter(split(text, ' '), w -> w IN ({stop})))"
+        f" / size(split(text, ' '))) AS BIGINT) < {min_stopword_ratio_e4}"
         if min_stopword_ratio_e4 > 0
         else ""
     )
     return (
-        f"(size(split({text_col}, ' ')) < {min_tokens}"
+        f"(size(split(text, ' ')) < {min_tokens}"
         f"{stop_term}"
-        f" OR CAST(round(10000.0 * length(regexp_replace({text_col}, '[^a-z]', ''))"
-        f" / length({text_col})) AS BIGINT) < {min_alpha_ratio_e4})"
+        " OR CAST(round(10000.0 * length(regexp_replace(text, '[^a-z]', ''))"
+        f" / length(text)) AS BIGINT) < {min_alpha_ratio_e4})"
     )
 
 
@@ -1121,7 +1081,6 @@ def top_word_frac_e4_expr(text_col: str = "text") -> str:
 
 def corpus_report(
     df: DataFrame,
-    text_col: str = "text",
     min_tokens: int = 40,
     min_stopword_ratio_e4: int = 100,
     min_alpha_ratio_e4: int = 7000,
@@ -1134,15 +1093,13 @@ def corpus_report(
     map-side-combined aggregate (the distinct-digest count adds
     Spark's standard two-phase distinct expansion, over 32-char
     digests only — never text)."""
-    fail = _quality_fail_expr(
-        text_col, min_tokens, min_stopword_ratio_e4, min_alpha_ratio_e4
-    )
+    fail = _quality_fail_expr(min_tokens, min_stopword_ratio_e4, min_alpha_ratio_e4)
     proj = df.selectExpr(
-        f"md5({text_col}) AS fp",
-        f"CAST(size({words_sql(text_col)}) AS BIGINT) AS n_toks",
-        f"CAST(length({text_col}) AS BIGINT) AS nc",
+        "md5(text) AS fp",
+        f"CAST(size({words_sql()}) AS BIGINT) AS n_toks",
+        "CAST(length(text) AS BIGINT) AS nc",
         f"CAST(CASE WHEN {fail} THEN 0 ELSE 1 END AS BIGINT) AS ok",
-        f"{_lang_case(text_col)} AS lang",
+        f"{_lang_case()} AS lang",
     )
     agg = proj.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1176,9 +1133,7 @@ def corpus_report(
     )
 
 
-def vocab_drift(
-    a: DataFrame, b: DataFrame, vocab_size: int = 1000, text_col: str = "text"
-) -> DataFrame:
+def vocab_drift(a: DataFrame, b: DataFrame, vocab_size: int = 1000) -> DataFrame:
     """One row (n_vocab, n_words_a, n_words_b, tv_distance_e4):
     total-variation distance between two corpora's word distributions
     over the UNION of their top-``vocab_size`` vocabularies, with each
@@ -1200,7 +1155,7 @@ def vocab_drift(
     union vocabulary with 1-row total tables broadcast."""
     def _counts(df):
         return (
-            split_words(df, text_col, explode=True)
+            split_words(df, explode=True)
             .groupBy("word")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
@@ -1253,7 +1208,7 @@ def vocab_drift(
     )
 
 
-def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-``k`` salient terms by tf·rarity:
     (doc_id, word, tf, df, score_e4, rank) where ``score_e4 =
     round(10000 · tf / df)`` and ``df`` is the number of documents
@@ -1269,7 +1224,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFr
     corpus; the tf⋈df join shuffles on the word key with both sides
     already aggregate-sized; top-k is a doc-partitioned window over
     k·docs candidate rows, never a global sort."""
-    toks = split_words(df, text_col, keep=(DOC_ID,), explode=True)
+    toks = split_words(df, keep=(DOC_ID,), explode=True)
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
@@ -1291,7 +1246,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFr
     )
 
 
-def importance_sample(df: DataFrame, text_col: str = "text") -> DataFrame:
+def importance_sample(df: DataFrame) -> DataFrame:
     """Soft quality-weighted resampling (the deterministic cousin of
     DCLM-style importance sampling): instead of a hard quality cutoff,
     each document is kept with probability proportional to its quality
@@ -1306,8 +1261,8 @@ def importance_sample(df: DataFrame, text_col: str = "text") -> DataFrame:
     stable under retries/resume at 10^12 rows.  Returns the kept rows
     as (doc_id, weight_e4)."""
     weight = (
-        f"CAST(round(10000.0 * length(regexp_replace({text_col}, '[^a-z]', ''))"
-        f" / length({text_col})) AS BIGINT)"
+        "CAST(round(10000.0 * length(regexp_replace(text, '[^a-z]', ''))"
+        " / length(text)) AS BIGINT)"
     )
     u32 = "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"
     return df.where(F.expr(f"{u32} * 10000 < {weight} * {1 << 32}")).selectExpr(
@@ -1330,22 +1285,20 @@ def classifier_weights(n_buckets: int = 256) -> list[int]:
     ]
 
 
-def classifier_score_sql(text_col: str = "text", n_buckets: int = 256) -> str:
+def classifier_score_sql(text_col: str = "text") -> str:
     """The classifier score as one SQL expression (shared by
     :func:`quality_classifier` and map-only pipeline gates — a filter
     on this expression never shuffles)."""
-    w = classifier_weights(n_buckets)
+    w = classifier_weights()
     warr = "array(" + ",".join(f"{x}L" for x in w) + ")"
     u32 = "CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT)"
     return (
         f"aggregate({words_sql(text_col)}, 0L, "
-        f"(acc, t) -> acc + element_at({warr}, CAST({u32} % {n_buckets} AS INT) + 1))"
+        f"(acc, t) -> acc + element_at({warr}, CAST({u32} % {len(w)} AS INT) + 1))"
     )
 
 
-def quality_classifier(
-    df: DataFrame, n_buckets: int = 256, text_col: str = "text"
-) -> DataFrame:
+def quality_classifier(df: DataFrame) -> DataFrame:
     """fastText/CCNet-style hashed linear quality classifier:
     score(doc) = Σ_w weights[u32(md5(w)) mod B], label = score > 0.
     Returns (doc_id, n_tokens, score, label) — all exact integers, so
@@ -1359,15 +1312,15 @@ def quality_classifier(
     zero Python; at 10^12 docs this is embarrassingly parallel and
     retry-stable, the same plan-literal pattern as
     :func:`stratified_sample`."""
-    score = classifier_score_sql(text_col, n_buckets)
+    score = classifier_score_sql()
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        f"CAST(size({words_sql(text_col)}) AS BIGINT) AS n_tokens",
+        f"CAST(size({words_sql()}) AS BIGINT) AS n_tokens",
         f"{score} AS score",
     ).selectExpr("doc_id", "n_tokens", "score", "score > 0 AS label")
 
 
-def word_freq_histogram(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freq_histogram(df: DataFrame) -> DataFrame:
     """Zipf-style frequency-of-frequencies: (freq, n_words) — how many
     distinct words occur exactly ``freq`` times.  The standard corpus
     health plot (a natural corpus is ~log-linear; dedup failures and
@@ -1378,7 +1331,7 @@ def word_freq_histogram(df: DataFrame, text_col: str = "text") -> DataFrame:
     collapses vocab to |distinct freqs| rows; no row ever carries text
     past the first exchange."""
     counts = (
-        split_words(df, text_col, explode=True)
+        split_words(df, explode=True)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -1387,26 +1340,24 @@ def word_freq_histogram(df: DataFrame, text_col: str = "text") -> DataFrame:
     ).select(F.col("freq").cast("bigint"), "n_words")
 
 
-def holdout_split(
-    df: DataFrame, group_col: str = "source", val_pct: int = 10
-) -> DataFrame:
+def holdout_split(df: DataFrame, val_pct: int = 10) -> DataFrame:
     """Leakage-free train/validation assignment: the md5-uniform split
     is keyed on the GROUP (host/source), never the document, so near-
     duplicate documents sharing a group can never straddle the split —
     the contamination channel a doc-keyed split leaves open.
 
     Map-only (plan-literal threshold, no join, no shuffle, no RNG);
-    returns (doc_id, <group_col>, split)."""
-    u32 = f"CAST(conv(substring(md5({group_col}), 1, 8), 16, 10) AS BIGINT)"
+    returns (doc_id, source, split)."""
+    u32 = "CAST(conv(substring(md5(source), 1, 8), 16, 10) AS BIGINT)"
     thr = (val_pct * (1 << 32)) // 100
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        group_col,
+        "source",
         f"CASE WHEN {u32} < {thr} THEN 'val' ELSE 'train' END AS split",
     )
 
 
-def url_features(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_features(df: DataFrame) -> DataFrame:
     """Per-URL quality/filtering signals (the RefinedWeb/C4-style URL
     layer: scheme, host shape, path depth, query noise).  Pure JVM SQL
     — ``parse_url`` + string kernels in whole-stage codegen; map-only.
@@ -1414,9 +1365,9 @@ def url_features(df: DataFrame, url_col: str = "url") -> DataFrame:
     Appends: ``host, tld, path_depth, n_params, is_https,
     has_tracking, url_len``.
     """
-    host = f"parse_url({url_col}, 'HOST')"
-    path = f"parse_url({url_col}, 'PATH')"
-    query = f"parse_url({url_col}, 'QUERY')"
+    host = "parse_url(url, 'HOST')"
+    path = "parse_url(url, 'PATH')"
+    query = "parse_url(url, 'QUERY')"
     return df.selectExpr(
         "*",
         f"{host} AS host",
@@ -1426,9 +1377,9 @@ def url_features(df: DataFrame, url_col: str = "url") -> DataFrame:
         f"ELSE size(split(trim(BOTH '/' FROM {path}), '/')) END AS BIGINT) AS path_depth",
         f"CAST(CASE WHEN {query} IS NULL OR {query} = '' THEN 0 "
         f"ELSE size(split({query}, '&')) END AS BIGINT) AS n_params",
-        f"{url_col} LIKE 'https://%' AS is_https",
-        f"{url_col} RLIKE '[?&](utm_[a-z]+|fbclid|gclid|mc_eid)=' AS has_tracking",
-        f"CAST(length({url_col}) AS BIGINT) AS url_len",
+        "url LIKE 'https://%' AS is_https",
+        "url RLIKE '[?&](utm_[a-z]+|fbclid|gclid|mc_eid)=' AS has_tracking",
+        "CAST(length(url) AS BIGINT) AS url_len",
     )
 
 
@@ -1437,22 +1388,20 @@ def top_k_per_group(
     k: int,
     group_col: str,
     order_expr: str,
-    key_col: str = "doc_id",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Keep the top ``k`` rows of every group under ``(order_expr asc,
-    key asc)`` — :func:`cap_per_host` generalized to an arbitrary
+    doc_id asc)`` — :func:`cap_per_host` generalized to an arbitrary
     deterministic ordering (best-N-docs-per-source selection, error
     triage, per-host sampling).  Same two-phase skew safety: phase 1
     ranks within ``(group, hash-salt)`` keeping ≤ k per salted bucket
-    (a hot group spreads over ``salt_buckets`` bounded tasks), phase 2
-    re-ranks the ≤ k·salt_buckets survivors exactly — every member of
+    (a hot group spreads over :data:`SALT_BUCKETS` bounded tasks), phase 2
+    re-ranks the ≤ k·SALT_BUCKETS survivors exactly — every member of
     the true top-k is in its own bucket's top-k, so the result is
     IDENTICAL to the single-window form."""
     from pyspark.sql.window import Window
 
-    order = (F.expr(order_expr), F.col(key_col))
-    salt = F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(salt_buckets))
+    order = (F.expr(order_expr), F.col("doc_id"))
+    salt = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(SALT_BUCKETS))
     w1 = Window.partitionBy(F.col(group_col), salt).orderBy(*order)
     w2 = Window.partitionBy(group_col).orderBy(*order)
     return (

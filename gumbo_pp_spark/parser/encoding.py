@@ -284,11 +284,11 @@ def _charset_from_content(v: str) -> str | None:
     return v[i:j] or None
 
 
-def prescan(data: bytes, limit: int = 1024) -> str | None:
-    """Prescan the first ``limit`` bytes for a meta-declared encoding;
+def prescan(data: bytes) -> str | None:
+    """Prescan the first 1024 bytes for a meta-declared encoding;
     returns a WHATWG encoding name (after the utf-16→utf-8 and
     x-user-defined→windows-1252 substitutions) or None."""
-    d = bytes(data[:limit])
+    d = bytes(data[:1024])
     n = len(d)
     i = 0
     while i < n:

@@ -188,7 +188,6 @@ _BLOCK_END = frozenset(
 _IMPLIED_END = frozenset("dd dt li optgroup option p rb rp rt rtc".split())
 # table-part start tags handled by the cell/caption/stray-part rules
 _TABLEISH = frozenset("td th tr caption col colgroup tbody thead tfoot".split())
-_TABLE_SCOPE = frozenset({"table"})
 
 # ----------------------------------------------------------------------
 # Per-tag flag table for the in-body start-tag FAST PATH.  The hot

@@ -113,13 +113,8 @@ P_CLOSERS = frozenset(
 
 HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 
-# Elements that terminate an <li> / <dt>-<dd> implied-end-tag scan.
-LIST_SCOPE_STOPS = frozenset({"ul", "ol", "div", "address", "html", "table", "td", "th", "caption"})
-
 TABLE_SECTIONS = frozenset({"tbody", "thead", "tfoot"})
-TABLE_CONTEXT = frozenset({"table", "tbody", "thead", "tfoot", "tr", "td", "th", "caption", "colgroup"})
 
 # Scope boundaries for "has element in scope" checks (simplified from
 # the WHATWG list: we do not track MathML/SVG integration points).
 SCOPE_BOUNDARIES = frozenset({"html", "table", "td", "th", "caption", "applet", "object", "marquee", "template"})
-BUTTON_SCOPE_EXTRA = frozenset({"button"})

@@ -136,9 +136,7 @@ def build_training_corpus(
     # including NULL semantics (a NULL ratio fails both forms).
     docs = docs.where(
         ~F.expr(
-            _quality_fail_expr(
-                "text", min_tokens, 0, min_alpha_ratio_e4
-            )
+            _quality_fail_expr(min_tokens, 0, min_alpha_ratio_e4)
         )
     )
 

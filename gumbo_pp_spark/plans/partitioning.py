@@ -44,22 +44,27 @@ from pyspark.sql import DataFrame, functions as F
 # salt/bin columns null).
 HOST_EXPR = "coalesce(try_parse_url(url, 'HOST'), '__null__')"
 
+#: floor of the scan split size :func:`tune_input_splits` chooses
+MIN_SPLIT_BYTES = 256 << 10
+#: ``openCostInBytes`` set by :func:`tune_input_splits`
+OPEN_COST = 64 << 10
+
 
 def salt_skewed_keys(
     df: DataFrame,
-    key_expr: str = HOST_EXPR,
     n_partitions: int = 64,
     skew_factor: float = 2.0,
 ) -> DataFrame:
-    """Add ``part_key``/``salt`` columns and repartition so no key's
-    rows exceed ~``skew_factor``× the mean partition load.
+    """Add ``part_key`` (the url's host, :data:`HOST_EXPR`) and ``salt``
+    columns and repartition so no key's rows exceed ~``skew_factor``×
+    the mean partition load.
 
     Heavy-hitter sketch: one map-side-combined count per key (the key
     cardinality — hosts — is orders of magnitude below row count, so
     this aggregate is cheap and exact).  Heavy keys are split into
     ``ceil(count / target)`` salts via a deterministic row hash.
     """
-    keyed = df.withColumn("part_key", F.expr(key_expr))
+    keyed = df.withColumn("part_key", F.expr(HOST_EXPR))
     counts = keyed.groupBy("part_key").count()
     total = df.count()
     mean = max(1.0, total / n_partitions)
@@ -86,13 +91,10 @@ def salt_skewed_keys(
     return salted.repartition(n_partitions, "part_key", "salt")
 
 
-def size_balanced_bins(
-    df: DataFrame,
-    key_expr: str = HOST_EXPR,
-    bytes_expr: str = "length(html)",
-    target_bytes: int = 64 << 20,
-) -> DataFrame:
-    """Repartition so each partition carries ≈``target_bytes`` of html.
+def size_balanced_bins(df: DataFrame, target_bytes: int = 64 << 20) -> DataFrame:
+    """Repartition so each partition carries ≈``target_bytes`` of html,
+    keeping each url host (:data:`HOST_EXPR`) whole unless it alone
+    exceeds ``target_bytes``.
 
     Scale-safe plan (no whole-key-set collect — at CC scale there are
     ~10^8 hosts and a driver-side FFD over all of them is a bottleneck):
@@ -109,8 +111,8 @@ def size_balanced_bins(
     Arrow batches inside the parse UDF then see bounded byte budgets
     regardless of document-size heavy tails.
     """
-    keyed = df.withColumn("part_key", F.expr(key_expr)).withColumn(
-        "doc_bytes", F.expr(bytes_expr).cast("bigint")
+    keyed = df.withColumn("part_key", F.expr(HOST_EXPR)).withColumn(
+        "doc_bytes", F.length("html").cast("bigint")
     )
     totals = keyed.groupBy("part_key").agg(F.sum("doc_bytes").alias("b"))
     # one job: light byte total + the (small) heavy-key list together
@@ -206,9 +208,7 @@ def tune_input_splits(
     spark,
     input_dir: str,
     waves: int = 3,
-    min_split_bytes: int = 256 << 10,
     max_split_bytes: int = 128 << 20,
-    open_cost: int = 64 << 10,
     cores: int | None = None,
 ) -> int:
     """Level-aware scan split tuning: size ``maxPartitionBytes`` off
@@ -229,7 +229,7 @@ def tune_input_splits(
     cores anyway — the tuner only matters where input ÷ cores is
     small.
 
-    ``openCostInBytes`` is lowered to ``open_cost`` (default 64 KB)
+    ``openCostInBytes`` is lowered to :data:`OPEN_COST` (64 KB)
     because the 4 MB default makes packing file-count-bound for small
     files, capping the split count regardless of ``maxPartitionBytes``.
 
@@ -247,8 +247,8 @@ def tune_input_splits(
     if cores is None:
         cores = max(1, spark.sparkContext.defaultParallelism)
     target_splits = max(1, cores * waves)
-    capacity = (total + n_files * open_cost) // target_splits + 1
-    capacity = max(min_split_bytes, min(max_split_bytes, capacity))
+    capacity = (total + n_files * OPEN_COST) // target_splits + 1
+    capacity = max(MIN_SPLIT_BYTES, min(max_split_bytes, capacity))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(int(capacity)))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(int(open_cost)))
+    spark.conf.set("spark.sql.files.openCostInBytes", str(OPEN_COST))
     return int(capacity)

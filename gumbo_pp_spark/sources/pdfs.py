@@ -30,8 +30,8 @@ def _esc(s: str) -> str:
     return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
 
 
-def _content_stream(lines: list[str], y0: int = 720) -> bytes:
-    parts = ["BT", "/F1 12 Tf", f"72 {y0} Td"]
+def _content_stream(lines: list[str]) -> bytes:
+    parts = ["BT", "/F1 12 Tf", "72 720 Td"]
     for i, ln in enumerate(lines):
         if i:
             parts.append("0 -14 TD")

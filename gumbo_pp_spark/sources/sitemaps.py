@@ -25,18 +25,14 @@ SITEMAP_ENTRY_SCHEMA = (
 )
 
 
-def parse_sitemaps(
-    df: DataFrame, xml_col: str = "sitemap_xml", host_col: str = "host"
-) -> DataFrame:
+def parse_sitemaps(df: DataFrame) -> DataFrame:
     """(host, sitemap_xml) → one row per URL entry:
     ``host, loc, lastmod, priority``.  All JVM-side (from_xml +
     explode); malformed XML yields a null struct → zero rows for that
     sitemap (PERMISSIVE mode), never a task failure."""
     parsed = df.select(
-        F.col(host_col).alias("host"),
-        F.from_xml(
-            F.col(xml_col), f"STRUCT<url: {SITEMAP_ENTRY_SCHEMA}>"
-        ).alias("p"),
+        "host",
+        F.from_xml("sitemap_xml", f"STRUCT<url: {SITEMAP_ENTRY_SCHEMA}>").alias("p"),
     )
     return parsed.select(
         "host", F.explode("p.url").alias("u")

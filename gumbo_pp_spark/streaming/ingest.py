@@ -59,7 +59,6 @@ def stream_contamination_alerts(
     schema: str,
     evals: DataFrame,
     n: int = 13,
-    text_col: str = "text",
 ) -> DataFrame:
     """Continuous contamination MONITOR: every (doc_id, gram) hit of an
     incoming document stream against a STATIC eval set, as an
@@ -73,19 +72,17 @@ def stream_contamination_alerts(
     via ``foreachBatch`` — see :func:`stream_decontaminate`.)"""
     from ..operators.textstats import _ngram_expr, eval_ngrams, split_words
 
-    grams = eval_ngrams(evals, n, text_col)  # static side, broadcast
+    grams = eval_ngrams(evals, n)  # static side, broadcast
     docs = spark.readStream.schema(schema).parquet(input_dir)
     return (
-        split_words(docs, text_col, keep=("doc_id",), min_words=n)
+        split_words(docs, keep=("doc_id",), min_words=n)
         .select("doc_id", F.explode(F.expr(_ngram_expr(n))).alias("gram"))
         .join(F.broadcast(grams), "gram")
         .select("doc_id", "gram")
     )
 
 
-def decontaminate_batch(
-    batch_df: DataFrame, grams: DataFrame, n: int = 13, text_col: str = "text"
-) -> DataFrame:
+def decontaminate_batch(batch_df: DataFrame, grams: DataFrame, n: int = 13) -> DataFrame:
     """Per-micro-batch clean transform: the batch operator's JVM shape
     (map-only n-gram explode → broadcast hash join on the gram table →
     left-anti on doc_id).  No Python UDF anywhere in the plan — this is
@@ -93,7 +90,7 @@ def decontaminate_batch(
     (tests/test_multimodal_streaming.py pins the plan)."""
     from ..operators.textstats import decontaminate
 
-    return decontaminate(batch_df, None, n, text_col, grams=grams)
+    return decontaminate(batch_df, None, n, grams=grams)
 
 
 def stream_decontaminate(
@@ -104,7 +101,6 @@ def stream_decontaminate(
     out_dir: str,
     checkpoint_dir: str,
     n: int = 13,
-    text_col: str = "text",
 ):
     """Continuously decontaminate a document stream: write out only
     documents sharing NO word ``n``-gram with the static eval set.
@@ -134,11 +130,11 @@ def stream_decontaminate(
     as a partition column; drop it if unwanted."""
     from ..operators.textstats import eval_ngrams
 
-    grams = eval_ngrams(evals, n, text_col).cache()
+    grams = eval_ngrams(evals, n).cache()
     grams.count()  # materialize once, before the first micro-batch
 
     def _write_clean(batch_df: DataFrame, batch_id: int) -> None:
-        decontaminate_batch(batch_df, grams, n, text_col).write.mode(
+        decontaminate_batch(batch_df, grams, n).write.mode(
             "overwrite"
         ).parquet(f"{out_dir}/batch={batch_id}")
 
@@ -195,9 +191,7 @@ def stream_warc_extract(
     )
 
 
-def stream_host_blocklist(
-    stream: DataFrame, blocked_hosts: DataFrame, host_col: str = "host"
-) -> DataFrame:
+def stream_host_blocklist(stream: DataFrame, blocked_hosts: DataFrame) -> DataFrame:
     """Apply a precomputed domain blocklist (e.g.
     :func:`~gumbo_pp_spark.operators.textstats.host_quality_gate`'s
     blocked set, refreshed by a periodic batch job) to a document
@@ -209,5 +203,5 @@ def stream_host_blocklist(
         blocked_hosts.select(F.col("host").alias("_blocked_host")).distinct()
     )
     return stream.join(
-        blocked, F.col(host_col) == F.col("_blocked_host"), "left_anti"
+        blocked, F.col("host") == F.col("_blocked_host"), "left_anti"
     )

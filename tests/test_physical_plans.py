@@ -495,6 +495,53 @@ def test_no_pandas_operators():
     assert sites == [], sites
 
 
+def test_every_public_default_is_set_by_a_caller():
+    """A defaulted parameter of a top-level public function in
+    ``gumbo_pp_spark/`` is an option only if something sets it: a call
+    (callee ``Name`` id or ``Attribute`` attr equal to the function's
+    name) in the program, the jobs, the tests, perfbench, ``bench.py``,
+    ``__spark_entry__.py`` or ``selfcheck.py`` passes it by keyword, by
+    position, or through ``*args``/``**kwargs``.  One nothing sets is a
+    constant."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    program = sorted(root.joinpath("gumbo_pp_spark").rglob("*.py"))
+    callers = [*program, *root.joinpath("jobs").rglob("*.py"),
+               *root.joinpath("tests").rglob("*.py"),
+               *root.joinpath("perfbench").rglob("*.py"),
+               root / "bench.py", root / "__spark_entry__.py", root / "selfcheck.py"]
+    calls: dict[str, list[ast.Call]] = {}
+    for path in callers:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", getattr(node.func, "attr", None))
+                calls.setdefault(name, []).append(node)
+
+    def is_set(fn, arg, pos):
+        for c in calls.get(fn, ()):
+            if (any(isinstance(a, ast.Starred) for a in c.args)
+                    or any(k.arg in (None, arg) for k in c.keywords)
+                    or pos is not None and len(c.args) > pos):
+                return True
+        return False
+
+    unset = []
+    for path in program:
+        for fn in ast.parse(path.read_text(), str(path)).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            params = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
+            params += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            unset += [f"{path.relative_to(root)}::{fn.name}({arg})"
+                      for arg, i in params if not is_set(fn.name, arg, i)]
+    assert unset == [], f"{len(unset)} unset: {unset}"
+
+
 def test_revenue_by_nation_broadcasts_all_dims(spark):
     # TPC-H Q5 analogue: every dimension side must broadcast; the only
     # wide exchanges are the final groupBy (and AQE bookkeeping) — the
