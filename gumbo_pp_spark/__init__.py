@@ -18,7 +18,4 @@ analytics engine for Common-Crawl-style web page corpora:
 * :mod:`gumbo_pp_spark.sources` — pages-table synthesis and readers.
 """
 
-from .nodetable import NodeTable, to_string  # noqa: F401
-from .parser.html5 import parse_html  # noqa: F401
-
 __version__ = "0.1.0"

@@ -121,20 +121,13 @@ def parse_css(selector: str) -> list[list[tuple[str, str]]]:
 # ----------------------------------------------------------------------
 # compound → Matcher
 # ----------------------------------------------------------------------
-_ANY_ELEMENT = Matcher(lambda nt: nt.type == ELEMENT, "css(*)")
+_ANY_ELEMENT = Matcher(lambda nt, gate: gate & (nt.type == ELEMENT), "css(*)")
 
 
 def _attr_token(name: str, token: str) -> Matcher:
     """CSS ``[a~=v]``: whitespace-token membership, any attribute (the
     general form of class_type.has_token)."""
-    def pred(v: str) -> bool:
-        return token in v.split()
-
-    return Matcher(
-        lambda nt: m._obj_pred(nt.attr_values(name), pred),
-        f"css[{name}~={token}]",
-        lambda nt, gate: m._obj_pred(nt.attr_values(name), pred, gate),
-    )
+    return m._value_matcher(name, m._has_token(token), f"css[{name}~={token}]")
 
 
 _ATTR_OPS = {
@@ -258,17 +251,19 @@ def css(selector: str) -> Matcher:
         for chain in parse_css(selector)
     ]
 
-    def fn(nt: NodeTable) -> np.ndarray:
+    def mask(nt: NodeTable, gate: np.ndarray) -> np.ndarray:
         out = np.zeros(nt.n, dtype=bool)
         for chain in groups:
-            _, first = chain[0]
-            cur = first.fn(nt)
-            for comb, matcher in chain[1:]:
-                structural = _STRUCTURAL[comb](nt, cur)
-                # structural gate first: the compound's priciest
-                # conjunct then runs on candidate rows only
-                cur = matcher.eval(nt, structural)
+            cur = np.ones(nt.n, dtype=bool)
+            for k, (comb, matcher) in enumerate(chain):
+                if k:
+                    # structural gate first: the compound's priciest
+                    # conjunct then runs on candidate rows only
+                    cur = _STRUCTURAL[comb](nt, cur)
+                # only the last compound's rows are the result; the
+                # earlier ones are context (ancestors, siblings)
+                cur = matcher.eval(nt, cur & gate if k == len(chain) - 1 else cur)
             out |= cur
         return out
 
-    return Matcher(fn, f"css({selector})", cost=1)
+    return Matcher(mask, f"css({selector})", cost=1)

@@ -33,6 +33,60 @@ def _corpus_side(df: DataFrame) -> DataFrame:
     return with_norm(ensure_min_parallelism(df)).where(F.col("norm") > 0)
 
 
+def _query_side(queries: DataFrame, *extra) -> DataFrame:
+    """The query vectors as every search operator probes with them:
+    (query_id, q_vec, q_norm, *extra), zero vectors dropped."""
+    return with_norm(queries).where(F.col("norm") > 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.col("norm").alias("q_norm"),
+        *extra,
+    )
+
+
+def _top_k(candidates: DataFrame, k: int) -> DataFrame:
+    """Per query, the ``k`` candidate vectors of highest cosine (ties
+    to the smaller vec_id), the query itself excluded.  ``candidates``
+    pairs corpus rows (vec_id, embedding, norm) with query rows
+    (query_id, q_vec, q_norm).  Returns (query_id, neighbor_id,
+    rank)."""
+    from pyspark.sql.window import Window
+
+    dot = DOT_EXPR.format(a="embedding", b="q_vec")
+    scored = candidates.where(F.col("vec_id") != F.col("query_id")).withColumn(
+        "cos", F.expr(dot) / (F.col("norm") * F.col("q_norm"))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("query_id").cast("bigint"),
+            F.col("vec_id").cast("bigint").alias("neighbor_id"),
+            F.col("rank").cast("bigint"),
+        )
+    )
+
+
+def _recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """One row (n_queries, n_exact, n_hit, recall_e4): how many of the
+    exact neighbors the approximate search also returned."""
+    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
+    return (
+        exact.agg(
+            F.countDistinct("query_id").alias("nq"),
+            F.count(F.lit(1)).alias("n_exact"),
+        )
+        .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hit")))
+        .select(
+            F.col("nq").cast("bigint").alias("n_queries"),
+            F.col("n_exact").cast("bigint").alias("n_exact"),
+            F.col("n_hit").cast("bigint").alias("n_hit"),
+            F.round(F.col("n_hit") * 10000.0 / F.col("n_exact")).cast("bigint").alias("recall_e4"),
+        )
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -47,34 +101,7 @@ def cosine_topk(
     across cores by :func:`_corpus_side`.)  Returns (query_id,
     neighbor_id, rank).
     """
-    from pyspark.sql.window import Window
-
-    base = _corpus_side(df)
-    q = (
-        with_norm(queries)
-        .where(F.col("norm") > 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_vec"),
-            F.col("norm").alias("q_norm"),
-        )
-    )
-    dot = DOT_EXPR.format(a="embedding", b="q_vec")
-    scored = (
-        base.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", F.expr(dot) / (F.col("norm") * F.col("q_norm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("bigint"),
-            F.col("vec_id").cast("bigint").alias("neighbor_id"),
-            F.col("rank").cast("bigint"),
-        )
-    )
+    return _top_k(_corpus_side(df).crossJoin(F.broadcast(_query_side(queries))), k)
 
 
 #: embedding width the hyperplane sketches are drawn for
@@ -170,40 +197,13 @@ def lsh_cosine_topk(
     bits) — the standard multi-probe LSH recall boost that costs
     ``n_planes`` extra probe rows per query instead of more tables.
     """
-    from pyspark.sql.window import Window
-
     sk = hyperplane_sketch_expr(dim, n_planes)
     base = _corpus_side(df).withColumn("bucket", F.expr(sk))
-    q = (
-        with_norm(queries)
-        .where(F.col("norm") > 0)
-        .withColumn("bucket", F.expr(sk))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_vec"),
-            F.col("norm").alias("q_norm"),
-            "bucket",
-        )
-    )
+    q = _query_side(queries, F.expr(sk).alias("bucket"))
     if multiprobe:
         probes = ", ".join(f"bucket ^ {2 ** p}" for p in range(n_planes))
         q = q.withColumn("bucket", F.explode(F.expr(f"array(bucket, {probes})")))
-    dot = DOT_EXPR.format(a="embedding", b="q_vec")
-    scored = (
-        base.join(F.broadcast(q), "bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", F.expr(dot) / (F.col("norm") * F.col("q_norm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("bigint"),
-            F.col("vec_id").cast("bigint").alias("neighbor_id"),
-            F.col("rank").cast("bigint"),
-        )
-    )
+    return _top_k(base.join(F.broadcast(q), "bucket"), k)
 
 
 def lsh_recall_vs_exact(
@@ -217,23 +217,9 @@ def lsh_recall_vs_exact(
     one row (n_queries, n_exact, n_hit, recall_e4).  This is the
     metric that gates an ANN rollout at scale; both sides are
     deterministic so the oracle recomputes it bit-for-bit."""
-    exact = cosine_topk(df, queries, k=k)
-    approx = lsh_cosine_topk(
-        df, queries, k=k, dim=dim, n_planes=n_planes
-    )
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-    return (
-        exact.agg(
-            F.countDistinct("query_id").alias("nq"),
-            F.count(F.lit(1)).alias("n_exact"),
-        )
-        .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hit")))
-        .select(
-            F.col("nq").cast("bigint").alias("n_queries"),
-            F.col("n_exact").cast("bigint").alias("n_exact"),
-            F.col("n_hit").cast("bigint").alias("n_hit"),
-            F.round(F.col("n_hit") * 10000.0 / F.col("n_exact")).cast("bigint").alias("recall_e4"),
-        )
+    return _recall(
+        cosine_topk(df, queries, k=k),
+        lsh_cosine_topk(df, queries, k=k, dim=dim, n_planes=n_planes),
     )
 
 
@@ -299,11 +285,7 @@ def ivf_topk(
 
     assigned = ivf_assignments(df, pivots)
     p = _pivot_side(pivots)
-    q = with_norm(queries).where(F.col("norm") > 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-    )
+    q = _query_side(queries)
     qdot = DOT_EXPR.format(a="q_vec", b="p_vec")
     wq = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.col("pivot_id"))
     probes = (
@@ -313,22 +295,7 @@ def ivf_topk(
         .where(F.col("prank") <= nprobe)
         .select("query_id", "q_vec", "q_norm", "pivot_id")
     )
-    dot = DOT_EXPR.format(a="embedding", b="q_vec")
-    scored = (
-        assigned.join(F.broadcast(probes), "pivot_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", F.expr(dot) / (F.col("norm") * F.col("q_norm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("bigint"),
-            F.col("vec_id").cast("bigint").alias("neighbor_id"),
-            F.col("rank").cast("bigint"),
-        )
-    )
+    return _top_k(assigned.join(F.broadcast(probes), "pivot_id"), k)
 
 
 def ivf_recall_vs_exact(
@@ -341,23 +308,9 @@ def ivf_recall_vs_exact(
     """Measured recall@k of the IVF path against the exact baseline —
     one row (n_queries, n_exact, n_hit, recall_e4), the IVF analogue
     of :func:`lsh_recall_vs_exact`."""
-    exact = cosine_topk(df, queries, k=k)
-    approx = ivf_topk(
-        df, queries, pivots, k=k, nprobe=nprobe
-    )
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-    return (
-        exact.agg(
-            F.countDistinct("query_id").alias("nq"),
-            F.count(F.lit(1)).alias("n_exact"),
-        )
-        .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hit")))
-        .select(
-            F.col("nq").cast("bigint").alias("n_queries"),
-            F.col("n_exact").cast("bigint").alias("n_exact"),
-            F.col("n_hit").cast("bigint").alias("n_hit"),
-            F.round(F.col("n_hit") * 10000.0 / F.col("n_exact")).cast("bigint").alias("recall_e4"),
-        )
+    return _recall(
+        cosine_topk(df, queries, k=k),
+        ivf_topk(df, queries, pivots, k=k, nprobe=nprobe),
     )
 
 

@@ -307,37 +307,45 @@ def sample_by_hash(df: DataFrame, rate_e4: int = 1000) -> DataFrame:
 SALT_BUCKETS = 16
 
 
+def _salted_top_k(df: DataFrame, k: int, group_col: str, order: tuple, salt_buckets: int) -> DataFrame:
+    """Keep the first ``k`` rows of every ``group_col`` group under
+    ``order`` (a tuple of sort columns ending in ``doc_id``).
+
+    Two-phase for skew safety (a plain ``row_number() over (partition
+    by group)`` puts a hot group's ENTIRE row set into one sorted
+    task):
+
+    * phase 1 ranks within ``(group, pmod(xxhash64(doc_id),
+      salt_buckets))`` and keeps ≤ ``k`` per salted group — a hot group
+      is spread over ``salt_buckets`` tasks, each bounded;
+    * phase 2 re-ranks the ≤ ``k·salt_buckets`` survivors per group
+      exactly.  Every member of the true per-group top-``k`` is also in
+      the top-``k`` of its own salt bucket, so the answer is IDENTICAL
+      to the single-window form.
+    """
+    from pyspark.sql.window import Window
+
+    salt = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(salt_buckets))
+    w1 = Window.partitionBy(F.col(group_col), salt).orderBy(*order)
+    w2 = Window.partitionBy(group_col).orderBy(*order)
+    return (
+        df.withColumn("_sr", F.row_number().over(w1))
+        .where(F.col("_sr") <= k)
+        .withColumn("_gr", F.row_number().over(w2))
+        .where(F.col("_gr") <= k)
+        .drop("_sr", "_gr")
+    )
+
+
 def cap_per_host(df: DataFrame, cap: int = 3, salt_buckets: int = SALT_BUCKETS) -> DataFrame:
     """Per-host document cap: keep at most ``cap`` documents per host,
     chosen deterministically by md5(doc_id) order (tie-broken by doc_id).
     The standard anti-domination gate before training-corpus assembly —
-    without it one crawl-heavy host owns the token budget.
-
-    Two-phase for skew safety (a plain ``row_number() over (partition
-    by host)`` puts a crawl-heavy host's ENTIRE row set into one sorted
-    task):
-
-    * phase 1 ranks within ``(host, pmod(xxhash64(doc_id), salt_buckets))``
-      and keeps ≤ ``cap`` per salted group — a hot host is spread over
-      ``salt_buckets`` tasks, each bounded;
-    * phase 2 re-ranks the ≤ ``cap·salt_buckets`` survivors per host
-      exactly.  Every member of the true per-host top-``cap`` is also
-      in the top-``cap`` of its own salt bucket, so the answer is
-      IDENTICAL to the single-window form.
-    """
-    from pyspark.sql.window import Window
-
+    without it one crawl-heavy host owns the token budget.  Two-phase
+    salted ranking (:func:`_salted_top_k`) keeps a crawl-heavy host
+    from landing in one sorted task."""
     order = (F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
-    salt = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(salt_buckets))
-    w1 = Window.partitionBy(F.col("host"), salt).orderBy(*order)
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        df.withColumn("salt_rank", F.row_number().over(w1))
-        .where(F.col("salt_rank") <= cap)
-        .withColumn("host_rank", F.row_number().over(w2))
-        .where(F.col("host_rank") <= cap)
-        .drop("salt_rank", "host_rank")
-    )
+    return _salted_top_k(df, cap, "host", order, salt_buckets)
 
 
 def host_quality_stats(
@@ -1392,22 +1400,6 @@ def top_k_per_group(
     """Keep the top ``k`` rows of every group under ``(order_expr asc,
     doc_id asc)`` — :func:`cap_per_host` generalized to an arbitrary
     deterministic ordering (best-N-docs-per-source selection, error
-    triage, per-host sampling).  Same two-phase skew safety: phase 1
-    ranks within ``(group, hash-salt)`` keeping ≤ k per salted bucket
-    (a hot group spreads over :data:`SALT_BUCKETS` bounded tasks), phase 2
-    re-ranks the ≤ k·SALT_BUCKETS survivors exactly — every member of
-    the true top-k is in its own bucket's top-k, so the result is
-    IDENTICAL to the single-window form."""
-    from pyspark.sql.window import Window
-
-    order = (F.expr(order_expr), F.col("doc_id"))
-    salt = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(SALT_BUCKETS))
-    w1 = Window.partitionBy(F.col(group_col), salt).orderBy(*order)
-    w2 = Window.partitionBy(group_col).orderBy(*order)
-    return (
-        df.withColumn("_sr", F.row_number().over(w1))
-        .where(F.col("_sr") <= k)
-        .withColumn("_gr", F.row_number().over(w2))
-        .where(F.col("_gr") <= k)
-        .drop("_sr", "_gr")
-    )
+    triage, per-host sampling), with the same two-phase skew safety
+    over :data:`SALT_BUCKETS` salt buckets."""
+    return _salted_top_k(df, k, group_col, (F.expr(order_expr), F.col("doc_id")), SALT_BUCKETS)

@@ -78,7 +78,7 @@ def _duck_simhash_sql() -> str:
     )
 
 
-def _duck_simhash_pairs_sql(max_hamming: int = 2) -> str:
+def _duck_simhash_pairs_sql() -> str:
     # all-pairs xor+popcount — the banded Spark join is exact for
     # hamming <= 2 by pigeonhole, so the two sides agree bit-for-bit
     return (
@@ -86,7 +86,7 @@ def _duck_simhash_pairs_sql(max_hamming: int = 2) -> str:
         "SELECT CAST(x.doc_id AS BIGINT) AS a, CAST(y.doc_id AS BIGINT) AS b, "
         "CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming "
         "FROM s x JOIN s y ON x.doc_id < y.doc_id "
-        f"WHERE bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}"
+        "WHERE bit_count(xor(x.simhash, y.simhash)) <= 2"
     )
 
 
@@ -106,27 +106,21 @@ def _duck_mh_bands(n_hashes: int, n_bands: int) -> tuple[str, str]:
     return mh, bands
 
 
-def _duck_minhash_between_cte(
-    split_at: int = 250,
-    n_hashes: int = D.N_MINHASHES,
-    n_bands: int = D.N_BANDS,
-    min_equal: int = 4,
-    bucket_cap: int = 64,
-) -> str:
+def _duck_minhash_between_cte() -> str:
     # mirror of dedup.minhash_lsh_pairs_between: per-side bucket caps,
-    # candidates only BETWEEN the two sides
-    mh, bands = _duck_mh_bands(n_hashes, n_bands)
+    # candidates only BETWEEN the two sides (doc_id 250 splits them)
+    mh, bands = _duck_mh_bands(D.N_MINHASHES, D.N_BANDS)
     eq = " + ".join(
-        f"(CASE WHEN sa.mh{k} = sb.mh{k} THEN 1 ELSE 0 END)" for k in range(n_hashes)
+        f"(CASE WHEN sa.mh{k} = sb.mh{k} THEN 1 ELSE 0 END)" for k in range(D.N_MINHASHES)
     )
     return (
         f"WITH {_DUCK_SHINGLES}, "
         f"sig AS (SELECT doc_id, {mh} FROM sh GROUP BY doc_id), "
         f"bands AS ({bands}), "
-        f"bn AS (SELECT * FROM bands WHERE doc_id >= {split_at}), "
-        f"bo AS (SELECT * FROM bands WHERE doc_id < {split_at}), "
-        f"smalln AS (SELECT band, bkey FROM bn GROUP BY band, bkey HAVING count(*) <= {bucket_cap}), "
-        f"smallo AS (SELECT band, bkey FROM bo GROUP BY band, bkey HAVING count(*) <= {bucket_cap}), "
+        "bn AS (SELECT * FROM bands WHERE doc_id >= 250), "
+        "bo AS (SELECT * FROM bands WHERE doc_id < 250), "
+        f"smalln AS (SELECT band, bkey FROM bn GROUP BY band, bkey HAVING count(*) <= {D.BUCKET_CAP}), "
+        f"smallo AS (SELECT band, bkey FROM bo GROUP BY band, bkey HAVING count(*) <= {D.BUCKET_CAP}), "
         "bnf AS (SELECT b.* FROM bn b JOIN smalln USING (band, bkey)), "
         "bof AS (SELECT b.* FROM bo b JOIN smallo USING (band, bkey)), "
         "cand AS (SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS prior_id "
@@ -135,7 +129,7 @@ def _duck_minhash_between_cte(
         f"CAST({eq} AS BIGINT) AS n_eq "
         "FROM cand JOIN sig sa ON cand.new_id = sa.doc_id "
         "JOIN sig sb ON cand.prior_id = sb.doc_id "
-        f"WHERE {eq} >= {min_equal}"
+        f"WHERE {eq} >= 4"
     )
 
 
@@ -143,7 +137,6 @@ def _duck_minhash_cte(
     n_hashes: int = D.N_MINHASHES,
     n_bands: int = D.N_BANDS,
     min_equal: int = 4,
-    bucket_cap: int = 64,
 ) -> str:
     mh, bands = _duck_mh_bands(n_hashes, n_bands)
     eq = " + ".join(
@@ -154,7 +147,7 @@ def _duck_minhash_cte(
         f"sig AS (SELECT doc_id, {mh} FROM sh GROUP BY doc_id), "
         f"bands AS ({bands}), "
         # mirror of dedup.minhash_lsh_pairs bucket_cap
-        f"small AS (SELECT band, bkey FROM bands GROUP BY band, bkey HAVING count(*) <= {bucket_cap}), "
+        f"small AS (SELECT band, bkey FROM bands GROUP BY band, bkey HAVING count(*) <= {D.BUCKET_CAP}), "
         "bandsf AS (SELECT b.* FROM bands b JOIN small USING (band, bkey)), "
         "cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id FROM bandsf x "
         "JOIN bandsf y ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id) "
@@ -164,9 +157,10 @@ def _duck_minhash_cte(
     )
 
 
-def _duck_ivf_topk_sql(k: int = 3, nprobe: int = 2) -> str:
-    # mirror of similarity.ivf_topk: pivots = vec_id % 25 = 7 (the
-    # deterministic coarse quantizer), queries = vec_id % 100 = 0
+def _duck_ivf_topk_sql() -> str:
+    # mirror of similarity.ivf_topk (k=3, nprobe=2): pivots = vec_id %
+    # 25 = 7 (the deterministic coarse quantizer), queries = vec_id %
+    # 100 = 0
     return (
         "WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, "
         "sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS norm "
@@ -181,14 +175,14 @@ def _duck_ivf_topk_sql(k: int = 3, nprobe: int = 2) -> str:
         "probes AS (SELECT query_id, qv, qnorm, pivot_id FROM ("
         "SELECT q.query_id, q.qv, q.qnorm, p.pivot_id, row_number() OVER "
         "(PARTITION BY q.query_id ORDER BY list_dot_product(q.qv, p.pv) / (q.qnorm * p.pnorm) DESC, p.pivot_id) AS r "
-        f"FROM q CROSS JOIN p) WHERE r <= {nprobe}), "
+        "FROM q CROSS JOIN p) WHERE r <= 2), "
         "scored AS (SELECT pr.query_id, a.vec_id, "
         "list_dot_product(a.v, pr.qv) / (a.norm * pr.qnorm) AS cos "
         "FROM assigned a JOIN probes pr USING (pivot_id) WHERE a.vec_id <> pr.query_id), "
         "ranked AS (SELECT query_id, vec_id, row_number() OVER "
         "(PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank FROM scored) "
         "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS neighbor_id, "
-        f"CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= {k}"
+        "CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= 3"
     )
 
 
@@ -206,11 +200,11 @@ def _duck_ivf_recall_sql() -> str:
     )
 
 
-def _duck_semantic_dedup_sql(threshold: float = 0.35) -> str:
+def _duck_semantic_dedup_sql() -> str:
     # mirror of similarity.semantic_dedup: IVF coarse assignment
     # (pivots = vec_id % 25 = 7, ties to the smaller pivot_id), then
     # within-cluster pairs only; a doc is dropped iff some lower-id
-    # cluster-mate sits at cosine >= threshold
+    # cluster-mate sits at cosine >= 0.35
     return (
         "WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, "
         "sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS norm "
@@ -223,7 +217,7 @@ def _duck_semantic_dedup_sql(threshold: float = 0.35) -> str:
         "FROM base b CROSS JOIN p) WHERE r = 1), "
         "dropped AS (SELECT DISTINCT y.vec_id AS b FROM assigned x "
         "JOIN assigned y USING (pivot_id) WHERE x.vec_id < y.vec_id "
-        f"AND list_dot_product(x.v, y.v) / (x.norm * y.norm) >= {threshold}) "
+        "AND list_dot_product(x.v, y.v) / (x.norm * y.norm) >= 0.35) "
         "SELECT CAST(a.vec_id AS BIGINT) AS vec_id, CAST(a.pivot_id AS BIGINT) AS pivot_id, "
         "(d.b IS NULL) AS keep FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.b"
     )
@@ -302,17 +296,17 @@ _DUCK_EXACT_TOPK = (
 )
 
 
-def _duck_lsh_topk_sql(k: int = 3, dim: int = 64, n_planes: int = 4) -> str:
-    # mirror of similarity.lsh_cosine_topk (precomputed literal signs,
-    # multi-probe over the n_planes hamming-1 buckets)
+def _duck_lsh_topk_sql() -> str:
+    # mirror of similarity.lsh_cosine_topk (k=3, 4 planes; precomputed
+    # literal signs, multi-probe over the 4 hamming-1 buckets)
     bucket_terms = []
-    for p in range(n_planes):
-        lits = ", ".join(str(s) for s in S.plane_signs(p, dim))
+    for p in range(4):
+        lits = ", ".join(str(s) for s in S.plane_signs(p, S.DIM))
         bucket_terms.append(
             f"(CASE WHEN list_dot_product(v, [{lits}]) > 0 THEN {2 ** p} ELSE 0 END)"
         )
     bucket = "(" + " + ".join(bucket_terms) + ")"
-    probes = ", ".join(f"xor(bucket, {2 ** p})" for p in range(n_planes))
+    probes = ", ".join(f"xor(bucket, {2 ** p})" for p in range(4))
     return (
         "WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, "
         "sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS norm "
@@ -327,22 +321,22 @@ def _duck_lsh_topk_sql(k: int = 3, dim: int = 64, n_planes: int = 4) -> str:
         "ranked AS (SELECT query_id, vec_id, row_number() OVER "
         "(PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank FROM scored) "
         "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS neighbor_id, "
-        f"CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= {k}"
+        "CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= 3"
     )
 
 
-def _duck_near_dup_sql(threshold: float = 0.35, dim: int = 64, n_planes: int = 4) -> str:
-    # mirror of similarity.cosine_near_dup_pairs: hyperplane-LSH
-    # bucket blocking (plan-time literal signs) with hamming-1
-    # multi-probe on the smaller-id side
+def _duck_near_dup_sql() -> str:
+    # mirror of similarity.cosine_near_dup_pairs (threshold 0.35):
+    # hyperplane-LSH bucket blocking (plan-time literal signs) with
+    # hamming-1 multi-probe on the smaller-id side
     bucket_terms = []
-    for p in range(n_planes):
-        lits = ", ".join(str(s) for s in S.plane_signs(p, dim))
+    for p in range(S.NEAR_DUP_PLANES):
+        lits = ", ".join(str(s) for s in S.plane_signs(p, S.DIM))
         bucket_terms.append(
             f"(CASE WHEN list_dot_product(v, [{lits}]) > 0 THEN {2 ** p} ELSE 0 END)"
         )
     bucket = "(" + " + ".join(bucket_terms) + ")"
-    probes = ", ".join(f"xor(bucket, {2 ** p})" for p in range(n_planes))
+    probes = ", ".join(f"xor(bucket, {2 ** p})" for p in range(S.NEAR_DUP_PLANES))
     return (
         "WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, "
         "sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS norm "
@@ -355,7 +349,7 @@ def _duck_near_dup_sql(threshold: float = 0.35, dim: int = 64, n_planes: int = 4
         "FROM a JOIN b ON a.block = b.block AND a.vec_id < b.vec_id) "
         "SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b, "
         "CAST(round(cos * 1000000) AS BIGINT) AS cos_e6 FROM p "
-        f"WHERE cos >= {threshold}"
+        "WHERE cos >= 0.35"
     )
 
 
@@ -1551,21 +1545,23 @@ def q_pagerank(spark, sf_dir):
     return G.pagerank(edges, n_iter=3)
 
 
-def _duck_pagerank_sql(n_iter: int = 3, damping_e2: int = 85, scale: int = 10**9) -> str:
-    base = (100 - damping_e2) * scale // 100
+def _duck_pagerank_sql() -> str:
+    from .operators.graph import DAMPING_E2, RANK_SCALE
+
+    base = (100 - DAMPING_E2) * RANK_SCALE // 100
     sql = (
         "WITH edges AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM documents a "
         "JOIN documents b ON b.doc_id = (a.doc_id * 17 + 3) % 512), "
         "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges), "
         "outdeg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY src), "
-        f"r0 AS (SELECT node, CAST({scale} AS BIGINT) AS rank FROM nodes)"
+        f"r0 AS (SELECT node, CAST({RANK_SCALE} AS BIGINT) AS rank FROM nodes)"
     )
     prev = "r0"
-    for i in range(1, n_iter + 1):
+    for i in range(1, 4):
         sql += (
             f", c{i} AS (SELECT e.dst, SUM(r.rank // o.deg) AS s FROM edges e "
             f"JOIN outdeg o ON o.node = e.src JOIN {prev} r ON r.node = e.src GROUP BY e.dst)"
-            f", r{i} AS (SELECT n.node, CAST({base} + ({damping_e2} * COALESCE(c.s, 0)) // 100 AS BIGINT) AS rank "
+            f", r{i} AS (SELECT n.node, CAST({base} + ({DAMPING_E2} * COALESCE(c.s, 0)) // 100 AS BIGINT) AS rank "
             f"FROM nodes n LEFT JOIN c{i} c ON n.node = c.dst)"
         )
         prev = f"r{i}"
@@ -1586,33 +1582,34 @@ def q_hits(spark, sf_dir):
     return G.hits(edges, n_iter=3)
 
 
-def _duck_hits_sql(n_iter: int = 3, scale: int = 10**6) -> str:
+def _duck_hits_sql() -> str:
+    # 3 passes at graph.hits' 1e6 scale
     sql = (
         "WITH edges AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM documents a "
         "JOIN documents b ON b.doc_id = (a.doc_id * 17 + 3) % 512), "
         "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges), "
-        f"h0 AS (SELECT node, CAST({scale} AS BIGINT) AS h FROM nodes)"
+        "h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes)"
     )
     ph = "h0"
-    for i in range(1, n_iter + 1):
+    for i in range(1, 4):
         sql += (
             f", ar{i} AS (SELECT e.dst AS node, CAST(SUM(x.h) AS BIGINT) AS a "
             f"FROM edges e JOIN {ph} x ON x.node = e.src GROUP BY e.dst)"
             f", am{i} AS (SELECT COALESCE(MAX(a), 1) AS m FROM ar{i})"
-            f", a{i} AS (SELECT n.node, CAST(COALESCE(r.a, 0) * {scale} // m AS BIGINT) AS a "
+            f", a{i} AS (SELECT n.node, CAST(COALESCE(r.a, 0) * 1000000 // m AS BIGINT) AS a "
             f"FROM nodes n LEFT JOIN ar{i} r ON n.node = r.node, am{i})"
             f", hr{i} AS (SELECT e.src AS node, CAST(SUM(x.a) AS BIGINT) AS h "
             f"FROM edges e JOIN a{i} x ON x.node = e.dst GROUP BY e.src)"
             f", hm{i} AS (SELECT COALESCE(MAX(h), 1) AS m FROM hr{i})"
-            f", h{i} AS (SELECT n.node, CAST(COALESCE(r.h, 0) * {scale} // m AS BIGINT) AS h "
+            f", h{i} AS (SELECT n.node, CAST(COALESCE(r.h, 0) * 1000000 // m AS BIGINT) AS h "
             f"FROM nodes n LEFT JOIN hr{i} r ON n.node = r.node, hm{i})"
         )
         ph = f"h{i}"
     return sql + (
-        f" SELECT CAST(n.node AS BIGINT) AS node, h{n_iter}.h AS hub, "
-        f"a{n_iter}.a AS authority FROM nodes n "
-        f"JOIN h{n_iter} ON n.node = h{n_iter}.node "
-        f"JOIN a{n_iter} ON n.node = a{n_iter}.node"
+        " SELECT CAST(n.node AS BIGINT) AS node, h3.h AS hub, "
+        "a3.a AS authority FROM nodes n "
+        "JOIN h3 ON n.node = h3.node "
+        "JOIN a3 ON n.node = a3.node"
     )
 
 
@@ -1671,16 +1668,17 @@ def q_cms_heavy_hitters(spark, sf_dir):
     return SK.cms_heavy_hitters(_docs(spark, sf_dir))
 
 
-def _duck_cms_sql(width: int = 16, depth: int = 3, min_count: int = 100) -> str:
+def _duck_cms_sql() -> str:
+    # sketches.cms_heavy_hitters' defaults: width 16, depth 3, min_count 100
     def bucket(r: int) -> str:
-        return f"('0x' || substr(md5('{r}|' || word), 1, 8))::BIGINT % {width}"
+        return f"('0x' || substr(md5('{r}|' || word), 1, 8))::BIGINT % 16"
 
     stacked = " UNION ALL ".join(
-        f"SELECT {r} AS row, {bucket(r)} AS bucket FROM toks" for r in range(depth)
+        f"SELECT {r} AS row, {bucket(r)} AS bucket FROM toks" for r in range(3)
     )
     probes = " UNION ALL ".join(
         f"SELECT word, {r} AS row, {bucket(r)} AS bucket FROM words"
-        for r in range(depth)
+        for r in range(3)
     )
     return (
         "WITH toks AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents), "
@@ -1689,7 +1687,7 @@ def _duck_cms_sql(width: int = 16, depth: int = 3, min_count: int = 100) -> str:
         "words AS (SELECT DISTINCT word FROM toks), "
         f"probes AS ({probes}), "
         "est AS (SELECT word, min(cnt) AS est FROM probes JOIN sketch USING (row, bucket) GROUP BY word) "
-        f"SELECT word, CAST(est AS BIGINT) AS est FROM est WHERE est >= {min_count}"
+        "SELECT word, CAST(est AS BIGINT) AS est FROM est WHERE est >= 100"
     )
 
 
@@ -1699,12 +1697,12 @@ def q_quality_classifier(spark, sf_dir):
     return T.quality_classifier(_docs(spark, sf_dir))
 
 
-def _duck_quality_classifier_sql(n_buckets: int = 256) -> str:
-    w = T.classifier_weights(n_buckets)
+def _duck_quality_classifier_sql() -> str:
+    w = T.classifier_weights()
     warr = "[" + ",".join(str(x) for x in w) + "]"
     score = (
         f"list_sum(list_transform(string_split(text, ' '), "
-        f"t -> {warr}[CAST(('0x' || substr(md5(t), 1, 8))::BIGINT % {n_buckets} AS INT) + 1]))"
+        f"t -> {warr}[CAST(('0x' || substr(md5(t), 1, 8))::BIGINT % {len(w)} AS INT) + 1]))"
     )
     return (
         "SELECT doc_id, n_tokens, score, score > 0 AS label FROM ("
@@ -2067,11 +2065,10 @@ def q_decontaminate_fuzzy(spark, sf_dir):
     return D.minhash_contamination(docs, evals, min_equal=4)
 
 
-def _duck_fuzzy_contamination_sql(
-    n_hashes: int = D.N_MINHASHES, n_bands: int = D.N_BANDS, min_equal: int = 4
-) -> str:
+def _duck_fuzzy_contamination_sql() -> str:
     # mirror of q_decontaminate_fuzzy: eval texts = words 5..40 of
     # every 41st doc, minhash/banding generated from the same params
+    n_hashes, n_bands = D.N_MINHASHES, D.N_BANDS
     rows = n_hashes // n_bands
     mh = ", ".join(f"min(md5('{k}|' || sh)) AS mh{k}" for k in range(n_hashes))
     cbands = " UNION ALL ".join(
@@ -2109,7 +2106,7 @@ def _duck_fuzzy_contamination_sql(
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, "
         "CAST(count(*) AS BIGINT) AS n_eval_matches, "
         "CAST(max(n_eq) AS BIGINT) AS max_n_eq "
-        f"FROM m WHERE n_eq >= {min_equal} GROUP BY doc_id"
+        "FROM m WHERE n_eq >= 4 GROUP BY doc_id"
     )
 
 

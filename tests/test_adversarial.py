@@ -5,7 +5,7 @@ parse is the whole point of the Gumbo model)."""
 import numpy as np
 import pytest
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.operators.extract import extract_main_text, main_text_program
 
 

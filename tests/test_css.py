@@ -6,7 +6,7 @@ this is the usability layer over the same predicates."""
 import numpy as np
 import pytest
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.css import css, parse_css
 from gumbo_pp_spark.selector import compile_selector
 

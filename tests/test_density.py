@@ -5,7 +5,7 @@ tag-list strip."""
 import pytest
 from pyspark.sql import functions as F
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.operators.extract import (
     density_extract,
     density_extract_program as P,

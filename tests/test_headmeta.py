@@ -2,7 +2,7 @@
 robots / title via CSS-string programs — the crawl-hygiene signals
 read before dedup and indexing."""
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.operators.extract import extract_head_meta, head_meta_program
 
 from .conftest import SF_SMOKE

@@ -1,6 +1,6 @@
 """HTML → Markdown serialization (operators/markdown.py)."""
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.operators.markdown import render_markdown, to_markdown
 
 

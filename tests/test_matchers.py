@@ -3,7 +3,7 @@ combinators (gumbo_matchers.h; SURVEY.md §2.3) evaluated as masks."""
 
 import numpy as np
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark import matchers as m
 
 DOC = (
@@ -200,11 +200,15 @@ class TestGatedEvaluation:
                 f'<div class="c{i % 7}" data-k="v{i % 13}">'
                 f"<span>row {i} text</span><a href=\"/l/{i}\">link</a></div>"
             )
+        parts.append('<p id="x1" lang="en-US" title="">x1 para</p><p id="y2">y2</p>')
         parts.append("<!--note--></body></html>")
         return parse_html("".join(parts))
 
     def test_gated_equals_full_on_compositions(self):
         import numpy as np
+
+        from gumbo_pp_spark.css import css
+        from gumbo_pp_spark.selector import compile_selector
 
         nt = self._doc()
         atoms = [
@@ -221,7 +225,50 @@ class TestGatedEvaluation:
             m.id_.where(lambda v: v.startswith("x")),
             m.attribute.where(lambda k, v: k == "href" and "/l/9" in v),
             m.content_text.where(lambda t: "row 19" in t),
+            # every remaining verb of each namespace, so each leaf's one
+            # mask function is checked under a partial gate
+            m.tag.types("p", "a"),
+            m.tag.where(lambda names: names == "p"),
+            m.attribute.name.is_("lang"),
+            m.attribute.has_none(),
+            m.attribute.value.is_("data-k", "v3", "v4"),
+            m.attribute.value.contains("href", "/1"),
+            m.attribute.value.ends_with("href", "7"),
+            m.attribute.value.contains_prefix("lang", "en"),
+            m.attribute.value.is_empty("title"),
+            m.attribute.value.is_null("title"),
+            m.attribute.value.has_value("data-k"),
+            m.class_type.where(lambda v: v.endswith("5")),
+            m.class_type.has_token("c2"),
+            m.id_.is_("x1", "y2"),
+            m.content_text.is_("link"),
+            m.content_text.starts_with("row 1"),
+            m.content_text.ends_with("text"),
+            m.content_text.map(len, lambda n: n > 10),
+            m.inner_text.where(lambda t: "row 3" in t),
+            m.inner_text.map(str.upper, lambda t: "LINK" in t),
+            m.inner_text.contains("row 4"),
+            m.inner_text.is_("link"),
+            m.inner_text.starts_with("<span>row 2"),
+            m.inner_text.is_empty,
+            m.outer_text.where(lambda t: "/l/5" in t),
+            m.outer_text.map(len, lambda n: n < 20),
+            m.outer_text.contains("c4"),
+            m.outer_text.is_("<a href=\"/l/8\">link</a>"),
+            m.outer_text.ends_with("</div>"),
+            m.outer_text.is_empty,
+            css("div.c2 > a[href$='2'], p#x1"),
+            compile_selector(["and", ["tag", "span"], ["content_contains", "row 6"]]),
         ]
+        third = np.zeros(nt.n, dtype=bool)
+        third[:: 3] = True
+        for a in atoms:
+            full = a.fn(nt)
+            # complementary gates: every matching row is tested gated
+            for gate in (third, ~third):
+                got = a.eval(nt, gate)
+                assert not (got & ~gate).any(), a.name
+                assert (got == (full & gate)).all(), a.name
         progs = [
             atoms[0] & atoms[2] & atoms[6],
             (atoms[0] | atoms[1]) & atoms[6],
@@ -255,7 +302,7 @@ class TestCostOrderedConjunction:
         parts = ["<html><body>"]
         for i in range(300):
             parts.append(
-                f'<div class="c{i % 7}"><span>row {i}</span>'
+                f'<div id="d{i}" class="c{i % 7}"><span>row {i}</span>'
                 f'<a href="/l/{i}">link</a></div>'
             )
         parts.append("</body></html>")
@@ -275,17 +322,29 @@ class TestCostOrderedConjunction:
 
         nt = self._page()
         n_div = int(m.tag.DIV.fn(nt).sum())
-        for mk in (
-            lambda pred: m.content_text.where(pred) & m.tag.DIV,
-            lambda pred: m.tag.DIV & m.content_text.where(pred),
-            lambda pred: m.match_all(m.content_text.where(pred), m.tag.DIV),
+        # every <div> carries one id and one class, so each leaf's
+        # user predicate sees exactly one value per <div> row
+        for leaf in (
+            m.content_text.where,
+            m.inner_text.where,
+            m.outer_text.where,
+            lambda pred: m.inner_text.map(str.lower, pred),
+            lambda pred: m.outer_text.map(str.lower, pred),
+            m.class_type.where,
+            m.id_.where,
+            lambda pred: m.attribute.where(lambda k, v: k == "id" and pred(v)),
         ):
-            calls = []
-            prog = mk(lambda t: calls.append(1) or "row 7" in t)
-            prog.fn(nt)
-            # the user predicate ran on the <div> candidates only,
-            # never the full node table
-            assert len(calls) == n_div, (len(calls), n_div, nt.n)
+            for mk in (
+                lambda pred: leaf(pred) & m.tag.DIV,
+                lambda pred: m.tag.DIV & leaf(pred),
+                lambda pred: m.match_all(leaf(pred), m.tag.DIV),
+            ):
+                calls = []
+                prog = mk(lambda t: calls.append(1) or "row 7" in t)
+                prog.fn(nt)
+                # the user predicate ran on the <div> candidates only,
+                # never the full node table
+                assert len(calls) == n_div, (len(calls), n_div, nt.n)
 
     def test_cost_ranks(self):
         from gumbo_pp_spark import matchers as m

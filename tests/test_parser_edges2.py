@@ -4,7 +4,7 @@ document-structure recovery."""
 
 import numpy as np
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.nodetable import COMMENT, ELEMENT, TEXT, WHITESPACE
 
 

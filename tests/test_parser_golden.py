@@ -7,7 +7,7 @@ from FIXTURES.md §2 G4+.
 import numpy as np
 import pytest
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.nodetable import (
     COMMENT,
     DOCUMENT,

@@ -6,7 +6,7 @@ recursive reference definition, NUL handling."""
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from gumbo_pp_spark import parse_html
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.nodetable import (
     CDATA,
     COMMENT,

@@ -4,7 +4,8 @@ masks as hand-built matchers (the 1:1 transliteration surface)."""
 import numpy as np
 import pytest
 
-from gumbo_pp_spark import matchers as m, parse_html
+from gumbo_pp_spark import matchers as m
+from gumbo_pp_spark.parser.html5 import parse_html
 from gumbo_pp_spark.selector import compile_selector
 
 DOC = (
