@@ -181,11 +181,14 @@ def _given(gate: np.ndarray, col: np.ndarray) -> np.ndarray:
 
 def _value_matcher(attr: str, pred: Callable[[str], object], label: str) -> Matcher:
     """Per-node test of attribute ``attr``'s value; nodes without it
-    never match (the attr_values flat-index gather stays vectorized)."""
+    never match.  Only the gate rows' values are looked up, and the
+    test runs on those that have one."""
 
     def mask(nt: NodeTable, gate: np.ndarray) -> np.ndarray:
-        vals = nt.attr_values(attr)
-        return _per_row(_given(gate, vals), pred, vals)
+        ids = np.flatnonzero(gate)
+        out = np.zeros(len(gate), dtype=bool)
+        out[ids] = [v is not None and bool(pred(v)) for v in nt.attr_values(attr, ids).tolist()]
+        return out
 
     return Matcher(mask, label, cost=2)
 

@@ -142,19 +142,27 @@ class NodeTable:
         self._attr_names = na
         self._attr_vals = va
 
-    def attr_values(self, name: str) -> np.ndarray:
-        """Per-node attribute value or None (gumbo_util.h:148-159).
+    def attr_values(self, name: str, ids: np.ndarray | None = None) -> np.ndarray:
+        """Attribute ``name``'s value, or None, at nodes ``ids`` (every
+        node when ``ids`` is None) (gumbo_util.h:148-159).
 
-        Vectorized via the lazy flat index: the equality compare runs
-        over the attrs-only arrays (|attrs| entries), not all nodes —
-        O(|attrs|) per query after a single O(n) index build, instead
-        of the round-1 per-node dict probe on every query."""
+        Answered from the lazy flat index: the name compare runs over
+        the attrs-only arrays (|attrs| entries), and ``ids`` are found
+        among that name's owners by ``searchsorted`` (owners ascend in
+        preorder; a node holds at most one value per name), so a small
+        ``ids`` costs no n-length pass."""
         self._ensure_attr_index()
-        out = np.empty(self.n, dtype=object)
-        out[:] = None
         m = self._attr_names == name
-        if m.any():
-            out[self._attr_owner[m]] = self._attr_vals[m]
+        owners, vals = self._attr_owner[m], self._attr_vals[m]
+        if ids is None:
+            out = np.full(self.n, None, dtype=object)
+            out[owners] = vals
+            return out
+        out = np.full(len(ids), None, dtype=object)
+        if len(owners):
+            pos = np.searchsorted(owners, ids).clip(max=len(owners) - 1)
+            hit = owners[pos] == ids
+            out[hit] = vals[pos[hit]]
         return out
 
     # -- traversal primitives ------------------------------------------

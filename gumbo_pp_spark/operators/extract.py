@@ -366,24 +366,22 @@ def table_scrape_program(div_id: str) -> Callable[[NodeTable], dict]:
     div#<id> → first tbody from there (anchored DFS, not subtree
     bounded) → per-<tr> per-<td> content_text, comma-joined lines.
 
-    Round-8 kernel shape: the anchor div is found through the flat
-    attribute index (|attrs|-sized vectorized compares — the round-7
-    per-node Python genexpr walked every node), and tbody/tr/td masks
-    are int16 ``tag_id`` compares instead of object-string equality."""
+    Kernel shape: the anchor div is the first ``<div>`` whose ``id``
+    equals ``div_id``, looked up at the div nodes only
+    (``NodeTable.attr_values("id", divs)``), and tbody/tr/td masks are
+    int16 ``tag_id`` compares instead of object-string equality."""
     _div = TAG_IDS["div"]
     _tbody = TAG_IDS["tbody"]
     _tr = TAG_IDS["tr"]
     _td = TAG_IDS["td"]
 
     def program(nt: NodeTable) -> dict:
-        nt._ensure_attr_index()
-        m = (nt._attr_names == "id") & (nt._attr_vals == div_id)
-        owners = nt._attr_owner[m]
         tag_id = nt.tag_id
-        divs = owners[tag_id[owners] == _div]
-        if len(divs) == 0:
+        divs = np.flatnonzero(tag_id == _div)
+        hits = np.flatnonzero(nt.attr_values("id", divs) == div_id)
+        if len(hits) == 0:
             return {"csv": None}
-        div = int(divs[0])  # owners ascend in preorder → first match
+        div = int(divs[hits[0]])  # divs ascend in preorder → first match
         tbody = nt.first_match(tag_id == _tbody, start=div)
         if tbody < 0:
             return {"csv": None}

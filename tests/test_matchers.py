@@ -185,6 +185,12 @@ class TestSpanVerbFastPath:
         got = {nt.tag_name[i]: vals[i] for i in range(nt.n) if vals[i] is not None}
         assert got == {"div": "x", "p": "y"}
         assert nt.attr_values("missing").tolist().count(None) == nt.n
+        # at given ids: the full column gathered there, with and
+        # without the attribute, unordered and repeated, and empty
+        for name in ("class", "id", "href", "missing"):
+            full = nt.attr_values(name)
+            for ids in (np.arange(nt.n), np.array([nt.n - 1, 0, 2, 2]), np.array([], dtype=np.int64)):
+                assert nt.attr_values(name, ids).tolist() == full[ids].tolist()
 
 
 class TestGatedEvaluation:

@@ -105,42 +105,38 @@ class TestLineageResume:
         assert 7 not in splits
 
 
-class TestLedgerManifestCompaction:
-    """VERDICT r6 #7: committed() on a compacted ledger must be O(1)
-    file reads, not one JSON open per split."""
+class TestLedgerManifest:
+    """VERDICT r6 #7: committed() must be O(1) file reads, not one JSON
+    open per split — every committed record lives in manifest.json."""
 
     def _rec(self, s, run="r0"):
         return {"split_id": s, "run_id": run, "status": "committed", "rows": 1}
 
-    def test_compaction_folds_tails_and_preserves_records(self, tmp_path):
+    def test_one_commit_is_one_manifest_write(self, tmp_path):
         import os
 
         from gumbo_pp_spark.plans.lineage import PartitionLedger
 
-        led = PartitionLedger(str(tmp_path / "led"), compact_every=0)  # manual
-        for s in range(100):
-            led.commit(self._rec(s))
-        before = led.committed()
-        assert led.compact() == 100
-        assert not [f for f in os.listdir(led.path) if f.startswith("split_")]
-        assert led.committed() == before
-        # post-compaction commits overlay the manifest (tail wins)
-        led.commit(self._rec(5, run="r1"))
-        led.commit(self._rec(100, run="r1"))
+        led = PartitionLedger(str(tmp_path / "led"))
+        led.commit(*(self._rec(s) for s in range(100)))
+        assert os.listdir(led.path) == [led.MANIFEST]
         recs = led.committed()
-        assert recs[5]["run_id"] == "r1" and recs[100]["run_id"] == "r1"
+        assert [recs[s]["seq"] for s in range(100)] == list(range(1, 101))
+        # a later commit replaces split 5 and adds split 100
+        led.commit(self._rec(5, run="r1"), self._rec(100, run="r1"))
+        recs = led.committed()
         assert len(recs) == 101
-        # second compaction folds only the 2 tails
-        assert led.compact() == 2
-        assert led.committed() == recs
-        assert led.compact() == 0  # idempotent
+        assert recs[5]["run_id"] == "r1" and recs[5]["seq"] == 101
+        assert recs[100]["run_id"] == "r1" and recs[100]["seq"] == 102
+        assert all(recs[s]["run_id"] == "r0" for s in range(100) if s != 5)
+        assert os.listdir(led.path) == [led.MANIFEST]
 
     def test_large_ledger_loads_in_o1_file_reads(self, tmp_path, monkeypatch):
         import builtins
 
         from gumbo_pp_spark.plans import lineage as L
 
-        led = L.PartitionLedger(str(tmp_path / "big"), compact_every=0)
+        led = L.PartitionLedger(str(tmp_path / "big"))
         recs = {"version": 1, "records": [self._rec(s) for s in range(100_000)]}
         import json as _json
 
@@ -155,18 +151,27 @@ class TestLedgerManifestCompaction:
         assert len(got) == 100_000
         assert len(opens) == 1  # the manifest only
 
-    def test_auto_compaction_threshold(self, tmp_path):
+    def test_run_commits_with_one_ledger_write(self, spark, tmp_path, monkeypatch):
         import os
 
-        from gumbo_pp_spark.plans.lineage import PartitionLedger
+        from gumbo_pp_spark.plans import lineage as L
 
-        led = PartitionLedger(str(tmp_path / "auto"), compact_every=16)
-        for s in range(40):
-            led.commit(self._rec(s))
-        tails = [f for f in os.listdir(led.path) if f.startswith("split_")]
-        # two auto-rolls at 16 and 32; 8 commits since the last
-        assert len(tails) == 8
-        assert len(led.committed()) == 40
+        out_dir = str(tmp_path / "one_write")
+        pages = synth_pages(spark, SF_SMOKE).limit(64)
+        replaced = []
+        real_replace = os.replace
+        # patched in this (driver) process only: it sees the ledger's
+        # renames, not those of the writer tasks' Python workers
+        monkeypatch.setattr(
+            L.os, "replace", lambda a, b: replaced.append(b) or real_replace(a, b)
+        )
+        res = extract_with_resume(spark, pages, out_dir, n_splits=8)
+        ledger_dir = os.path.join(out_dir, "_ledger")
+        assert [p for p in replaced if p.startswith(ledger_dir)] == [
+            os.path.join(ledger_dir, L.PartitionLedger.MANIFEST)
+        ]
+        assert res["splits_processed"] == 8
+        assert len(L.PartitionLedger(ledger_dir).committed()) == 8
 
 
 class TestSizeBinsOversized:
@@ -636,19 +641,27 @@ class TestSnapshotTimeTravel:
         ledger2.commit({"split_id": 5, "run_id": "r2", "rows": 1})
         assert ledger2.snapshot_log()[-1]["seq"] == 4
 
-    def test_seq_survives_compaction_and_preseq_records_read_as_zero(self, tmp_path):
+    def test_seq_continues_across_commits_and_preseq_records_read_as_zero(self, tmp_path):
         import json as J
         import os as O
 
-        ledger = PartitionLedger(str(tmp_path / "_ledger"), compact_every=2)
+        ledger = PartitionLedger(str(tmp_path / "_ledger"))
         ledger.commit({"split_id": 0, "run_id": "r", "rows": 1})
-        ledger.commit({"split_id": 1, "run_id": "r", "rows": 1})  # compacts
+        ledger.commit({"split_id": 1, "run_id": "r", "rows": 1})
         assert ledger.committed(as_of=1).keys() == {0}
-        # hand-write a pre-seq (legacy) record: visible in EVERY snapshot
-        with open(O.path.join(str(tmp_path / "_ledger"), "split_7.json"), "w") as f:
-            J.dump({"split_id": 7, "run_id": "old", "rows": 1}, f)
+        # hand-write a pre-seq (legacy) record into the manifest:
+        # visible in EVERY snapshot
+        mpath = O.path.join(ledger.path, ledger.MANIFEST)
+        with open(mpath) as f:
+            doc = J.load(f)
+        doc["records"].append({"split_id": 7, "run_id": "old", "rows": 1})
+        with open(mpath, "w") as f:
+            J.dump(doc, f)
         assert ledger.committed(as_of=0).keys() == {7}
         assert set(ledger.committed(as_of=1)) == {0, 7}
+        # the next commit continues after the highest seq
+        ledger.commit({"split_id": 2, "run_id": "r", "rows": 1})
+        assert ledger.committed()[2]["seq"] == 3
 
 
 class TestIncrementalRead:
