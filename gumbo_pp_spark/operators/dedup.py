@@ -26,37 +26,28 @@ from pyspark.sql import DataFrame, functions as F
 from .textstats import _ngram_expr, split_words
 
 # ----------------------------------------------------------------------
-# Cached-intermediate lifecycle.  ``minhash_lsh_pairs`` and
-# ``simhash_pairs`` cache their signature DataFrame so the expensive
-# per-word aggregate is computed once per plan (plan-tested).  The
-# cache must stay alive until the CALLER materializes the returned
-# plan, so the functions cannot unpersist it themselves — instead the
-# handle is recorded here and released explicitly.  In a long-lived
-# session (a multi-stage pipeline chaining several dedup passes), call
-# :func:`unpersist_caches` after each stage's action, or leaked
-# InMemoryRelations accumulate executor storage until LRU eviction.
-# ``pipelines.build_training_corpus`` does this at its stage barrier.
-_LIVE_CACHES: list[DataFrame] = []
-
-# Per-thread scope stack (round-6, ADVICE r5): two pipelines running
-# concurrently on one driver (threads / interleaved stages) must not
-# release each other's still-needed signature caches at the first
-# barrier.  A pipeline that wraps its run in :func:`cache_scope` gets
-# its caches recorded in ITS scope (innermost, this thread) instead of
-# the process-global registry, and releases exactly those on exit.
+# Cached-intermediate lifecycle.  ``minhash_lsh_pairs``,
+# ``minhash_lsh_pairs_between`` and ``simhash_pairs`` cache their
+# signature DataFrames so the expensive per-word aggregate is computed
+# once per plan (plan-tested).  The cache must stay alive until the
+# CALLER materializes the returned plan, so the functions cannot
+# unpersist it themselves.  Per-thread scope stack (round-6, ADVICE
+# r5): a pipeline wraps its run in :func:`cache_scope`, which records
+# the caches created on its thread and releases exactly those on exit,
+# so two pipelines running concurrently on one driver cannot release
+# each other's still-needed caches.  Outside a scope a cache lives
+# until ``spark.catalog.clearCache()`` or the end of the session.
 _SCOPES = threading.local()
 
 
 def _cache(df: DataFrame) -> DataFrame:
-    """Cache ``df`` and record the handle for later release — into the
-    innermost active :func:`cache_scope` of this thread, else the
-    process-global registry drained by :func:`unpersist_caches`."""
+    """Cache ``df`` and record the handle in the innermost active
+    :func:`cache_scope` of this thread, if any, for release at its
+    exit."""
     c = df.cache()
     stack = getattr(_SCOPES, "stack", None)
     if stack:
         stack[-1].append(c)
-    else:
-        _LIVE_CACHES.append(c)
     return c
 
 
@@ -91,22 +82,6 @@ def cache_scope():
                 pass
         scope.clear()
 
-
-def unpersist_caches() -> int:
-    """Release every cached dedup intermediate registered since the
-    last call.  Safe to call any time AFTER the plans returned by
-    ``minhash_lsh_pairs`` / ``simhash_pairs`` have been materialized
-    (calling earlier is still correct — Spark just recomputes the
-    signatures on the next action).  Returns the number released."""
-    n = 0
-    while _LIVE_CACHES:
-        c = _LIVE_CACHES.pop()
-        try:
-            c.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing leaks
-            pass
-    return n
 
 # distinct word 3-gram shingles of the ``ws`` word array (the DuckDB
 # oracle mirrors them with list_transform/array slicing)

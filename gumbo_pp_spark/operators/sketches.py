@@ -52,16 +52,6 @@ def _counters(words: DataFrame, width: int, depth: int) -> DataFrame:
     )
 
 
-def cms_sketch(df: DataFrame, width: int = 16, depth: int = 3) -> DataFrame:
-    """Build the sketch: (row, bucket, cnt), ≤ depth·width rows total.
-
-    The token stream is exploded once and stacked ``depth`` times
-    (one (row, bucket) key per hash row); partial aggregation
-    collapses each partition's stack to ≤ depth·width rows before the
-    exchange, so the shuffle is constant-size regardless of input."""
-    return _counters(split_words(df, explode=True), width, depth)
-
-
 def cms_heavy_hitters(
     df: DataFrame,
     width: int = 16,

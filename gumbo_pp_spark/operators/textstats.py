@@ -582,44 +582,19 @@ def eval_ngrams(evals: DataFrame, n: int = 13) -> DataFrame:
     return ws.select(F.explode(F.expr(_ngram_expr(n))).alias("gram")).distinct()
 
 
-def contamination(
-    docs: DataFrame,
-    evals: DataFrame,
-    n: int = 13,
-    grams: DataFrame | None = None,
-) -> DataFrame:
+def contamination(docs: DataFrame, evals: DataFrame, n: int = 13) -> DataFrame:
     """(doc_id, n_contaminated) for every training document sharing at
     least one word ``n``-gram with ``evals`` — ``n_contaminated`` is
     the number of DISTINCT shared grams (both sides de-duplicate
     per document, so the count is order-free and oracle-stable).
-    Clean documents are absent; :func:`decontaminate` is the filter.
-
-    ``grams`` short-circuits the eval-side derivation with a
-    precomputed (gram) DataFrame — a caller running this repeatedly
-    (the streaming foreachBatch path) caches the gram table once
-    instead of re-aggregating the eval set per micro-batch."""
-    if grams is None:
-        grams = eval_ngrams(evals, n)
+    Clean documents are absent."""
     ws = split_words(docs, keep=("doc_id",), min_words=n)
     dg = ws.select("doc_id", F.explode(F.expr(_ngram_expr(n))).alias("gram"))
     return (
-        dg.join(F.broadcast(grams), "gram")
+        dg.join(F.broadcast(eval_ngrams(evals, n)), "gram")
         .groupBy(F.col("doc_id").cast("bigint").alias("doc_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_contaminated"))
     )
-
-
-def decontaminate(
-    docs: DataFrame,
-    evals: DataFrame,
-    n: int = 13,
-    grams: DataFrame | None = None,
-) -> DataFrame:
-    """``docs`` minus every document contaminated against ``evals``
-    (left-anti on doc_id; all original columns pass through).
-    ``grams`` as in :func:`contamination`."""
-    bad = contamination(docs, evals, n, grams=grams).select("doc_id")
-    return docs.join(bad, "doc_id", "left_anti")
 
 
 def sentence_contamination(docs: DataFrame, evals: DataFrame, n: int = 8) -> DataFrame:
@@ -843,19 +818,10 @@ def repeated_window_stats(df: DataFrame, width: int = 20, df_cap: int = DF_CAP) 
 
 def _most_frequent(rows: DataFrame, key: str, k: int) -> DataFrame:
     """(key, n): the ``k`` most frequent values of ``key`` in ``rows``,
-    ties broken by value — the shared top-k of :func:`vocab_topk` and
-    :func:`bigram_lm`."""
+    ties broken by value — the vocabulary of :func:`oov_stats` and the
+    default model of :func:`lm_coverage`."""
     counts = rows.groupBy(key).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     return counts.orderBy(F.desc("n"), key).limit(k)
-
-
-def vocab_topk(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
-    """Global top-``vocab_size`` vocabulary by corpus frequency:
-    (word, n).  Ties break lexicographically so the vocabulary is
-    deterministic.  One explode + one keyed agg (map-side combined) +
-    a single top-k sort over the AGGREGATED word table (vocabulary-
-    sized, not corpus-sized)."""
-    return _most_frequent(split_words(df, explode=True), "word", vocab_size)
 
 
 def oov_stats(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
@@ -899,19 +865,6 @@ def oov_stats(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
 _BIGRAM_EXPR = "transform(sequence(1, size(ws) - 1), j -> concat_ws(' ', slice(ws, j, 2)))"
 
 
-def bigram_lm(df: DataFrame, lm_size: int = 4096) -> DataFrame:
-    """(bigram, n): the corpus' top-``lm_size`` word bigrams by
-    frequency — the count-based language model behind
-    :func:`lm_coverage`.  Ties break lexicographically so the model is
-    deterministic.  Same shape as :func:`vocab_topk`: one explode, one
-    map-side-combined keyed agg, one top-k over the AGGREGATED bigram
-    table (model-sized, not corpus-sized)."""
-    bigrams = split_words(df, min_words=2).select(
-        F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram")
-    )
-    return _most_frequent(bigrams, "bigram", lm_size)
-
-
 def lm_coverage(
     df: DataFrame,
     lm: DataFrame | None = None,
@@ -928,9 +881,10 @@ def lm_coverage(
     Documents under 2 words have no bigrams and are absent (same
     convention as :func:`contamination`).
 
-    ``lm`` overrides the model (e.g. one built on a trusted reference
-    corpus — the actual CCNet setup); default is the corpus' own
-    :func:`bigram_lm`.  Scale shape: the model is ``lm_size`` rows →
+    ``lm`` overrides the model with a (bigram, n) table (e.g. one built
+    on a trusted reference corpus — the actual CCNet setup); default is
+    the corpus' own top-``lm_size`` bigrams by frequency, ties broken
+    lexicographically.  Scale shape: the model is ``lm_size`` rows →
     broadcast left join; the corpus side is one explode + one
     doc-keyed agg (map-side combined) and is never shuffled on a
     bigram key."""

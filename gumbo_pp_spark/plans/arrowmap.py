@@ -11,8 +11,8 @@ every operator.
 
 Its callers: ``operators.extract.run_program`` (and every extraction
 program built on it), ``operators.pdf.extract_pdf_text``,
-``operators.encoding.sniff_and_transcode``, the four
-``operators.multimodal`` kernels, ``operators.robots.robots_filter``
+``operators.encoding.sniff_and_transcode``,
+``operators.multimodal.image_features``, ``operators.robots.robots_filter``
 and ``crawl_schedule``, and ``sources.pdfs.synth_pdfs``.
 
 Left hand-written, because their batch body is not a per-row loop:
@@ -23,10 +23,8 @@ Left hand-written, because their batch body is not a per-row loop:
   (``extract.main_text_batch``);
 * ``operators.extract.explode_nodes``: each document's node arrays
   are concatenated column-wise with numpy, not built row by row;
-* the WARC batch parsers (``sources.warc.read_warc`` and
-  ``read_warc_cdx``, and ``streaming.ingest.stream_warc_extract``,
-  which reuses ``parse_content_batches``): a row is a whole gzip file
-  or a file's member spans, read with seeks grouped per file, and the
+* the WARC reader ``sources.warc.read_warc_cdx``: a row is one of a
+  file's member spans, read with seeks grouped per file, and the
   records carry no input column.
 
 ``tests/test_physical_plans.py`` pins the ``mapInArrow`` call sites

@@ -440,7 +440,9 @@ def read_extracted(
     schema-inference job runs, and a run id made only of digits stays
     a string.  Otherwise — records from before the field existed, or
     runs whose ``passthrough`` differed — Spark infers the schema from
-    the files and the directory names."""
+    the files and the directory names.  When every record read has
+    zero rows (no file was written), the result is the empty frame of
+    the stored schema."""
     from pyspark.sql.types import StructType
 
     ledger = PartitionLedger(os.path.join(out_dir, "_ledger"))
@@ -454,15 +456,22 @@ def read_extracted(
         recs = ledger.committed(as_of=as_of)
     if not recs:
         raise FileNotFoundError(f"no committed splits under {out_dir}")
-    recs = {s: r for s, r in recs.items() if r["rows"] > 0}
+    full = {s: r for s, r in recs.items() if r["rows"] > 0}
+    ddls = {r.get("schema") for r in (full or recs).values()}
+    schema = (StructType.fromDDL(ddls.pop() + ", run string, split_id int")
+              if len(ddls) == 1 and None not in ddls else None)
+    if not full:
+        # every committed split is empty and wrote no file
+        if schema is None:
+            raise FileNotFoundError(f"no committed rows and no stored schema under {out_dir}")
+        return spark.createDataFrame([], schema)
     paths = sorted(
         os.path.join(out_dir, "data", f"run={r['run_id']}", f"split_id={s}")
-        for s, r in recs.items()
+        for s, r in full.items()
     )
     # basePath keeps run/split_id partition columns while reading only
     # the committed leaf directories
     reader = spark.read.option("basePath", os.path.join(out_dir, "data"))
-    ddls = {r.get("schema") for r in recs.values()}
-    if len(ddls) == 1 and None not in ddls:
-        reader = reader.schema(StructType.fromDDL(ddls.pop() + ", run string, split_id int"))
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.parquet(*paths)

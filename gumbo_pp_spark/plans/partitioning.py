@@ -172,10 +172,6 @@ def ensure_min_parallelism(df: DataFrame, waves: int = 2) -> DataFrame:
     words takes them from ``split_words``; map operators do not spread
     at all — their input parallelism is the reader's decision.
     """
-    if df.isStreaming:
-        # streaming plans cannot be probed via .rdd (and micro-batch
-        # parallelism is the source's concern) — pass through
-        return df
     sc = df.sparkSession.sparkContext
     target = max(1, sc.defaultParallelism)
     if df.rdd.getNumPartitions() >= target:

@@ -17,18 +17,13 @@ Common Crawl layout is mirrored exactly where it matters for scale:
 * response records carry an **HTTP/1.1 envelope** around the html
   payload, as in a real crawl.
 
-Two readers, two scale regimes:
-
-* :func:`read_warc` — ``binaryFile`` scan, ONE FILE = ONE TASK.  This
-  is the industry-standard granularity for CC (a crawl is ~90k files of
-  ~1 GB; file-level parallelism saturates any cluster).  ``binaryFile``
-  does not split files, so a pathologically fat file skews — which is
-  what the second reader is for.
-* :func:`read_warc_cdx` — reads the (tiny) sidecar indexes
-  distributed, buckets records into fixed-size range groups, and each
-  task seek-reads only its members (local seek here; ranged GET on an
-  object store — same access pattern).  This is the skew-proof path:
-  task size is ``records_per_task`` regardless of file sizes.
+The reader, :func:`read_warc_cdx`, reads the (tiny) sidecar indexes
+distributed, buckets records into fixed-size range groups, and each
+task seek-reads only its members (local seek here; ranged GET on an
+object store — same access pattern).  Task size is
+``records_per_task`` regardless of file sizes, so one fat file cannot
+skew the scan (``binaryFile``, which reads a whole file per task,
+would).
 
 Robustness contract (mirrors ``operators/pdf.py``): a corrupt member
 yields ONE error row (``warc_ok = false``) and never poisons the task;
@@ -224,7 +219,7 @@ def write_warc_corpus(pages: DataFrame, out_dir: str, n_files: int = 8) -> None:
 
 
 # ----------------------------------------------------------------------
-# distributed sources
+# distributed source
 # ----------------------------------------------------------------------
 def _records_batch(rows):
     """WARC_FIELDS Arrow batch from ``_iter_file_records`` rows."""
@@ -242,32 +237,13 @@ def _records_batch(rows):
     )
 
 
-def parse_content_batches(batches):
-    """Arrow kernel shared by the batch and streaming readers: a
-    ``binaryFile`` ``content`` column in, WARC_FIELDS batches out."""
-    for batch in batches:
-        for blob in batch.column("content"):
-            rows = list(_iter_file_records(blob.as_py()))
-            if rows:
-                yield _records_batch(rows)
-
-
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """File-per-task WARC scan (CC-standard granularity; see module
-    docstring).  Output: ``url, warc_ts, html, warc_ok``."""
-    files = spark.read.format("binaryFile").load(f"{path}/*.warc.gz") \
-        .select("content")
-    return files.mapInArrow(parse_content_batches, WARC_FIELDS)
-
-
 def read_warc_cdx(
     spark: SparkSession, path: str, records_per_task: int = 2000
 ) -> DataFrame:
     """Skew-proof ranged-read WARC source: distribute the CDX sidecars,
     bucket records into ``records_per_task`` groups, and seek-read only
     the addressed gzip members (ranged GET on an object store).  Task
-    size is independent of WARC file sizes — the answer to the one fat
-    file that breaks the file-per-task path."""
+    size is independent of WARC file sizes."""
     idx = (
         spark.read.format("text").load(f"{path}/*.cdx")
         .select(

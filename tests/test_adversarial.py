@@ -5,8 +5,27 @@ parse is the whole point of the Gumbo model)."""
 import numpy as np
 import pytest
 
+from gumbo_pp_spark import matchers as m
+from gumbo_pp_spark.css import css
 from gumbo_pp_spark.parser.html5 import parse_html
-from gumbo_pp_spark.operators.extract import extract_main_text, main_text_program
+from gumbo_pp_spark.operators.extract import (
+    DENSITY_FIELDS,
+    DOM_STATS_FIELDS,
+    HEAD_META_FIELDS,
+    PAGE_META_FIELDS,
+    all_matches_program,
+    anchor_texts_program,
+    count_matches_program,
+    density_extract_program,
+    dom_stats_program,
+    extract_main_text,
+    head_meta_program,
+    main_text_program,
+    page_meta_program,
+    select_first_program,
+    table_scrape_program,
+)
+from gumbo_pp_spark.operators.markdown import MARKDOWN_FIELDS, markdown_program
 
 
 ADVERSARIAL = [
@@ -25,6 +44,29 @@ ADVERSARIAL = [
 ]
 
 
+# every run_program kernel behind an operator, with the output DDL that
+# operator declares: name -> (program, out_fields)
+KERNELS = {
+    "table_scrape": (table_scrape_program("t"), "csv string"),
+    "select_first": (
+        select_first_program(css("div"), {
+            "content": "content", "inner": "inner", "outer": "outer",
+            "href": "attr:href", "start": "start", "end": "end", "node_id": "node_id",
+        }),
+        "content string, inner string, outer string, href string, "
+        "start bigint, end bigint, node_id bigint",
+    ),
+    "dom_stats": (dom_stats_program, DOM_STATS_FIELDS),
+    "count_matches": (count_matches_program(m.tag.A), "n_matches int"),
+    "all_matches": (all_matches_program(m.tag.A), "hrefs array<string>"),
+    "density": (density_extract_program, DENSITY_FIELDS),
+    "head_meta": (head_meta_program(), HEAD_META_FIELDS),
+    "page_meta": (page_meta_program(), PAGE_META_FIELDS),
+    "anchor_texts": (anchor_texts_program, "hrefs array<string>, texts array<string>"),
+    "markdown": (markdown_program, MARKDOWN_FIELDS),
+}
+
+
 class TestParserRobustness:
     @pytest.mark.parametrize("raw", ADVERSARIAL, ids=range(len(ADVERSARIAL)))
     def test_parse_never_raises(self, raw):
@@ -35,6 +77,22 @@ class TestParserRobustness:
             assert 0 <= nt.parent[i] < i
             assert i < nt.subtree_end[i] <= nt.subtree_end[nt.parent[i]]
         main_text_program(nt)  # kernel must not crash either
+
+    @pytest.mark.parametrize("raw", ADVERSARIAL, ids=range(len(ADVERSARIAL)))
+    @pytest.mark.parametrize("kernel", KERNELS)
+    def test_kernel_output_fits_declared_schema(self, spark, kernel, raw):
+        # every kernel returns each declared column on hostile input,
+        # and each value builds the Arrow type run_program's runner
+        # gives that column (plans/arrowmap.py::map_rows)
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+        from pyspark.sql.types import StructType
+
+        program, fields = KERNELS[kernel]
+        out = program(parse_html(raw))
+        for f in StructType.fromDDL(fields).fields:
+            assert f.name in out, f.name
+            pa.array([out[f.name]], to_arrow_type(f.dataType))
 
     def test_deep_nesting_iterative(self):
         nt = parse_html("<div>" * 10000 + "bottom")

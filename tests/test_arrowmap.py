@@ -1,7 +1,6 @@
 """The row-kernel runner (plans/arrowmap.py) and the NULL contracts of
 the operators built on it."""
 
-import hashlib
 
 import pyarrow as pa
 import pytest
@@ -83,10 +82,6 @@ def _media(spark, kind):
         [(1, kind, None, 16, 16, 8000, 500, "fake")], M.MEDIA_SCHEMA)
 
 
-def _md5_last(rows):
-    return [(*r[:-1], hashlib.md5(r[-1]).hexdigest()) for r in rows]
-
-
 # every runner caller given one row whose main input is NULL: name ->
 # (build, digest of the collected rows, the rows the operator returned
 # before it ran on the runner)
@@ -101,16 +96,6 @@ _NULL_ROWS = {
     "image_features": (
         lambda s: M.image_features(_media(s, "image")), list,
         [(1, 34106, 31212, 31177, 256, 6584814826110039317)]),
-    "resize_images": (
-        lambda s: M.resize_images(_media(s, "image")), _md5_last,
-        [(1, "623349a171141154fde71b5813157f88")]),
-    "sample_frames": (
-        lambda s: M.sample_frames(_media(s, "video")), _md5_last,
-        [(1, 0, 0, "5bb333ffb15a7ce51e68a0e43f79b76f"),
-         (1, 1, 250, "b6a3e4e823b617712f47fa7a81f2d896")]),
-    "audio_features": (
-        lambda s: M.audio_features(_media(s, "audio")), list,
-        [(1, 0.5804792642593384, 0.5048762190547637)]),
     "robots_filter": (
         lambda s: robots_filter(
             s.createDataFrame([(1, None), (2, "https://a.example/p")], "doc_id bigint, url string"),

@@ -92,6 +92,20 @@ class TestHits:
         for r in out:
             assert 0 <= r.hub <= 10**6 and 0 <= r.authority <= 10**6
 
+    def test_plan_grows_at_most_linearly_in_rounds(self, spark):
+        # each pass reads its raw sums twice (node join and max): the
+        # plan may grow by the same number of joins per round, never
+        # double per pass
+        import re
+
+        e = self._edges(spark, [(i, (i * 7 + 3) % 60) for i in range(200)])
+        joins = [
+            len(re.findall(r"\bJoin\b", G.hits(e, n_iter=n)._jdf.queryExecution()
+                           .optimizedPlan().toString()))
+            for n in (1, 2, 3)
+        ]
+        assert joins[2] - joins[1] == joins[1] - joins[0], joins
+
 
 class TestDegreeStats:
     def test_histograms_both_directions(self, spark):

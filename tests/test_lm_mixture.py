@@ -9,22 +9,6 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-class TestBigramLm:
-    def test_topk_counts_multiplicity_and_ties(self, spark):
-        docs = _docs(spark, [(1, "a b a b"), (2, "a b c d"), (3, "z z")])
-        # counts: 'a b'=3 (twice in doc1 + doc2), everything else 1
-        lm = {r.bigram: r.n for r in T.bigram_lm(docs, lm_size=1).collect()}
-        assert lm == {"a b": 3}
-        # the n=1 tie at the cut breaks lexicographically
-        lm3 = [r.bigram for r in T.bigram_lm(docs, lm_size=3)
-               .orderBy("bigram").collect()]
-        assert lm3 == ["a b", "b a", "b c"]
-
-    def test_single_word_docs_contribute_nothing(self, spark):
-        docs = _docs(spark, [(1, "lonely"), (2, "x y")])
-        assert T.bigram_lm(docs, lm_size=10).count() == 1
-
-
 class TestLmCoverage:
     def test_coverage_values_exact(self, spark):
         docs = _docs(spark, [(1, "a b a b"), (2, "a b c d"), (3, "z z")])
@@ -39,6 +23,17 @@ class TestLmCoverage:
             3: (1, 0, 0, 0),
         }
 
+    def test_default_model_counts_multiplicity_and_ties(self, spark):
+        docs = _docs(spark, [(1, "a b a b"), (2, "a b c d"), (3, "z z")])
+        got = {
+            r.doc_id: (r.n_known, r.known_mass)
+            for r in T.lm_coverage(docs, lm_size=3).collect()
+        }
+        # counts: 'a b'=3 (twice in doc1 + doc2), every other bigram 1;
+        # the n=1 tie at the cut breaks lexicographically, so the model
+        # is {'a b': 3, 'b a': 1, 'b c': 1} and 'c d', 'z z' are unknown
+        assert got == {1: (3, 7), 2: (2, 4), 3: (0, 0)}
+
     def test_single_word_doc_absent(self, spark):
         docs = _docs(spark, [(1, "word"), (2, "a b")])
         ids = {r.doc_id for r in T.lm_coverage(docs, lm_size=4).collect()}
@@ -47,9 +42,10 @@ class TestLmCoverage:
     def test_external_reference_model(self, spark):
         # the CCNet setup: model built on a trusted corpus, applied to
         # a crawled one
-        ref = _docs(spark, [(1, "good text good text")])
+        # the bigram counts of "good text good text"
+        lm = spark.createDataFrame([("good text", 2), ("text good", 1)],
+                                   "bigram string, n bigint")
         crawl = _docs(spark, [(9, "good text garbled junk")])
-        lm = T.bigram_lm(ref, lm_size=10)
         (r,) = T.lm_coverage(crawl, lm=lm).collect()
         # crawl bigrams: [good text, text garbled, garbled junk] ->
         # only 'good text' known

@@ -50,9 +50,6 @@ _PRUNED_RUNNER_CALLERS = {
     "run_program": (dom_stats, _pages_src),
     "sniff_and_transcode": (sniff_and_transcode, _pages_src),
     "image_features": (image_features, _media_src),
-    "resize_images": (M.resize_images, _media_src),
-    "sample_frames": (M.sample_frames, _media_src),
-    "audio_features": (M.audio_features, _media_src),
     "crawl_schedule": (crawl_schedule, _robots_src),
 }
 
@@ -334,16 +331,13 @@ _WORD_OPERATORS = {
     "repeated_windows": (lambda d: T.repeated_windows(d, width=3), 1),
     "repeated_spans": (lambda d: T.repeated_spans(d, width=3), 1),
     "repeated_window_stats": (lambda d: T.repeated_window_stats(d, width=3), 1),
-    "vocab_topk": (lambda d: T.vocab_topk(d, 4), 1),
     "oov_stats": (lambda d: T.oov_stats(d, 4), 1),
-    "bigram_lm": (lambda d: T.bigram_lm(d, 4), 1),
     "lm_coverage": (lambda d: T.lm_coverage(d, lm_size=4), 1),
     "vocab_drift": (lambda d: T.vocab_drift(d, d.where("doc_id % 2 = 0"), 4), 2),
     "tfidf_top_terms": (lambda d: T.tfidf_top_terms(d), 1),
     "word_freq_histogram": (lambda d: T.word_freq_histogram(d), 1),
     "shingles": (lambda d: D.shingles(d), 1),
     "minhash_signatures": (lambda d: D.minhash_signatures(d), 1),
-    "cms_sketch": (lambda d: S.cms_sketch(d), 1),
     "cms_heavy_hitters": (lambda d: S.cms_heavy_hitters(d, min_count=2), 1),
     "kmv_distinct": (lambda d: S.kmv_distinct(d), 1),
 }
@@ -418,9 +412,7 @@ _MAP_IN_ARROW_SITES = {
     ("gumbo_pp_spark/operators/extract.py", "extract_main_text"),
     ("gumbo_pp_spark/operators/extract.py", "explode_nodes"),
     ("gumbo_pp_spark/plans/lineage.py", "extract_with_resume"),
-    ("gumbo_pp_spark/sources/warc.py", "read_warc"),
     ("gumbo_pp_spark/sources/warc.py", "read_warc_cdx"),
-    ("gumbo_pp_spark/streaming/ingest.py", "stream_warc_extract"),
 }
 
 
@@ -540,6 +532,70 @@ def test_every_public_default_is_set_by_a_caller():
             unset += [f"{path.relative_to(root)}::{fn.name}({arg})"
                       for arg, i in params if not is_set(fn.name, arg, i)]
     assert unset == [], f"{len(unset)} unset: {unset}"
+
+
+# top-level definitions that no root reaches and that stay: (module
+# path, name) -> reason
+_UNREACHED = {
+    ("gumbo_pp_spark/matchers.py", "find_some"):
+        "paper API: daw::algorithm::find_some as gumbo_pp uses it (test.cpp:96-102)",
+    ("gumbo_pp_spark/nodetable.py", "to_string"):
+        "paper API: the node-type names of gumbo_util.h:161-180",
+    ("gumbo_pp_spark/plans/lineage.py", "vacuum_uncommitted"):
+        "north-rule lineage: removes the leaves of killed or abandoned runs",
+    ("gumbo_pp_spark/parser/serialize.py", "serialize_tree"):
+        "reference: the html5lib tree format the conformance corpus compares",
+    ("gumbo_pp_spark/parser/serialize.py", "serialize_fragment"):
+        "reference: the html5lib fragment format the conformance corpus compares",
+    ("gumbo_pp_spark/parser/bytemap.py", "_char_starts_bytewise"):
+        "reference: the bytewise form test_bytemap.py checks the vectorized map against",
+}
+
+
+def test_every_definition_is_reached():
+    """Every top-level ``def``/``class`` of ``gumbo_pp_spark/`` and
+    ``jobs/`` is reached from a root, following referenced names
+    (``Name`` ids and ``Attribute`` attrs) transitively, or is on
+    ``_UNREACHED`` with its reason.  The roots are module-level code
+    (which holds ``suite.QUERIES``), every ``jobs/`` definition, module
+    hooks such as ``__getattr__``, ``__spark_entry__.py``, ``bench.py``,
+    ``selfcheck.py`` and ``perfbench/*.py``.  Tests are not roots: code
+    that only a test reaches is deleted with its test."""
+    import ast
+    from pathlib import Path
+
+    def names(node):
+        return {n.id if isinstance(n, ast.Name) else n.attr for n in ast.walk(node)
+                if isinstance(n, (ast.Name, ast.Attribute))}
+
+    root = Path(__file__).resolve().parents[1]
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    reached = set()
+    for path in [*root.joinpath("gumbo_pp_spark").rglob("*.py"),
+                 *root.joinpath("jobs").rglob("*.py")]:
+        rel = path.relative_to(root).as_posix()
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if (isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                    and not rel.startswith("jobs/") and not node.name.startswith("__")):
+                defs.setdefault(node.name, []).append((rel, node))
+            else:
+                reached |= names(node)
+    for path in [root / "__spark_entry__.py", root / "bench.py", root / "selfcheck.py",
+                 *root.joinpath("perfbench").glob("*.py")]:
+        reached |= names(ast.parse(path.read_text(), str(path)))
+    todo = list(reached)
+    while todo:
+        for _rel, node in defs.get(todo.pop(), ()):
+            new = names(node) - reached
+            reached |= new
+            todo += new
+    unreached = {(rel, name) for name, found in defs.items() if name not in reached
+                 for rel, _node in found}
+    stray = sorted(unreached - _UNREACHED.keys())
+    assert stray == [], f"{len(stray)} reached by no root: {stray}"
+    # an entry whose definition is gone or now reached leaves the list
+    stale = sorted(_UNREACHED.keys() - unreached)
+    assert stale == [], f"stale _UNREACHED entries: {stale}"
 
 
 def test_revenue_by_nation_broadcasts_all_dims(spark):

@@ -108,18 +108,6 @@ def test_run_training_corpus_releases_caches_and_audits_recall(spark, tmp_path):
     assert m["ann_recall_ok"] in (True, False)
 
 
-def test_unpersist_caches_idempotent(spark):
-    from gumbo_pp_spark.operators.dedup import unpersist_caches
-
-    # earlier tests calling build_training_corpus OUTSIDE a cache_scope
-    # leave their signature caches in the process-global registry —
-    # the first call drains whatever is there, the second must be a
-    # no-op returning 0 (idempotency)
-    unpersist_caches()
-    assert unpersist_caches() == 0
-    assert unpersist_caches() == 0
-
-
 def test_cache_scope_releases_on_exception(spark):
     """ADVICE r5: an exception inside the pipeline body must still
     release the signature caches at the scope exit."""

@@ -3,6 +3,7 @@ checkpoint/lineage resume (SURVEY.md §7 M3)."""
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gumbo_pp_spark.plans.lineage import PartitionLedger, extract_with_resume, read_extracted
 from gumbo_pp_spark.plans.partitioning import salt_skewed_keys, size_balanced_bins
@@ -209,6 +210,18 @@ class TestEmptySplitResume:
         # and the follow-up run sees them committed (no crash loop)
         r2 = extract_with_resume(spark, empty, out_dir, n_splits=8)
         assert r2["splits_processed"] == 0 and r2["skipped"] == 8
+
+    def test_all_empty_table_reads_as_empty_frame_of_stored_schema(self, spark, tmp_path):
+        out_dir = str(tmp_path / "empty")
+        empty = synth_pages(spark, SF_SMOKE).limit(0)
+        extract_with_resume(spark, empty, out_dir, n_splits=4)
+        recs = PartitionLedger(f"{out_dir}/_ledger").committed()
+        assert len(recs) == 4 and all(r["rows"] == 0 for r in recs.values())
+        got = read_extracted(spark, out_dir)
+        (ddl,) = {r["schema"] for r in recs.values()}
+        assert got.schema.simpleString() == StructType.fromDDL(
+            ddl + ", run string, split_id int").simpleString()
+        assert got.count() == 0
 
 
 class TestLedgerMetrics:

@@ -1,5 +1,5 @@
 """WARC source/sink (sources/warc.py): from-spec WARC 1.1 writer and
-the two readers (file-per-task, CDX ranged).  The format is public
+the CDX ranged reader.  The format is public
 (ISO 28500); Common Crawl's one-gzip-member-per-record layout is the
 load-bearing property — it is what makes the ranged reader possible."""
 
@@ -58,7 +58,7 @@ def test_payload_without_http_envelope_passthrough():
 
 
 # ----------------------------------------------------------------------
-# distributed write + both read paths
+# distributed write + the ranged read path
 # ----------------------------------------------------------------------
 @pytest.fixture(scope="module")
 def warc_dir(spark, tmp_path_factory):
@@ -95,12 +95,6 @@ def test_cdx_sidecar_addresses_members(warc_dir):
         assert ok and u == url
 
 
-def test_read_warc_file_per_task(spark, warc_dir):
-    out = W.read_warc(spark, warc_dir)
-    assert out.count() == 500
-    assert out.filter("NOT warc_ok").count() == 0
-
-
 def test_read_warc_cdx_ranged(spark, warc_dir):
     out = W.read_warc_cdx(spark, warc_dir, records_per_task=50)
     assert out.count() == 500
@@ -114,63 +108,17 @@ def test_read_warc_cdx_ranged(spark, warc_dir):
     assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
-def test_read_warc_corrupt_file_yields_error_rows(spark, tmp_path):
+def test_read_warc_cdx_corrupt_member_yields_error_row(spark, tmp_path):
     d = str(tmp_path)
     rec = W.make_response_record("https://x/1", "2024-01-01T00:00:00Z", b"<p>a</p>", 1)
+    good = W.gzip_member(rec)
+    bad = good[:20] + b"\x00garbage"
     with open(os.path.join(d, "part-00000.warc.gz"), "wb") as f:
-        f.write(W.gzip_member(rec) + b"\x1f\x8bBROKEN")
-    out = W.read_warc(spark, d).collect()
-    by_ok = {r.warc_ok: r for r in out}
-    assert by_ok[True].url == "https://x/1" and by_ok[False].url is None
-
-
-# ----------------------------------------------------------------------
-# streaming ingestion over a WARC drop directory
-# ----------------------------------------------------------------------
-def _warc_file(path, urls_payloads):
-    data = b"".join(
-        W.gzip_member(
-            W.make_response_record(u, f"2024-01-01T00:00:0{i}Z", p, i + 1)
-        )
-        for i, (u, p) in enumerate(urls_payloads)
-    )
-    with open(path, "wb") as f:
-        f.write(data)
-
-
-def test_stream_warc_extract_incremental(spark, tmp_path):
-    """Crawl-archive drop-dir ingestion: each landed .warc.gz is
-    processed exactly once per checkpoint lineage; output rows equal
-    the batch path over the same files."""
-    from gumbo_pp_spark.operators.extract import extract_main_text
-    from gumbo_pp_spark.streaming.ingest import stream_warc_extract
-
-    drop = str(tmp_path / "drop")
-    os.makedirs(drop)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    _warc_file(
-        os.path.join(drop, "a.warc.gz"),
-        [("https://x/1", b"<p>alpha beta</p>"), ("https://x/2", b"<i>gamma</i>")],
-    )
-    stream_warc_extract(spark, drop, out, ckpt).awaitTermination(120)
-    got1 = spark.read.parquet(out)
-    assert sorted(r.url for r in got1.select("url").collect()) == [
-        "https://x/1", "https://x/2",
-    ]
-    # parity with the batch path over the same directory
-    batch = extract_main_text(
-        W.read_warc(spark, drop).filter("warc_ok"), passthrough=("url",)
-    )
-    cols = sorted(got1.columns)
-    assert sorted(
-        map(tuple, got1.select(*cols).collect())
-    ) == sorted(map(tuple, batch.select(*cols).collect()))
-
-    # a newly-landed file is a fresh micro-batch; already-seen file is
-    # NOT reprocessed (file-source + checkpoint exactly-once contract)
-    _warc_file(os.path.join(drop, "b.warc.gz"), [("https://x/3", b"<b>delta</b>")])
-    stream_warc_extract(spark, drop, out, ckpt).awaitTermination(120)
-    urls = [r.url for r in spark.read.parquet(out).select("url").collect()]
-    assert sorted(urls) == ["https://x/1", "https://x/2", "https://x/3"]
+        f.write(good + bad)
+    with open(os.path.join(d, "part-00000.cdx"), "w") as f:
+        f.write(f"https://x/1\t0\t{len(good)}\t1\n"
+                f"https://x/2\t{len(good)}\t{len(bad)}\t2\n")
+    # the corrupt member is one error row, not a failed task
+    out = W.read_warc_cdx(spark, d).collect()
+    assert {r.warc_ok: r.url for r in out} == {True: "https://x/1", False: None}
+    assert len(out) == 2
