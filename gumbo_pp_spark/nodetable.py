@@ -24,7 +24,6 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .parser.tags import TAG_IDS, TAG_NAMES, TAG_UNKNOWN
 
 # Node type codes — fixed closed enumeration, mirrors GumboNodeType as
 # listed by to_string(GumboNodeType) (reference gumbo_util.h:161-180).
@@ -117,9 +116,6 @@ class NodeTable:
     def class_values(self) -> np.ndarray:
         return self.attr_values("class")
 
-    def id_values(self) -> np.ndarray:
-        return self.attr_values("id")
-
     def _ensure_attr_index(self) -> None:
         if self._attr_owner is not None:
             return
@@ -169,10 +165,6 @@ class NodeTable:
     def subtree(self, i: int) -> tuple[int, int]:
         """True subtree interval [i, subtree_end)."""
         return i, int(self.subtree_end[i])
-
-    def dfs_next(self, i: int) -> int:
-        """DFS-preorder successor skipping the subtree of ``i``."""
-        return int(self.subtree_end[i])
 
     def children_ids(self, i: int) -> np.ndarray:
         """Direct child ids of node i, in order."""
@@ -424,12 +416,3 @@ class NodeTable:
         if self.type[i] == ELEMENT or self.type[i] == DOCUMENT:
             return int(self.src_end[i])
         return len(self.text[i])
-
-    # -- batch concat helper -------------------------------------------
-    @staticmethod
-    def tag_to_id(name: str) -> int:
-        return TAG_IDS.get(name, TAG_UNKNOWN)
-
-    @staticmethod
-    def id_to_tag(tid: int) -> str:
-        return TAG_NAMES[tid] if 0 <= tid < len(TAG_NAMES) else ""

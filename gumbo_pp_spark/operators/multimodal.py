@@ -1,5 +1,5 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary
-columns with typed metadata, processed by an Arrow-batched kernel.
+"""Multimodal column plumbing: images as an opaque binary column with
+typed metadata, processed by an Arrow-batched kernel.
 
 The Spark-side contract (schemas, partitioning, the row kernel's
 signature, Arrow batch shapes) is real and tested; the codec layer is
@@ -22,12 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.arrowmap import map_rows
 
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, payload binary, "
-    "width int, height int, sample_rate int, duration_ms int, codec string"
-)
-
-
 def _keystream(payload: bytes, n: int) -> np.ndarray:
     """Deterministic uint8 stream from an md5-CTR over the payload.
 
@@ -48,24 +42,22 @@ def decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
 
 
 def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic media table derived from documents (payload =
-    UTF-8 text bytes; metadata derived from doc fields)."""
+    """Deterministic image table derived from documents: one image per
+    document with ``doc_id % 3 = 0`` (payload = UTF-8 text bytes;
+    decode size derived from ``n_chars``), with the columns
+    :func:`image_features` reads."""
     from ..plans.partitioning import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), waves=1
     )
-    return docs.selectExpr(
+    return docs.where("doc_id % 3 = 0").selectExpr(
         "CAST(doc_id AS BIGINT) AS media_id",
-        "CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind",
         "CAST(encode(text, 'UTF-8') AS BINARY) AS payload",
         # multiples of 8 -> the 8x8 phash grid has EQUAL block sizes,
         # keeping the feature math integer-exact (oracle-reproducible)
         "CAST(16 + (n_chars % 8) * 8 AS INT) AS width",
         "CAST(16 + (n_chars % 5) * 8 AS INT) AS height",
-        "CAST(8000 AS INT) AS sample_rate",
-        "CAST(200 + (n_chars % 10) * 100 AS INT) AS duration_ms",
-        "'fake' AS codec",
     )
 
 
@@ -80,7 +72,7 @@ def image_features(df: DataFrame) -> DataFrame:
     — avoids float division).  Bit 63 kept clear for signed int64.
 
     One :func:`~gumbo_pp_spark.plans.arrowmap.map_rows` stage over the
-    image rows of ``df``, one task per input partition:
+    rows of ``df`` (each an image), one task per input partition:
     :func:`synth_media` spreads the one-row-group documents scan where
     it reads it.  NULL contract (neither aborts the task):
 
@@ -103,7 +95,7 @@ def image_features(df: DataFrame) -> DataFrame:
         return [(*sums, w * h, phash)]
 
     return map_rows(
-        df.where("kind = 'image'"), ("payload", "width", "height"),
+        df, ("payload", "width", "height"),
         "sum_r bigint, sum_g bigint, sum_b bigint, n_px bigint, phash bigint", row,
         ("media_id",),
     )

@@ -867,7 +867,6 @@ _BIGRAM_EXPR = "transform(sequence(1, size(ws) - 1), j -> concat_ws(' ', slice(w
 
 def lm_coverage(
     df: DataFrame,
-    lm: DataFrame | None = None,
     lm_size: int = 4096,
 ) -> DataFrame:
     """(doc_id, n_bigrams, n_known, known_mass, coverage_e4) — the
@@ -881,20 +880,17 @@ def lm_coverage(
     Documents under 2 words have no bigrams and are absent (same
     convention as :func:`contamination`).
 
-    ``lm`` overrides the model with a (bigram, n) table (e.g. one built
-    on a trusted reference corpus — the actual CCNet setup); default is
-    the corpus' own top-``lm_size`` bigrams by frequency, ties broken
-    lexicographically.  Scale shape: the model is ``lm_size`` rows →
+    The model is the corpus' own top-``lm_size`` bigrams by frequency,
+    ties broken lexicographically.  Scale shape: the model is ``lm_size`` rows →
     broadcast left join; the corpus side is one explode + one
     doc-keyed agg (map-side combined) and is never shuffled on a
     bigram key."""
-    # one bigram stream feeds both the default model build and the
-    # per-document coverage
+    # one bigram stream feeds both the model build and the per-document
+    # coverage
     bg = split_words(df, keep=(DOC_ID,), min_words=2).select(
         "doc_id", F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram")
     )
-    if lm is None:
-        lm = _most_frequent(bg, "bigram", lm_size)
+    lm = _most_frequent(bg, "bigram", lm_size)
     return (
         bg.join(F.broadcast(lm), "bigram", "left")
         .groupBy("doc_id")

@@ -234,9 +234,7 @@ def extend_training_corpus(
     (:func:`~.operators.dedup.minhash_lsh_pairs_between`; at 100 TB
     retain the prior SIGNATURES with the corpus instead of recomputing
     them from ``clean_text``).  Returns the rows to APPEND; union with
-    the prior corpus (or commit through the lineage ledger and read
-    back incrementally with ``read_extracted(since=...)``) for the
-    extended table."""
+    the prior corpus for the extended table."""
     from .operators.dedup import incremental_dedup, minhash_lsh_pairs_between
 
     # near_dup_min_equal governs BOTH dedup stages (ADVICE r7: it

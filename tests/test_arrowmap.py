@@ -77,9 +77,9 @@ def _pages(spark):
         [(1, "https://n.example/x", None)], "doc_id bigint, url string, html binary")
 
 
-def _media(spark, kind):
+def _media(spark):
     return spark.createDataFrame(
-        [(1, kind, None, 16, 16, 8000, 500, "fake")], M.MEDIA_SCHEMA)
+        [(1, None, 16, 16)], "media_id bigint, payload binary, width int, height int")
 
 
 # every runner caller given one row whose main input is NULL: name ->
@@ -94,7 +94,7 @@ _NULL_ROWS = {
         lambda s: extract_pdf_text(_pages(s).withColumnRenamed("html", "pdf")), list,
         [(1, "https://n.example/x", "", 0, False)]),
     "image_features": (
-        lambda s: M.image_features(_media(s, "image")), list,
+        lambda s: M.image_features(_media(s)), list,
         [(1, 34106, 31212, 31177, 256, 6584814826110039317)]),
     "robots_filter": (
         lambda s: robots_filter(

@@ -39,18 +39,6 @@ class TestLmCoverage:
         ids = {r.doc_id for r in T.lm_coverage(docs, lm_size=4).collect()}
         assert ids == {2}
 
-    def test_external_reference_model(self, spark):
-        # the CCNet setup: model built on a trusted corpus, applied to
-        # a crawled one
-        # the bigram counts of "good text good text"
-        lm = spark.createDataFrame([("good text", 2), ("text good", 1)],
-                                   "bigram string, n bigint")
-        crawl = _docs(spark, [(9, "good text garbled junk")])
-        (r,) = T.lm_coverage(crawl, lm=lm).collect()
-        # crawl bigrams: [good text, text garbled, garbled junk] ->
-        # only 'good text' known
-        assert (r.n_bigrams, r.n_known, r.coverage_e4) == (3, 1, 3333)
-
     def test_model_side_is_broadcast(self, spark):
         from tests.test_physical_plans import plan_of
 

@@ -91,13 +91,13 @@ class TestG2:
         nt = parse_html(G2)
         # implied html/head/body around the fragment (libgumbo does the same)
         p = first(nt, (nt.tag_name == "p"))
-        assert nt.id_values()[p] == "example"
+        assert nt.attr_values("id")[p] == "example"
         assert nt.content_text(p) == "This is an example paragraph"
 
     def test_find_some_equivalent(self):
         nt = parse_html(G2)
         m_tag = nt.tag_name == "p"
-        m_id = nt.id_values() == np.array(["example"] * nt.n, dtype=object)
+        m_id = nt.attr_values("id") == np.array(["example"] * nt.n, dtype=object)
         both = m_tag & m_id
         i = nt.first_match(m_tag | m_id)
         assert both[i]
@@ -106,7 +106,7 @@ class TestG2:
 class TestG3:
     def test_table_scrape_csv(self):
         nt = parse_html(G3)
-        ids = nt.id_values()
+        ids = nt.attr_values("id")
         div = first(nt, (nt.tag_name == "div") & (ids == "important_table"))
         # anchored find: iteration is NOT bounded to the subtree
         # (gumbo_node_iterator.h:98-104; table_scrape.cpp:52)

@@ -487,21 +487,21 @@ def test_no_pandas_operators():
     assert sites == [], sites
 
 
-def test_every_public_default_is_set_by_a_caller():
-    """A defaulted parameter of a top-level public function in
-    ``gumbo_pp_spark/`` is an option only if something sets it: a call
-    (callee ``Name`` id or ``Attribute`` attr equal to the function's
-    name) in the program, the jobs, the tests, perfbench, ``bench.py``,
-    ``__spark_entry__.py`` or ``selfcheck.py`` passes it by keyword, by
-    position, or through ``*args``/``**kwargs``.  One nothing sets is a
-    constant."""
+def _unset_public_defaults(with_tests: bool) -> list[str]:
+    """``path::function(param)`` of every defaulted parameter of a
+    top-level public function in ``gumbo_pp_spark/`` that no call sets:
+    no call (callee ``Name`` id or ``Attribute`` attr equal to the
+    function's name) in the program, the jobs, perfbench, ``bench.py``,
+    ``__spark_entry__.py``, ``selfcheck.py`` and, ``with_tests``, the
+    tests passes it by keyword, by position, or through
+    ``*args``/``**kwargs``."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]
     program = sorted(root.joinpath("gumbo_pp_spark").rglob("*.py"))
     callers = [*program, *root.joinpath("jobs").rglob("*.py"),
-               *root.joinpath("tests").rglob("*.py"),
+               *(root.joinpath("tests").rglob("*.py") if with_tests else ()),
                *root.joinpath("perfbench").rglob("*.py"),
                root / "bench.py", root / "__spark_entry__.py", root / "selfcheck.py"]
     calls: dict[str, list[ast.Call]] = {}
@@ -529,20 +529,100 @@ def test_every_public_default_is_set_by_a_caller():
             first = len(pos) - len(a.defaults)
             params = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
             params += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
-            unset += [f"{path.relative_to(root)}::{fn.name}({arg})"
+            unset += [f"{path.relative_to(root).as_posix()}::{fn.name}({arg})"
                       for arg, i in params if not is_set(fn.name, arg, i)]
+    return unset
+
+
+def test_every_public_default_is_set_by_a_caller():
+    """A public defaulted parameter is an option only if something sets
+    it (:func:`_unset_public_defaults`, tests counted as callers).  One
+    nothing sets is a constant."""
+    unset = _unset_public_defaults(with_tests=True)
     assert unset == [], f"{len(unset)} unset: {unset}"
 
 
-# top-level definitions that no root reaches and that stay: (module
-# path, name) -> reason
+# public defaults that only tests set: a ratchet — a new test-only
+# option fails test_every_public_default_is_set_only_by_tests_on_the_list,
+# and so does an entry the system now sets or that is gone
+_TEST_ONLY_DEFAULTS = {
+    "gumbo_pp_spark/operators/dedup.py::ngram_jaccard_pairs(df_cap)",
+    "gumbo_pp_spark/operators/dedup.py::minhash_lsh_pairs(bucket_cap)",
+    "gumbo_pp_spark/operators/dedup.py::connected_components(a)",
+    "gumbo_pp_spark/operators/dedup.py::connected_components(b)",
+    "gumbo_pp_spark/operators/dedup.py::connected_components(max_rounds)",
+    "gumbo_pp_spark/operators/dedup.py::connected_components(checkpoint_every)",
+    "gumbo_pp_spark/operators/dedup.py::minhash_contamination(n_hashes)",
+    "gumbo_pp_spark/operators/dedup.py::minhash_contamination(n_bands)",
+    "gumbo_pp_spark/operators/encoding.py::sniff_and_transcode(transport_col)",
+    "gumbo_pp_spark/operators/graph.py::pagerank(checkpoint)",
+    "gumbo_pp_spark/operators/graph.py::hits(scale)",
+    "gumbo_pp_spark/operators/packing.py::shard_manifest(n_shards)",
+    "gumbo_pp_spark/operators/packing.py::select_token_budget(block_size)",
+    "gumbo_pp_spark/operators/similarity.py::lsh_cosine_topk(multiprobe)",
+    "gumbo_pp_spark/operators/sketches.py::cms_heavy_hitters(width)",
+    "gumbo_pp_spark/operators/sketches.py::cms_heavy_hitters(depth)",
+    "gumbo_pp_spark/operators/sketches.py::cms_heavy_hitters(min_count)",
+    "gumbo_pp_spark/operators/sketches.py::kmv_distinct(k)",
+    "gumbo_pp_spark/operators/textstats.py::paragraph_chunks(stride)",
+    "gumbo_pp_spark/operators/textstats.py::cap_per_host(salt_buckets)",
+    "gumbo_pp_spark/operators/textstats.py::host_quality_gate(host_col)",
+    "gumbo_pp_spark/operators/textstats.py::gopher_rules(text_col)",
+    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_words)",
+    "gumbo_pp_spark/operators/textstats.py::gopher_rules(min_mean_word_len_e4)",
+    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_mean_word_len_e4)",
+    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_symbol_ratio_e4)",
+    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_bullet_frac_e4)",
+    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_ellipsis_frac_e4)",
+    "gumbo_pp_spark/operators/textstats.py::gopher_rules(min_alpha_word_frac_e4)",
+    "gumbo_pp_spark/operators/textstats.py::mirror_hosts(fp_cap)",
+    "gumbo_pp_spark/operators/textstats.py::repeated_windows(df_cap)",
+    "gumbo_pp_spark/operators/textstats.py::stratified_sample(default_e4)",
+    "gumbo_pp_spark/operators/textstats.py::repeated_window_stats(df_cap)",
+    "gumbo_pp_spark/operators/textstats.py::corpus_report(min_tokens)",
+    "gumbo_pp_spark/operators/textstats.py::corpus_report(min_stopword_ratio_e4)",
+    "gumbo_pp_spark/operators/textstats.py::corpus_report(min_alpha_ratio_e4)",
+    "gumbo_pp_spark/operators/textstats.py::classifier_weights(n_buckets)",
+    "gumbo_pp_spark/operators/textstats.py::holdout_split(val_pct)",
+    "gumbo_pp_spark/parser/html5.py::parse_html(options)",
+    "gumbo_pp_spark/plans/lineage.py::vacuum_uncommitted(min_age_sec)",
+    "gumbo_pp_spark/plans/partitioning.py::salt_skewed_keys(n_partitions)",
+    "gumbo_pp_spark/plans/partitioning.py::salt_skewed_keys(skew_factor)",
+    "gumbo_pp_spark/plans/partitioning.py::size_balanced_bins(target_bytes)",
+    "gumbo_pp_spark/sources/pdfs.py::make_pdf(compress)",
+    "gumbo_pp_spark/sources/warc.py::read_warc_cdx(records_per_task)",
+}
+
+
+def test_every_public_default_is_set_only_by_tests_on_the_list():
+    """The same walk with tests not counted as callers: every default
+    only a test sets is on ``_TEST_ONLY_DEFAULTS``, and every entry
+    there still is one."""
+    test_only = set(_unset_public_defaults(with_tests=False))
+    assert sorted(test_only - _TEST_ONLY_DEFAULTS) == [], "new test-only defaults"
+    assert sorted(_TEST_ONLY_DEFAULTS - test_only) == [], "stale _TEST_ONLY_DEFAULTS entries"
+
+
+# definitions that no root reaches and that stay: (module path, name or
+# Class.method) -> reason
 _UNREACHED = {
     ("gumbo_pp_spark/matchers.py", "find_some"):
         "paper API: daw::algorithm::find_some as gumbo_pp uses it (test.cpp:96-102)",
     ("gumbo_pp_spark/nodetable.py", "to_string"):
         "paper API: the node-type names of gumbo_util.h:161-180",
+    ("gumbo_pp_spark/nodetable.py", "NodeTable.next_sibling"):
+        "paper API: iterator next_sibling() (gumbo_node_iterator.h:131-145), without its bug",
+    ("gumbo_pp_spark/nodetable.py", "NodeTable.last_sibling"):
+        "paper API: iterator last_sibling() (gumbo_node_iterator.h:147-156)",
+    ("gumbo_pp_spark/nodetable.py", "NodeTable.iter_matches"):
+        "paper API: daw::find_iterator over DFS order as table_scrape.cpp:54-62 uses it",
+    ("gumbo_pp_spark/nodetable.py", "NodeTable.node_start_offset"):
+        "paper API: node_start_offset (gumbo_util.h:121-132)",
+    ("gumbo_pp_spark/nodetable.py", "NodeTable.error_positions"):
+        "paper API: gumbo_range::errors() (gumbo_node_iterator.h:235-249) with the "
+        "GumboOptions.tab_stop source positions (src/gumbo_pp.cpp:27-31)",
     ("gumbo_pp_spark/plans/lineage.py", "vacuum_uncommitted"):
-        "north-rule lineage: removes the leaves of killed or abandoned runs",
+        "north-rule lineage: removes the run directories of killed or abandoned runs",
     ("gumbo_pp_spark/parser/serialize.py", "serialize_tree"):
         "reference: the html5lib tree format the conformance corpus compares",
     ("gumbo_pp_spark/parser/serialize.py", "serialize_fragment"):
@@ -554,9 +634,10 @@ _UNREACHED = {
 
 def test_every_definition_is_reached():
     """Every top-level ``def``/``class`` of ``gumbo_pp_spark/`` and
-    ``jobs/`` is reached from a root, following referenced names
-    (``Name`` ids and ``Attribute`` attrs) transitively, or is on
-    ``_UNREACHED`` with its reason.  The roots are module-level code
+    ``jobs/``, and every method of those classes but the dunders, is
+    reached from a root, following referenced names (``Name`` ids and
+    ``Attribute`` attrs) transitively, or is on ``_UNREACHED`` with its
+    reason.  A method is reached by its name, not by its class.  The roots are module-level code
     (which holds ``suite.QUERIES``), every ``jobs/`` definition, module
     hooks such as ``__getattr__``, ``__spark_entry__.py``, ``bench.py``,
     ``selfcheck.py`` and ``perfbench/*.py``.  Tests are not roots: code
@@ -569,7 +650,8 @@ def test_every_definition_is_reached():
                 if isinstance(n, (ast.Name, ast.Attribute))}
 
     root = Path(__file__).resolve().parents[1]
-    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    # name -> [(module path, qualified name, nodes whose names it reaches)]
+    defs: dict[str, list[tuple[str, str, list[ast.AST]]]] = {}
     reached = set()
     for path in [*root.joinpath("gumbo_pp_spark").rglob("*.py"),
                  *root.joinpath("jobs").rglob("*.py")]:
@@ -577,7 +659,15 @@ def test_every_definition_is_reached():
         for node in ast.parse(path.read_text(), str(path)).body:
             if (isinstance(node, (ast.FunctionDef, ast.ClassDef))
                     and not rel.startswith("jobs/") and not node.name.startswith("__")):
-                defs.setdefault(node.name, []).append((rel, node))
+                methods = ([m for m in node.body if isinstance(m, ast.FunctionDef)
+                            and not m.name.startswith("__")]
+                           if isinstance(node, ast.ClassDef) else [])
+                # a class reaches its bases, decorators, attributes and
+                # dunder methods; each other method is reached by its name
+                own = [n for n in ast.iter_child_nodes(node) if n not in methods]
+                defs.setdefault(node.name, []).append((rel, node.name, own))
+                for m in methods:
+                    defs.setdefault(m.name, []).append((rel, f"{node.name}.{m.name}", [m]))
             else:
                 reached |= names(node)
     for path in [root / "__spark_entry__.py", root / "bench.py", root / "selfcheck.py",
@@ -585,12 +675,12 @@ def test_every_definition_is_reached():
         reached |= names(ast.parse(path.read_text(), str(path)))
     todo = list(reached)
     while todo:
-        for _rel, node in defs.get(todo.pop(), ()):
-            new = names(node) - reached
+        for _rel, _qual, nodes in defs.get(todo.pop(), ()):
+            new = set().union(*map(names, nodes)) - reached
             reached |= new
             todo += new
-    unreached = {(rel, name) for name, found in defs.items() if name not in reached
-                 for rel, _node in found}
+    unreached = {(rel, qual) for name, found in defs.items() if name not in reached
+                 for rel, qual, _nodes in found}
     stray = sorted(unreached - _UNREACHED.keys())
     assert stray == [], f"{len(stray)} reached by no root: {stray}"
     # an entry whose definition is gone or now reached leaves the list

@@ -1,6 +1,8 @@
 """Scale-mechanics tests: skew salting, size-balanced bins,
 checkpoint/lineage resume (SURVEY.md §7 M3)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -93,44 +95,47 @@ class TestLineageResume:
             assert r.text == f"Heading {r.doc_id}{r.orig}"
 
     def test_uncommitted_runs_invisible(self, spark, tmp_path):
-        import os
+        import shutil
 
         out_dir = str(tmp_path / "extract_out2")
         pages = synth_pages(spark, SF_SMOKE)
-        extract_with_resume(spark, pages, out_dir, n_splits=8, max_splits_this_run=2)
-        # fake a partial run directory with no ledger commit
-        fake = os.path.join(out_dir, "data", "run=deadbeef", "split_id=7")
-        os.makedirs(fake, exist_ok=True)
+        r1 = extract_with_resume(spark, pages, out_dir, n_splits=8, max_splits_this_run=2)
+        # fake a partial run that wrote a readable file but never committed
+        data = os.path.join(out_dir, "data")
+        part = sorted(os.listdir(os.path.join(data, f"run={r1['run_id']}")))[0]
+        os.makedirs(os.path.join(data, "run=deadbeef"))
+        shutil.copy(os.path.join(data, f"run={r1['run_id']}", part),
+                    os.path.join(data, "run=deadbeef", part))
         got = read_extracted(spark, out_dir)
-        splits = {r["split_id"] for r in got.select("split_id").distinct().collect()}
-        assert 7 not in splits
+        assert {r.run for r in got.select("run").distinct().collect()} == {r1["run_id"]}
+        assert got.count() == r1["rows"]
 
 
 class TestLedgerManifest:
     """VERDICT r6 #7: committed() must be O(1) file reads, not one JSON
     open per split — every committed record lives in manifest.json."""
 
+    DDL = "doc_id bigint, split_id int"
+
     def _rec(self, s, run="r0"):
-        return {"split_id": s, "run_id": run, "status": "committed", "rows": 1}
+        return {"split_id": s, "run_id": run, "rows": 1}
 
     def test_one_commit_is_one_manifest_write(self, tmp_path):
-        import os
-
         from gumbo_pp_spark.plans.lineage import PartitionLedger
 
         led = PartitionLedger(str(tmp_path / "led"))
-        led.commit(*(self._rec(s) for s in range(100)))
+        led.commit(self.DDL, *(self._rec(s) for s in range(100)))
         assert os.listdir(led.path) == [led.MANIFEST]
-        recs = led.committed()
-        assert [recs[s]["seq"] for s in range(100)] == list(range(1, 101))
+        assert led.committed() == {s: self._rec(s) for s in range(100)}
         # a later commit replaces split 5 and adds split 100
-        led.commit(self._rec(5, run="r1"), self._rec(100, run="r1"))
+        led.commit(self.DDL, self._rec(5, run="r1"), self._rec(100, run="r1"))
         recs = led.committed()
         assert len(recs) == 101
-        assert recs[5]["run_id"] == "r1" and recs[5]["seq"] == 101
-        assert recs[100]["run_id"] == "r1" and recs[100]["seq"] == 102
+        assert recs[5]["run_id"] == "r1" and recs[100]["run_id"] == "r1"
         assert all(recs[s]["run_id"] == "r0" for s in range(100) if s != 5)
         assert os.listdir(led.path) == [led.MANIFEST]
+        # the DDL is stored once, not per record
+        assert led._load()[0] == self.DDL
 
     def test_large_ledger_loads_in_o1_file_reads(self, tmp_path, monkeypatch):
         import builtins
@@ -138,7 +143,8 @@ class TestLedgerManifest:
         from gumbo_pp_spark.plans import lineage as L
 
         led = L.PartitionLedger(str(tmp_path / "big"))
-        recs = {"version": 1, "records": [self._rec(s) for s in range(100_000)]}
+        recs = {"version": 2, "schema": self.DDL,
+                "records": [self._rec(s) for s in range(100_000)]}
         import json as _json
 
         with open(f"{led.path}/{led.MANIFEST}", "w") as f:
@@ -153,8 +159,6 @@ class TestLedgerManifest:
         assert len(opens) == 1  # the manifest only
 
     def test_run_commits_with_one_ledger_write(self, spark, tmp_path, monkeypatch):
-        import os
-
         from gumbo_pp_spark.plans import lineage as L
 
         out_dir = str(tmp_path / "one_write")
@@ -215,12 +219,11 @@ class TestEmptySplitResume:
         out_dir = str(tmp_path / "empty")
         empty = synth_pages(spark, SF_SMOKE).limit(0)
         extract_with_resume(spark, empty, out_dir, n_splits=4)
-        recs = PartitionLedger(f"{out_dir}/_ledger").committed()
+        ddl, recs = PartitionLedger(f"{out_dir}/_ledger")._load()
         assert len(recs) == 4 and all(r["rows"] == 0 for r in recs.values())
+        assert not os.path.exists(os.path.join(out_dir, "data"))  # no file was written
         got = read_extracted(spark, out_dir)
-        (ddl,) = {r["schema"] for r in recs.values()}
-        assert got.schema.simpleString() == StructType.fromDDL(
-            ddl + ", run string, split_id int").simpleString()
+        assert got.schema.simpleString() == StructType.fromDDL(ddl + ", run string").simpleString()
         assert got.count() == 0
 
 
@@ -234,10 +237,9 @@ class TestLedgerMetrics:
         recs = PartitionLedger(f"{out_dir}/_ledger").committed()
         assert len(recs) == 4
         for rec in recs.values():
-            for field in ("rows", "bytes", "parse_ms", "kernel_ms",
-                          "parse_errors", "wall_ms", "attempt", "run_id",
-                          "committed_at", "status"):
-                assert field in rec, field
+            assert set(rec) == {"split_id", "run_id", "rows", "bytes", "parse_ms",
+                                "kernel_ms", "parse_errors", "c_docs", "py_docs",
+                                "busy_ms", "wall_ms", "run_wall_ms", "committed_at"}
         assert sum(r["rows"] for r in recs.values()) == 64
         assert sum(r["parse_ms"] for r in recs.values()) >= 0
 
@@ -420,62 +422,110 @@ def _split_batch(rows):
     )
 
 
+def _writer_schema(spark):
+    """Arrow file schema of the split writer over ``_split_batch``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from gumbo_pp_spark.operators.extract import main_text_ddl
+
+    pages = spark.createDataFrame([], "doc_id long, url string, split_id int, html binary")
+    return to_arrow_schema(StructType.fromDDL(
+        main_text_ddl(pages, ("doc_id", "url", "split_id"), stage_metrics=True)))
+
+
 class TestSplitWriter:
     """The executor-side writer of ``extract_with_resume``, driven
-    directly: a retried attempt of a partition must replace its files,
-    and hidden temporary files must stay invisible to readers."""
+    directly: one file per task, a retried attempt of a partition must
+    replace its file, and hidden temporary files must stay invisible to
+    readers."""
 
-    def test_retry_replaces_files_and_splits_land_in_their_leaves(self, spark, tmp_path):
-        import os
+    ROWS = [(i, f"https://w.example/{i}", (i * 7) % 3, f"<p>doc {i}</p>".encode())
+            for i in range(30)]
 
+    def test_retry_replaces_its_one_file(self, spark, tmp_path):
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
 
-        from gumbo_pp_spark.operators.extract import main_text_ddl
         from gumbo_pp_spark.plans.lineage import _write_splits
 
-        pages = spark.createDataFrame([], "doc_id long, url string, html binary")
-        schema = to_arrow_schema(
-            StructType.fromDDL(main_text_ddl(pages, ("doc_id", "url"), stage_metrics=True)))
-        rows = [(i, f"https://w.example/{i}", (i * 7) % 3, f"<p>doc {i}</p>".encode())
-                for i in range(30)]
+        schema = _writer_schema(spark)
+        rows = self.ROWS
         # every batch holds rows of all three splits, interleaved
         batches = [_split_batch(rows[:20]), _split_batch(rows[20:])]
-        data_dir = str(tmp_path / "run=r")
+        run_dir = str(tmp_path / "run=r")
 
         def attempt():
             # tallies without the measured timings, which differ per attempt
-            (tb,) = _write_splits(data_dir, schema, iter(batches), part=7)
+            (tb,) = _write_splits(run_dir, schema, iter(batches), part=7)
             return tb.drop_columns(["parse_us", "kernel_us"]).to_pylist()
 
         tallies = attempt()
         # a retried attempt of the same partition over the same input
         assert attempt() == tallies
         assert {t["split_id"]: t["rows"] for t in tallies} == {0: 10, 1: 10, 2: 10}
-        assert sorted(os.listdir(data_dir)) == ["split_id=0", "split_id=1", "split_id=2"]
-        for s in range(3):
-            leaf = os.path.join(data_dir, f"split_id={s}")
-            assert os.listdir(leaf) == ["part-00007.parquet"]
-            got = pq.read_table(os.path.join(leaf, "part-00007.parquet"))
-            want = [r for r in rows if r[2] == s]
-            # the original rows in input order, not doubled
-            assert got.column("doc_id").to_pylist() == [r[0] for r in want]
-            assert got.column("text").to_pylist() == [f"doc {r[0]}" for r in want]
-            assert got.schema.names == schema.names
+        # one file for the task, whatever its splits
+        assert os.listdir(run_dir) == ["part-00007.parquet"]
+        got = pq.read_table(os.path.join(run_dir, "part-00007.parquet"))
+        # the original rows in input order, not doubled, split_id a column
+        assert got.column("doc_id").to_pylist() == [r[0] for r in rows]
+        assert got.column("split_id").to_pylist() == [r[2] for r in rows]
+        assert got.column("text").to_pylist() == [f"doc {r[0]}" for r in rows]
+        assert got.schema.names == schema.names
+
+    def test_failed_attempt_leaves_no_file(self, spark, tmp_path):
+        from gumbo_pp_spark.plans.lineage import _write_splits
+
+        schema = _writer_schema(spark)
+        run_dir = str(tmp_path / "run=r")
+        list(_write_splits(run_dir, schema, iter([_split_batch(self.ROWS)]), part=2))
+        before = os.path.getsize(os.path.join(run_dir, "part-00002.parquet"))
+
+        def killed():
+            yield _split_batch(self.ROWS[:5])
+            raise RuntimeError("executor lost")
+
+        with pytest.raises(RuntimeError, match="executor lost"):
+            list(_write_splits(run_dir, schema, killed(), part=2))
+        # the failed attempt's temporary file is gone and the earlier
+        # attempt's file is untouched
+        assert os.listdir(run_dir) == ["part-00002.parquet"]
+        assert os.path.getsize(os.path.join(run_dir, "part-00002.parquet")) == before
+
+    def test_task_without_rows_writes_nothing(self, spark, tmp_path):
+        from gumbo_pp_spark.plans.lineage import _write_splits
+
+        empty = _split_batch(self.ROWS).slice(0, 0)
+        run_dir = str(tmp_path / "run=r")
+        assert list(_write_splits(run_dir, _writer_schema(spark), iter([empty]), part=0)) == []
+        assert not os.path.exists(run_dir)
 
     def test_stray_temporary_file_is_ignored_by_readers(self, spark, tmp_path):
-        import os
-
         out_dir = str(tmp_path / "stray")
         pages = synth_pages(spark, SF_SMOKE).limit(40)
         extract_with_resume(spark, pages, out_dir, n_splits=2)
         assert read_extracted(spark, out_dir).count() == 40
         (run,) = os.listdir(os.path.join(out_dir, "data"))
-        leaf = os.path.join(out_dir, "data", run, "split_id=0")
-        with open(os.path.join(leaf, ".part-00003-deadbeef.tmp"), "w") as f:
+        with open(os.path.join(out_dir, "data", run, ".part-00003-deadbeef.tmp"), "w") as f:
             f.write("half-written by a killed attempt")
         assert read_extracted(spark, out_dir).count() == 40
+
+
+class TestFilesPerRun:
+    """A run writes one file per write task — at most one per input
+    partition — however many splits it processes."""
+
+    @pytest.mark.parametrize("n_parts", [1, 3])
+    @pytest.mark.parametrize("n_splits", [4, 256])
+    def test_at_most_one_file_per_input_partition(self, spark, tmp_path, n_parts, n_splits):
+        out_dir = str(tmp_path / "files")
+        pages = synth_pages(spark, SF_SMOKE).coalesce(n_parts)
+        res = extract_with_resume(spark, pages, out_dir, n_splits=n_splits)
+        assert res["splits_processed"] == n_splits and res["rows"] == 500
+        files = [os.path.relpath(os.path.join(d, f), out_dir)
+                 for d, _, fs in os.walk(os.path.join(out_dir, "data")) for f in fs]
+        run_dir = os.path.join("data", f"run={res['run_id']}")
+        assert sorted(files) == [os.path.join(run_dir, f"part-{p:05d}.parquet")
+                                 for p in range(n_parts)]
+        assert read_extracted(spark, out_dir).count() == 500
 
 
 class TestExtractedSchema:
@@ -492,10 +542,10 @@ class TestExtractedSchema:
                             passthrough=("doc_id", "url", "warc_ts"))
         got = read_extracted(spark, out_dir)
         assert got.schema.simpleString() == (
-            "struct<doc_id:bigint,url:string,warc_ts:timestamp,text:string,"
+            "struct<doc_id:bigint,url:string,warc_ts:timestamp,split_id:int,text:string,"
             "spans:array<struct<node_id:int,tag:string,start:bigint,end:bigint,"
             "start_byte:bigint,end_byte:bigint>>,n_nodes:int,parse_errors:int,"
-            "parse_us:bigint,kernel_us:bigint,c_engine:tinyint,run:string,split_id:int>"
+            "parse_us:bigint,kernel_us:bigint,c_engine:tinyint,run:string>"
         )
         assert {r.doc_id: r.warc_ts for r in got.collect()} == {r[0]: r[2] for r in rows}
 
@@ -503,11 +553,7 @@ class TestExtractedSchema:
 class TestCommittedReadSchema:
     """read_extracted declares the schema the ledger recorded: no
     inference job, and partition values keep the types the writer
-    meant.  Without a single stored schema it infers, as before."""
-
-    @staticmethod
-    def _rows(df):
-        return sorted((r.doc_id, r.text, r.run, r.split_id) for r in df.collect())
+    meant."""
 
     def test_digit_only_run_id_reads_back_as_string(self, spark, tmp_path, monkeypatch):
         import uuid
@@ -534,44 +580,52 @@ class TestCommittedReadSchema:
         assert jobs == []
         assert got.count() == 40
 
-    def test_ledger_without_schema_falls_back_to_inference(self, spark, tmp_path):
-        import json
-        import os
 
-        out_dir = str(tmp_path / "legacy")
-        extract_with_resume(spark, synth_pages(spark, SF_SMOKE).limit(40), out_dir, n_splits=4)
-        declared = read_extracted(spark, out_dir)
-        # the ledger of an older writer: the same records without "schema"
-        manifest = os.path.join(out_dir, "_ledger", PartitionLedger.MANIFEST)
-        with open(manifest) as f:
-            doc = json.load(f)
-        for rec in doc["records"]:
-            del rec["schema"]
-        with open(manifest, "w") as f:
-            json.dump(doc, f)
-        inferred, jobs = _jobs_of(spark, lambda: read_extracted(spark, out_dir))
-        assert len(jobs) == 1  # the schema-inference job
-        assert inferred.schema == declared.schema
-        rows = self._rows(declared)
-        assert len(rows) == 40 and self._rows(inferred) == rows
+class TestLedgerLayoutGuards:
+    """One table, one schema, one layout: a resume that would write
+    another DDL, and a ledger of the older per-split leaf layout, are
+    refused instead of read."""
 
-    def test_runs_with_different_passthrough_fall_back_to_inference(self, spark, tmp_path):
+    @pytest.mark.parametrize("passthrough", [("doc_id", "url", "lang"), ("url",)])
+    def test_resume_with_other_passthrough_raises_before_any_job(
+            self, spark, tmp_path, passthrough):
         out_dir = str(tmp_path / "mixed")
-        pages = synth_pages(spark, SF_SMOKE).where("doc_id < 40")  # the same rows both runs
-        first = extract_with_resume(spark, pages, out_dir, n_splits=4, max_splits_this_run=2,
-                                    passthrough=("doc_id", "url", "lang"))
-        second = extract_with_resume(spark, pages, out_dir, n_splits=4)
-        recs = PartitionLedger(f"{out_dir}/_ledger").committed()
-        assert len({r["schema"] for r in recs.values()}) == 2
-        got, jobs = _jobs_of(spark, lambda: read_extracted(spark, out_dir))
-        assert len(jobs) == 1
-        assert {r["run_id"] for r in recs.values()} == {first["run_id"], second["run_id"]}
-        want = sorted(
-            (r.doc_id, f"Heading {r.doc_id}{r.text}", recs[r.split_id]["run_id"], r.split_id)
-            for r in pages.select(
-                "doc_id", "text",
-                F.pmod(F.xxhash64("url"), F.lit(4)).cast("int").alias("split_id")).collect())
-        assert self._rows(got) == want
+        pages = synth_pages(spark, SF_SMOKE).where("doc_id < 40")
+        extract_with_resume(spark, pages, out_dir, n_splits=4, max_splits_this_run=2)
+        ledger = PartitionLedger(f"{out_dir}/_ledger")
+        before = ledger._load()
+
+        def resume():
+            with pytest.raises(ValueError, match="another passthrough"):
+                extract_with_resume(spark, pages, out_dir, n_splits=4, passthrough=passthrough)
+
+        _, jobs = _jobs_of(spark, resume)
+        assert jobs == []
+        assert ledger._load() == before
+        assert len(os.listdir(os.path.join(out_dir, "data"))) == 1
+
+    @pytest.mark.parametrize("entry", ["committed", "extract_with_resume", "read_extracted",
+                                       "vacuum_uncommitted"])
+    def test_version_1_manifest_raises(self, spark, tmp_path, entry):
+        import json
+
+        from gumbo_pp_spark.plans.lineage import vacuum_uncommitted
+
+        out_dir = str(tmp_path / "v1")
+        ledger = PartitionLedger(f"{out_dir}/_ledger")
+        rec = {"split_id": 0, "run_id": "r0", "status": "committed", "rows": 1, "seq": 1,
+               "attempt": 1, "schema": "doc_id bigint, url string"}
+        with open(os.path.join(ledger.path, ledger.MANIFEST), "w") as f:
+            json.dump({"version": 1, "records": [rec]}, f)
+        call = {
+            "committed": ledger.committed,
+            "extract_with_resume": lambda: extract_with_resume(
+                spark, synth_pages(spark, SF_SMOKE), out_dir, n_splits=4),
+            "read_extracted": lambda: read_extracted(spark, out_dir),
+            "vacuum_uncommitted": lambda: vacuum_uncommitted(out_dir, min_age_sec=0),
+        }[entry]
+        with pytest.raises(ValueError, match=r"version-1 ledger.*split_id=<s>"):
+            call()
 
 
 class TestNullHtmlResume:
@@ -619,129 +673,11 @@ class TestPerSplitWall:
         assert len(set(walls)) > 1  # distinct attribution
 
 
-class TestSnapshotTimeTravel:
-    """Iceberg-style snapshot reads over the lineage ledger (r7)."""
-
-    def test_as_of_reads_only_earlier_commits(self, spark, tmp_path):
-        out_dir = str(tmp_path / "tt")
-        pages = synth_pages(spark, SF_SMOKE)
-        extract_with_resume(spark, pages, out_dir, n_splits=8, max_splits_this_run=3)
-        ledger = PartitionLedger(out_dir + "/_ledger")
-        snap1 = ledger.current_snapshot()
-        n1 = read_extracted(spark, out_dir).count()
-        extract_with_resume(spark, pages, out_dir, n_splits=8)
-        snap2 = ledger.current_snapshot()
-        assert snap2 > snap1
-        # current view = everything; as_of snap1 = the first 3 splits
-        assert read_extracted(spark, out_dir).count() == 500
-        tt = read_extracted(spark, out_dir, as_of=snap1)
-        assert tt.count() == n1 < 500
-        # the as_of view equals what the table looked like then: same
-        # split set as the first run's ledger state
-        assert set(ledger.committed(as_of=snap1)) == set(
-            r["split_id"] for r in ledger.snapshot_log()[:3]
-        )
-
-    def test_snapshot_log_is_ordered_history(self, tmp_path):
-        ledger = PartitionLedger(str(tmp_path / "_ledger"))
-        for s in (4, 2, 9):
-            ledger.commit({"split_id": s, "run_id": "r", "rows": 1})
-        log = ledger.snapshot_log()
-        assert [r["split_id"] for r in log] == [4, 2, 9]
-        assert [r["seq"] for r in log] == [1, 2, 3]
-        # a fresh handle (new driver) continues the sequence
-        ledger2 = PartitionLedger(str(tmp_path / "_ledger"))
-        ledger2.commit({"split_id": 5, "run_id": "r2", "rows": 1})
-        assert ledger2.snapshot_log()[-1]["seq"] == 4
-
-    def test_seq_continues_across_commits_and_preseq_records_read_as_zero(self, tmp_path):
-        import json as J
-        import os as O
-
-        ledger = PartitionLedger(str(tmp_path / "_ledger"))
-        ledger.commit({"split_id": 0, "run_id": "r", "rows": 1})
-        ledger.commit({"split_id": 1, "run_id": "r", "rows": 1})
-        assert ledger.committed(as_of=1).keys() == {0}
-        # hand-write a pre-seq (legacy) record into the manifest:
-        # visible in EVERY snapshot
-        mpath = O.path.join(ledger.path, ledger.MANIFEST)
-        with open(mpath) as f:
-            doc = J.load(f)
-        doc["records"].append({"split_id": 7, "run_id": "old", "rows": 1})
-        with open(mpath, "w") as f:
-            J.dump(doc, f)
-        assert ledger.committed(as_of=0).keys() == {7}
-        assert set(ledger.committed(as_of=1)) == {0, 7}
-        # the next commit continues after the highest seq
-        ledger.commit({"split_id": 2, "run_id": "r", "rows": 1})
-        assert ledger.committed()[2]["seq"] == 3
-
-
-class TestIncrementalRead:
-    """Iceberg incremental-scan analogue: read only splits committed
-    after a stored snapshot cursor."""
-
-    def test_since_reads_only_new_commits(self, spark, tmp_path):
-        out_dir = str(tmp_path / "inc")
-        pages = synth_pages(spark, SF_SMOKE)
-        extract_with_resume(spark, pages, out_dir, n_splits=8, max_splits_this_run=3)
-        ledger = PartitionLedger(out_dir + "/_ledger")
-        cursor = ledger.current_snapshot()
-        n1 = read_extracted(spark, out_dir).count()
-        extract_with_resume(spark, pages, out_dir, n_splits=8)
-        inc = read_extracted(spark, out_dir, since=cursor)
-        full = read_extracted(spark, out_dir)
-        # change set + old view partition the full table exactly
-        assert inc.count() == full.count() - n1 > 0
-        old_ids = {r.doc_id for r in read_extracted(
-            spark, out_dir, as_of=cursor).select("doc_id").collect()}
-        inc_ids = {r.doc_id for r in inc.select("doc_id").collect()}
-        assert not (old_ids & inc_ids)
-        assert len(old_ids | inc_ids) == full.count()
-
-    def test_empty_change_set_raises_lookup(self, spark, tmp_path):
-        out_dir = str(tmp_path / "inc2")
-        pages = synth_pages(spark, SF_SMOKE)
-        extract_with_resume(spark, pages, out_dir, n_splits=4)
-        ledger = PartitionLedger(out_dir + "/_ledger")
-        cur = ledger.current_snapshot()
-        assert ledger.committed_between(cur) == {}
-        import pytest as _pt
-
-        with _pt.raises(LookupError):
-            read_extracted(spark, out_dir, since=cur)
-
-    def test_committed_between_window(self, tmp_path):
-        ledger = PartitionLedger(str(tmp_path / "_ledger"))
-        for s in range(5):
-            ledger.commit({"split_id": s, "run_id": "r", "rows": 1})
-        win = ledger.committed_between(2, as_of=4)
-        assert sorted(r["seq"] for r in win.values()) == [3, 4]
-
-    def test_snapshot_diff_summary(self, tmp_path):
-        ledger = PartitionLedger(str(tmp_path / "_ledger"))
-        for s in range(4):
-            ledger.commit({"split_id": s, "run_id": "r", "rows": 10 * (s + 1)})
-        # splits 0..3 get seqs 1..4; since=1 -> seqs 2..4 = splits 1..3
-        d = ledger.snapshot_diff(1)
-        assert d == {
-            "since": 1,
-            "as_of": 4,
-            "n_commits": 3,
-            "split_ids": [1, 2, 3],
-            "rows": 90,
-        }
-        assert ledger.snapshot_diff(4)["n_commits"] == 0
-        assert ledger.snapshot_diff(0, as_of=2)["split_ids"] == [0, 1]
-
-
 class TestVacuum:
-    """Orphan-leaf cleanup: committed data and the ledger survive,
+    """Orphan-run cleanup: committed data and the ledger survive,
     uncommitted leftovers go."""
 
-    def test_removes_only_uncommitted_leaves(self, spark, tmp_path):
-        import os
-
+    def test_removes_only_uncommitted_runs(self, spark, tmp_path):
         from gumbo_pp_spark.plans.lineage import vacuum_uncommitted
 
         out_dir = str(tmp_path / "vac")
@@ -750,7 +686,7 @@ class TestVacuum:
         before = read_extracted(spark, out_dir).count()
 
         # a crashed run that wrote data but never committed
-        orphan = os.path.join(out_dir, "data", "run=deadbeef", "split_id=99")
+        orphan = os.path.join(out_dir, "data", "run=deadbeef")
         os.makedirs(orphan)
         with open(os.path.join(orphan, "part-00000.parquet"), "w") as f:
             f.write("junk")
@@ -765,17 +701,15 @@ class TestVacuum:
 
         # past the age threshold (simulated) the orphan goes
         res = vacuum_uncommitted(out_dir, min_age_sec=0)
-        assert res["removed"] == ["run=deadbeef/split_id=99"]
-        assert res["kept"] > 0
-        assert not os.path.exists(os.path.join(out_dir, "data", "run=deadbeef"))
+        assert res["removed"] == ["run=deadbeef"]
+        assert res["kept"] == 1
+        assert not os.path.exists(orphan)
         # committed table unchanged, resume state intact
         assert read_extracted(spark, out_dir).count() == before
         ledger = PartitionLedger(out_dir + "/_ledger")
         assert set(ledger.committed()) == {0, 1, 2, 3}
 
-    def test_sweeps_old_temporary_files_in_kept_leaves(self, spark, tmp_path):
-        import os
-
+    def test_sweeps_old_temporary_files_in_kept_runs(self, spark, tmp_path):
         from gumbo_pp_spark.plans.lineage import vacuum_uncommitted
 
         out_dir = str(tmp_path / "vac_tmp")
@@ -783,7 +717,7 @@ class TestVacuum:
         extract_with_resume(spark, pages, out_dir, n_splits=2)
         before = read_extracted(spark, out_dir).count()
         (run,) = os.listdir(os.path.join(out_dir, "data"))
-        leaf = os.path.join(out_dir, "data", run, "split_id=1")
+        leaf = os.path.join(out_dir, "data", run)
         data_files = sorted(os.listdir(leaf))
         stray = os.path.join(leaf, ".part-00001-deadbeef.tmp")
         with open(stray, "w") as f:
