@@ -46,12 +46,9 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     document with ``doc_id % 3 = 0`` (payload = UTF-8 text bytes;
     decode size derived from ``n_chars``), with the columns
     :func:`image_features` reads."""
-    from ..plans.partitioning import ensure_min_parallelism
+    from ..sources.pages import load_documents
 
-    docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), waves=1
-    )
-    return docs.where("doc_id % 3 = 0").selectExpr(
+    return load_documents(spark, sf_dir).where("doc_id % 3 = 0").selectExpr(
         "CAST(doc_id AS BIGINT) AS media_id",
         "CAST(encode(text, 'UTF-8') AS BINARY) AS payload",
         # multiples of 8 -> the 8x8 phash grid has EQUAL block sizes,
@@ -73,8 +70,9 @@ def image_features(df: DataFrame) -> DataFrame:
 
     One :func:`~gumbo_pp_spark.plans.arrowmap.map_rows` stage over the
     rows of ``df`` (each an image), one task per input partition:
-    :func:`synth_media` spreads the one-row-group documents scan where
-    it reads it.  NULL contract (neither aborts the task):
+    :func:`synth_media` reads the documents through
+    :func:`~gumbo_pp_spark.sources.pages.load_documents`, which spreads
+    the one-row-group scan.  NULL contract (neither aborts the task):
 
     * a NULL ``payload`` is decoded as the empty payload ``b""`` (as
       ``extract_main_text`` parses a NULL html as the empty document);

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.arrowmap import map_rows
+from ..plans.partitioning import running_sum
 
 ROBOTS_HOST_COL = "__robots_host"
 ROBOTS_TXT_COL = "__robots_txt"
@@ -103,38 +104,23 @@ def shard_frontier(frontier: DataFrame, schedule: DataFrame) -> DataFrame:
     :func:`crawl_schedule`.  Hosts absent from the schedule are
     unthrottled (window 0).
 
-    Exact per-host rank WITHOUT one task per host: the first hex digit
-    of md5(url) RANGE-buckets the sort key — the bucket is a PREFIX of
-    the ordering, so ``global rank = per-(host, bucket) offset + rank
-    within (host, bucket)`` holds exactly.  A crawl-heavy host spreads
-    over 16 independent window tasks; the offset table is
-    (hosts × 16)-sized and broadcast, as is the schedule."""
-    from pyspark.sql import Window
-
-    base = frontier.select("host", "url", F.substring(F.md5("url"), 1, 1).alias("_bkt"))
-    w1 = Window.partitionBy("host", "_bkt").orderBy(F.md5("url"), "url")
-    ranked = base.withColumn("_r", F.row_number().over(w1))
-    wo = Window.partitionBy("host").orderBy("_bkt").rowsBetween(
-        Window.unboundedPreceding, 0
+    Exact per-host rank WITHOUT one task per host: ``fetch_rank`` is
+    one more than the count of the host's earlier URLs, a
+    :func:`~gumbo_pp_spark.plans.partitioning.running_sum` whose blocks
+    are the first hex digit of md5(url) — a PREFIX of the ordering, so
+    a crawl-heavy host spreads over 16 independent window tasks.  The
+    schedule is broadcast."""
+    base = frontier.select(
+        "host", "url", F.substring(F.md5("url"), 1, 1).alias("_bkt"), F.lit(1).alias("_one")
     )
-    offs = (
-        base.groupBy("host", "_bkt")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            "host", "_bkt", (F.sum("_n").over(wo) - F.col("_n")).alias("_off")
-        )
-    )
+    ranked = running_sum(base, "host", "_bkt", (F.md5("url"), "url"), "_one", "_before")
     sched = schedule.select(F.col("host").alias("host"), "fetch_budget")
-    return (
-        ranked.join(F.broadcast(offs), ["host", "_bkt"])
-        .join(F.broadcast(sched), "host", "left")
-        .select(
-            "host",
-            "url",
-            (F.col("_off") + F.col("_r")).cast("bigint").alias("fetch_rank"),
-            F.expr(
-                "CAST(CASE WHEN fetch_budget IS NULL THEN 0 "
-                "ELSE (_off + _r - 1) div fetch_budget END AS BIGINT)"
-            ).alias("fetch_window"),
-        )
+    return ranked.join(F.broadcast(sched), "host", "left").select(
+        "host",
+        "url",
+        (F.col("_before") + 1).cast("bigint").alias("fetch_rank"),
+        F.expr(
+            "CAST(CASE WHEN fetch_budget IS NULL THEN 0 "
+            "ELSE _before div fetch_budget END AS BIGINT)"
+        ).alias("fetch_window"),
     )

@@ -118,46 +118,10 @@ PROBS_E2 = (25, 50, 75, 90, 99)
 def length_quantiles(df: DataFrame) -> DataFrame:
     """Exact corpus quantiles of document token length WITHOUT a
     global sort or driver collect: (p_e2, value) for each
-    :data:`PROBS_E2` probe, where value is the
-    smallest length whose cumulative count covers p% of documents
-    (type-1 quantile).
-
-    Scale shape: the length distribution collapses to one row per
-    DISTINCT length (map-side combined groupBy — thousands of rows at
-    any corpus size, the same trick as the frequency histogram); the
-    cumulative sum and the probe run over that tiny table, so the
-    only corpus-sized stage is the first map+partial-agg.  This is
-    the exact-histogram cousin of a t-digest: for integer-valued
-    statistics the histogram IS the sketch, no approximation needed."""
-    from pyspark.sql import Window
-
-    lens = (
-        split_words(df)
-        .select(F.size("ws").alias("len"))
-        .groupBy("len")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.orderBy("len").rowsBetween(Window.unboundedPreceding, 0)
-    cum = lens.select(
-        "len",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(
-            Window.orderBy("len").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("total"),
-    )
-    probs = ", ".join(str(p) for p in PROBS_E2)
-    probed = cum.crossJoin(
-        F.broadcast(
-            df.sparkSession.range(1).selectExpr(f"explode(array({probs})) AS p_e2")
-        )
-    ).where(F.col("cum") * 100 >= F.col("p_e2") * F.col("total"))
-    return (
-        probed.groupBy("p_e2")
-        .agg(F.min("len").alias("value"))
-        .select(F.col("p_e2").cast("bigint"), F.col("value").cast("bigint"))
-    )
+    :data:`PROBS_E2` probe, where value is the smallest length whose
+    cumulative count covers p% of documents (type-1 quantile) —
+    :func:`grouped_length_quantiles` over one constant group."""
+    return grouped_length_quantiles(df, "0").drop("grp")
 
 
 def grouped_length_quantiles(
@@ -165,15 +129,18 @@ def grouped_length_quantiles(
     group_col: str = "source",
     probs_e2: tuple[int, ...] = PROBS_E2,
 ) -> DataFrame:
-    """(grp, p_e2, value): exact per-group token-length quantiles —
-    :func:`length_quantiles` generalized to a grouping key (per-source
-    length profiles are how mixture policies get calibrated).  Same
-    scale shape: the corpus-sized stage is ONE map-side-combined
-    groupBy collapsing to a row per (group, distinct length); the
-    cumulative windows and the probe run per group over that tiny
-    table (window partitioned by group — no single-partition stage at
-    any group count, unlike the ungrouped form's one-row-total
-    window)."""
+    """(grp, p_e2, value): exact per-group token-length quantiles
+    (per-source length profiles are how mixture policies get
+    calibrated); ``group_col`` is a selectExpr entry.
+
+    Scale shape: the length distribution collapses to one row per
+    (group, DISTINCT length) in ONE map-side-combined groupBy —
+    thousands of rows per group at any corpus size, the same trick as
+    the frequency histogram; the cumulative windows and the probe run
+    per group over that tiny table, so the only corpus-sized stage is
+    the first map+partial-agg.  This is the exact-histogram cousin of a
+    t-digest: for integer-valued statistics the histogram IS the
+    sketch, no approximation needed."""
     from pyspark.sql import Window
 
     lens = (

@@ -30,7 +30,8 @@ Design (SURVEY.md §4 c/d):
   summed from those tallies — never by re-reading the written output;
   the manifest stores the files' DDL once, so the committed read
   declares its schema instead of inferring it, and a resume that
-  would write another schema is refused;
+  would write another schema is refused, as is one with another
+  ``n_splits`` (the modulus of the stored split ids);
 * input parallelism is the caller's decision, made once where the
   pages are read (``sources.pages.read_pages``): the write stage runs
   one task per input partition and adds no exchange.
@@ -70,37 +71,40 @@ class PartitionLedger:
         self.path = path
         os.makedirs(path, exist_ok=True)
 
-    def _load(self) -> tuple[str | None, dict[int, dict]]:
-        """``(stored DDL, committed records by split)``; ``(None, {})``
-        before the first commit."""
+    def _load(self) -> tuple[str | None, int | None, dict[int, dict]]:
+        """``(stored DDL, stored n_splits, committed records by split)``;
+        ``(None, None, {})`` before the first commit.  A manifest written
+        before ``n_splits`` was stored gives ``None`` for it."""
         mpath = os.path.join(self.path, self.MANIFEST)
         try:
             with open(mpath) as f:
                 doc = json.load(f)
         except FileNotFoundError:
-            return None, {}
+            return None, None, {}
         if doc.get("version") != self.VERSION:
             raise ValueError(
                 f"{mpath} is a version-{doc.get('version')} ledger: its data uses the "
                 "per-split leaf layout data/run=<id>/split_id=<s>/, which this reader "
                 f"does not read (version {self.VERSION} writes one file per write task, "
                 "data/run=<id>/part-<p>.parquet); extract into a new out_dir")
-        return doc["schema"], {int(r["split_id"]): r for r in doc["records"]}
+        return (doc["schema"], doc.get("n_splits"),
+                {int(r["split_id"]): r for r in doc["records"]})
 
     def committed(self) -> dict[int, dict]:
         """Committed split records, by split id."""
-        return self._load()[1]
+        return self._load()[2]
 
-    def commit(self, schema: str, *recs: dict) -> None:
+    def commit(self, schema: str, n_splits: int, *recs: dict) -> None:
         """Commit ``recs`` in one atomic manifest write, storing
-        ``schema``, the DDL of the run files.  Each record replaces any
+        ``schema``, the DDL of the run files, and ``n_splits``, the
+        modulus their split ids are taken in.  Each record replaces any
         earlier record of its split."""
         out = self.committed()
         out.update((int(rec["split_id"]), rec) for rec in recs)
         mpath = os.path.join(self.path, self.MANIFEST)
         tmp = mpath + f".tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
-            json.dump({"version": self.VERSION, "schema": schema,
+            json.dump({"version": self.VERSION, "schema": schema, "n_splits": n_splits,
                        "records": list(out.values())}, f)
         os.replace(tmp, mpath)  # atomic on POSIX
 
@@ -210,8 +214,11 @@ def extract_with_resume(
     Each file has the schema ``extract_main_text(..., stage_metrics=True)``
     declares over ``passthrough + ("split_id",)``; the ledger stores
     that DDL once, and :func:`read_extracted` declares it instead of
-    inferring it.  A resume whose ``passthrough`` gives another DDL
-    than the stored one raises ``ValueError`` before any job runs.
+    inferring it.  It stores ``n_splits`` too: committed split ids mean
+    nothing under another modulus.  A resume whose ``passthrough``
+    gives another DDL than the stored one, or whose ``n_splits``
+    differs from the stored one, raises ``ValueError`` before any job
+    runs.
 
     Parallelism contract: the write stage runs one task per partition
     of ``pages`` and adds no exchange, so a run writes at most one file
@@ -233,7 +240,7 @@ def extract_with_resume(
     from ..operators.extract import main_text_ddl
 
     ledger = PartitionLedger(os.path.join(out_dir, "_ledger"))
-    stored, committed = ledger._load()
+    stored, stored_splits, committed = ledger._load()
     work = pages.select(
         *passthrough,
         F.pmod(F.xxhash64("url"), F.lit(n_splits)).cast("int").alias("split_id"),
@@ -243,6 +250,9 @@ def extract_with_resume(
     if stored not in (None, ddl):
         raise ValueError(f"{out_dir} holds files of schema {stored!r}; this run would "
                          f"write {ddl!r} (another passthrough?)")
+    if stored_splits not in (None, n_splits):
+        raise ValueError(f"{out_dir} holds splits of n_splits={stored_splits}; this run "
+                         f"would take split ids modulo n_splits={n_splits}")
     pending = [s for s in range(n_splits) if s not in committed]
     if max_splits_this_run is not None:
         pending = pending[:max_splits_this_run]
@@ -292,7 +302,7 @@ def extract_with_resume(
                 "committed_at": committed_at,
             }
         )
-    ledger.commit(ddl, *records)
+    ledger.commit(ddl, n_splits, *records)
     rows = sum(r["rows"] for r in stats.values())
     c_docs = sum(r["c_docs"] for r in stats.values())
     return {
@@ -374,7 +384,7 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     written), the result is the empty frame of that schema."""
     from pyspark.sql.types import StructType
 
-    ddl, recs = PartitionLedger(os.path.join(out_dir, "_ledger"))._load()
+    ddl, _, recs = PartitionLedger(os.path.join(out_dir, "_ledger"))._load()
     if not recs:
         raise FileNotFoundError(f"no committed splits under {out_dir}")
     schema = StructType.fromDDL(ddl + ", run string")

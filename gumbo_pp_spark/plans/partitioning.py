@@ -14,11 +14,16 @@ hash-by-host partitioning leaves stragglers.  Two explicit plans:
 Both compute a small driver-side plan (heavy keys / bin map are tiny
 relative to the corpus) and apply it with one shuffle.
 
+Ordered running sums (sequence packing, the token-budget boundary,
+frontier ranks) go through :func:`running_sum`, the one two-phase
+prefix sum: rows are cut into blocks, contiguous ranges of the order
+key (the range-partitioning idea of Global Range Encoding, EDBT 2018),
+so no window partition spans more than one block.
+
 Input parallelism is decided once, where the data is read
-(``sources.pages.read_pages``, ``sources.pages.load_documents``,
-``operators.multimodal.synth_media``), and at a few JVM operator
-entries whose per-row work is heavy: the word tokenizer
-``operators.textstats.split_words`` (every per-word, n-gram, window
+(``sources.pages.read_pages``, ``sources.pages.load_documents``), and
+at a few JVM operator entries whose per-row work is heavy: the word
+tokenizer ``operators.textstats.split_words`` (every per-word, n-gram, window
 and shingle operator of ``textstats``, ``dedup`` and ``sketches``
 takes its words from it), the vector-search entry
 ``operators.similarity._corpus_side``, and two per-row passes over
@@ -35,7 +40,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 # try_parse_url: plain parse_url THROWS on malformed urls under ANSI
 # mode (guaranteed input at crawl scale); the NULL it returns is then
@@ -146,6 +151,45 @@ def size_balanced_bins(df: DataFrame, target_bytes: int = 64 << 20) -> DataFrame
     return binned.repartition(max(next_bin, 1), "size_bin")
 
 
+def running_sum(df: DataFrame, part: str, block: str, order: tuple[str | Column, ...],
+                value: str, out: str) -> DataFrame:
+    """``df`` plus ``out``: the sum of ``value`` over the earlier rows of
+    the same ``part`` in (``block``, *``order``) order, excluding the
+    row itself (0 for the first row).  Each caller's ``block`` is a
+    prefix of its ``order`` (every row of a block sorts before every row
+    of a later block), so that is the running sum in ``order`` alone.
+
+    Two-phase, so no window partition holds more than one
+    (``part``, ``block``):
+
+    * per-(part, block) totals of ``value``;
+    * block offsets, a window over that block table;
+    * a within-block ROWS window (unbounded preceding to 1 preceding),
+      plus the block's offset.
+
+    The offsets are joined back by a plain equi-join on (part, block),
+    the clustering the within-block window needs, so the rows are
+    exchanged once.  No broadcast is forced: adaptive execution
+    broadcasts an offset table whose measured size is within
+    ``spark.sql.autoBroadcastJoinThreshold`` and shuffles a larger one.
+    Integer ``value`` sums over ROWS frames are exact, so the result
+    equals the single window over ``part``.
+
+    NULL contract: rows with a NULL ``part`` or ``block`` have no place
+    in the order and are dropped; ``out`` of the other rows is that of
+    the input without them.
+    """
+    keys = [part, block]
+    rows = df.where(F.col(part).isNotNull() & F.col(block).isNotNull())
+    before = Window.unboundedPreceding, -1
+    tot = F.sum("_rs_tot").over(Window.partitionBy(part).orderBy(block).rowsBetween(*before))
+    offsets = rows.groupBy(*keys).agg(F.sum(value).alias("_rs_tot")).select(
+        *keys, F.coalesce(tot, F.lit(0)).alias("_rs_off"))
+    within = F.sum(value).over(Window.partitionBy(*keys).orderBy(*order).rowsBetween(*before))
+    return rows.join(offsets, keys).withColumn(
+        out, (F.col("_rs_off") + F.coalesce(within, F.lit(0))).cast("bigint")).drop("_rs_off")
+
+
 def ensure_min_parallelism(df: DataFrame, waves: int = 2) -> DataFrame:
     """Guarded round-robin repartition before CPU-heavy per-row work.
 
@@ -164,7 +208,7 @@ def ensure_min_parallelism(df: DataFrame, waves: int = 2) -> DataFrame:
     Call this with scan-stage inputs (the partition-count probe builds
     the physical RDD; on a map-only plan that runs no jobs), and only
     from the sites the module docstring lists: the readers
-    (``read_pages``, ``load_documents``, ``synth_media``), the word
+    (``read_pages``, ``load_documents``), the word
     tokenizer ``textstats.split_words``, the vector-search entry
     ``similarity._corpus_side``, and the per-row passes
     ``textstats.host_quality_stats`` and ``dedup.simhash``, whose SQL

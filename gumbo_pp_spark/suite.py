@@ -1192,7 +1192,8 @@ _DUCK_SHARD_MANIFEST = (
     "CAST(sum(n_toks) AS BIGINT) AS n_tokens, "
     "CAST(min(doc_id) AS BIGINT) AS min_doc, CAST(max(doc_id) AS BIGINT) AS max_doc, "
     "CAST(bit_xor(th) AS BIGINT) AS checksum FROM ("
-    "SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS shard, "
+    "SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT "
+    f"% {P.MANIFEST_SHARDS} AS shard, "
     "doc_id, len(string_split(text, ' ')) AS n_toks, "
     "('0x' || substr(md5(text), 1, 8))::BIGINT AS th FROM documents) GROUP BY shard"
 )

@@ -275,12 +275,13 @@ class TestQualityClassifier:
 
 
 class TestShardManifest:
-    def test_conservation_and_python_parity(self, spark):
+    def test_conservation_and_python_parity(self, spark, monkeypatch):
         import hashlib
 
+        monkeypatch.setattr(P, "MANIFEST_SHARDS", 4)
         texts = [(i, f"doc {i} body words here") for i in range(97)]
         docs = _docs(spark, texts)
-        rows = {r["shard"]: r for r in P.shard_manifest(docs, n_shards=4).collect()}
+        rows = {r["shard"]: r for r in P.shard_manifest(docs).collect()}
         # python mirror
         from collections import defaultdict
 
@@ -417,3 +418,35 @@ class TestSelectTokenBudget:
         )
         assert got == {r.doc_id for r in naive.collect()}
         assert len(got) > 0
+
+    @pytest.mark.parametrize("threshold, join", [(None, "BroadcastHashJoin"),
+                                                 ("-1", "SortMergeJoin")])
+    def test_offset_join_follows_measured_size(self, spark, monkeypatch, threshold, join):
+        # no broadcast is forced on the boundary's block-offset table:
+        # adaptive execution broadcasts it from its measured size, and
+        # shuffles it when the size threshold rules a broadcast out.
+        # Either way the kept rows are the same.  The threshold that
+        # governs is spark.sql.autoBroadcastJoinThreshold: the offset
+        # side is a window over a query stage, not a stage, so its
+        # estimate is not compared with the adaptive threshold
+        import re
+
+        monkeypatch.setattr(P, "BLOCK_SIZE", 16)
+        rows = [(i, 100 if i % 2 == 0 else i % 7, _words(1 + i % 5)) for i in range(400)]
+        docs = self._scored(spark, rows)
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        try:
+            out = P.select_token_budget(docs, 300, "score")
+            kept = sorted(r.doc_id for r in out.collect())
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set(key, old)
+        final = plan.split("== Initial Plan ==")[0]
+        joins = re.findall(r"(\w+) \[score#\d+L, blk#\d+L\], \[score#\d+L, blk#\d+L\]", final)
+        assert joins == [join], final
+        # the even doc_ids hold the top score, 15 tokens per 5 documents:
+        # the first 100 of them (0..198) fill the budget of 300 exactly
+        assert kept == [i for i in range(0, 200, 2)]

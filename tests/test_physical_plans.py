@@ -22,6 +22,38 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def plan_nodes(plan) -> list:
+    """Every node of a JVM physical plan tree, in preorder."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kids = node.children()
+        stack += [kids.apply(i) for i in reversed(range(kids.size()))]
+    return out
+
+
+def initial_plan(df):
+    """The physical plan adaptive execution starts from, before any
+    stage runs (``plan_of`` renders it under ``isFinalPlan=false``)."""
+    return df._jdf.queryExecution().executedPlan().initialPlan()
+
+
+def window_specs(plan: str) -> list[tuple[list[str], list[str]]]:
+    """(partition column names, order column names) of every window
+    spec in a rendered plan."""
+    import re
+
+    out = []
+    for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
+        items = [i for i in spec.split(", ") if not i.startswith("specifiedwindowframe")]
+        names = [re.sub(r"#.*", "", i) for i in items]
+        ordered = [(" ASC" in i or " DESC" in i) for i in items]
+        k = ordered.index(True) if True in ordered else len(items)
+        out.append((names[:k], names[k:]))
+    return out
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -397,7 +429,6 @@ class TestWordOperatorsSpreadOnce:
 _GUARD_SITES = {
     ("gumbo_pp_spark/sources/pages.py", "read_pages"),
     ("gumbo_pp_spark/sources/pages.py", "load_documents"),
-    ("gumbo_pp_spark/operators/multimodal.py", "synth_media"),
     ("gumbo_pp_spark/operators/textstats.py", "split_words"),
     ("gumbo_pp_spark/operators/similarity.py", "_corpus_side"),
     ("gumbo_pp_spark/operators/textstats.py", "host_quality_stats"),
@@ -557,8 +588,6 @@ _TEST_ONLY_DEFAULTS = {
     "gumbo_pp_spark/operators/encoding.py::sniff_and_transcode(transport_col)",
     "gumbo_pp_spark/operators/graph.py::pagerank(checkpoint)",
     "gumbo_pp_spark/operators/graph.py::hits(scale)",
-    "gumbo_pp_spark/operators/packing.py::shard_manifest(n_shards)",
-    "gumbo_pp_spark/operators/packing.py::select_token_budget(block_size)",
     "gumbo_pp_spark/operators/similarity.py::lsh_cosine_topk(multiprobe)",
     "gumbo_pp_spark/operators/sketches.py::cms_heavy_hitters(width)",
     "gumbo_pp_spark/operators/sketches.py::cms_heavy_hitters(depth)",
@@ -734,53 +763,55 @@ class TestSessionFourPlans:
         assert "rangepartitioning" not in plan
         assert "partial_sum" in plan  # histogram is map-side combined
 
-    def test_pack_sequences_window_never_spans_a_shard(self, spark, docs):
-        # VERDICT r7 #1: the running-sum window over full corpus rows
-        # must partition on (shard, blk) — never on shard alone, which
-        # made one window partition hold corpus/n_shards rows.  The
-        # only shard-partitioned window allowed is the block-offset
-        # roll-up, which sits ABOVE the (shard, blk) aggregate and is
-        # block-table-sized.
-        from gumbo_pp_spark.operators.packing import pack_sequences
-
-        plan = plan_of(pack_sequences(docs))
-        final = plan.split("== Initial Plan ==")[0]
-        import re
-
-        specs = re.findall(r"windowspecdefinition\(([^)]*)\)", final)
-        assert specs, "expected window operators in the plan"
-        # the corpus-row window orders by doc_id — it must carry blk
-        # in its partition keys; the doc_id-free window is the
-        # block-offset roll-up over the aggregated block table only
-        doc_windows = [s for s in specs if "doc_id" in s]
-        assert doc_windows, "expected the within-block cumsum window"
-        assert all("blk" in s for s in doc_windows), doc_windows
-
-    def test_select_token_budget_boundary_window_block_split(self, spark, docs):
+    def test_select_token_budget_boundary_window_block_split(self, spark, docs, monkeypatch):
         # VERDICT r7 #2: the boundary-score cumulative window must
         # partition on (score, blk) so a dominant boundary score never
         # concentrates one window partition.  Fixture: >50% of rows
         # share the boundary score.
-        from gumbo_pp_spark.operators.packing import select_token_budget
+        from gumbo_pp_spark.operators import packing as P
 
+        monkeypatch.setattr(P, "BLOCK_SIZE", 5)
         scored = docs.selectExpr(
             "doc_id", "text",
             "CAST(CASE WHEN doc_id % 2 = 0 THEN 100 "
             "ELSE doc_id % 7 END AS BIGINT) AS score",
         )
-        out = select_token_budget(scored, 500, "score", block_size=5)
-        plan = plan_of(out)
-        final = plan.split("== Initial Plan ==")[0]
-        import re
-
-        specs = re.findall(r"windowspecdefinition\(([^)]*)\)", final)
-        doc_windows = [s for s in specs if "doc_id" in s]
+        out = P.select_token_budget(scored, 500, "score")
+        specs = window_specs(plan_of(out))
+        doc_windows = [part for part, by in specs if "doc_id" in by]
         assert doc_windows, "expected the within-block cumsum window"
-        assert all("blk" in s for s in doc_windows), doc_windows
+        assert all("blk" in part for part in doc_windows), specs
         # and the dominant-score fixture still yields the exact greedy
         # prefix (budget 500 → a strict subset of the boundary score)
         rows = out.collect()
         assert 0 < len(rows) < 500
+
+    @pytest.mark.parametrize("caller", ["pack_sequences", "select_token_budget",
+                                        "shard_frontier"])
+    def test_running_sum_windows_partition_by_block(self, spark, docs, caller):
+        # VERDICT r7 #1: every window of a running_sum caller that
+        # orders by the row order also partitions by the block, so no
+        # window over rows spans a whole part (a shard, a boundary
+        # score, a host); the part-only window is the block-offset
+        # roll-up over the aggregated block table
+        from gumbo_pp_spark.operators.packing import pack_sequences, select_token_budget
+        from gumbo_pp_spark.operators.robots import shard_frontier
+
+        build, order, block = {
+            "pack_sequences": (lambda: pack_sequences(docs), "doc_id", "blk"),
+            "select_token_budget": (lambda: select_token_budget(docs.selectExpr(
+                "doc_id", "text", "CAST(doc_id % 2 * 100 AS BIGINT) AS score"), 500, "score"),
+                "doc_id", "blk"),
+            "shard_frontier": (lambda: shard_frontier(
+                docs.selectExpr("concat('h', doc_id % 3) AS host",
+                                "concat('https://h/', doc_id) AS url"),
+                spark.createDataFrame([("h0", 2)], "host string, fetch_budget bigint")),
+                "url", "_bkt"),
+        }[caller]
+        specs = window_specs(plan_of(build()))
+        row_windows = [(part, by) for part, by in specs if order in by]
+        assert row_windows, specs
+        assert all(block in part for part, _ in row_windows), row_windows
 
     def test_lm_coverage_corpus_never_shuffled_on_bigram(self, spark, docs):
         from gumbo_pp_spark.operators.textstats import lm_coverage

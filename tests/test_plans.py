@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from gumbo_pp_spark.plans.lineage import PartitionLedger, extract_with_resume, read_extracted
-from gumbo_pp_spark.plans.partitioning import salt_skewed_keys, size_balanced_bins
+from gumbo_pp_spark.plans.partitioning import running_sum, salt_skewed_keys, size_balanced_bins
 from gumbo_pp_spark.sources.pages import synth_pages, synth_pages_bench
 
 from .conftest import SF_SMOKE
@@ -124,18 +124,18 @@ class TestLedgerManifest:
         from gumbo_pp_spark.plans.lineage import PartitionLedger
 
         led = PartitionLedger(str(tmp_path / "led"))
-        led.commit(self.DDL, *(self._rec(s) for s in range(100)))
+        led.commit(self.DDL, 128, *(self._rec(s) for s in range(100)))
         assert os.listdir(led.path) == [led.MANIFEST]
         assert led.committed() == {s: self._rec(s) for s in range(100)}
         # a later commit replaces split 5 and adds split 100
-        led.commit(self.DDL, self._rec(5, run="r1"), self._rec(100, run="r1"))
+        led.commit(self.DDL, 128, self._rec(5, run="r1"), self._rec(100, run="r1"))
         recs = led.committed()
         assert len(recs) == 101
         assert recs[5]["run_id"] == "r1" and recs[100]["run_id"] == "r1"
         assert all(recs[s]["run_id"] == "r0" for s in range(100) if s != 5)
         assert os.listdir(led.path) == [led.MANIFEST]
-        # the DDL is stored once, not per record
-        assert led._load()[0] == self.DDL
+        # the DDL and n_splits are stored once, not per record
+        assert led._load()[:2] == (self.DDL, 128)
 
     def test_large_ledger_loads_in_o1_file_reads(self, tmp_path, monkeypatch):
         import builtins
@@ -196,6 +196,58 @@ class TestSizeBinsOversized:
             assert r["b"] <= 2 * 100_000
 
 
+class TestRunningSum:
+    """running_sum equals the one unbounded window over the part, on
+    any block layout."""
+
+    DDL = "id bigint, part bigint, blk bigint, v bigint"
+
+    @staticmethod
+    def _single_window(df):
+        from pyspark.sql import Window
+
+        w = (Window.partitionBy("part").orderBy("blk", "id")
+             .rowsBetween(Window.unboundedPreceding, -1))
+        return {r.id: r.s for r in df.where("part IS NOT NULL AND blk IS NOT NULL").select(
+            "id", F.coalesce(F.sum("v").over(w), F.lit(0)).alias("s")).collect()}
+
+    def _rows(self, case):
+        if case == "dense":
+            # blocks of 8 consecutive ids per part: every part spans
+            # >= 3 blocks; NULL part and block rows are dropped
+            rows = [(i, i % 3, i // 24, 1 + i % 7) for i in range(200)]
+            return rows + [(1000, None, 0, 5), (1001, 0, None, 5)]
+        if case == "sparse":
+            # hashed-looking ids, negative ones included: blocks are few,
+            # unevenly filled and far apart
+            ids = [(i * 0x9E3779B97F4A7C15) % (1 << 64) - (1 << 63) for i in range(1, 150)]
+            return [(x, x % 4, x // (1 << 61), 1 + x % 11) for x in ids]
+        if case == "one_part":
+            return [(i, 0, i // 10, 1 + i % 5) for i in range(100)]
+        return []
+
+    @pytest.mark.parametrize("case", ["dense", "sparse", "one_part", "empty"])
+    def test_equals_single_window(self, spark, case):
+        df = spark.createDataFrame(self._rows(case), self.DDL)
+        got = {r.id: r.s for r in running_sum(df, "part", "blk", ("id",), "v", "s").collect()}
+        assert got == self._single_window(df)
+        if case == "dense":
+            assert len({(p, b) for _, p, b, _ in self._rows(case)}) >= 3 * 3
+
+    def test_pack_sequences_equals_single_window_over_small_blocks(self, spark, monkeypatch):
+        # BLOCK_SIZE is read at call time: 4 doc_ids per shard block,
+        # so each of the 3 shards spans 5 blocks of 60 dense doc_ids
+        from gumbo_pp_spark.operators import packing as P
+
+        monkeypatch.setattr(P, "BLOCK_SIZE", 4)
+        df = spark.createDataFrame([(i, " ".join(["w"] * (1 + i % 6))) for i in range(60)],
+                                   "doc_id bigint, text string")
+        got = {r.doc_id: r.start_tok for r in P.pack_sequences(df, n_shards=3).collect()}
+        assert got == self._single_window(df.selectExpr(
+            "doc_id AS id", "doc_id % 3 AS part", "0L AS blk",
+            "CAST(size(split(text, ' ')) AS BIGINT) AS v"))
+
+
 class TestEmptySplitResume:
     def test_all_pending_splits_empty_commits_zero_rows(self, spark, tmp_path):
         # sparse corpus vs n_splits: some splits hold zero pages; a
@@ -219,7 +271,7 @@ class TestEmptySplitResume:
         out_dir = str(tmp_path / "empty")
         empty = synth_pages(spark, SF_SMOKE).limit(0)
         extract_with_resume(spark, empty, out_dir, n_splits=4)
-        ddl, recs = PartitionLedger(f"{out_dir}/_ledger")._load()
+        ddl, _, recs = PartitionLedger(f"{out_dir}/_ledger")._load()
         assert len(recs) == 4 and all(r["rows"] == 0 for r in recs.values())
         assert not os.path.exists(os.path.join(out_dir, "data"))  # no file was written
         got = read_extracted(spark, out_dir)
@@ -603,6 +655,45 @@ class TestLedgerLayoutGuards:
         assert jobs == []
         assert ledger._load() == before
         assert len(os.listdir(os.path.join(out_dir, "data"))) == 1
+
+    def test_resume_with_other_n_splits_raises_before_any_job(self, spark, tmp_path):
+        # split ids are taken modulo n_splits: committed ids 0-4 of 16
+        # read under modulus 8 would mark other rows done and drop them
+        out_dir = str(tmp_path / "resplit")
+        pages = synth_pages(spark, SF_SMOKE)
+        extract_with_resume(spark, pages, out_dir, n_splits=16, max_splits_this_run=5)
+        ledger = PartitionLedger(f"{out_dir}/_ledger")
+        before = ledger._load()
+        assert before[1] == 16
+
+        def resume():
+            with pytest.raises(ValueError, match="n_splits=16.*n_splits=8"):
+                extract_with_resume(spark, pages, out_dir, n_splits=8)
+
+        _, jobs = _jobs_of(spark, resume)
+        assert jobs == []
+        assert ledger._load() == before
+        extract_with_resume(spark, pages, out_dir, n_splits=16)
+        assert read_extracted(spark, out_dir).count() == pages.count()
+
+    def test_manifest_without_n_splits_gets_it_at_next_commit(self, spark, tmp_path):
+        import json
+
+        out_dir = str(tmp_path / "old_manifest")
+        pages = synth_pages(spark, SF_SMOKE).where("doc_id < 40")
+        extract_with_resume(spark, pages, out_dir, n_splits=4, max_splits_this_run=2)
+        ledger = PartitionLedger(f"{out_dir}/_ledger")
+        mpath = os.path.join(ledger.path, ledger.MANIFEST)
+        with open(mpath) as f:
+            doc = json.load(f)
+        del doc["n_splits"]
+        with open(mpath, "w") as f:
+            json.dump(doc, f)
+        assert ledger._load()[1] is None
+        res = extract_with_resume(spark, pages, out_dir, n_splits=4)
+        assert (res["splits_processed"], res["skipped"]) == (2, 2)
+        assert ledger._load()[1] == 4
+        assert read_extracted(spark, out_dir).count() == 40
 
     @pytest.mark.parametrize("entry", ["committed", "extract_with_resume", "read_extracted",
                                        "vacuum_uncommitted"])

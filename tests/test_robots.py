@@ -289,14 +289,44 @@ class TestShardFrontier:
         assert {r.fetch_window for r in got} == {0}
         assert sorted(r.fetch_rank for r in got) == [1, 2, 3, 4, 5]
 
-    def test_offset_and_schedule_sides_broadcast(self, spark):
-        from tests.test_physical_plans import plan_of
+    def _frontier_plan(self, spark):
+        from tests.test_physical_plans import initial_plan, plan_nodes
 
         from gumbo_pp_spark.operators.robots import shard_frontier
 
         frontier = spark.createDataFrame(
-            [("h", "https://h/1"), ("h", "https://h/2")],
-            "host string, url string",
+            [("h", f"https://h/{i}") for i in range(40)], "host string, url string"
         )
-        plan = plan_of(shard_frontier(frontier, self._sched(spark, [("h", 1)])))
-        assert plan.count("BroadcastHashJoin") >= 2
+        return plan_nodes(initial_plan(shard_frontier(frontier, self._sched(spark, [("h", 1)]))))
+
+    def test_schedule_side_broadcast(self, spark):
+        nodes = self._frontier_plan(spark)
+        joins = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
+        assert any("LeftOuter" in n.simpleString(100) and "fetch_budget" in n.children().apply(1)
+                   .treeString() for n in joins), [n.simpleString(100) for n in joins]
+
+    def test_offset_table_not_broadcast_before_execution(self, spark):
+        # the block-offset table is joined by a plain equi-join; only
+        # adaptive execution may broadcast it, from its measured size
+        bcast = [n.treeString() for n in self._frontier_plan(spark)
+                 if n.nodeName() == "BroadcastExchange"]
+        assert bcast and not any("_rs_off" in t for t in bcast), bcast
+
+    def test_frontier_rows_exchanged_once(self, spark):
+        # from the rank window down to the frontier scan the rows pass
+        # one exchange, on (host, _bkt): the offsets join and the window
+        # share that clustering
+        import re
+
+        nodes = self._frontier_plan(spark)
+        (node,) = [n for n in nodes if n.nodeName() == "Window" and "url" in n.simpleString(100)]
+        exchanges = []
+        while node.children().size():
+            kids = [node.children().apply(i) for i in range(node.children().size())]
+            # at the offsets join, the rows side is the one with no window
+            node = kids[0] if len(kids) == 1 else next(
+                k for k in kids if "Window" not in k.treeString())
+            if node.nodeName() == "Exchange":
+                exchanges.append(node.simpleString(100))
+        assert len(exchanges) == 1, exchanges
+        assert re.search(r"hashpartitioning\(host#\d+, _bkt#\d+, \d+\)", exchanges[0])
