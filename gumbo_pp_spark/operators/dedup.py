@@ -113,26 +113,30 @@ def shingles(df: DataFrame) -> DataFrame:
     return ws.select("doc_id", F.explode(F.expr(_SHINGLES)).alias("sh"))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, threshold: float = 0.5, min_shared: int = 5, df_cap: int = 64
-) -> DataFrame:
+JACCARD_THRESHOLD = 0.5  # ngram_jaccard_pairs keeps pairs at jaccard >= this
+JACCARD_MIN_SHARED = 5  # ... among docs sharing >= this many capped shingles
+SHINGLE_DF_CAP = 64  # shingles in more documents leave the join universe
+
+
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs.
 
-    Shingles appearing in more than ``df_cap`` documents are dropped
+    Shingles appearing in more than ``SHINGLE_DF_CAP`` documents are dropped
     before the self-join (boilerplate stopword-shingles): one shingle
     shared by 10^6 docs would otherwise create a 10^12-row join
     partition.  The capped shingle set defines both the candidate join
     AND the per-doc sizes, so jaccard stays a true Jaccard over the
-    filtered universe.  Candidate pairs = docs sharing ≥ ``min_shared``
-    capped shingles; jaccard = shared / (|A| + |B| - shared) ≥
-    threshold.  Returns (a, b, jaccard_e4) with a < b, jaccard scaled
-    to int so the oracle compare is exact.
+    filtered universe.  Candidate pairs = docs sharing ≥
+    ``JACCARD_MIN_SHARED`` capped shingles; jaccard = shared /
+    (|A| + |B| - shared) ≥ ``JACCARD_THRESHOLD``.  Returns
+    (a, b, jaccard_e4) with a < b, jaccard scaled to int so the oracle
+    compare is exact.
     """
     sh = shingles(df)
     rare = (
         sh.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= df_cap)
+        .where(F.col("df") <= SHINGLE_DF_CAP)
         .select("sh")
     )
     sh = sh.join(rare, "sh")
@@ -143,7 +147,7 @@ def ngram_jaccard_pairs(
         a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
+        .where(F.col("shared") >= JACCARD_MIN_SHARED)
     )
     sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
@@ -151,7 +155,7 @@ def ngram_jaccard_pairs(
         shared.join(sa, "a_id")
         .join(sb, "b_id")
         .withColumn("jaccard", F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select(
             F.col("a_id").cast("bigint").alias("a"),
             F.col("b_id").cast("bigint").alias("b"),
@@ -162,7 +166,9 @@ def ngram_jaccard_pairs(
 
 N_MINHASHES = 8  # default signature width (demo scale; see below)
 N_BANDS = 4  # default banding (2 rows per band)
-BUCKET_CAP = 64  # default cap on a band bucket's members
+BUCKET_CAP = 64  # cap on a band bucket's members
+MIN_EQUAL = 4  # of N_MINHASHES equal: estimated Jaccard >= 0.5
+VERIFY_MIN_JACCARD_E4 = 5000  # exact-Jaccard floor of minhash_verified_pairs
 
 
 def _check_banding(n_hashes: int, n_bands: int) -> int:
@@ -234,8 +240,7 @@ def _band_explode(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    min_equal: int = 4,
-    bucket_cap: int = BUCKET_CAP,
+    min_equal: int = MIN_EQUAL,
     n_hashes: int = N_MINHASHES,
     n_bands: int = N_BANDS,
 ) -> DataFrame:
@@ -245,7 +250,7 @@ def minhash_lsh_pairs(
     Jaccard ≥ min_equal/n_hashes).
     Returns (a, b, n_eq).
 
-    Band buckets holding more than ``bucket_cap`` docs are dropped:
+    Band buckets holding more than ``BUCKET_CAP`` docs are dropped:
     a boilerplate-dominated bucket of 10^5 docs would otherwise emit
     10^10 candidate rows in one shuffle partition.  A pair inside an
     over-full bucket is still found via any of its other
@@ -269,7 +274,7 @@ def minhash_lsh_pairs(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
     cand = (
-        buckets.where((F.size("ids") >= 2) & (F.size("ids") <= bucket_cap))
+        buckets.where((F.size("ids") >= 2) & (F.size("ids") <= BUCKET_CAP))
         .select(
             F.explode(
                 F.expr(
@@ -433,23 +438,19 @@ def verify_pairs(df: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_verified_pairs(
-    df: DataFrame,
-    min_equal: int = 4,
-    min_jaccard_e4: int = 5000,
-) -> DataFrame:
+def minhash_verified_pairs(df: DataFrame) -> DataFrame:
     """The full candidate→verify near-dup pipeline: MinHash-LSH
     candidates (:func:`minhash_lsh_pairs`) re-scored with EXACT
     shingle Jaccard (:func:`verify_pairs`), keeping pairs at
-    ``jaccard_e4 ≥ min_jaccard_e4`` — the shape a 100 TB dedup run
+    ``jaccard_e4 ≥ VERIFY_MIN_JACCARD_E4`` — the shape a 100 TB dedup run
     ships, where the sketch only prunes and the exact measure decides."""
-    pairs = minhash_lsh_pairs(df, min_equal=min_equal)
+    pairs = minhash_lsh_pairs(df, min_equal=MIN_EQUAL)
     return verify_pairs(df, pairs).where(
-        F.col("jaccard_e4") >= min_jaccard_e4
+        F.col("jaccard_e4") >= VERIFY_MIN_JACCARD_E4
     )
 
 
-def lsh_bucket_stats(df: DataFrame, bucket_cap: int = BUCKET_CAP) -> DataFrame:
+def lsh_bucket_stats(df: DataFrame) -> DataFrame:
     """No-silent-caps accounting for :func:`minhash_lsh_pairs`: one row
     (n_buckets, n_overfull, members_in_overfull) so a pipeline can see
     how much candidate mass the hot-bucket cap dropped.  At corpus
@@ -462,7 +463,7 @@ def lsh_bucket_stats(df: DataFrame, bucket_cap: int = BUCKET_CAP) -> DataFrame:
     sizes = _band_explode(minhash_signatures(df)).groupBy("band", "bkey").agg(
         F.count(F.lit(1)).alias("bn")
     )
-    over = F.col("bn") > bucket_cap
+    over = F.col("bn") > BUCKET_CAP
     return sizes.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
         F.sum(over.cast("bigint")).cast("bigint").alias("n_overfull"),
@@ -472,13 +473,13 @@ def lsh_bucket_stats(df: DataFrame, bucket_cap: int = BUCKET_CAP) -> DataFrame:
     )
 
 
-def shingle_df_stats(df: DataFrame, df_cap: int = 64) -> DataFrame:
+def shingle_df_stats(df: DataFrame) -> DataFrame:
     """No-silent-caps accounting for :func:`ngram_jaccard_pairs`: one
     row (n_shingles, n_capped, postings_capped) — how many distinct
     shingles (and exploded postings) the document-frequency cap removed
     from the join universe."""
     freq = shingles(df).groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    over = F.col("df") > df_cap
+    over = F.col("df") > SHINGLE_DF_CAP
     return freq.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
         F.sum(over.cast("bigint")).cast("bigint").alias("n_capped"),
@@ -490,6 +491,7 @@ def shingle_df_stats(df: DataFrame, df_cap: int = 64) -> DataFrame:
 
 SIMHASH_BITS = 63  # top bit left clear so the value fits signed int64
 SIMHASH_BANDS = 3  # pigeonhole: hamming <= 2 differences -> 1 equal band
+SIMHASH_MAX_HAMMING = 2  # simhash_pairs keeps pairs at hamming <= this
 _BAND_WIDTH = SIMHASH_BITS // SIMHASH_BANDS  # 21 bits per band
 
 
@@ -534,7 +536,7 @@ def simhash(df: DataFrame) -> DataFrame:
     )
 
 
-def simhash_pairs(df: DataFrame, max_hamming: int = 2) -> DataFrame:
+def simhash_pairs(df: DataFrame) -> DataFrame:
     """Near-dup pairs by simhash hamming distance.
 
     Candidates come from ``SIMHASH_BANDS`` = 3 band tables of 21 bits
@@ -580,7 +582,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 2) -> DataFrame:
         a.join(b, ["band", "bkey"])
         .where(F.col("a") < F.col("b"))
         .select("a", "b", F.expr("bit_count(ha ^ hb)").cast("bigint").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
 
@@ -629,14 +631,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    max_rounds: int = 50,
-    checkpoint_every: int = 1,
-) -> DataFrame:
-    """Resolve candidate pairs into connected components.
+CC_MAX_ROUNDS = 50  # O(log n) rounds suffice; more means pathological input
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Resolve candidate pairs ``(a, b)`` into connected components.
 
     Returns ``(doc_id, component)`` for every node appearing in
     ``pairs``, where ``component`` is the smallest doc_id reachable
@@ -650,8 +649,7 @@ def connected_components(
     Theorem 1 of the SoCC'14 paper), detected by comparing a
     (count, bit_xor-of-xxhash64) checksum across rounds: one tiny
     driver action per round, never the edge set itself.  Lineage is
-    truncated with an EAGER ``localCheckpoint`` every
-    ``checkpoint_every`` rounds (default every round): each round
+    truncated with an EAGER ``localCheckpoint`` every round: each round
     references its input several times (the symmetrize union + the
     min-join), so without truncation the logical plan nests the
     previous round ~4× per round and Catalyst's compile cost grows
@@ -663,7 +661,7 @@ def connected_components(
     """
     from pyspark.sql.types import NumericType
 
-    for col in (a, b):
+    for col in ("a", "b"):
         if not isinstance(pairs.schema[col].dataType, NumericType):
             # a string id would cast to NULL below and silently drop
             # every edge — canonical_docs would then mark EVERY doc
@@ -675,7 +673,7 @@ def connected_components(
             )
     edges = (
         pairs.select(
-            F.col(a).cast("bigint").alias("u"), F.col(b).cast("bigint").alias("v")
+            F.col("a").cast("bigint").alias("u"), F.col("b").cast("bigint").alias("v")
         )
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .where(F.col("u") != F.col("v"))
@@ -683,10 +681,8 @@ def connected_components(
     )
     prev = None
     converged = False
-    for r in range(max_rounds):
-        stars = _small_star(_large_star(edges))
-        if checkpoint_every and (r + 1) % checkpoint_every == 0:
-            stars = stars.localCheckpoint()
+    for _ in range(CC_MAX_ROUNDS):
+        stars = _small_star(_large_star(edges)).localCheckpoint()
         # bit_xor is order-independent and cannot overflow under ANSI
         # mode (a sum of 64-bit hashes can)
         row = stars.agg(
@@ -704,9 +700,9 @@ def connected_components(
         # targets — canonical_docs' join would then fan out duplicate
         # corpus rows.  Never return that silently.
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} "
-            "rounds; raise max_rounds (O(log n) rounds suffice — "
-            "non-convergence at 50 indicates pathological input)"
+            f"connected_components did not converge in {CC_MAX_ROUNDS} "
+            "rounds (O(log n) rounds suffice — non-convergence "
+            "indicates pathological input)"
         )
     roots = edges.select(F.col("v").alias("u"), "v").distinct()
     mapping = edges.union(roots).distinct()
@@ -726,8 +722,7 @@ def connected_components(
     if fanout is not None and fanout > 1:
         raise RuntimeError(
             "connected_components convergence checksum collided: a node "
-            f"maps to {fanout} components — rerun with a different "
-            "max_rounds or report this input"
+            f"maps to {fanout} components — report this input"
         )
     return mapping.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
 
@@ -757,16 +752,10 @@ def canonical_docs(df: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_contamination(
-    docs: DataFrame,
-    evals: DataFrame,
-    min_equal: int = 4,
-    n_hashes: int = N_MINHASHES,
-    n_bands: int = N_BANDS,
-) -> DataFrame:
+def minhash_contamination(docs: DataFrame, evals: DataFrame) -> DataFrame:
     """Near-duplicate benchmark contamination (the fuzzy companion of
     ``textstats.contamination``): flags corpus documents whose MinHash
-    signature shares ≥ ``min_equal`` of ``n_hashes`` minhashes with ANY
+    signature shares ≥ ``MIN_EQUAL`` of ``N_MINHASHES`` minhashes with ANY
     eval document, candidates generated by a shared LSH band.  Exact
     n-gram decontamination misses paraphrased / lightly-edited leaks;
     this catches anything above the banding knee's jaccard.
@@ -775,7 +764,7 @@ def minhash_contamination(
     (doc_id, n_eval_matches, max_n_eq).
 
     Scale shape: the eval side is benchmark-sized → its band table
-    (carrying the full eval signature, n_bands × n_evals rows) is
+    (carrying the full eval signature, N_BANDS × n_evals rows) is
     BROADCAST; the corpus side pays exactly one shuffle — the
     signature aggregate any minhash pass pays — and everything after
     is map-side: the corpus band explode KEEPS the signature columns
@@ -785,6 +774,7 @@ def minhash_contamination(
     aggregate (its ``n_eq`` is identical on every band hit).  No
     bucket cap is needed: candidate fan-out per corpus row is bounded
     by the eval band table, not by corpus hot buckets."""
+    n_hashes, n_bands = N_MINHASHES, N_BANDS
     rows = _check_banding(n_hashes, n_bands)
 
     def _bands_with_sig(sig: DataFrame, prefix: str) -> DataFrame:
@@ -819,7 +809,7 @@ def minhash_contamination(
             F.col("eval_id").cast("bigint").alias("eval_id"),
             eq.cast("bigint").alias("n_eq"),
         )
-        .where(F.col("n_eq") >= min_equal)
+        .where(F.col("n_eq") >= MIN_EQUAL)
         .groupBy("doc_id")
         .agg(
             F.countDistinct("eval_id").cast("bigint").alias("n_eval_matches"),

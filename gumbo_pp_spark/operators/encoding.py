@@ -25,22 +25,23 @@ from ..parser.encoding import to_utf8
 from ..plans.arrowmap import map_rows
 
 ENC_FIELDS = "html binary, encoding string, enc_src string"
+#: the column that carries a page's HTTP Content-Type charset label
+TRANSPORT_COL = "charset"
 
 
 def sniff_and_transcode(
     df: DataFrame,
     passthrough: tuple[str, ...] = ("doc_id",),
-    transport_col: str | None = None,
 ) -> DataFrame:
     """Replace ``html`` with UTF-8 bytes; append ``encoding`` (the
     sniffed WHATWG name) and ``enc_src`` (``bom | transport | meta |
-    default``).  ``transport_col`` optionally names a column carrying
-    the HTTP Content-Type charset label (the transport layer of the
+    default``).  A frame that carries a :data:`TRANSPORT_COL` column
+    gives each page its HTTP charset label (the transport layer of the
     precedence order).  A NULL ``html`` is sniffed as the empty page
     ``b""``."""
 
     def row(raw, label=None):
         return [to_utf8(b"" if raw is None else bytes(raw), label)]
 
-    inputs = ("html", transport_col) if transport_col else ("html",)
+    inputs = ("html", TRANSPORT_COL) if TRANSPORT_COL in df.columns else ("html",)
     return map_rows(df, inputs, ENC_FIELDS, row, passthrough)

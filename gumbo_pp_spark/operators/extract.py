@@ -48,6 +48,7 @@ _BOILERPLATE_IDS = np.array(sorted(TAG_IDS[t] for t in BOILERPLATE_TAGS), dtype=
 _BOILER_LUT = np.zeros(max(TAG_IDS.values()) + 2, dtype=bool)
 _BOILER_LUT[_BOILERPLATE_IDS] = True
 _BODY_ID = TAG_IDS["body"]
+_A_ID = TAG_IDS["a"]
 
 _TEXTUAL = (TEXT, CDATA, WHITESPACE)
 # boolean LUT over node-type codes: one gather replaces three compares
@@ -398,8 +399,8 @@ def table_scrape_program(div_id: str) -> Callable[[NodeTable], dict]:
     return program
 
 
-def scrape_tables(df: DataFrame, div_id: str, passthrough=("doc_id", "url")) -> DataFrame:
-    return run_program(df, table_scrape_program(div_id), "csv string", passthrough)
+def scrape_tables(df: DataFrame, div_id: str) -> DataFrame:
+    return run_program(df, table_scrape_program(div_id), "csv string", ("doc_id",))
 
 
 # ----------------------------------------------------------------------
@@ -458,8 +459,9 @@ NODES_FIELDS = (
 )
 
 
-def explode_nodes(df: DataFrame, passthrough: tuple[str, ...] = ("doc_id",)) -> DataFrame:
-    """Surface the per-document preorder node table as ROWS — the
+def explode_nodes(df: DataFrame) -> DataFrame:
+    """Surface the per-document preorder node table as ROWS, keyed by
+    ``doc_id`` — the
     dataset level of SURVEY.md §2's mappings: every traversal/query
     becomes plain DataFrame algebra (subtree containment = range
     predicates on node_id/subtree_end, direct children =
@@ -469,6 +471,7 @@ def explode_nodes(df: DataFrame, passthrough: tuple[str, ...] = ("doc_id",)) -> 
     """
     import pyarrow as pa
 
+    passthrough = ("doc_id",)
     n_pt = len(passthrough)
 
     def fn(batches):
@@ -538,12 +541,9 @@ def dom_stats_program(nt: NodeTable) -> dict:
     All vectorized: depth is an interval-containment count (each
     node's subtree paints [i+1, subtree_end)), link text reuses the
     subtree-painting kernel from the boilerplate strip."""
-    from ..nodetable import ELEMENT
-
     t = nt.type
-    textual = (t == TEXT) | (t == WHITESPACE) | (t == CDATA)
-    text_lens = np.where(textual, nt.text_lengths(), 0)
-    a_roots = np.nonzero(nt.tag_name == "a")[0]
+    text_lens = np.where(_TEXTUAL_LUT[t], nt.text_lengths(), 0)
+    a_roots = np.nonzero(nt.tag_id == _A_ID)[0]
     link_chars = 0
     if len(a_roots):
         in_a = _excluded_mask(nt, a_roots)
@@ -567,10 +567,10 @@ def dom_stats_program(nt: NodeTable) -> dict:
     }
 
 
-def dom_stats(df: DataFrame, passthrough=("doc_id",)) -> DataFrame:
+def dom_stats(df: DataFrame) -> DataFrame:
     """Map-only DOM-statistics stage (no shuffle; scan pruned to
-    passthrough+html like every run_program stage)."""
-    return run_program(df, dom_stats_program, DOM_STATS_FIELDS, passthrough)
+    doc_id+html like every run_program stage)."""
+    return run_program(df, dom_stats_program, DOM_STATS_FIELDS, ("doc_id",))
 
 
 def count_matches_program(matcher) -> Callable[[NodeTable], dict]:
@@ -646,7 +646,6 @@ _NEG_HINT = re.compile(
 _CANDIDATE_TAGS = frozenset("body div main article section td".split())
 _CAND_LUT = np.zeros(max(TAG_IDS.values()) + 2, dtype=bool)
 _CAND_LUT[[TAG_IDS[t] for t in _CANDIDATE_TAGS]] = True
-_A_ID = TAG_IDS["a"]
 LINK_PENALTY = 5
 
 DENSITY_FIELDS = (
@@ -734,10 +733,10 @@ def density_extract_program(nt: NodeTable) -> dict:
     }
 
 
-def density_extract(df: DataFrame, passthrough=("doc_id",)) -> DataFrame:
+def density_extract(df: DataFrame) -> DataFrame:
     """Map-only density-scored block extraction (same execution shape
     as the flagship: pruned scan → mapInArrow → columns, no shuffle)."""
-    return run_program(df, density_extract_program, DENSITY_FIELDS, passthrough=passthrough)
+    return run_program(df, density_extract_program, DENSITY_FIELDS, passthrough=("doc_id",))
 
 
 # ----------------------------------------------------------------------

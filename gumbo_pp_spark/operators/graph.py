@@ -21,17 +21,18 @@ DAMPING_E2 = 85
 RANK_SCALE = 10**9
 #: iterations between lineage-capping local checkpoints
 CHECKPOINT_EVERY = 4
+#: rounds of :func:`pagerank` and :func:`hits`
+N_ITER = 3
+#: fixed-point scale of a HITS hub or authority score
+HITS_SCALE = 10**6
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 3,
-    checkpoint: bool = True,
-) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Simplified (dangling mass dropped, the usual web-graph variant)
     integer PageRank:  rank'(v) = (1−d)·S + d · Σ_{u→v} rank(u) DIV
     outdeg(u), d = :data:`DAMPING_E2`/100.  Input (src, dst); returns
-    (node, rank) with rank a bigint scaled by S = :data:`RANK_SCALE`.
+    (node, rank) with rank a bigint scaled by S = :data:`RANK_SCALE`,
+    after :data:`N_ITER` rounds.
 
     Scale shape per iteration: one join of the edge table with the
     node-sized rank table on ``src`` (at 10^12 edges the edge table is
@@ -59,6 +60,7 @@ def pagerank(
     )
     base = (100 - DAMPING_E2) * RANK_SCALE // 100
     ranks = nodes.withColumn("rank", F.lit(RANK_SCALE).cast("bigint"))
+    n_iter = N_ITER
     for it in range(n_iter):
         contrib = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
@@ -73,28 +75,25 @@ def pagerank(
                 f"CAST({base} + ({DAMPING_E2} * coalesce(s, 0)) DIV 100 AS BIGINT) AS rank",
             )
         )
-        if checkpoint and (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select(F.col("node").cast("bigint"), F.col("rank").cast("bigint"))
 
 
-def hits(
-    edges: DataFrame,
-    n_iter: int = 3,
-    scale: int = 10**6,
-) -> DataFrame:
+def hits(edges: DataFrame) -> DataFrame:
     """Integer-exact HITS (Kleinberg): per round the authority pass
     ``a'(v) = Σ_{u→v} h(u)`` then the hub pass ``h'(u) = Σ_{u→v}
     a(v)``, each MAX-normalized — ``x·scale DIV max(x')`` — instead of
     the float L2 norm, so every value stays a bigint, the fixed point
     is bit-exact (oracle-checkable), and rankings are unchanged
-    (normalization is monotone).  Returns (node, hub, authority) as
-    ``scale``-scaled bigints in [0, scale].
+    (normalization is monotone).  Runs :data:`N_ITER` rounds and
+    returns (node, hub, authority) as ``scale``-scaled bigints in
+    [0, scale], ``scale`` = :data:`HITS_SCALE`.
 
     Bounds: the normalization product ``s·scale`` must fit int64 —
-    with the default 1e6 scale that allows hub/authority in-degrees up
+    with the 1e6 scale that allows hub/authority in-degrees up
     to ~9·10⁶ (document-graph hubs at web scale sit well under this at
-    host granularity; raise ``n_iter``/precision only with the bound
+    host granularity; raise rounds/precision only with the bound
     in mind — the DuckDB oracle errors loudly on overflow while Spark
     would wrap, so the suite family also guards the bound).
 
@@ -114,6 +113,7 @@ def hits(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
+    scale = HITS_SCALE
     h = nodes.withColumn("h", F.lit(scale).cast("bigint"))
 
     def _norm(raw, key, val):
@@ -129,7 +129,7 @@ def hits(
         )
 
     a = None
-    for _ in range(n_iter):
+    for _ in range(N_ITER):
         a_raw = (
             e.join(h.withColumnRenamed("node", "src"), "src")
             .groupBy("dst")

@@ -22,15 +22,20 @@ ROBOTS_HOST_COL = "__robots_host"
 ROBOTS_TXT_COL = "__robots_txt"
 #: crawl delay of a host whose robots.txt group declares none
 DEFAULT_DELAY_MS = 1000
+#: the agent the crawler identifies as (whose robots.txt group
+#: :func:`robots_filter` applies and :func:`crawl_schedule` reads), and
+#: the schedule's window
+CRAWL_AGENT = "gumbobot/1.0"
+WINDOW_SEC = 60
 
 
 def robots_filter(
     urls: DataFrame,
     robots: DataFrame,
-    agent: str = "gumbobot",
     url_col: str = "url",
 ) -> DataFrame:
-    """Append ``crawl_allowed`` to ``urls``.
+    """Append ``crawl_allowed`` to ``urls``: whether :data:`CRAWL_AGENT`
+    may fetch it.
 
     ``robots`` carries one row per host (``host, robots_txt``); hosts
     absent from it — and null/empty bodies — are implicit allow-all
@@ -49,6 +54,7 @@ def robots_filter(
         "left",
     )
     cache: dict[str, object] = {}
+    agent = CRAWL_AGENT
 
     def row(url, txt):
         key = txt or ""
@@ -60,16 +66,13 @@ def robots_filter(
     return map_rows(j, (url_col, ROBOTS_TXT_COL), "crawl_allowed boolean", row, urls.columns)
 
 
-def crawl_schedule(
-    robots: DataFrame,
-    agent: str = "gumbobot",
-    window_sec: int = 60,
-) -> DataFrame:
+def crawl_schedule(robots: DataFrame) -> DataFrame:
     """(host, crawl_delay_ms, fetch_budget): per-host politeness
     schedule from the de-facto ``Crawl-delay`` extension — the frontier
     shard sizer (a host's shard should hold at most ``fetch_budget``
-    URLs per ``window_sec`` scheduling window).  Hosts whose selected
-    agent group declares no delay get :data:`DEFAULT_DELAY_MS`;
+    URLs per ``window_sec`` = :data:`WINDOW_SEC` scheduling window).
+    Hosts whose :data:`CRAWL_AGENT` group declares no delay get
+    :data:`DEFAULT_DELAY_MS`;
     ``fetch_budget = window_sec·1000 div crawl_delay_ms`` is one
     integer floor division (oracle-exact).  Scale shape: the input is
     the hosts-sized robots table — one Arrow map over it, no join, no
@@ -78,11 +81,13 @@ def crawl_schedule(
     robots_txt``; a NULL robots.txt is the empty file."""
     from ..parser.robots import parse_robots
 
+    agent, window_sec = CRAWL_AGENT, WINDOW_SEC
+
     def row(txt):
         d = parse_robots(txt or "").crawl_delay(agent)
         delay = DEFAULT_DELAY_MS if d is None else int(round(d * 1000))
         # floor at 1 fetch per window: a Crawl-delay longer than the
-        # window (e.g. 120 s against the 60 s default — common in real
+        # window (e.g. 120 s against the 60 s window — common in real
         # robots.txt) would otherwise yield budget 0 and
         # shard_frontier's `div fetch_budget` divides by zero (NULL
         # windows in non-ANSI Spark, a runtime error under ANSI)

@@ -108,11 +108,18 @@ def cosine_topk(
 DIM = 64
 #: hyperplanes of :func:`cosine_near_dup_pairs`' blocking bucket
 NEAR_DUP_PLANES = 4
+#: cosine at which two embeddings are near-duplicates
+#: (:func:`cosine_near_dup_pairs`, :func:`semantic_dedup`), tuned to the
+#: synthetic random-vector corpus, whose max pairwise cosine is ≈ 0.44
+NEAR_DUP_COSINE = 0.35
+#: k of the recall@k audits and the probe lists of the IVF one
+RECALL_K = 3
+RECALL_NPROBE = 2
 
 
-def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
+def cosine_near_dup_pairs(df: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a, b, cos_e6) with
-    a < b and cosine ≥ threshold.
+    a < b and cosine ≥ ``NEAR_DUP_COSINE``.
 
     Candidates are blocked by the REAL scale path (round 3; previously
     a documented modulus stand-in): the deterministic hyperplane-LSH
@@ -141,7 +148,7 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
         a.join(b, ["block"])
         .where(F.col("a") < F.col("b"))
         .withColumn("cos", F.expr(dot) / (F.col("na") * F.col("nb")))
-        .where(F.col("cos") >= threshold)
+        .where(F.col("cos") >= NEAR_DUP_COSINE)
         .select(
             F.col("a").cast("bigint"),
             F.col("b").cast("bigint"),
@@ -185,41 +192,38 @@ def lsh_cosine_topk(
     k: int = 3,
     dim: int = DIM,
     n_planes: int = 6,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate variant: candidates restricted to the query's LSH
     bucket (equi-join on bucket → co-partitioned shuffle instead of a
     cross join).  At 100 TB the bucket column is what you bucket/
     cluster the table by, making the probe side a bucket-pruned scan.
 
-    ``multiprobe`` additionally probes every bucket at hamming
-    distance 1 from the query's bucket (flip each of the ``n_planes``
-    bits) — the standard multi-probe LSH recall boost that costs
+    Each query also probes every bucket at hamming distance 1 from its
+    own (flip each of the ``n_planes`` bits) — the standard
+    multi-probe LSH recall boost that costs
     ``n_planes`` extra probe rows per query instead of more tables.
     """
     sk = hyperplane_sketch_expr(dim, n_planes)
     base = _corpus_side(df).withColumn("bucket", F.expr(sk))
     q = _query_side(queries, F.expr(sk).alias("bucket"))
-    if multiprobe:
-        probes = ", ".join(f"bucket ^ {2 ** p}" for p in range(n_planes))
-        q = q.withColumn("bucket", F.explode(F.expr(f"array(bucket, {probes})")))
+    probes = ", ".join(f"bucket ^ {2 ** p}" for p in range(n_planes))
+    q = q.withColumn("bucket", F.explode(F.expr(f"array(bucket, {probes})")))
     return _top_k(base.join(F.broadcast(q), "bucket"), k)
 
 
 def lsh_recall_vs_exact(
     df: DataFrame,
     queries: DataFrame,
-    k: int = 3,
     dim: int = DIM,
     n_planes: int = 6,
 ) -> DataFrame:
-    """Measured recall@k of the LSH path against the exact baseline —
-    one row (n_queries, n_exact, n_hit, recall_e4).  This is the
+    """Measured recall@``RECALL_K`` of the LSH path against the exact
+    baseline — one row (n_queries, n_exact, n_hit, recall_e4).  This is the
     metric that gates an ANN rollout at scale; both sides are
     deterministic so the oracle recomputes it bit-for-bit."""
     return _recall(
-        cosine_topk(df, queries, k=k),
-        lsh_cosine_topk(df, queries, k=k, dim=dim, n_planes=n_planes),
+        cosine_topk(df, queries, k=RECALL_K),
+        lsh_cosine_topk(df, queries, k=RECALL_K, dim=dim, n_planes=n_planes),
     )
 
 
@@ -298,32 +302,24 @@ def ivf_topk(
     return _top_k(assigned.join(F.broadcast(probes), "pivot_id"), k)
 
 
-def ivf_recall_vs_exact(
-    df: DataFrame,
-    queries: DataFrame,
-    pivots: DataFrame,
-    k: int = 3,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Measured recall@k of the IVF path against the exact baseline —
-    one row (n_queries, n_exact, n_hit, recall_e4), the IVF analogue
-    of :func:`lsh_recall_vs_exact`."""
+def ivf_recall_vs_exact(df: DataFrame, queries: DataFrame, pivots: DataFrame) -> DataFrame:
+    """Measured recall@``RECALL_K`` of the IVF path (``RECALL_NPROBE``
+    probe lists) against the exact baseline — one row (n_queries,
+    n_exact, n_hit, recall_e4), the IVF analogue of
+    :func:`lsh_recall_vs_exact`."""
     return _recall(
-        cosine_topk(df, queries, k=k),
-        ivf_topk(df, queries, pivots, k=k, nprobe=nprobe),
+        cosine_topk(df, queries, k=RECALL_K),
+        ivf_topk(df, queries, pivots, k=RECALL_K, nprobe=RECALL_NPROBE),
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    pivots: DataFrame,
-    threshold: float = 0.9,
-) -> DataFrame:
+def semantic_dedup(df: DataFrame, pivots: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster every embedding to its nearest pivot
     (the IVF coarse assignment — broadcast pivots, map-side argmax),
     compare cosines ONLY within a cluster, and keep each document iff
-    it has no lower-id near-duplicate in its cluster.
+    it has no lower-id near-duplicate (cosine ≥ ``NEAR_DUP_COSINE``)
+    in its cluster.
 
     Returns (vec_id, pivot_id, keep) for every nonzero vector.
 
@@ -357,7 +353,7 @@ def semantic_dedup(
     dropped = (
         a.join(b, ["pivot_id"])
         .where(F.col("a") < F.col("b"))
-        .where(F.expr(dot) / (F.col("na") * F.col("nb")) >= threshold)
+        .where(F.expr(dot) / (F.col("na") * F.col("nb")) >= NEAR_DUP_COSINE)
         .select(F.col("b").alias("vec_id"))
         .distinct()
         .withColumn("_dropped", F.lit(True))

@@ -1,8 +1,8 @@
 """Distributed frequency sketches — Count-Min heavy hitters.
 
 A Count-Min sketch is the classic one-pass, fixed-memory frequency
-summary (Cormode & Muthukrishnan 2005): ``depth`` hash rows of
-``width`` counters; est(word) = min over rows of the counter its hash
+summary (Cormode & Muthukrishnan 2005): ``CMS_DEPTH`` hash rows of
+``CMS_WIDTH`` counters; est(word) = min over rows of the counter its hash
 lands in, and est ≥ true count always (collisions only ever inflate).
 
 Scale shape: the build is one map-side-combined groupBy over
@@ -23,6 +23,13 @@ from pyspark.sql import DataFrame, functions as F
 from .textstats import split_words
 
 U32 = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
+
+#: Count-Min sketch shape and the heavy-hitter estimate floor
+CMS_WIDTH = 16
+CMS_DEPTH = 3
+CMS_MIN_COUNT = 100
+#: smallest hashes a KMV sketch keeps
+KMV_K = 16
 
 
 def _bucket_expr(r: int, width: int) -> str:
@@ -52,15 +59,10 @@ def _counters(words: DataFrame, width: int, depth: int) -> DataFrame:
     )
 
 
-def cms_heavy_hitters(
-    df: DataFrame,
-    width: int = 16,
-    depth: int = 3,
-    min_count: int = 100,
-) -> DataFrame:
+def cms_heavy_hitters(df: DataFrame) -> DataFrame:
     """Heavy hitters by CMS estimate: (word, est) for every distinct
-    word whose sketch estimate reaches ``min_count``, est = min over
-    the ``depth`` row counters.  est ≥ true count (one-sided error),
+    word whose sketch estimate reaches ``CMS_MIN_COUNT``, est = min over
+    the ``CMS_DEPTH`` row counters.  est ≥ true count (one-sided error),
     so no true heavy hitter is ever missed; collision-inflated light
     words are the documented false-positive mass, bounded by
     width/depth sizing.
@@ -70,6 +72,7 @@ def cms_heavy_hitters(
     artifact and candidates arrive from outside (alert lists, probe
     vocab) without touching the corpus again.  One token stream feeds
     both the sketch and the candidates."""
+    width, depth = CMS_WIDTH, CMS_DEPTH
     toks = split_words(df, explode=True)
     probes = toks.distinct().select("word", _row_buckets(width, depth)).select(
         "word", "rb.row", "rb.bucket"
@@ -79,12 +82,12 @@ def cms_heavy_hitters(
         .groupBy("word")
         .agg(F.min("cnt").cast("bigint").alias("est"))
     )
-    return est.where(F.col("est") >= min_count).select("word", "est")
+    return est.where(F.col("est") >= CMS_MIN_COUNT).select("word", "est")
 
 
-def kmv_distinct(df: DataFrame, k: int = 16) -> DataFrame:
+def kmv_distinct(df: DataFrame) -> DataFrame:
     """KMV / bottom-k distinct-count sketch (Bar-Yossef et al. 2002):
-    keep the ``k`` smallest 32-bit word hashes; if the k-th smallest
+    keep the k = ``KMV_K`` smallest 32-bit word hashes; if the k-th smallest
     is h_k, the hashes are ~uniform on [0, 2^32) and
     est = (k−1)·2^32 / h_k.  One row: (k_used, kth_hash, est_distinct)
     — exact integers, so the oracle matches bit-for-bit.
@@ -100,7 +103,7 @@ def kmv_distinct(df: DataFrame, k: int = 16) -> DataFrame:
         .select(F.expr(U32.format(x="word")).alias("h"))
         .distinct()
     )
-    botk = h.orderBy("h").limit(k)
+    botk = h.orderBy("h").limit(KMV_K)
     return botk.agg(
         F.count(F.lit(1)).cast("bigint").alias("k_used"),
         F.max("h").cast("bigint").alias("kth_hash"),
@@ -138,7 +141,9 @@ def grouped_length_quantiles(
     thousands of rows per group at any corpus size, the same trick as
     the frequency histogram; the cumulative windows and the probe run
     per group over that tiny table, so the only corpus-sized stage is
-    the first map+partial-agg.  This is the exact-histogram cousin of a
+    the first map+partial-agg.  The cumulative count and the group total
+    share one ordered window spec (different frames), so one sort and
+    one Window operator serve both.  This is the exact-histogram cousin of a
     t-digest: for integer-valued statistics the histogram IS the
     sketch, no approximation needed."""
     from pyspark.sql import Window
@@ -149,15 +154,14 @@ def grouped_length_quantiles(
         .groupBy("grp", "len")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    w = Window.partitionBy("grp").orderBy("len").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wt = Window.partitionBy("grp")
+    w = Window.partitionBy("grp").orderBy("len")
     cum = lens.select(
         "grp",
         "len",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(wt).alias("total"),
+        F.sum("cnt").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
+        F.sum("cnt").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("total"),
     )
     probs = ", ".join(str(p) for p in probs_e2)
     probed = cum.crossJoin(

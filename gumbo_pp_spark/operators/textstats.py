@@ -167,20 +167,23 @@ def scrub_pii(df: DataFrame) -> DataFrame:
     )
 
 
-def quality_filter(
-    df: DataFrame,
-    min_tokens: int = 50,
-    min_stopword_ratio_e4: int = 200,
-    min_alpha_ratio_e4: int = 7000,
-) -> DataFrame:
-    """The corpus quality gate: keep documents passing all thresholds.
-    Returns (doc_id, n_tokens) of survivors — the typical first filter
-    of a training-data pipeline (runs before dedup/extraction)."""
+#: thresholds of the document quality gate (:func:`quality_filter`,
+#: :func:`corpus_report`)
+QUALITY_MIN_TOKENS = 40
+QUALITY_MIN_STOPWORD_RATIO_E4 = 100
+QUALITY_MIN_ALPHA_RATIO_E4 = 7000
+
+
+def quality_filter(df: DataFrame) -> DataFrame:
+    """The corpus quality gate: keep documents passing all ``QUALITY_*``
+    thresholds.  Returns (doc_id, n_tokens) of survivors — the typical
+    first filter of a training-data pipeline (runs before
+    dedup/extraction)."""
     stats = quality_stats(df)
     return stats.where(
-        (stats.n_tokens >= min_tokens)
-        & (stats.stopword_ratio_e4 >= min_stopword_ratio_e4)
-        & (stats.alpha_ratio_e4 >= min_alpha_ratio_e4)
+        (stats.n_tokens >= QUALITY_MIN_TOKENS)
+        & (stats.stopword_ratio_e4 >= QUALITY_MIN_STOPWORD_RATIO_E4)
+        & (stats.alpha_ratio_e4 >= QUALITY_MIN_ALPHA_RATIO_E4)
     ).select("doc_id", "n_tokens")
 
 
@@ -224,9 +227,13 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def paragraph_chunks(df: DataFrame, stride: int = 10) -> DataFrame:
-    """(doc_id, chunk_idx, chunk) — consecutive ``stride``-word windows
-    (the 'paragraph' unit for sub-document dedup; real pipelines use
+#: words per :func:`paragraph_chunks` chunk
+PARAGRAPH_WORDS = 10
+
+
+def paragraph_chunks(df: DataFrame) -> DataFrame:
+    """(doc_id, chunk_idx, chunk) — consecutive ``PARAGRAPH_WORDS``-word
+    windows (the 'paragraph' unit for sub-document dedup; real pipelines use
     newline paragraphs, the synthetic corpus is single-line).
 
     The split is projected ONCE before the chunk lambda (round 8):
@@ -234,6 +241,7 @@ def paragraph_chunks(df: DataFrame, stride: int = 10) -> DataFrame:
     higher-order-function lambdas (see ``chunk_tokens``), so the
     one-expression form re-tokenized the document for every chunk —
     O(words²/stride) characters per document."""
+    stride = PARAGRAPH_WORDS
     return (
         split_words(df, keep=(DOC_ID,))
         .select(
@@ -289,13 +297,17 @@ def canonical_urls(df: DataFrame) -> DataFrame:
     )
 
 
-def sample_by_hash(df: DataFrame, rate_e4: int = 1000) -> DataFrame:
+#: the share of rows :func:`sample_by_hash` keeps, in 1e-4 units
+SAMPLE_RATE_E4 = 1000
+
+
+def sample_by_hash(df: DataFrame) -> DataFrame:
     """Deterministic corpus sampling: keep a row iff the first 8 hex
-    digits of md5(doc_id) fall under ``rate_e4``/10000 of the 32-bit
+    digits of md5(doc_id) fall under ``SAMPLE_RATE_E4``/10000 of the 32-bit
     space.  Reproducible across engines and runs (no RNG), uniform in
     the hash domain, and embarrassingly parallel — the standard way to
     carve an evaluation slice out of a 10^12-row corpus."""
-    threshold = (rate_e4 * (1 << 32)) // 10000
+    threshold = (SAMPLE_RATE_E4 * (1 << 32)) // 10000
     return df.where(
         F.expr(
             f"CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) < {threshold}"
@@ -303,8 +315,10 @@ def sample_by_hash(df: DataFrame, rate_e4: int = 1000) -> DataFrame:
     )
 
 
-#: default hash-salt fan-out of the two-phase per-group top-k
+#: hash-salt fan-out of the two-phase per-group top-k
 SALT_BUCKETS = 16
+#: documents :func:`cap_per_host` keeps per host
+HOST_CAP = 15
 
 
 def _salted_top_k(df: DataFrame, k: int, group_col: str, order: tuple, salt_buckets: int) -> DataFrame:
@@ -337,20 +351,19 @@ def _salted_top_k(df: DataFrame, k: int, group_col: str, order: tuple, salt_buck
     )
 
 
-def cap_per_host(df: DataFrame, cap: int = 3, salt_buckets: int = SALT_BUCKETS) -> DataFrame:
-    """Per-host document cap: keep at most ``cap`` documents per host,
+def cap_per_host(df: DataFrame) -> DataFrame:
+    """Per-host document cap: keep at most ``HOST_CAP`` documents per host,
     chosen deterministically by md5(doc_id) order (tie-broken by doc_id).
     The standard anti-domination gate before training-corpus assembly —
     without it one crawl-heavy host owns the token budget.  Two-phase
     salted ranking (:func:`_salted_top_k`) keeps a crawl-heavy host
     from landing in one sorted task."""
     order = (F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
-    return _salted_top_k(df, cap, "host", order, salt_buckets)
+    return _salted_top_k(df, HOST_CAP, "host", order, SALT_BUCKETS)
 
 
 def host_quality_stats(
     df: DataFrame,
-    host_col: str = "host",
     min_tokens: int = 50,
     min_stopword_ratio_e4: int = 200,
     min_alpha_ratio_e4: int = 7000,
@@ -367,7 +380,7 @@ def host_quality_stats(
     the oracles mirror and splits the text on its own."""
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 
-    s = quality_stats(ensure_min_parallelism(df), keep=(f"{host_col} AS host",))
+    s = quality_stats(ensure_min_parallelism(df), keep=("host",))
     bad = (
         (F.col("n_tokens") < min_tokens)
         | (F.col("stopword_ratio_e4") < min_stopword_ratio_e4)
@@ -388,7 +401,6 @@ def host_quality_stats(
 
 def host_quality_gate(
     df: DataFrame,
-    host_col: str = "host",
     min_docs: int = 5,
     max_bad_frac_e4: int = 5000,
     min_tokens: int = 50,
@@ -408,48 +420,45 @@ def host_quality_gate(
     (stats, then gate), but the corpus itself is never shuffled — the
     host aggregate output and the blocked-host list are hosts-sized,
     and the gate is a broadcast left-anti join."""
-    stats = host_quality_stats(
-        df, host_col, min_tokens, min_stopword_ratio_e4, min_alpha_ratio_e4
-    )
+    stats = host_quality_stats(df, min_tokens, min_stopword_ratio_e4, min_alpha_ratio_e4)
     blocked = stats.where(
         (F.col("n_docs") >= min_docs)
         & (F.col("n_bad") * 10000 > F.col("n_docs") * max_bad_frac_e4)
     ).select(F.col("host").alias("_blocked_host"))
     return df.join(
         F.broadcast(blocked),
-        F.col(host_col) == F.col("_blocked_host"),
+        F.col("host") == F.col("_blocked_host"),
         "left_anti",
     )
 
 
 #: Gopher rule constants (Rae et al. 2021 appendix A1.1, as adopted by
-#: the public reproductions): stopword panel and thresholds
+#: the public reproductions): stopword panel and thresholds.  The word
+#: and stopword floors are set for the synthetic corpus, whose
+#: vocabulary carries only 'the' of the panel, and lines are its
+#: '. '-joined segments ('\n' for real text)
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+GOPHER_LINE_SEP = "[.] "
+GOPHER_MIN_WORDS = 40
+GOPHER_MAX_WORDS = 100000
+GOPHER_MIN_MEAN_WORD_LEN_E4 = 30000
+GOPHER_MAX_MEAN_WORD_LEN_E4 = 100000
+GOPHER_MAX_SYMBOL_RATIO_E4 = 1000
+GOPHER_MAX_BULLET_FRAC_E4 = 9000
+GOPHER_MAX_ELLIPSIS_FRAC_E4 = 3000
+GOPHER_MIN_ALPHA_WORD_FRAC_E4 = 8000
+GOPHER_MIN_STOPWORDS = 1
 
 
-def gopher_rules(
-    df: DataFrame,
-    text_col: str = "text",
-    line_sep_regex: str = "\n",
-    min_words: int = 50,
-    max_words: int = 100000,
-    min_mean_word_len_e4: int = 30000,
-    max_mean_word_len_e4: int = 100000,
-    max_symbol_ratio_e4: int = 1000,
-    max_bullet_frac_e4: int = 9000,
-    max_ellipsis_frac_e4: int = 3000,
-    min_alpha_word_frac_e4: int = 8000,
-    min_stopwords: int = 2,
-) -> DataFrame:
+def gopher_rules(df: DataFrame) -> DataFrame:
     """The Gopher quality-rule panel (Rae et al. 2021 §A1.1) as ONE
     map-only projection: per-document word count, mean word length,
     symbol-to-word ratio (``#`` and ``...``), bullet-start and
     ellipsis-end line fractions, alphabetic-word fraction, stopword
     presence, and the combined ``gopher_pass`` verdict.  All ratios are
     e4-scaled integers (single division each) so oracles compare
-    bit-for-bit; no UDF, whole-stage codegen end to end.
-    ``line_sep_regex`` adapts the line rules to the corpus' segment
-    convention ('\\n' for real text, '[.] ' for the synthetic tables)."""
+    bit-for-bit; no UDF, whole-stage codegen end to end.  Lines are
+    split on :data:`GOPHER_LINE_SEP`."""
     stop_terms = " + ".join(
         f"(CASE WHEN array_contains(ws, '{s}') THEN 1 ELSE 0 END)"
         for s in GOPHER_STOPWORDS
@@ -457,9 +466,9 @@ def gopher_rules(
     bullet = "l LIKE '- %' OR l LIKE '* %' OR l LIKE '• %'"
     out = df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
-        f"{words_sql(text_col)} AS ws",
-        f"split({text_col}, '{line_sep_regex}') AS ls",
-        f"CAST(regexp_count({text_col}, '#') + regexp_count({text_col}, '[.]{{3}}') AS BIGINT) AS n_symbols",
+        f"{words_sql()} AS ws",
+        f"split(text, '{GOPHER_LINE_SEP}') AS ls",
+        "CAST(regexp_count(text, '#') + regexp_count(text, '[.]{3}') AS BIGINT) AS n_symbols",
     ).selectExpr(
         "doc_id",
         "CAST(size(ws) AS BIGINT) AS n_words",
@@ -471,38 +480,40 @@ def gopher_rules(
         f"CAST({stop_terms} AS BIGINT) AS n_stopwords_present",
     )
     checks = (
-        (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
-        & (F.col("mean_word_len_e4") >= min_mean_word_len_e4)
-        & (F.col("mean_word_len_e4") <= max_mean_word_len_e4)
-        & (F.col("symbol_ratio_e4") <= max_symbol_ratio_e4)
-        & (F.col("bullet_frac_e4") <= max_bullet_frac_e4)
-        & (F.col("ellipsis_frac_e4") <= max_ellipsis_frac_e4)
-        & (F.col("alpha_word_frac_e4") >= min_alpha_word_frac_e4)
-        & (F.col("n_stopwords_present") >= min_stopwords)
+        (F.col("n_words") >= GOPHER_MIN_WORDS)
+        & (F.col("n_words") <= GOPHER_MAX_WORDS)
+        & (F.col("mean_word_len_e4") >= GOPHER_MIN_MEAN_WORD_LEN_E4)
+        & (F.col("mean_word_len_e4") <= GOPHER_MAX_MEAN_WORD_LEN_E4)
+        & (F.col("symbol_ratio_e4") <= GOPHER_MAX_SYMBOL_RATIO_E4)
+        & (F.col("bullet_frac_e4") <= GOPHER_MAX_BULLET_FRAC_E4)
+        & (F.col("ellipsis_frac_e4") <= GOPHER_MAX_ELLIPSIS_FRAC_E4)
+        & (F.col("alpha_word_frac_e4") >= GOPHER_MIN_ALPHA_WORD_FRAC_E4)
+        & (F.col("n_stopwords_present") >= GOPHER_MIN_STOPWORDS)
     )
     return out.withColumn(
         "gopher_pass", F.when(checks, F.lit(1)).otherwise(F.lit(0)).cast("bigint")
     )
 
 
-def mirror_hosts(
-    df: DataFrame,
-    min_shared: int = 3,
-    fp_cap: int = 64,
-) -> DataFrame:
+#: fingerprints two hosts share to be mirrors, and the hosts a
+#: fingerprint may sit on before it leaves the self-join
+MIRROR_MIN_SHARED = 3
+MIRROR_FP_CAP = 64
+
+
+def mirror_hosts(df: DataFrame) -> DataFrame:
     """(host_a, host_b, n_shared, jaccard_e4) — UNDECLARED mirror
     detection (the complement of rel=canonical collapse): host pairs
-    sharing ≥ ``min_shared`` exact content fingerprints, with the
+    sharing ≥ ``MIRROR_MIN_SHARED`` exact content fingerprints, with the
     Jaccard of their fingerprint sets.  Mirrors, scraper farms and
     CDN-duplicated sites surface here without any markup cooperation.
 
     Scale shape — the LSH bucketing discipline applied to fingerprints:
     the corpus collapses to DISTINCT (host, fp) rows first (map-side
-    combined), fingerprints on more than ``fp_cap`` hosts are dropped
+    combined), fingerprints on more than ``MIRROR_FP_CAP`` hosts are dropped
     before the self-join (shared templates/empty pages would otherwise
     quadratically explode a bucket; the cap bounds any fp's pair
-    fan-out at C(fp_cap, 2)), and the pair aggregate joins two
+    fan-out at C(MIRROR_FP_CAP, 2)), and the pair aggregate joins two
     hosts-sized count tables (broadcast).  Document text never moves —
     only 32-char digests shuffle."""
     fps = df.select("host", F.md5("text").alias("fp")).distinct()
@@ -510,7 +521,7 @@ def mirror_hosts(
         F.count(F.lit(1)).cast("bigint").alias("n_fps")
     )
     cool = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("nh")).where(
-        F.col("nh") <= fp_cap
+        F.col("nh") <= MIRROR_FP_CAP
     ).select("fp")
     fps = fps.join(cool, "fp")
     a = fps.select("fp", F.col("host").alias("host_a"))
@@ -520,7 +531,7 @@ def mirror_hosts(
         .where(F.col("host_a") < F.col("host_b"))
         .groupBy("host_a", "host_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= MIRROR_MIN_SHARED)
     )
     na = per_host.select(F.col("host").alias("host_a"), F.col("n_fps").alias("na"))
     nb = per_host.select(F.col("host").alias("host_b"), F.col("n_fps").alias("nb"))
@@ -582,12 +593,18 @@ def eval_ngrams(evals: DataFrame, n: int = 13) -> DataFrame:
     return ws.select(F.explode(F.expr(_ngram_expr(n))).alias("gram")).distinct()
 
 
-def contamination(docs: DataFrame, evals: DataFrame, n: int = 13) -> DataFrame:
+#: n-gram width of document and sentence contamination
+CONTAMINATION_N = 13
+SENTENCE_N = 8
+
+
+def contamination(docs: DataFrame, evals: DataFrame) -> DataFrame:
     """(doc_id, n_contaminated) for every training document sharing at
-    least one word ``n``-gram with ``evals`` — ``n_contaminated`` is
-    the number of DISTINCT shared grams (both sides de-duplicate
+    least one word ``CONTAMINATION_N``-gram with ``evals`` —
+    ``n_contaminated`` is the number of DISTINCT shared grams (both sides de-duplicate
     per document, so the count is order-free and oracle-stable).
     Clean documents are absent."""
+    n = CONTAMINATION_N
     ws = split_words(docs, keep=("doc_id",), min_words=n)
     dg = ws.select("doc_id", F.explode(F.expr(_ngram_expr(n))).alias("gram"))
     return (
@@ -612,16 +629,17 @@ def sentence_contamination(docs: DataFrame, evals: DataFrame, n: int = 8) -> Dat
     return sg.join(F.broadcast(grams), "gram").select("doc_id", "pos").distinct()
 
 
-def decontaminate_sentences(docs: DataFrame, evals: DataFrame, n: int = 8) -> DataFrame:
+def decontaminate_sentences(docs: DataFrame, evals: DataFrame) -> DataFrame:
     """(doc_id, clean_text, n_dropped): remove contaminated SENTENCES
-    and keep the document — every document survives (possibly with
+    (sharing a ``SENTENCE_N``-gram with ``evals``) and keep the
+    document — every document survives (possibly with
     ``clean_text = ''`` when all its sentences matched).  Scale shape:
     the corpus is never shuffled — contaminated (doc_id, pos) pairs
     (≪ corpus) are rolled up per document and joined back (AQE picks
     broadcast when the set is small, the common case), and the rebuild
     is a map-side indexed ``filter`` over the re-split sentence array —
     no explode-regroup of document text through an exchange."""
-    bad = sentence_contamination(docs, evals, n)
+    bad = sentence_contamination(docs, evals, SENTENCE_N)
     return _drop_segment_positions(docs, bad)
 
 
@@ -709,8 +727,10 @@ def remove_boilerplate(
 # on text.  A df-style cap bounds boilerplate-dominated window hashes
 # exactly like the shingle df_cap.
 
-#: default cap on a window hash's occurrences in the repeat report
+#: cap on a window hash's occurrences in the repeat report
 DF_CAP = 1024
+#: words per repeated-substring window
+WINDOW_WORDS = 20
 
 
 def _window_hashes(df: DataFrame, width: int) -> DataFrame:
@@ -739,27 +759,27 @@ def _repeated(wins: DataFrame, df_cap: int) -> DataFrame:
     )
 
 
-def repeated_windows(df: DataFrame, width: int = 20, df_cap: int = DF_CAP) -> DataFrame:
-    """Cross-document repeated ``width``-word windows:
+def repeated_windows(df: DataFrame) -> DataFrame:
+    """Cross-document repeated ``WINDOW_WORDS``-word windows:
     (wh, n_docs, n_occurrences), restricted to windows seen in ≥ 2
-    distinct documents.  Hashes occurring more than ``df_cap`` times
+    distinct documents.  Hashes occurring more than ``DF_CAP`` times
     total are dropped — the boilerplate guard, applied as a HAVING on
     the same aggregate (no extra shuffle), mirroring the shingle
     df_cap convention."""
-    return _repeated(_window_hashes(df, width), df_cap)
+    return _repeated(_window_hashes(df, WINDOW_WORDS), DF_CAP)
 
 
-def repeated_spans(df: DataFrame, width: int = 20) -> DataFrame:
+def repeated_spans(df: DataFrame) -> DataFrame:
     """Per-document spans of cross-document repeated windows:
     (doc_id, pos, wh) — word offset ``pos`` where a window starts that
     also appears in at least one other document (windows over the
     :data:`DF_CAP` occurrence cap excluded).  Downstream cutters
-    merge overlapping spans and excise [pos, pos+width) runs; this
+    merge overlapping spans and excise [pos, pos+WINDOW_WORDS) runs; this
     operator only REPORTS them (cut policy is corpus-specific).
 
     The join back is digest-keyed: the repeated set is typically a
     tiny fraction of all windows, so AQE broadcasts it at runtime."""
-    wins = _window_hashes(df, width)
+    wins = _window_hashes(df, WINDOW_WORDS)
     rep = _repeated(wins, DF_CAP).select("wh")
     return wins.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -768,12 +788,16 @@ def repeated_spans(df: DataFrame, width: int = 20) -> DataFrame:
     ).join(rep, "wh").select("doc_id", "pos", "wh")
 
 
-def stratified_sample(df: DataFrame, rates_e4: dict, default_e4: int = 0) -> DataFrame:
+#: acceptance rate of strata absent from a rate map: dropped
+STRATUM_DEFAULT_E4 = 0
+
+
+def stratified_sample(df: DataFrame, rates_e4: dict) -> DataFrame:
     """Deterministic per-stratum sampling — the mixture-weighting step
     of a training-data pipeline (down-weight crawl-heavy sources,
     up-weight curated ones).  ``rates_e4`` maps stratum value →
     acceptance rate in 1e-4 units; strata absent from the map get
-    ``default_e4``.
+    :data:`STRATUM_DEFAULT_E4`.
 
     The rate map is policy configuration (benchmark-sized, not data),
     so it compiles to a plan-time CASE literal: the whole operator is
@@ -786,26 +810,24 @@ def stratified_sample(df: DataFrame, rates_e4: dict, default_e4: int = 0) -> Dat
         "WHEN '{}' THEN {}".format(str(s).replace("'", "''"), int(r))
         for s, r in sorted(rates_e4.items())
     )
-    if cases:
-        rate = f"(CASE source {cases} ELSE {int(default_e4)} END)"
-    else:
-        rate = str(int(default_e4))
+    default_e4 = int(STRATUM_DEFAULT_E4)
+    rate = f"(CASE source {cases} ELSE {default_e4} END)" if cases else str(default_e4)
     h = "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"
     return df.where(F.expr(f"{h} < ({rate} * {1 << 32}) div 10000"))
 
 
-def repeated_window_stats(df: DataFrame, width: int = 20, df_cap: int = DF_CAP) -> DataFrame:
+def repeated_window_stats(df: DataFrame) -> DataFrame:
     """No-silent-caps accounting for :func:`repeated_windows`: one row
     (n_window_hashes, n_repeated, n_capped, occurrences_capped) — how
     many distinct window digests exist, how many are cross-document
-    repeats, and how much repeat mass the ``df_cap`` HAVING guard
+    repeats, and how much repeat mass the ``DF_CAP`` HAVING guard
     silently removed from the report (same monitoring convention as
     ``lsh_bucket_stats`` / ``shingle_df_stats``)."""
-    per = _window_hashes(df, width).groupBy("wh").agg(
+    per = _window_hashes(df, WINDOW_WORDS).groupBy("wh").agg(
         F.countDistinct("doc_id").alias("nd"), F.count(F.lit(1)).alias("no")
     )
     rep = (F.col("nd") >= 2).cast("int")
-    capped = ((F.col("nd") >= 2) & (F.col("no") > df_cap)).cast("int")
+    capped = ((F.col("nd") >= 2) & (F.col("no") > DF_CAP)).cast("int")
     return per.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_window_hashes"),
         F.sum(rep).cast("bigint").alias("n_repeated"),
@@ -824,22 +846,31 @@ def _most_frequent(rows: DataFrame, key: str, k: int) -> DataFrame:
     return counts.orderBy(F.desc("n"), key).limit(k)
 
 
-def oov_stats(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
+#: words in a corpus' own vocabulary (:func:`oov_stats`,
+#: :func:`vocab_drift`): the synthetic corpus has 31 distinct words
+#: and 16 puts the cut at a tie-free boundary
+VOCAB_SIZE = 16
+#: bigrams in :func:`lm_coverage`'s count model: the ~960-bigram
+#: synthetic vocabulary makes a 64-bigram model selective
+LM_SIZE = 64
+
+
+def oov_stats(df: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_oov, oov_ratio_e4) — out-of-vocabulary
-    token share against the corpus' own top-``vocab_size`` vocabulary.
+    token share against the corpus' own top-``VOCAB_SIZE`` vocabulary.
     The deterministic cousin of perplexity bucketing (CCNet-style):
     documents full of rare/garbled tokens score high and get routed to
     lower-quality buckets.  Integer-exact end to end (counts and an
     e4-rounded ratio), so the oracle compares bit-for-bit.
 
-    Scale shape: the vocabulary is by construction ``vocab_size`` rows
+    Scale shape: the vocabulary is by construction ``VOCAB_SIZE`` rows
     → broadcast; the corpus side is one explode + broadcast left join
     + one doc-keyed agg (map-side combined).  The corpus is never
     shuffled on a word key."""
     # one token stream feeds both the vocabulary build and the
     # per-document counts
     toks = split_words(df, keep=(DOC_ID,), explode=True)
-    vocab = _most_frequent(toks, "word", vocab_size).select("word")
+    vocab = _most_frequent(toks, "word", VOCAB_SIZE).select("word")
     return (
         toks.join(F.broadcast(vocab.withColumn("iv", F.lit(1))), "word", "left")
         .groupBy("doc_id")
@@ -865,10 +896,7 @@ def oov_stats(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
 _BIGRAM_EXPR = "transform(sequence(1, size(ws) - 1), j -> concat_ws(' ', slice(ws, j, 2)))"
 
 
-def lm_coverage(
-    df: DataFrame,
-    lm_size: int = 4096,
-) -> DataFrame:
+def lm_coverage(df: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, n_known, known_mass, coverage_e4) — the
     integer-exact stand-in for CCNet's LM-perplexity fluency filter:
     instead of float log-perplexity (whose cross-engine sum-order / ulp
@@ -880,8 +908,8 @@ def lm_coverage(
     Documents under 2 words have no bigrams and are absent (same
     convention as :func:`contamination`).
 
-    The model is the corpus' own top-``lm_size`` bigrams by frequency,
-    ties broken lexicographically.  Scale shape: the model is ``lm_size`` rows →
+    The model is the corpus' own top-``LM_SIZE`` bigrams by frequency,
+    ties broken lexicographically.  Scale shape: the model is ``LM_SIZE`` rows →
     broadcast left join; the corpus side is one explode + one
     doc-keyed agg (map-side combined) and is never shuffled on a
     bigram key."""
@@ -890,7 +918,7 @@ def lm_coverage(
     bg = split_words(df, keep=(DOC_ID,), min_words=2).select(
         "doc_id", F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram")
     )
-    lm = _most_frequent(bg, "bigram", lm_size)
+    lm = _most_frequent(bg, "bigram", LM_SIZE)
     return (
         bg.join(F.broadcast(lm), "bigram", "left")
         .groupBy("doc_id")
@@ -937,7 +965,7 @@ def mixture_rates(
     deliberate 1-row broadcast cross join for the binding constants).
     Sources absent from ``target_shares_e4`` (or mapped to 0) get no
     row — their documents are dropped entirely by the downstream
-    sampler, matching ``stratified_sample(default_e4=0)``."""
+    sampler, matching ``STRATUM_DEFAULT_E4 = 0``."""
     cases = " ".join(
         "WHEN '{}' THEN {}".format(str(s).replace("'", "''"), int(r))
         for s, r in sorted(target_shares_e4.items())
@@ -1000,7 +1028,7 @@ def _quality_fail_expr(
     )
 
 
-def top_word_frac_e4_expr(text_col: str = "text") -> str:
+def top_word_frac_e4_expr() -> str:
     """Row-local SQL for ``repetition_stats``' ``top_word_frac_e4``
     (most-frequent-word share, e4-rounded BIGINT): sort the word array,
     take the longest equal-run.  Identical integer math to the
@@ -1019,7 +1047,7 @@ def top_word_frac_e4_expr(text_col: str = "text") -> str:
     The run-start filter clamps its look-behind index to 1: it never
     relies on ``OR`` short-circuiting to keep ``element_at(sw, 0)``
     (an invalid index that raises) from being evaluated."""
-    sw_val = f"array_sort(split({text_col}, ' '))"
+    sw_val = "array_sort(split(text, ' '))"
     starts_val = (
         "filter(sequence(1, size(sw)), "
         "j -> j = 1 OR element_at(sw, j) != element_at(sw, greatest(j - 1, 1)))"
@@ -1037,21 +1065,19 @@ def top_word_frac_e4_expr(text_col: str = "text") -> str:
     )
 
 
-def corpus_report(
-    df: DataFrame,
-    min_tokens: int = 40,
-    min_stopword_ratio_e4: int = 100,
-    min_alpha_ratio_e4: int = 7000,
-) -> DataFrame:
+def corpus_report(df: DataFrame) -> DataFrame:
     """The one-row dataset card: (n_docs, n_tokens, n_chars,
     mean_doc_tokens_e4, n_distinct_md5, n_exact_dup_docs,
-    n_quality_pass, n_en, n_es, n_de, n_fr) — the summary a corpus
+    n_quality_pass, n_en, n_es, n_de, n_fr) — ``n_quality_pass`` under
+    the ``QUALITY_*`` thresholds; the summary a corpus
     release datasheet opens with, computed in ONE pass: every signal
     lives in the same map-only projection and rolls up in one
     map-side-combined aggregate (the distinct-digest count adds
     Spark's standard two-phase distinct expansion, over 32-char
     digests only — never text)."""
-    fail = _quality_fail_expr(min_tokens, min_stopword_ratio_e4, min_alpha_ratio_e4)
+    fail = _quality_fail_expr(
+        QUALITY_MIN_TOKENS, QUALITY_MIN_STOPWORD_RATIO_E4, QUALITY_MIN_ALPHA_RATIO_E4
+    )
     proj = df.selectExpr(
         "md5(text) AS fp",
         f"CAST(size({words_sql()}) AS BIGINT) AS n_toks",
@@ -1091,10 +1117,10 @@ def corpus_report(
     )
 
 
-def vocab_drift(a: DataFrame, b: DataFrame, vocab_size: int = 1000) -> DataFrame:
+def vocab_drift(a: DataFrame, b: DataFrame) -> DataFrame:
     """One row (n_vocab, n_words_a, n_words_b, tv_distance_e4):
     total-variation distance between two corpora's word distributions
-    over the UNION of their top-``vocab_size`` vocabularies, with each
+    over the UNION of their top-``VOCAB_SIZE`` vocabularies, with each
     side's remaining words lumped into an OOV bucket — the drift
     monitor between crawl batches (a distribution shift here means the
     new batch needs re-calibrated quality/mixture settings before it
@@ -1109,7 +1135,7 @@ def vocab_drift(a: DataFrame, b: DataFrame, vocab_size: int = 1000) -> DataFrame
     :func:`mixture_rates`.
 
     Scale shape: two map-side-combined word aggs (corpus-sized
-    stages); everything downstream operates on the ≤ 2·vocab_size
+    stages); everything downstream operates on the ≤ 2·VOCAB_SIZE
     union vocabulary with 1-row total tables broadcast."""
     def _counts(df):
         return (
@@ -1121,8 +1147,8 @@ def vocab_drift(a: DataFrame, b: DataFrame, vocab_size: int = 1000) -> DataFrame
     wa = _counts(a)
     wb = _counts(b)
     uni = (
-        wa.orderBy(F.desc("c"), "word").limit(vocab_size).select("word")
-        .union(wb.orderBy(F.desc("c"), "word").limit(vocab_size).select("word"))
+        wa.orderBy(F.desc("c"), "word").limit(VOCAB_SIZE).select("word")
+        .union(wb.orderBy(F.desc("c"), "word").limit(VOCAB_SIZE).select("word"))
         .distinct()
     )
     j = (
@@ -1166,8 +1192,12 @@ def vocab_drift(a: DataFrame, b: DataFrame, vocab_size: int = 1000) -> DataFrame
     )
 
 
-def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
-    """Per-document top-``k`` salient terms by tf·rarity:
+#: salient terms :func:`tfidf_top_terms` keeps per document
+TFIDF_K = 3
+
+
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
+    """Per-document top-``TFIDF_K`` salient terms by tf·rarity:
     (doc_id, word, tf, df, score_e4, rank) where ``score_e4 =
     round(10000 · tf / df)`` and ``df`` is the number of documents
     containing the word.  The tf/df ratio is the exact-integer member
@@ -1199,7 +1229,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("score_e4"), "word")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_K)
         .select("doc_id", "word", "tf", "df", "score_e4", "rank")
     )
 
@@ -1228,7 +1258,11 @@ def importance_sample(df: DataFrame) -> DataFrame:
     )
 
 
-def classifier_weights(n_buckets: int = 256) -> list[int]:
+#: hash buckets of the linear quality classifier
+CLASSIFIER_BUCKETS = 256
+
+
+def classifier_weights() -> list[int]:
     """Deterministic integer weights of the hashed linear quality
     classifier: w(b) = u32(md5('w|b')) % 2001 − 1000 ∈ [−1000, 1000].
     A stand-in for a trained fastText/CCNet-style model's bucket
@@ -1239,21 +1273,8 @@ def classifier_weights(n_buckets: int = 256) -> list[int]:
 
     return [
         int(hashlib.md5(f"w|{b}".encode()).hexdigest()[:8], 16) % 2001 - 1000
-        for b in range(n_buckets)
+        for b in range(CLASSIFIER_BUCKETS)
     ]
-
-
-def classifier_score_sql(text_col: str = "text") -> str:
-    """The classifier score as one SQL expression (shared by
-    :func:`quality_classifier` and map-only pipeline gates — a filter
-    on this expression never shuffles)."""
-    w = classifier_weights()
-    warr = "array(" + ",".join(f"{x}L" for x in w) + ")"
-    u32 = "CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT)"
-    return (
-        f"aggregate({words_sql(text_col)}, 0L, "
-        f"(acc, t) -> acc + element_at({warr}, CAST({u32} % {len(w)} AS INT) + 1))"
-    )
 
 
 def quality_classifier(df: DataFrame) -> DataFrame:
@@ -1270,7 +1291,13 @@ def quality_classifier(df: DataFrame) -> DataFrame:
     zero Python; at 10^12 docs this is embarrassingly parallel and
     retry-stable, the same plan-literal pattern as
     :func:`stratified_sample`."""
-    score = classifier_score_sql()
+    w = classifier_weights()
+    warr = "array(" + ",".join(f"{x}L" for x in w) + ")"
+    u32 = "CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT)"
+    score = (
+        f"aggregate({words_sql()}, 0L, "
+        f"(acc, t) -> acc + element_at({warr}, CAST({u32} % {len(w)} AS INT) + 1))"
+    )
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
         f"CAST(size({words_sql()}) AS BIGINT) AS n_tokens",
@@ -1298,7 +1325,11 @@ def word_freq_histogram(df: DataFrame) -> DataFrame:
     ).select(F.col("freq").cast("bigint"), "n_words")
 
 
-def holdout_split(df: DataFrame, val_pct: int = 10) -> DataFrame:
+#: share of groups :func:`holdout_split` assigns to validation, in percent
+VAL_PCT = 10
+
+
+def holdout_split(df: DataFrame) -> DataFrame:
     """Leakage-free train/validation assignment: the md5-uniform split
     is keyed on the GROUP (host/source), never the document, so near-
     duplicate documents sharing a group can never straddle the split —
@@ -1307,7 +1338,7 @@ def holdout_split(df: DataFrame, val_pct: int = 10) -> DataFrame:
     Map-only (plan-literal threshold, no join, no shuffle, no RNG);
     returns (doc_id, source, split)."""
     u32 = "CAST(conv(substring(md5(source), 1, 8), 16, 10) AS BIGINT)"
-    thr = (val_pct * (1 << 32)) // 100
+    thr = (VAL_PCT * (1 << 32)) // 100
     return df.selectExpr(
         "CAST(doc_id AS BIGINT) AS doc_id",
         "source",

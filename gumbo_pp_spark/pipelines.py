@@ -22,38 +22,41 @@ from .operators.dedup import (
 from .operators.extract import extract_main_text
 from .operators.textstats import _quality_fail_expr, top_word_frac_e4_expr
 
+#: the corpus quality gate's alphabetic-character floor (its token
+#: floor is ``min_tokens``) and the repetition gate's ceiling on the
+#: most frequent word's share, both ×1e-4
+MIN_ALPHA_RATIO_E4 = 6000
+MAX_TOP_WORD_FRAC_E4 = 5000
+#: same-host documents a segment repeats in to be boilerplate
+BOILERPLATE_MIN_DOCS = 3
+#: the host gate: hosts with at least this many documents, of which
+#: more than this share (×1e-4) fail the quality gate, are dropped
+HOST_GATE_MIN_DOCS = 5
+HOST_GATE_MAX_BAD_FRAC_E4 = 5000
+
 
 def build_training_corpus(
     pages: DataFrame,
     min_tokens: int = 20,
-    min_alpha_ratio_e4: int = 6000,
     near_dup_min_equal: int = 7,
-    max_top_word_frac_e4: int = 5000,
     near_dup_policy: str = "pairs",
-    classifier_min_score: int | None = None,
-    robots: DataFrame | None = None,
-    robots_agent: str = "gumbobot",
-    transcode: bool = False,
     strip_boilerplate: bool = False,
-    boilerplate_min_docs: int = 3,
     host_gate: bool = False,
-    host_gate_min_docs: int = 5,
-    host_gate_max_bad_frac_e4: int = 5000,
 ) -> DataFrame:
     """pages(doc_id,url,html) → deduped, scrubbed, fingerprinted corpus
     (doc_id, url, clean_text, n_tokens, fp_md5).
 
-    Optional crawl-layer pre-stages: ``robots`` (a hosts-sized
-    ``(host, robots_txt)`` table) applies the RFC 9309 politeness gate
-    before anything else touches the bytes; ``transcode=True`` runs
-    the WHATWG charset sniff so non-UTF-8 crawl pages parse correctly.
+    Crawl-layer stages run before it: apply
+    :func:`~.operators.robots.robots_filter` (the RFC 9309 politeness
+    gate) or :func:`~.operators.encoding.sniff_and_transcode` (the
+    WHATWG charset sniff) to ``pages`` first.
 
     Optional per-host stages over the extracted text (each documented
     on its operator): ``strip_boilerplate`` removes segments repeating
-    across ≥ ``boilerplate_min_docs`` documents of the same host
+    across ≥ :data:`BOILERPLATE_MIN_DOCS` documents of the same host
     (site chrome) before any quality scoring; ``host_gate`` drops
     every document of hosts whose bad-document fraction exceeds
-    ``host_gate_max_bad_frac_e4`` (the domain blocklist).  Turning
+    :data:`HOST_GATE_MAX_BAD_FRAC_E4` (the domain blocklist).  Turning
     either on caches the extraction output — both are two-pass
     operators and the parse stage must not run per subplan.
 
@@ -63,6 +66,9 @@ def build_training_corpus(
     (two small keyed shuffles over survivors), then exact dedup (one
     digest shuffle), then MinHash-LSH near-dup (band-bucketed joins on
     the survivors only), PII scrub and fingerprints last (map-only).
+
+    Exact dedup keeps one document per distinct text: the smallest
+    ``doc_id``.  NULL contract: a row with a NULL ``doc_id`` is dropped.
 
     ``near_dup_policy`` picks the near-dup drop rule:
 
@@ -77,23 +83,6 @@ def build_training_corpus(
       RUNS Spark jobs at build time (O(log n) star-contraction
       rounds); the returned plan is lazy as usual afterwards.
     """
-    # crawl-layer pre-stages (both optional, both shuffle-free for the
-    # corpus): RFC 9309 politeness gate — hosts-sized robots table
-    # broadcast onto the pages — then WHATWG charset sniff/transcode
-    # (utf-8 pages pass through byte-identical) ahead of the parse
-    if robots is not None:
-        from .operators.robots import robots_filter
-
-        pages = (
-            robots_filter(pages, robots, agent=robots_agent)
-            .where("crawl_allowed")
-            .drop("crawl_allowed")
-        )
-    if transcode:
-        from .operators.encoding import sniff_and_transcode
-
-        pages = sniff_and_transcode(pages, passthrough=("doc_id", "url"))
-
     extracted = extract_main_text(pages, passthrough=("doc_id", "url"))
     docs = extracted.select("doc_id", "url", F.col("text"))
 
@@ -110,18 +99,18 @@ def build_training_corpus(
         from .operators.textstats import remove_boilerplate
 
         docs = remove_boilerplate(
-            docs, min_docs=boilerplate_min_docs, keep=("url", "host")
+            docs, min_docs=BOILERPLATE_MIN_DOCS, keep=("url", "host")
         ).select("doc_id", "url", "host", F.col("clean_text").alias("text"))
     if host_gate:
         from .operators.textstats import host_quality_gate
 
         docs = host_quality_gate(
             docs,
-            min_docs=host_gate_min_docs,
-            max_bad_frac_e4=host_gate_max_bad_frac_e4,
+            min_docs=HOST_GATE_MIN_DOCS,
+            max_bad_frac_e4=HOST_GATE_MAX_BAD_FRAC_E4,
             min_tokens=min_tokens,
             min_stopword_ratio_e4=0,
-            min_alpha_ratio_e4=min_alpha_ratio_e4,
+            min_alpha_ratio_e4=MIN_ALPHA_RATIO_E4,
         )
     if strip_boilerplate or host_gate:
         docs = docs.drop("host")
@@ -134,41 +123,25 @@ def build_training_corpus(
     # the extraction stage; guide §2.4 "remove shuffles outright").
     # ``NOT _quality_fail_expr`` is bit-identical to ``quality_filter``
     # including NULL semantics (a NULL ratio fails both forms).
-    docs = docs.where(
-        ~F.expr(
-            _quality_fail_expr(min_tokens, 0, min_alpha_ratio_e4)
-        )
-    )
-
-    # optional model gate: hashed linear classifier score as a plan-
-    # literal expression — a pure map-only filter, no join, no shuffle
-    if classifier_min_score is not None:
-        from .operators.textstats import classifier_score_sql
-
-        docs = docs.where(
-            F.expr(classifier_score_sql("text")) >= classifier_min_score
-        )
+    docs = docs.where(~F.expr(_quality_fail_expr(min_tokens, 0, MIN_ALPHA_RATIO_E4)))
 
     # repetition gate: drop degenerate/looping documents (a page whose
     # most frequent word is more than half its tokens).  Row-local
     # longest-equal-run form — same integer math as repetition_stats'
     # explode→groupBy, zero shuffle (guide §2.3 "aggregate before you
     # shuffle" taken to its limit: no shuffle at all).
-    docs = docs.where(
-        F.expr(top_word_frac_e4_expr("text")) <= max_top_word_frac_e4
-    )
+    docs = docs.where(F.expr(top_word_frac_e4_expr()) <= MAX_TOP_WORD_FRAC_E4)
 
-    # exact dedup: keep the minimum doc_id of each content group.
-    # One digest-keyed window exchange replaces the round-7
-    # groupBy+self-join (two exchanges + another duplicated parse
-    # subtree); survivors are identical (min doc_id per md5 group).
-    from pyspark.sql.window import Window
-
-    wd = Window.partitionBy(F.md5("text"))
+    # exact dedup: keep the minimum doc_id of each content group.  The
+    # min over (doc_id, url, text) structs is a digest-keyed aggregate,
+    # combined map-side, so one viral duplicate group reaches its
+    # reducer as one row per map task — a window partitioned by the
+    # digest would sort the whole group in one task.
     docs = (
-        docs.withColumn("_keep", F.min("doc_id").over(wd))
-        .where(F.col("doc_id") == F.col("_keep"))
-        .drop("_keep")
+        docs.where(F.col("doc_id").isNotNull())
+        .groupBy(F.md5("text").alias("_md5"))
+        .agg(F.min(F.struct("doc_id", "url", "text")).alias("_keep"))
+        .select("_keep.*")
     )
 
     # cache the gated/deduped docs: the near-dup stage reads them once
@@ -270,7 +243,6 @@ def run_training_corpus(
     out_dir: str,
     *,
     embeddings: DataFrame | None = None,
-    ann_queries: DataFrame | None = None,
     ann_recall_floor_e4: int | None = ANN_RECALL_FLOOR_E4,
     **corpus_kwargs,
 ) -> dict:
@@ -287,9 +259,9 @@ def run_training_corpus(
 
     Optional ANN-recall audit (the in-pipeline mirror of the LSH
     cap-accounting rule: no silent approximation): when ``embeddings``
-    (+ optionally ``ann_queries``, default a 16-row deterministic
-    sample) is supplied, the measured recall@k of the hyperplane-LSH
-    path vs the exact cosine baseline is computed on the SAME session
+    is supplied, the measured recall@k of the hyperplane-LSH
+    path vs the exact cosine baseline, over the 16 lowest ``vec_id``
+    queries, is computed on the SAME session
     and returned in the metrics — at 100 TB this is the cheap canary
     that the ANN configuration (dim/n_planes) still holds before any
     downstream consumer trusts bucketed neighbors.  If the measured
@@ -314,10 +286,7 @@ def run_training_corpus(
         if embeddings is not None:
             from .operators.similarity import lsh_recall_vs_exact
 
-            q = ann_queries
-            if q is None:
-                # deterministic small query sample: lowest 16 vec_ids
-                q = embeddings.orderBy("vec_id").limit(16)
+            q = embeddings.orderBy("vec_id").limit(16)
             row = lsh_recall_vs_exact(embeddings, q).collect()[0]
             ann_recall_e4 = int(row["recall_e4"])
             if ann_recall_floor_e4 is not None:

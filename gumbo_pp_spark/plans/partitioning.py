@@ -8,7 +8,7 @@ hash-by-host partitioning leaves stragglers.  Two explicit plans:
 * **host-skew salting** — detect heavy-hitter keys with a cheap
   aggregate, split each across ``ceil(share·n)`` salted sub-keys;
 * **size-balanced bins** — greedy first-fit-decreasing packing of
-  per-key byte totals into bins of ``target_bytes``, applied as a
+  per-key byte totals into bins of :data:`BIN_TARGET_BYTES`, applied as a
   broadcast-joined bin id used as the repartition key.
 
 Both compute a small driver-side plan (heavy keys / bin map are tiny
@@ -53,27 +53,30 @@ HOST_EXPR = "coalesce(try_parse_url(url, 'HOST'), '__null__')"
 MIN_SPLIT_BYTES = 256 << 10
 #: ``openCostInBytes`` set by :func:`tune_input_splits`
 OPEN_COST = 64 << 10
+#: partitions :func:`salt_skewed_keys` spreads to, and the multiple of
+#: the mean partition load above which a key is salted
+SALT_PARTITIONS = 64
+SKEW_FACTOR = 2.0
+#: html bytes per :func:`size_balanced_bins` bin
+BIN_TARGET_BYTES = 64 << 20
 
 
-def salt_skewed_keys(
-    df: DataFrame,
-    n_partitions: int = 64,
-    skew_factor: float = 2.0,
-) -> DataFrame:
+def salt_skewed_keys(df: DataFrame) -> DataFrame:
     """Add ``part_key`` (the url's host, :data:`HOST_EXPR`) and ``salt``
-    columns and repartition so no key's rows exceed ~``skew_factor``×
-    the mean partition load.
+    columns and repartition into :data:`SALT_PARTITIONS` partitions so
+    no key's rows exceed ~:data:`SKEW_FACTOR`× the mean partition load.
 
     Heavy-hitter sketch: one map-side-combined count per key (the key
     cardinality — hosts — is orders of magnitude below row count, so
     this aggregate is cheap and exact).  Heavy keys are split into
     ``ceil(count / target)`` salts via a deterministic row hash.
     """
+    n_partitions = SALT_PARTITIONS
     keyed = df.withColumn("part_key", F.expr(HOST_EXPR))
     counts = keyed.groupBy("part_key").count()
     total = df.count()
     mean = max(1.0, total / n_partitions)
-    threshold = skew_factor * mean
+    threshold = SKEW_FACTOR * mean
     # fanout targets the MEAN partition load so each salted sub-key is
     # an average-sized unit even after hash collisions
     heavy = {
@@ -96,10 +99,10 @@ def salt_skewed_keys(
     return salted.repartition(n_partitions, "part_key", "salt")
 
 
-def size_balanced_bins(df: DataFrame, target_bytes: int = 64 << 20) -> DataFrame:
-    """Repartition so each partition carries ≈``target_bytes`` of html,
-    keeping each url host (:data:`HOST_EXPR`) whole unless it alone
-    exceeds ``target_bytes``.
+def size_balanced_bins(df: DataFrame) -> DataFrame:
+    """Repartition so each partition carries ≈``target_bytes`` =
+    :data:`BIN_TARGET_BYTES` of html, keeping each url host
+    (:data:`HOST_EXPR`) whole unless it alone exceeds ``target_bytes``.
 
     Scale-safe plan (no whole-key-set collect — at CC scale there are
     ~10^8 hosts and a driver-side FFD over all of them is a bottleneck):
@@ -116,6 +119,7 @@ def size_balanced_bins(df: DataFrame, target_bytes: int = 64 << 20) -> DataFrame
     Arrow batches inside the parse UDF then see bounded byte budgets
     regardless of document-size heavy tails.
     """
+    target_bytes = BIN_TARGET_BYTES
     keyed = df.withColumn("part_key", F.expr(HOST_EXPR)).withColumn(
         "doc_bytes", F.length("html").cast("bigint")
     )

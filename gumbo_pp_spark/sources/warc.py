@@ -21,7 +21,7 @@ The reader, :func:`read_warc_cdx`, reads the (tiny) sidecar indexes
 distributed, buckets records into fixed-size range groups, and each
 task seek-reads only its members (local seek here; ranged GET on an
 object store — same access pattern).  Task size is
-``records_per_task`` regardless of file sizes, so one fat file cannot
+:data:`RECORDS_PER_TASK` records regardless of file sizes, so one fat file cannot
 skew the scan (``binaryFile``, which reads a whole file per task,
 would).
 
@@ -44,6 +44,10 @@ CRLF = b"\r\n"
 
 # reader output shape == input_hint page shape (url, warc_ts, html)
 WARC_FIELDS = "url string, warc_ts timestamp, html binary, warc_ok boolean"
+#: WARC files :func:`write_warc_corpus` writes, and the records one
+#: :func:`read_warc_cdx` task fetches
+N_WARC_FILES = 8
+RECORDS_PER_TASK = 2000
 
 
 # ----------------------------------------------------------------------
@@ -177,13 +181,15 @@ def _iter_file_records(blob: bytes) -> Iterator[tuple[str, object, bytes, bool]]
 # ----------------------------------------------------------------------
 # distributed sink
 # ----------------------------------------------------------------------
-def write_warc_corpus(pages: DataFrame, out_dir: str, n_files: int = 8) -> None:
-    """Write ``(doc_id, url, warc_ts, html)`` as ``n_files`` WARC files
-    + CDX sidecars.  File assignment is ``doc_id % n_files`` (content-
+def write_warc_corpus(pages: DataFrame, out_dir: str) -> None:
+    """Write ``(doc_id, url, warc_ts, html)`` as ``n_files`` =
+    :data:`N_WARC_FILES` WARC files + CDX sidecars.  File assignment is
+    ``doc_id % n_files`` (content-
     deterministic, NOT partition-id-dependent — re-running the job
     rewrites byte-identical files, the lineage/resume property).  Each
     file is written tmp+rename so readers never observe a torn file.
     """
+    n_files = N_WARC_FILES
     os.makedirs(out_dir, exist_ok=True)
     cols = pages.select("doc_id", "url", "warc_ts", "html") \
         .withColumn("_f", F.pmod(F.col("doc_id"), F.lit(n_files)))
@@ -237,11 +243,9 @@ def _records_batch(rows):
     )
 
 
-def read_warc_cdx(
-    spark: SparkSession, path: str, records_per_task: int = 2000
-) -> DataFrame:
+def read_warc_cdx(spark: SparkSession, path: str) -> DataFrame:
     """Skew-proof ranged-read WARC source: distribute the CDX sidecars,
-    bucket records into ``records_per_task`` groups, and seek-read only
+    bucket records into :data:`RECORDS_PER_TASK` groups, and seek-read only
     the addressed gzip members (ranged GET on an object store).  Task
     size is independent of WARC file sizes."""
     idx = (
@@ -262,7 +266,7 @@ def read_warc_cdx(
             F.floor(
                 (F.row_number().over(
                     Window.partitionBy("file").orderBy("offset")
-                ) - 1) / records_per_task
+                ) - 1) / RECORDS_PER_TASK
             ),
         )
     )
@@ -286,7 +290,7 @@ def read_warc_cdx(
             if rows:
                 yield _records_batch(rows)
 
-    # one shuffle on (file, grp) — each task fetches ~records_per_task
+    # one shuffle on (file, grp) — each task fetches ~RECORDS_PER_TASK
     # members; no full-file reads anywhere on this path
     n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
     return idx.repartition(n, "file", "grp").mapInArrow(fetch, WARC_FIELDS)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .operators import dedup as D
 from .operators import packing as P
 from .operators import similarity as S
+from .operators import sketches as SK
 from .operators import textstats as T
 from .operators.extract import (
     count_matches_program,
@@ -86,7 +87,7 @@ def _duck_simhash_pairs_sql() -> str:
         "SELECT CAST(x.doc_id AS BIGINT) AS a, CAST(y.doc_id AS BIGINT) AS b, "
         "CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming "
         "FROM s x JOIN s y ON x.doc_id < y.doc_id "
-        "WHERE bit_count(xor(x.simhash, y.simhash)) <= 2"
+        f"WHERE bit_count(xor(x.simhash, y.simhash)) <= {D.SIMHASH_MAX_HAMMING}"
     )
 
 
@@ -136,7 +137,7 @@ def _duck_minhash_between_cte() -> str:
 def _duck_minhash_cte(
     n_hashes: int = D.N_MINHASHES,
     n_bands: int = D.N_BANDS,
-    min_equal: int = 4,
+    min_equal: int = D.MIN_EQUAL,
 ) -> str:
     mh, bands = _duck_mh_bands(n_hashes, n_bands)
     eq = " + ".join(
@@ -146,7 +147,7 @@ def _duck_minhash_cte(
         f"WITH {_DUCK_SHINGLES}, "
         f"sig AS (SELECT doc_id, {mh} FROM sh GROUP BY doc_id), "
         f"bands AS ({bands}), "
-        # mirror of dedup.minhash_lsh_pairs bucket_cap
+        # mirror of dedup.minhash_lsh_pairs BUCKET_CAP
         f"small AS (SELECT band, bkey FROM bands GROUP BY band, bkey HAVING count(*) <= {D.BUCKET_CAP}), "
         "bandsf AS (SELECT b.* FROM bands b JOIN small USING (band, bkey)), "
         "cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id FROM bandsf x "
@@ -217,7 +218,7 @@ def _duck_semantic_dedup_sql() -> str:
         "FROM base b CROSS JOIN p) WHERE r = 1), "
         "dropped AS (SELECT DISTINCT y.vec_id AS b FROM assigned x "
         "JOIN assigned y USING (pivot_id) WHERE x.vec_id < y.vec_id "
-        "AND list_dot_product(x.v, y.v) / (x.norm * y.norm) >= 0.35) "
+        f"AND list_dot_product(x.v, y.v) / (x.norm * y.norm) >= {S.NEAR_DUP_COSINE}) "
         "SELECT CAST(a.vec_id AS BIGINT) AS vec_id, CAST(a.pivot_id AS BIGINT) AS pivot_id, "
         "(d.b IS NULL) AS keep FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.b"
     )
@@ -264,8 +265,8 @@ def _duck_lsh_stats_cte() -> str:
         f"bands AS ({bands}), "
         "sz AS (SELECT band, bkey, count(*) AS bn FROM bands GROUP BY band, bkey) "
         "SELECT CAST(count(*) AS BIGINT) AS n_buckets, "
-        "CAST(sum(CASE WHEN bn > 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_overfull, "
-        "CAST(sum(CASE WHEN bn > 64 THEN bn ELSE 0 END) AS BIGINT) AS members_in_overfull "
+        f"CAST(sum(CASE WHEN bn > {D.BUCKET_CAP} THEN 1 ELSE 0 END) AS BIGINT) AS n_overfull, "
+        f"CAST(sum(CASE WHEN bn > {D.BUCKET_CAP} THEN bn ELSE 0 END) AS BIGINT) AS members_in_overfull "
         "FROM sz"
     )
 
@@ -274,8 +275,8 @@ _DUCK_SHINGLE_STATS = (
     f"WITH {_DUCK_SHINGLES}, "
     "f AS (SELECT sh, count(*) AS df FROM sh GROUP BY sh) "
     "SELECT CAST(count(*) AS BIGINT) AS n_shingles, "
-    "CAST(sum(CASE WHEN df > 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_capped, "
-    "CAST(sum(CASE WHEN df > 64 THEN df ELSE 0 END) AS BIGINT) AS postings_capped "
+    f"CAST(sum(CASE WHEN df > {D.SHINGLE_DF_CAP} THEN 1 ELSE 0 END) AS BIGINT) AS n_capped, "
+    f"CAST(sum(CASE WHEN df > {D.SHINGLE_DF_CAP} THEN df ELSE 0 END) AS BIGINT) AS postings_capped "
     "FROM f"
 )
 
@@ -349,7 +350,7 @@ def _duck_near_dup_sql() -> str:
         "FROM a JOIN b ON a.block = b.block AND a.vec_id < b.vec_id) "
         "SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b, "
         "CAST(round(cos * 1000000) AS BIGINT) AS cos_e6 FROM p "
-        "WHERE cos >= 0.35"
+        f"WHERE cos >= {S.NEAR_DUP_COSINE}"
     )
 
 
@@ -456,7 +457,7 @@ def q_html_dom_stats(spark, sf_dir):
     from .operators.extract import dom_stats
 
     pages = synth_pages(spark, sf_dir)
-    out = dom_stats(pages, passthrough=("doc_id",))
+    out = dom_stats(pages)
     return out.select(F.col("doc_id").cast("bigint").alias("doc_id"),
                       "n_elements", "n_links", "text_chars",
                       "link_text_chars", "max_depth", "link_density_e4")
@@ -573,7 +574,7 @@ def q_html_selector_ir(spark, sf_dir):
 
 def q_html_table_scrape(spark, sf_dir):
     pages = synth_table_pages(spark, sf_dir)
-    return scrape_tables(pages, "important_table", passthrough=("doc_id",)) \
+    return scrape_tables(pages, "important_table") \
         .select(F.col("doc_id").cast("bigint").alias("doc_id"), "csv")
 
 
@@ -614,7 +615,7 @@ def q_html_tag_histogram(spark, sf_dir):
     # dataset-level node table: parse → explode → SQL aggregation over
     # nodes (the [D] level of SURVEY.md §2 mappings)
     pages = synth_pages(spark, sf_dir)
-    nodes = explode_nodes(pages, passthrough=("doc_id",))
+    nodes = explode_nodes(pages)
     return (
         nodes.where(F.col("tag") != "")
         .groupBy("tag")
@@ -628,7 +629,7 @@ def q_html_first_div_content(spark, sf_dir):
     # node_id; subtree ≡ interval containment; content_text ≡ ordered
     # string-agg of text-like rows in the interval)
     pages = synth_pages(spark, sf_dir)
-    explode_nodes(pages, passthrough=("doc_id",)).createOrReplaceTempView("nodes")
+    explode_nodes(pages).createOrReplaceTempView("nodes")
     return spark.sql(
         """
         WITH first_div AS (
@@ -801,7 +802,7 @@ def q_dedup_exact(spark, sf_dir):
 
 
 def q_dedup_jaccard(spark, sf_dir):
-    return D.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5, min_shared=5)
+    return D.ngram_jaccard_pairs(_docs(spark, sf_dir))
 
 
 def q_dedup_minhash(spark, sf_dir):
@@ -855,9 +856,7 @@ def q_dedup_lsh_between(spark, sf_dir):
 def q_dedup_verified(spark, sf_dir):
     # candidate -> exact-verify: LSH prunes, exact shingle Jaccard
     # decides (the 100 TB dedup decision shape)
-    return D.minhash_verified_pairs(
-        _docs(spark, sf_dir), min_equal=4, min_jaccard_e4=5000
-    )
+    return D.minhash_verified_pairs(_docs(spark, sf_dir))
 
 
 def q_dedup_canonical(spark, sf_dir):
@@ -877,7 +876,7 @@ def q_decontaminate(spark, sf_dir):
     evals = docs.where(F.col("doc_id") % 41 == 0).select(
         F.concat_ws(" ", F.slice(F.split("text", " "), 5, 36)).alias("text")
     )
-    return T.contamination(docs, evals, n=13)
+    return T.contamination(docs, evals)
 
 
 # sentence-structured corpus for the sentence-level decontamination
@@ -900,37 +899,35 @@ def q_decontaminate_sentences(spark, sf_dir):
     evals = _docs(spark, sf_dir).where(F.col("doc_id") % 37 == 0).select(
         F.concat_ws(" ", F.slice(F.split("text", " "), 17, 8)).alias("text")
     )
-    return T.decontaminate_sentences(docs, evals, n=8)
+    return T.decontaminate_sentences(docs, evals)
 
 
 def q_repeated_windows(spark, sf_dir):
     # exact-substring repetition (windowed suffix-array approximation,
     # Lee et al. 2022): 20-word windows shared across >= 2 docs
-    return T.repeated_windows(_docs(spark, sf_dir), width=20)
+    return T.repeated_windows(_docs(spark, sf_dir))
 
 
 def q_repeated_spans(spark, sf_dir):
-    return T.repeated_spans(_docs(spark, sf_dir), width=20)
+    return T.repeated_spans(_docs(spark, sf_dir))
 
 
 def q_repeated_window_stats(spark, sf_dir):
     # no-silent-caps accounting for the repeated-windows df_cap
-    return T.repeated_window_stats(_docs(spark, sf_dir), width=20)
+    return T.repeated_window_stats(_docs(spark, sf_dir))
 
 
 def q_oov_stats(spark, sf_dir):
     # deterministic perplexity-bucketing cousin: OOV share vs the
-    # corpus' own top-16 vocabulary (synthetic corpus has 31 distinct
-    # words; 16 puts the cut at a tie-free boundary)
-    return T.oov_stats(_docs(spark, sf_dir), vocab_size=16)
+    # corpus' own top-VOCAB_SIZE vocabulary
+    return T.oov_stats(_docs(spark, sf_dir))
 
 
 def q_lm_coverage(spark, sf_dir):
     # integer-exact CCNet-perplexity stand-in: bigram-LM coverage vs
-    # the corpus' own top-64 bigram model (the ~960-bigram synthetic
-    # vocabulary makes a 64-bigram LM selective; ties at the cut break
+    # the corpus' own top-LM_SIZE bigram model (ties at the cut break
     # lexicographically on both engines)
-    return T.lm_coverage(_docs(spark, sf_dir), lm_size=64)
+    return T.lm_coverage(_docs(spark, sf_dir))
 
 
 # gopher-rules fixture: the 8-word sentence corpus with deterministic
@@ -949,15 +946,12 @@ _GOPHER_TEXT_EXPR = (
 
 
 def q_gopher_rules(spark, sf_dir):
-    # the synthetic vocabulary carries only 'the' of the Gopher
-    # stopword panel -> min_stopwords=1 keeps the verdict driven by the
-    # other rules (length / ellipsis fractions vary per doc)
+    # GOPHER_MIN_STOPWORDS = 1 keeps the verdict driven by the other
+    # rules (length / ellipsis fractions vary per doc)
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", f"{_GOPHER_TEXT_EXPR} AS text"
     )
-    return T.gopher_rules(
-        docs, line_sep_regex="[.] ", min_words=40, min_stopwords=1
-    )
+    return T.gopher_rules(docs)
 
 
 def q_mirror_hosts(spark, sf_dir):
@@ -969,7 +963,7 @@ def q_mirror_hosts(spark, sf_dir):
         f"{_HOSTED_EXPR} AS host",
         "'shared content block ' || CAST(doc_id % 13 AS STRING) AS text",
     )
-    return T.mirror_hosts(docs, min_shared=3)
+    return T.mirror_hosts(docs)
 
 
 def q_remove_boilerplate(spark, sf_dir):
@@ -989,7 +983,7 @@ def q_select_token_budget(spark, sf_dir):
     # greedy corpus assembly: highest-LM-coverage docs until a 15k
     # token budget is exhausted (boundary-score tie handling exercised)
     docs = _docs(spark, sf_dir)
-    cov = T.lm_coverage(docs, lm_size=64).select(
+    cov = T.lm_coverage(docs).select(
         "doc_id", F.col("coverage_e4").alias("score")
     )
     scored = docs.join(cov, "doc_id").select("doc_id", "score", "text")
@@ -1012,12 +1006,10 @@ def q_corpus_report(spark, sf_dir):
 
 
 def q_vocab_drift(spark, sf_dir):
-    # drift monitor between the two halves of the corpus (top-16 union
-    # vocabulary + per-side OOV bucket; TV distance integer-exact)
+    # drift monitor between the two halves of the corpus (top-VOCAB_SIZE
+    # union vocabulary + per-side OOV bucket; TV distance integer-exact)
     docs = _docs(spark, sf_dir)
-    return T.vocab_drift(
-        docs.where("doc_id < 250"), docs.where("doc_id >= 250"), vocab_size=16
-    )
+    return T.vocab_drift(docs.where("doc_id < 250"), docs.where("doc_id >= 250"))
 
 
 def q_simhash(spark, sf_dir):
@@ -1025,14 +1017,14 @@ def q_simhash(spark, sf_dir):
 
 
 def q_lsh_bucket_stats(spark, sf_dir):
-    # no-silent-caps accounting for the minhash bucket_cap (how much
+    # no-silent-caps accounting for the minhash BUCKET_CAP (how much
     # candidate mass the hot-bucket drop removed)
-    return D.lsh_bucket_stats(_docs(spark, sf_dir), bucket_cap=64)
+    return D.lsh_bucket_stats(_docs(spark, sf_dir))
 
 
 def q_shingle_df_stats(spark, sf_dir):
-    # no-silent-caps accounting for the jaccard df_cap
-    return D.shingle_df_stats(_docs(spark, sf_dir), df_cap=64)
+    # no-silent-caps accounting for the jaccard SHINGLE_DF_CAP
+    return D.shingle_df_stats(_docs(spark, sf_dir))
 
 
 def q_ann_cosine(spark, sf_dir):
@@ -1044,7 +1036,7 @@ def q_ann_cosine(spark, sf_dir):
 def q_simhash_pairs(spark, sf_dir):
     # near-dup pairs by simhash hamming distance over 3-band candidates
     # (exact for hamming<=2 by pigeonhole → matches the all-pairs oracle)
-    return D.simhash_pairs(_docs(spark, sf_dir), max_hamming=2)
+    return D.simhash_pairs(_docs(spark, sf_dir))
 
 
 def q_ann_lsh(spark, sf_dir):
@@ -1060,7 +1052,7 @@ def q_ann_lsh_recall(spark, sf_dir):
     # ANN rollout gate, recomputed bit-for-bit by the oracle
     emb = _tbl(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return S.lsh_recall_vs_exact(emb, queries, k=3, dim=64, n_planes=4)
+    return S.lsh_recall_vs_exact(emb, queries, dim=64, n_planes=4)
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -1076,7 +1068,7 @@ def q_ann_ivf_recall(spark, sf_dir):
     emb = _tbl(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     pivots = emb.where(F.col("vec_id") % 25 == 7)
-    return S.ivf_recall_vs_exact(emb, queries, pivots, k=3, nprobe=2)
+    return S.ivf_recall_vs_exact(emb, queries, pivots)
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -1088,16 +1080,13 @@ def q_multimodal_features(spark, sf_dir):
 
 
 def q_embedding_near_dup(spark, sf_dir):
-    # embedding-cosine near-dup pairs (threshold tuned to the synthetic
-    # random-vector corpus: max pairwise cosine ≈ 0.44)
-    return S.cosine_near_dup_pairs(_tbl(spark, sf_dir, "embeddings"), threshold=0.35)
+    # embedding-cosine near-dup pairs at similarity.NEAR_DUP_COSINE
+    return S.cosine_near_dup_pairs(_tbl(spark, sf_dir, "embeddings"))
 
 
 def q_length_quantiles(spark, sf_dir):
     # exact token-length quantiles from the length histogram - no
     # global sort, no driver collect
-    from .operators import sketches as SK
-
     return SK.length_quantiles(_docs(spark, sf_dir))
 
 
@@ -1116,8 +1105,6 @@ def q_grouped_quantiles(spark, sf_dir):
     # per-source length profiles (mixture-calibration input); window
     # partitioned by group — no single-partition stage at any group
     # count
-    from .operators import sketches as SK
-
     return SK.grouped_length_quantiles(
         _docs(spark, sf_dir), group_col="source", probs_e2=(50, 90)
     )
@@ -1315,7 +1302,7 @@ def q_robots_gate(spark, sf_dir):
         "User-agent: *\nDisallow: /\n"
     )
     robots = hosts.withColumn("robots_txt", F.lit(txt))
-    out = robots_filter(pages, robots, agent="gumbobot/1.0")
+    out = robots_filter(pages, robots)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "url", "crawl_allowed"
     )
@@ -1340,7 +1327,7 @@ def q_crawl_schedule(spark, sf_dir):
             "'\\nDisallow: /private\\n\\nUser-agent: *\\nDisallow: /\\n')"
         ),
     )
-    return crawl_schedule(robots, agent="gumbobot/1.0", window_sec=60)
+    return crawl_schedule(robots)
 
 
 def q_shard_frontier(spark, sf_dir):
@@ -1367,7 +1354,7 @@ def q_shard_frontier(spark, sf_dir):
             "'\\nDisallow: /private\\n\\nUser-agent: *\\nDisallow: /\\n')"
         ),
     )
-    sched = crawl_schedule(robots, agent="gumbobot/1.0", window_sec=60)
+    sched = crawl_schedule(robots)
     return shard_frontier(pages, sched)
 
 
@@ -1386,7 +1373,7 @@ def q_sitemap_frontier(spark, sf_dir):
             "User-agent: *\nDisallow: /\n"
         ).alias("robots_txt"),
     )
-    out = robots_filter(entries, robots, agent="gumbobot/1.0", url_col="loc")
+    out = robots_filter(entries, robots, url_col="loc")
     return out.select("host", "loc", "lastmod", "priority", "crawl_allowed")
 
 
@@ -1443,7 +1430,7 @@ def q_html_density_extract(spark, sf_dir):
     # nav/footer excluded before scoring.
     from .operators.extract import density_extract
 
-    out = density_extract(synth_pages(spark, sf_dir), passthrough=("doc_id",))
+    out = density_extract(synth_pages(spark, sf_dir))
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "block_tag",
@@ -1507,7 +1494,7 @@ def q_warc_extract(spark, sf_dir):
     )
     marker = os.path.join(out_dir, "_SUCCESS")
     if not os.path.exists(marker):
-        write_warc_corpus(synth_pages(spark, sf_dir), out_dir, n_files=8)
+        write_warc_corpus(synth_pages(spark, sf_dir), out_dir)
         with open(marker, "w") as f:
             f.write("")
     pages = read_warc_cdx(spark, out_dir).filter("warc_ok")
@@ -1543,11 +1530,11 @@ def q_pagerank(spark, sf_dir):
         .join(docs.selectExpr("doc_id AS dst"), F.col("dst_key") == F.col("dst"))
         .select("src", "dst")
     )
-    return G.pagerank(edges, n_iter=3)
+    return G.pagerank(edges)
 
 
 def _duck_pagerank_sql() -> str:
-    from .operators.graph import DAMPING_E2, RANK_SCALE
+    from .operators.graph import DAMPING_E2, N_ITER, RANK_SCALE
 
     base = (100 - DAMPING_E2) * RANK_SCALE // 100
     sql = (
@@ -1558,7 +1545,7 @@ def _duck_pagerank_sql() -> str:
         f"r0 AS (SELECT node, CAST({RANK_SCALE} AS BIGINT) AS rank FROM nodes)"
     )
     prev = "r0"
-    for i in range(1, 4):
+    for i in range(1, N_ITER + 1):
         sql += (
             f", c{i} AS (SELECT e.dst, SUM(r.rank // o.deg) AS s FROM edges e "
             f"JOIN outdeg o ON o.node = e.src JOIN {prev} r ON r.node = e.src GROUP BY e.dst)"
@@ -1580,37 +1567,39 @@ def q_hits(spark, sf_dir):
         .join(docs.selectExpr("doc_id AS dst"), F.col("dst_key") == F.col("dst"))
         .select("src", "dst")
     )
-    return G.hits(edges, n_iter=3)
+    return G.hits(edges)
 
 
 def _duck_hits_sql() -> str:
-    # 3 passes at graph.hits' 1e6 scale
+    # graph.hits' N_ITER passes at its HITS_SCALE
+    from .operators.graph import HITS_SCALE, N_ITER
+
     sql = (
         "WITH edges AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM documents a "
         "JOIN documents b ON b.doc_id = (a.doc_id * 17 + 3) % 512), "
         "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges), "
-        "h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes)"
+        f"h0 AS (SELECT node, CAST({HITS_SCALE} AS BIGINT) AS h FROM nodes)"
     )
     ph = "h0"
-    for i in range(1, 4):
+    for i in range(1, N_ITER + 1):
         sql += (
             f", ar{i} AS (SELECT e.dst AS node, CAST(SUM(x.h) AS BIGINT) AS a "
             f"FROM edges e JOIN {ph} x ON x.node = e.src GROUP BY e.dst)"
             f", am{i} AS (SELECT COALESCE(MAX(a), 1) AS m FROM ar{i})"
-            f", a{i} AS (SELECT n.node, CAST(COALESCE(r.a, 0) * 1000000 // m AS BIGINT) AS a "
+            f", a{i} AS (SELECT n.node, CAST(COALESCE(r.a, 0) * {HITS_SCALE} // m AS BIGINT) AS a "
             f"FROM nodes n LEFT JOIN ar{i} r ON n.node = r.node, am{i})"
             f", hr{i} AS (SELECT e.src AS node, CAST(SUM(x.a) AS BIGINT) AS h "
             f"FROM edges e JOIN a{i} x ON x.node = e.dst GROUP BY e.src)"
             f", hm{i} AS (SELECT COALESCE(MAX(h), 1) AS m FROM hr{i})"
-            f", h{i} AS (SELECT n.node, CAST(COALESCE(r.h, 0) * 1000000 // m AS BIGINT) AS h "
+            f", h{i} AS (SELECT n.node, CAST(COALESCE(r.h, 0) * {HITS_SCALE} // m AS BIGINT) AS h "
             f"FROM nodes n LEFT JOIN hr{i} r ON n.node = r.node, hm{i})"
         )
         ph = f"h{i}"
     return sql + (
-        " SELECT CAST(n.node AS BIGINT) AS node, h3.h AS hub, "
-        "a3.a AS authority FROM nodes n "
-        "JOIN h3 ON n.node = h3.node "
-        "JOIN a3 ON n.node = a3.node"
+        f" SELECT CAST(n.node AS BIGINT) AS node, h{N_ITER}.h AS hub, "
+        f"a{N_ITER}.a AS authority FROM nodes n "
+        f"JOIN h{N_ITER} ON n.node = h{N_ITER}.node "
+        f"JOIN a{N_ITER} ON n.node = a{N_ITER}.node"
     )
 
 
@@ -1646,15 +1635,13 @@ def q_top_docs_per_source(spark, sf_dir):
 def q_kmv_distinct(spark, sf_dir):
     # bottom-k distinct-count sketch over the token stream (k=16 of a
     # 31-word vocabulary: the estimator genuinely extrapolates)
-    from .operators import sketches as SK
-
     return SK.kmv_distinct(_docs(spark, sf_dir))
 
 
 _DUCK_KMV = (
     "WITH toks AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents), "
     "h AS (SELECT DISTINCT ('0x' || substr(md5(word), 1, 8))::BIGINT AS h FROM toks), "
-    "b AS (SELECT h FROM h ORDER BY h LIMIT 16) "
+    f"b AS (SELECT h FROM h ORDER BY h LIMIT {SK.KMV_K}) "
     "SELECT CAST(count(*) AS BIGINT) AS k_used, CAST(max(h) AS BIGINT) AS kth_hash, "
     "CAST((count(*) - 1) * 4294967296 // max(h) AS BIGINT) AS est_distinct FROM b"
 )
@@ -1664,22 +1651,20 @@ def q_cms_heavy_hitters(spark, sf_dir):
     # Count-Min sketch heavy hitters; width 16 over a 31-word synthetic
     # vocabulary so counter collisions genuinely occur and the
     # one-sided (est >= true) error is exercised, not just mirrored
-    from .operators import sketches as SK
-
     return SK.cms_heavy_hitters(_docs(spark, sf_dir))
 
 
 def _duck_cms_sql() -> str:
-    # sketches.cms_heavy_hitters' defaults: width 16, depth 3, min_count 100
+    # sketches.cms_heavy_hitters: CMS_WIDTH, CMS_DEPTH, CMS_MIN_COUNT
     def bucket(r: int) -> str:
-        return f"('0x' || substr(md5('{r}|' || word), 1, 8))::BIGINT % 16"
+        return f"('0x' || substr(md5('{r}|' || word), 1, 8))::BIGINT % {SK.CMS_WIDTH}"
 
     stacked = " UNION ALL ".join(
-        f"SELECT {r} AS row, {bucket(r)} AS bucket FROM toks" for r in range(3)
+        f"SELECT {r} AS row, {bucket(r)} AS bucket FROM toks" for r in range(SK.CMS_DEPTH)
     )
     probes = " UNION ALL ".join(
         f"SELECT word, {r} AS row, {bucket(r)} AS bucket FROM words"
-        for r in range(3)
+        for r in range(SK.CMS_DEPTH)
     )
     return (
         "WITH toks AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents), "
@@ -1688,7 +1673,7 @@ def _duck_cms_sql() -> str:
         "words AS (SELECT DISTINCT word FROM toks), "
         f"probes AS ({probes}), "
         "est AS (SELECT word, min(cnt) AS est FROM probes JOIN sketch USING (row, bucket) GROUP BY word) "
-        "SELECT word, CAST(est AS BIGINT) AS est FROM est WHERE est >= 100"
+        f"SELECT word, CAST(est AS BIGINT) AS est FROM est WHERE est >= {SK.CMS_MIN_COUNT}"
     )
 
 
@@ -1720,7 +1705,7 @@ def q_semantic_dedup(spark, sf_dir):
     # cosine ≈ 0.49 at sf0.01, 68 over-threshold pairs)
     emb = _tbl(spark, sf_dir, "embeddings")
     pivots = emb.where(F.col("vec_id") % 25 == 7)
-    return S.semantic_dedup(emb, pivots, threshold=0.35)
+    return S.semantic_dedup(emb, pivots)
 
 
 def q_quality(spark, sf_dir):
@@ -1749,8 +1734,7 @@ def q_scrub_pii(spark, sf_dir):
 
 
 def q_quality_filter(spark, sf_dir):
-    return T.quality_filter(_docs(spark, sf_dir), min_tokens=40,
-                            min_stopword_ratio_e4=100, min_alpha_ratio_e4=7000)
+    return T.quality_filter(_docs(spark, sf_dir))
 
 
 def q_fingerprints(spark, sf_dir):
@@ -1787,9 +1771,7 @@ def q_canonical_urls(spark, sf_dir):
 
 def q_sample_by_hash(spark, sf_dir):
     # deterministic 10% evaluation slice (md5-domain uniform, no RNG)
-    return T.sample_by_hash(
-        _docs(spark, sf_dir).select("doc_id", "n_chars"), rate_e4=1000
-    ).select(
+    return T.sample_by_hash(_docs(spark, sf_dir).select("doc_id", "n_chars")).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("n_chars").cast("bigint").alias("n_chars"),
     )
@@ -1813,7 +1795,7 @@ def q_cap_per_host(spark, sf_dir):
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", "source || '.example.com' AS host"
     )
-    return T.cap_per_host(docs, cap=15).select(
+    return T.cap_per_host(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "host"
     )
 
@@ -1849,9 +1831,9 @@ def q_host_quality_stats(spark, sf_dir):
     # as q_quality_filter so the family is internally consistent)
     return T.host_quality_stats(
         _hosted_docs(spark, sf_dir),
-        min_tokens=40,
-        min_stopword_ratio_e4=100,
-        min_alpha_ratio_e4=7000,
+        min_tokens=T.QUALITY_MIN_TOKENS,
+        min_stopword_ratio_e4=T.QUALITY_MIN_STOPWORD_RATIO_E4,
+        min_alpha_ratio_e4=T.QUALITY_MIN_ALPHA_RATIO_E4,
     )
 
 
@@ -1862,9 +1844,9 @@ def q_host_quality_gate(spark, sf_dir):
         _hosted_docs(spark, sf_dir),
         min_docs=3,
         max_bad_frac_e4=3500,
-        min_tokens=40,
-        min_stopword_ratio_e4=100,
-        min_alpha_ratio_e4=7000,
+        min_tokens=T.QUALITY_MIN_TOKENS,
+        min_stopword_ratio_e4=T.QUALITY_MIN_STOPWORD_RATIO_E4,
+        min_alpha_ratio_e4=T.QUALITY_MIN_ALPHA_RATIO_E4,
     )
     return out.select(F.col("doc_id").cast("bigint").alias("doc_id"), "host")
 
@@ -2033,20 +2015,20 @@ def q_events_sessions(spark, sf_dir):
 
 
 def q_pack_sequences(spark, sf_dir):
-    # GPT-style concat-and-split packing: seq_len 64 so the synthetic
-    # docs span sequence cuts; 8 shards = 8 independent token streams
-    # (the scale story — no global sort, shard-partitioned prefix sum)
-    return P.pack_sequences(_docs(spark, sf_dir), seq_len=64, n_shards=8)
+    # GPT-style concat-and-split packing: PACK_SHARDS independent token
+    # streams (the scale story — no global sort, shard-partitioned
+    # prefix sum)
+    return P.pack_sequences(_docs(spark, sf_dir))
 
 
 def q_chunk_tokens(spark, sf_dir):
     # overlapping RAG/embedding chunks: width 12, stride 8 → 4-token
     # overlap; map-only explode
-    return P.chunk_tokens(_docs(spark, sf_dir), width=12, stride=8)
+    return P.chunk_tokens(_docs(spark, sf_dir))
 
 
 def q_tfidf_top_terms(spark, sf_dir):
-    return T.tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    return T.tfidf_top_terms(_docs(spark, sf_dir))
 
 
 def q_importance_sample(spark, sf_dir):
@@ -2063,7 +2045,7 @@ def q_decontaminate_fuzzy(spark, sf_dir):
         F.col("doc_id").alias("eval_id"),
         F.concat_ws(" ", F.slice(F.split("text", " "), 5, 36)).alias("text"),
     )
-    return D.minhash_contamination(docs, evals, min_equal=4)
+    return D.minhash_contamination(docs, evals)
 
 
 def _duck_fuzzy_contamination_sql() -> str:
@@ -2107,7 +2089,7 @@ def _duck_fuzzy_contamination_sql() -> str:
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, "
         "CAST(count(*) AS BIGINT) AS n_eval_matches, "
         "CAST(max(n_eq) AS BIGINT) AS max_n_eq "
-        "FROM m WHERE n_eq >= 4 GROUP BY doc_id"
+        f"FROM m WHERE n_eq >= {D.MIN_EQUAL} GROUP BY doc_id"
     )
 
 
@@ -2251,15 +2233,15 @@ _DUCK_LANG_CASE = (
     "ELSE 'fr' END"
 )
 
-# doc-level bad flag shared by the host_quality_* oracles (thresholds
-# 40 / 100 / 7000 — the q_quality_filter family settings)
+# doc-level bad flag shared by the host_quality_* and corpus_report
+# oracles (the textstats.QUALITY_* thresholds)
 _DUCK_IS_BAD = (
-    "(len(string_split(text, ' ')) < 40 "
+    f"(len(string_split(text, ' ')) < {T.QUALITY_MIN_TOKENS} "
     "OR round(10000.0 * len(list_filter(string_split(text, ' '), "
     "w -> w IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'on', 'for'))) "
-    "/ len(string_split(text, ' '))) < 100 "
+    f"/ len(string_split(text, ' '))) < {T.QUALITY_MIN_STOPWORD_RATIO_E4} "
     "OR round(10000.0 * length(regexp_replace(text, '[^a-z]', '', 'g')) "
-    "/ length(text)) < 7000)"
+    f"/ length(text)) < {T.QUALITY_MIN_ALPHA_RATIO_E4})"
 )
 
 ORACLES: dict[str, str] = {
@@ -2409,18 +2391,18 @@ ORACLES: dict[str, str] = {
     ),
     "dedup_ngram_jaccard": (
         f"WITH {_DUCK_SHINGLES}, "
-        # mirror of dedup.ngram_jaccard_pairs df_cap=64
-        "rare AS (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= 64), "
+        # mirror of dedup.ngram_jaccard_pairs
+        f"rare AS (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= {D.SHINGLE_DF_CAP}), "
         "shc AS (SELECT s.doc_id, s.sh FROM sh s JOIN rare USING (sh)), "
         "sizes AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id), "
         "shared AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared "
         "FROM shc a JOIN shc b ON a.sh = b.sh AND a.doc_id < b.doc_id "
-        "GROUP BY a.doc_id, b.doc_id HAVING count(*) >= 5) "
+        f"GROUP BY a.doc_id, b.doc_id HAVING count(*) >= {D.JACCARD_MIN_SHARED}) "
         "SELECT CAST(a_id AS BIGINT) AS a, CAST(b_id AS BIGINT) AS b, "
         "CAST(round(10000.0 * shared / (sa.n_sh + sb.n_sh - shared)) AS BIGINT) AS jaccard_e4 "
         "FROM shared JOIN sizes sa ON shared.a_id = sa.doc_id "
         "JOIN sizes sb ON shared.b_id = sb.doc_id "
-        "WHERE 1.0 * shared / (sa.n_sh + sb.n_sh - shared) >= 0.5"
+        f"WHERE 1.0 * shared / (sa.n_sh + sb.n_sh - shared) >= {D.JACCARD_THRESHOLD}"
     ),
     "dedup_minhash_lsh": _duck_minhash_cte(),
     "dedup_minhash_lsh32": _duck_minhash_cte(n_hashes=32, n_bands=8, min_equal=16),
@@ -2445,7 +2427,7 @@ ORACLES: dict[str, str] = {
         "CAST(round(10000.0 * i.n_shared / (za.nsh + zb.nsh - i.n_shared)) AS BIGINT) "
         "AS jaccard_e4 FROM inter i "
         "JOIN sizes za ON za.doc_id = i.a JOIN sizes zb ON zb.doc_id = i.b) "
-        "SELECT a, b, n_shared, jaccard_e4 FROM scored WHERE jaccard_e4 >= 5000"
+        f"SELECT a, b, n_shared, jaccard_e4 FROM scored WHERE jaccard_e4 >= {D.VERIFY_MIN_JACCARD_E4}"
     ),
     "dedup_components": _duck_components_sql(),
     "component_stats": (
@@ -2458,29 +2440,29 @@ ORACLES: dict[str, str] = {
     "dedup_canonical": _duck_canonical_sql(),
     "repeated_windows": (
         "WITH ws AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents "
-        "WHERE len(string_split(text, ' ')) >= 20), "
-        "flat AS (SELECT doc_id, md5(array_to_string(ws[j:j+19], ' ')) AS wh "
-        "FROM ws, unnest(generate_series(1, len(ws) - 19)) AS t(j)) "
+        f"WHERE len(string_split(text, ' ')) >= {T.WINDOW_WORDS}), "
+        f"flat AS (SELECT doc_id, md5(array_to_string(ws[j:j+{T.WINDOW_WORDS - 1}], ' ')) AS wh "
+        f"FROM ws, unnest(generate_series(1, len(ws) - {T.WINDOW_WORDS - 1})) AS t(j)) "
         "SELECT wh, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs, "
         "CAST(count(*) AS BIGINT) AS n_occurrences "
         "FROM flat GROUP BY wh "
-        "HAVING count(DISTINCT doc_id) >= 2 AND count(*) <= 1024"
+        f"HAVING count(DISTINCT doc_id) >= 2 AND count(*) <= {T.DF_CAP}"
     ),
     "repeated_spans": (
         "WITH ws AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents "
-        "WHERE len(string_split(text, ' ')) >= 20), "
+        f"WHERE len(string_split(text, ' ')) >= {T.WINDOW_WORDS}), "
         "flat AS (SELECT doc_id, j - 1 AS pos, "
-        "md5(array_to_string(ws[j:j+19], ' ')) AS wh "
-        "FROM ws, unnest(generate_series(1, len(ws) - 19)) AS t(j)), "
+        f"md5(array_to_string(ws[j:j+{T.WINDOW_WORDS - 1}], ' ')) AS wh "
+        f"FROM ws, unnest(generate_series(1, len(ws) - {T.WINDOW_WORDS - 1})) AS t(j)), "
         "rep AS (SELECT wh FROM flat GROUP BY wh "
-        "HAVING count(DISTINCT doc_id) >= 2 AND count(*) <= 1024) "
+        f"HAVING count(DISTINCT doc_id) >= 2 AND count(*) <= {T.DF_CAP}) "
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(pos AS BIGINT) AS pos, "
         "flat.wh AS wh FROM flat JOIN rep USING (wh)"
     ),
     "oov_stats": (
         "WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents), "
         "c AS (SELECT word, count(*) AS n FROM w GROUP BY word), "
-        "v AS (SELECT word FROM c ORDER BY n DESC, word LIMIT 16), "
+        f"v AS (SELECT word FROM c ORDER BY n DESC, word LIMIT {T.VOCAB_SIZE}), "
         "t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents) "
         "SELECT CAST(t.doc_id AS BIGINT) AS doc_id, "
         "CAST(count(*) AS BIGINT) AS n_tokens, "
@@ -2489,14 +2471,14 @@ ORACLES: dict[str, str] = {
         "AS oov_ratio_e4 FROM t LEFT JOIN v ON t.word = v.word GROUP BY t.doc_id"
     ),
     "lm_coverage": (
-        # top-64 corpus bigram LM; coverage = known-bigram share
+        # top-LM_SIZE corpus bigram LM; coverage = known-bigram share
         # (mirror of q_lm_coverage)
         "WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents "
         "WHERE len(string_split(text, ' ')) >= 2), "
         "bg AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 1), "
         "j -> ws[j] || ' ' || ws[j+1])) AS bigram FROM w), "
         "c AS (SELECT bigram, count(*) AS n FROM bg GROUP BY bigram), "
-        "lm AS (SELECT bigram, n FROM c ORDER BY n DESC, bigram LIMIT 64), "
+        f"lm AS (SELECT bigram, n FROM c ORDER BY n DESC, bigram LIMIT {T.LM_SIZE}), "
         "j AS (SELECT bg.doc_id, lm.n FROM bg LEFT JOIN lm USING (bigram)) "
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, "
         "CAST(count(*) AS BIGINT) AS n_bigrams, "
@@ -2548,15 +2530,18 @@ ORACLES: dict[str, str] = {
         "(CASE WHEN list_contains(ws, 'have') THEN 1 ELSE 0 END) + "
         "(CASE WHEN list_contains(ws, 'with') THEN 1 ELSE 0 END) AS BIGINT) AS n_stopwords_present "
         "FROM m) "
-        "SELECT *, CAST(CASE WHEN n_words >= 40 AND n_words <= 100000 "
-        "AND mean_word_len_e4 >= 30000 AND mean_word_len_e4 <= 100000 "
-        "AND symbol_ratio_e4 <= 1000 AND bullet_frac_e4 <= 9000 "
-        "AND ellipsis_frac_e4 <= 3000 AND alpha_word_frac_e4 >= 8000 "
-        "AND n_stopwords_present >= 1 THEN 1 ELSE 0 END AS BIGINT) AS gopher_pass "
+        f"SELECT *, CAST(CASE WHEN n_words >= {T.GOPHER_MIN_WORDS} AND n_words <= {T.GOPHER_MAX_WORDS} "
+        f"AND mean_word_len_e4 >= {T.GOPHER_MIN_MEAN_WORD_LEN_E4} "
+        f"AND mean_word_len_e4 <= {T.GOPHER_MAX_MEAN_WORD_LEN_E4} "
+        f"AND symbol_ratio_e4 <= {T.GOPHER_MAX_SYMBOL_RATIO_E4} "
+        f"AND bullet_frac_e4 <= {T.GOPHER_MAX_BULLET_FRAC_E4} "
+        f"AND ellipsis_frac_e4 <= {T.GOPHER_MAX_ELLIPSIS_FRAC_E4} "
+        f"AND alpha_word_frac_e4 >= {T.GOPHER_MIN_ALPHA_WORD_FRAC_E4} "
+        f"AND n_stopwords_present >= {T.GOPHER_MIN_STOPWORDS} THEN 1 ELSE 0 END AS BIGINT) AS gopher_pass "
         "FROM r"
     ),
     "mirror_hosts": (
-        # mirror of q_mirror_hosts: distinct (host, fp), fp_cap=64
+        # mirror of q_mirror_hosts: distinct (host, fp), MIRROR_FP_CAP
         # hot-fp guard, ordered pair self-join, Jaccard over per-host
         # fingerprint-set sizes
         "WITH d AS (SELECT " + _DUCK_HOST + " AS host, "
@@ -2564,12 +2549,12 @@ ORACLES: dict[str, str] = {
         "FROM documents), "
         "fps AS (SELECT DISTINCT host, fp FROM d), "
         "per_host AS (SELECT host, count(*) AS n_fps FROM fps GROUP BY host), "
-        "cool AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 64), "
+        f"cool AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= {T.MIRROR_FP_CAP}), "
         "f2 AS (SELECT fps.host, fps.fp FROM fps JOIN cool USING (fp)), "
         "pairs AS (SELECT a.host AS host_a, b.host AS host_b, "
         "CAST(count(*) AS BIGINT) AS n_shared "
         "FROM f2 a JOIN f2 b ON a.fp = b.fp AND a.host < b.host "
-        "GROUP BY a.host, b.host HAVING count(*) >= 3) "
+        f"GROUP BY a.host, b.host HAVING count(*) >= {T.MIRROR_MIN_SHARED}) "
         "SELECT host_a, host_b, n_shared, "
         "CAST(round(n_shared * 10000.0 / (na.n_fps + nb.n_fps - n_shared)) AS BIGINT) "
         "AS jaccard_e4 "
@@ -2603,7 +2588,7 @@ ORACLES: dict[str, str] = {
         "bg AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 1), "
         "j -> ws[j] || ' ' || ws[j+1])) AS bigram FROM w), "
         "c AS (SELECT bigram, count(*) AS n FROM bg GROUP BY bigram), "
-        "lm AS (SELECT bigram, n FROM c ORDER BY n DESC, bigram LIMIT 64), "
+        f"lm AS (SELECT bigram, n FROM c ORDER BY n DESC, bigram LIMIT {T.LM_SIZE}), "
         "j AS (SELECT bg.doc_id, lm.n FROM bg LEFT JOIN lm USING (bigram)), "
         "cov AS (SELECT doc_id, CAST(round(count(n) * 10000.0 / count(*)) AS BIGINT) "
         "AS score FROM j GROUP BY doc_id), "
@@ -2663,16 +2648,16 @@ ORACLES: dict[str, str] = {
         "CAST(n_de AS BIGINT) AS n_de, CAST(n_fr AS BIGINT) AS n_fr FROM a"
     ),
     "vocab_drift": (
-        # mirror of q_vocab_drift: TV distance over the union top-16
-        # vocabulary + OOV buckets, one final division
+        # mirror of q_vocab_drift: TV distance over the union
+        # top-VOCAB_SIZE vocabulary + OOV buckets, one final division
         "WITH wa AS (SELECT w AS word, count(*) AS c FROM "
         "(SELECT unnest(string_split(text, ' ')) AS w FROM documents WHERE doc_id < 250) "
         "GROUP BY w), "
         "wb AS (SELECT w AS word, count(*) AS c FROM "
         "(SELECT unnest(string_split(text, ' ')) AS w FROM documents WHERE doc_id >= 250) "
         "GROUP BY w), "
-        "va AS (SELECT word FROM wa ORDER BY c DESC, word LIMIT 16), "
-        "vb AS (SELECT word FROM wb ORDER BY c DESC, word LIMIT 16), "
+        f"va AS (SELECT word FROM wa ORDER BY c DESC, word LIMIT {T.VOCAB_SIZE}), "
+        f"vb AS (SELECT word FROM wb ORDER BY c DESC, word LIMIT {T.VOCAB_SIZE}), "
         "uni AS (SELECT DISTINCT word FROM "
         "(SELECT word FROM va UNION ALL SELECT word FROM vb)), "
         "j AS (SELECT coalesce(wa.c, 0) AS ca, coalesce(wb.c, 0) AS cb "
@@ -2688,30 +2673,30 @@ ORACLES: dict[str, str] = {
     ),
     "repeated_window_stats": (
         "WITH ws AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents "
-        "WHERE len(string_split(text, ' ')) >= 20), "
-        "flat AS (SELECT doc_id, md5(array_to_string(ws[j:j+19], ' ')) AS wh "
-        "FROM ws, unnest(generate_series(1, len(ws) - 19)) AS t(j)), "
+        f"WHERE len(string_split(text, ' ')) >= {T.WINDOW_WORDS}), "
+        f"flat AS (SELECT doc_id, md5(array_to_string(ws[j:j+{T.WINDOW_WORDS - 1}], ' ')) AS wh "
+        f"FROM ws, unnest(generate_series(1, len(ws) - {T.WINDOW_WORDS - 1})) AS t(j)), "
         "per AS (SELECT wh, count(DISTINCT doc_id) AS nd, count(*) AS no "
         "FROM flat GROUP BY wh) "
         "SELECT CAST(count(*) AS BIGINT) AS n_window_hashes, "
         "CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_repeated, "
-        "CAST(sum(CASE WHEN nd >= 2 AND no > 1024 THEN 1 ELSE 0 END) AS BIGINT) AS n_capped, "
-        "CAST(coalesce(sum(CASE WHEN nd >= 2 AND no > 1024 THEN no ELSE 0 END), 0) AS BIGINT) "
+        f"CAST(sum(CASE WHEN nd >= 2 AND no > {T.DF_CAP} THEN 1 ELSE 0 END) AS BIGINT) AS n_capped, "
+        f"CAST(coalesce(sum(CASE WHEN nd >= 2 AND no > {T.DF_CAP} THEN no ELSE 0 END), 0) AS BIGINT) "
         "AS occurrences_capped FROM per"
     ),
     "decontaminate": (
-        # 13-gram benchmark decontamination; eval texts = words 5..40
+        # CONTAMINATION_N-gram benchmark decontamination; eval texts = words 5..40
         # of every 41st doc (mirror of q_decontaminate)
         "WITH ev AS (SELECT array_to_string(string_split(text, ' ')[5:40], ' ') AS text "
         "FROM documents WHERE doc_id % 41 = 0), "
         "eg AS (SELECT DISTINCT unnest(list_distinct(list_transform("
-        "generate_series(1, len(string_split(text, ' ')) - 12), "
-        "j -> array_to_string(string_split(text, ' ')[j:j+12], ' ')))) AS gram "
-        "FROM ev WHERE len(string_split(text, ' ')) >= 13), "
+        f"generate_series(1, len(string_split(text, ' ')) - {T.CONTAMINATION_N - 1}), "
+        f"j -> array_to_string(string_split(text, ' ')[j:j+{T.CONTAMINATION_N - 1}], ' ')))) AS gram "
+        f"FROM ev WHERE len(string_split(text, ' ')) >= {T.CONTAMINATION_N}), "
         "dg AS (SELECT doc_id, unnest(list_distinct(list_transform("
-        "generate_series(1, len(string_split(text, ' ')) - 12), "
-        "j -> array_to_string(string_split(text, ' ')[j:j+12], ' ')))) AS gram "
-        "FROM documents WHERE len(string_split(text, ' ')) >= 13) "
+        f"generate_series(1, len(string_split(text, ' ')) - {T.CONTAMINATION_N - 1}), "
+        f"j -> array_to_string(string_split(text, ' ')[j:j+{T.CONTAMINATION_N - 1}], ' ')))) AS gram "
+        f"FROM documents WHERE len(string_split(text, ' ')) >= {T.CONTAMINATION_N}) "
         "SELECT CAST(dg.doc_id AS BIGINT) AS doc_id, "
         "CAST(count(*) AS BIGINT) AS n_contaminated "
         "FROM dg JOIN eg USING (gram) GROUP BY dg.doc_id"
@@ -2915,7 +2900,7 @@ ORACLES: dict[str, str] = {
     ),
     "holdout_split": (
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, source, "
-        f"CASE WHEN ('0x' || substr(md5(source), 1, 8))::BIGINT < {(10 * (1 << 32)) // 100} "
+        f"CASE WHEN ('0x' || substr(md5(source), 1, 8))::BIGINT < {(T.VAL_PCT * (1 << 32)) // 100} "
         "THEN 'val' ELSE 'train' END AS split FROM documents"
     ),
     "link_graph": (
@@ -2970,7 +2955,8 @@ ORACLES: dict[str, str] = {
         "CAST(round(10000.0 * length(regexp_replace(text, '[^a-z]', '', 'g')) "
         "/ length(text)) AS BIGINT) AS alpha_e4 FROM documents) "
         "SELECT doc_id, n_tokens FROM s "
-        "WHERE n_tokens >= 40 AND stop_e4 >= 100 AND alpha_e4 >= 7000"
+        f"WHERE n_tokens >= {T.QUALITY_MIN_TOKENS} AND stop_e4 >= {T.QUALITY_MIN_STOPWORD_RATIO_E4} "
+        f"AND alpha_e4 >= {T.QUALITY_MIN_ALPHA_RATIO_E4}"
     ),
     "doc_fingerprints": (
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, md5(text) AS fp_md5, "
@@ -2980,7 +2966,7 @@ ORACLES: dict[str, str] = {
     "sample_by_hash": (
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(n_chars AS BIGINT) AS n_chars "
         "FROM documents "
-        f"WHERE ('0x' || substr(md5(CAST(doc_id AS STRING)), 1, 8))::BIGINT < {(1000 * (1 << 32)) // 10000}"
+        f"WHERE ('0x' || substr(md5(CAST(doc_id AS STRING)), 1, 8))::BIGINT < {(T.SAMPLE_RATE_E4 * (1 << 32)) // 10000}"
     ),
     "stratified_sample": (
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, source FROM documents "
@@ -2989,13 +2975,13 @@ ORACLES: dict[str, str] = {
         + " ".join(
             f"WHEN '{s}' THEN {r}" for s, r in sorted(STRATA_RATES_E4.items())
         )
-        + f" ELSE 0 END) * {1 << 32}) // 10000"
+        + f" ELSE {T.STRATUM_DEFAULT_E4} END) * {1 << 32}) // 10000"
     ),
     "cap_per_host": (
         "WITH d AS (SELECT doc_id, source || '.example.com' AS host FROM documents), "
         "r AS (SELECT doc_id, host, row_number() OVER "
         "(PARTITION BY host ORDER BY md5(CAST(doc_id AS STRING)), doc_id) AS rk FROM d) "
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, host FROM r WHERE rk <= 15"
+        f"SELECT CAST(doc_id AS BIGINT) AS doc_id, host FROM r WHERE rk <= {T.HOST_CAP}"
     ),
     "repetition_stats": (
         "WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents), "
@@ -3014,8 +3000,8 @@ ORACLES: dict[str, str] = {
     ),
     "dedup_paragraphs": (
         "WITH ch AS (SELECT doc_id, unnest(list_transform("
-        "generate_series(1, len(string_split(text, ' ')), 10), "
-        "j -> array_to_string(string_split(text, ' ')[j:j+9], ' '))) AS chunk "
+        f"generate_series(1, len(string_split(text, ' ')), {T.PARAGRAPH_WORDS}), "
+        f"j -> array_to_string(string_split(text, ' ')[j:j+{T.PARAGRAPH_WORDS - 1}], ' '))) AS chunk "
         "FROM documents) "
         "SELECT md5(chunk) AS chunk_md5, "
         "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs, "
@@ -3148,30 +3134,30 @@ ORACLES: dict[str, str] = {
         "FROM sess GROUP BY user_id, session_id"
     ),
     "pack_sequences": (
-        # mirror of packing.pack_sequences(seq_len=64, n_shards=8):
+        # mirror of packing.pack_sequences (SEQ_LEN, PACK_SHARDS):
         # shard-partitioned running token offset, floor-mapped to
         # sequence ids
-        "WITH t AS (SELECT doc_id, doc_id % 8 AS shard, "
+        f"WITH t AS (SELECT doc_id, doc_id % {P.PACK_SHARDS} AS shard, "
         "len(string_split(text, ' ')) AS n_tokens FROM documents), "
         "c AS (SELECT doc_id, shard, n_tokens, "
         "coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start_tok FROM t) "
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(shard AS BIGINT) AS shard, "
         "CAST(n_tokens AS BIGINT) AS n_tokens, CAST(start_tok AS BIGINT) AS start_tok, "
-        "CAST(floor(start_tok / 64) AS BIGINT) AS first_seq, "
-        "CAST(floor((start_tok + n_tokens - 1) / 64) AS BIGINT) AS last_seq, "
-        "CAST(floor((start_tok + n_tokens - 1) / 64) - floor(start_tok / 64) + 1 "
+        f"CAST(floor(start_tok / {P.SEQ_LEN}) AS BIGINT) AS first_seq, "
+        f"CAST(floor((start_tok + n_tokens - 1) / {P.SEQ_LEN}) AS BIGINT) AS last_seq, "
+        f"CAST(floor((start_tok + n_tokens - 1) / {P.SEQ_LEN}) - floor(start_tok / {P.SEQ_LEN}) + 1 "
         "AS BIGINT) AS n_seqs FROM c"
     ),
     "chunk_tokens": (
-        # mirror of packing.chunk_tokens(width=12, stride=8)
+        # mirror of packing.chunk_tokens (CHUNK_WIDTH, CHUNK_STRIDE)
         "WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) "
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, "
-        "CAST(floor((j - 1) / 8) AS BIGINT) AS chunk_id, "
+        f"CAST(floor((j - 1) / {P.CHUNK_STRIDE}) AS BIGINT) AS chunk_id, "
         "CAST(j - 1 AS BIGINT) AS start_tok, "
-        "CAST(least(12, len(ws) - j + 1) AS BIGINT) AS n_chunk_tokens, "
-        "array_to_string(ws[j:j+11], ' ') AS chunk "
-        "FROM w, unnest(generate_series(1, len(ws), 8)) AS t(j)"
+        f"CAST(least({P.CHUNK_WIDTH}, len(ws) - j + 1) AS BIGINT) AS n_chunk_tokens, "
+        f"array_to_string(ws[j:j+{P.CHUNK_WIDTH - 1}], ' ') AS chunk "
+        f"FROM w, unnest(generate_series(1, len(ws), {P.CHUNK_STRIDE})) AS t(j)"
     ),
     "tfidf_top_terms": (
         "WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents), "
@@ -3183,7 +3169,7 @@ ORACLES: dict[str, str] = {
         "ORDER BY score_e4 DESC, word) AS rank FROM sc) "
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, word, CAST(tf AS BIGINT) AS tf, "
         "CAST(df AS BIGINT) AS df, score_e4, CAST(rank AS BIGINT) AS rank "
-        "FROM r WHERE rank <= 3"
+        f"FROM r WHERE rank <= {T.TFIDF_K}"
     ),
     "importance_sample": (
         # keep ⇔ u32(md5(doc_id)) · 10000 < weight_e4 · 2^32

@@ -16,6 +16,14 @@ Packaging (same as jobs/extract_job.py):
         [--strip-boilerplate] [--host-gate]
         [--extend-from <prior corpus parquet dir>]
 
+Every other threshold is a constant of ``gumbo_pp_spark.pipelines``
+(``MIN_ALPHA_RATIO_E4``, ``MAX_TOP_WORD_FRAC_E4``,
+``BOILERPLATE_MIN_DOCS``, ``HOST_GATE_MIN_DOCS``,
+``HOST_GATE_MAX_BAD_FRAC_E4``); the recall audit queries the 16 lowest
+``vec_id`` values.  Robots and charset stages are not part of this
+job: apply ``robots_filter`` or ``sniff_and_transcode`` to the pages
+first.
+
 Prints one JSON line of run metrics (rows, caches_released,
 ann_recall_e4/ok when the audit is enabled).
 """
@@ -48,11 +56,13 @@ def main() -> None:
     ap.add_argument("--ann-recall-floor-e4", type=int, default=None)
     ap.add_argument(
         "--strip-boilerplate", action="store_true",
-        help="strip per-host repeated segments before quality scoring",
+        help="strip per-host segments repeated in BOILERPLATE_MIN_DOCS docs "
+        "before quality scoring",
     )
     ap.add_argument(
         "--host-gate", action="store_true",
-        help="drop whole hosts whose bad-document fraction exceeds the default threshold",
+        help="drop whole hosts whose bad-document fraction exceeds "
+        "HOST_GATE_MAX_BAD_FRAC_E4",
     )
     ap.add_argument(
         "--extend-from", default=None,

@@ -38,11 +38,11 @@ def _union_find(edges, nodes=None):
     return comp
 
 
-def _run_cc(spark, edges, **kw):
+def _run_cc(spark, edges):
     df = spark.createDataFrame(
         [(int(u), int(v)) for u, v in edges], "a bigint, b bigint"
     )
-    got = D.connected_components(df, **kw).collect()
+    got = D.connected_components(df).collect()
     return {r["doc_id"]: r["component"] for r in got}
 
 
@@ -93,10 +93,10 @@ def test_random_graphs_match_union_find(spark, seed, n, m):
 
 
 def test_checkpoint_path_exercised(spark):
-    # long chain forces > checkpoint_every rounds through
-    # localCheckpoint; result must be unaffected
+    # long chain forces several rounds, each through localCheckpoint;
+    # result must be unaffected
     edges = [(i, i + 1) for i in range(127)]
-    got = _run_cc(spark, edges, checkpoint_every=2)
+    got = _run_cc(spark, edges)
     assert got == {i: 0 for i in range(128)}
 
 
@@ -186,13 +186,14 @@ def test_non_numeric_ids_fail_fast(spark):
         D.connected_components(pairs)
 
 
-def test_non_convergence_raises_not_silent(spark):
-    # a chain needs several star rounds; max_rounds=1 must raise, not
-    # return a half-contracted (duplicate-target) mapping
+def test_non_convergence_raises_not_silent(spark, monkeypatch):
+    # a chain needs several star rounds; CC_MAX_ROUNDS=1 must raise,
+    # not return a half-contracted (duplicate-target) mapping
     edges = [(i, i + 1) for i in range(32)]
     df = spark.createDataFrame(edges, "a bigint, b bigint")
+    monkeypatch.setattr(D, "CC_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(df, max_rounds=1)
+        D.connected_components(df)
 
 
 def test_component_stats_histogram(spark):

@@ -73,39 +73,43 @@ class TestStratifiedSample:
             df, {"src0": 5000, "src1": 2500, "src2": 0}).collect()}
         assert half <= full
 
-    def test_unknown_stratum_gets_default(self, spark):
+    def test_unknown_stratum_gets_default(self, spark, monkeypatch):
         df = spark.createDataFrame([(1, "mystery")], "doc_id bigint, source string")
         assert T.stratified_sample(df, {"src0": 10000}).count() == 0
-        assert T.stratified_sample(df, {}, default_e4=10000).count() == 1
+        monkeypatch.setattr(T, "STRATUM_DEFAULT_E4", 10000)
+        assert T.stratified_sample(df, {}).count() == 1
 
 
 class TestOovStats:
-    def test_oov_counts_against_known_vocab(self, spark):
+    def test_oov_counts_against_known_vocab(self, spark, monkeypatch):
         docs = spark.createDataFrame(
             [(1, "a a a b rare1"), (2, "b b a rare2 rare3 rare3")],
             "doc_id bigint, text string",
         )
-        # vocab_size=2 -> vocab {a(5), b(4)}; rare* are OOV
+        # VOCAB_SIZE=2 -> vocab {a(5), b(4)}; rare* are OOV
+        monkeypatch.setattr(T, "VOCAB_SIZE", 2)
         got = {r.doc_id: (r.n_tokens, r.n_oov, r.oov_ratio_e4)
-               for r in T.oov_stats(docs, vocab_size=2).collect()}
+               for r in T.oov_stats(docs).collect()}
         assert got == {1: (5, 1, 2000), 2: (6, 3, 5000)}
 
-    def test_vocab_tie_breaks_lexicographically(self, spark):
+    def test_vocab_tie_breaks_lexicographically(self, spark, monkeypatch):
         docs = spark.createDataFrame(
             [(1, "zz aa"), (2, "zz"), (3, "aa")], "doc_id bigint, text string"
         )
         # zz and aa both occur twice: the lexicographic winner "aa" is
         # the whole vocabulary, so only doc 2's "zz" is OOV
-        got = {r.doc_id: r.n_oov for r in T.oov_stats(docs, vocab_size=1).collect()}
+        monkeypatch.setattr(T, "VOCAB_SIZE", 1)
+        got = {r.doc_id: r.n_oov for r in T.oov_stats(docs).collect()}
         assert got == {1: 1, 2: 1, 3: 0}
 
-    def test_vocab_is_broadcast(self, spark):
+    def test_vocab_is_broadcast(self, spark, monkeypatch):
         from tests.test_physical_plans import plan_of
 
         docs = spark.createDataFrame(
             [(1, "a b c")], "doc_id bigint, text string"
         )
-        plan = plan_of(T.oov_stats(docs, vocab_size=2))
+        monkeypatch.setattr(T, "VOCAB_SIZE", 2)
+        plan = plan_of(T.oov_stats(docs))
         assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
 
 
@@ -121,14 +125,14 @@ class TestSentenceDecontamination:
         doc = _sent("a") + ". " + _sent("x") + ". " + _sent("b")
         docs = _docs(spark, [(1, doc)])
         evals = spark.createDataFrame([(_sent("x"),)], "text string")
-        (r,) = T.decontaminate_sentences(docs, evals, n=8).collect()
+        (r,) = T.decontaminate_sentences(docs, evals).collect()
         assert r["clean_text"] == _sent("a") + ". " + _sent("b")
         assert r["n_dropped"] == 1
 
     def test_fully_contaminated_doc_survives_empty(self, spark):
         docs = _docs(spark, [(1, _sent("x") + ". " + _sent("x"))])
         evals = spark.createDataFrame([(_sent("x"),)], "text string")
-        (r,) = T.decontaminate_sentences(docs, evals, n=8).collect()
+        (r,) = T.decontaminate_sentences(docs, evals).collect()
         assert r["clean_text"] == "" and r["n_dropped"] == 2
 
     def test_untouched_docs_pass_through_verbatim(self, spark):
@@ -136,7 +140,7 @@ class TestSentenceDecontamination:
         docs = _docs(spark, [(1, doc), (2, _sent("x"))])
         evals = spark.createDataFrame([(_sent("x"),)], "text string")
         got = {r.doc_id: (r.clean_text, r.n_dropped)
-               for r in T.decontaminate_sentences(docs, evals, n=8).collect()}
+               for r in T.decontaminate_sentences(docs, evals).collect()}
         assert got[1] == (doc, 0)
         assert got[2] == ("", 1)
 
@@ -144,7 +148,7 @@ class TestSentenceDecontamination:
         # both sides below the n-gram width contribute/match nothing
         docs = _docs(spark, [(1, "tiny words. more tiny words")])
         evals = spark.createDataFrame([("tiny words",)], "text string")
-        (r,) = T.decontaminate_sentences(docs, evals, n=8).collect()
+        (r,) = T.decontaminate_sentences(docs, evals).collect()
         assert r["n_dropped"] == 0
         assert r["clean_text"] == "tiny words. more tiny words"
 
@@ -155,7 +159,7 @@ class TestSentenceDecontamination:
         straddle = " ".join(half_a.split()[4:] + half_b.split()[:4])
         docs = _docs(spark, [(1, half_a + ". " + half_b)])
         evals = spark.createDataFrame([(straddle,)], "text string")
-        (r,) = T.decontaminate_sentences(docs, evals, n=8).collect()
+        (r,) = T.decontaminate_sentences(docs, evals).collect()
         assert r["n_dropped"] == 0
 
     def test_eval_grams_are_broadcast(self, spark):

@@ -23,7 +23,7 @@ def hot_docs(spark):
 
 
 class TestHotShingleCaps:
-    def test_df_cap_bounds_join_candidates(self, spark, hot_docs):
+    def test_df_cap_bounds_join_candidates(self, spark, hot_docs, monkeypatch):
         sh = D.shingles(hot_docs)
         capped = sh.join(
             sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
@@ -33,17 +33,21 @@ class TestHotShingleCaps:
         # the boilerplate shingles (df=30) are gone from the join input
         assert capped.groupBy("sh").count().agg(F.max("count")).collect()[0][0] <= 10
         # and the true pair still survives end-to-end
-        pairs = D.ngram_jaccard_pairs(hot_docs, threshold=0.5, min_shared=5, df_cap=10)
+        monkeypatch.setattr(D, "JACCARD_THRESHOLD", 0.5)
+        monkeypatch.setattr(D, "JACCARD_MIN_SHARED", 5)
+        monkeypatch.setattr(D, "SHINGLE_DF_CAP", 10)
+        pairs = D.ngram_jaccard_pairs(hot_docs)
         got = {(r.a, r.b) for r in pairs.collect()}
         assert (100, 101) in got
         # no pair is built from boilerplate alone
         assert all(a >= 100 for a, b in got)
 
-    def test_minhash_bucket_cap_drops_degenerate_buckets(self, spark, hot_docs):
+    def test_minhash_bucket_cap_drops_degenerate_buckets(self, spark, hot_docs, monkeypatch):
         # with a tiny cap, the boilerplate-dominated band buckets (30
         # docs) are dropped; the identical pair still shares all its
         # (2-doc) buckets and survives
-        pairs = D.minhash_lsh_pairs(hot_docs, min_equal=4, bucket_cap=5)
+        monkeypatch.setattr(D, "BUCKET_CAP", 5)
+        pairs = D.minhash_lsh_pairs(hot_docs, min_equal=4)
         got = {(r.a, r.b) for r in pairs.collect()}
         assert (100, 101) in got
         for a, b in got:
@@ -75,7 +79,7 @@ class TestSimhash63:
             for a in s for b in s
             if a < b and bin(s[a] ^ s[b]).count("1") <= 2
         }
-        banded = {(r.a, r.b) for r in D.simhash_pairs(df, max_hamming=2).collect()}
+        banded = {(r.a, r.b) for r in D.simhash_pairs(df).collect()}
         assert banded == brute
         assert brute, "fixture produced no near pairs — weaken the tails"
 
@@ -92,8 +96,12 @@ class TestLshSketch:
         rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(120)]
         emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>").cache()
         q = emb.where(F.col("vec_id") % 40 == 0)
-        single = S.lsh_cosine_topk(emb, q, k=3, dim=16, n_planes=4, multiprobe=False)
-        multi = S.lsh_cosine_topk(emb, q, k=3, dim=16, n_planes=4, multiprobe=True)
+        # single probe: the query's own bucket only
+        sk = S.hyperplane_sketch_expr(16, 4)
+        single = S._top_k(
+            S._corpus_side(emb).withColumn("bucket", F.expr(sk)).join(
+                F.broadcast(S._query_side(q, F.expr(sk).alias("bucket"))), "bucket"), 3)
+        multi = S.lsh_cosine_topk(emb, q, k=3, dim=16, n_planes=4)
         exact = S.cosine_topk(emb, q, k=3)
         ex = {(r.query_id, r.neighbor_id) for r in exact.collect()}
         hit_single = len(ex & {(r.query_id, r.neighbor_id) for r in single.collect()})
@@ -102,26 +110,29 @@ class TestLshSketch:
 
 
 class TestPartitioningNullKeys:
-    def test_malformed_urls_do_not_crash_plans(self, spark):
-        from gumbo_pp_spark.plans.partitioning import salt_skewed_keys, size_balanced_bins
+    def test_malformed_urls_do_not_crash_plans(self, spark, monkeypatch):
+        from gumbo_pp_spark.plans import partitioning as P
 
         rows = [("not a url at all", bytearray(b"x" * 100))] * 8
         rows += [(f"https://ok.example/{i}", bytearray(b"y" * 100)) for i in range(8)]
         df = spark.createDataFrame(rows, "url string, html binary")
-        assert salt_skewed_keys(df, n_partitions=4).count() == 16
-        binned = size_balanced_bins(df, target_bytes=400)
+        monkeypatch.setattr(P, "SALT_PARTITIONS", 4)
+        assert P.salt_skewed_keys(df).count() == 16
+        monkeypatch.setattr(P, "BIN_TARGET_BYTES", 400)
+        binned = P.size_balanced_bins(df)
         assert binned.count() == 16
         assert binned.where(F.col("size_bin").isNull()).count() == 0
 
-    def test_light_keys_not_collected_heavy_tail_only(self, spark):
+    def test_light_keys_not_collected_heavy_tail_only(self, spark, monkeypatch):
         # many light keys + one heavy: plan must produce dedicated bins
         # for the heavy key and hash the light ones without per-key maps
-        from gumbo_pp_spark.plans.partitioning import size_balanced_bins
+        from gumbo_pp_spark.plans import partitioning as P
 
         rows = [(f"https://h{i}.example/x", bytearray(b"a" * 50)) for i in range(400)]
         rows += [(f"https://big.example/{i}", bytearray(b"b" * 5000)) for i in range(100)]
         df = spark.createDataFrame(rows, "url string, html binary")
-        binned = size_balanced_bins(df, target_bytes=100_000)
+        monkeypatch.setattr(P, "BIN_TARGET_BYTES", 100_000)
+        binned = P.size_balanced_bins(df)
         big_bins = {
             r.size_bin for r in binned.where("part_key = 'big.example'")
             .select("size_bin").distinct().collect()
@@ -178,12 +189,15 @@ class TestIvf:
                 for r in S.ivf_topk(emb, q, pivots, k=3, nprobe=n_pivots).collect()}
         assert full == exact
 
-    def test_more_probes_not_worse(self, spark):
+    def test_more_probes_not_worse(self, spark, monkeypatch):
         emb = self._emb(spark)
         q = emb.where(F.col("vec_id") % 40 == 0)
         pivots = emb.where(F.col("vec_id") % 30 == 1)
-        r1 = S.ivf_recall_vs_exact(emb, q, pivots, k=3, nprobe=1).first()
-        r3 = S.ivf_recall_vs_exact(emb, q, pivots, k=3, nprobe=3).first()
+        monkeypatch.setattr(S, "RECALL_K", 3)
+        monkeypatch.setattr(S, "RECALL_NPROBE", 1)
+        r1 = S.ivf_recall_vs_exact(emb, q, pivots).first()
+        monkeypatch.setattr(S, "RECALL_NPROBE", 3)
+        r3 = S.ivf_recall_vs_exact(emb, q, pivots).first()
         assert r3["n_hit"] >= r1["n_hit"]
         assert r1["n_queries"] == 3 and r1["n_exact"] == 9
 
@@ -235,14 +249,15 @@ class TestSemanticDedup:
             rows, "vec_id bigint, embedding array<float>"
         ).cache()
 
-    def test_keep_policy_matches_brute_force(self, spark):
+    def test_keep_policy_matches_brute_force(self, spark, monkeypatch):
         import numpy as np
 
         emb = self._emb(spark)
         pivots = emb.where(F.col("vec_id") % 30 == 1)
+        monkeypatch.setattr(S, "NEAR_DUP_COSINE", 0.9)
         got = {
             r["vec_id"]: (r["pivot_id"], r["keep"])
-            for r in S.semantic_dedup(emb, pivots, threshold=0.9).collect()
+            for r in S.semantic_dedup(emb, pivots).collect()
         }
         vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
                 for r in emb.collect()}
@@ -259,14 +274,15 @@ class TestSemanticDedup:
             ]
             assert got[vid] == (assign[vid], not lower_dups), vid
 
-    def test_planted_duplicates_dropped(self, spark):
+    def test_planted_duplicates_dropped(self, spark, monkeypatch):
         # a scaled copy has cosine 1.0 with its source and lands in the
         # same cluster (same direction -> same nearest pivot), so the
         # higher-id copy must always be dropped
         emb = self._emb(spark)
         pivots = emb.where(F.col("vec_id") % 30 == 1)
+        monkeypatch.setattr(S, "NEAR_DUP_COSINE", 0.99)
         kept = {r["vec_id"]: r["keep"]
-                for r in S.semantic_dedup(emb, pivots, threshold=0.99).collect()}
+                for r in S.semantic_dedup(emb, pivots).collect()}
         for i in range(10, 150, 10):
             assert kept[i] is False, i
         # and at least the very first vector always survives
@@ -317,7 +333,7 @@ class TestVerifyPairs:
         out = D.verify_pairs(docs, pairs).collect()
         assert [(r.a, r.b, r.jaccard_e4) for r in out] == [(1, 2, 10000)]
 
-    def test_minhash_verified_rejects_estimate_only_pairs(self, spark):
+    def test_minhash_verified_rejects_estimate_only_pairs(self, spark, monkeypatch):
         # 30 similar pairs: the full pipeline keeps only those whose
         # EXACT jaccard clears the floor, regardless of sketch optimism
         rows = []
@@ -327,12 +343,15 @@ class TestVerifyPairs:
             # strong near-dup: one word appended
             rows.append((2 * i + 1, base + " extra"))
         docs = self._docs(spark, rows)
-        out = D.minhash_verified_pairs(docs, min_equal=4, min_jaccard_e4=5000)
+        monkeypatch.setattr(D, "MIN_EQUAL", 4)
+        monkeypatch.setattr(D, "VERIFY_MIN_JACCARD_E4", 5000)
+        out = D.minhash_verified_pairs(docs)
         got = {(r.a, r.b) for r in out.collect()}
         assert got == {(2 * i, 2 * i + 1) for i in range(30)}
         # raising the exact floor to impossible kills every pair while
         # the candidate stage alone would still propose them
-        none = D.minhash_verified_pairs(docs, min_equal=4, min_jaccard_e4=9999)
+        monkeypatch.setattr(D, "VERIFY_MIN_JACCARD_E4", 9999)
+        none = D.minhash_verified_pairs(docs)
         assert none.count() == 0
         assert D.minhash_lsh_pairs(docs, min_equal=4).count() >= 30
 

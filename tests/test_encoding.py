@@ -179,7 +179,7 @@ class TestSparkStage:
         )
         rows = {
             r.doc_id: r
-            for r in sniff_and_transcode(df, transport_col="charset").collect()
+            for r in sniff_and_transcode(df).collect()
         }
         assert rows[0].enc_src == "transport"
         assert bytes(rows[0].html) == "café".encode()

@@ -10,14 +10,17 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def _row(spark, text, **kw):
-    (r,) = T.gopher_rules(_docs(spark, [(1, text)]), **kw).collect()
+def _row(spark, text, monkeypatch=None, **constants):
+    for name, value in constants.items():
+        monkeypatch.setattr(T, name, value)
+    (r,) = T.gopher_rules(_docs(spark, [(1, text)])).collect()
     return r
 
 
 class TestGopherRules:
-    def test_line_fractions_exact(self, spark):
-        r = _row(spark, "- first line\n- second one\nplain tail line")
+    def test_line_fractions_exact(self, spark, monkeypatch):
+        r = _row(spark, "- first line\n- second one\nplain tail line", monkeypatch,
+                 GOPHER_LINE_SEP="\n")
         assert r.bullet_frac_e4 == 6667  # 2 of 3 lines
         assert r.ellipsis_frac_e4 == 0
         r2 = _row(spark, "ends here...\nplain line")
@@ -42,39 +45,42 @@ class TestGopherRules:
         r2 = _row(spark, "the words that have with")
         assert r2.n_stopwords_present == 4
 
-    def test_pass_verdict_flips_per_rule(self, spark):
+    def test_pass_verdict_flips_per_rule(self, spark, monkeypatch):
         good = "the words that have reasonable shape here today friends"
-        assert _row(spark, good, min_words=5).gopher_pass == 1
+        assert _row(spark, good, monkeypatch, GOPHER_MIN_WORDS=5).gopher_pass == 1
         # word-count floor
-        assert _row(spark, good, min_words=50).gopher_pass == 0
+        assert _row(spark, good, monkeypatch, GOPHER_MIN_WORDS=50).gopher_pass == 0
         # stopword floor
-        assert _row(spark, "zz yy xx ww vv uu tt ss", min_words=5).gopher_pass == 0
+        assert _row(spark, "zz yy xx ww vv uu tt ss", monkeypatch,
+                    GOPHER_MIN_WORDS=5).gopher_pass == 0
         # symbol ceiling
         assert (
-            _row(spark, "the # # # # words here", min_words=5).gopher_pass == 0
+            _row(spark, "the # # # # words here", monkeypatch,
+                 GOPHER_MIN_WORDS=5).gopher_pass == 0
         )
 
-    def test_custom_line_separator(self, spark):
+    def test_custom_line_separator(self, spark, monkeypatch):
         r = _row(
             spark,
             "- bullet seg. plain seg. tail...",
-            line_sep_regex="[.] ",
+            monkeypatch,
+            GOPHER_LINE_SEP="[.] ",
         )
         assert r.bullet_frac_e4 == 3333
         assert r.ellipsis_frac_e4 == 3333
 
 
 class TestCorpusReport:
-    def test_one_row_card_values(self, spark):
+    def test_one_row_card_values(self, spark, monkeypatch):
         good = "the quick brown fox jumps over the lazy dog today"
         docs = _docs(
             spark,
             [(1, good), (2, good), (3, "el la de que xx"), (4, "zz 11")],
         )
-        (r,) = T.corpus_report(
-            docs, min_tokens=5, min_stopword_ratio_e4=100,
-            min_alpha_ratio_e4=5000,
-        ).collect()
+        monkeypatch.setattr(T, "QUALITY_MIN_TOKENS", 5)
+        monkeypatch.setattr(T, "QUALITY_MIN_STOPWORD_RATIO_E4", 100)
+        monkeypatch.setattr(T, "QUALITY_MIN_ALPHA_RATIO_E4", 5000)
+        (r,) = T.corpus_report(docs).collect()
         assert r.n_docs == 4
         assert r.n_distinct_md5 == 3 and r.n_exact_dup_docs == 1
         assert r.n_quality_pass == 2  # the two 'good' copies
@@ -108,7 +114,7 @@ class TestTopWordFracExpr:
         got = {
             r.doc_id: r.f
             for r in _docs(spark, [(i, t) for i, t, _ in cases])
-            .select("doc_id", F.expr(T.top_word_frac_e4_expr("text")).alias("f"))
+            .select("doc_id", F.expr(T.top_word_frac_e4_expr()).alias("f"))
             .collect()
         }
         assert got == {i: e for i, _, e in cases}

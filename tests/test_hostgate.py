@@ -39,14 +39,13 @@ class TestHostQualityStats:
             "tiny.example": (1, 1, 10000),
         }
 
-    def test_flag_matches_quality_filter_complement(self, spark):
+    def test_flag_matches_quality_filter_complement(self, spark, monkeypatch):
         # n_bad must be exactly (docs - quality_filter survivors)
         df = _fixture(spark)
-        survivors = T.quality_filter(df, **{
-            "min_tokens": 5,
-            "min_stopword_ratio_e4": 100,
-            "min_alpha_ratio_e4": 5000,
-        }).count()
+        monkeypatch.setattr(T, "QUALITY_MIN_TOKENS", 5)
+        monkeypatch.setattr(T, "QUALITY_MIN_STOPWORD_RATIO_E4", 100)
+        monkeypatch.setattr(T, "QUALITY_MIN_ALPHA_RATIO_E4", 5000)
+        survivors = T.quality_filter(df).count()
         stats = T.host_quality_stats(df, **THRESH)
         total_bad = sum(r.n_bad for r in stats.collect())
         assert total_bad == df.count() - survivors
@@ -149,7 +148,13 @@ class TestMirrorHosts:
             rows, "doc_id bigint, host string, text string"
         )
 
-    def test_detects_mirror_pair_with_exact_jaccard(self, spark):
+    @staticmethod
+    def _mirrors(monkeypatch, docs, min_shared, fp_cap=64):
+        monkeypatch.setattr(T, "MIRROR_MIN_SHARED", min_shared)
+        monkeypatch.setattr(T, "MIRROR_FP_CAP", fp_cap)
+        return T.mirror_hosts(docs)
+
+    def test_detects_mirror_pair_with_exact_jaccard(self, spark, monkeypatch):
         docs = self._hosted(
             spark,
             # a/b share 3 of a's 4 and b's 3 fps -> J = 3/4
@@ -157,45 +162,45 @@ class TestMirrorHosts:
              (5, "b", "x1"), (6, "b", "x2"), (7, "b", "x3"),
              (8, "c", "unrelated")],
         )
-        out = T.mirror_hosts(docs, min_shared=3).collect()
+        out = self._mirrors(monkeypatch, docs, 3).collect()
         assert [(r.host_a, r.host_b, r.n_shared, r.jaccard_e4) for r in out] == [
             ("a", "b", 3, 7500)
         ]
 
-    def test_min_shared_gates_weak_overlap(self, spark):
+    def test_min_shared_gates_weak_overlap(self, spark, monkeypatch):
         docs = self._hosted(
             spark, [(1, "a", "x1"), (2, "a", "x2"), (3, "b", "x1"), (4, "b", "y")]
         )
-        assert T.mirror_hosts(docs, min_shared=3).count() == 0
-        assert T.mirror_hosts(docs, min_shared=1).count() == 1
+        assert self._mirrors(monkeypatch, docs, 3).count() == 0
+        assert self._mirrors(monkeypatch, docs, 1).count() == 1
 
-    def test_fp_cap_drops_template_content(self, spark):
+    def test_fp_cap_drops_template_content(self, spark, monkeypatch):
         # one fp on 4 hosts is a shared template, not a mirror signal
         rows = [(i, f"h{i}", "cookie banner") for i in range(4)]
         rows += [(10, "h0", "real1"), (11, "h0", "real2"),
                  (12, "h1", "real1"), (13, "h1", "real2")]
         docs = self._hosted(spark, rows)
-        out = T.mirror_hosts(docs, min_shared=2, fp_cap=3).collect()
+        out = self._mirrors(monkeypatch, docs, 2, fp_cap=3).collect()
         # without the banner fp, h0/h1 still share the two real pages
         assert [(r.host_a, r.host_b, r.n_shared) for r in out] == [("h0", "h1", 2)]
         # raising the cap lets the banner count again
-        out2 = T.mirror_hosts(docs, min_shared=3, fp_cap=64).collect()
+        out2 = self._mirrors(monkeypatch, docs, 3, fp_cap=64).collect()
         assert [(r.host_a, r.host_b, r.n_shared) for r in out2] == [("h0", "h1", 3)]
 
-    def test_within_host_duplicates_count_once(self, spark):
+    def test_within_host_duplicates_count_once(self, spark, monkeypatch):
         docs = self._hosted(
             spark,
             [(1, "a", "x"), (2, "a", "x"), (3, "b", "x"), (4, "a", "y"), (5, "b", "y")],
         )
-        (r,) = T.mirror_hosts(docs, min_shared=2).collect()
+        (r,) = self._mirrors(monkeypatch, docs, 2).collect()
         # fp set of a = {x,y}, b = {x,y} -> shared 2, J = 10000
         assert (r.n_shared, r.jaccard_e4) == (2, 10000)
 
-    def test_host_count_tables_are_broadcast(self, spark):
+    def test_host_count_tables_are_broadcast(self, spark, monkeypatch):
         from tests.test_physical_plans import plan_of
 
         docs = self._hosted(spark, [(1, "a", "x"), (2, "b", "x"), (3, "b", "y")])
-        plan = plan_of(T.mirror_hosts(docs, min_shared=1))
+        plan = plan_of(self._mirrors(monkeypatch, docs, 1))
         assert "BroadcastHashJoin" in plan
 
 

@@ -18,39 +18,56 @@ def _words(n, tag=""):
     return " ".join(f"w{tag}{i}" for i in range(n))
 
 
+def _pack(monkeypatch, docs, seq_len=P.SEQ_LEN, n_shards=P.PACK_SHARDS):
+    monkeypatch.setattr(P, "SEQ_LEN", seq_len)
+    monkeypatch.setattr(P, "PACK_SHARDS", n_shards)
+    return P.pack_sequences(docs)
+
+
+def _top_terms(monkeypatch, docs, k):
+    monkeypatch.setattr(T, "TFIDF_K", k)
+    return T.tfidf_top_terms(docs)
+
+
+def _chunk(monkeypatch, docs, width=P.CHUNK_WIDTH, stride=P.CHUNK_STRIDE):
+    monkeypatch.setattr(P, "CHUNK_WIDTH", width)
+    monkeypatch.setattr(P, "CHUNK_STRIDE", stride)
+    return P.chunk_tokens(docs)
+
+
 class TestPackSequences:
-    def test_hand_computed_stream(self, spark):
+    def test_hand_computed_stream(self, spark, monkeypatch):
         # one shard (all doc_id % 1 == 0): docs of 3, 4, 5 tokens,
         # seq_len 4 -> offsets 0, 3, 7; seq spans [0,0], [0,1], [1,2]
         docs = _docs(spark, [(0, "a b c"), (1, "a b c d"), (2, "a b c d e")])
         got = {
             r["doc_id"]: (r["start_tok"], r["first_seq"], r["last_seq"], r["n_seqs"])
-            for r in P.pack_sequences(docs, seq_len=4, n_shards=1).collect()
+            for r in _pack(monkeypatch, docs, seq_len=4, n_shards=1).collect()
         }
         assert got == {0: (0, 0, 0, 1), 1: (3, 0, 1, 2), 2: (7, 1, 2, 2)}
 
-    def test_shards_pack_independently(self, spark):
+    def test_shards_pack_independently(self, spark, monkeypatch):
         # two shards: even/odd doc_ids each start at offset 0
         docs = _docs(spark, [(0, _words(3)), (1, _words(5)), (2, _words(2)), (3, _words(1))])
-        rows = P.pack_sequences(docs, seq_len=4, n_shards=2).collect()
+        rows = _pack(monkeypatch, docs, seq_len=4, n_shards=2).collect()
         by_id = {r["doc_id"]: r for r in rows}
         assert by_id[0]["shard"] == 0 and by_id[1]["shard"] == 1
         assert by_id[0]["start_tok"] == 0 and by_id[1]["start_tok"] == 0
         assert by_id[2]["start_tok"] == 3 and by_id[3]["start_tok"] == 5
 
-    def test_exact_boundary_doc_stays_in_one_seq(self, spark):
+    def test_exact_boundary_doc_stays_in_one_seq(self, spark, monkeypatch):
         # a doc ending exactly at a cut does NOT bleed into the next seq
         docs = _docs(spark, [(0, _words(4)), (1, _words(4))])
         got = {
             r["doc_id"]: (r["first_seq"], r["last_seq"])
-            for r in P.pack_sequences(docs, seq_len=4, n_shards=1).collect()
+            for r in _pack(monkeypatch, docs, seq_len=4, n_shards=1).collect()
         }
         assert got == {0: (0, 0), 1: (1, 1)}
 
-    def test_token_conservation(self, spark):
+    def test_token_conservation(self, spark, monkeypatch):
         # sum of n_tokens per shard == final start_tok + last doc's tokens
         docs = _docs(spark, [(i, _words(1 + i % 7)) for i in range(50)])
-        out = P.pack_sequences(docs, seq_len=8, n_shards=4)
+        out = _pack(monkeypatch, docs, seq_len=8, n_shards=4)
         per = (
             out.groupBy("shard")
             .agg(
@@ -61,31 +78,31 @@ class TestPackSequences:
         )
         assert per and all(r["total"] == r["end"] for r in per)
 
-    def test_null_doc_id_row_is_dropped(self, spark):
+    def test_null_doc_id_row_is_dropped(self, spark, monkeypatch):
         # a NULL id has no place in the packing order: the row is
         # absent and every other row packs as if it were not there
         rows = [(i, _words(1 + i % 5)) for i in range(12)]
 
         def start_toks(rs):
-            out = P.pack_sequences(_docs(spark, rs), seq_len=4, n_shards=2)
+            out = _pack(monkeypatch, _docs(spark, rs), seq_len=4, n_shards=2)
             return {r["doc_id"]: r["start_tok"] for r in out.collect()}
 
         assert start_toks(rows + [(None, _words(3))]) == start_toks(rows)
 
-    def test_validation(self, spark):
+    def test_validation(self, spark, monkeypatch):
         docs = _docs(spark, [(0, "a")])
         with pytest.raises(ValueError):
-            P.pack_sequences(docs, seq_len=0)
+            _pack(monkeypatch, docs, seq_len=0)
         with pytest.raises(ValueError):
-            P.pack_sequences(docs, n_shards=0)
+            _pack(monkeypatch, docs, n_shards=0)
 
 
 class TestChunkTokens:
-    def test_overlap_and_short_tail(self, spark):
+    def test_overlap_and_short_tail(self, spark, monkeypatch):
         # 10 tokens, width 4, stride 3 -> starts 0,3,6,9; last chunk 1 token
         docs = _docs(spark, [(0, _words(10))])
         rows = sorted(
-            P.chunk_tokens(docs, width=4, stride=3).collect(),
+            _chunk(monkeypatch, docs, width=4, stride=3).collect(),
             key=lambda r: r["chunk_id"],
         )
         assert [(r["chunk_id"], r["start_tok"], r["n_chunk_tokens"]) for r in rows] == [
@@ -98,68 +115,69 @@ class TestChunkTokens:
         assert rows[1]["chunk"] == "w3 w4 w5 w6"  # 1-token overlap
         assert rows[3]["chunk"] == "w9"
 
-    def test_stride_equals_width_matches_paragraph_chunks(self, spark):
+    def test_stride_equals_width_matches_paragraph_chunks(self, spark, monkeypatch):
         # the non-overlapping special case reproduces paragraph_chunks
         docs = _docs(spark, [(0, _words(23)), (1, _words(7))])
         a = {
             (r["doc_id"], r["chunk_id"]): r["chunk"]
-            for r in P.chunk_tokens(docs, width=10, stride=10).collect()
+            for r in _chunk(monkeypatch, docs, width=10, stride=10).collect()
         }
+        monkeypatch.setattr(T, "PARAGRAPH_WORDS", 10)
         b = {
             (r["doc_id"], r["chunk_idx"]): r["chunk"]
-            for r in T.paragraph_chunks(docs, stride=10).collect()
+            for r in T.paragraph_chunks(docs).collect()
         }
         assert a == b
 
-    def test_single_token_doc(self, spark):
-        rows = P.chunk_tokens(_docs(spark, [(0, "solo")]), width=4, stride=3).collect()
+    def test_single_token_doc(self, spark, monkeypatch):
+        rows = _chunk(monkeypatch, _docs(spark, [(0, "solo")]), width=4, stride=3).collect()
         assert len(rows) == 1 and rows[0]["chunk"] == "solo"
         assert rows[0]["n_chunk_tokens"] == 1
 
-    def test_map_only_plan(self, spark):
+    def test_map_only_plan(self, spark, monkeypatch):
         plan = (
-            P.chunk_tokens(_docs(spark, [(0, "a b c")]), width=2, stride=1)
+            _chunk(monkeypatch, _docs(spark, [(0, "a b c")]), width=2, stride=1)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
         assert "Exchange" not in plan  # no shuffle: projection + explode
 
-    def test_validation(self, spark):
+    def test_validation(self, spark, monkeypatch):
         with pytest.raises(ValueError):
-            P.chunk_tokens(_docs(spark, [(0, "a")]), width=0)
+            _chunk(monkeypatch, _docs(spark, [(0, "a")]), width=0)
         with pytest.raises(ValueError):
-            P.chunk_tokens(_docs(spark, [(0, "a")]), stride=0)
+            _chunk(monkeypatch, _docs(spark, [(0, "a")]), stride=0)
 
 
 class TestTfidfTopTerms:
-    def test_rare_term_outranks_common(self, spark):
+    def test_rare_term_outranks_common(self, spark, monkeypatch):
         # 'zebra' appears once in one doc (df=1, tf=1 -> 10000);
         # 'the' is in all three docs (df=3, tf=1 -> 3333)
         docs = _docs(
             spark,
             [(0, "the zebra"), (1, "the cow cow"), (2, "the cow")],
         )
-        rows = T.tfidf_top_terms(docs, k=1).collect()
+        rows = _top_terms(monkeypatch, docs, 1).collect()
         top = {r["doc_id"]: (r["word"], r["score_e4"]) for r in rows}
         assert top[0] == ("zebra", 10000)
         # doc 1: cow tf=2 df=2 -> 10000 beats the (3333)
         assert top[1] == ("cow", 10000)
 
-    def test_tie_breaks_lexicographic(self, spark):
+    def test_tie_breaks_lexicographic(self, spark, monkeypatch):
         docs = _docs(spark, [(0, "b a"), (1, "x")])
         rows = [
             r
-            for r in T.tfidf_top_terms(docs, k=2).collect()
+            for r in _top_terms(monkeypatch, docs, 2).collect()
             if r["doc_id"] == 0
         ]
         rows.sort(key=lambda r: r["rank"])
         # a and b both tf=1 df=1 -> equal score; 'a' ranks first
         assert [r["word"] for r in rows] == ["a", "b"]
 
-    def test_k_bounds_output(self, spark):
+    def test_k_bounds_output(self, spark, monkeypatch):
         docs = _docs(spark, [(0, _words(30))])
-        assert T.tfidf_top_terms(docs, k=5).count() == 5
+        assert _top_terms(monkeypatch, docs, 5).count() == 5
 
 
 class TestImportanceSample:
@@ -231,11 +249,13 @@ class TestMinhashContamination:
         assert plan.count("BroadcastHashJoin") == 1
         assert "SortMergeJoin" not in plan
 
-    def test_banding_params_validated(self, spark):
+    def test_banding_params_validated(self, spark, monkeypatch):
         docs = _docs(spark, [(1, "a b c d")])
         evals = self._evals(spark, [(2, "a b c d")])
+        monkeypatch.setattr(D, "N_MINHASHES", 8)
+        monkeypatch.setattr(D, "N_BANDS", 3)
         with pytest.raises(ValueError):
-            D.minhash_contamination(docs, evals, n_hashes=8, n_bands=3)
+            D.minhash_contamination(docs, evals)
 
 
 class TestQualityClassifier:
@@ -255,9 +275,10 @@ class TestQualityClassifier:
             )
             assert got[i] == (len(toks), score, score > 0), (i, t)
 
-    def test_weights_deterministic_and_bounded(self):
-        w = T.classifier_weights(512)
-        assert w == T.classifier_weights(512)
+    def test_weights_deterministic_and_bounded(self, monkeypatch):
+        monkeypatch.setattr(T, "CLASSIFIER_BUCKETS", 512)
+        w = T.classifier_weights()
+        assert w == T.classifier_weights()
         assert all(-1000 <= x <= 1000 for x in w)
         assert len(set(w)) > 100  # not degenerate
 
@@ -317,12 +338,13 @@ class TestShardManifest:
 
 
 class TestHoldoutAndHistogram:
-    def test_holdout_no_group_straddle(self, spark):
+    def test_holdout_no_group_straddle(self, spark, monkeypatch):
         docs = spark.createDataFrame(
             [(i, f"g{i % 13}", "w") for i in range(200)],
             "doc_id bigint, source string, text string",
         )
-        rows = T.holdout_split(docs, val_pct=30).collect()
+        monkeypatch.setattr(T, "VAL_PCT", 30)
+        rows = T.holdout_split(docs).collect()
         by_group = {}
         for r in rows:
             by_group.setdefault(r["source"], set()).add(r["split"])

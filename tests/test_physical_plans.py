@@ -163,14 +163,14 @@ class TestPlans:
         assert "unused_extra" not in line.split("ReadSchema:")[1], line
         assert plan.count("MapInArrow") == 1
 
-    def test_cap_per_host_first_window_salted(self, spark, docs):
+    def test_cap_per_host_first_window_salted(self, spark, docs, monkeypatch):
         # skew safety: phase-1 window must partition on (host, salt),
         # never on host alone, so a crawl-heavy host spreads over
-        # salt_buckets bounded tasks before the exact phase-2 re-rank
-        from gumbo_pp_spark.operators.textstats import cap_per_host
-
+        # SALT_BUCKETS bounded tasks before the exact phase-2 re-rank
+        monkeypatch.setattr(T, "HOST_CAP", 3)
+        monkeypatch.setattr(T, "SALT_BUCKETS", 16)
         d = docs.selectExpr("doc_id", "source || '.example.com' AS host")
-        plan = plan_of(cap_per_host(d, cap=3, salt_buckets=16))
+        plan = plan_of(T.cap_per_host(d))
         import re
 
         windows = re.findall(r"Window \[.*?windowspecdefinition\(([^)]*)\)", plan)
@@ -354,24 +354,25 @@ class TestMapOperatorsDoNotSpread:
 
 
 # the per-word, n-gram, window and shingle operators: name -> (build,
-# number of input frames it tokenizes)
+# number of input frames it tokenizes, {(module, constant): value})
 _WORD_OPERATORS = {
-    "repetition_stats": (lambda d: T.repetition_stats(d), 1),
-    "paragraph_chunks": (lambda d: T.paragraph_chunks(d), 1),
-    "contamination": (lambda d: T.contamination(d, d, n=3), 1),
-    "sentence_contamination": (lambda d: T.sentence_contamination(d, d, n=3), 1),
-    "repeated_windows": (lambda d: T.repeated_windows(d, width=3), 1),
-    "repeated_spans": (lambda d: T.repeated_spans(d, width=3), 1),
-    "repeated_window_stats": (lambda d: T.repeated_window_stats(d, width=3), 1),
-    "oov_stats": (lambda d: T.oov_stats(d, 4), 1),
-    "lm_coverage": (lambda d: T.lm_coverage(d, lm_size=4), 1),
-    "vocab_drift": (lambda d: T.vocab_drift(d, d.where("doc_id % 2 = 0"), 4), 2),
-    "tfidf_top_terms": (lambda d: T.tfidf_top_terms(d), 1),
-    "word_freq_histogram": (lambda d: T.word_freq_histogram(d), 1),
-    "shingles": (lambda d: D.shingles(d), 1),
-    "minhash_signatures": (lambda d: D.minhash_signatures(d), 1),
-    "cms_heavy_hitters": (lambda d: S.cms_heavy_hitters(d, min_count=2), 1),
-    "kmv_distinct": (lambda d: S.kmv_distinct(d), 1),
+    "repetition_stats": (lambda d: T.repetition_stats(d), 1, {}),
+    "paragraph_chunks": (lambda d: T.paragraph_chunks(d), 1, {}),
+    "contamination": (lambda d: T.contamination(d, d), 1, {(T, "CONTAMINATION_N"): 3}),
+    "sentence_contamination": (lambda d: T.sentence_contamination(d, d, n=3), 1, {}),
+    "repeated_windows": (lambda d: T.repeated_windows(d), 1, {(T, "WINDOW_WORDS"): 3}),
+    "repeated_spans": (lambda d: T.repeated_spans(d), 1, {(T, "WINDOW_WORDS"): 3}),
+    "repeated_window_stats": (lambda d: T.repeated_window_stats(d), 1, {(T, "WINDOW_WORDS"): 3}),
+    "oov_stats": (lambda d: T.oov_stats(d), 1, {(T, "VOCAB_SIZE"): 4}),
+    "lm_coverage": (lambda d: T.lm_coverage(d), 1, {(T, "LM_SIZE"): 4}),
+    "vocab_drift": (lambda d: T.vocab_drift(d, d.where("doc_id % 2 = 0")), 2,
+                    {(T, "VOCAB_SIZE"): 4}),
+    "tfidf_top_terms": (lambda d: T.tfidf_top_terms(d), 1, {}),
+    "word_freq_histogram": (lambda d: T.word_freq_histogram(d), 1, {}),
+    "shingles": (lambda d: D.shingles(d), 1, {}),
+    "minhash_signatures": (lambda d: D.minhash_signatures(d), 1, {}),
+    "cms_heavy_hitters": (lambda d: S.cms_heavy_hitters(d), 1, {(S, "CMS_MIN_COUNT"): 2}),
+    "kmv_distinct": (lambda d: S.kmv_distinct(d), 1, {}),
 }
 
 
@@ -405,16 +406,23 @@ class TestWordOperatorsSpreadOnce:
             " i -> concat('w', CAST((i * id) % 7 AS STRING)))) AS text",
         )
 
+    @staticmethod
+    def _operator(monkeypatch, name):
+        build, n_inputs, constants = _WORD_OPERATORS[name]
+        for (module, constant), value in constants.items():
+            monkeypatch.setattr(module, constant, value)
+        return build, n_inputs
+
     @pytest.mark.parametrize("name", sorted(_WORD_OPERATORS))
     def test_guard_called_once_through_tokenizer(self, spark, monkeypatch, name):
-        build, n_inputs = _WORD_OPERATORS[name]
+        build, n_inputs = self._operator(monkeypatch, name)
         callers = self._spy(monkeypatch)
         build(self._docs(spark, 4).coalesce(1))
         assert callers == ["split_words"] * n_inputs
 
     @pytest.mark.parametrize("name", sorted(_WORD_OPERATORS))
     def test_parallel_input_gets_no_extra_exchange(self, spark, monkeypatch, name):
-        build, _ = _WORD_OPERATORS[name]
+        build, _ = self._operator(monkeypatch, name)
         wide = self._docs(spark, 2 * spark.sparkContext.defaultParallelism)
         plan = plan_of(build(wide))
         assert "RoundRobinPartitioning" not in plan, plan
@@ -518,118 +526,152 @@ def test_no_pandas_operators():
     assert sites == [], sites
 
 
-def _unset_public_defaults(with_tests: bool) -> list[str]:
-    """``path::function(param)`` of every defaulted parameter of a
-    top-level public function in ``gumbo_pp_spark/`` that no call sets:
-    no call (callee ``Name`` id or ``Attribute`` attr equal to the
-    function's name) in the program, the jobs, perfbench, ``bench.py``,
-    ``__spark_entry__.py``, ``selfcheck.py`` and, ``with_tests``, the
-    tests passes it by keyword, by position, or through
-    ``*args``/``**kwargs``."""
+def _option_values() -> dict[str, set[str]]:
+    """``path::function(param)`` -> the values each defaulted parameter
+    of a public top-level function or public class method in
+    ``gumbo_pp_spark/`` takes across the system's calls
+    (callee ``Name`` id or ``Attribute`` attr equal to its name) in the
+    program, the jobs, perfbench, ``bench.py``, ``__spark_entry__.py``
+    and ``selfcheck.py`` — tests are not callers.  A call that omits the
+    parameter uses its default; a literal argument is its ``repr``; any
+    other expression (and a position a ``*args`` splat covers) is
+    ``"<variable>"``.  A ``**name`` splat sets only the keys a system
+    file builds into ``name`` (``name = {..}``, ``name = dict(..)``,
+    ``name[key] = ..``, or keyword arguments to a function whose
+    ``**name`` parameter it is) and otherwise leaves the default."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]
     program = sorted(root.joinpath("gumbo_pp_spark").rglob("*.py"))
-    callers = [*program, *root.joinpath("jobs").rglob("*.py"),
-               *(root.joinpath("tests").rglob("*.py") if with_tests else ()),
-               *root.joinpath("perfbench").rglob("*.py"),
-               root / "bench.py", root / "__spark_entry__.py", root / "selfcheck.py"]
+    system = [*program, *root.joinpath("jobs").rglob("*.py"),
+              *root.joinpath("perfbench").rglob("*.py"),
+              root / "bench.py", root / "__spark_entry__.py", root / "selfcheck.py"]
+
+    def value(node):
+        try:
+            return repr(ast.literal_eval(node))
+        except (ValueError, TypeError, SyntaxError):
+            return "<variable>"
+
+    # callee name -> calls; dict name -> [(key -> value, key set alone)];
+    # ``**name`` parameter -> functions declaring it
     calls: dict[str, list[ast.Call]] = {}
-    for path in callers:
+    builds: dict[str, list[tuple[dict[str, str], bool]]] = {}
+    forwarders: dict[str, list[ast.FunctionDef]] = {}
+    for path in system:
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, ast.Call):
                 name = getattr(node.func, "id", getattr(node.func, "attr", None))
                 calls.setdefault(name, []).append(node)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value:
+                v = node.value
+                for t in node.targets if isinstance(node, ast.Assign) else [node.target]:
+                    if isinstance(t, ast.Subscript) and isinstance(t.value, ast.Name):
+                        builds.setdefault(t.value.id, []).append(({value(t.slice): value(v)}, True))
+                    elif isinstance(t, ast.Name) and isinstance(v, ast.Dict):
+                        builds.setdefault(t.id, []).append(
+                            ({value(k): value(x) for k, x in zip(v.keys, v.values) if k}, False))
+                    elif isinstance(t, ast.Name) and getattr(getattr(v, "func", None), "id", None) == "dict":
+                        builds.setdefault(t.id, []).append(
+                            ({repr(k.arg): value(k.value) for k in v.keywords if k.arg}, False))
+            elif isinstance(node, ast.FunctionDef) and node.args.kwarg:
+                forwarders.setdefault(node.args.kwarg.arg, []).append(node)
 
-    def is_set(fn, arg, pos):
-        for c in calls.get(fn, ()):
-            if (any(isinstance(a, ast.Starred) for a in c.args)
-                    or any(k.arg in (None, arg) for k in c.keywords)
-                    or pos is not None and len(c.args) > pos):
-                return True
-        return False
+    def through(name, param, default, seen):
+        # values `param` takes through a `**name` splat
+        if name in seen:
+            return {"<variable>"}
+        out = set()
+        for keys, alone in builds.get(name, ()):
+            if repr(param) in keys:
+                out |= {keys[repr(param)], default} if alone else {keys[repr(param)]}
+            elif not alone:
+                out.add(default)
+        for fn in forwarders.get(name, ()):
+            a = fn.args
+            if param not in {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}:
+                for c in calls.get(fn.name, ()):
+                    out |= by_keyword(c, param, default, seen | {name})
+        return out or {default}
 
-    unset = []
+    def by_keyword(c, param, default, seen=frozenset()):
+        for k in c.keywords:
+            if k.arg == param:
+                return {value(k.value)}
+        out = set()
+        for k in c.keywords:
+            if k.arg is None and isinstance(k.value, ast.Name):
+                out |= through(k.value.id, param, default, seen)
+            elif k.arg is None and isinstance(k.value, ast.Dict):
+                keys = {value(x): value(y) for x, y in zip(k.value.keys, k.value.values) if x}
+                out.add(keys.get(repr(param), default))
+            elif k.arg is None:
+                out.add("<variable>")
+        return out or {default}
+
+    options = {}
     for path in program:
-        for fn in ast.parse(path.read_text(), str(path)).body:
-            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), str(path))
+        fns = [(f.name, f, 0) for f in tree.body if isinstance(f, ast.FunctionDef)]
+        for cls in tree.body:
+            if isinstance(cls, ast.ClassDef) and not cls.name.startswith("_"):
+                fns += [(f"{cls.name}.{m.name}", m, 0 if any(
+                    getattr(d, "id", None) == "staticmethod" for d in m.decorator_list) else 1)
+                    for m in cls.body if isinstance(m, ast.FunctionDef)]
+        for qual, fn, skip in fns:
+            if fn.name.startswith("_"):
                 continue
             a = fn.args
-            pos = a.posonlyargs + a.args
+            pos = (a.posonlyargs + a.args)[skip:]
             first = len(pos) - len(a.defaults)
-            params = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
-            params += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
-            unset += [f"{path.relative_to(root).as_posix()}::{fn.name}({arg})"
-                      for arg, i in params if not is_set(fn.name, arg, i)]
-    return unset
+            params = [(p.arg, i, a.defaults[i - first]) for i, p in enumerate(pos) if i >= first]
+            params += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            for arg, i, d in params:
+                default = value(d) if value(d) != "<variable>" else f"<{ast.unparse(d)}>"
+                values = set()
+                for c in calls.get(fn.name, ()):
+                    star = next((j for j, x in enumerate(c.args) if isinstance(x, ast.Starred)), None)
+                    if i is not None and star is not None and star <= i:
+                        values.add("<variable>")
+                    elif i is not None and i < len(c.args):
+                        values.add(value(c.args[i]))
+                    else:
+                        values |= by_keyword(c, arg, default)
+                options[f"{rel}::{qual}({arg})"] = values
+    return options
 
 
-def test_every_public_default_is_set_by_a_caller():
-    """A public defaulted parameter is an option only if something sets
-    it (:func:`_unset_public_defaults`, tests counted as callers).  One
-    nothing sets is a constant."""
-    unset = _unset_public_defaults(with_tests=True)
-    assert unset == [], f"{len(unset)} unset: {unset}"
-
-
-# public defaults that only tests set: a ratchet — a new test-only
-# option fails test_every_public_default_is_set_only_by_tests_on_the_list,
-# and so does an entry the system now sets or that is gone
-_TEST_ONLY_DEFAULTS = {
-    "gumbo_pp_spark/operators/dedup.py::ngram_jaccard_pairs(df_cap)",
-    "gumbo_pp_spark/operators/dedup.py::minhash_lsh_pairs(bucket_cap)",
-    "gumbo_pp_spark/operators/dedup.py::connected_components(a)",
-    "gumbo_pp_spark/operators/dedup.py::connected_components(b)",
-    "gumbo_pp_spark/operators/dedup.py::connected_components(max_rounds)",
-    "gumbo_pp_spark/operators/dedup.py::connected_components(checkpoint_every)",
-    "gumbo_pp_spark/operators/dedup.py::minhash_contamination(n_hashes)",
-    "gumbo_pp_spark/operators/dedup.py::minhash_contamination(n_bands)",
-    "gumbo_pp_spark/operators/encoding.py::sniff_and_transcode(transport_col)",
-    "gumbo_pp_spark/operators/graph.py::pagerank(checkpoint)",
-    "gumbo_pp_spark/operators/graph.py::hits(scale)",
-    "gumbo_pp_spark/operators/similarity.py::lsh_cosine_topk(multiprobe)",
-    "gumbo_pp_spark/operators/sketches.py::cms_heavy_hitters(width)",
-    "gumbo_pp_spark/operators/sketches.py::cms_heavy_hitters(depth)",
-    "gumbo_pp_spark/operators/sketches.py::cms_heavy_hitters(min_count)",
-    "gumbo_pp_spark/operators/sketches.py::kmv_distinct(k)",
-    "gumbo_pp_spark/operators/textstats.py::paragraph_chunks(stride)",
-    "gumbo_pp_spark/operators/textstats.py::cap_per_host(salt_buckets)",
-    "gumbo_pp_spark/operators/textstats.py::host_quality_gate(host_col)",
-    "gumbo_pp_spark/operators/textstats.py::gopher_rules(text_col)",
-    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_words)",
-    "gumbo_pp_spark/operators/textstats.py::gopher_rules(min_mean_word_len_e4)",
-    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_mean_word_len_e4)",
-    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_symbol_ratio_e4)",
-    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_bullet_frac_e4)",
-    "gumbo_pp_spark/operators/textstats.py::gopher_rules(max_ellipsis_frac_e4)",
-    "gumbo_pp_spark/operators/textstats.py::gopher_rules(min_alpha_word_frac_e4)",
-    "gumbo_pp_spark/operators/textstats.py::mirror_hosts(fp_cap)",
-    "gumbo_pp_spark/operators/textstats.py::repeated_windows(df_cap)",
-    "gumbo_pp_spark/operators/textstats.py::stratified_sample(default_e4)",
-    "gumbo_pp_spark/operators/textstats.py::repeated_window_stats(df_cap)",
-    "gumbo_pp_spark/operators/textstats.py::corpus_report(min_tokens)",
-    "gumbo_pp_spark/operators/textstats.py::corpus_report(min_stopword_ratio_e4)",
-    "gumbo_pp_spark/operators/textstats.py::corpus_report(min_alpha_ratio_e4)",
-    "gumbo_pp_spark/operators/textstats.py::classifier_weights(n_buckets)",
-    "gumbo_pp_spark/operators/textstats.py::holdout_split(val_pct)",
-    "gumbo_pp_spark/parser/html5.py::parse_html(options)",
-    "gumbo_pp_spark/plans/lineage.py::vacuum_uncommitted(min_age_sec)",
-    "gumbo_pp_spark/plans/partitioning.py::salt_skewed_keys(n_partitions)",
-    "gumbo_pp_spark/plans/partitioning.py::salt_skewed_keys(skew_factor)",
-    "gumbo_pp_spark/plans/partitioning.py::size_balanced_bins(target_bytes)",
-    "gumbo_pp_spark/sources/pdfs.py::make_pdf(compress)",
-    "gumbo_pp_spark/sources/warc.py::read_warc_cdx(records_per_task)",
+# public defaults the system sets one way that stay options -> reason
+_FIXED_OPTIONS = {
+    "gumbo_pp_spark/parser/html5.py::parse_html(options)":
+        "paper API: GumboOptions (src/gumbo_pp.cpp:27-31)",
+    "gumbo_pp_spark/nodetable.py::NodeTable.error_positions(tab_stop)":
+        "paper API: the GumboOptions.tab_stop source positions (src/gumbo_pp.cpp:27-31)",
+    "gumbo_pp_spark/nodetable.py::NodeTable.iter_matches(start)":
+        "paper API: daw::find_iterator from a position (table_scrape.cpp:54-62)",
+    "gumbo_pp_spark/plans/lineage.py::vacuum_uncommitted(min_age_sec)":
+        "safety: a writer attempt younger than this may still be running",
+    "gumbo_pp_spark/sources/pdfs.py::make_pdf(compress)":
+        "input form: the uncompressed streams the PDF parser must accept",
 }
 
 
-def test_every_public_default_is_set_only_by_tests_on_the_list():
-    """The same walk with tests not counted as callers: every default
-    only a test sets is on ``_TEST_ONLY_DEFAULTS``, and every entry
-    there still is one."""
-    test_only = set(_unset_public_defaults(with_tests=False))
-    assert sorted(test_only - _TEST_ONLY_DEFAULTS) == [], "new test-only defaults"
-    assert sorted(_TEST_ONLY_DEFAULTS - test_only) == [], "stale _TEST_ONLY_DEFAULTS entries"
+def test_every_option_is_set_two_ways():
+    """An option is a public defaulted parameter the system sets to at
+    least two values (:func:`_option_values`: a variable counts as
+    many, an omitted argument as the default).  One the system sets
+    one way is a constant, unless ``_FIXED_OPTIONS`` gives a reason."""
+    options = _option_values()
+    print(f"{len(options)} public defaults")
+    fixed = {k: v for k, v in options.items() if "<variable>" not in v and len(v) < 2}
+    found = sorted(fixed.keys() - _FIXED_OPTIONS.keys())
+    report = "".join(f"\n  {k}: {{{', '.join(sorted(fixed[k]))}}}" for k in found)
+    assert found == [], f"{len(found)} set one way ({len(options)} public defaults):{report}"
+    # an entry the system now sets two ways, or that is gone, leaves the list
+    stale = sorted(_FIXED_OPTIONS.keys() - fixed.keys())
+    assert stale == [], f"stale _FIXED_OPTIONS entries: {stale}"
 
 
 # definitions that no root reaches and that stay: (module path, name or
@@ -747,12 +789,12 @@ class TestSessionFourPlans:
         assert "partial_sum" in plan
         assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
 
-    def test_select_token_budget_has_no_global_sort(self, spark, docs):
+    def test_select_token_budget_has_no_global_sort(self, spark, docs, monkeypatch):
         from gumbo_pp_spark.operators.packing import select_token_budget
-        from gumbo_pp_spark.operators.textstats import lm_coverage
 
+        monkeypatch.setattr(T, "LM_SIZE", 16)
         scored = docs.join(
-            lm_coverage(docs, lm_size=16).select(
+            T.lm_coverage(docs).select(
                 "doc_id", F.col("coverage_e4").alias("score")
             ),
             "doc_id",
@@ -813,10 +855,9 @@ class TestSessionFourPlans:
         assert row_windows, specs
         assert all(block in part for part, _ in row_windows), row_windows
 
-    def test_lm_coverage_corpus_never_shuffled_on_bigram(self, spark, docs):
-        from gumbo_pp_spark.operators.textstats import lm_coverage
-
-        plan = plan_of(lm_coverage(docs, lm_size=16))
+    def test_lm_coverage_corpus_never_shuffled_on_bigram(self, spark, docs, monkeypatch):
+        monkeypatch.setattr(T, "LM_SIZE", 16)
+        plan = plan_of(T.lm_coverage(docs))
         final = plan.split("== Initial Plan ==")[0]
         # model side broadcast; the only hash exchanges are the model
         # build and the doc-keyed agg — never a bigram-keyed corpus one

@@ -4,6 +4,7 @@ fingerprint, as one lazy DataFrame plan."""
 
 from pyspark.sql import functions as F
 
+from gumbo_pp_spark import pipelines
 from gumbo_pp_spark.pipelines import build_training_corpus
 from gumbo_pp_spark.sources.pages import synth_pages, synth_pages_bench
 
@@ -65,10 +66,8 @@ def test_pipeline_rejects_unknown_near_dup_policy(spark):
         build_training_corpus(pages, near_dup_policy="nope")
 
 
-def test_pipeline_drops_repetitive_docs(spark):
+def test_pipeline_drops_repetitive_docs(spark, monkeypatch):
     # a degenerate looping page (one word repeated) must be gated out
-    from gumbo_pp_spark.pipelines import build_training_corpus
-
     rows = [
         (1, "https://a.example/1",
          bytearray(("<html><body><p>" + "spam " * 60 + "</p></body></html>").encode())),
@@ -77,7 +76,8 @@ def test_pipeline_drops_repetitive_docs(spark):
                     + "</p></body></html>").encode())),
     ]
     pages = spark.createDataFrame(rows, "doc_id bigint, url string, html binary")
-    out = build_training_corpus(pages, min_tokens=20, min_alpha_ratio_e4=5000)
+    monkeypatch.setattr(pipelines, "MIN_ALPHA_RATIO_E4", 5000)
+    out = build_training_corpus(pages, min_tokens=20)
     kept = {r.doc_id for r in out.collect()}
     assert kept == {2}
 
@@ -178,44 +178,13 @@ def test_run_training_corpus_floor_none_is_report_only(spark, tmp_path):
     assert m["ann_recall_ok"] is None
 
 
-def test_pipeline_classifier_gate_filters_and_stays_map_only(spark):
-    from gumbo_pp_spark.operators.textstats import quality_classifier
-
-    pages = synth_pages(spark, SF_SMOKE).select("doc_id", "url", "html")
-    base = build_training_corpus(pages)
-    gated = build_training_corpus(pages, classifier_min_score=0)
-    ids_base = {r["doc_id"] for r in base.select("doc_id").collect()}
-    ids_gated = {r["doc_id"] for r in gated.select("doc_id").collect()}
-    # NOT a subset relation: removing a near-dup pair's lower-score
-    # member can let its partner survive where base dropped it — the
-    # gate's contract is the predicate itself:
-    from gumbo_pp_spark.operators.extract import extract_main_text
-
-    scores = {
-        r["doc_id"]: r["score"]
-        for r in quality_classifier(
-            extract_main_text(pages, passthrough=("doc_id",)).select("doc_id", "text")
-        ).collect()
-    }
-    # every gated survivor clears the threshold; every sub-threshold
-    # doc is gone (the synthetic corpus straddles 0 on both sides)
-    assert ids_gated and all(scores[i] >= 0 for i in ids_gated)
-    neg = {i for i, sc in scores.items() if sc < 0}
-    assert neg and not (ids_gated & neg)
-    assert ids_base & neg  # the ungated pipeline kept some of them
-    # plan: the gate is a Filter, not a join — same number of joins as
-    # the ungated pipeline.  Compare ANALYZED plans: the optimized
-    # plan substitutes InMemoryRelation for subtrees another test
-    # cached, which collapses its join count nondeterministically.
-    pb = base._jdf.queryExecution().analyzed().toString()
-    pg = gated._jdf.queryExecution().analyzed().toString()
-    assert pg.count("Join") == pb.count("Join")
-    assert "aggregate(split(text" in pg and "aggregate(split(text" not in pb
-
-
-def test_pipeline_robots_and_transcode_pre_stages(spark):
+def test_pipeline_robots_and_transcode_pre_stages(spark, monkeypatch):
     """Robots-blocked pages never reach extraction; a latin-1 page
-    parses to the same text as its utf-8 twin when transcode=True."""
+    parses to the same text as its utf-8 twin once transcoded: both
+    crawl-layer operators compose in front of the pipeline."""
+    from gumbo_pp_spark.operators.encoding import sniff_and_transcode
+    from gumbo_pp_spark.operators.robots import robots_filter
+
     body = ("café words " + "alpha beta gamma delta epsilon zeta " * 8).strip()
     html = f"<html><body><p>{body}</p></body></html>"
     pages = spark.createDataFrame(
@@ -230,10 +199,11 @@ def test_pipeline_robots_and_transcode_pre_stages(spark):
         [("a.com", "User-agent: *\nDisallow: /block\n")],
         "host string, robots_txt string",
     )
-    corpus = build_training_corpus(
-        pages, robots=robots, transcode=True,
-        min_tokens=5, min_alpha_ratio_e4=0, max_top_word_frac_e4=10000,
-    )
+    pages = robots_filter(pages, robots).where("crawl_allowed").drop("crawl_allowed")
+    pages = sniff_and_transcode(pages, passthrough=("doc_id", "url"))
+    monkeypatch.setattr(pipelines, "MIN_ALPHA_RATIO_E4", 0)
+    monkeypatch.setattr(pipelines, "MAX_TOP_WORD_FRAC_E4", 10000)
+    corpus = build_training_corpus(pages, min_tokens=5)
     rows = {r.doc_id: r for r in corpus.collect()}
     assert 2 not in rows  # politeness gate
     # doc 3 is an exact dup of doc 1 AFTER transcode -> exact dedup
@@ -243,20 +213,17 @@ def test_pipeline_robots_and_transcode_pre_stages(spark):
     assert "café" in rows[1].clean_text
 
 
-def test_pipeline_host_stages_compose(spark):
+def test_pipeline_host_stages_compose(spark, monkeypatch):
     # per-host stages as pre-quality pipeline stages.  At min_tokens=40
     # the 20 synthetic hosts' measured bad fractions span 1200..4800 e4,
     # so a 3500 blocklist threshold drops some whole hosts but not all.
     pages = synth_pages(spark, SF_SMOKE).select("doc_id", "url", "html")
     base = build_training_corpus(pages, min_tokens=40).cache()
+    monkeypatch.setattr(pipelines, "BOILERPLATE_MIN_DOCS", 3)
+    monkeypatch.setattr(pipelines, "HOST_GATE_MIN_DOCS", 3)
+    monkeypatch.setattr(pipelines, "HOST_GATE_MAX_BAD_FRAC_E4", 3500)
     corpus = build_training_corpus(
-        pages,
-        min_tokens=40,
-        strip_boilerplate=True,
-        boilerplate_min_docs=3,
-        host_gate=True,
-        host_gate_min_docs=3,
-        host_gate_max_bad_frac_e4=3500,
+        pages, min_tokens=40, strip_boilerplate=True, host_gate=True
     ).cache()
     n = corpus.count()
     assert 0 < n < base.count()
@@ -274,6 +241,41 @@ def test_pipeline_host_stages_compose(spark):
     assert joined.count() >= n - 3
     base.unpersist()
     corpus.unpersist()
+
+
+def test_exact_dedup_combines_a_viral_group_map_side(spark):
+    # 40 copies of one page and 8 unique pages: the exact-dedup stage
+    # is a digest-keyed aggregate combined below its exchange, never a
+    # window partitioned by the digest (which would sort the whole
+    # viral group in one task); the group keeps its smallest doc_id,
+    # and a NULL doc_id row is dropped
+    from .test_physical_plans import plan_of, window_specs
+
+    def text(i):  # 30 six-letter md5-drawn words: no near-dups across i
+        import hashlib
+
+        return " ".join("".join(chr(97 + int(c, 16)) for c in
+                                hashlib.md5(f"{i}|{j}".encode()).hexdigest()[:6])
+                        for j in range(30))
+
+    rows = [(i, f"https://v{i}.example/", text(99)) for i in range(40, 80)]
+    rows += [(i, f"https://u{i}.example/", text(i)) for i in range(8)]
+    rows += [(None, "https://n.example/", text(50))]
+    pages = spark.createDataFrame(
+        [(d, u, bytearray(f"<p>{t}</p>".encode())) for d, u, t in rows],
+        "doc_id bigint, url string, html binary",
+    )
+    corpus = build_training_corpus(pages)
+    plan = plan_of(corpus)
+    assert not [p for p, _ in window_specs(plan) if any("md5" in c for c in p)], plan
+    nodes = [ln.strip(" :+-") for ln in plan.splitlines()]
+    final = next(i for i, ln in enumerate(nodes) if "functions=[min(struct(doc_id" in ln)
+    exchange = next(i for i in range(final, len(nodes)) if nodes[i].startswith("Exchange"))
+    assert "hashpartitioning(_groupingexpression" in nodes[exchange], plan
+    assert "partial_min(struct(doc_id" in nodes[exchange + 1], plan
+    assert "md5(cast(text" in "".join(nodes[exchange:exchange + 4]), plan
+    kept = {r.doc_id for r in corpus.collect()}
+    assert kept == {40, *range(8)}
 
 
 def test_extend_training_corpus_appends_only_new_content(spark):

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from gumbo_pp_spark.plans.lineage import PartitionLedger, extract_with_resume, read_extracted
+from gumbo_pp_spark.plans import partitioning
 from gumbo_pp_spark.plans.partitioning import running_sum, salt_skewed_keys, size_balanced_bins
 from gumbo_pp_spark.sources.pages import synth_pages, synth_pages_bench
 
@@ -20,11 +21,18 @@ def skewed(spark):
     return synth_pages_bench(spark, SF_SMOKE, replicate=4, paragraphs=2).cache()
 
 
+@pytest.fixture
+def salting(monkeypatch):
+    # 16 partitions, a key salted above 2x the mean partition load
+    monkeypatch.setattr(partitioning, "SALT_PARTITIONS", 16)
+    monkeypatch.setattr(partitioning, "SKEW_FACTOR", 2.0)
+
+
 class TestSalting:
-    def test_heavy_host_split_across_partitions(self, spark, skewed):
+    def test_heavy_host_split_across_partitions(self, spark, skewed, salting):
         n = 16
         total = skewed.count()
-        salted = salt_skewed_keys(skewed, n_partitions=n, skew_factor=2.0)
+        salted = salt_skewed_keys(skewed)
         per_part = (
             salted.withColumn("pid", F.spark_partition_id())
             .groupBy("pid")
@@ -39,8 +47,8 @@ class TestSalting:
         assert max_load < 0.5 * heavy_rows, f"max {max_load}, heavy {heavy_rows}"
         assert max_load < 4.0 * total / n, f"max {max_load} of {total} in {n} parts"
 
-    def test_salts_only_heavy_keys(self, spark, skewed):
-        salted = salt_skewed_keys(skewed, n_partitions=16, skew_factor=2.0)
+    def test_salts_only_heavy_keys(self, spark, skewed, salting):
+        salted = salt_skewed_keys(skewed)
         per_key = salted.groupBy("part_key").agg(F.countDistinct("salt").alias("s")).collect()
         fanout = {r["part_key"]: r["s"] for r in per_key}
         assert fanout["heavy-host.example.com"] > 1
@@ -49,9 +57,10 @@ class TestSalting:
 
 
 class TestSizeBins:
-    def test_bins_bounded_by_target(self, spark, skewed):
+    def test_bins_bounded_by_target(self, spark, skewed, monkeypatch):
         target = 512 * 1024
-        binned = size_balanced_bins(skewed, target_bytes=target)
+        monkeypatch.setattr(partitioning, "BIN_TARGET_BYTES", target)
+        binned = size_balanced_bins(skewed)
         per_bin = (
             binned.groupBy("size_bin").agg(F.sum("doc_bytes").alias("b")).collect()
         )
@@ -180,14 +189,15 @@ class TestLedgerManifest:
 
 
 class TestSizeBinsOversized:
-    def test_oversized_key_split_across_subbins(self, spark):
+    def test_oversized_key_split_across_subbins(self, spark, monkeypatch):
         from pyspark.sql import functions as F
 
         # one host carries far more bytes than the target bin size
         rows = [(f"https://big.example/{i}", bytearray(b"x" * 5000)) for i in range(200)]
         rows += [(f"https://h{i}.example/x", bytearray(b"y" * 100)) for i in range(20)]
         df = spark.createDataFrame(rows, "url string, html binary")
-        binned = size_balanced_bins(df, target_bytes=100_000)
+        monkeypatch.setattr(partitioning, "BIN_TARGET_BYTES", 100_000)
+        binned = size_balanced_bins(df)
         big = binned.where(F.col("part_key") == "big.example")
         n_bins = big.select("size_bin").distinct().count()
         assert n_bins == 10  # 1,000,000 bytes / 100,000 target
@@ -240,9 +250,10 @@ class TestRunningSum:
         from gumbo_pp_spark.operators import packing as P
 
         monkeypatch.setattr(P, "BLOCK_SIZE", 4)
+        monkeypatch.setattr(P, "PACK_SHARDS", 3)
         df = spark.createDataFrame([(i, " ".join(["w"] * (1 + i % 6))) for i in range(60)],
                                    "doc_id bigint, text string")
-        got = {r.doc_id: r.start_tok for r in P.pack_sequences(df, n_shards=3).collect()}
+        got = {r.doc_id: r.start_tok for r in P.pack_sequences(df).collect()}
         assert got == self._single_window(df.selectExpr(
             "doc_id AS id", "doc_id % 3 AS part", "0L AS blk",
             "CAST(size(split(text, ' ')) AS BIGINT) AS v"))

@@ -178,7 +178,7 @@ class TestCrawlDelay:
             "host string, robots_txt string",
         )
         got = {r.host: (r.crawl_delay_ms, r.fetch_budget)
-               for r in crawl_schedule(robots, window_sec=60).collect()}
+               for r in crawl_schedule(robots).collect()}
         assert got == {
             "slow.example": (30000, 2),
             "fast.example": (500, 120),
@@ -196,7 +196,7 @@ class TestCrawlDelay:
             [("verystrict.example", "User-agent: *\nCrawl-delay: 120\n")],
             "host string, robots_txt string",
         )
-        sched = crawl_schedule(robots, window_sec=60)
+        sched = crawl_schedule(robots)
         (r,) = sched.collect()
         assert (r.crawl_delay_ms, r.fetch_budget) == (120000, 1)
         frontier = spark.createDataFrame(
@@ -228,7 +228,7 @@ class TestCrawlDelay:
             "host string, robots_txt string",
         )
         got = {r.host: (r.crawl_delay_ms, r.fetch_budget)
-               for r in crawl_schedule(robots, window_sec=60).collect()}
+               for r in crawl_schedule(robots).collect()}
         assert got == {
             "inf.example": (1000, 60),        # non-finite → default
             "big.example": (10 ** 9, 1),      # clamped, floor budget
@@ -241,7 +241,7 @@ class TestCrawlDelay:
             [("h", "User-agent: *\nCrawl-delay: 0\n")],
             "host string, robots_txt string",
         )
-        (r,) = crawl_schedule(robots, window_sec=60).collect()
+        (r,) = crawl_schedule(robots).collect()
         assert (r.crawl_delay_ms, r.fetch_budget) == (0, 60000)
 
 

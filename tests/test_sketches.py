@@ -1,6 +1,7 @@
 """Frequency sketches: Count-Min heavy hitters (one-sided error, plan
 shape), KMV distinct counts and length quantiles."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gumbo_pp_spark.operators import sketches as SK
@@ -10,8 +11,20 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+def _cms(monkeypatch, docs, width, depth, min_count):
+    monkeypatch.setattr(SK, "CMS_WIDTH", width)
+    monkeypatch.setattr(SK, "CMS_DEPTH", depth)
+    monkeypatch.setattr(SK, "CMS_MIN_COUNT", min_count)
+    return SK.cms_heavy_hitters(docs)
+
+
+def _kmv(monkeypatch, docs, k):
+    monkeypatch.setattr(SK, "KMV_K", k)
+    return SK.kmv_distinct(docs)
+
+
 class TestCmsSketch:
-    def test_estimate_one_sided_and_exact_when_wide(self, spark):
+    def test_estimate_one_sided_and_exact_when_wide(self, spark, monkeypatch):
         # narrow sketch: est >= true for every word; wide sketch with a
         # tiny vocab: no collisions -> est == true
         docs = _docs(
@@ -26,19 +39,19 @@ class TestCmsSketch:
         }
         narrow = {
             r["word"]: r["est"]
-            for r in SK.cms_heavy_hitters(docs, width=2, depth=2, min_count=0).collect()
+            for r in _cms(monkeypatch, docs, width=2, depth=2, min_count=0).collect()
         }
         assert set(narrow) == set(true)
         assert all(narrow[w] >= true[w] for w in true)
         wide = {
             r["word"]: r["est"]
-            for r in SK.cms_heavy_hitters(docs, width=4096, depth=3, min_count=0).collect()
+            for r in _cms(monkeypatch, docs, width=4096, depth=3, min_count=0).collect()
         }
         assert wide == true
 
-    def test_no_heavy_hitter_missed(self, spark):
+    def test_no_heavy_hitter_missed(self, spark, monkeypatch):
         docs = _docs(spark, [(i, "alpha beta " + f"tail{i}") for i in range(50)])
-        hh = {r["word"] for r in SK.cms_heavy_hitters(docs, width=4, depth=2, min_count=50).collect()}
+        hh = {r["word"] for r in _cms(monkeypatch, docs, width=4, depth=2, min_count=50).collect()}
         assert {"alpha", "beta"} <= hh  # est >= true == 50
 
     def test_estimation_join_is_broadcast(self, spark):
@@ -52,29 +65,29 @@ class TestCmsSketch:
 
 
 class TestKmvDistinct:
-    def test_exact_when_k_covers_vocab(self, spark):
+    def test_exact_when_k_covers_vocab(self, spark, monkeypatch):
         # k >= |vocab|: kth_hash is the max of ALL hashes and k_used is
         # the exact distinct count
         docs = _docs(spark, [(i, "a b c d e a b") for i in range(30)])
-        r = SK.kmv_distinct(docs, k=100).first()
+        r = _kmv(monkeypatch, docs, 100).first()
         assert r["k_used"] == 5
 
-    def test_estimate_reasonable_and_deterministic(self, spark):
+    def test_estimate_reasonable_and_deterministic(self, spark, monkeypatch):
         docs = _docs(spark, [(i, " ".join(f"w{j}" for j in range(i % 40, i % 40 + 60)))
                               for i in range(100)])
         # vocab = w0..w98 -> 99 distinct
-        a = SK.kmv_distinct(docs, k=24).first()
-        b = SK.kmv_distinct(docs, k=24).first()
+        a = _kmv(monkeypatch, docs, 24).first()
+        b = _kmv(monkeypatch, docs, 24).first()
         assert a == b
         assert a["k_used"] == 24
         # KMV with k=24 on 99 distinct: within a loose 3x band
         assert 33 <= a["est_distinct"] <= 300, a
 
-    def test_estimator_formula(self, spark):
+    def test_estimator_formula(self, spark, monkeypatch):
         import hashlib
 
         docs = _docs(spark, [(0, "x y z q r s t u v w")])
-        r = SK.kmv_distinct(docs, k=4).first()
+        r = _kmv(monkeypatch, docs, 4).first()
         hs = sorted(int(hashlib.md5(w.encode()).hexdigest()[:8], 16)
                     for w in "x y z q r s t u v w".split())
         assert r["kth_hash"] == hs[3]
@@ -116,6 +129,21 @@ class TestLengthQuantiles:
         # exchange; downstream windows run on the collapsed histogram
         assert "partial_count" in plan or "HashAggregate" in plan
         assert "CartesianProduct" not in plan
+
+
+    @pytest.mark.parametrize("grouped", [False, True])
+    def test_one_window_serves_cum_and_total(self, spark, grouped):
+        # the cumulative count and the group total share one ordered
+        # spec, so one sort and one Window operator compute both
+        from tests.test_physical_plans import initial_plan, plan_nodes
+
+        docs = spark.createDataFrame(
+            [(i, f"s{i % 3}", "w " * (1 + i % 7)) for i in range(30)],
+            "doc_id bigint, source string, text string",
+        )
+        out = SK.grouped_length_quantiles(docs) if grouped else SK.length_quantiles(docs)
+        windows = [n for n in plan_nodes(initial_plan(out)) if n.nodeName() == "Window"]
+        assert len(windows) == 1, out._jdf.queryExecution().executedPlan().toString()
 
 
 class TestGroupedQuantiles:

@@ -63,11 +63,13 @@ def test_payload_without_http_envelope_passthrough():
 @pytest.fixture(scope="module")
 def warc_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("warc"))
-    W.write_warc_corpus(synth_pages(spark, SF_SMOKE), d, n_files=4)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(W, "N_WARC_FILES", 4)
+        W.write_warc_corpus(synth_pages(spark, SF_SMOKE), d)
     return d
 
 
-def test_write_layout_and_determinism(spark, warc_dir, tmp_path):
+def test_write_layout_and_determinism(spark, warc_dir, tmp_path, monkeypatch):
     names = sorted(os.listdir(warc_dir))
     assert names == sorted(
         [f"part-{i:05d}.warc.gz" for i in range(4)] + [f"part-{i:05d}.cdx" for i in range(4)]
@@ -75,7 +77,8 @@ def test_write_layout_and_determinism(spark, warc_dir, tmp_path):
     # byte-deterministic re-write (resume property: a re-run job
     # rewrites identical files — no uuid4/now() anywhere in the sink)
     d2 = str(tmp_path / "again")
-    W.write_warc_corpus(synth_pages(spark, SF_SMOKE), d2, n_files=4)
+    monkeypatch.setattr(W, "N_WARC_FILES", 4)
+    W.write_warc_corpus(synth_pages(spark, SF_SMOKE), d2)
     for n in names:
         with open(os.path.join(warc_dir, n), "rb") as a, open(os.path.join(d2, n), "rb") as b:
             assert a.read() == b.read(), n
@@ -95,8 +98,9 @@ def test_cdx_sidecar_addresses_members(warc_dir):
         assert ok and u == url
 
 
-def test_read_warc_cdx_ranged(spark, warc_dir):
-    out = W.read_warc_cdx(spark, warc_dir, records_per_task=50)
+def test_read_warc_cdx_ranged(spark, warc_dir, monkeypatch):
+    monkeypatch.setattr(W, "RECORDS_PER_TASK", 50)
+    out = W.read_warc_cdx(spark, warc_dir)
     assert out.count() == 500
     # html byte-identity against the source pages, per url
     orig = synth_pages(spark, SF_SMOKE).select("url", "warc_ts", F.md5(F.col("html").cast("string")).alias("h"))
