@@ -2,12 +2,12 @@
 
 Sits between a byte source (WARC reader, binaryFile scan) and the
 parse stage: every page's encoding is sniffed per the WHATWG rules
-(BOM → transport label → ≤1024-byte meta prescan → windows-1252
-default; kernel in :mod:`gumbo_pp_spark.parser.encoding`) and
-non-UTF-8 pages are transcoded so the parser's UTF-8 contract holds
-on a real crawl (the reference, like libgumbo, takes pre-transcoded
-UTF-8 — reference ``src/gumbo_pp.cpp`` — leaving this stage to the
-caller; here the caller side is implemented).
+(BOM → ≤1024-byte meta prescan → windows-1252 default; kernel in
+:mod:`gumbo_pp_spark.parser.encoding`) and non-UTF-8 pages are
+transcoded so the parser's UTF-8 contract holds on a real crawl
+(the reference, like libgumbo, takes pre-transcoded UTF-8 —
+reference ``src/gumbo_pp.cpp`` — leaving this stage to the caller;
+here the caller side is implemented).
 
 Scale shape: map-only ``mapInArrow`` (zero shuffle, composes into the
 same narrow stage as the parse that follows); the dominant utf-8 case
@@ -25,8 +25,6 @@ from ..parser.encoding import to_utf8
 from ..plans.arrowmap import map_rows
 
 ENC_FIELDS = "html binary, encoding string, enc_src string"
-#: the column that carries a page's HTTP Content-Type charset label
-TRANSPORT_COL = "charset"
 
 
 def sniff_and_transcode(
@@ -34,14 +32,11 @@ def sniff_and_transcode(
     passthrough: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
     """Replace ``html`` with UTF-8 bytes; append ``encoding`` (the
-    sniffed WHATWG name) and ``enc_src`` (``bom | transport | meta |
-    default``).  A frame that carries a :data:`TRANSPORT_COL` column
-    gives each page its HTTP charset label (the transport layer of the
-    precedence order).  A NULL ``html`` is sniffed as the empty page
+    sniffed WHATWG name) and ``enc_src`` (``bom | meta | detected |
+    default``).  A NULL ``html`` is sniffed as the empty page
     ``b""``."""
 
-    def row(raw, label=None):
-        return [to_utf8(b"" if raw is None else bytes(raw), label)]
+    def row(raw):
+        return [to_utf8(b"" if raw is None else bytes(raw))]
 
-    inputs = ("html", TRANSPORT_COL) if TRANSPORT_COL in df.columns else ("html",)
-    return map_rows(df, inputs, ENC_FIELDS, row, passthrough)
+    return map_rows(df, ("html",), ENC_FIELDS, row, passthrough)

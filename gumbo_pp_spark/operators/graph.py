@@ -19,8 +19,6 @@ from pyspark.sql import DataFrame, functions as F
 DAMPING_E2 = 85
 #: fixed-point scale of a PageRank rank
 RANK_SCALE = 10**9
-#: iterations between lineage-capping local checkpoints
-CHECKPOINT_EVERY = 4
 #: rounds of :func:`pagerank` and :func:`hits`
 N_ITER = 3
 #: fixed-point scale of a HITS hub or authority score
@@ -38,16 +36,12 @@ def pagerank(edges: DataFrame) -> DataFrame:
     node-sized rank table on ``src`` (at 10^12 edges the edge table is
     pre-partitioned/bucketed on src so the join co-locates; the rank
     side is node-sized, often broadcastable at host granularity) and
-    one map-side-combined groupBy on ``dst``.  ``localCheckpoint``
-    caps plan/lineage growth, same discipline as
-    ``connected_components`` — O(iters) rounds, never a driver-side
-    edge materialization.  Round 8: the checkpoint fires every
-    :data:`CHECKPOINT_EVERY` rounds instead of every round — each
-    materialization forced an RDD round-trip that cost ~3× the actual
-    rank math at bench scale (1.38 s → 0.49 s for 3 rounds), while
-    lineage depth stays bounded at CHECKPOINT_EVERY iterations'
-    worth of operators (identical ranks either way; short runs like
-    the 3-round suite query never checkpoint at all)."""
+    one map-side-combined groupBy on ``dst``.  Each round reads the
+    previous ranks once, so the plan grows linearly in :data:`N_ITER`
+    and no round is checkpointed: a per-round ``localCheckpoint``
+    forced an RDD round-trip that cost ~3× the rank math at bench
+    scale (1.38 s → 0.49 s for 3 rounds without it).  Never a
+    driver-side edge materialization."""
     src_nodes = edges.select(F.col("src").cast("bigint").alias("node"))
     dst_nodes = edges.select(F.col("dst").cast("bigint").alias("node"))
     nodes = src_nodes.union(dst_nodes).distinct()
@@ -60,8 +54,7 @@ def pagerank(edges: DataFrame) -> DataFrame:
     )
     base = (100 - DAMPING_E2) * RANK_SCALE // 100
     ranks = nodes.withColumn("rank", F.lit(RANK_SCALE).cast("bigint"))
-    n_iter = N_ITER
-    for it in range(n_iter):
+    for _ in range(N_ITER):
         contrib = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(outdeg.withColumnRenamed("node", "src"), "src")
@@ -75,8 +68,6 @@ def pagerank(edges: DataFrame) -> DataFrame:
                 f"CAST({base} + ({DAMPING_E2} * coalesce(s, 0)) DIV 100 AS BIGINT) AS rank",
             )
         )
-        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
     return ranks.select(F.col("node").cast("bigint"), F.col("rank").cast("bigint"))
 
 

@@ -78,8 +78,6 @@ def pack_sequences(df: DataFrame) -> DataFrame:
     of the input without it.
     """
     seq_len, n_shards = SEQ_LEN, PACK_SHARDS
-    if seq_len <= 0 or n_shards <= 0:
-        raise ValueError(f"seq_len={seq_len} and n_shards={n_shards} must be positive")
     t = df.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         (F.col("doc_id") % n_shards).cast("bigint").alias("shard"),
@@ -120,8 +118,6 @@ def chunk_tokens(df: DataFrame) -> DataFrame:
     Map-only: one projection + explode, no shuffle.
     """
     width, stride = CHUNK_WIDTH, CHUNK_STRIDE
-    if width <= 0 or stride <= 0:
-        raise ValueError(f"width={width} and stride={stride} must be positive")
     # project the split once: Spark does not hoist loop-invariant
     # subexpressions out of higher-order-function lambdas (see
     # dedup.shingles), so the lambda below must use a bound array col

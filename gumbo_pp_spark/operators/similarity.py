@@ -44,8 +44,8 @@ def _query_side(queries: DataFrame, *extra) -> DataFrame:
     )
 
 
-def _top_k(candidates: DataFrame, k: int) -> DataFrame:
-    """Per query, the ``k`` candidate vectors of highest cosine (ties
+def _top_k(candidates: DataFrame) -> DataFrame:
+    """Per query, the :data:`TOP_K` candidate vectors of highest cosine (ties
     to the smaller vec_id), the query itself excluded.  ``candidates``
     pairs corpus rows (vec_id, embedding, norm) with query rows
     (query_id, q_vec, q_norm).  Returns (query_id, neighbor_id,
@@ -59,7 +59,7 @@ def _top_k(candidates: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select(
             F.col("query_id").cast("bigint"),
             F.col("vec_id").cast("bigint").alias("neighbor_id"),
@@ -87,12 +87,8 @@ def _recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
-def cosine_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query vector.
+def cosine_topk(df: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-:data:`TOP_K` cosine neighbors per query vector.
 
     The query set is broadcast (small dim table pattern) so the big
     side is never shuffled FOR THE JOIN; the only wide exchange is the
@@ -101,7 +97,7 @@ def cosine_topk(
     across cores by :func:`_corpus_side`.)  Returns (query_id,
     neighbor_id, rank).
     """
-    return _top_k(_corpus_side(df).crossJoin(F.broadcast(_query_side(queries))), k)
+    return _top_k(_corpus_side(df).crossJoin(F.broadcast(_query_side(queries))))
 
 
 #: embedding width the hyperplane sketches are drawn for
@@ -112,9 +108,10 @@ NEAR_DUP_PLANES = 4
 #: (:func:`cosine_near_dup_pairs`, :func:`semantic_dedup`), tuned to the
 #: synthetic random-vector corpus, whose max pairwise cosine is ≈ 0.44
 NEAR_DUP_COSINE = 0.35
-#: k of the recall@k audits and the probe lists of the IVF one
-RECALL_K = 3
-RECALL_NPROBE = 2
+#: neighbors per query of every top-k search and recall@k audit
+TOP_K = 3
+#: inverted lists an IVF query probes
+IVF_NPROBE = 2
 
 
 def cosine_near_dup_pairs(df: DataFrame) -> DataFrame:
@@ -186,13 +183,7 @@ def hyperplane_sketch_expr(dim: int, n_planes: int) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
-def lsh_cosine_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    dim: int = DIM,
-    n_planes: int = 6,
-) -> DataFrame:
+def lsh_cosine_topk(df: DataFrame, queries: DataFrame, n_planes: int = 6) -> DataFrame:
     """Approximate variant: candidates restricted to the query's LSH
     bucket (equi-join on bucket → co-partitioned shuffle instead of a
     cross join).  At 100 TB the bucket column is what you bucket/
@@ -203,27 +194,22 @@ def lsh_cosine_topk(
     multi-probe LSH recall boost that costs
     ``n_planes`` extra probe rows per query instead of more tables.
     """
-    sk = hyperplane_sketch_expr(dim, n_planes)
+    sk = hyperplane_sketch_expr(DIM, n_planes)
     base = _corpus_side(df).withColumn("bucket", F.expr(sk))
     q = _query_side(queries, F.expr(sk).alias("bucket"))
     probes = ", ".join(f"bucket ^ {2 ** p}" for p in range(n_planes))
     q = q.withColumn("bucket", F.explode(F.expr(f"array(bucket, {probes})")))
-    return _top_k(base.join(F.broadcast(q), "bucket"), k)
+    return _top_k(base.join(F.broadcast(q), "bucket"))
 
 
-def lsh_recall_vs_exact(
-    df: DataFrame,
-    queries: DataFrame,
-    dim: int = DIM,
-    n_planes: int = 6,
-) -> DataFrame:
-    """Measured recall@``RECALL_K`` of the LSH path against the exact
+def lsh_recall_vs_exact(df: DataFrame, queries: DataFrame, n_planes: int = 6) -> DataFrame:
+    """Measured recall@:data:`TOP_K` of the LSH path against the exact
     baseline — one row (n_queries, n_exact, n_hit, recall_e4).  This is the
     metric that gates an ANN rollout at scale; both sides are
     deterministic so the oracle recomputes it bit-for-bit."""
     return _recall(
-        cosine_topk(df, queries, k=RECALL_K),
-        lsh_cosine_topk(df, queries, k=RECALL_K, dim=dim, n_planes=n_planes),
+        cosine_topk(df, queries),
+        lsh_cosine_topk(df, queries, n_planes=n_planes),
     )
 
 
@@ -275,15 +261,10 @@ def ivf_assignments(
     )
 
 
-def ivf_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    pivots: DataFrame,
-    k: int = 3,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF-Flat approximate top-k: per query, exact cosine search
-    restricted to the inverted lists of its ``nprobe`` nearest pivots.
+def ivf_topk(df: DataFrame, queries: DataFrame, pivots: DataFrame) -> DataFrame:
+    """IVF-Flat approximate top-:data:`TOP_K`: per query, exact cosine
+    search restricted to the inverted lists of its :data:`IVF_NPROBE`
+    nearest pivots.
     Returns (query_id, neighbor_id, rank)."""
     from pyspark.sql.window import Window
 
@@ -296,20 +277,20 @@ def ivf_topk(
         q.crossJoin(F.broadcast(p))
         .withColumn("qcos", F.expr(qdot) / (F.col("q_norm") * F.col("p_norm")))
         .withColumn("prank", F.row_number().over(wq))
-        .where(F.col("prank") <= nprobe)
+        .where(F.col("prank") <= IVF_NPROBE)
         .select("query_id", "q_vec", "q_norm", "pivot_id")
     )
-    return _top_k(assigned.join(F.broadcast(probes), "pivot_id"), k)
+    return _top_k(assigned.join(F.broadcast(probes), "pivot_id"))
 
 
 def ivf_recall_vs_exact(df: DataFrame, queries: DataFrame, pivots: DataFrame) -> DataFrame:
-    """Measured recall@``RECALL_K`` of the IVF path (``RECALL_NPROBE``
+    """Measured recall@:data:`TOP_K` of the IVF path (:data:`IVF_NPROBE`
     probe lists) against the exact baseline — one row (n_queries,
     n_exact, n_hit, recall_e4), the IVF analogue of
     :func:`lsh_recall_vs_exact`."""
     return _recall(
-        cosine_topk(df, queries, k=RECALL_K),
-        ivf_topk(df, queries, pivots, k=RECALL_K, nprobe=RECALL_NPROBE),
+        cosine_topk(df, queries),
+        ivf_topk(df, queries, pivots),
     )
 
 

@@ -614,13 +614,15 @@ def contamination(docs: DataFrame, evals: DataFrame) -> DataFrame:
     )
 
 
-def sentence_contamination(docs: DataFrame, evals: DataFrame, n: int = 8) -> DataFrame:
+def sentence_contamination(docs: DataFrame, evals: DataFrame) -> DataFrame:
     """(doc_id, pos) of every SENTENCE (``'. '``-delimited, 0-indexed)
-    sharing at least one word ``n``-gram with ``evals`` — the surgical
-    sibling of :func:`contamination` for when an eval prompt quotes one
-    sentence embedded in an otherwise-good page.  Scale shape: the
-    sentence+gram explode is map-only, grams join the broadcast eval
-    table, and the output is contaminated-sentences-sized ≪ corpus."""
+    sharing at least one word :data:`SENTENCE_N`-gram with ``evals`` —
+    the surgical sibling of :func:`contamination` for when an eval
+    prompt quotes one sentence embedded in an otherwise-good page.
+    Scale shape: the sentence+gram explode is map-only, grams join the
+    broadcast eval table, and the output is contaminated-sentences-sized
+    ≪ corpus."""
+    n = SENTENCE_N
     grams = eval_ngrams(evals, n)
     sents = split_words(docs, keep=(DOC_ID,), min_words=n, segments="[.] ")
     sg = sents.select(
@@ -639,7 +641,7 @@ def decontaminate_sentences(docs: DataFrame, evals: DataFrame) -> DataFrame:
     broadcast when the set is small, the common case), and the rebuild
     is a map-side indexed ``filter`` over the re-split sentence array —
     no explode-regroup of document text through an exchange."""
-    bad = sentence_contamination(docs, evals, SENTENCE_N)
+    bad = sentence_contamination(docs, evals)
     return _drop_segment_positions(docs, bad)
 
 
@@ -670,11 +672,15 @@ def _drop_segment_positions(
     )
 
 
-def boilerplate_segments(df: DataFrame, min_docs: int = 3) -> DataFrame:
+#: same-host documents a segment repeats in to be boilerplate
+BOILERPLATE_MIN_DOCS = 3
+
+
+def boilerplate_segments(df: DataFrame) -> DataFrame:
     """(host, seg_md5, n_docs): ``'. '``-delimited segments repeated
-    across ≥ ``min_docs`` distinct documents of the SAME host — the
-    per-domain boilerplate table (navigation, footers, cookie banners
-    repeat within a site, not across the web).  Scale shape: the
+    across ≥ :data:`BOILERPLATE_MIN_DOCS` distinct documents of the SAME
+    host — the per-domain boilerplate table (navigation, footers,
+    cookie banners repeat within a site, not across the web).  Scale shape: the
     explode carries only (host, doc_id, md5) — document text never
     leaves its partition — and the (host, seg) aggregate is one
     map-side-combined shuffle on a high-cardinality composite key."""
@@ -686,13 +692,11 @@ def boilerplate_segments(df: DataFrame, min_docs: int = 3) -> DataFrame:
     return (
         segs.groupBy("host", "seg_md5")
         .agg(F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
-        .where(F.col("n_docs") >= min_docs)
+        .where(F.col("n_docs") >= BOILERPLATE_MIN_DOCS)
     )
 
 
-def remove_boilerplate(
-    df: DataFrame, min_docs: int = 3, keep: tuple[str, ...] = ()
-) -> DataFrame:
+def remove_boilerplate(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, clean_text, n_dropped [, *keep]): strip per-host
     boilerplate segments (see :func:`boilerplate_segments`) from every
     document — every document survives, shortened.  Scale shape: two
@@ -702,7 +706,7 @@ def remove_boilerplate(
     NOTE: ``df`` is referenced by three subplans (boilerplate table,
     position flags, rebuild) — cache it when it is itself expensive to
     recompute (the pipeline does)."""
-    bp = boilerplate_segments(df, min_docs=min_docs)
+    bp = boilerplate_segments(df)
     segs = df.select(
         "host",
         F.col("doc_id").cast("bigint").alias("doc_id"),

@@ -161,9 +161,9 @@ _REGISTRY: dict[str, tuple[str, tuple[str, ...]]] = {
          "utf-16", "utf-16le"),
     ),
     # no Python codec is WHATWG-exact for x-user-defined (0x80-0xFF ->
-    # U+F780-U+F7FF); as the sniffer only ever returns it via the
-    # transport path (meta substitutes windows-1252), decode maps it
-    # to latin-1 — the loud-enough stand-in, documented here.
+    # U+F780-U+F7FF); the sniffer never returns it (meta substitutes
+    # windows-1252), and decode maps it to latin-1 — the loud-enough
+    # stand-in, documented here.
     "x-user-defined": ("latin-1", ("x-user-defined",)),
     "replacement": (
         "",  # never decoded: the Encoding Standard maps the whole
@@ -364,17 +364,15 @@ def prescan(data: bytes) -> str | None:
 # ----------------------------------------------------------------------
 # sniff + decode
 # ----------------------------------------------------------------------
-def sniff_encoding(
-    data: bytes, transport_label: str | None = None
-) -> tuple[str, str]:
+def sniff_encoding(data: bytes) -> tuple[str, str]:
     """(whatwg encoding name, source) for one page's bytes.
 
-    Precedence per HTML Standard §13.2.3.2: BOM beats everything
-    (including transport), then the transport-layer label (HTTP
-    Content-Type charset), then the ≤1024-byte meta prescan, then the
-    windows-1252 default (the spec's en-locale default, and the right
-    guess for legacy web bytes).  Source is one of
-    ``bom | transport | meta | default``.
+    Precedence per HTML Standard §13.2.3.2: BOM beats everything, then
+    the ≤1024-byte meta prescan, then the windows-1252 default (the
+    spec's en-locale default, and the right guess for legacy web
+    bytes).  The spec's transport-layer label (HTTP Content-Type
+    charset) sits between BOM and prescan; no page source here carries
+    one.  Source is one of ``bom | meta | detected | default``.
     """
     if data[:3] == b"\xef\xbb\xbf":
         return "utf-8", "bom"
@@ -382,9 +380,6 @@ def sniff_encoding(
         return "utf-16be", "bom"
     if data[:2] == b"\xff\xfe":
         return "utf-16le", "bom"
-    t = normalize_label(transport_label)
-    if t is not None:
-        return t, "transport"
     p = prescan(data)
     if p is not None:
         return p, "meta"
@@ -420,9 +415,7 @@ def decode_bytes(data: bytes, encoding: str) -> str:
     return s
 
 
-def to_utf8(
-    data: bytes, transport_label: str | None = None
-) -> tuple[bytes, str, str]:
+def to_utf8(data: bytes) -> tuple[bytes, str, str]:
     """(utf-8 bytes, encoding name, source) — the corpus-stage kernel.
 
     Fast path: a page sniffed utf-8 WITHOUT a BOM passes through
@@ -431,7 +424,7 @@ def to_utf8(
     crawl that is the overwhelming majority of pages, so the transcode
     stage costs ~an memchr-scale prescan per page, not a copy.
     """
-    enc, src = sniff_encoding(data, transport_label)
+    enc, src = sniff_encoding(data)
     if enc == "utf-8":
         if data[:3] == b"\xef\xbb\xbf":
             return bytes(data[3:]), enc, src

@@ -27,8 +27,6 @@ from .operators.textstats import _quality_fail_expr, top_word_frac_e4_expr
 #: most frequent word's share, both ×1e-4
 MIN_ALPHA_RATIO_E4 = 6000
 MAX_TOP_WORD_FRAC_E4 = 5000
-#: same-host documents a segment repeats in to be boilerplate
-BOILERPLATE_MIN_DOCS = 3
 #: the host gate: hosts with at least this many documents, of which
 #: more than this share (×1e-4) fail the quality gate, are dropped
 HOST_GATE_MIN_DOCS = 5
@@ -53,10 +51,11 @@ def build_training_corpus(
 
     Optional per-host stages over the extracted text (each documented
     on its operator): ``strip_boilerplate`` removes segments repeating
-    across ≥ :data:`BOILERPLATE_MIN_DOCS` documents of the same host
-    (site chrome) before any quality scoring; ``host_gate`` drops
-    every document of hosts whose bad-document fraction exceeds
-    :data:`HOST_GATE_MAX_BAD_FRAC_E4` (the domain blocklist).  Turning
+    across ≥ :data:`~.operators.textstats.BOILERPLATE_MIN_DOCS`
+    documents of the same host (site chrome) before any quality
+    scoring; ``host_gate`` drops every document of hosts whose
+    bad-document fraction exceeds :data:`HOST_GATE_MAX_BAD_FRAC_E4`
+    (the domain blocklist).  Turning
     either on caches the extraction output — both are two-pass
     operators and the parse stage must not run per subplan.
 
@@ -98,9 +97,9 @@ def build_training_corpus(
     if strip_boilerplate:
         from .operators.textstats import remove_boilerplate
 
-        docs = remove_boilerplate(
-            docs, min_docs=BOILERPLATE_MIN_DOCS, keep=("url", "host")
-        ).select("doc_id", "url", "host", F.col("clean_text").alias("text"))
+        docs = remove_boilerplate(docs, keep=("url", "host")).select(
+            "doc_id", "url", "host", F.col("clean_text").alias("text")
+        )
     if host_gate:
         from .operators.textstats import host_quality_gate
 
@@ -132,16 +131,21 @@ def build_training_corpus(
     # shuffle" taken to its limit: no shuffle at all).
     docs = docs.where(F.expr(top_word_frac_e4_expr()) <= MAX_TOP_WORD_FRAC_E4)
 
-    # exact dedup: keep the minimum doc_id of each content group.  The
-    # min over (doc_id, url, text) structs is a digest-keyed aggregate,
-    # combined map-side, so one viral duplicate group reaches its
-    # reducer as one row per map task — a window partitioned by the
-    # digest would sort the whole group in one task.
+    # exact dedup: keep the minimum doc_id of each content group.
+    # One digest-keyed window exchange replaces the round-7
+    # groupBy+self-join (two exchanges + another duplicated parse
+    # subtree).  A viral duplicate group sorts in one task; the
+    # map-side-combined alternative, min(struct(doc_id, url, text)) per
+    # digest, plans as a SortAggregate that sorts every row, text
+    # included, before the exchange, and was slower on a corpus with
+    # few duplicates.
+    from pyspark.sql.window import Window
+
+    wd = Window.partitionBy(F.md5("text"))
     docs = (
-        docs.where(F.col("doc_id").isNotNull())
-        .groupBy(F.md5("text").alias("_md5"))
-        .agg(F.min(F.struct("doc_id", "url", "text")).alias("_keep"))
-        .select("_keep.*")
+        docs.withColumn("_keep", F.min("doc_id").over(wd))
+        .where(F.col("doc_id") == F.col("_keep"))
+        .drop("_keep")
     )
 
     # cache the gated/deduped docs: the near-dup stage reads them once

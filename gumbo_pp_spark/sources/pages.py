@@ -248,10 +248,7 @@ def synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def synth_pages_bench(
-    spark: SparkSession,
-    sf_dir: str,
-    replicate: int = 8,
-    paragraphs: int = 12,
+    spark: SparkSession, sf_dir: str, replicate: int, paragraphs: int
 ) -> DataFrame:
     """Larger deterministic corpus for throughput runs: each document is
     replicated ``replicate`` times with distinct urls, and the body

@@ -159,7 +159,7 @@ def _duck_minhash_cte(
 
 
 def _duck_ivf_topk_sql() -> str:
-    # mirror of similarity.ivf_topk (k=3, nprobe=2): pivots = vec_id %
+    # mirror of similarity.ivf_topk (TOP_K, IVF_NPROBE): pivots = vec_id %
     # 25 = 7 (the deterministic coarse quantizer), queries = vec_id %
     # 100 = 0
     return (
@@ -176,14 +176,14 @@ def _duck_ivf_topk_sql() -> str:
         "probes AS (SELECT query_id, qv, qnorm, pivot_id FROM ("
         "SELECT q.query_id, q.qv, q.qnorm, p.pivot_id, row_number() OVER "
         "(PARTITION BY q.query_id ORDER BY list_dot_product(q.qv, p.pv) / (q.qnorm * p.pnorm) DESC, p.pivot_id) AS r "
-        "FROM q CROSS JOIN p) WHERE r <= 2), "
+        f"FROM q CROSS JOIN p) WHERE r <= {S.IVF_NPROBE}), "
         "scored AS (SELECT pr.query_id, a.vec_id, "
         "list_dot_product(a.v, pr.qv) / (a.norm * pr.qnorm) AS cos "
         "FROM assigned a JOIN probes pr USING (pivot_id) WHERE a.vec_id <> pr.query_id), "
         "ranked AS (SELECT query_id, vec_id, row_number() OVER "
         "(PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank FROM scored) "
         "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS neighbor_id, "
-        "CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= 3"
+        f"CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= {S.TOP_K}"
     )
 
 
@@ -293,12 +293,12 @@ _DUCK_EXACT_TOPK = (
     "ranked AS (SELECT query_id, vec_id, row_number() OVER "
     "(PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank FROM scored) "
     "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS neighbor_id, "
-    "CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= 3"
+    f"CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= {S.TOP_K}"
 )
 
 
 def _duck_lsh_topk_sql() -> str:
-    # mirror of similarity.lsh_cosine_topk (k=3, 4 planes; precomputed
+    # mirror of similarity.lsh_cosine_topk (TOP_K, 4 planes; precomputed
     # literal signs, multi-probe over the 4 hamming-1 buckets)
     bucket_terms = []
     for p in range(4):
@@ -322,7 +322,7 @@ def _duck_lsh_topk_sql() -> str:
         "ranked AS (SELECT query_id, vec_id, row_number() OVER "
         "(PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank FROM scored) "
         "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS neighbor_id, "
-        "CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= 3"
+        f"CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= {S.TOP_K}"
     )
 
 
@@ -968,15 +968,15 @@ def q_mirror_hosts(spark, sf_dir):
 
 def q_remove_boilerplate(spark, sf_dir):
     # per-host boilerplate strip: every document of a host carries the
-    # same footer segment ('. '-delimited), which min_docs=3 flags and
-    # the rebuild removes; organic repeats are handled identically on
-    # both sides
+    # same footer segment ('. '-delimited), which BOILERPLATE_MIN_DOCS
+    # flags and the rebuild removes; organic repeats are handled
+    # identically on both sides
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id",
         f"{_HOSTED_EXPR} AS host",
         f"concat({_SENT_DOCS_EXPR}, '. visit ', {_HOSTED_EXPR}, ' for more') AS text",
     )
-    return T.remove_boilerplate(docs, min_docs=3)
+    return T.remove_boilerplate(docs)
 
 
 def q_select_token_budget(spark, sf_dir):
@@ -1030,7 +1030,7 @@ def q_shingle_df_stats(spark, sf_dir):
 def q_ann_cosine(spark, sf_dir):
     emb = _tbl(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return S.cosine_topk(emb, queries, k=3)
+    return S.cosine_topk(emb, queries)
 
 
 def q_simhash_pairs(spark, sf_dir):
@@ -1044,7 +1044,7 @@ def q_ann_lsh(spark, sf_dir):
     # multi-probe — fully oracle-reproducible)
     emb = _tbl(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return S.lsh_cosine_topk(emb, queries, k=3, dim=64, n_planes=4)
+    return S.lsh_cosine_topk(emb, queries, n_planes=4)
 
 
 def q_ann_lsh_recall(spark, sf_dir):
@@ -1052,16 +1052,16 @@ def q_ann_lsh_recall(spark, sf_dir):
     # ANN rollout gate, recomputed bit-for-bit by the oracle
     emb = _tbl(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return S.lsh_recall_vs_exact(emb, queries, dim=64, n_planes=4)
+    return S.lsh_recall_vs_exact(emb, queries, n_planes=4)
 
 
 def q_ann_ivf(spark, sf_dir):
     # IVF-Flat scale path: deterministic sampled coarse quantizer
-    # (every 25th vector), nprobe=2 inverted-list search
+    # (every 25th vector), IVF_NPROBE inverted-list search
     emb = _tbl(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     pivots = emb.where(F.col("vec_id") % 25 == 7)
-    return S.ivf_topk(emb, queries, pivots, k=3, nprobe=2)
+    return S.ivf_topk(emb, queries, pivots)
 
 
 def q_ann_ivf_recall(spark, sf_dir):
@@ -2569,7 +2569,7 @@ ORACLES: dict[str, str] = {
         "s AS (SELECT doc_id, host, unnest(string_split(text, '. ')) AS seg, "
         "unnest(generate_series(0, len(string_split(text, '. ')) - 1)) AS pos FROM d), "
         "bp AS (SELECT host, md5(seg) AS h FROM s GROUP BY host, md5(seg) "
-        "HAVING count(DISTINCT doc_id) >= 3), "
+        f"HAVING count(DISTINCT doc_id) >= {T.BOILERPLATE_MIN_DOCS}), "
         "bad AS (SELECT doc_id, pos FROM s JOIN bp "
         "ON s.host = bp.host AND md5(s.seg) = bp.h) "
         "SELECT CAST(s.doc_id AS BIGINT) AS doc_id, "

@@ -16,10 +16,10 @@ Packaging (same as jobs/extract_job.py):
         [--strip-boilerplate] [--host-gate]
         [--extend-from <prior corpus parquet dir>]
 
-Every other threshold is a constant of ``gumbo_pp_spark.pipelines``
-(``MIN_ALPHA_RATIO_E4``, ``MAX_TOP_WORD_FRAC_E4``,
-``BOILERPLATE_MIN_DOCS``, ``HOST_GATE_MIN_DOCS``,
-``HOST_GATE_MAX_BAD_FRAC_E4``); the recall audit queries the 16 lowest
+Every other threshold is a constant: ``MIN_ALPHA_RATIO_E4``,
+``MAX_TOP_WORD_FRAC_E4``, ``HOST_GATE_MIN_DOCS`` and
+``HOST_GATE_MAX_BAD_FRAC_E4`` of ``gumbo_pp_spark.pipelines``, and
+``BOILERPLATE_MIN_DOCS`` of ``gumbo_pp_spark.operators.textstats``; the recall audit queries the 16 lowest
 ``vec_id`` values.  Robots and charset stages are not part of this
 job: apply ``robots_filter`` or ``sniff_and_transcode`` to the pages
 first.

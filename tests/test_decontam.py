@@ -167,5 +167,5 @@ class TestSentenceDecontamination:
 
         docs = _docs(spark, [(1, _sent("a"))])
         evals = spark.createDataFrame([(_sent("x"),)], "text string")
-        plan = plan_of(T.sentence_contamination(docs, evals, n=8))
+        plan = plan_of(T.sentence_contamination(docs, evals))
         assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan

@@ -89,7 +89,7 @@ class TestLshSketch:
         expr = S.hyperplane_sketch_expr(dim=8, n_planes=3)
         assert "md5" not in expr  # signs are plan-time literals now
 
-    def test_multiprobe_recall_not_worse(self, spark, tmp_path):
+    def test_multiprobe_recall_not_worse(self, spark, tmp_path, monkeypatch):
         import numpy as np
 
         rng = np.random.default_rng(7)
@@ -100,9 +100,10 @@ class TestLshSketch:
         sk = S.hyperplane_sketch_expr(16, 4)
         single = S._top_k(
             S._corpus_side(emb).withColumn("bucket", F.expr(sk)).join(
-                F.broadcast(S._query_side(q, F.expr(sk).alias("bucket"))), "bucket"), 3)
-        multi = S.lsh_cosine_topk(emb, q, k=3, dim=16, n_planes=4)
-        exact = S.cosine_topk(emb, q, k=3)
+                F.broadcast(S._query_side(q, F.expr(sk).alias("bucket"))), "bucket"))
+        monkeypatch.setattr(S, "DIM", 16)
+        multi = S.lsh_cosine_topk(emb, q, n_planes=4)
+        exact = S.cosine_topk(emb, q)
         ex = {(r.query_id, r.neighbor_id) for r in exact.collect()}
         hit_single = len(ex & {(r.query_id, r.neighbor_id) for r in single.collect()})
         hit_multi = len(ex & {(r.query_id, r.neighbor_id) for r in multi.collect()})
@@ -176,7 +177,7 @@ class TestIvf:
             best = max(cos, key=lambda t: (t[0], -t[1]))[1]
             assert got[vid] == best, vid
 
-    def test_full_probe_equals_exact(self, spark):
+    def test_full_probe_equals_exact(self, spark, monkeypatch):
         # nprobe = all pivots -> every inverted list searched -> IVF
         # degenerates to the exact baseline
         emb = self._emb(spark)
@@ -184,19 +185,20 @@ class TestIvf:
         pivots = emb.where(F.col("vec_id") % 30 == 1)
         n_pivots = pivots.count()
         exact = {(r.query_id, r.neighbor_id, r.rank)
-                 for r in S.cosine_topk(emb, q, k=3).collect()}
+                 for r in S.cosine_topk(emb, q).collect()}
+        monkeypatch.setattr(S, "IVF_NPROBE", n_pivots)
         full = {(r.query_id, r.neighbor_id, r.rank)
-                for r in S.ivf_topk(emb, q, pivots, k=3, nprobe=n_pivots).collect()}
+                for r in S.ivf_topk(emb, q, pivots).collect()}
         assert full == exact
 
     def test_more_probes_not_worse(self, spark, monkeypatch):
         emb = self._emb(spark)
         q = emb.where(F.col("vec_id") % 40 == 0)
         pivots = emb.where(F.col("vec_id") % 30 == 1)
-        monkeypatch.setattr(S, "RECALL_K", 3)
-        monkeypatch.setattr(S, "RECALL_NPROBE", 1)
+        monkeypatch.setattr(S, "TOP_K", 3)
+        monkeypatch.setattr(S, "IVF_NPROBE", 1)
         r1 = S.ivf_recall_vs_exact(emb, q, pivots).first()
-        monkeypatch.setattr(S, "RECALL_NPROBE", 3)
+        monkeypatch.setattr(S, "IVF_NPROBE", 3)
         r3 = S.ivf_recall_vs_exact(emb, q, pivots).first()
         assert r3["n_hit"] >= r1["n_hit"]
         assert r1["n_queries"] == 3 and r1["n_exact"] == 9

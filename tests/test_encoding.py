@@ -37,10 +37,9 @@ class TestLabels:
 
 
 class TestBom:
-    def test_bom_beats_meta_and_transport(self):
+    def test_bom_beats_meta(self):
         data = b"\xef\xbb\xbf<meta charset=koi8-r>"
         assert sniff_encoding(data) == ("utf-8", "bom")
-        assert sniff_encoding(data, "gbk") == ("utf-8", "bom")
 
     def test_utf16_boms(self):
         assert sniff_encoding(b"\xfe\xff\x00h") == ("utf-16be", "bom")
@@ -137,11 +136,6 @@ class TestToUtf8:
         u, enc, src = to_utf8(b"<p>caf\xe9</p>")
         assert (u, enc, src) == ("<p>café</p>".encode(), "windows-1252", "default")
 
-    def test_transport_label(self):
-        u, enc, src = to_utf8(b"caf\xe9", "Latin1")
-        assert (enc, src) == ("windows-1252", "transport")
-        assert u == "café".encode()
-
     def test_empty_input(self):
         assert to_utf8(b"") == (b"", "windows-1252", "default")
 
@@ -170,20 +164,19 @@ class TestSparkStage:
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
 
-    def test_transport_column(self, spark):
+
+    def test_a_charset_column_is_not_read(self, spark):
+        # the sniff reads html alone: a frame's own charset column
+        # neither relabels its bytes nor reaches the output
         from gumbo_pp_spark.operators.encoding import sniff_and_transcode
 
         df = spark.createDataFrame(
-            [(0, bytearray(b"caf\xe9"), "iso-8859-1"), (1, bytearray(b"plain"), None)],
-            "doc_id long, html binary, charset string",
+            [(0, bytearray(b"caf\xe9"), "koi8-r")], "doc_id long, html binary, charset string"
         )
-        rows = {
-            r.doc_id: r
-            for r in sniff_and_transcode(df).collect()
-        }
-        assert rows[0].enc_src == "transport"
-        assert bytes(rows[0].html) == "café".encode()
-        assert rows[1].enc_src == "default"
+        (r,) = sniff_and_transcode(df).collect()
+        assert (r.encoding, r.enc_src) == ("windows-1252", "default")
+        assert bytes(r.html) == "café".encode()
+        assert r.asDict().keys() == {"doc_id", "html", "encoding", "enc_src"}
 
 
 class TestDetection:

@@ -52,15 +52,20 @@ class TestPagerank:
         assert r[0] == max(r.values())
         assert r[0] > 10 * r[5]
 
-    def test_checkpoint_off_same_result(self, spark, monkeypatch):
-        # 9 rounds cross CHECKPOINT_EVERY twice; a checkpoint interval
-        # past the last round turns checkpointing off
-        edges = [(i, (i * 3 + 2) % 11) for i in range(30)]
-        monkeypatch.setattr(G, "N_ITER", 9)
-        a = sorted(map(tuple, G.pagerank(_edges(spark, edges)).collect()))
-        monkeypatch.setattr(G, "CHECKPOINT_EVERY", 10)
-        b = sorted(map(tuple, G.pagerank(_edges(spark, edges)).collect()))
-        assert a == b
+    def test_plan_grows_linearly_in_rounds(self, spark, monkeypatch):
+        # no round is checkpointed: each reads the previous ranks once,
+        # so every round adds the same number of joins
+        import re
+
+        e = _edges(spark, [(i, (i * 7 + 3) % 60) for i in range(200)])
+
+        def joins(n):
+            monkeypatch.setattr(G, "N_ITER", n)
+            plan = G.pagerank(e)._jdf.queryExecution().optimizedPlan().toString()
+            return len(re.findall(r"\bJoin\b", plan))
+
+        j = [joins(n) for n in (1, 2, 3)]
+        assert j[2] - j[1] == j[1] - j[0] > 0, j
 
     def test_no_cartesian_in_plan(self, spark, monkeypatch):
         edges = _edges(spark, [(1, 2), (2, 3), (3, 1)])

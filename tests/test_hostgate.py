@@ -107,7 +107,7 @@ class TestBoilerplateRemoval:
             + [(9, "b.example", f"other page here. {footer}")],
         )
         got = {r.doc_id: (r.clean_text, r.n_dropped)
-               for r in T.remove_boilerplate(docs, min_docs=3).collect()}
+               for r in T.remove_boilerplate(docs).collect()}
         # footer repeats in 3 docs of a.example -> stripped there only;
         # b.example saw it once, keeps it (per-host scoping)
         for i in range(3):
@@ -122,23 +122,24 @@ class TestBoilerplateRemoval:
              (2, "h", "promo line. other body")],
         )
         out = {r.doc_id: r.n_dropped
-               for r in T.remove_boilerplate(docs, min_docs=3).collect()}
+               for r in T.remove_boilerplate(docs).collect()}
         assert out == {1: 0, 2: 0}
 
-    def test_boilerplate_table_is_host_scoped(self, spark):
+    def test_boilerplate_table_is_host_scoped(self, spark, monkeypatch):
         docs = self._hosted(
             spark,
             [(1, "x", "same seg. a"), (2, "x", "same seg. b"),
              (3, "y", "same seg. c")],
         )
-        bp = T.boilerplate_segments(docs, min_docs=2).collect()
+        monkeypatch.setattr(T, "BOILERPLATE_MIN_DOCS", 2)
+        bp = T.boilerplate_segments(docs).collect()
         assert [(r.host, r.n_docs) for r in bp] == [("x", 2)]
 
     def test_fully_boilerplate_doc_survives_empty(self, spark):
         docs = self._hosted(
             spark, [(i, "h", "only footer text") for i in range(3)]
         )
-        for r in T.remove_boilerplate(docs, min_docs=3).collect():
+        for r in T.remove_boilerplate(docs).collect():
             assert r.clean_text == "" and r.n_dropped == 1
 
 

@@ -89,13 +89,6 @@ class TestPackSequences:
 
         assert start_toks(rows + [(None, _words(3))]) == start_toks(rows)
 
-    def test_validation(self, spark, monkeypatch):
-        docs = _docs(spark, [(0, "a")])
-        with pytest.raises(ValueError):
-            _pack(monkeypatch, docs, seq_len=0)
-        with pytest.raises(ValueError):
-            _pack(monkeypatch, docs, n_shards=0)
-
 
 class TestChunkTokens:
     def test_overlap_and_short_tail(self, spark, monkeypatch):
@@ -142,12 +135,6 @@ class TestChunkTokens:
             .toString()
         )
         assert "Exchange" not in plan  # no shuffle: projection + explode
-
-    def test_validation(self, spark, monkeypatch):
-        with pytest.raises(ValueError):
-            _chunk(monkeypatch, _docs(spark, [(0, "a")]), width=0)
-        with pytest.raises(ValueError):
-            _chunk(monkeypatch, _docs(spark, [(0, "a")]), stride=0)
 
 
 class TestTfidfTopTerms:

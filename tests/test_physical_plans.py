@@ -89,7 +89,7 @@ _PRUNED_RUNNER_CALLERS = {
 class TestPlans:
     def test_cosine_topk_broadcasts_queries(self, spark):
         emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-        out = cosine_topk(emb, emb.where(F.col("vec_id") % 100 == 0), k=3)
+        out = cosine_topk(emb, emb.where(F.col("vec_id") % 100 == 0))
         plan = plan_of(out)
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
         # the big side is never shuffled before the join
@@ -359,7 +359,7 @@ _WORD_OPERATORS = {
     "repetition_stats": (lambda d: T.repetition_stats(d), 1, {}),
     "paragraph_chunks": (lambda d: T.paragraph_chunks(d), 1, {}),
     "contamination": (lambda d: T.contamination(d, d), 1, {(T, "CONTAMINATION_N"): 3}),
-    "sentence_contamination": (lambda d: T.sentence_contamination(d, d, n=3), 1, {}),
+    "sentence_contamination": (lambda d: T.sentence_contamination(d, d), 1, {(T, "SENTENCE_N"): 3}),
     "repeated_windows": (lambda d: T.repeated_windows(d), 1, {(T, "WINDOW_WORDS"): 3}),
     "repeated_spans": (lambda d: T.repeated_spans(d), 1, {(T, "WINDOW_WORDS"): 3}),
     "repeated_window_stats": (lambda d: T.repeated_window_stats(d), 1, {(T, "WINDOW_WORDS"): 3}),
@@ -526,7 +526,7 @@ def test_no_pandas_operators():
     assert sites == [], sites
 
 
-def _option_values() -> dict[str, set[str]]:
+def _option_values(root=None) -> dict[str, set[str]]:
     """``path::function(param)`` -> the values each defaulted parameter
     of a public top-level function or public class method in
     ``gumbo_pp_spark/`` takes across the system's calls
@@ -535,24 +535,43 @@ def _option_values() -> dict[str, set[str]]:
     and ``selfcheck.py`` — tests are not callers.  A call that omits the
     parameter uses its default; a literal argument is its ``repr``; any
     other expression (and a position a ``*args`` splat covers) is
-    ``"<variable>"``.  A ``**name`` splat sets only the keys a system
+    ``"<variable>"``, except a ``Name`` or ``Attribute`` naming an
+    upper-case constant that the system files assign one literal at
+    module level, which is that literal.  A ``**name`` splat sets only
+    the keys a system
     file builds into ``name`` (``name = {..}``, ``name = dict(..)``,
     ``name[key] = ..``, or keyword arguments to a function whose
     ``**name`` parameter it is) and otherwise leaves the default."""
     import ast
     from pathlib import Path
 
-    root = Path(__file__).resolve().parents[1]
-    program = sorted(root.joinpath("gumbo_pp_spark").rglob("*.py"))
-    system = [*program, *root.joinpath("jobs").rglob("*.py"),
-              *root.joinpath("perfbench").rglob("*.py"),
-              root / "bench.py", root / "__spark_entry__.py", root / "selfcheck.py"]
-
-    def value(node):
+    def literal(node):
         try:
             return repr(ast.literal_eval(node))
         except (ValueError, TypeError, SyntaxError):
             return "<variable>"
+
+    root = Path(root or Path(__file__).resolve().parents[1])
+    program = sorted(root.joinpath("gumbo_pp_spark").rglob("*.py"))
+    system = [*program, *root.joinpath("jobs").rglob("*.py"),
+              *root.joinpath("perfbench").rglob("*.py"),
+              *(root / f for f in ("bench.py", "__spark_entry__.py", "selfcheck.py")
+                if (root / f).exists())]
+
+    # upper-case name -> the literals module-level assignments give it
+    constants: dict[str, set[str]] = {}
+    for path in system:
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value:
+                for t in node.targets if isinstance(node, ast.Assign) else [node.target]:
+                    if isinstance(t, ast.Name) and t.id.isupper():
+                        constants.setdefault(t.id, set()).add(literal(node.value))
+
+    def value(node):
+        name = getattr(node, "id", getattr(node, "attr", None))
+        if isinstance(node, (ast.Name, ast.Attribute)) and len(constants.get(name, ())) == 1:
+            return next(iter(constants[name]))
+        return literal(node)
 
     # callee name -> calls; dict name -> [(key -> value, key set alone)];
     # ``**name`` parameter -> functions declaring it
@@ -641,6 +660,30 @@ def _option_values() -> dict[str, set[str]]:
                         values |= by_keyword(c, arg, default)
                 options[f"{rel}::{qual}({arg})"] = values
     return options
+
+
+@pytest.mark.parametrize("caller, values", [
+    # a module constant passed by name is its literal
+    ("ops.f(1, k=ops.K)\nops.f(2, ops.K)\n", {"3"}),
+    # an omitted argument is the default
+    ("ops.f(1)\nops.f(2, k=6)\n", {"5", "6"}),
+    # any other expression is variable
+    ("ops.f(1, k=len('ab'))\n", {"<variable>"}),
+    # a **name splat sets only the keys a system file builds
+    ("kw = {'k': 7}\nops.f(1, **kw)\n", {"7"}),
+    ("kw = {'x': 7}\nops.f(1, **kw)\n", {"5"}),
+], ids=["constant", "omitted", "variable", "splat-key", "splat-other-key"])
+def test_option_values_rules(tmp_path, caller, values):
+    """:func:`_option_values` over a two-module package: the values
+    ``f(k)`` takes from a jobs caller; a test's call is not counted."""
+    for d, name, src in (
+        ("gumbo_pp_spark", "ops.py", "K = 3\n\n\ndef f(x, k=5):\n    return x\n"),
+        ("jobs", "run.py", "from gumbo_pp_spark import ops\n\n" + caller),
+        ("tests", "test_ops.py", "from gumbo_pp_spark import ops\n\nops.f(1, k=9)\n"),
+    ):
+        (tmp_path / d).mkdir()
+        (tmp_path / d / name).write_text(src)
+    assert _option_values(tmp_path) == {"gumbo_pp_spark/ops.py::f(k)": values}
 
 
 # public defaults the system sets one way that stay options -> reason

@@ -5,6 +5,7 @@ fingerprint, as one lazy DataFrame plan."""
 from pyspark.sql import functions as F
 
 from gumbo_pp_spark import pipelines
+from gumbo_pp_spark.operators import textstats
 from gumbo_pp_spark.pipelines import build_training_corpus
 from gumbo_pp_spark.sources.pages import synth_pages, synth_pages_bench
 
@@ -219,7 +220,7 @@ def test_pipeline_host_stages_compose(spark, monkeypatch):
     # so a 3500 blocklist threshold drops some whole hosts but not all.
     pages = synth_pages(spark, SF_SMOKE).select("doc_id", "url", "html")
     base = build_training_corpus(pages, min_tokens=40).cache()
-    monkeypatch.setattr(pipelines, "BOILERPLATE_MIN_DOCS", 3)
+    monkeypatch.setattr(textstats, "BOILERPLATE_MIN_DOCS", 3)
     monkeypatch.setattr(pipelines, "HOST_GATE_MIN_DOCS", 3)
     monkeypatch.setattr(pipelines, "HOST_GATE_MAX_BAD_FRAC_E4", 3500)
     corpus = build_training_corpus(
@@ -243,14 +244,9 @@ def test_pipeline_host_stages_compose(spark, monkeypatch):
     corpus.unpersist()
 
 
-def test_exact_dedup_combines_a_viral_group_map_side(spark):
-    # 40 copies of one page and 8 unique pages: the exact-dedup stage
-    # is a digest-keyed aggregate combined below its exchange, never a
-    # window partitioned by the digest (which would sort the whole
-    # viral group in one task); the group keeps its smallest doc_id,
-    # and a NULL doc_id row is dropped
-    from .test_physical_plans import plan_of, window_specs
-
+def test_exact_dedup_keeps_the_smallest_id_of_a_viral_group(spark):
+    # 40 copies of one page and 8 unique pages: the group keeps its
+    # smallest doc_id, and a NULL doc_id row is dropped
     def text(i):  # 30 six-letter md5-drawn words: no near-dups across i
         import hashlib
 
@@ -265,16 +261,7 @@ def test_exact_dedup_combines_a_viral_group_map_side(spark):
         [(d, u, bytearray(f"<p>{t}</p>".encode())) for d, u, t in rows],
         "doc_id bigint, url string, html binary",
     )
-    corpus = build_training_corpus(pages)
-    plan = plan_of(corpus)
-    assert not [p for p, _ in window_specs(plan) if any("md5" in c for c in p)], plan
-    nodes = [ln.strip(" :+-") for ln in plan.splitlines()]
-    final = next(i for i, ln in enumerate(nodes) if "functions=[min(struct(doc_id" in ln)
-    exchange = next(i for i in range(final, len(nodes)) if nodes[i].startswith("Exchange"))
-    assert "hashpartitioning(_groupingexpression" in nodes[exchange], plan
-    assert "partial_min(struct(doc_id" in nodes[exchange + 1], plan
-    assert "md5(cast(text" in "".join(nodes[exchange:exchange + 4]), plan
-    kept = {r.doc_id for r in corpus.collect()}
+    kept = {r.doc_id for r in build_training_corpus(pages).collect()}
     assert kept == {40, *range(8)}
 
 
