@@ -81,10 +81,6 @@ class NodeTable:
     # parse-error detail records [(code, offset), ...] — mirrors the
     # reference errors() vector (gumbo_node_iterator.h:247-249)
     error_records: list = field(default_factory=list)
-    # raw input bytes (when parsed from bytes) + the pre-normalization
-    # decoded string (only when CR normalization changed it) — feed the
-    # lazy decoded-offset → byte-offset map (gumbo's offsets are byte
-    # offsets into the raw buffer, gumbo_util.h:121-146)
     # GumboOptions.tab_stop (column positions; error_positions default)
     tab_stop: int = 8
     # document quirks mode (GumboDocument.doc_type_quirks_mode
@@ -92,10 +88,13 @@ class NodeTable:
     # True = full quirks; limited-quirks parses identically and maps
     # to False
     quirks: bool = True
+    # the input bytes, kept only when decoded offsets are not byte
+    # offsets (len(source) != len(raw)); None = identity.  They feed
+    # the lazy decoded-offset → byte-offset map, cached in _byte_map
+    # (gumbo's offsets are byte offsets into the raw buffer,
+    # gumbo_util.h:121-146)
     raw: bytes | None = field(default=None, repr=False)
-    _prenorm: str | None = field(default=None, repr=False)
     _byte_map: np.ndarray | None = field(default=None, repr=False)
-    _byte_map_built: bool = field(default=False, repr=False)
 
     _ctext_joined: str | None = field(default=None, repr=False)
     _ctext_off: np.ndarray | None = field(default=None, repr=False)
@@ -391,19 +390,14 @@ class NodeTable:
         model (gumbo_util.h:121-146).  Identity for ASCII/CR-free
         pages; exact per-char mapping otherwise (parser/bytemap.py).
         Accepts a scalar or array; returns int64."""
-        if not self._byte_map_built:
+        if self.raw is None:
+            return np.asarray(pos, dtype=np.int64)
+        if self._byte_map is None:
             from .parser.bytemap import build_byte_map
 
-            raw = self.raw
-            if raw is None:
-                raw = (self._prenorm or self.source).encode("utf-8")
-                self.raw = raw
             self._byte_map = build_byte_map(
-                raw, self._prenorm or self.source, len(self.source)
+                self.raw, str(self.raw, "utf-8", "replace"), len(self.source)
             )
-            self._byte_map_built = True
-        if self._byte_map is None:
-            return np.asarray(pos, dtype=np.int64)
         return self._byte_map[np.asarray(pos)]
 
     def node_start_offset(self, i: int) -> int:

@@ -1,14 +1,17 @@
 /* C fast-path HTML5 parser for gumbo_pp_spark.
  *
- * Covers the NO-PARSE-ERROR, pure-ASCII (no CR / NUL) subset of the
- * pure-Python engine in ../html5.py, which remains the reference
- * implementation.  Any path where the Python engine would record a
- * parse error — plus foreign content (svg/math), <template>,
- * <frameset>, <plaintext>, <isindex>, fragments, non-ASCII input —
- * BAILS: cparse() returns None and the caller re-parses in Python.
- * That makes C-vs-Python byte identity provable on the conformance
- * corpus: whenever C produces a tree at all, it must equal the Python
- * tree column-for-column (tests/test_cengine.py).
+ * Covers the document-mode surface of the pure-Python engine in
+ * ../html5.py, which remains the reference implementation: error
+ * recording, adoption agency, foster parenting, foreign content,
+ * templates, framesets, NUL input and any input bytes (decoded as
+ * UTF-8 with replacement and CR-normalized by prep_input, the one
+ * input path of both entries, cparse and cextract_batch).  The
+ * remaining designed bails — colgroup/frameset-content NUL and its
+ * ws-charref intersection — return None, and the caller re-parses in
+ * Python (fragments never reach C).  That makes C-vs-Python byte
+ * identity provable on the conformance corpus: whenever C produces a
+ * tree at all, it must equal the Python tree column-for-column
+ * (tests/test_cengine.py).
  *
  * All data tables (tag ids, per-tag behavior flags, WHATWG entities,
  * numeric-charref remaps) are code-generated from the Python engine's
@@ -85,11 +88,11 @@ typedef struct { int16_t tid; int32_t nid; int64_t t0, t1; PyObject *attrs; /* b
 typedef struct {
     const unsigned char *s;
     Py_ssize_t n;
-    /* kind-2/4 source strings are TRANSCODED to a byte buffer where
-     * every char > 0x7F becomes the placeholder 0x80 (structure is
-     * pure ASCII, so offsets are preserved 1 char = 1 byte); text is
-     * emitted by reading the ORIGINAL string back.  src_obj/src_kind/
-     * src_data are set only in that mode. */
+    /* non-ASCII input is decoded and TRANSCODED to a byte buffer
+     * where every char > 0x7F becomes the placeholder 0x80 (structure
+     * is pure ASCII, so offsets are preserved 1 char = 1 byte); text
+     * is emitted by reading the decoded string back.  src_obj/src_kind/
+     * src_data are set only in that mode (prep_input). */
     PyObject *src_obj;        /* borrowed */
     int src_kind;
     const void *src_data;
@@ -4422,17 +4425,16 @@ static PyObject *np_copy1d(const void *src, Py_ssize_t n, int typenum, size_t is
     return a;
 }
 
-/* Input prep for the batch path beyond the pure-ASCII/CR-free fast
- * class (round-6 late; round-7: invalid UTF-8 engages too): one pass
- * decodes UTF-8 exactly as Python's errors='replace' (a byte-at-a-time
- * simulation of CPython's incremental decoder: maximal-subpart U+FFFD
- * substitution, pending-prefix reject + same-feed reprocess), then
- * collapses \r\n / \r to \n at the CHAR level (WHATWG input-stream
+/* Input prep beyond the pure-ASCII/CR-free fast class (round-6 late;
+ * round-7: invalid UTF-8 engages too): one pass decodes UTF-8 exactly
+ * as Python's errors='replace' (a byte-at-a-time simulation of
+ * CPython's incremental decoder: maximal-subpart U+FFFD substitution,
+ * pending-prefix reject + same-feed reprocess), then collapses
+ * \r\n / \r to \n at the CHAR level (WHATWG input-stream
  * preprocessing over the decoded string, = html5.py's str.replace),
  * and builds
  *   - the parse buffer (1 byte per decoded char; chars > 0x7F become
- *     the 0x80 placeholder, the same transcode convention as cparse's
- *     kind-2/4 str mode),
+ *     the 0x80 placeholder, see P.src_obj),
  *   - the char→raw-byte offset map with parser/bytemap.py's EXACT
  *     attribution contract: when the input's non-continuation-byte
  *     count equals the decoded length, chars map to char-start bytes
@@ -4558,6 +4560,105 @@ static Py_ssize_t prep_decode(const unsigned char *raw, Py_ssize_t nb,
     return o;
 }
 
+/* One document's parser input, prepared the same way for both entries
+ * (cextract_batch per row, cparse per call).  A classification scan
+ * picks one of three classes:
+ *   fast    — pure-ASCII CR-free bytes, parsed in place (identity
+ *             byte map, c2b NULL);
+ *   ascii+  — ASCII with CR: normalized into the scratch parse buffer,
+ *             byte offsets via the c2b map;
+ *   unicode — ANY other byte sequence, valid UTF-8 or not
+ *             (errors='replace' decode in prep_decode): placeholder
+ *             parse buffer + decoded str readback (src_str), byte
+ *             offsets via the c2b map.
+ * The scratch buffers grow once to the largest decoded document; the
+ * caller releases them with in_free. */
+typedef struct {
+    unsigned char *pbuf;
+    Py_UCS4 *ucs;
+    int64_t *map;
+    Py_ssize_t cap;
+    const unsigned char *s;   /* parse buffer */
+    Py_ssize_t n;
+    const int64_t *c2b;       /* char -> raw byte offset; NULL = identity */
+    int has_nul;
+    PyObject *src_str;        /* owned; the decoded text of a non-ASCII doc */
+} Input;
+
+/* Returns 0 prepared, 1 bail (decode OOM: the Python engine takes the
+ * document), -1 scratch OOM. */
+static int prep_input(Input *in, const unsigned char *raw, Py_ssize_t nb) {
+    int has_cr = 0, has_hi = 0, has_nul = 0;
+    Py_CLEAR(in->src_str);
+    for (Py_ssize_t i = 0; i < nb; i++) {
+        unsigned char ch = raw[i];
+        if (ch >= 0x80) has_hi = 1;
+        else if (ch == '\r') has_cr = 1;
+        else if (ch == 0) has_nul = 1;
+    }
+    in->s = raw;
+    in->n = nb;
+    in->c2b = NULL;
+    in->has_nul = has_nul;
+    if (!has_cr && !has_hi) return 0;
+    if (nb + 1 > in->cap) {
+        Py_ssize_t nc = in->cap ? in->cap : 4096;
+        while (nc < nb + 1) nc *= 2;
+        unsigned char *npb = realloc(in->pbuf, (size_t)nc);
+        Py_UCS4 *nuc = realloc(in->ucs, (size_t)nc * sizeof(Py_UCS4));
+        int64_t *nmap = realloc(in->map, (size_t)nc * sizeof(int64_t));
+        if (npb) in->pbuf = npb;
+        if (nuc) in->ucs = nuc;
+        if (nmap) in->map = nmap;
+        if (!npb || !nuc || !nmap) return -1;
+        in->cap = nc;
+    }
+    Py_ssize_t nch = prep_decode(raw, nb, in->pbuf, in->ucs, in->map,
+                                 has_hi, &in->has_nul, &in->src_str);
+    if (nch < 0) return 1;
+    in->s = in->pbuf;
+    in->n = nch;
+    in->c2b = in->map;
+    return 0;
+}
+
+static void in_free(Input *in) {
+    free(in->pbuf); free(in->ucs); free(in->map);
+    Py_CLEAR(in->src_str);
+}
+
+/* Parse one prepared document into *p.  Returns 0 parsed (the caller
+ * p_free()s), 1 bail (the Python engine takes the document), -1 with a
+ * Python error set; p is freed on both non-zero returns. */
+static int parse_input(P *p, const Input *in) {
+    memset(p, 0, sizeof(P));
+    p->s = in->s;
+    p->n = in->n;
+    p->doc_has_nul = in->has_nul;
+    if (in->src_str) {
+        p->src_obj = in->src_str;  /* borrowed */
+        p->src_kind = PyUnicode_KIND(in->src_str);
+        p->src_data = PyUnicode_DATA(in->src_str);
+    }
+    p->quirks = 1;
+    p->preorder_ok = 1;
+    p->frameset_ok = 1;
+    p->html_id = p->head_id = p->body_id = -1;
+    p->form_ptr = -1;
+    /* document node (html5.py:691) */
+    if (new_node(p, T_DOCUMENT, -1, NULL, NULL, NULL, 0, p->n, 0, 0, 0, 0) < 0) {
+        p_free(p);
+        return PyErr_Occurred() ? -1 : 1;
+    }
+    run_parse(p);
+    if (p->bail || PyErr_Occurred()) {
+        PyErr_Clear();
+        p_free(p);
+        return 1;
+    }
+    return 0;
+}
+
 /* the main-text kernel (operators/extract.py _main_text_columns):
  * body-subtree window — the first preorder node whose tag id is body,
  * else the whole document — then boilerplate-subtree exclusion and
@@ -4670,11 +4771,7 @@ static PyObject *cextract_batch(PyObject *self, PyObject *args) {
     int32_t *sp_id = NULL, *ptg_off = NULL;
     int64_t *sp_s0 = NULL, *sp_s1 = NULL, *sp_b0 = NULL, *sp_b1 = NULL;
     Py_ssize_t sp_n = 0, sp_cap = 0;
-    /* decode scratch, grown once to the largest non-fast-class doc */
-    unsigned char *pbuf = NULL;
-    Py_UCS4 *ucs = NULL;
-    int64_t *c2b = NULL;
-    Py_ssize_t prep_cap = 0;
+    Input in = {0};
     int32_t *txt_off = malloc((size_t)(n_docs + 1) * sizeof(int32_t));
     int32_t *sp_cnt = malloc((size_t)(n_docs ? n_docs : 1) * sizeof(int32_t));
     int32_t *nn = malloc((size_t)(n_docs ? n_docs : 1) * sizeof(int32_t));
@@ -4695,96 +4792,28 @@ static PyObject *cextract_batch(PyObject *self, PyObject *args) {
                           : (int64_t)((const int32_t *)oview.buf)[k];
         int64_t o1 = is64 ? ((const int64_t *)oview.buf)[k + 1]
                           : (int64_t)((const int32_t *)oview.buf)[k + 1];
+        /* remaining bails: only the engine's designed semantic classes
+         * (colgroup/frameset-content NUL and its ws-charref
+         * intersection) -> the caller's Python splice */
         int ok = o0 >= 0 && o1 >= o0 && o1 <= data_n;
-        int doc_has_nul = 0, has_cr = 0, has_hi = 0;
         if (ok) {
-            for (Py_ssize_t i = o0; i < o1; i++) {
-                unsigned char ch = data[i];
-                if (ch >= 0x80) has_hi = 1;
-                else if (ch == '\r') has_cr = 1;
-                else if (ch == 0) doc_has_nul = 1;
-            }
-        }
-        /* three engagement classes (round-6 late; widened round-7):
-         *   fast    — pure-ASCII CR-free raw bytes, parsed in place
-         *             (identity byte map);
-         *   ascii+  — ASCII with CR: normalized into the scratch
-         *             parse buffer, byte offsets via the c2b map;
-         *   unicode — ANY other byte sequence, valid UTF-8 or not
-         *             (errors='replace' decode in prep_decode):
-         *             placeholder parse buffer + str readback
-         *             (cparse's kind-2/4 convention), byte offsets
-         *             via the c2b map.
-         * Remaining bails: only the engine's designed semantic
-         * classes (colgroup/frameset-content NUL and its ws-charref
-         * intersection) → the caller's Python splice. */
-        const unsigned char *parse_s = data + o0;
-        Py_ssize_t parse_n = o1 - o0;
-        const int64_t *doc_c2b = NULL;
-        PyObject *src_str = NULL;
-        if (ok && (has_cr || has_hi)) {
-            Py_ssize_t nb = o1 - o0;
-            if (nb + 1 > prep_cap) {
-                Py_ssize_t nc = prep_cap ? prep_cap : 4096;
-                while (nc < nb + 1) nc *= 2;
-                unsigned char *npb = realloc(pbuf, (size_t)nc);
-                Py_UCS4 *nuc = realloc(ucs, (size_t)nc * sizeof(Py_UCS4));
-                int64_t *ncb = realloc(c2b, (size_t)nc * sizeof(int64_t));
-                if (npb) pbuf = npb;
-                if (nuc) ucs = nuc;
-                if (ncb) c2b = ncb;
-                if (!npb || !nuc || !ncb) { fatal = 1; goto done; }
-                prep_cap = nc;
-            }
-            Py_ssize_t nch = prep_decode(data + o0, nb, pbuf, ucs, c2b,
-                                         has_hi, &doc_has_nul, &src_str);
-            if (nch < 0) {
-                ok = 0;
-            } else {
-                parse_s = pbuf;
-                parse_n = nch;
-                doc_c2b = c2b;
-            }
+            int rc = prep_input(&in, data + o0, o1 - o0);
+            if (rc < 0) { fatal = 1; goto done; }
+            ok = rc == 0;
         }
         if (ok) {
             P p;
-            memset(&p, 0, sizeof(P));
-            p.s = parse_s;
-            p.n = parse_n;
-            p.doc_has_nul = doc_has_nul;
-            if (src_str) {
-                p.src_obj = src_str;  /* borrowed */
-                p.src_kind = PyUnicode_KIND(src_str);
-                p.src_data = PyUnicode_DATA(src_str);
-            }
-            p.quirks = 1;
-            p.preorder_ok = 1;
-            p.frameset_ok = 1;
-            p.html_id = p.head_id = p.body_id = -1;
-            p.form_ptr = -1;
-            if (new_node(&p, T_DOCUMENT, -1, NULL, NULL, NULL, 0, p.n,
-                         0, 0, 0, 0) < 0) {
+            int rc = parse_input(&p, &in);
+            if (rc < 0) { fatal = 1; goto done; }
+            ok = rc == 0;
+            if (ok) {
+                rc = extract_doc_into(&p, boiler, body_tid, in.c2b, &txt, &ptg,
+                                      &sp_id, &sp_s0, &sp_s1, &sp_b0, &sp_b1,
+                                      &ptg_off, &sp_n, &sp_cap, &nn[k], &pe[k]);
                 p_free(&p);
-                if (PyErr_Occurred()) { Py_XDECREF(src_str); fatal = 1; goto done; }
-                ok = 0;
-            } else {
-                run_parse(&p);
-                if (p.bail || PyErr_Occurred()) {
-                    PyErr_Clear();
-                    p_free(&p);
-                    ok = 0;
-                } else {
-                    int rc = extract_doc_into(&p, boiler, body_tid, doc_c2b,
-                                              &txt, &ptg,
-                                              &sp_id, &sp_s0, &sp_s1,
-                                              &sp_b0, &sp_b1, &ptg_off,
-                                              &sp_n, &sp_cap, &nn[k], &pe[k]);
-                    p_free(&p);
-                    if (rc < 0) { Py_XDECREF(src_str); fatal = 1; goto done; }
-                }
+                if (rc < 0) { fatal = 1; goto done; }
             }
         }
-        Py_XDECREF(src_str);
         if (!ok) {
             /* zero-length slots; caller reparses this doc Python-side */
             if (bail_n == bail_cap) {
@@ -4846,7 +4875,7 @@ static PyObject *cextract_batch(PyObject *self, PyObject *args) {
 done:
     free(txt.buf); free(ptg.buf);
     free(sp_id); free(sp_s0); free(sp_s1); free(sp_b0); free(sp_b1); free(ptg_off);
-    free(pbuf); free(ucs); free(c2b);
+    in_free(&in);
     free(txt_off); free(sp_cnt); free(nn); free(pe); free(tot); free(bail);
     PyBuffer_Release(&dview); PyBuffer_Release(&oview); PyBuffer_Release(&bview);
     if (fatal) {
@@ -4859,111 +4888,29 @@ done:
 }
 
 static PyObject *cparse(PyObject *self, PyObject *arg) {
-    const unsigned char *data = NULL;
-    Py_ssize_t n = -1;
-    Py_buffer view = {0};
-    int have_view = 0;
-    PyObject *src_str = NULL;  /* borrowed */
-    int latin1 = 0;
-    unsigned char *transcoded = NULL;
-    int src_kind = 0;
-    const void *src_kdata = NULL;
-    if (PyUnicode_Check(arg)) {
-        /* kind-1 strings (ASCII + Latin-1 range) parse natively: all
-         * markup chars are ASCII; 0x80-0xFF appear only inside text /
-         * attribute values / comments, where byte == codepoint.
-         * kind-2/4 strings (CJK/astral text) are TRANSCODED: every
-         * char > 0x7F becomes the placeholder byte 0x80 — structure
-         * is byte-scannable with offsets preserved (1 char = 1 byte),
-         * and emitted text re-reads the original codepoints. */
-        if (PyUnicode_READY(arg) < 0) { PyErr_Clear(); Py_RETURN_NONE; }
-        n = PyUnicode_GET_LENGTH(arg);
-        src_str = arg;
-        if (PyUnicode_KIND(arg) == PyUnicode_1BYTE_KIND) {
-            data = PyUnicode_1BYTE_DATA(arg);
-            latin1 = !PyUnicode_IS_ASCII(arg);
-        } else {
-            src_kind = PyUnicode_KIND(arg);
-            src_kdata = PyUnicode_DATA(arg);
-            transcoded = malloc((size_t)n + 1);
-            if (!transcoded) return PyErr_NoMemory();
-            for (Py_ssize_t i = 0; i < n; i++) {
-                Py_UCS4 c = PyUnicode_READ(src_kind, src_kdata, i);
-                transcoded[i] = c > 0x7F ? 0x80 : (unsigned char)c;
-            }
-            data = transcoded;
-        }
-    } else if (PyObject_CheckBuffer(arg)) {
-        if (PyObject_GetBuffer(arg, &view, PyBUF_SIMPLE) < 0) { PyErr_Clear(); Py_RETURN_NONE; }
-        have_view = 1;
-        data = view.buf;
-        n = view.len;
-    } else {
-        PyErr_SetString(PyExc_TypeError, "cparse expects str or bytes-like");
-        return NULL;
-    }
-    /* prescan: no CR (input-stream normalization must run first; the
-     * second parse_html dispatch offers the NORMALIZED string) and no
-     * NUL (every NUL path is a parse error).  Raw bytes additionally
-     * must be pure ASCII — multibyte UTF-8 shifts decoded offsets, so
-     * those decode Python-side and come back as kind-1 strs. */
-    int doc_has_nul = 0;
-    for (Py_ssize_t i = 0; i < n; i++) {
-        unsigned char ch = data[i];
-        if ((ch >= 0x80 && src_str == NULL) || ch == '\r') {
-            /* raw bytes must be pure ASCII; CR means the caller has
-             * not run input-stream normalization.  NUL engages in
-             * EVERY string kind (round-7: the transcoded compaction
-             * paths carry original codepoints via chars_buf's ubuf
-             * and the pend_ucs table-text payload). */
-            free(transcoded);
-            if (have_view) PyBuffer_Release(&view);
-            Py_RETURN_NONE;
-        }
-        if (ch == 0) doc_has_nul = 1;
-    }
-    (void)latin1;
+    Py_buffer view;
+    if (PyObject_GetBuffer(arg, &view, PyBUF_SIMPLE) < 0) return NULL;
+    Input in = {0};
+    PyObject *res = NULL;
     P p;
-    memset(&p, 0, sizeof(P));
-    p.s = data;
-    p.n = n;
-    p.doc_has_nul = doc_has_nul;
-    if (transcoded) {
-        p.src_obj = src_str;   /* borrowed */
-        p.src_kind = src_kind;
-        p.src_data = src_kdata;
-    }
-    p.quirks = 1;
-    p.preorder_ok = 1;
-    p.frameset_ok = 1;
-    p.html_id = p.head_id = p.body_id = -1;
-    p.form_ptr = -1;
-    /* document node (html5.py:691) */
-    if (new_node(&p, T_DOCUMENT, -1, NULL, NULL, NULL, 0, n, 0, 0, 0, 0) < 0) {
+    int rc = prep_input(&in, view.buf, view.len);
+    if (rc < 0) PyErr_NoMemory();
+    else if (rc == 0) rc = parse_input(&p, &in);
+    if (rc == 0) {
+        PyObject *src = in.src_str;
+        if (src) Py_INCREF(src);
+        else {
+            src = PyUnicode_New(in.n, 127);
+            if (src) memcpy(PyUnicode_1BYTE_DATA(src), in.s, (size_t)in.n);
+        }
+        res = src ? build_result(&p, src) : NULL;
         p_free(&p);
-        free(transcoded);
-        if (have_view) PyBuffer_Release(&view);
-        if (PyErr_Occurred()) return NULL;
-        Py_RETURN_NONE;
+    } else if (rc == 1) {
+        Py_INCREF(Py_None);
+        res = Py_None;
     }
-    run_parse(&p);
-    if (p.bail || PyErr_Occurred()) {
-        PyErr_Clear();
-        p_free(&p);
-        free(transcoded);
-        if (have_view) PyBuffer_Release(&view);
-        Py_RETURN_NONE;
-    }
-    PyObject *src_obj;
-    if (src_str) { Py_INCREF(src_str); src_obj = src_str; }
-    else {
-        src_obj = PyUnicode_New(n, 127);
-        if (src_obj) memcpy(PyUnicode_1BYTE_DATA(src_obj), data, (size_t)n);
-    }
-    PyObject *res = src_obj ? build_result(&p, src_obj) : NULL;
-    p_free(&p);
-    free(transcoded);
-    if (have_view) PyBuffer_Release(&view);
+    in_free(&in);
+    PyBuffer_Release(&view);
     return res;
 }
 
@@ -4974,8 +4921,10 @@ static PyMethodDef methods[] = {
      "returns batch-level Arrow-layout buffers + bail indices, or "
      "None on int32 text-offset overflow."},
     {"cparse", cparse, METH_O,
-     "Parse ASCII HTML bytes/str; returns the node-table columns or "
-     "None when the document needs the pure-Python engine."},
+     "Parse one HTML document from raw bytes (any encoding bytes, "
+     "decoded as UTF-8 with replacement like cextract_batch); returns "
+     "the node-table columns or None when the document needs the "
+     "pure-Python engine."},
     {NULL, NULL, 0, NULL},
 };
 

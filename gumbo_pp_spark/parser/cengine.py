@@ -1,25 +1,27 @@
 """C fast-path engine loader + NodeTable assembly.
 
-The extension exports two entries:
+The extension exports two entries over one input path: each document's
+raw bytes are classified, decoded as UTF-8 with replacement and
+CR-normalized in C (``prep_input`` in _cext/chtml.c), so ASCII, CRLF,
+multibyte and invalid-UTF-8 pages all reach the engine in one step.
 
 * ``cextract_batch`` (``_cextract_batch`` here) parses a whole Arrow
   binary column and runs the main-text kernel on it in one call — the
   flagship stage's engine (``operators/extract.py`` ``main_text_batch``);
-* ``cparse(source)`` (wrapped by :func:`cparse` below) returns a
-  :class:`NodeTable` for documents inside the C engine's subset —
-  effectively the whole document-mode surface: error recording,
-  adoption agency, foster parenting, foreign content, templates,
-  framesets, NUL input (text AND tag machinery, every string kind),
+* ``cparse(raw)`` (wrapped by :func:`cparse` below) takes one
+  document's bytes and returns a :class:`NodeTable` for the whole
+  document-mode surface: error recording, adoption agency, foster
+  parenting, foreign content, templates, framesets, NUL input,
   non-ASCII tag/attr names, ws-decoding charref classification,
-  unbounded depth and name lengths; remaining bails are fragments and
-  colgroup/frameset-content NUL (see _cext/chtml.c) — or ``None`` when
-  the pure-Python engine must run.
+  unbounded depth and name lengths — or ``None`` for the designed
+  bails (colgroup/frameset-content NUL and its ws-charref
+  intersection), where the pure-Python engine must run.
 
 The Python engine in ``html5.py`` and the Python main-text kernel
 remain the reference implementation; the C engine is required to be
 column-for-column identical whenever it engages (tests/test_cengine.py
-runs that A/B over the conformance corpus, which engages completely
-through parse_html's two dispatches and through the batch entry).
+runs that A/B over the conformance corpus, offering each case once as
+parse_html does, and through the batch entry).
 
 Build: the extension is compiled on demand with the in-sandbox gcc
 (`python -m gumbo_pp_spark.parser.cengine` or first import).  For a
@@ -138,16 +140,14 @@ def available() -> bool:
     return _cparse is not None
 
 
-def cparse(source):
-    """C fast-path parse → NodeTable, or None (use the Python engine).
-
-    Accepts str / bytes / bytearray / memoryview like
-    :func:`parser.html5.parse_html`.
-    """
+def cparse(raw):
+    """C fast-path parse of one document's bytes (bytes / bytearray /
+    memoryview) → NodeTable, or None (use the Python engine).  The
+    byte map is the caller's (:func:`parser.html5.parse_html`)."""
     global _cparse, _cextract_batch
     if _cparse is None:
         return None
-    res = _cparse(source)
+    res = _cparse(raw)
     if res is None:
         return None
     if len(res) != 19:
@@ -188,9 +188,6 @@ def cparse(source):
         error_records=errors,
         quirks=bool(quirks),
     )
-    # NOTE: byte-map state (raw / _prenorm / _byte_map_built) is set
-    # by the caller (parse_html), which knows whether the input was
-    # raw bytes, identity-mapped, or CR/multibyte-normalized.
     return nt
 
 

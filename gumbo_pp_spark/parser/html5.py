@@ -697,7 +697,7 @@ class _TreeBuilder:
         "_ap_type", "_ap_tag", "_ap_attrs", "_ap_text", "_ex_span",
         "_ap_kids", "_ap_parent", "_ap_iwp", "_ap_ns", "_ap_tid",
         # GumboOptions analogue (src/gumbo_pp.cpp:27-31)
-        "frag_name", "frag_ns", "max_errors",
+        "frag_name", "frag_ns",
         # WHATWG "in table text" pending character-token buffer
         "pending_tt",
         # WHATWG stack of template insertion modes
@@ -708,12 +708,11 @@ class _TreeBuilder:
     # [src_start, src_end, tag_start, tag_end, endtag_start, endtag_end]
     _S0, _S1, _T0, _T1, _E0, _E1 = range(6)
 
-    def __init__(self, src: str, fragment: tuple[str, int] | None = None, max_errors: int = -1):
+    def __init__(self, src: str, fragment: tuple[str, int] | None = None):
         self.src = src
         self.n = len(src)
         self.mode = INITIAL
         self.frag_name, self.frag_ns = fragment if fragment else ("", NS_HTML)
-        self.max_errors = max_errors
         self.stack: list[int] = []
         self.errors = 0
         # parse-error detail vector [(code, offset), ...] mirroring the
@@ -859,10 +858,7 @@ class _TreeBuilder:
 
     def _err(self, code: str, pos: int) -> None:
         self.errors += 1
-        # gumbo options.max_errors semantics: cap the RECORD vector,
-        # keep counting (−1 = unlimited)
-        if self.max_errors < 0 or len(self.errlog) < self.max_errors:
-            self.errlog.append((code, pos))
+        self.errlog.append((code, pos))
 
     def _detach(self, nid: int) -> None:
         p = self.nparent[nid]
@@ -3261,7 +3257,9 @@ def parse_html(source: str | bytes, options: dict | None = None) -> NodeTable:
     (reference ``src/gumbo_pp.cpp:27-34``): error-recovering HTML5
     parse of the whole input, producing the document node, implied
     structure, decoded text nodes, attribute maps and per-node source
-    spans.
+    spans.  Bytes decode as UTF-8 with replacement; a ``str`` parses as
+    its UTF-8 bytes.  Offsets index the decoded, newline-normalized
+    ``source``; :meth:`NodeTable.byte_offsets` maps them to bytes.
 
     ``options`` is the GumboOptions analogue:
 
@@ -3281,98 +3279,69 @@ def parse_html(source: str | bytes, options: dict | None = None) -> NodeTable:
       implemented it (its parser.c never reads it), so the reference
       is always error-recovering too.
 
-    C fast path: non-fragment parses are first offered to the compiled
-    engine (parser/cengine.py), which handles the no-parse-error
-    pure-ASCII subset ~10x faster and is verified column-identical on
-    every document it accepts; it returns None for anything outside
-    its subset and this pure-Python engine — the reference
-    implementation — runs instead.
+    C fast path: a document-mode parse is offered once to the compiled
+    engine (parser/cengine.py) as raw bytes.  It decodes and
+    normalizes them itself, covers the whole document-mode surface
+    and is verified column-identical on every document it accepts; it
+    returns None for its few designed bails, and this pure-Python
+    engine — the reference implementation — runs instead.  Fragments
+    and strs that cannot be UTF-8 encoded (lone surrogates) go
+    straight to the Python engine.
     """
-    _try_c = _cparse_fast is not None and (
-        options is None or not options.get("fragment_context")
-    )
-    if _try_c:
-        # FIRST C dispatch — the raw input, zero-copy (pure-ASCII
-        # CR-free bytes, the dominant shape, plus CR-free strs of any
-        # kind).  The identity byte map is pinned only for BYTES input
-        # (decoded offsets == byte offsets there); str inputs keep the
-        # Python path's lazy byte-map semantics (identity for ASCII,
-        # utf-8-shifted otherwise).
-        nt = _cparse_fast(source)
-        if nt is not None:
-            if isinstance(source, (bytes, bytearray, memoryview)):
-                nt._byte_map_built = True
-            return _c_done(nt, options)
-    raw_bytes = None
-    raw_len = -1
-    buf = None
-    if isinstance(source, (bytes, bytearray, memoryview)):
-        buf = source
-        raw_len = buf.nbytes if isinstance(buf, memoryview) else len(buf)
-        # str(buffer, ...) decodes straight from the caller's memory
-        # (e.g. a memoryview slice of an Arrow batch) — no
-        # intermediate bytes copy per document
-        source = str(buf, "utf-8", "replace")
-    # input-stream preprocessing: newline normalization (keep the
-    # pre-normalization string only when it differs — it feeds the lazy
-    # byte-offset map, NodeTable.byte_offsets)
-    prenorm = None
-    _had_cr = "\r" in source
-    if _had_cr:
-        prenorm = source
-        source = source.replace("\r\n", "\n").replace("\r", "\n")
-        if len(prenorm) == len(source):
-            # lone-\r normalization is positionally 1:1 (char starts
-            # unchanged) — the byte map does not need the prenorm form
-            prenorm = None
-    # IDENTITY byte map: one byte per decoded char and no CRLF
-    # collapse means decoded offset == byte offset (this covers ASCII
-    # AND latin-1-ish mojibake where every invalid byte became one
-    # U+FFFD).  Those pages never need the raw bytes kept around —
-    # the dominant case on real corpora; the byte map is pinned
-    # identity on the NodeTable below.  Non-identity pages copy the
-    # buffer once (it must outlive the caller's Arrow batch).
-    byte_identity = raw_len == len(source) and prenorm is None
-    if buf is not None and not byte_identity:
-        raw_bytes = bytes(buf)
-    s = source
-    n = len(s)
-    if _try_c and (_had_cr or (buf is not None and not source.isascii())):
-        # SECOND C dispatch — the decoded, CR-normalized string (covers
-        # CRLF pages and Latin-1-range text; the C engine itself
-        # rejects 2/4-byte-kind strings).  Byte-map state mirrors the
-        # Python path exactly: identity pages pin the flag, everything
-        # else keeps raw + prenorm for the lazy exact map.
-        nt = _cparse_fast(s)
-        if nt is not None:
-            nt.raw, nt._prenorm = raw_bytes, prenorm
-            if byte_identity:
-                nt._byte_map_built = True
-            return _c_done(nt, options)
     fragment = None
-    max_errors = -1
-    tab_stop = 8
+    if options and options.get("fragment_context"):
+        nsname = options.get("fragment_namespace", "html")
+        nsmap = {"html": NS_HTML, "svg": NS_SVG, "math": NS_MATHML}
+        ctx_name = str(options["fragment_context"]).lower()
+        if nsmap[nsname] == NS_SVG:
+            # the context element carries the ADJUSTED (camelCase)
+            # SVG name — "foreignobject" must become
+            # "foreignObject" or the HTML-integration-point check
+            # for the context never matches (round-6)
+            ctx_name = SVG_TAG_CASE.get(ctx_name, ctx_name)
+        fragment = (ctx_name, nsmap[nsname])
+    raw = source
+    if isinstance(source, str):
+        try:
+            raw = source.encode("utf-8")
+        except UnicodeEncodeError:
+            raw = None  # lone surrogates: no bytes, offsets stay char offsets
+    nt = None
+    if _cparse_fast is not None and fragment is None:
+        if raw is not None:
+            nt = _cparse_fast(raw)
+        _cstats["py" if nt is None else "c"] += 1
+    if nt is None:
+        # str(buffer, ...) decodes straight from the caller's memory
+        # (e.g. a memoryview slice of an Arrow batch); then input-stream
+        # preprocessing: newline normalization
+        s = source if isinstance(source, str) else str(source, "utf-8", "replace")
+        nt = _parse_py(s.replace("\r\n", "\n").replace("\r", "\n"), fragment)
     if options:
-        ctx = options.get("fragment_context")
-        if ctx:
-            nsname = options.get("fragment_namespace", "html")
-            nsmap = {"html": NS_HTML, "svg": NS_SVG, "math": NS_MATHML}
-            ctx_name = str(ctx).lower()
-            if nsmap[nsname] == NS_SVG:
-                # the context element carries the ADJUSTED (camelCase)
-                # SVG name — "foreignobject" must become
-                # "foreignObject" or the HTML-integration-point check
-                # for the context never matches (round-6)
-                ctx_name = SVG_TAG_CASE.get(ctx_name, ctx_name)
-            fragment = (ctx_name, nsmap[nsname])
-        max_errors = options.get("max_errors", -1)
-        tab_stop = int(options.get("tab_stop", 8))
-        # stop_on_first_error accepted for GumboOptions-struct parity;
-        # libgumbo never implemented the field (see docstring)
-        options.get("stop_on_first_error")
-    if _try_c:
-        _cstats["py"] += 1  # both C dispatches declined this document
-    tb = _TreeBuilder(s, fragment=fragment, max_errors=max_errors)
+        nt.tab_stop = int(options.get("tab_stop", 8))
+        me = options.get("max_errors", -1)
+        if me is not None and 0 <= me < len(nt.error_records):
+            # gumbo max_errors caps the RECORD vector; the count keeps
+            # counting
+            nt.error_records = nt.error_records[:me]
+    # one decoded char per input byte (ASCII, and mojibake where every
+    # invalid byte became one U+FFFD; a lone CR normalizes in place)
+    # means decoded offset == byte offset.  Any other page keeps its
+    # input (a copy: it must outlive the caller's Arrow batch) for the
+    # lazy byte map.
+    if raw is not None and len(nt.source) != (
+        raw.nbytes if isinstance(raw, memoryview) else len(raw)
+    ):
+        nt.raw = bytes(raw)
+    return nt
+
+
+def _parse_py(s: str, fragment: tuple[str, int] | None) -> NodeTable:
+    """The pure-Python engine over the decoded, newline-normalized
+    document ``s``; ``fragment`` is the (context tag, namespace) pair
+    of a fragment parse."""
+    n = len(s)
+    tb = _TreeBuilder(s, fragment=fragment)
     if fragment and fragment[1] == NS_HTML and (
         fragment[0] in RAWTEXT_ELEMENTS or fragment[0] in RCDATA_ELEMENTS
         or fragment[0] == "plaintext"
@@ -3384,11 +3353,7 @@ def parse_html(source: str | bytes, options: dict | None = None) -> NodeTable:
             decoded = _decode(s) if fragment[0] in RCDATA_ELEMENTS else s
             tb._insert_text(decoded, 0, n, rawtextual=True)
         tb.handle_eof()
-        nt = tb.finalize()
-        nt.raw, nt._prenorm, nt.tab_stop = raw_bytes, prenorm, tab_stop
-        if byte_identity:
-            nt._byte_map_built = True  # identity map, no raw needed
-        return nt
+        return tb.finalize()
     # hoisted hot-path bindings (the dispatch wrappers stay for
     # tree-builder-internal reprocessing; the tokenizer inlines them)
     sfind = s.find
@@ -3632,11 +3597,7 @@ def parse_html(source: str | bytes, options: dict | None = None) -> NodeTable:
                     tb._insert_text(decoded, i, n, rawtextual=True)
                 i = n
     tb.handle_eof()
-    nt = tb.finalize()
-    nt.raw, nt._prenorm, nt.tab_stop = raw_bytes, prenorm, tab_stop
-    if byte_identity:
-        nt._byte_map_built = True  # identity map, no raw needed
-    return nt
+    return tb.finalize()
 
 
 # ----------------------------------------------------------------------
@@ -3644,19 +3605,6 @@ def parse_html(source: str | bytes, options: dict | None = None) -> NodeTable:
 # namespace above is complete; parse_html dispatches to the compiled
 # engine for documents inside its subset and falls back here.
 # GUMBO_PP_CENGINE=0 disables it.
-def _c_done(nt, options):
-    """Apply the options tail to a C-engine NodeTable and count it."""
-    if options:
-        nt.tab_stop = int(options.get("tab_stop", 8))
-        me = options.get("max_errors", -1)
-        if me is not None and me >= 0 and len(nt.error_records) > me:
-            # gumbo max_errors caps the RECORD vector; the count
-            # keeps counting (same as _TreeBuilder._err)
-            nt.error_records = nt.error_records[:me]
-    _cstats["c"] += 1
-    return nt
-
-
 _cparse_fast = None
 _cstats = {"c": 0, "py": 0}
 try:  # pragma: no cover - environment-dependent (needs gcc once)
