@@ -89,7 +89,8 @@ class NodeTable:
     # to False
     quirks: bool = True
     # the input bytes, kept only when decoded offsets are not byte
-    # offsets (len(source) != len(raw)); None = identity.  They feed
+    # offsets (len(source) != len(raw)); None = identity, or a str
+    # with lone surrogates that has no bytes at all.  They feed
     # the lazy decoded-offset → byte-offset map, cached in _byte_map
     # (gumbo's offsets are byte offsets into the raw buffer,
     # gumbo_util.h:121-146)
@@ -391,6 +392,11 @@ class NodeTable:
         pages; exact per-char mapping otherwise (parser/bytemap.py).
         Accepts a scalar or array; returns int64."""
         if self.raw is None:
+            if not self.source.isascii():
+                # no input kept on a non-ASCII source: one byte per
+                # char (mojibake U+FFFDs), or a str with lone
+                # surrogates, which has no UTF-8 bytes and raises here
+                self.source.encode("utf-8")
             return np.asarray(pos, dtype=np.int64)
         if self._byte_map is None:
             from .parser.bytemap import build_byte_map

@@ -128,7 +128,7 @@ typedef struct {
      * run content — the span end is already stripped-length based.
      * pend_ucs[i] (owned PyBytes wrapping a Py_UCS4 array, round-7)
      * carries the stripped ORIGINAL codepoints of a transcoded doc's
-     * run, so NUL-in-table-text engages in kind-2/4 mode too. */
+     * run, so NUL-in-table-text engages in transcoded mode too. */
     int64_t (*pend)[2];        /* growable, cap = pend_cap */
     PyObject **pend_txt;       /* same cap; NULL = read the source */
     PyObject **pend_ucs;       /* same cap; NULL = byte==codepoint */
@@ -569,8 +569,8 @@ static PyObject *decode_text(P *p, Py_ssize_t a, Py_ssize_t b) {
     return PyUnicode_FromKindAndData(PyUnicode_4BYTE_KIND, out, k);
 }
 
-/* source slice as str (no decoding); bytes are codepoints for kind-1
- * input, and the ORIGINAL string is sliced in transcoded mode */
+/* source slice as str (no decoding); bytes are codepoints for ASCII
+ * input, and the decoded string is sliced in transcoded mode */
 static PyObject *ascii_slice(P *p, Py_ssize_t a, Py_ssize_t b) {
     if (p->src_data) return PyUnicode_Substring(p->src_obj, a, b);
     return PyUnicode_FromKindAndData(PyUnicode_1BYTE_KIND, p->s + a, b - a);
@@ -581,27 +581,19 @@ static PyObject *ascii_slice(P *p, Py_ssize_t a, Py_ssize_t b) {
  * ONLY ("Uppercase ASCII letter: append the lowercase version";
  * libgumbo's gumbo_tolower is ASCII too, html5.py:_ascii_lower is the
  * Python mirror) — '<DÉV>' becomes 'dÉv', never 'dév'.  Known ASCII
- * names never come here.  Sets p->bail on failure, returns NULL. */
+ * names never come here.  A name byte >= 0x80 exists only in
+ * transcoded input, so the original codepoints are read back from
+ * src_str.  Sets p->bail on failure, returns NULL. */
 static PyObject *lowered_name_slice(P *p, Py_ssize_t a, Py_ssize_t b) {
     Py_ssize_t L = b - a;
-    if (p->src_data) {
-        if (scratch_ensure(p, L) < 0) { p->bail = 1; return NULL; }
-        Py_UCS4 *out = p->scratch;
-        for (Py_ssize_t q = 0; q < L; q++) {
-            Py_UCS4 c = rd(p, a + q);
-            out[q] = (c >= 'A' && c <= 'Z') ? c + 32 : c;
-        }
-        PyObject *u = PyUnicode_FromKindAndData(PyUnicode_4BYTE_KIND, out, L);
-        if (!u) { PyErr_Clear(); p->bail = 1; return NULL; }
-        return u;
-    }
-    PyObject *u = PyUnicode_New(L, 255);  /* latin-1: byte == codepoint */
-    if (!u) { PyErr_Clear(); p->bail = 1; return NULL; }
-    Py_UCS1 *d = PyUnicode_1BYTE_DATA(u);
+    if (scratch_ensure(p, L) < 0) { p->bail = 1; return NULL; }
+    Py_UCS4 *out = p->scratch;
     for (Py_ssize_t q = 0; q < L; q++) {
-        unsigned char c = p->s[a + q];
-        d[q] = (Py_UCS1)((c >= 'A' && c <= 'Z') ? c + 32 : c);
+        Py_UCS4 c = rd(p, a + q);
+        out[q] = (c >= 'A' && c <= 'Z') ? c + 32 : c;
     }
+    PyObject *u = PyUnicode_FromKindAndData(PyUnicode_4BYTE_KIND, out, L);
+    if (!u) { PyErr_Clear(); p->bail = 1; return NULL; }
     return u;
 }
 
@@ -1738,13 +1730,13 @@ static void chars_in_table(P *p, int64_t a, int64_t b) {
     else insert_text(p, decode_text(p, a, b), a, b, 0, 1);
 }
 
-/* decode entities from an arbitrary kind-1 buffer (round-6 NUL path:
+/* decode entities from an arbitrary byte buffer (round-6 NUL path:
  * the compacted run copy).  ``ubuf`` (round-7) carries the original
  * codepoints of a TRANSCODED doc's compacted run — placeholder bytes
  * in ``buf`` keep the structure scannable (refs are pure ASCII, and a
  * placeholder terminates a ref match exactly like the non-ASCII char
  * it stands for), emitted chars read from ``ubuf``.  NULL ubuf =
- * byte == codepoint (kind-1 input). */
+ * byte == codepoint (ASCII input). */
 static PyObject *decode_buf(P *p, const unsigned char *buf,
                             const Py_UCS4 *ubuf, Py_ssize_t m) {
     const unsigned char *amp = memchr(buf, '&', (size_t)m);
@@ -3806,7 +3798,7 @@ static void run_parse(P *p) {
                     if (cc == '\t' || cc == '\n' || cc == '\f' || cc == '\r' ||
                         cc == ' ' || cc == '/' || cc == '>') break;
                     /* non-ASCII name char (round-7): engages —
-                     * TID_UNKNOWN + a str.lower()ed source-slice name
+                     * TID_UNKNOWN + an ASCII-lowered source-slice name
                      * (the nbuf append is skipped so nmlen != nb) */
                     if (cc >= 0x80) { nm_hi = 1; j++; continue; }
                     /* NUL is a literal name char (html5.py keeps it:

@@ -3305,7 +3305,7 @@ def parse_html(source: str | bytes, options: dict | None = None) -> NodeTable:
         try:
             raw = source.encode("utf-8")
         except UnicodeEncodeError:
-            raw = None  # lone surrogates: no bytes, offsets stay char offsets
+            raw = None  # lone surrogates: no bytes to map offsets to
     nt = None
     if _cparse_fast is not None and fragment is None:
         if raw is not None:

@@ -108,7 +108,7 @@ def test_bench_corpora_fully_engaged():
     tpages = [r[1] for r in con.execute(TABLE_PAGES_SQL).fetchall()]
     for corpus in (pages, tpages):
         for d in corpus:
-            c = c_attempt(d.encode())
+            c = cengine.cparse(d.encode())
             assert c is not None, d[:100]
 
 
@@ -127,11 +127,11 @@ def test_bail_conditions():
     # round-6: NUL input engages everywhere — data-state drop / FFFD
     # sinks AND the tag machinery (names keep the literal NUL,
     # attr keys/values get U+FFFD, doctype/end-tag tails pass through)
-    assert c_attempt(b"a\x00b") is not None
-    assert c_attempt(b"<di\x00v>x") is not None     # NUL in tag name
-    assert c_attempt(b"<div a='x\x00y'>") is not None  # NUL in attr value
-    assert c_attempt(b"<!doctype ht\x00ml>") is not None  # NUL in doctype
-    assert c_attempt(b"<table>\x00x<td>y") is not None  # NUL table text
+    assert cengine.cparse(b"a\x00b") is not None
+    assert cengine.cparse(b"<di\x00v>x") is not None     # NUL in tag name
+    assert cengine.cparse(b"<div a='x\x00y'>") is not None  # NUL in attr value
+    assert cengine.cparse(b"<!doctype ht\x00ml>") is not None  # NUL in doctype
+    assert cengine.cparse(b"<table>\x00x<td>y") is not None  # NUL table text
     # round-7: transcoded (non-ASCII) input with NUL engages — the
     # compaction paths carry original codepoints (chars_buf ubuf and
     # the pend_ucs table-text payload); NO transcoded-NUL input class
@@ -145,14 +145,14 @@ def test_bail_conditions():
     # (and the NUL-stripped x ws-charref intersection inside chars_buf)
     assert c_attempt("<xé>y</xé>") is not None
     assert c_attempt("<div aé=1>x</div>") is not None
-    assert c_attempt(b"<table>&Tab;x<td>y</td></table>") is not None
-    assert c_attempt(b"<head>&#9;x</head>") is not None
-    assert c_attempt(b"<table><colgroup>\x00<col></colgroup></table>") is None
-    assert c_attempt(b"<svg><rect/></svg>") is not None   # foreign: in C
-    assert c_attempt(b"<template>x</template>") is not None  # templates: in C
-    assert c_attempt(b"<plaintext>raw") is not None          # plaintext: in C
-    assert c_attempt(b"<frameset><frame>") is not None  # frameset: in C
-    assert c_attempt(b"<isindex>") is not None           # isindex: in C
+    assert cengine.cparse(b"<table>&Tab;x<td>y</td></table>") is not None
+    assert cengine.cparse(b"<head>&#9;x</head>") is not None
+    assert cengine.cparse(b"<table><colgroup>\x00<col></colgroup></table>") is None
+    assert cengine.cparse(b"<svg><rect/></svg>") is not None   # foreign: in C
+    assert cengine.cparse(b"<template>x</template>") is not None  # templates: in C
+    assert cengine.cparse(b"<plaintext>raw") is not None          # plaintext: in C
+    assert cengine.cparse(b"<frameset><frame>") is not None  # frameset: in C
+    assert cengine.cparse(b"<isindex>") is not None           # isindex: in C
 
 
 def test_nul_tag_machinery_identical():
@@ -178,7 +178,7 @@ def test_nul_tag_machinery_identical():
         b"</div \x00junk>x",                      # NUL end-tag tail
     ]
     for doc in cases:
-        c = c_attempt(doc)
+        c = cengine.cparse(doc)
         assert c is not None, doc
         saved = H._cparse_fast
         H._cparse_fast = None
@@ -215,7 +215,7 @@ def test_deep_documents_engage_identical():
         "<html><body>" + "".join(f"<a n{i}='v'>t</a>" for i in range(400)),
     ]
     for doc in cases:
-        c = c_attempt(doc.encode())
+        c = cengine.cparse(doc.encode())
         assert c is not None, doc[:80]
         saved = H._cparse_fast
         H._cparse_fast = None
@@ -246,7 +246,7 @@ def test_long_names_engage_identical():
         f"<svg><{long}>f</{long}></svg>",             # foreign content
     ]
     for doc in cases:
-        c = c_attempt(doc.encode())
+        c = cengine.cparse(doc.encode())
         assert c is not None, doc[:80]
         saved = H._cparse_fast
         H._cparse_fast = None
@@ -276,7 +276,7 @@ def test_frameset_and_isindex_identical():
         b"<frameset>\t\tzz <frame>a b</frameset> c",
     ]
     for doc in cases:
-        c = c_attempt(doc)
+        c = cengine.cparse(doc)
         assert c is not None, doc
         saved = H._cparse_fast
         H._cparse_fast = None
@@ -299,7 +299,7 @@ def test_template_and_plaintext_identical():
         b"<p>x<plaintext><b>raw &amp; unparsed",
     ]
     for doc in cases:
-        c = c_attempt(doc)
+        c = cengine.cparse(doc)
         assert c is not None, doc
         saved = H._cparse_fast
         H._cparse_fast = None
@@ -325,7 +325,7 @@ def test_aaa_and_foster_now_engage():
         b"<font color=red><p>styled</font>tail",
     ]
     for doc in cases:
-        c = c_attempt(doc)
+        c = cengine.cparse(doc)
         assert c is not None, doc
         saved = H._cparse_fast
         H._cparse_fast = None
@@ -387,7 +387,7 @@ def test_benign_errors_recorded_in_c():
     import gumbo_pp_spark.parser.html5 as H
 
     for doc in cases:
-        c = c_attempt(doc)
+        c = cengine.cparse(doc)
         assert c is not None, doc
         assert c.parse_errors > 0, doc
         saved = H._cparse_fast
@@ -473,6 +473,21 @@ def test_one_c_attempt_per_document(monkeypatch):
         assert_identical(nt, py, src)
         assert nt.raw == py.raw, src
         assert_same_byte_spans(nt, py, src)
+
+
+def test_lone_surrogate_str_skips_c_and_has_no_byte_offsets(monkeypatch):
+    """A str with lone surrogates has no UTF-8 bytes: parse_html never
+    offers it to C, the Python engine parses it, and byte_offsets
+    raises instead of passing char offsets off as byte offsets."""
+    calls = []
+    monkeypatch.setattr(cengine, "_cparse", calls.append)
+    before = cengine.stats["py"]
+    nt = parse_html("\xe9\ud800<p>x</p>")
+    assert calls == [] and cengine.stats["py"] == before + 1
+    assert nt.raw is None
+    assert "p" in list(nt.tag_name)
+    with pytest.raises(UnicodeEncodeError):
+        nt.byte_offsets(nt.src_start)
 
 
 def test_cr_and_latin1_engage_in_one_dispatch():
@@ -578,7 +593,7 @@ def test_foreign_content_engages():
         b'<b><svg><g>icon</g></svg></b>y',
     ]
     for doc in cases:
-        c = c_attempt(doc)
+        c = cengine.cparse(doc)
         assert c is not None, doc
         saved = H._cparse_fast
         H._cparse_fast = None
@@ -804,7 +819,7 @@ def test_nul_input_corpus_ab():
     engaged = 0
     bailed = []
     for d in cases:
-        c = c_attempt(d)
+        c = cengine.cparse(d)
         if c is None:
             bailed.append(d)
             continue
