@@ -391,22 +391,19 @@ class NodeTable:
         model (gumbo_util.h:121-146).  Identity for ASCII/CR-free
         pages; exact per-char mapping otherwise (parser/bytemap.py).
         Accepts a scalar or array; returns int64."""
-        if self._byte_map is None:
-            if self.raw is None:
-                if self.source.isascii():
-                    return np.asarray(pos, dtype=np.int64)
+        if self.raw is None:
+            if not self.source.isascii():
                 # no input kept on a non-ASCII source: one byte per
                 # char (mojibake U+FFFDs), or a str with lone
-                # surrogates, which has no UTF-8 bytes and raises here;
-                # the encode scans the whole page, so it runs once
+                # surrogates, which has no UTF-8 bytes and raises here
                 self.source.encode("utf-8")
-                self._byte_map = np.arange(len(self.source) + 1, dtype=np.int64)
-            else:
-                from .parser.bytemap import build_byte_map
+            return np.asarray(pos, dtype=np.int64)
+        if self._byte_map is None:
+            from .parser.bytemap import build_byte_map
 
-                self._byte_map = build_byte_map(
-                    self.raw, str(self.raw, "utf-8", "replace"), len(self.source)
-                )
+            self._byte_map = build_byte_map(
+                self.raw, str(self.raw, "utf-8", "replace"), len(self.source)
+            )
         return self._byte_map[np.asarray(pos)]
 
     def node_start_offset(self, i: int) -> int:
