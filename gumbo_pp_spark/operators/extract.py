@@ -20,6 +20,7 @@ Catalyst prunes the scan to exactly the input columns the stage needs
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Callable, Iterator
 
@@ -97,46 +98,19 @@ def run_program(
 
 
 # ----------------------------------------------------------------------
-# per-batch engine: one C call per Arrow batch, Python reference rows
-# spliced in
+# per-batch engine: one C call per Arrow batch, main_text_program rows
+# for every row the C call does not produce
 # ----------------------------------------------------------------------
-def _py_doc_pieces(raw):
-    """Parse ONE document and run the main-text kernel on it — the
-    Python-reference rows of :func:`main_text_batch`: returns (text,
-    tids_i32, s0, s1, b0, b1, ptags, n_nodes, parse_errors)."""
-    nt = parse_html(raw)
-    text, tids, ptags, s0, s1, b0, b1 = _main_text_columns(nt)
-    return text, tids.astype(np.int32), s0, s1, b0, b1, ptags, nt.n, nt.parse_errors
-
-
-_SPAN_FIELDS = ["node_id", "tag", "start", "end", "start_byte", "end_byte"]
-
-
-def _splice_rows(arr, idxs, one_rows):
-    """Replace rows ``idxs`` (ascending) of ``arr`` with the 1-row
-    arrays ``one_rows`` — zero-copy slices of the C-built column glued
-    around the Python-reference rows."""
+@functools.cache
+def _spans_type():
+    """Arrow type of the ``spans`` column (:data:`MAIN_TEXT_FIELDS`),
+    shared by the C-built column and the main_text_program rows."""
     import pyarrow as pa
 
-    pieces = []
-    prev = 0
-    for k, one in zip(idxs, one_rows):
-        if k > prev:
-            pieces.append(arr.slice(prev, k - prev))
-        pieces.append(one)
-        prev = k + 1
-    if prev < len(arr):
-        pieces.append(arr.slice(prev))
-    return pa.concat_arrays(pieces)
-
-
-def _no_c_pass(n: int) -> tuple:
-    """``cextract_batch``'s result shape for a batch it did not run:
-    empty slots everywhere and every row a bail row."""
-    i32, i64 = np.zeros(n, np.int32), np.zeros(0, np.int64)
-    return (b"", np.zeros(n + 1, np.int32), np.zeros(0, np.int32), i64, i64, i64, i64,
-            i32, b"", np.zeros(1, np.int32), i32.copy(), i32.copy(),
-            np.zeros(n, np.int64), np.arange(n, dtype=np.int32))
+    return pa.list_(pa.struct([
+        ("node_id", pa.int32()), ("tag", pa.string()), ("start", pa.int64()),
+        ("end", pa.int64()), ("start_byte", pa.int64()), ("end_byte", pa.int64()),
+    ]))
 
 
 def main_text_batch(rb, stage_metrics: bool = False):
@@ -149,14 +123,17 @@ def main_text_batch(rb, stage_metrics: bool = False):
     and hands back batch-level buffers in Arrow layout (text and
     parent-tag columns as one UTF-8 blob plus int32 offsets, wrapped
     zero-copy) — the engaged rows build no per-document Python
-    objects.  Every row that call does not take runs on the Python
-    reference (:func:`_py_doc_pieces`) and is spliced in row-wise:
+    objects.  Every row that call does not produce is
+    ``main_text_program(parse_html(html))``:
 
     * its designed bail rows;
     * NULL rows, parsed as the empty document ``b""``;
     * every row when the C engine is off (``GUMBO_PP_CENGINE=0``, or
       ``html5._cparse_fast`` is None) or the call declines the batch
       (over 1 GiB of text: int32 offset overflow).
+
+    Those rows are built as one Arrow column each and merged into the
+    C-built ``text`` and ``spans`` columns with one ``take``.
 
     With ``stage_metrics``, ``c_engine`` is 1 iff the C engine parsed
     the row, and ``parse_us`` carries the row's whole parse + kernel
@@ -175,6 +152,7 @@ def main_text_batch(rb, stage_metrics: bool = False):
     elif pa.types.is_large_string(htmls.type):
         htmls = htmls.view(pa.large_binary())
     n = len(htmls)
+    spans_t = _spans_type()
     res = None
     if n:
         is64 = pa.types.is_large_binary(htmls.type)
@@ -184,55 +162,50 @@ def main_text_batch(rb, stage_metrics: bool = False):
         off = np.frombuffer(bufs[1], dt, n + 1, htmls.offset * np.dtype(dt).itemsize)
         if html5._cparse_fast is not None and cengine._cextract_batch is not None:
             res = cengine._cextract_batch(data, off, int(is64), _BOILER_ID_BYTES)
-    (txt, toff, sid, s0, s1, b0, b1, cnt, ptg, poff, nn, pe, tot, bail) = (
-        res if res is not None else _no_c_pass(n)
-    )
-    text_arr = pa.StringArray.from_buffers(n, pa.py_buffer(toff), pa.py_buffer(txt))
-    tag_arr = pa.StringArray.from_buffers(len(sid), pa.py_buffer(poff), pa.py_buffer(ptg))
-    # byte columns computed in C: identity for pure-ASCII CR-free
-    # docs, exact char→byte map for CRLF / multibyte-UTF-8 docs
-    struct = pa.StructArray.from_arrays(
-        [pa.array(sid), tag_arr, pa.array(s0), pa.array(s1), pa.array(b0), pa.array(b1)],
-        names=_SPAN_FIELDS,
-    )
-    loff = np.empty(n + 1, np.int32)
-    loff[0] = 0
-    np.cumsum(cnt, out=loff[1:])
-    spans = pa.ListArray.from_arrays(pa.array(loff), struct)
-    if htmls.null_count:
-        # NULL rows never depend on what a null slot's bytes hold
-        nulls = np.nonzero(htmls.is_null().to_numpy(zero_copy_only=False))[0]
-        bail = np.union1d(bail, nulls)
+    if res is None:
+        text_arr, spans = pa.array([], pa.string()), pa.array([], spans_t)
+        nn, pe, tot = np.zeros(n, np.int32), np.zeros(n, np.int32), np.zeros(n, np.int64)
+        py_rows = np.arange(n)
+    else:
+        (txt, toff, sid, s0, s1, b0, b1, cnt, ptg, poff, nn, pe, tot, py_rows) = res
+        text_arr = pa.StringArray.from_buffers(n, pa.py_buffer(toff), pa.py_buffer(txt))
+        tag_arr = pa.StringArray.from_buffers(len(sid), pa.py_buffer(poff), pa.py_buffer(ptg))
+        # byte columns computed in C: identity for pure-ASCII CR-free
+        # docs, exact char→byte map for CRLF / multibyte-UTF-8 docs
+        struct = pa.StructArray.from_arrays(
+            [pa.array(sid), tag_arr, pa.array(s0), pa.array(s1), pa.array(b0), pa.array(b1)],
+            fields=list(spans_t.value_type),
+        )
+        loff = np.empty(n + 1, np.int32)
+        loff[0] = 0
+        np.cumsum(cnt, out=loff[1:])
+        spans = pa.ListArray.from_arrays(pa.array(loff), struct)
+        if htmls.null_count:
+            # NULL rows never depend on what a null slot's bytes hold
+            nulls = np.nonzero(htmls.is_null().to_numpy(zero_copy_only=False))[0]
+            py_rows = np.union1d(py_rows, nulls)
     c_eng = np.ones(n, np.int8)
-    if len(bail):
+    if len(py_rows):
         data_mv = memoryview(data)
         valid = htmls.is_valid().to_numpy(zero_copy_only=False)
-        texts_1, spans_1 = [], []
-        for k in bail.tolist():
+        texts, span_rows = [], []
+        for k in py_rows.tolist():
             t0 = clk()
             c0 = html5._cstats["c"]
-            raw = data_mv[off[k]: off[k + 1]] if valid[k] else b""
-            (text, tids, ps0, ps1, pb0, pb1, ptags, nn_i, pe_i) = _py_doc_pieces(raw)
-            st_k = pa.StructArray.from_arrays(
-                [pa.array(tids), pa.array(ptags, pa.string()),
-                 pa.array(ps0.astype(np.int64, copy=False)),
-                 pa.array(ps1.astype(np.int64, copy=False)),
-                 pa.array(pb0.astype(np.int64, copy=False)),
-                 pa.array(pb1.astype(np.int64, copy=False))],
-                names=_SPAN_FIELDS,
-            )
-            texts_1.append(pa.array([text], pa.string()))
-            spans_1.append(
-                pa.ListArray.from_arrays(pa.array([0, len(tids)], pa.int32()), st_k)
-            )
-            nn[k] = nn_i
-            pe[k] = pe_i
+            row = main_text_program(parse_html(data_mv[off[k]: off[k + 1]] if valid[k] else b""))
+            texts.append(row["text"])
+            span_rows.append(row["spans"])
+            nn[k] = row["n_nodes"]
+            pe[k] = row["parse_errors"]
             tot[k] = int((clk() - t0) * 1e6)
             # parse_html counts each document its C dispatch accepted
             c_eng[k] = html5._cstats["c"] > c0
-        bl = bail.tolist()
-        text_arr = _splice_rows(text_arr, bl, texts_1)
-        spans = _splice_rows(spans, bl, spans_1)
+        # output row k: its C row, or its main_text_program row, which
+        # follows the len(text_arr) C rows
+        idx = np.arange(n)
+        idx[py_rows] = len(text_arr) + np.arange(len(py_rows))
+        text_arr = pa.concat_arrays([text_arr, pa.array(texts, pa.string())]).take(idx)
+        spans = pa.concat_arrays([spans, pa.array(span_rows, spans_t)]).take(idx)
     cols = [rb.column(i) for i in range(n_pt)]
     cols += [text_arr, spans, pa.array(nn), pa.array(pe)]
     names = [*rb.schema.names[:n_pt], "text", "spans", "n_nodes", "parse_errors"]
@@ -335,9 +308,10 @@ def extract_main_text(
 ) -> DataFrame:
     """Flagship stage: ``mapInArrow`` over the pruned ``passthrough +
     html`` projection, each Arrow batch run through
-    :func:`main_text_batch` (one C call per batch, Python reference
-    rows spliced in).  ``plans/lineage.py`` runs the same per-batch
-    body inside its split writer.
+    :func:`main_text_batch` (one C call per batch; each row the C call
+    does not produce is a :func:`main_text_program` row).
+    ``plans/lineage.py`` runs the same per-batch body inside its split
+    writer.
 
     Output ``spans`` follow :func:`main_text_program`'s offset
     contract: ``start``/``end`` index the decoded, newline-normalized

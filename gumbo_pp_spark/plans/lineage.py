@@ -26,7 +26,7 @@ Design (SURVEY.md §4 c/d):
   and returns per-split tallies; the ledger commit is the only commit
   (no JVM writer, no Hadoop commit protocol);
 * ledger records carry the per-split metrics the bench reports (rows,
-  bytes, parse/kernel time, parse errors, engine counts, wall_ms),
+  bytes, parse time, parse errors, engine counts, wall_ms),
   summed from those tallies — never by re-reading the written output;
   the manifest stores the files' DDL once, so the committed read
   declares its schema instead of inferring it, and a resume that
@@ -110,9 +110,10 @@ class PartitionLedger:
 
 
 #: one row per (task, split) the writer wrote; the driver sums them per split
+# (``kernel_us`` is not tallied: main_text_batch fuses it into parse_us)
 _TALLY_DDL = ("split_id int, rows bigint, chars bigint, parse_us bigint, "
-              "kernel_us bigint, parse_errors bigint, c_docs bigint")
-_TALLY_FIELDS = ("rows", "chars", "parse_us", "kernel_us", "parse_errors", "c_docs")
+              "parse_errors bigint, c_docs bigint")
+_TALLY_FIELDS = ("rows", "chars", "parse_us", "parse_errors", "c_docs")
 
 
 def _write_splits(run_dir: str, schema, batches, part: int | None = None):
@@ -152,8 +153,8 @@ def _write_splits(run_dir: str, schema, batches, part: int | None = None):
             out = main_text_batch(rb, stage_metrics=True)
             sids, inv = np.unique(out.column("split_id").to_numpy(), return_inverse=True)
             weights = [pc.utf8_length(out.column("text")),  # Spark's length(): chars
-                       out.column("parse_us"), out.column("kernel_us"),
-                       out.column("parse_errors"), out.column("c_engine")]
+                       out.column("parse_us"), out.column("parse_errors"),
+                       out.column("c_engine")]
             batch_sums = np.stack(
                 [np.bincount(inv, minlength=len(sids)),
                  *(np.bincount(inv, weights=w.to_numpy(), minlength=len(sids))
@@ -206,10 +207,10 @@ def extract_with_resume(
       partition, so each task's tallies are summed once;
     * a retried or speculative attempt reads the same (deterministic)
       input partition and writes the same file name with the same
-      rows (only the measured ``parse_us``/``kernel_us`` timings
-      differ), so it replaces the file and never adds one.  A failed
-      attempt leaves at most a hidden ``.part-*.tmp`` file, which
-      readers skip and :func:`vacuum_uncommitted` sweeps.
+      rows (only the measured ``parse_us`` timings differ), so it
+      replaces the file and never adds one.  A failed attempt leaves at
+      most a hidden ``.part-*.tmp`` file, which readers skip and
+      :func:`vacuum_uncommitted` sweeps.
 
     Each file has the schema ``extract_main_text(..., stage_metrics=True)``
     declares over ``passthrough + ("split_id",)``; the ledger stores
@@ -272,16 +273,15 @@ def extract_with_resume(
         for k in _TALLY_FIELDS:
             stats[r["split_id"]][k] += r[k]
     # Per-split wall attribution: all splits commit from ONE Spark job,
-    # so the only measured per-split times are the executor-side
-    # parse_us/kernel_us sums.  busy_ms is that measured work; wall_ms
-    # is the run's wall apportioned by busy share (splits with more
-    # work get more wall), so per-split wall is distinct and sums to
-    # the run wall instead of repeating it n_splits times.
-    total_busy = sum(r["parse_us"] + r["kernel_us"] for r in stats.values()) or 1
+    # so the only measured per-split time is the executor-side parse_us
+    # sum (parse and kernel, fused).  wall_ms is the run's wall
+    # apportioned by that share (splits with more work get more wall),
+    # so per-split wall is distinct and sums to the run wall instead of
+    # repeating it n_splits times.
+    total_us = sum(r["parse_us"] for r in stats.values()) or 1
     committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     records = []
     for s, r in stats.items():
-        busy_us = r["parse_us"] + r["kernel_us"]
         records.append(
             {
                 "split_id": s,
@@ -289,15 +289,13 @@ def extract_with_resume(
                 "rows": r["rows"],
                 "bytes": r["chars"],
                 "parse_ms": r["parse_us"] // 1000,
-                "kernel_ms": r["kernel_us"] // 1000,
                 "parse_errors": r["parse_errors"],
                 # engine engagement telemetry (round-6): at 100 TB this
                 # is how a run sees what fraction of documents paid the
                 # ~10x slower Python-tail price
                 "c_docs": r["c_docs"],
                 "py_docs": r["rows"] - r["c_docs"],
-                "busy_ms": busy_us // 1000,
-                "wall_ms": int(wall_ms * busy_us / total_busy),
+                "wall_ms": int(wall_ms * r["parse_us"] / total_us),
                 "run_wall_ms": wall_ms,
                 "committed_at": committed_at,
             }

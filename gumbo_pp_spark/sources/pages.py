@@ -77,17 +77,6 @@ TABLE_HTML_EXPR = (
     " || '</tbody></table></div>' || chr(10) || '</body>' || chr(10) || '</html>'"
 )
 
-TABLE_PAGES_SQL = (
-    "SELECT doc_id, " + TABLE_HTML_EXPR + " AS html_str FROM documents"
-)
-
-
-def synth_table_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(TABLE_PAGES_SQL).selectExpr(
-        "doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html"
-    )
-
 
 # misnested-formatting page family: the adoption-agency pattern
 # (<b>..<p>..</b>text</p>) on every page — pins the full AAA tree shape
@@ -99,13 +88,6 @@ MISNESTED_HTML_EXPR = (
     + ESC_TEXT + " || '</p><div>after</div>'"
     " || '</body></html>'"
 )
-
-
-def synth_misnested_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(
-        "SELECT doc_id, " + MISNESTED_HTML_EXPR + " AS html_str FROM documents"
-    ).selectExpr("doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html")
 
 
 # foreign-content page family: SVG (self-closing, case-adjusted attrs,
@@ -123,13 +105,6 @@ FOREIGN_HTML_EXPR = (
 )
 
 
-def synth_foreign_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(
-        "SELECT doc_id, " + FOREIGN_HTML_EXPR + " AS html_str FROM documents"
-    ).selectExpr("doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html")
-
-
 # byte-span page family: non-ASCII (2-, 3- and 4-byte UTF-8) text plus
 # CRLF newlines — the pages where decoded offsets and byte offsets
 # DIVERGE, pinning the start_byte/end_byte span contract through the
@@ -141,13 +116,6 @@ BYTESPAN_HTML_EXPR = (
     " || '<p class=\"bytes\">é€ ' || " + ESC_TEXT + " || ' 😀</p>' || chr(13) || chr(10)"
     " || '</body></html>'"
 )
-
-
-def synth_bytespan_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(
-        "SELECT doc_id, " + BYTESPAN_HTML_EXPR + " AS html_str FROM documents"
-    ).selectExpr("doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html")
 
 
 def synth_mojibake_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,6 +215,15 @@ def synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def synth_family_pages(spark: SparkSession, sf_dir: str, html_expr: str) -> DataFrame:
+    """``(doc_id, html)`` pages of one synthetic page family: the SQL
+    ``html_expr`` (one of the ``*_HTML_EXPR`` constants the DuckDB
+    oracles embed) over the documents table, encoded as UTF-8 binary."""
+    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
+    return spark.sql(f"SELECT doc_id, {html_expr} AS html_str FROM documents").selectExpr(
+        "doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html")
+
+
 def synth_pages_bench(
     spark: SparkSession, sf_dir: str, replicate: int, paragraphs: int
 ) -> DataFrame:
@@ -297,13 +274,6 @@ META_HTML_EXPR = (
     " || '\">'"
     " || '</head><body><p>' || " + ESC_TEXT + " || '</p></body></html>'"
 )
-
-
-def synth_meta_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(
-        "SELECT doc_id, " + META_HTML_EXPR + " AS html_str FROM documents"
-    ).selectExpr("doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html")
 
 
 # charset page family: the same logical page serialized in four
@@ -360,13 +330,6 @@ MD_HTML_EXPR = (
 )
 
 
-def synth_md_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(
-        "SELECT doc_id, " + MD_HTML_EXPR + " AS html_str FROM documents"
-    ).selectExpr("doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html")
-
-
 # OpenGraph/JSON-LD page family: og:* metas on every page, an ld+json
 # payload on even ids only (odd ids exercise the null path)
 _OG_DATE = "'2024-' || lpad(CAST(doc_id % 12 + 1 AS STRING), 2, '0') || '-01'"
@@ -387,13 +350,6 @@ OG_HTML_EXPR = (
 )
 
 
-def synth_og_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(
-        "SELECT doc_id, " + OG_HTML_EXPR + " AS html_str FROM documents"
-    ).selectExpr("doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html")
-
-
 # link page family: two anchors per page — a 'ref N' link into the
 # doc_id%100 cluster and a constant-text 'see also' link into the
 # (doc_id*7)%100 cluster — deterministic fan-in for the per-target
@@ -406,10 +362,3 @@ LINK_HTML_EXPR = (
     " || '\">see also</a></p>'"
     " || '</body></html>'"
 )
-
-
-def synth_link_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(
-        "SELECT doc_id, " + LINK_HTML_EXPR + " AS html_str FROM documents"
-    ).selectExpr("doc_id", "CAST(encode(html_str, 'UTF-8') AS BINARY) AS html")

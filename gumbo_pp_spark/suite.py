@@ -27,7 +27,18 @@ from .operators.extract import (
     scrape_tables,
     select_first_program,
 )
-from .sources.pages import BYTESPAN_HTML_EXPR, synth_pages, synth_table_pages
+from .sources.pages import (
+    BYTESPAN_HTML_EXPR,
+    FOREIGN_HTML_EXPR,
+    LINK_HTML_EXPR,
+    MD_HTML_EXPR,
+    META_HTML_EXPR,
+    MISNESTED_HTML_EXPR,
+    OG_HTML_EXPR,
+    TABLE_HTML_EXPR,
+    synth_family_pages,
+    synth_pages,
+)
 from . import matchers as m
 
 # ----------------------------------------------------------------------
@@ -510,9 +521,8 @@ def q_html_spans_bytes(spark, sf_dir):
     # model) on pages where it DIVERGES from decoded offsets: 2/3/4-byte
     # UTF-8 chars + CRLF newlines.  The oracle recomputes char offsets
     # over the CRLF-normalized page and byte offsets over the raw page.
-    from .sources.pages import synth_bytespan_pages
 
-    pages = synth_bytespan_pages(spark, sf_dir)
+    pages = synth_family_pages(spark, sf_dir, BYTESPAN_HTML_EXPR)
     prog = select_first_program(
         m.tag.P & m.class_type.is_("bytes"),
         {
@@ -573,7 +583,7 @@ def q_html_selector_ir(spark, sf_dir):
 
 
 def q_html_table_scrape(spark, sf_dir):
-    pages = synth_table_pages(spark, sf_dir)
+    pages = synth_family_pages(spark, sf_dir, TABLE_HTML_EXPR)
     return scrape_tables(pages, "important_table") \
         .select(F.col("doc_id").cast("bigint").alias("doc_id"), "csv")
 
@@ -657,9 +667,8 @@ def q_html_misnested(spark, sf_dir):
     # full adoption-agency tree shape (<b>B<p>P</b>tail</p>): the clone
     # wraps only the block's pre-end-tag children, the tail text is a
     # DIRECT child of the block, and no third <b> is reconstructed
-    from .sources.pages import synth_misnested_pages
 
-    pages = synth_misnested_pages(spark, sf_dir)
+    pages = synth_family_pages(spark, sf_dir, MISNESTED_HTML_EXPR)
 
     def program(nt):
         import numpy as np
@@ -701,9 +710,8 @@ def q_html_parse_errors(spark, sf_dir):
     # computable offset) with an injected '<?x?>' processing
     # instruction and an empty '</>' end tag (two tokenizer errors).
     from .parser.html5 import error_category
-    from .sources.pages import synth_misnested_pages
 
-    pages = synth_misnested_pages(spark, sf_dir).selectExpr(
+    pages = synth_family_pages(spark, sf_dir, MISNESTED_HTML_EXPR).selectExpr(
         "doc_id",
         "CAST(encode(replace(CAST(html AS STRING), '</body>', "
         "'<?x?></></body>'), 'UTF-8') AS BINARY) AS html",
@@ -740,9 +748,8 @@ def q_html_foreign_content(spark, sf_dir):
     # HTML-ns; annotation-xml encoding=text/html likewise), MathML text
     # integration points (mi content parses as HTML)
     from .nodetable import NS_MATHML, NS_SVG
-    from .sources.pages import synth_foreign_pages
 
-    pages = synth_foreign_pages(spark, sf_dir)
+    pages = synth_family_pages(spark, sf_dir, FOREIGN_HTML_EXPR)
 
     def program(nt):
         import numpy as np
@@ -785,7 +792,7 @@ def q_html_foreign_content(spark, sf_dir):
 def q_html_doc_content_text(spark, sf_dir):
     # whole-document content_text incl. whitespace nodes: pins the
     # before-head / after-head / after-body whitespace insertion modes
-    pages = synth_table_pages(spark, sf_dir)
+    pages = synth_family_pages(spark, sf_dir, TABLE_HTML_EXPR)
 
     def program(nt):
         return {"doc_text": nt.content_text(0)}
@@ -1215,9 +1222,8 @@ def q_head_meta(spark, sf_dir):
     # selected via CSS-string programs; indexable = no noindex
     # directive (absent meta defaults indexable)
     from .operators.extract import extract_head_meta
-    from .sources.pages import synth_meta_pages
 
-    out = extract_head_meta(synth_meta_pages(spark, sf_dir))
+    out = extract_head_meta(synth_family_pages(spark, sf_dir, META_HTML_EXPR))
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "title", "canonical", "robots", "indexable",
@@ -1261,9 +1267,8 @@ def q_html_markdown(spark, sf_dir):
     # paragraph round-trips documents.text through entity escape →
     # parse → whitespace collapse
     from .operators.markdown import to_markdown
-    from .sources.pages import synth_md_pages
 
-    out = to_markdown(synth_md_pages(spark, sf_dir))
+    out = to_markdown(synth_family_pages(spark, sf_dir, MD_HTML_EXPR))
     return out.select(F.col("doc_id").cast("bigint").alias("doc_id"), "markdown")
 
 
@@ -1272,9 +1277,8 @@ def q_page_meta(spark, sf_dir):
     # raw ld+json payload shipped once per page, JSON paths evaluated
     # JVM-side (get_json_object in codegen, not Python)
     from .operators.extract import extract_page_meta
-    from .sources.pages import synth_og_pages
 
-    out = extract_page_meta(synth_og_pages(spark, sf_dir))
+    out = extract_page_meta(synth_family_pages(spark, sf_dir, OG_HTML_EXPR))
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "og_title", "og_type", "published",
@@ -1404,9 +1408,8 @@ def q_anchor_texts(spark, sf_dir):
     # per-target anchor-text profile (what the web calls a page): one
     # href-keyed shuffle with map-side combine over parsed anchors
     from .operators.extract import anchor_text_stats, extract_anchor_texts
-    from .sources.pages import synth_link_pages
 
-    pairs = extract_anchor_texts(synth_link_pages(spark, sf_dir))
+    pairs = extract_anchor_texts(synth_family_pages(spark, sf_dir, LINK_HTML_EXPR))
     return anchor_text_stats(pairs)
 
 
@@ -1416,9 +1419,8 @@ def q_canonical_collapse(spark, sf_dir):
     # rep = smallest member id, mirroring canonical_docs
     from .operators.dedup import canonical_url_collapse
     from .operators.extract import extract_head_meta
-    from .sources.pages import synth_meta_pages
 
-    meta = extract_head_meta(synth_meta_pages(spark, sf_dir))
+    meta = extract_head_meta(synth_family_pages(spark, sf_dir, META_HTML_EXPR))
     return canonical_url_collapse(meta)
 
 

@@ -97,7 +97,7 @@ def test_bench_corpora_fully_engaged():
     """The flagship extraction corpora must stay 100% on the C path."""
     import duckdb
 
-    from gumbo_pp_spark.sources.pages import PAGES_SQL, TABLE_PAGES_SQL
+    from gumbo_pp_spark.sources.pages import PAGES_SQL, TABLE_HTML_EXPR
 
     con = duckdb.connect()
     con.execute(
@@ -105,7 +105,8 @@ def test_bench_corpora_fully_engaged():
         "'/root/testdata/sf0.001/documents.parquet'"
     )
     pages = [r[2] for r in con.execute(PAGES_SQL).fetchall()]
-    tpages = [r[1] for r in con.execute(TABLE_PAGES_SQL).fetchall()]
+    tpages = [r[0] for r in con.execute(
+        f"SELECT {TABLE_HTML_EXPR} FROM documents").fetchall()]
     for corpus in (pages, tpages):
         for d in corpus:
             c = cengine.cparse(d.encode())
@@ -742,7 +743,7 @@ def test_cextract_bench_corpus_fully_engaged():
     """The flagship bench corpora must run 100% on the C kernel."""
     import duckdb
 
-    from gumbo_pp_spark.sources.pages import PAGES_SQL, TABLE_PAGES_SQL
+    from gumbo_pp_spark.sources.pages import PAGES_SQL, TABLE_HTML_EXPR
 
     con = duckdb.connect()
     con.execute(
@@ -750,7 +751,8 @@ def test_cextract_bench_corpus_fully_engaged():
         "'/root/testdata/sf0.001/documents.parquet'"
     )
     pages = [r[2] for r in con.execute(PAGES_SQL).fetchall()]
-    tpages = [r[1] for r in con.execute(TABLE_PAGES_SQL).fetchall()]
+    tpages = [r[0] for r in con.execute(
+        f"SELECT {TABLE_HTML_EXPR} FROM documents").fetchall()]
     for corpus in (pages, tpages):
         raws = [d.encode() for d in corpus]
         assert _assert_batch_identical(raws) == len(raws)
@@ -885,27 +887,8 @@ _BAIL_MIX = [
 ]
 
 
-def test_py_doc_pieces_matches_program():
-    """_py_doc_pieces (the batch path's bail-splice helper) must equal
-    main_text_program column-for-column on every bail class."""
-    from gumbo_pp_spark.operators.extract import _py_doc_pieces, main_text_program
-    from gumbo_pp_spark.parser.html5 import parse_html as ph
-
-    for d in _BAIL_MIX:
-        text, tids, s0, s1, b0, b1, ptags, nn, pe = _py_doc_pieces(d)
-        ref = main_text_program(ph(d))
-        assert text == ref["text"], d[:80]
-        assert nn == ref["n_nodes"] and pe == ref["parse_errors"], d[:80]
-        assert len(tids) == len(ref["spans"]), d[:80]
-        for k, span in enumerate(ref["spans"]):
-            assert int(tids[k]) == span["node_id"], d[:80]
-            assert ptags[k] == span["tag"], d[:80]
-            assert int(s0[k]) == span["start"] and int(s1[k]) == span["end"], d[:80]
-            assert int(b0[k]) == span["start_byte"] and int(b1[k]) == span["end_byte"], d[:80]
-
-
 def test_cextract_batch_bail_splice_and_metrics():
-    """Bail rows (first, interior, consecutive, last) must be spliced
+    """Bail rows (first, interior, consecutive, last) must be merged
     with the Python-path result; c_engine flags track per-row
     engagement; fused parse_us is populated for every row.
 
@@ -1009,13 +992,43 @@ def test_null_html_row_is_the_empty_document(monkeypatch):
             assert got_junk.column(c).to_pylist() == [want[c][1], want[c][4]], c_off
 
 
+def test_every_fallback_row_is_one_main_text_program_call(monkeypatch):
+    """``main_text_program`` builds every row the C call does not
+    produce, and no other: with C on it runs once per bail row and per
+    NULL row, with the C engine off once per row of the batch."""
+    import gumbo_pp_spark.operators.extract as X
+    import gumbo_pp_spark.parser.html5 as H
+
+    calls = []
+    program = X.main_text_program
+
+    def counted(nt):
+        calls.append(1)
+        return program(nt)
+
+    docs = [*_BAIL_MIX, None, None]
+    for c_off in (False, True):
+        calls.clear()
+        with monkeypatch.context() as mp:
+            mp.setattr(X, "main_text_program", counted)
+            if c_off:
+                mp.setattr(H, "_cparse_fast", None)
+            out = _batch_extract(docs, stage_metrics=True).to_pydict()
+        if c_off:
+            assert len(calls) == len(docs)
+        else:
+            n_bail = out["c_engine"][: len(_BAIL_MIX)].count(0)
+            assert n_bail == 1  # the colgroup-NUL row
+            assert len(calls) == n_bail + 2
+
+
 def test_cextract_batch_corpus_ab():
     """Whole-corpus batch A/B: for EVERY document-mode conformance
-    case (engaged AND bail-spliced rows), the batch RecordBatch must
-    equal the per-document pieces path row-for-row — which
-    test_py_doc_pieces_matches_program and the cextract corpus A/B pin
-    to the pure-Python kernel, closing the identity chain."""
-    from gumbo_pp_spark.operators.extract import _py_doc_pieces
+    case (engaged AND fallback rows), the batch row must equal
+    ``main_text_program(parse_html(d))`` whole — text, spans, n_nodes
+    and parse_errors — which the cextract corpus A/B pins to the
+    pure-Python kernel, closing the identity chain."""
+    from gumbo_pp_spark.operators.extract import main_text_program
 
     docs = []
     for ctx, data, _ in CASES:
@@ -1025,19 +1038,10 @@ def test_cextract_batch_corpus_ab():
     checked = 0
     for i in range(0, len(docs), 4096):
         chunk = docs[i: i + 4096]
-        out = _batch_extract(chunk)
-        assert out is not None
-        od = out.to_pydict()
+        od = _batch_extract(chunk).to_pylist()
         for k, d in enumerate(chunk):
-            text, tids, s0, s1, b0, b1, ptags, nn, pe = _py_doc_pieces(d)
-            assert od["text"][k] == text, d[:120]
-            assert od["n_nodes"][k] == nn and od["parse_errors"][k] == pe, d[:120]
-            spans = od["spans"][k]
-            assert len(spans) == len(tids), d[:120]
-            for j, sp in enumerate(spans):
-                assert sp["node_id"] == int(tids[j]) and sp["tag"] == ptags[j], d[:120]
-                assert sp["start"] == int(s0[j]) and sp["end"] == int(s1[j]), d[:120]
-                assert sp["start_byte"] == int(b0[j]) and sp["end_byte"] == int(b1[j]), d[:120]
+            ref = main_text_program(parse_html(d))
+            assert {c: od[k][c] for c in ref} == ref, d[:120]
             checked += 1
     assert checked >= 30000, checked
 
@@ -1064,9 +1068,10 @@ def test_cextract_batch_bench_corpus_fully_engaged():
 def test_cextract_batch_crlf_corpus_ab():
     """CRLF-variant sweep: every LF in the first 3000 document-mode
     conformance cases rewritten to CRLF — the batch path's in-C
-    normalization + char→byte map must match the per-doc pieces path
-    (whose byte map is the pinned parser/bytemap.py) row-for-row."""
-    from gumbo_pp_spark.operators.extract import _py_doc_pieces
+    normalization + char→byte map must give the whole row of
+    ``main_text_program(parse_html(d))`` (whose byte map is the pinned
+    parser/bytemap.py)."""
+    from gumbo_pp_spark.operators.extract import main_text_program
 
     docs = []
     for ctx, data, _ in CASES:
@@ -1078,19 +1083,10 @@ def test_cextract_batch_crlf_corpus_ab():
         docs.append(raw.replace(b"\n", b"\r\n"))
         if len(docs) >= 3000:
             break
-    out = _batch_extract(docs)
-    assert out is not None
-    od = out.to_pydict()
+    od = _batch_extract(docs).to_pylist()
     for k, d in enumerate(docs):
-        text, tids, s0, s1, b0, b1, ptags, nn, pe = _py_doc_pieces(d)
-        assert od["text"][k] == text, d[:120]
-        assert od["n_nodes"][k] == nn and od["parse_errors"][k] == pe, d[:120]
-        spans = od["spans"][k]
-        assert len(spans) == len(tids), d[:120]
-        for j, sp in enumerate(spans):
-            assert sp["node_id"] == int(tids[j]) and sp["tag"] == ptags[j], d[:120]
-            assert sp["start"] == int(s0[j]) and sp["end"] == int(s1[j]), d[:120]
-            assert sp["start_byte"] == int(b0[j]) and sp["end_byte"] == int(b1[j]), d[:120]
+        ref = main_text_program(parse_html(d))
+        assert {c: od[k][c] for c in ref} == ref, d[:120]
 
 
 def test_round6_fuzz_ab_nul_deep_longname():

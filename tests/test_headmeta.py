@@ -46,9 +46,9 @@ class TestSparkStage:
         assert rows[2].indexable is True and rows[2].robots is None
 
     def test_meta_pages_family(self, spark):
-        from gumbo_pp_spark.sources.pages import synth_meta_pages
+        from gumbo_pp_spark.sources.pages import META_HTML_EXPR, synth_family_pages
 
-        out = extract_head_meta(synth_meta_pages(spark, SF_SMOKE)).collect()
+        out = extract_head_meta(synth_family_pages(spark, SF_SMOKE, META_HTML_EXPR)).collect()
         assert len(out) == 500
         by_id = {r.doc_id: r for r in out}
         assert by_id[3].indexable is False and by_id[4].indexable is True

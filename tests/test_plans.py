@@ -301,8 +301,8 @@ class TestLedgerMetrics:
         assert len(recs) == 4
         for rec in recs.values():
             assert set(rec) == {"split_id", "run_id", "rows", "bytes", "parse_ms",
-                                "kernel_ms", "parse_errors", "c_docs", "py_docs",
-                                "busy_ms", "wall_ms", "run_wall_ms", "committed_at"}
+                                "parse_errors", "c_docs", "py_docs",
+                                "wall_ms", "run_wall_ms", "committed_at"}
         assert sum(r["rows"] for r in recs.values()) == 64
         assert sum(r["parse_ms"] for r in recs.values()) >= 0
 
@@ -519,7 +519,7 @@ class TestSplitWriter:
         def attempt():
             # tallies without the measured timings, which differ per attempt
             (tb,) = _write_splits(run_dir, schema, iter(batches), part=7)
-            return tb.drop_columns(["parse_us", "kernel_us"]).to_pylist()
+            return tb.drop_columns(["parse_us"]).to_pylist()
 
         tallies = attempt()
         # a retried attempt of the same partition over the same input
@@ -706,6 +706,28 @@ class TestLedgerLayoutGuards:
         assert ledger._load()[1] == 4
         assert read_extracted(spark, out_dir).count() == 40
 
+    def test_manifest_with_kernel_and_busy_fields_resumes(self, spark, tmp_path):
+        # records committed before kernel_ms and busy_ms were dropped
+        # still carry them; a resume and a read go on over them
+        import json
+
+        out_dir = str(tmp_path / "kernel_ms")
+        pages = synth_pages(spark, SF_SMOKE).where("doc_id < 40")
+        extract_with_resume(spark, pages, out_dir, n_splits=4, max_splits_this_run=2)
+        ledger = PartitionLedger(f"{out_dir}/_ledger")
+        mpath = os.path.join(ledger.path, ledger.MANIFEST)
+        with open(mpath) as f:
+            doc = json.load(f)
+        for rec in doc["records"]:
+            rec.update(kernel_ms=0, busy_ms=rec["parse_ms"])
+        with open(mpath, "w") as f:
+            json.dump(doc, f)
+        res = extract_with_resume(spark, pages, out_dir, n_splits=4)
+        assert (res["splits_processed"], res["skipped"]) == (2, 2)
+        recs = ledger.committed()
+        assert sum("busy_ms" in r for r in recs.values()) == 2
+        assert read_extracted(spark, out_dir).count() == 40
+
     @pytest.mark.parametrize("entry", ["committed", "extract_with_resume", "read_extracted",
                                        "vacuum_uncommitted"])
     def test_version_1_manifest_raises(self, spark, tmp_path, entry):
@@ -751,7 +773,7 @@ class TestNullHtmlResume:
 class TestPerSplitWall:
     def test_distinct_per_split_wall(self, spark, tmp_path):
         # round-3: per-split wall_ms is the run wall apportioned by the
-        # split's measured busy time (parse+kernel), so splits carry
+        # split's measured parse time (parse and kernel, fused), so splits carry
         # DISTINCT walls that sum to <= run wall — not n_splits copies
         # of the same whole-run number
         from gumbo_pp_spark.plans.lineage import PartitionLedger
@@ -762,12 +784,12 @@ class TestPerSplitWall:
         recs = PartitionLedger(f"{out_dir}/_ledger").committed()
         assert len(recs) == 4
         walls = [r["wall_ms"] for r in recs.values()]
-        busys = [r["busy_ms"] for r in recs.values()]
+        busys = [r["parse_ms"] for r in recs.values()]
         run_wall = next(iter(recs.values()))["run_wall_ms"]
         assert all(r["run_wall_ms"] == run_wall for r in recs.values())
         assert sum(walls) <= run_wall
         # busy-proportional: the heaviest split gets the most wall.
-        # With the C parse engine a 24-doc split's busy_ms can collapse
+        # With the C parse engine a 24-doc split's parse_ms can collapse
         # to a tie at timer resolution — the argmax comparison is only
         # meaningful when the busy maximum is unique.
         if busys.count(max(busys)) == 1:

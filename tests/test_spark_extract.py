@@ -169,9 +169,9 @@ class TestByteSpans:
     gumbo_util.h:121-146)."""
 
     def test_spans_slice_raw_bytes(self, spark):
-        from gumbo_pp_spark.sources.pages import synth_bytespan_pages
+        from gumbo_pp_spark.sources.pages import BYTESPAN_HTML_EXPR, synth_family_pages
 
-        pages = synth_bytespan_pages(spark, SF_SMOKE).limit(20).cache()
+        pages = synth_family_pages(spark, SF_SMOKE, BYTESPAN_HTML_EXPR).limit(20).cache()
         out = extract_main_text(pages, passthrough=("doc_id",))
         joined = out.join(pages, "doc_id").collect()
         assert joined
